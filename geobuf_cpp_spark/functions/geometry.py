@@ -28,6 +28,11 @@ from __future__ import annotations
 
 import numpy as np
 
+# the struct above as a Spark DDL type, for every schema that carries a geometry
+GEOM_STRUCT = (
+    "struct<type: tinyint, dim: tinyint, lengths: array<int>, coords: array<double>>"
+)
+
 TYPE_POINT = 0
 TYPE_MULTIPOINT = 1
 TYPE_LINESTRING = 2

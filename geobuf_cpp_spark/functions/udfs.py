@@ -1,5 +1,13 @@
 """Arrow-batched Spark transforms: extraction + geobuf codec stages.
 
+This module owns the engine's feature-row format: a wire ``geom`` struct
+(functions/geometry.py), a ``properties`` map whose values are canonical
+JSON fragments, and the ``custom_properties`` / ``geom_custom_properties``
+maps for feature- and geometry-level custom members. Every conversion
+between that row and a GeoJSON Feature goes through ``_feature_row`` (in)
+and ``_row_features`` (out); every HTML page goes through
+``_extract_batches``. The geobuf sink and reader reuse them.
+
 All heavy work happens inside ``mapInPandas`` generators (Arrow batches in,
 Arrow batches out — no per-row Python at the DataFrame boundary, per
 BASELINE.json input_hint). The codec kernels themselves are numpy-vectorized
@@ -16,9 +24,7 @@ import pandas as pd
 
 from ..codec import geobuf as gb
 from ..extract.html import extract_geometries
-from .geometry import geojson_to_wire, wire_to_geojson
-
-GEOM_STRUCT = "struct<type: tinyint, dim: tinyint, lengths: array<int>, coords: array<double>>"
+from .geometry import GEOM_STRUCT, geojson_to_wire, wire_to_geojson
 
 # the reference's signature extension: arbitrary extra JSON members on
 # geometry / feature / feature collection, wire tag 15
@@ -34,6 +40,10 @@ FEATURES_SCHEMA = (
     "url string, feature_idx int, kind string, lon double, lat double, "
     f"geom {GEOM_STRUCT}, properties map<string,string>{CUSTOM_MAPS}"
 )
+_FEATURES_COLUMNS = [
+    "url", "feature_idx", "kind", "lon", "lat", "geom",
+    "properties", "custom_properties", "geom_custom_properties",
+]
 
 DECODED_SCHEMA = (
     "url string, feature_idx int, precision int, dim int, "
@@ -51,60 +61,85 @@ def _json_map_to_props(m: dict[str, str] | None) -> dict:
     return {k: json.loads(v) for k, v in (m or {}).items()}
 
 
-def _feature_customs(feature: dict) -> dict[str, str]:
-    """Feature-level custom members (everything beyond the GeoJSON schema)."""
-    return _props_to_json_map(gb._custom_props(feature, gb._FEATURE_STD_KEYS))
+def _feature_row(feature: dict, customs: bool = True) -> dict:
+    """GeoJSON Feature (with a geometry) -> feature-row fields.
+
+    ``customs=False`` skips the custom-member scan and leaves both custom
+    maps empty — for features whose extra keys are not wire members (the
+    HTML extractor's ``kind``) or whose reader carries no custom columns.
+    """
+    geometry = feature["geometry"]
+    t, dim, lengths, coords = geojson_to_wire(geometry)
+    row = {
+        "geom": {"type": t, "dim": dim, "lengths": lengths, "coords": coords},
+        "properties": _props_to_json_map(feature.get("properties") or {}),
+        "custom_properties": {},
+        "geom_custom_properties": {},
+    }
+    if customs:
+        row["custom_properties"] = _props_to_json_map(
+            gb._custom_props(feature, gb._FEATURE_STD_KEYS)
+        )
+        row["geom_custom_properties"] = _props_to_json_map(
+            gb._custom_props(geometry, gb._GEOMETRY_STD_KEYS)
+        )
+    return row
 
 
-def _geom_customs(geom_json: dict | None) -> dict[str, str]:
-    if not geom_json:
-        return {}
-    return _props_to_json_map(gb._custom_props(geom_json, gb._GEOMETRY_STD_KEYS))
+def _row_features(pdf: pd.DataFrame) -> Iterator[dict]:
+    """Feature rows (geom, properties[, custom maps]) -> GeoJSON Features;
+    absent custom columns mean no custom members."""
+    none = [None] * len(pdf)
+    for geom, props, custom, gcustom in zip(
+        pdf["geom"], pdf["properties"],
+        pdf.get("custom_properties", none),
+        pdf.get("geom_custom_properties", none),
+    ):
+        geometry = wire_to_geojson(
+            geom["type"], geom["dim"], geom["lengths"], geom["coords"]
+        )
+        if gcustom:
+            geometry.update(_json_map_to_props(gcustom))
+        feature = {
+            "type": "Feature",
+            "geometry": geometry,
+            "properties": _json_map_to_props(props),
+        }
+        if custom:
+            feature.update(_json_map_to_props(custom))
+        yield feature
 
 
-def extract_features(pages_df):
-    """pages(url, html, ...) -> one row per extracted geo feature.
+def _extract_batches(batches: Iterator[pd.DataFrame], columns: list[str],
+                     enc: gb.Encoder | None = None,
+                     carry: tuple[str, ...] = ()) -> Iterator[pd.DataFrame]:
+    """The HTML extract loop: page batches (url, html, *carry) -> one
+    feature row per extracted geometry, restricted to ``columns``.
 
     The representative (lon, lat) is the first coordinate of the geometry —
     the anchor for cell assignment of point payloads (exact for Points,
-    a prefilter anchor for lines/polygons).
+    a prefilter anchor for lines/polygons). ``carry`` columns are copied
+    from each feature's page row. With ``enc`` the extracted GeoJSON is
+    also encoded straight into a ``geobuf`` column.
     """
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                text = bytes(html).decode("utf-8", errors="replace")
-                for idx, feat in enumerate(extract_geometries(text)):
-                    t, dim, lengths, coords = geojson_to_wire(feat["geometry"])
-                    rows.append(
-                        {
-                            "url": url,
-                            "feature_idx": idx,
-                            "kind": feat["kind"],
-                            "lon": coords[0],
-                            "lat": coords[1],
-                            "geom": {
-                                "type": t,
-                                "dim": dim,
-                                "lengths": lengths,
-                                "coords": coords,
-                            },
-                            "properties": _props_to_json_map(feat["properties"]),
-                            # HTML extraction yields no custom members
-                            "custom_properties": {},
-                            "geom_custom_properties": {},
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "url", "feature_idx", "kind", "lon", "lat", "geom",
-                    "properties", "custom_properties", "geom_custom_properties",
-                ],
-            )
-
-    return pages_df.select("url", "html").mapInPandas(gen, FEATURES_SCHEMA)
+    for pdf in batches:
+        rows = []
+        for url, html, *kept in zip(pdf["url"], pdf["html"],
+                                    *(pdf[c] for c in carry)):
+            text = bytes(html).decode("utf-8", errors="replace")
+            for idx, feat in enumerate(extract_geometries(text)):
+                row = _feature_row(feat, customs=False)
+                coords = row["geom"]["coords"]
+                row.update(zip(carry, kept), url=url, feature_idx=idx,
+                           kind=feat["kind"], lon=coords[0], lat=coords[1])
+                if enc is not None:
+                    row["geobuf"] = enc.encode({
+                        "type": "Feature",
+                        "geometry": feat["geometry"],
+                        "properties": feat["properties"],
+                    })
+                rows.append(row)
+        yield pd.DataFrame(rows, columns=columns)
 
 
 def encode_features(features_df, max_precision: int = 10**7):
@@ -116,43 +151,19 @@ def encode_features(features_df, max_precision: int = 10**7):
         f"{f.name} {f.dataType.simpleString()}" for f in features_df.schema.fields
     ) + ", geobuf binary"
 
-    has_custom = "custom_properties" in features_df.columns
-    has_geom_custom = "geom_custom_properties" in features_df.columns
-
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         enc = gb.Encoder(max_precision=max_precision)
         for pdf in batches:
-            encoded = []
-            customs = pdf["custom_properties"] if has_custom else [None] * len(pdf)
-            gcustoms = (
-                pdf["geom_custom_properties"] if has_geom_custom
-                else [None] * len(pdf)
-            )
-            for geom, props, custom, gcustom in zip(
-                pdf["geom"], pdf["properties"], customs, gcustoms
-            ):
-                geometry = wire_to_geojson(
-                    geom["type"], geom["dim"], geom["lengths"], geom["coords"]
-                )
-                if gcustom:
-                    geometry.update(_json_map_to_props(gcustom))
-                feature = {
-                    "type": "Feature",
-                    "geometry": geometry,
-                    "properties": _json_map_to_props(props),
-                }
-                if custom:
-                    feature.update(_json_map_to_props(custom))
-                encoded.append(enc.encode(feature))
             out = pdf.copy()
-            out["geobuf"] = encoded
+            out["geobuf"] = [enc.encode(f) for f in _row_features(pdf)]
             yield out
 
     return features_df.mapInPandas(gen, out_schema)
 
 
 def extract_encode_features(pages_df, max_precision: int = 10**7):
-    """Fused extract+encode in ONE Arrow stage.
+    """pages(url, html, ...) -> one row per extracted geo feature, with its
+    geobuf blob, in ONE Arrow stage.
 
     Chaining two mapInPandas stages spawns two Python workers per task and
     pays an extra Arrow round trip; the fused stage halves worker count and
@@ -162,46 +173,7 @@ def extract_encode_features(pages_df, max_precision: int = 10**7):
     enc = gb.Encoder(max_precision=max_precision)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                text = bytes(html).decode("utf-8", errors="replace")
-                for idx, feat in enumerate(extract_geometries(text)):
-                    t, dim, lengths, coords = geojson_to_wire(feat["geometry"])
-                    blob = enc.encode(
-                        {
-                            "type": "Feature",
-                            "geometry": feat["geometry"],
-                            "properties": feat["properties"],
-                        }
-                    )
-                    rows.append(
-                        {
-                            "url": url,
-                            "feature_idx": idx,
-                            "kind": feat["kind"],
-                            "lon": coords[0],
-                            "lat": coords[1],
-                            "geom": {
-                                "type": t,
-                                "dim": dim,
-                                "lengths": lengths,
-                                "coords": coords,
-                            },
-                            "properties": _props_to_json_map(feat["properties"]),
-                            "custom_properties": {},
-                            "geom_custom_properties": {},
-                            "geobuf": blob,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "url", "feature_idx", "kind", "lon", "lat", "geom",
-                    "properties", "custom_properties",
-                    "geom_custom_properties", "geobuf",
-                ],
-            )
+        return _extract_batches(batches, _FEATURES_COLUMNS + ["geobuf"], enc)
 
     return pages_df.select("url", "html").mapInPandas(
         gen, FEATURES_SCHEMA + ", geobuf binary"
@@ -219,38 +191,13 @@ def encode_feature_collections(features_df, max_precision: int = 10**7):
     ``fc_custom_properties`` (constant per url — first row wins) ride the
     wire as tag-15 custom members, matching the reference's extension.
     """
-    import pandas as pd
-
     cols = set(features_df.columns)
-    has_custom = "custom_properties" in cols
-    has_geom_custom = "geom_custom_properties" in cols
     has_fc_custom = "fc_custom_properties" in cols
 
     def encode_group(pdf: pd.DataFrame) -> pd.DataFrame:
         enc = gb.Encoder(max_precision=max_precision)
         pdf = pdf.sort_values("feature_idx")
-        customs = pdf["custom_properties"] if has_custom else [None] * len(pdf)
-        gcustoms = (
-            pdf["geom_custom_properties"] if has_geom_custom
-            else [None] * len(pdf)
-        )
-        features = []
-        for geom, props, custom, gcustom in zip(
-            pdf["geom"], pdf["properties"], customs, gcustoms
-        ):
-            geometry = wire_to_geojson(
-                geom["type"], geom["dim"], geom["lengths"], geom["coords"]
-            )
-            if gcustom:
-                geometry.update(_json_map_to_props(gcustom))
-            feature = {
-                "type": "Feature",
-                "geometry": geometry,
-                "properties": _json_map_to_props(props),
-            }
-            if custom:
-                feature.update(_json_map_to_props(custom))
-            features.append(feature)
+        features = list(_row_features(pdf))
         fc: dict = {"type": "FeatureCollection", "features": features}
         if has_fc_custom and pdf["fc_custom_properties"].iloc[0]:
             fc.update(_json_map_to_props(pdf["fc_custom_properties"].iloc[0]))
@@ -276,7 +223,6 @@ def decode_feature_collections(fc_df, blob_col: str = "geobuf",
                                key_col: str = "url"):
     """Inverse of ``encode_feature_collections``: one FC blob row ->
     feature rows (explode), geometry back in wire shape."""
-    import pandas as pd
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         dec = gb.Decoder()
@@ -288,28 +234,10 @@ def decode_feature_collections(fc_df, blob_col: str = "geobuf",
                     gb._custom_props(doc, gb._FC_STD_KEYS)
                 )
                 for idx, feat in enumerate(doc.get("features", [])):
-                    geom_json = feat.get("geometry")
-                    if not geom_json:
-                        continue
-                    t, dim, lengths, coords = geojson_to_wire(geom_json)
-                    rows.append(
-                        {
-                            key_col: key,
-                            "feature_idx": idx,
-                            "geom": {
-                                "type": t,
-                                "dim": dim,
-                                "lengths": lengths,
-                                "coords": coords,
-                            },
-                            "properties": _props_to_json_map(
-                                feat.get("properties") or {}
-                            ),
-                            "custom_properties": _feature_customs(feat),
-                            "geom_custom_properties": _geom_customs(geom_json),
-                            "fc_custom_properties": fc_customs,
-                        }
-                    )
+                    if feat.get("geometry"):
+                        rows.append({**_feature_row(feat), key_col: key,
+                                     "feature_idx": idx,
+                                     "fc_custom_properties": fc_customs})
             yield pd.DataFrame(
                 rows, columns=[key_col, "feature_idx", "geom", "properties",
                                "custom_properties", "geom_custom_properties",
@@ -332,26 +260,10 @@ def decode_features(encoded_df):
         for pdf in batches:
             rows = []
             for url, idx, blob in zip(pdf["url"], pdf["feature_idx"], pdf["geobuf"]):
-                feature = dec.decode(bytes(blob))
-                geom_json = feature.get("geometry")
-                t, dim, lengths, coords = geojson_to_wire(geom_json)
-                rows.append(
-                    {
-                        "url": url,
-                        "feature_idx": int(idx),
-                        "precision": dec.precision,
-                        "dim": dec.dim,
-                        "geom": {
-                            "type": t,
-                            "dim": dim,
-                            "lengths": lengths,
-                            "coords": coords,
-                        },
-                        "properties": _props_to_json_map(feature.get("properties") or {}),
-                        "custom_properties": _feature_customs(feature),
-                        "geom_custom_properties": _geom_customs(geom_json),
-                    }
-                )
+                row = _feature_row(dec.decode(bytes(blob)))
+                row.update(url=url, feature_idx=int(idx),
+                           precision=dec.precision, dim=dec.dim)
+                rows.append(row)
             yield pd.DataFrame(
                 rows,
                 columns=["url", "feature_idx", "precision", "dim", "geom",

@@ -22,7 +22,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from ..functions.cells import cover_bbox, cover_polygon, sql_cell
-from ..functions.geometry import pip_mask, wire_bbox, wire_rings
+from ..functions.geometry import GEOM_STRUCT, pip_mask, wire_bbox, wire_rings
 
 
 def polygon_coverings(admin_pdf: pd.DataFrame, res: int,
@@ -37,10 +37,7 @@ def polygon_coverings(admin_pdf: pd.DataFrame, res: int,
     rows = []
     for admin_id, geom in zip(admin_pdf["admin_id"], admin_pdf["geom"]):
         if exact:
-            cells = cover_polygon(
-                wire_rings(geom["type"], geom["dim"], geom["lengths"], geom["coords"]),
-                res,
-            )
+            cells = cover_polygon(_rings(geom), res)
         else:
             lon0, lat0, lon1, lat1 = wire_bbox(geom["dim"], geom["coords"])
             cells = cover_bbox(lat0, lat1, lon0, lon1, res)
@@ -49,13 +46,34 @@ def polygon_coverings(admin_pdf: pd.DataFrame, res: int,
     return pd.DataFrame(rows, columns=["admin_id", "cell"])
 
 
-def _rings_by_admin(admin_pdf: pd.DataFrame) -> dict[int, list[np.ndarray]]:
-    return {
-        int(admin_id): wire_rings(
-            geom["type"], geom["dim"], geom["lengths"], geom["coords"]
-        )
-        for admin_id, geom in zip(admin_pdf["admin_id"], admin_pdf["geom"])
-    }
+def _rings(geom) -> list[np.ndarray]:
+    return wire_rings(geom["type"], geom["dim"], geom["lengths"], geom["coords"])
+
+
+def _refine(candidates, out_cols: list[str], lon_col: str, lat_col: str,
+            rings: dict[int, list[np.ndarray]] | None = None):
+    """Exact refine: keep the candidate rows whose point lies in their
+    ``admin_id`` polygon, projected to ``out_cols``. The rings come from
+    ``rings`` (admin_id -> rings) when given, else from each candidate
+    row's ``geom``. Vectorized per admin_id group within each batch."""
+    out_schema = ", ".join(
+        f"{f.name} {f.dataType.simpleString()}"
+        for f in candidates.schema.fields
+        if f.name in out_cols
+    )
+
+    def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            keep = np.zeros(len(pdf), dtype=bool)
+            px = pdf[lon_col].to_numpy(dtype=np.float64)
+            py = pdf[lat_col].to_numpy(dtype=np.float64)
+            for admin_id, idx in pdf.groupby("admin_id").indices.items():
+                poly = (rings[int(admin_id)] if rings is not None
+                        else _rings(pdf["geom"].iloc[idx[0]]))
+                keep[idx] = pip_mask(px[idx], py[idx], poly)
+            yield pdf.loc[keep, out_cols]
+
+    return candidates.mapInPandas(refine, out_schema)
 
 
 def pip_join_large(points_df, polygons_df, res: int = 8,
@@ -81,14 +99,6 @@ def pip_join_large(points_df, polygons_df, res: int = 8,
     the same polygon in several cover cells) are impossible: a point lies
     in exactly one cell at ``res``.
     """
-    from typing import Iterator
-
-    spark = points_df.sparkSession
-
-    cover_schema = (
-        "admin_id long, cell long, "
-        "geom struct<type: tinyint, dim: tinyint, lengths: array<int>, coords: array<double>>"
-    )
 
     def cover(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -102,86 +112,32 @@ def pip_join_large(points_df, polygons_df, res: int = 8,
             yield pd.DataFrame(rows, columns=["admin_id", "cell", "geom"])
 
     poly_cover = polygons_df.select("admin_id", "geom").mapInPandas(
-        cover, cover_schema
+        cover, f"admin_id long, cell long, geom {GEOM_STRUCT}"
     )
     pts = points_df.withColumn("cell", F.expr(sql_cell(lat_col, lon_col, res)))
     candidates = pts.join(poly_cover, "cell")
-
-    out_cols = [*point_keys, "admin_id"]
-
-    def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.geometry import wire_rings
-
-        for pdf in batches:
-            if pdf.empty:
-                yield pdf[out_cols]
-                continue
-            keep = np.zeros(len(pdf), dtype=bool)
-            px = pdf[lon_col].to_numpy(dtype=np.float64)
-            py = pdf[lat_col].to_numpy(dtype=np.float64)
-            for admin_id, idx in pdf.groupby("admin_id").indices.items():
-                g = pdf["geom"].iloc[idx[0]]
-                rings = wire_rings(g["type"], g["dim"], g["lengths"], g["coords"])
-                keep[idx] = pip_mask(px[idx], py[idx], rings)
-            yield pdf.loc[keep, out_cols]
-
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in candidates.schema.fields
-        if f.name in out_cols
-    )
-    return candidates.mapInPandas(refine, out_schema)
+    return _refine(candidates, [*point_keys, "admin_id"], lon_col, lat_col)
 
 
 def pip_join(points_df, admin_pdf: pd.DataFrame, res: int = 8,
              lon_col: str = "lon", lat_col: str = "lat",
-             exact_cover: bool = False, n_salt: int = 1):
+             exact_cover: bool = False):
     """Exact PIP join of a points DataFrame against a small polygon table.
 
     ``admin_pdf`` is a pandas frame (admin_id, geom wire-struct) — the
     broadcast dimension. Returns points rows + ``admin_id``, one output row
     per (point, containing polygon).
 
-    The broadcast hash join itself has no reducers — candidates stay in the
-    points' partitions — so skew here is COMPUTE skew: a partition dense in
-    hot-cell points does disproportionate refine work. ``n_salt > 1`` opts
-    into one explicit shuffle of the candidate rows on (cell, salt) — salt
-    from the row position, so a hot cell's candidates genuinely fan out
-    over ``n_salt`` reducers before the refine stage. Results are identical
-    (refine is row-local); the default skips the shuffle because on
-    roughly-uniform corpora the scan partitioning is already balanced.
+    The broadcast hash join has no reducers — candidates stay in the
+    points' partitions, so the refine stage runs without a shuffle.
     """
     spark = points_df.sparkSession
-    cover_pdf = polygon_coverings(admin_pdf, res, exact_cover)
-    rings = _rings_by_admin(admin_pdf)
-
+    cover = spark.createDataFrame(polygon_coverings(admin_pdf, res, exact_cover))
+    rings = {
+        int(admin_id): _rings(geom)
+        for admin_id, geom in zip(admin_pdf["admin_id"], admin_pdf["geom"])
+    }
     pts = points_df.withColumn("cell", F.expr(sql_cell(lat_col, lon_col, res)))
-    cover = spark.createDataFrame(cover_pdf)
     candidates = pts.join(F.broadcast(cover), "cell")
-    if n_salt > 1:
-        from ..plans.partitioning import with_salt
-
-        parallelism = spark.sparkContext.defaultParallelism
-        candidates = (
-            with_salt(candidates, n_salt)
-            .repartition(parallelism, F.col("cell"), F.col("_salt"))
-            .drop("_salt")
-        )
-
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in candidates.schema.fields
-    )
-
-    def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                yield pdf
-                continue
-            keep = np.zeros(len(pdf), dtype=bool)
-            px = pdf[lon_col].to_numpy(dtype=np.float64)
-            py = pdf[lat_col].to_numpy(dtype=np.float64)
-            for admin_id, idx in pdf.groupby("admin_id").indices.items():
-                keep[idx] = pip_mask(px[idx], py[idx], rings[int(admin_id)])
-            yield pdf[keep]
-
-    return candidates.mapInPandas(refine, out_schema).drop("cell")
+    out_cols = [c for c in candidates.columns if c != "cell"]
+    return _refine(candidates, out_cols, lon_col, lat_col, rings)

@@ -23,6 +23,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from ..functions.cells import sql_equirect_tile_x, sql_equirect_tile_y
+from ..functions.geometry import GEOM_STRUCT
 
 
 def assign_tiles(points_df, z: int, lon_col: str = "lon", lat_col: str = "lat"):
@@ -66,8 +67,7 @@ def rasterize_tiles(points_df, z: int, grid: int = 16,
 
 
 VECTOR_SCHEMA = (
-    "z int, tx bigint, ty bigint, px int, py int, count long, "
-    "geom struct<type: tinyint, dim: tinyint, lengths: array<int>, coords: array<double>>"
+    f"z int, tx bigint, ty bigint, px int, py int, count long, geom {GEOM_STRUCT}"
 )
 
 

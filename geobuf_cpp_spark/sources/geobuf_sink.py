@@ -30,8 +30,7 @@ from pyspark.sql import functions as F
 
 from ..codec import geobuf as gb
 from ..functions.cells import sql_cell, sql_cell_parent
-from ..functions.geometry import wire_to_geojson
-from ..functions.udfs import _json_map_to_props
+from ..functions.udfs import _row_features
 
 MANIFEST_SCHEMA = "path string, cell_prefix long, n_features long, n_bytes long"
 
@@ -49,17 +48,7 @@ def write_geobuf_files(features_df, out_dir: str, res: int = 8,
 
     def write_group(pdf: pd.DataFrame) -> pd.DataFrame:
         prefix = int(pdf["cell_prefix"].iloc[0])
-        feats = []
-        for geom, props in zip(pdf["geom"], pdf["properties"]):
-            feats.append(
-                {
-                    "type": "Feature",
-                    "geometry": wire_to_geojson(
-                        geom["type"], geom["dim"], geom["lengths"], geom["coords"]
-                    ),
-                    "properties": _json_map_to_props(props),
-                }
-            )
+        feats = list(_row_features(pdf))
         blob = gb.Encoder(max_precision=max_precision).encode(
             {"type": "FeatureCollection", "features": feats}
         )

@@ -22,6 +22,7 @@ import numpy as np
 import pandas as pd
 
 from ..extract.html import extract_text
+from ..functions.geometry import GEOM_STRUCT, geojson_to_wire
 
 SEED = 42
 
@@ -193,10 +194,7 @@ def pages_dataframe(spark, n_pages: int, partitions: int | None = None):
 # admin polygons (PIP right side) — FIXTURES.md §1.2
 # ---------------------------------------------------------------------------
 
-ADMIN_SCHEMA = (
-    "admin_id long, name string, level tinyint, "
-    "geom struct<type: tinyint, dim: tinyint, lengths: array<int>, coords: array<double>>"
-)
+ADMIN_SCHEMA = f"admin_id long, name string, level tinyint, geom {GEOM_STRUCT}"
 
 
 def _regular_ring(lat_c: float, lon_c: float, radius_deg: float, n_vertices: int,
@@ -217,8 +215,6 @@ def generate_admin_polygons(n_per_city: int = 3) -> pd.DataFrame:
     level-0 is a 2-part MultiPolygon — exercising the codec lengths layouts
     (reference geobuf.cpp:489-528) inside the join path.
     """
-    from ..functions.geometry import geojson_to_wire
-
     rows = []
     admin_id = 0
     for c, (lat_c, lon_c) in enumerate(CITY_CENTERS):

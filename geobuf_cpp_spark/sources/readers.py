@@ -54,8 +54,8 @@ def read_geobuf_dir(spark: SparkSession, location: str,
     import pandas as pd
 
     from ..codec import geobuf as gb
-    from ..functions.geometry import geojson_to_wire
-    from ..functions.udfs import _props_to_json_map
+    from ..functions.geometry import GEOM_STRUCT
+    from ..functions.udfs import _feature_row
 
     raw = (
         spark.read.format("binaryFile")
@@ -63,11 +63,10 @@ def read_geobuf_dir(spark: SparkSession, location: str,
         .load(location)
         .select("path", "content")
     )
-
+    columns = ["path", "feature_idx", "kind", "geom", "properties"]
     schema = (
-        "path string, feature_idx int, kind string, "
-        "geom struct<type: tinyint, dim: tinyint, lengths: array<int>, "
-        "coords: array<double>>, properties map<string,string>"
+        f"path string, feature_idx int, kind string, geom {GEOM_STRUCT}, "
+        "properties map<string,string>"
     )
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -80,31 +79,15 @@ def read_geobuf_dir(spark: SparkSession, location: str,
                 elif doc.get("type") == "Feature":
                     feats = [doc]
                 elif doc:
-                    feats = [{"type": "Feature", "geometry": doc,
-                              "properties": {}}]
+                    feats = [{"type": "Feature", "geometry": doc}]
                 else:
                     feats = []
                 for idx, f in enumerate(feats):
-                    geom = f.get("geometry")
-                    if not geom:
-                        continue
-                    t, dim, lengths, coords = geojson_to_wire(geom)
-                    rows.append(
-                        {
-                            "path": path,
-                            "feature_idx": idx,
-                            "kind": geom["type"],
-                            "geom": {"type": t, "dim": dim,
-                                     "lengths": lengths, "coords": coords},
-                            "properties": _props_to_json_map(
-                                f.get("properties") or {}
-                            ),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["path", "feature_idx", "kind", "geom", "properties"],
-            )
+                    if f.get("geometry"):
+                        rows.append({**_feature_row(f, customs=False), "path": path,
+                                     "feature_idx": idx,
+                                     "kind": f["geometry"]["type"]})
+            yield pd.DataFrame(rows, columns=columns)
 
     return raw.mapInPandas(decode, schema)
 

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.cells import sql_cell
-
+from ..functions.udfs import _extract_batches
 from ..sources.pages import PAGES_SCHEMA
 
 
@@ -28,33 +28,12 @@ def read_pages_stream(spark: SparkSession, source_dir: str,
 
 
 def extract_features_with_ts(pages_df: DataFrame):
-    """extract_features variant that carries warc_ts through the UDF."""
-    from typing import Iterator
+    """(url, warc_ts, feature_idx, lon, lat) per extracted feature; warc_ts
+    comes from the feature's own page row (a url can repeat in a batch)."""
+    columns = ["url", "warc_ts", "feature_idx", "lon", "lat"]
 
-    import pandas as pd
-
-    from ..extract.html import extract_geometries
-    from ..functions.geometry import geojson_to_wire
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, ts, html in zip(pdf["url"], pdf["warc_ts"], pdf["html"]):
-                text = bytes(html).decode("utf-8", errors="replace")
-                for idx, feat in enumerate(extract_geometries(text)):
-                    _t, _dim, _lengths, coords = geojson_to_wire(feat["geometry"])
-                    rows.append(
-                        {
-                            "url": url,
-                            "warc_ts": ts,
-                            "feature_idx": idx,
-                            "lon": coords[0],
-                            "lat": coords[1],
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["url", "warc_ts", "feature_idx", "lon", "lat"]
-            )
+    def gen(batches):
+        return _extract_batches(batches, columns, carry=("warc_ts",))
 
     return pages_df.select("url", "warc_ts", "html").mapInPandas(
         gen, "url string, warc_ts timestamp, feature_idx int, lon double, lat double"

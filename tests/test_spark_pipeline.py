@@ -13,7 +13,11 @@ from geobuf_cpp_spark.codec import geobuf as gb
 from geobuf_cpp_spark.extract.html import extract_geometries, extract_text
 from geobuf_cpp_spark.functions import cells as C
 from geobuf_cpp_spark.functions.geometry import point_in_wire_polygon
-from geobuf_cpp_spark.functions.udfs import decode_features, encode_features, extract_features
+from geobuf_cpp_spark.functions.udfs import (
+    decode_features,
+    encode_features,
+    extract_encode_features,
+)
 from geobuf_cpp_spark.operators.knn import knn_broadcast, knn_distributed
 from geobuf_cpp_spark.operators.pip_join import pip_join
 from geobuf_cpp_spark.operators.tiles import rasterize_tiles, vectorize_raster
@@ -36,7 +40,7 @@ def pages(spark):
 
 @pytest.fixture(scope="module")
 def features(spark, pages):
-    df = extract_features(pages)
+    df = extract_encode_features(pages).drop("geobuf")
     df.persist()
     yield df
     df.unpersist()
@@ -71,7 +75,7 @@ def test_extraction_matches_local_oracle(pages, features):
     assert sum(local.values()) > 100  # corpus actually carries geometry
 
 
-def test_geobuf_spark_roundtrip_byte_identical(spark, features):
+def test_geobuf_spark_roundtrip_byte_identical(spark, pages, features):
     encoded = encode_features(features, max_precision=10**7)
     decoded = decode_features(encoded)
     # re-encode the decoded features: bytes must be identical (fixpoint,
@@ -87,6 +91,19 @@ def test_geobuf_spark_roundtrip_byte_identical(spark, features):
     )
     stats = joined.agg(
         F.count("*").alias("n"), F.sum(F.col("same").cast("int")).alias("ok")
+    ).collect()[0]
+    assert stats["n"] > 100 and stats["ok"] == stats["n"]
+    # the fused extract+encode stage encodes the extracted GeoJSON directly;
+    # its blobs must equal encode_features over the same rows
+    fused = extract_encode_features(pages, max_precision=10**7).select(
+        "url", "feature_idx", F.col("geobuf").alias("fused")
+    )
+    cmp = encoded.select("url", "feature_idx", "geobuf").join(
+        fused, ["url", "feature_idx"], "full_outer"
+    )
+    stats = cmp.agg(
+        F.count("*").alias("n"),
+        F.sum((F.col("geobuf") == F.col("fused")).cast("int")).alias("ok"),
     ).collect()[0]
     assert stats["n"] > 100 and stats["ok"] == stats["n"]
 
@@ -168,7 +185,7 @@ def test_manifest_resume(spark, tmp_path, pages):
 
     def build():
         calls["n"] += 1
-        return extract_features(pages)
+        return extract_encode_features(pages).drop("geobuf")
 
     fp = fingerprint("pages", str(N_PAGES))
     df1 = run_stage(spark, root, "extract", fp, build)
@@ -265,7 +282,7 @@ def test_pip_join_exact_cover_same_result(spark, features):
     assert a == b
 
 
-def test_custom_properties_spark_roundtrip(spark):
+def test_custom_properties_spark_roundtrip(spark, tmp_path):
     """The reference's signature extension — custom members at geometry,
     feature, AND feature-collection level (wire tag 15,
     src/geobuf/geobuf.cpp:381-383,402-404,443-445; data/sample1.json has
@@ -327,6 +344,33 @@ def test_custom_properties_spark_roundtrip(spark):
         assert dict(r["geom_custom_properties"]) == geom_custom
         assert dict(r["fc_custom_properties"]) == fc_custom
 
+    # file path: the sink ignores custom columns, the reader adds none;
+    # geometry and properties survive
+    from geobuf_cpp_spark.sources.geobuf_sink import write_geobuf_files
+    from geobuf_cpp_spark.sources.readers import read_geobuf_dir
+
+    out = str(tmp_path / "custom_pbf")
+    with_pt = df.withColumn("lon", F.col("geom.coords")[0]).withColumn(
+        "lat", F.col("geom.coords")[1]
+    )
+    manifest = write_geobuf_files(with_pt, out, res=8, prefix_res=3).toPandas()
+    assert manifest["n_features"].sum() == 3
+    for p in manifest["path"]:
+        doc = gb.decode(open(p, "rb").read())
+        assert all(set(f) == {"type", "geometry", "properties"} and
+                   set(f["geometry"]) == {"type", "coordinates"}
+                   for f in doc["features"])
+    files = read_geobuf_dir(spark, out)
+    assert files.columns == ["path", "feature_idx", "kind", "geom", "properties"]
+    got = sorted(
+        (list(r["geom"]["coords"]), dict(r["properties"]), r["kind"])
+        for r in files.collect()
+    )
+    want = sorted(
+        (row["geom"]["coords"], row["properties"], "Point") for row in rows
+    )
+    assert got == want
+
 
 def test_fc_encode_decode_roundtrip(spark, features):
     from geobuf_cpp_spark.functions.udfs import (
@@ -346,16 +390,6 @@ def test_fc_encode_decode_roundtrip(spark, features):
     for idx in orig:
         assert dec[idx]["type"] == orig[idx]["type"]
         assert len(dec[idx]["coords"]) == len(orig[idx]["coords"])
-
-
-def test_pip_join_salted_same_result(spark, features):
-    admin = generate_admin_polygons()
-    pts = features.select("url", "feature_idx", "lon", "lat")
-    plain = {(r["url"], r["feature_idx"], r["admin_id"])
-             for r in pip_join(pts, admin, res=8).select("url", "feature_idx", "admin_id").collect()}
-    salted = {(r["url"], r["feature_idx"], r["admin_id"])
-              for r in pip_join(pts, admin, res=8, n_salt=8).select("url", "feature_idx", "admin_id").collect()}
-    assert plain == salted and len(plain) > 50
 
 
 def test_materialize_geobuf_partition_pruning(spark, features, tmp_path):
@@ -393,42 +427,6 @@ def test_salt_spreads_hot_key(spark):
     assert partials == 16
     # and the final result is still the plain count
     assert salted_count(hot, ["k"], n_salt=16).collect()[0]["count"] == 10_000
-
-
-def test_pip_join_salt_spreads_hot_cell(spark, features):
-    """n_salt>1 must put a hot cell's candidate rows on >1 partition."""
-    from pyspark.sql.functions import spark_partition_id
-
-    admin = generate_admin_polygons()
-    pts = features.select("url", "feature_idx", "lon", "lat")
-    # reconstruct the candidate frame exactly as pip_join does, with salt
-    out = pip_join(pts, admin, res=8, n_salt=8)
-    # results unchanged (covered elsewhere); here inspect the physical
-    # spread: re-run the pre-refine frame and count partitions per cell
-    from geobuf_cpp_spark.functions.cells import sql_cell
-    from geobuf_cpp_spark.operators.pip_join import polygon_coverings
-    from geobuf_cpp_spark.plans.partitioning import with_salt
-
-    cover = spark.createDataFrame(polygon_coverings(admin, 8))
-    cand = pts.withColumn("cell", F.expr(sql_cell("lat", "lon", 8))).join(
-        F.broadcast(cover), "cell"
-    )
-    salted = (
-        with_salt(cand, 8)
-        .repartition(8, F.col("cell"), F.col("_salt"))
-        .withColumn("pid", spark_partition_id())
-    )
-    per_cell = (
-        salted.groupBy("cell")
-        .agg(F.countDistinct("pid").alias("nparts"), F.count("*").alias("n"))
-        .filter(F.col("n") >= 32)
-        .collect()
-    )
-    assert per_cell, "expected at least one dense cell in the fixture"
-    assert any(r["nparts"] > 1 for r in per_cell), (
-        "no dense cell spans more than one partition — salting is a placebo"
-    )
-    assert out.count() > 0
 
 
 def test_aqe_skew_join_splits_hot_key(spark):
