@@ -37,6 +37,7 @@ from geobuf_cpp_spark.operators.curation import sql_knuth_hash
 from geobuf_cpp_spark.plans.partitioning import spread
 from geobuf_cpp_spark.session import ship_package
 from geobuf_cpp_spark.sources import points as P
+from geobuf_cpp_spark.sources.readers import table_df
 
 from geobuf_cpp_spark.operators.segments import sql_segments_intersect
 
@@ -238,41 +239,37 @@ def _prep(spark: SparkSession, sf_dir: str, *tables: str) -> None:
         # was measured BOTH ways at sf0.1: it wins big on token-heavy
         # gates but taxes every cheap scan+agg with an exchange that
         # costs more than the one-core scan, netting ~zero — so plain
-        # views stay. The reader DataFrame itself is memoized
-        # (sources.readers.table_df): re-reading the footer + file
-        # listing cost ~96 ms per call x ~400 _prep registrations per
-        # bench run; the memo caches only the lazy plan, never data.
-        from geobuf_cpp_spark.sources.readers import table_df
-
+        # views stay. Readers and shared subresults: see
+        # session.session_memo.
         table_df(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
-# Sibling gates share their expensive derived inputs (the CMS matrix, the
-# KMV sketch, the Bloom bit set, the co-occurrence edge list): the first
-# consumer in a session builds + persists, later ones reuse — identical
-# results, one corpus scan instead of two per pair. Keyed weakly by
-# session so a stopped session's cache evicts with it.
-import weakref as _weakref
-
-_SHARED_MEMO: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
-
-
-def _shared_df(spark: SparkSession, sf_dir: str, key: str, build,
+def _shared_df(spark: SparkSession, sf_dir: str, key, build,
                how: str = "persist"):
-    per_session = _SHARED_MEMO.setdefault(spark, {})
-    df = per_session.get((sf_dir, key))
-    if df is None:
-        built = build()
-        # "ckpt": lazy localCheckpoint instead of persist — an
-        # InMemoryRelation is an AQE re-planning barrier and carries
-        # defaultSizeInBytes stats until materialized, which can flip
-        # every join above it to sort-merge on the cold pass (measured:
-        # prefix_jaccard 4.0s -> 23.7s cold under persist); a
-        # checkpointed RDD keeps real sizes and partitioning.
-        df = (built.localCheckpoint(eager=False) if how == "ckpt"
-              else built.persist())
-        per_session[(sf_dir, key)] = df
-    return df
+    """A derived input that sibling gates share: the first consumer in a
+    session builds and persists it, later ones reuse it — identical
+    results, one corpus scan instead of one per gate."""
+    # "ckpt": lazy localCheckpoint instead of persist — an
+    # InMemoryRelation is an AQE re-planning barrier and carries
+    # defaultSizeInBytes stats until materialized, which can flip
+    # every join above it to sort-merge on the cold pass (measured:
+    # prefix_jaccard 4.0s -> 23.7s cold under persist); a
+    # checkpointed RDD keeps real sizes and partitioning.
+    from geobuf_cpp_spark.session import session_memo
+
+    return session_memo(
+        spark, key,
+        lambda: (build().localCheckpoint(eager=False) if how == "ckpt"
+                 else build().persist()),
+        sf_dir)
+
+
+def _docs_sketch(spark: SparkSession, sf_dir: str, sketch) -> DataFrame:
+    """``sketch(documents)``, shared by the gates that read it; the sketch
+    function is its own key."""
+    _prep(spark, sf_dir, "documents")
+    return _shared_df(spark, sf_dir, sketch,
+                      lambda: sketch(spark.table("documents")))
 
 
 # ---------------------------------------------------------------------------
@@ -1442,18 +1439,12 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup edges (min-label propagation, O(diameter) rounds) — gated
     against a DuckDB RECURSIVE CTE computing the transitive closure's min
     reachable id. An ITERATIVE algorithm with a full value oracle."""
-    from geobuf_cpp_spark.operators.dedup import dedup_clusters, ngram_jaccard_pairs
+    from geobuf_cpp_spark.operators.dedup import dedup_clusters
 
     _prep(spark, sf_dir, "documents")
     docs = spark.table("documents")
-    # same edge list the ngram_jaccard gate IS — build + persist once
-    # per session (the _shared_seg_pairs discipline for the text graph)
-    pairs = _shared_df(
-        spark, sf_dir, "ngram_pairs",
-        lambda: ngram_jaccard_pairs(
-            docs, threshold=MINHASH_THRESHOLD,
-            ds=_shared_shingles(spark, sf_dir)))
-    return dedup_clusters(docs, pairs)
+    # the ngram_jaccard gate's edge list, shared
+    return dedup_clusters(docs, q_ngram_jaccard(spark, sf_dir))
 
 
 def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1664,15 +1655,11 @@ def q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus, verified at all SFs."""
     from geobuf_cpp_spark.operators.ann import cosine_neardup_blocked
 
-    from geobuf_cpp_spark.sources.readers import table_df
-
     emb = table_df(spark, sf_dir, "embeddings")
     return cosine_neardup_blocked(emb, COSINE_NEARDUP_T).select("id_a", "id_b")
 
 
 def _ann_queries(spark: SparkSession, sf_dir: str, n: int = 20):
-    from geobuf_cpp_spark.sources.readers import table_df
-
     emb = table_df(spark, sf_dir, "embeddings")
     qp = emb.filter(F.col("vec_id") < n).orderBy("vec_id").toPandas()
     qp = qp.rename(columns={"vec_id": "query_id", "embedding": "vec"})
@@ -1770,7 +1757,8 @@ def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact n-gram Jaccard dedup, all-JVM (no Python stage) — an
     independent Spark implementation gated against the independent DuckDB
-    shingle-explosion SQL (the same oracle text minhash_neardup uses)."""
+    shingle-explosion SQL (the same oracle text minhash_neardup uses).
+    Shared (session memo): `dedup_clusters` takes it as its graph."""
     from geobuf_cpp_spark.operators.dedup import ngram_jaccard_pairs
 
     _prep(spark, sf_dir, "documents")
@@ -2310,9 +2298,7 @@ def q_cms_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-matches DuckDB computing identical md5-low-64 buckets."""
     from geobuf_cpp_spark.operators.sketches import count_min_sketch
 
-    _prep(spark, sf_dir, "documents")
-    return _shared_df(spark, sf_dir, "cms",
-                      lambda: count_min_sketch(spark.table("documents")))
+    return _docs_sketch(spark, sf_dir, count_min_sketch)
 
 
 def q_cms_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2324,9 +2310,8 @@ def q_cms_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         count_min_sketch,
     )
 
-    _prep(spark, sf_dir, "documents")
+    sketch = _docs_sketch(spark, sf_dir, count_min_sketch)
     docs = spark.table("documents")
-    sketch = _shared_df(spark, sf_dir, "cms", lambda: count_min_sketch(docs))
     top = (
         docs.select(F.explode(F.split("text", " ")).alias("term"))
         .filter(F.col("term") != "")
@@ -2345,21 +2330,15 @@ def q_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB computing identical md5_number_lower values."""
     from geobuf_cpp_spark.operators.sketches import kmv_sketch
 
-    _prep(spark, sf_dir, "documents")
-    return _shared_df(spark, sf_dir, "kmv",
-                      lambda: kmv_sketch(spark.table("documents")))
+    return _docs_sketch(spark, sf_dir, kmv_sketch)
 
 
 def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV distinct-token estimate as one exact-integer row: floored
     (k-1)*2^64/h_k matches DuckDB's hugeint integer division."""
-    from geobuf_cpp_spark.operators.sketches import kmv_distinct
+    from geobuf_cpp_spark.operators.sketches import kmv_distinct, kmv_sketch
 
-    _prep(spark, sf_dir, "documents")
-    from geobuf_cpp_spark.operators.sketches import kmv_sketch
-
-    sketch = _shared_df(spark, sf_dir, "kmv",
-                        lambda: kmv_sketch(spark.table("documents")))
+    sketch = _docs_sketch(spark, sf_dir, kmv_sketch)
     return kmv_distinct(spark.table("documents"), sketch=sketch)
 
 
@@ -2369,15 +2348,9 @@ def q_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract and a binary-search bitlength cascade — the full register
     table hash-gates against DuckDB recomputing it from
     md5_number_lower."""
-    _prep(spark, sf_dir, "documents")
-    return _shared_hll(spark, sf_dir)
-
-
-def _shared_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geobuf_cpp_spark.operators.sketches import hll_registers
 
-    return _shared_df(spark, sf_dir, "hll",
-                      lambda: hll_registers(spark.table("documents")))
+    return _docs_sketch(spark, sf_dir, hll_registers)
 
 
 def q_hll_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2388,10 +2361,9 @@ def q_hll_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline short of alpha*m^2*2^57/den hash-gates against DuckDB
     recomputing the registers AND the dyadic denominator from the same
     md5 hex — completing HLL the way kmv_distinct completed KMV."""
-    from geobuf_cpp_spark.operators.sketches import hll_estimate_parts
+    from geobuf_cpp_spark.operators.sketches import hll_estimate_parts, hll_registers
 
-    _prep(spark, sf_dir, "documents")
-    return hll_estimate_parts(_shared_hll(spark, sf_dir))
+    return hll_estimate_parts(_docs_sketch(spark, sf_dir, hll_registers))
 
 
 def q_ams_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2401,9 +2373,7 @@ def q_ams_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     against DuckDB replaying the identical signs."""
     from geobuf_cpp_spark.operators.sketches import ams_sketch
 
-    _prep(spark, sf_dir, "documents")
-    return _shared_df(spark, sf_dir, "ams",
-                      lambda: ams_sketch(spark.table("documents")))
+    return _docs_sketch(spark, sf_dir, ams_sketch)
 
 
 def q_ams_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2423,10 +2393,8 @@ def q_ams_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant-key equi-join, not a cartesian)."""
     from geobuf_cpp_spark.operators.sketches import ams_f2, ams_sketch
 
-    _prep(spark, sf_dir, "documents")
-    docs = spark.table("documents")
-    sk = _shared_df(spark, sf_dir, "ams", lambda: ams_sketch(docs))
-    return ams_f2(docs, sketch=sk)
+    sk = _docs_sketch(spark, sf_dir, ams_sketch)
+    return ams_f2(spark.table("documents"), sketch=sk)
 
 
 QSKETCH_VALUE = "CAST(round(value * 100) AS BIGINT)"   # exact cents
@@ -2500,12 +2468,8 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geobuf_cpp_spark.operators.graph import triangle_counts
     from geobuf_cpp_spark.operators.textstats import term_cooccurrence
 
-    _prep(spark, sf_dir, "documents")
-    cooccur = _shared_df(
-        spark, sf_dir, "cooccur",
-        lambda: term_cooccurrence(spark.table("documents")))
     edges = (
-        cooccur
+        _docs_sketch(spark, sf_dir, term_cooccurrence)
         .filter(F.col("pair_docs") >= TRI_EDGE_MIN_DOCS)
         .select(F.col("term_a").alias("id_a"), F.col("term_b").alias("id_b"))
     )
@@ -2528,9 +2492,7 @@ def q_bloom_bits(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole bit set hash-gates."""
     from geobuf_cpp_spark.operators.sketches import bloom_build
 
-    _prep(spark, sf_dir, "documents")
-    return _shared_df(spark, sf_dir, "bloom",
-                      lambda: bloom_build(spark.table("documents")))
+    return _docs_sketch(spark, sf_dir, bloom_build)
 
 
 def q_bloom_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2540,9 +2502,8 @@ def q_bloom_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     positives are deterministic, so the gate hash-matches them too."""
     from geobuf_cpp_spark.operators.sketches import bloom_build, bloom_probe
 
-    _prep(spark, sf_dir, "documents", "part")
-    bloom = _shared_df(spark, sf_dir, "bloom",
-                       lambda: bloom_build(spark.table("documents")))
+    _prep(spark, sf_dir, "part")
+    bloom = _docs_sketch(spark, sf_dir, bloom_build)
     probe = (
         spark.table("part")
         .select(F.explode(F.split("p_name", " ")).alias("term"))
@@ -2579,10 +2540,7 @@ def q_term_cooccur(spark: SparkSession, sf_dir: str) -> DataFrame:
     (exact-integer PMI numerators; the float log stays with the caller)."""
     from geobuf_cpp_spark.operators.textstats import term_cooccurrence
 
-    _prep(spark, sf_dir, "documents")
-    return _shared_df(
-        spark, sf_dir, "cooccur",
-        lambda: term_cooccurrence(spark.table("documents")))
+    return _docs_sketch(spark, sf_dir, term_cooccurrence)
 
 
 KCORE_K = 5          # within-core degree floor

@@ -25,8 +25,8 @@ _M31 = 2147483648
 def sql_knuth_hash(id_col: str) -> str:
     """Portable overflow-safe Knuth hash text, shared by both engines.
 
-    The naive ``(id * KNUTH) % 2^32`` silently wraps in Spark for
-    id >= ~3.47e9 (non-ANSI BIGINT overflow) while DuckDB raises, and a
+    The naive ``(id * KNUTH) % 2^32`` overflows BIGINT for id >= ~3.47e9
+    (an error in DuckDB and in ANSI-mode Spark), and a
     negative id makes the modulo negative so ``< threshold`` predicates
     degenerate to always-true. Pre-reducing the id to a non-negative
     31-bit residue first caps the product at (2^31-1) * KNUTH < 2^63 —

@@ -469,22 +469,21 @@ def source_quality_ci(docs_df, id_col: str = "doc_id",
     Emitted as lb_num = (x+2)*scale - 2*isqrt( scale^2*(x*(n-x)+n)
     div n ) over lb_den = (n+4)*scale: one floor-division and one exact
     integer sqrt (operators/trajectory.sql_isqrt_exact), every operand
-    positive, so Spark `div` == DuckDB `//` and the parts hash-gate
-    bit-for-bit; the final float division stays with the caller (the
-    tfidf_topk discipline). The product scale^2 * (x*(n-x)+n) is
-    computed in DECIMAL(38,0) — as BIGINT it wraps silently (non-ANSI)
-    at n ~ 6.1e5 docs/source for scale=1e4, where DuckDB would error —
-    so only the POST-division value must fit in 64 bits: exact for
-    n <= ~3e11 docs per source at the default scale, and past that the
-    integral divide overflows to NULL (loud downstream) instead of
-    wrapping to garbage.
+    positive, so the floor quotient == DuckDB `//` and the parts
+    hash-gate bit-for-bit; the final float division stays with the
+    caller (the tfidf_topk discipline). The product scale^2 * (x*(n-x)+n) is
+    computed in DECIMAL(38,0) — as BIGINT it would overflow at
+    n ~ 6.1e5 docs/source for scale=1e4 — so only the POST-division
+    value must fit in 64 bits: exact for n <= ~3e11 docs per source at
+    the default scale. Past that the quotient's cast to BIGINT raises
+    CAST_OVERFLOW (ANSI mode, set by ``session.get_spark``); Spark's
+    DECIMAL ``div`` would instead wrap silently, so the floor division
+    is written as an exact decimal division of num - num % n.
 
     Plan: the doc-keyed keep flags join their source labels, then ONE
     source-keyed aggregate; the CI arithmetic is a scalar projection on
     the aggregated row — sources, not documents, bound the output.
     """
-    from geobuf_cpp_spark.operators.trajectory import sql_isqrt_exact
-
     q = quality_score(docs_df, id_col=id_col)
     src = docs_df.select(id_col, source_col)
     g = (
@@ -493,10 +492,19 @@ def source_quality_ci(docs_df, id_col: str = "doc_id",
         .agg(F.count("*").cast("long").alias("n_docs"),
              F.sum("keep").cast("long").alias("n_keep"))
     )
-    arg = (f"((cast({scale} as decimal(38,0)) * {scale}) * "
-           f"(cast(n_keep as decimal(38,0)) * (n_docs - n_keep) + n_docs))"
-           f" div n_docs")
-    root = sql_isqrt_exact(arg)
+    return _wilson_parts(g, source_col, scale)
+
+
+def _wilson_parts(g, source_col: str, scale: int):
+    """The Wilson lower-bound parts of ``source_quality_ci`` from the
+    per-source (n_docs, n_keep) counts."""
+    from geobuf_cpp_spark.operators.trajectory import sql_isqrt_exact
+
+    g = g.withColumn("_num", F.expr(
+        f"(cast({scale} as decimal(38,0)) * {scale}) * "
+        f"(cast(n_keep as decimal(38,0)) * (n_docs - n_keep) + n_docs)"))
+    root = sql_isqrt_exact(
+        "cast((_num - _num % n_docs) / n_docs as bigint)")
     return g.selectExpr(
         source_col, "n_docs", "n_keep",
         f"cast((n_keep + 2) * {scale} - 2 * {root} as bigint) AS lb_num",

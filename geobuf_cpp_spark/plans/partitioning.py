@@ -17,26 +17,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.cells import sql_cell_parent
+from ..session import session_memo
 
 
-# memo for spread()'s split-count probe: getNumPartitions() forces one
-# physical-planning pass per call, which a 100-stage pipeline would pay
-# twice per operator. Outer key: the SparkSession itself via a WEAK
-# reference — a stopped session's entries evict with it and a recycled
-# object address can never serve another session's counts. Inner key: the
-# ANALYZED plan's semanticHash (cheap, no physical planning). The memo is
-# a HINT only: a hash collision or a scan whose underlying files changed
-# mid-session only risks skipping/adding a benign repartition, never a
-# wrong result. Inner dicts are size-capped so a long-lived session
-# running many distinct plans cannot accrete entries forever.
-import weakref
-
-_SPREAD_MEMO: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-_SPREAD_MEMO_CAP = 512
-
-
-def spread(df: DataFrame, multiple: int = 1, force: bool = False,
-           n_splits: int | None = None) -> DataFrame:
+def spread(df: DataFrame, force: bool = False) -> DataFrame:
     """Round-robin repartition to cluster parallelism — only when needed.
 
     Heavy per-row UDF stages and wide joins must not inherit the scan's
@@ -45,34 +29,31 @@ def spread(df: DataFrame, multiple: int = 1, force: bool = False,
     full-width execution; results are unchanged.
 
     Conditional by design: when the input already has at least
-    ``parallelism * multiple`` splits (the normal case at 100 TB, where the
-    scan's split count exceeds cluster parallelism), repartitioning would be
-    a pure-waste full shuffle of the corpus — so it is skipped. ``force``
-    restores the unconditional behavior for layout-sensitive callers;
-    ``n_splits`` lets callers that already know the scan layout skip the
-    probe entirely.
+    ``parallelism`` splits (the normal case at 100 TB, where the scan's
+    split count exceeds cluster parallelism), repartitioning would be a
+    pure-waste full shuffle of the corpus — so it is skipped. ``force``
+    restores the unconditional behavior for layout-sensitive callers.
+
+    The split-count probe (``getNumPartitions()`` forces one physical
+    planning pass) is memoized per session under the analyzed plan's
+    ``semanticHash``. It is a hint only: a hash collision or a scan whose
+    files changed mid-session risks skipping or adding a benign
+    repartition, never a wrong result.
     """
     # streaming frames: no .rdd probe is possible and micro-batch
     # parallelism is the source's own concern — pass through untouched
     if df.isStreaming:
         return df
-    target = df.sparkSession.sparkContext.defaultParallelism * multiple
+    target = df.sparkSession.sparkContext.defaultParallelism
     if not force:
-        if n_splits is None:
-            per_session = _SPREAD_MEMO.setdefault(df.sparkSession, {})
-            key = df.semanticHash()
-            n_splits = per_session.get(key)
-            if n_splits is None:
-                n_splits = df.rdd.getNumPartitions()
-                if len(per_session) >= _SPREAD_MEMO_CAP:
-                    per_session.clear()
-                per_session[key] = n_splits
+        n_splits = session_memo(df.sparkSession, ("spread", df.semanticHash()),
+                                lambda: df.rdd.getNumPartitions())
         if n_splits >= target:
             return df
     return df.repartition(target)
 
 
-def spread_groups(df: DataFrame, *keys: str, multiple: int = 1) -> DataFrame:
+def spread_groups(df: DataFrame, *keys: str) -> DataFrame:
     """Hash-repartition on grouping keys to cluster parallelism — the
     ``spread`` discipline for ``groupBy(keys).applyInPandas`` stages.
 
@@ -89,8 +70,7 @@ def spread_groups(df: DataFrame, *keys: str, multiple: int = 1) -> DataFrame:
     across every core. Same-keyed groups still co-locate — results are
     unchanged.
     """
-    target = df.sparkSession.sparkContext.defaultParallelism * multiple
-    return df.repartition(target, *keys)
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism, *keys)
 
 
 def repartition_by_cell_prefix(df: DataFrame, cell_col: str, res: int,

@@ -11,9 +11,61 @@ from __future__ import annotations
 
 import os
 import tempfile
+import weakref
 import zipfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+# All per-session engine state: session (weakly, so a stopped session's
+# entries go with it) -> sf_dir (None: built from no table directory) ->
+# (the directory's stamp, {key: value}); at most _MEMO_CAP entries per
+# directory, the least recently used dropped first.
+_MEMO: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+_MEMO_CAP = 512
+
+
+def _stamp(sf_dir: str | None):
+    """The modification times of the table entries under ``sf_dir``: an
+    overwrite recreates a table directory, an append adds files to it.
+    None for a path that is not a readable local directory (``hdfs:``,
+    ``s3a:``, ``file:`` URIs), whose tables then count as immutable for
+    the session."""
+    if sf_dir is None:
+        return None
+    try:
+        with os.scandir(sf_dir) as entries:
+            return tuple(sorted((e.name, e.stat().st_mtime_ns) for e in entries))
+    except OSError:
+        return None
+
+
+def _release(values) -> None:
+    for v in values:
+        if isinstance(v, DataFrame) and v.is_cached:
+            v.unpersist()
+
+
+def session_memo(spark: SparkSession, key, build, sf_dir: str | None = None):
+    """``build()`` once per (session, ``sf_dir``, ``key``): the table
+    readers, the subresults sibling gates share, the ``spread`` hints and
+    the package-shipped flag. An entry built from tables must pass their
+    ``sf_dir``: a change of its stamp (any table there rewritten) drops
+    every entry of that directory and unpersists the cached frames."""
+    dirs = _MEMO.setdefault(spark, {})
+    stamp = _stamp(sf_dir)
+    held = dirs.get(sf_dir)
+    if held is None or held[0] != stamp:
+        if held is not None:
+            _release(held[1].values())
+        held = dirs[sf_dir] = (stamp, {})
+    entries = held[1]
+    if key in entries:
+        entries[key] = value = entries.pop(key)
+        return value
+    if len(entries) >= _MEMO_CAP:
+        _release([entries.pop(next(iter(entries)))])
+    entries[key] = value = build()
+    return value
 
 
 def build_pkg_zip(zip_path: str | None = None) -> str:
@@ -46,10 +98,8 @@ def ship_package(spark: SparkSession) -> None:
     cluster via ``spark-submit --py-files engine.zip``, programmatically via
     ``addPyFile``. Idempotent per session.
     """
-    if getattr(spark, "_geobuf_pkg_shipped", False):
-        return
-    spark.sparkContext.addPyFile(build_pkg_zip())
-    spark._geobuf_pkg_shipped = True
+    session_memo(spark, "package",
+                 lambda: spark.sparkContext.addPyFile(build_pkg_zip()))
 
 
 def get_spark(
@@ -71,6 +121,9 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")
+        # overflow raises (ARITHMETIC_OVERFLOW, CAST_OVERFLOW) instead of
+        # wrapping; the 4.x default, pinned so every plan runs one way
+        .config("spark.sql.ansi.enabled", "true")
         # local[n] runs EVERY executor thread inside the driver JVM, so
         # the driver heap is the whole cluster's execution+storage
         # memory: 8g across 32 concurrent tasks (~250MB each) showed

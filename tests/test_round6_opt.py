@@ -140,7 +140,7 @@ def test_source_quality_ci_no_bigint_wrap_on_large_group(spark):
     must return the exact integer parts there. n is synthesized via an
     aggregated frame, not 6e5 real rows: the arithmetic under test is
     the post-aggregation projection."""
-    from geobuf_cpp_spark.operators.textstats import source_quality_ci
+    from geobuf_cpp_spark.operators.textstats import _wilson_parts, source_quality_ci
 
     # Drive the post-aggregation projection directly with synthesized
     # (n_docs, n_keep) rows (6e5 real docs would be slow), verifying
@@ -153,19 +153,10 @@ def test_source_quality_ci_no_bigint_wrap_on_large_group(spark):
         root = math.isqrt(arg)
         lb_num = (x + 2) * scale - 2 * root
         lb_den = (n + 4) * scale
-        # run the same SQL text the operator emits over a 1-row frame
+        # run the operator's own projection over a 1-row frame
         row = spark.createDataFrame(
-            [(n, x)], "n_docs long, n_keep long")
-        from geobuf_cpp_spark.operators.trajectory import sql_isqrt_exact
-        arg_sql = (f"((cast({scale} as decimal(38,0)) * {scale}) * "
-                   f"(cast(n_keep as decimal(38,0)) * (n_docs - n_keep)"
-                   f" + n_docs)) div n_docs")
-        out = row.selectExpr(
-            f"cast((n_keep + 2) * {scale} - 2 * "
-            f"{sql_isqrt_exact(arg_sql)} as bigint) AS lb_num",
-            f"cast((n_docs + 4) * cast({scale} as bigint) as bigint) "
-            "AS lb_den",
-        ).collect()[0]
+            [("s", n, x)], "source string, n_docs long, n_keep long")
+        out = _wilson_parts(row, "source", scale).collect()[0]
         assert (out.lb_num, out.lb_den) == (lb_num, lb_den), (n, x)
 
     # and end-to-end through the operator on a small real corpus the
@@ -177,11 +168,27 @@ def test_source_quality_ci_no_bigint_wrap_on_large_group(spark):
     assert len(out) == 1 and out[0].n_docs == 8
 
 
+def test_source_quality_ci_out_of_range_quotient_raises(spark):
+    """Past ~3e11 docs per source the Wilson quotient
+    scale^2*(x*(n-x)+n) div n leaves BIGINT (here exactly
+    10000000000100000000): the operator's projection must raise
+    CAST_OVERFLOW, where a DECIMAL ``div`` wraps silently to
+    -8446744073609551616 even in ANSI mode."""
+    from geobuf_cpp_spark.operators.textstats import _wilson_parts
+
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    row = spark.createDataFrame([("s", 400_000_000_000, 200_000_000_000)],
+                                "source string, n_docs long, n_keep long")
+    with pytest.raises(Exception, match="CAST_OVERFLOW"):
+        _wilson_parts(row, "source", 10_000).collect()
+
+
 def test_table_df_memoizes_plan_only_and_respects_sf_switch(spark, tmp_path):
     """table_df caches the lazy reader per (session, dir, table) — same
     object back, no data materialization — and _prep-style re-
     registration after a directory switch must rebind the view to the
-    other directory's data."""
+    other directory's data. A table rewritten in the session is read
+    afresh, and shared frames built over it are rebuilt and released."""
     from geobuf_cpp_spark.sources.readers import table_df
 
     d1 = str(tmp_path / "a"); d2 = str(tmp_path / "b")
@@ -201,3 +208,33 @@ def test_table_df_memoizes_plan_only_and_respects_sf_switch(spark, tmp_path):
     d3 = str(tmp_path / "c")
     spark.createDataFrame([(3,)], "x long").write.parquet(f"{d3}/t.parquet")
     assert table_df(spark, d3, "t").collect()[0].x == 3
+
+    # an in-session rewrite of a table, by overwrite and then by append,
+    # is read afresh, never through the superseded file listing
+    spark.createDataFrame([(2,), (3,)], "x long").write.mode(
+        "overwrite").parquet(f"{d1}/t.parquet")
+    assert sorted(r.x for r in table_df(spark, d1, "t").collect()) == [2, 3]
+    spark.createDataFrame([(4,)], "x long").write.mode(
+        "append").parquet(f"{d1}/t.parquet")
+    assert sorted(r.x for r in table_df(spark, d1, "t").collect()) == [2, 3, 4]
+
+    # a shared subresult over a rewritten table is rebuilt, and the
+    # superseded persisted frame is released
+    from pyspark import StorageLevel
+
+    import __spark_entry__ as E
+
+    def total():
+        return table_df(spark, d2, "t").groupBy().sum("x")
+
+    old = E._shared_df(spark, d2, "total", total)
+    assert old.collect()[0][0] == 2
+    assert E._shared_df(spark, d2, "total", total) is old
+    spark.createDataFrame([(5,)], "x long").write.mode(
+        "overwrite").parquet(f"{d2}/t.parquet")
+    # any memo read under the rewritten directory applies the rule; the
+    # check comes before the rebuild, whose plan matches the old one
+    table_df(spark, d2, "t")
+    assert old.storageLevel == StorageLevel.NONE
+    new = E._shared_df(spark, d2, "total", total)
+    assert new is not old and new.collect()[0][0] == 5
