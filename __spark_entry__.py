@@ -1369,8 +1369,8 @@ def q_snapshot_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of the streaming exact dedup (first-seen-wins per text
-    digest). documents has no event-time column, so arrival time is
+    """Arrival-ordered exact dedup (first-seen-wins per text digest).
+    documents has no event-time column, so arrival time is
     synthesized deterministically as doc_id % 7 hours past a fixed epoch —
     the deliberate ties make the (ts, doc_id) composite tiebreak load-
     bearing, distinguishing this from exact_dedup's plain min(doc_id)."""
@@ -1388,9 +1388,8 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-timeout sessionization (batch twin of the stateful streaming
-    operator; float sum_value excluded — summation order is engine-
-    specific, the session STRUCTURE is the contract)."""
+    """Gap-timeout sessionization (float sum_value excluded — summation
+    order is engine-specific, the session STRUCTURE is the contract)."""
     from geobuf_cpp_spark.streaming.sessions import sessionize_batch
 
     _prep(spark, sf_dir, "events")
@@ -1418,9 +1417,7 @@ def q_asof_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_interval_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval (impression-click style) join: every click matched to ALL
-    of the user's views in the trailing 30 minutes — the batch twin of the
-    watermarked stream-stream join (streaming.joins; condition built once,
-    shared by both forms)."""
+    of the user's views in the trailing 30 minutes (streaming.joins)."""
     from geobuf_cpp_spark.streaming.joins import interval_join_batch
 
     _prep(spark, sf_dir, "events")
@@ -1774,10 +1771,10 @@ def _shared_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     gates consume it — ngram_jaccard / prefix_jaccard / containment /
     dedup_clusters — one tokenize+explode+distinct corpus scan instead
     of four (the sketch-family sharing discipline). Dictionary-encoded
-    (`shingle_sid_sets`): the shingle key is a dense INT id in
+    (`shingle_sid_sets`): the shingle key is a dense BIGINT id in
     (df, shingle) order — a bijection, so intersection counts and set
-    sizes are untouched, while every downstream join shuffles 4-byte
-    ints instead of ~25-byte strings and the prefix filter reads its
+    sizes are untouched, while every downstream join shuffles 8-byte
+    ids instead of ~25-byte strings and the prefix filter reads its
     rarest-first order straight off the id (guide §2.3)."""
     from geobuf_cpp_spark.operators.dedup import shingle_sid_sets
 

@@ -5,8 +5,8 @@ This module owns the engine's feature-row format: a wire ``geom`` struct
 JSON fragments, and the ``custom_properties`` / ``geom_custom_properties``
 maps for feature- and geometry-level custom members. Every conversion
 between that row and a GeoJSON Feature goes through ``_feature_row`` (in)
-and ``_row_features`` (out); every HTML page goes through
-``_extract_batches``. The geobuf sink and reader reuse them.
+and ``_row_features`` (out); the HTML extract loop lives in
+``extract_encode_features``. The geobuf sink and reader reuse them.
 
 All heavy work happens inside ``mapInPandas`` generators (Arrow batches in,
 Arrow batches out — no per-row Python at the DataFrame boundary, per
@@ -110,38 +110,6 @@ def _row_features(pdf: pd.DataFrame) -> Iterator[dict]:
         yield feature
 
 
-def _extract_batches(batches: Iterator[pd.DataFrame], columns: list[str],
-                     enc: gb.Encoder | None = None,
-                     carry: tuple[str, ...] = ()) -> Iterator[pd.DataFrame]:
-    """The HTML extract loop: page batches (url, html, *carry) -> one
-    feature row per extracted geometry, restricted to ``columns``.
-
-    The representative (lon, lat) is the first coordinate of the geometry —
-    the anchor for cell assignment of point payloads (exact for Points,
-    a prefilter anchor for lines/polygons). ``carry`` columns are copied
-    from each feature's page row. With ``enc`` the extracted GeoJSON is
-    also encoded straight into a ``geobuf`` column.
-    """
-    for pdf in batches:
-        rows = []
-        for url, html, *kept in zip(pdf["url"], pdf["html"],
-                                    *(pdf[c] for c in carry)):
-            text = bytes(html).decode("utf-8", errors="replace")
-            for idx, feat in enumerate(extract_geometries(text)):
-                row = _feature_row(feat, customs=False)
-                coords = row["geom"]["coords"]
-                row.update(zip(carry, kept), url=url, feature_idx=idx,
-                           kind=feat["kind"], lon=coords[0], lat=coords[1])
-                if enc is not None:
-                    row["geobuf"] = enc.encode({
-                        "type": "Feature",
-                        "geometry": feat["geometry"],
-                        "properties": feat["properties"],
-                    })
-                rows.append(row)
-        yield pd.DataFrame(rows, columns=columns)
-
-
 def encode_features(features_df, max_precision: int = 10**7):
     """Append a ``geobuf`` binary column — one encoded Feature per row.
 
@@ -165,15 +133,36 @@ def extract_encode_features(pages_df, max_precision: int = 10**7):
     """pages(url, html, ...) -> one row per extracted geo feature, with its
     geobuf blob, in ONE Arrow stage.
 
+    The representative (lon, lat) is the first coordinate of the geometry —
+    the anchor for cell assignment of point payloads (exact for Points,
+    a prefilter anchor for lines/polygons). The extracted GeoJSON is
+    encoded directly, without a row round trip.
+
     Chaining two mapInPandas stages spawns two Python workers per task and
     pays an extra Arrow round trip; the fused stage halves worker count and
     transfer volume — the difference is ~2x steady-state throughput on the
     headline pipeline and much cheaper worker warmup on wide executors.
     """
     enc = gb.Encoder(max_precision=max_precision)
+    columns = _FEATURES_COLUMNS + ["geobuf"]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return _extract_batches(batches, _FEATURES_COLUMNS + ["geobuf"], enc)
+        for pdf in batches:
+            rows = []
+            for url, html in zip(pdf["url"], pdf["html"]):
+                text = bytes(html).decode("utf-8", errors="replace")
+                for idx, feat in enumerate(extract_geometries(text)):
+                    row = _feature_row(feat, customs=False)
+                    coords = row["geom"]["coords"]
+                    row.update(url=url, feature_idx=idx, kind=feat["kind"],
+                               lon=coords[0], lat=coords[1])
+                    row["geobuf"] = enc.encode({
+                        "type": "Feature",
+                        "geometry": feat["geometry"],
+                        "properties": feat["properties"],
+                    })
+                    rows.append(row)
+            yield pd.DataFrame(rows, columns=columns)
 
     return pages_df.select("url", "html").mapInPandas(
         gen, FEATURES_SCHEMA + ", geobuf binary"

@@ -650,48 +650,6 @@ def pq_topk_rerank(codes_df, emb_df, codebooks: np.ndarray,
     return _exact_rerank(cand, emb_df, queries_pdf, k, id_col, vec_col)
 
 
-def save_ivf_index(path: str, centroids: np.ndarray, assignments,
-                   id_col: str = "vec_id") -> None:
-    """Persist an IVF index as a parquet layout: assignments partitioned
-    by list_id (so a probe reads ONLY its lists' files — partition
-    pruning is the on-disk analogue of the probe mask) plus a small
-    centroids parquet. Build once, query across sessions — the index
-    lifecycle a 100 TB embedding corpus needs; re-building the coarse
-    quantizer per session would re-scan the corpus every time.
-    """
-    import os
-
-    spark = assignments.sparkSession
-    (assignments.select(id_col, "list_id")
-     .write.mode("overwrite").partitionBy("list_id")
-     .parquet(os.path.join(path, "assignments")))
-    cent_rows = [
-        (int(i), [float(x) for x in row]) for i, row in enumerate(centroids)
-    ]
-    spark.createDataFrame(
-        cent_rows, "list_id int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(path, "centroids"))
-
-
-def load_ivf_index(spark, path: str):
-    """Load (centroids ndarray, assignments DataFrame) saved by
-    ``save_ivf_index``. Assignments keep their list_id partitioning, so
-    ``ivf_topk``'s probed-list join prunes unprobed partitions at the
-    file level (PushedFilters on the partition column).
-    """
-    import os
-
-    assignments = spark.read.parquet(os.path.join(path, "assignments"))
-    cent_pdf = (
-        spark.read.parquet(os.path.join(path, "centroids"))
-        .orderBy("list_id").toPandas()
-    )
-    centroids = np.stack(
-        [np.asarray(v, dtype=np.float64) for v in cent_pdf["centroid"]])
-    return centroids, assignments
-
-
 def kmeans_lite(emb_df, k: int = 8, rounds: int = 2,
                 scale: int = 1 << 20, id_col: str = "vec_id",
                 vec_col: str = "embedding"):

@@ -310,14 +310,16 @@ def shingle_sid_sets(docs_df, w: int = 3, id_col: str = "doc_id",
                      text_col: str = "text"):
     """Dictionary-encoded ``shingle_sets``: the same DISTINCT
     (doc_id, shingle) index with every shingle string replaced by a
-    dense INT id assigned in ascending (global doc-frequency, shingle)
+    dense BIGINT id assigned in ascending (global doc-frequency, shingle)
     order. The mapping is a bijection, so every set operator downstream
     (equi-join intersection counts, set sizes) is unchanged, and it is
     order-isomorphic to the (df, shingle) total order the AllPairs
     prefix filter sorts by, so ``prefix_jaccard_pairs`` can order by
     the id alone — the join/shuffle key narrows from a ~25-byte shingle
-    string to 4 bytes (guide §2.3 "narrower types"), which shrinks
-    every exchange in the family's joins.
+    string to 8 bytes (guide §2.3 "narrower types"), which shrinks
+    every exchange in the family's joins. BIGINT, not INT: a dictionary
+    past 2^31 - 1 shingles would overflow an INT id (CAST_OVERFLOW
+    under ANSI, a silent wrap without it).
 
     Id assignment is the scalable two-pass zipWithIndex shape: range-
     partition the dictionary by the sort key, rank within partitions,
@@ -351,7 +353,7 @@ def shingle_sid_sets(docs_df, w: int = 3, id_col: str = "doc_id",
     off_df = spark.createDataFrame(
         [(int(p), int(o)) for p, o in off.items()], "pid int, off long")
     sid = ranked.join(F.broadcast(off_df), "pid").select(
-        "shingle", (F.col("off") + F.col("r")).cast("int").alias("sid"))
+        "shingle", (F.col("off") + F.col("r")).cast("long").alias("sid"))
     return ds.join(sid, "shingle").select(
         "doc_id", F.col("sid").alias("shingle"))
 

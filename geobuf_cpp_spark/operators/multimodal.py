@@ -246,75 +246,6 @@ def extract_media_features(media_df, codec: str = "fake", n_features: int = 8):
     )
 
 
-def resize_media(media_df, out_w: int = 8, out_h: int = 8, codec: str = "fake"):
-    """Nearest-neighbor resize of the decoded image grid — REAL array math
-    (index-grid gather), not a stub: only the codec behind ``decode_stub``
-    is fake in this container. Audio rows pass through with a 1-D
-    downsample to ``out_w * out_h`` samples (the pooled shape a feature
-    model consumes)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, kind, payload in zip(
-                pdf["media_id"], pdf["kind"], pdf["payload"]
-            ):
-                w, h, body = decode_stub(bytes(payload), codec)
-                if kind == "image" and body.size >= w * h:
-                    img = body[: w * h].reshape(h, w)
-                    yi = (np.arange(out_h) * h) // out_h
-                    xi = (np.arange(out_w) * w) // out_w
-                    small = img[yi[:, None], xi]
-                else:  # audio: strided 1-D downsample to the same budget
-                    n = out_w * out_h
-                    idx = (np.arange(n) * max(body.size, 1)) // n
-                    small = body[np.minimum(idx, max(body.size - 1, 0))]
-                rows.append(
-                    {
-                        "media_id": int(mid),
-                        "kind": kind,
-                        "out_w": out_w,
-                        "out_h": out_h,
-                        "pixels": small.astype(np.uint8).tobytes(),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "out_w", "out_h", "pixels"]
-            )
-
-    return media_df.select("media_id", "kind", "payload").mapInPandas(
-        gen, "media_id long, kind string, out_w int, out_h int, pixels binary"
-    )
-
-
-def frame_sample(media_df, every_n: int = 4):
-    """Video-style frame sampling over the binary payload: one row per
-    sampled "frame" (stride slices of the byte stream) — the explode shape
-    a real frame sampler produces."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, body = decode_stub(bytes(payload))
-                frame_len = max(w, 1)
-                n_frames = max(body.size // frame_len, 1)
-                for f in range(0, n_frames, every_n):
-                    chunk = body[f * frame_len : (f + 1) * frame_len]
-                    rows.append(
-                        {
-                            "media_id": int(mid),
-                            "frame_idx": f,
-                            "frame_bytes": chunk.tobytes(),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=["media_id", "frame_idx", "frame_bytes"])
-
-    return media_df.select("media_id", "payload").mapInPandas(
-        gen, "media_id long, frame_idx int, frame_bytes binary"
-    )
-
-
 def media_stats(media_df):
     """JVM-side metadata aggregation — no decode, pure column pruning:
     the scan should read meta+kind only, never the payload bytes."""

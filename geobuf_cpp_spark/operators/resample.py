@@ -39,7 +39,7 @@ def gapfill_locf(events_df: DataFrame, bucket_ms: int = HOUR_MS,
     """
     # unix_micros over an explicit cast: the testdata's TIMESTAMP_NTZ
     # column needs the cast, and the session runs UTC so it is exact
-    # (same anchor as streaming/sessions.py:206)
+    # (same anchor as streaming/sessions.sessionize_batch)
     bk = F.expr(
         f"unix_micros(cast({ts_col} as timestamp)) div {bucket_ms * 1000}")
     x = events_df.select(

@@ -617,42 +617,6 @@ def _mg_summaries(toks: DataFrame, k: int) -> DataFrame:
     return toks.select("tok").mapInPandas(gen, "tok string, est long")
 
 
-def misra_gries_candidates(docs_df: DataFrame, k: int,
-                           text_col: str = "text") -> DataFrame:
-    """Merged Misra-Gries summary — the DETERMINISTIC heavy-hitter
-    sketch (vs the probabilistic CMS above): every token with true
-    frequency > N/(k+1) is guaranteed present after the merge
-    (pigeonhole; Agarwal et al., "Mergeable Summaries", PODS'12 —
-    merge by adding summaries, then subtract the (k+1)-th largest
-    merged weight).
-
-    Per-partition summaries (<= k rows each) merge through a tiny hash
-    agg; the final decrement runs over <= partitions * k rows (the
-    global window is over that bounded set, not the corpus). Output
-    size <= k regardless of corpus size — the entire point.
-
-    Returns (tok, est): lower-bound estimates, est <= true frequency,
-    true - est <= N/(k+1).
-    """
-    kk = int(k)
-    merged = (
-        _mg_summaries(_tokens(docs_df, text_col), kk)
-        .groupBy("tok").agg(F.sum("est").alias("est"))
-    )
-    ranked = merged.withColumn(
-        "rk", F.row_number().over(Window.orderBy(F.desc("est"), "tok")))
-    sub = ranked.agg(
-        F.coalesce(
-            F.max(F.when(F.col("rk") == kk + 1, F.col("est"))), F.lit(0)
-        ).alias("sub"))
-    return (
-        ranked.crossJoin(F.broadcast(sub))
-        .where(F.col("est") > F.col("sub"))
-        .select("tok",
-                (F.col("est") - F.col("sub")).cast("long").alias("est"))
-    )
-
-
 def heavy_hitters(docs_df: DataFrame, k: int,
                   text_col: str = "text") -> DataFrame:
     """EXACT heavy hitters via the classic two-pass sketch pattern:

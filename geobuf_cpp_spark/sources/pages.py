@@ -253,7 +253,3 @@ def generate_admin_polygons(n_per_city: int = 3) -> pd.DataFrame:
             admin_id += 1
     return pd.DataFrame(rows)
 
-
-def admin_polygons_dataframe(spark, n_per_city: int = 3):
-    pdf = generate_admin_polygons(n_per_city)
-    return spark.createDataFrame(pdf.to_dict("records"), schema=ADMIN_SCHEMA)

@@ -1,20 +1,10 @@
-"""Corpus readers: Iceberg-first with parquet fallback.
-
-BASELINE.json input_hint names an Iceberg table of pages; this container
-carries no Iceberg runtime jars, so the reader negotiates: explicit
-``fmt="iceberg"`` errors loudly if the catalog is absent, ``fmt="auto"``
-falls back to parquet (same schema contract either way). On a real cluster
-the Iceberg path gives snapshot isolation + partition pruning on
-(warc_ts, lang); the parquet path is layout-compatible.
-"""
+"""Table readers: memoized parquet tables and raw geobuf directories."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..session import session_memo
-
-PAGES_COLUMNS = ["url", "warc_ts", "html", "text", "lang"]
 
 
 def table_df(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -78,15 +68,3 @@ def read_geobuf_dir(spark: SparkSession, location: str,
 
     return raw.mapInPandas(decode, schema)
 
-
-def read_pages(spark: SparkSession, location: str, fmt: str = "auto") -> DataFrame:
-    if fmt == "iceberg":
-        return spark.read.format("iceberg").load(location)
-    if fmt == "parquet":
-        return spark.read.parquet(location)
-    if fmt == "auto":
-        try:
-            return spark.read.format("iceberg").load(location)
-        except Exception:  # noqa: BLE001 — no iceberg runtime / not a table
-            return spark.read.parquet(location)
-    raise ValueError(f"unknown pages format {fmt!r}")

@@ -22,11 +22,8 @@ the table-format contract directly over parquet + JSON manifests:
 * **Time travel**: ``read_snapshot(version=K)`` reproduces any
   historical version bit-for-bit, because the data dirs it lists are
   immutable.
-* **Uniform layout per lineage**: a manifest records the lineage's
-  ``partition_by`` layout; appends adopt it automatically (so an append
-  after a hive-partitioned compaction stays partitioned and the union
-  read never mixes directory structures) and raise if the caller
-  requests a conflicting layout.
+* **Additive schema evolution**: an append may add columns; older
+  commits read them as NULL.
 
 At cluster scale the manifest stays tiny (one JSON per commit listing
 directories, not files) and reads prune to the listed dirs — the scan
@@ -64,55 +61,24 @@ def _read_manifest(table_dir: str, version: int) -> dict:
         return json.load(fh)
 
 
-def _layout(manifest: dict) -> list[str] | None:
-    return manifest.get("partition_by") or None
-
-
-def _publish_manifest(table_dir: str, data_rel: str, mode: str,
-                      batch_id: int | None,
-                      partition_by: list[str] | None) -> int:
+def _publish_manifest(table_dir: str, data_rel: str, mode: str) -> int:
     """Compare-and-swap commit loop: build the manifest against the
     current head and publish it under the next version number with an
     exclusive create (``os.link`` fails with EEXIST instead of silently
     replacing, unlike rename). On losing the race, re-read the new head
     and retry — the data dir is already written and never needs to move.
-
-    Raises ``ValueError`` if a concurrent commit changed the lineage's
-    partition layout out from under an append (the loser's flat/typed
-    data no longer matches the head's directory structure and must be
-    rewritten by the caller).
     """
     while True:
         versions = snapshot_versions(table_dir)
-        if batch_id is not None:
-            # re-checked every attempt: a replayed micro-batch racing
-            # with itself must resolve to ONE committed version (the
-            # loser's freshly written data dir is left unreferenced for
-            # vacuum to collect)
-            for v in versions:
-                if _read_manifest(table_dir, v).get("batch_id") == batch_id:
-                    return v
         prev = versions[-1] if versions else 0
         dirs = [data_rel]
         if mode == "append" and prev:
-            head = _read_manifest(table_dir, prev)
-            want = list(partition_by) if partition_by else None
-            if _layout(head) != want:
-                raise ValueError(
-                    f"append layout {want} conflicts with lineage layout "
-                    f"{_layout(head)} at v{prev} — rewrite the append "
-                    "with the lineage's partition_by")
-            dirs = head["data_dirs"] + dirs
+            dirs = _read_manifest(table_dir, prev)["data_dirs"] + dirs
         version = prev + 1
-        manifest = {"version": version, "data_dirs": dirs}
-        if partition_by:
-            manifest["partition_by"] = list(partition_by)
-        if batch_id is not None:
-            manifest["batch_id"] = batch_id
         tmp = _manifest_path(table_dir, version) \
             + f".tmp.{os.getpid()}.{uuid.uuid4().hex[:8]}"
         with open(tmp, "w") as fh:
-            json.dump(manifest, fh)
+            json.dump({"version": version, "data_dirs": dirs}, fh)
         try:
             os.link(tmp, _manifest_path(table_dir, version))
         except FileExistsError:
@@ -123,227 +89,51 @@ def _publish_manifest(table_dir: str, data_rel: str, mode: str,
 
 
 def write_snapshot(df: DataFrame, table_dir: str,
-                   mode: str = "append",
-                   batch_id: int | None = None,
-                   partition_by: list[str] | None = None,
-                   writer_options: dict | None = None) -> int:
+                   mode: str = "append") -> int:
     """Commit ``df`` as a new snapshot; returns the new version number.
 
     ``mode='append'`` makes the new version see prior data plus ``df``;
     ``mode='overwrite'`` starts the lineage over (old versions stay
-    readable — nothing is deleted; retire them with a separate GC pass
-    that drops dirs unreferenced by retained manifests).
-
-    ``batch_id`` makes the commit IDEMPOTENT per id: if some manifest
-    already records it, that version is returned and nothing is written
-    — the contract a Structured Streaming ``foreachBatch`` sink needs
-    for exactly-once output under micro-batch replay.
+    readable — nothing is deleted).
 
     Concurrent committers are safe: the manifest publish is a CAS loop
     (see ``_publish_manifest``) — both commits land, serialized under
     distinct versions, neither silently lost.
-
-    Appends inherit the lineage's recorded ``partition_by`` layout when
-    the caller passes none (so appends after a hive-partitioned
-    compaction keep the directory structure uniform); passing a
-    DIFFERENT layout than the lineage's raises.
     """
     assert mode in ("append", "overwrite")
-    versions = snapshot_versions(table_dir)
-    if batch_id is not None:
-        for v in versions:
-            if _read_manifest(table_dir, v).get("batch_id") == batch_id:
-                return v
-    if mode == "append" and versions and partition_by is None:
-        partition_by = _layout(_read_manifest(table_dir, versions[-1]))
-    commit_id = uuid.uuid4().hex[:12]
-    data_dir = os.path.join(table_dir, "data", commit_id)
-    writer = df.write.mode("error")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    for k, v in (writer_options or {}).items():
-        writer = writer.option(k, v)
-    writer.parquet(data_dir)
-    return _publish_manifest(table_dir, os.path.join("data", commit_id),
-                             mode, batch_id, partition_by)
-
-
-def snapshot_stream_sink(table_dir: str):
-    """``foreachBatch`` function committing each micro-batch as an
-    append snapshot, exactly-once: Spark replays a failed micro-batch
-    with the SAME batch_id, and the batch_id-idempotent commit turns the
-    replay into a no-op instead of duplicate rows.
-
-        stream.writeStream.foreachBatch(snapshot_stream_sink(dir))...
-    """
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        write_snapshot(batch_df, table_dir, mode="append",
-                       batch_id=int(batch_id))
-
-    return write
-
-
-def _read_dirs(spark: SparkSession, table_dir: str, dirs: list[str],
-               layout: list[str] | None) -> DataFrame:
-    """Scan a manifest's data dirs. Flat lineages read in one multi-path
-    scan. Hive-partitioned lineages (post-compaction) must read each
-    commit dir as its own root — Spark refuses multiple partitioned
-    roots in one scan — then union; the per-dir scans keep partition
-    pruning, and types are aligned to the first dir's schema so
-    per-commit partition-value inference can never drift the union.
-
-    Flat lineages whose commits disagree on columns (ADDITIVE schema
-    evolution: a later append introduced a column) fall back to per-dir
-    reads + unionByName(allowMissingColumns) — older commits surface
-    NULL for columns they predate, the Iceberg/Delta contract. A plain
-    multi-path scan would silently bind every file to one footer's
-    schema and drop the new column. Detection costs one driver-side
-    footer read per commit dir (manifest-bounded, never data-bounded);
-    uniform lineages keep the single multi-path scan. Type CHANGES on a
-    shared column are not evolution and still raise (unionByName)."""
-    from functools import reduce
-
-    from pyspark.sql import functions as F
-
-    paths = [os.path.join(table_dir, d) for d in dirs]
-    if not layout:
-        parts = [spark.read.parquet(p) for p in paths]
-        schemas = {tuple((f.name, f.dataType.simpleString())
-                         for f in df.schema.fields) for df in parts}
-        if len(schemas) == 1:
-            return spark.read.parquet(*paths)
-        return reduce(
-            lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
-    parts = [spark.read.parquet(p) for p in paths]
-    fields = parts[0].schema.fields
-    aligned = [parts[0]] + [
-        df.select([F.col(f.name).cast(f.dataType).alias(f.name)
-                   for f in fields])
-        for df in parts[1:]
-    ]
-    return reduce(DataFrame.unionByName, aligned)
+    data_rel = os.path.join("data", uuid.uuid4().hex[:12])
+    df.write.mode("error").parquet(os.path.join(table_dir, data_rel))
+    return _publish_manifest(table_dir, data_rel, mode)
 
 
 def read_snapshot(spark: SparkSession, table_dir: str,
                   version: int | None = None) -> DataFrame:
-    """Read the table as of ``version`` (default: latest)."""
+    """Read the table as of ``version`` (default: latest).
+
+    Commits that agree on columns read in one multi-path scan. When a
+    later append introduced a column (ADDITIVE schema evolution), the
+    commit dirs read separately and union by name with
+    ``allowMissingColumns`` — older commits surface NULL for columns they
+    predate, the Iceberg/Delta contract; a plain multi-path scan would
+    bind every file to one footer's schema and drop the new column.
+    Detection costs one driver-side footer read per commit dir
+    (manifest-bounded, never data-bounded). Type CHANGES on a shared
+    column are not evolution and still raise (unionByName).
+    """
+    from functools import reduce
+
     versions = snapshot_versions(table_dir)
     if not versions:
         raise FileNotFoundError(f"no snapshots under {table_dir}")
     v = version if version is not None else versions[-1]
     if v not in versions:
         raise FileNotFoundError(f"snapshot v{v} not found in {versions}")
-    manifest = _read_manifest(table_dir, v)
-    return _read_dirs(spark, table_dir, manifest["data_dirs"],
-                      _layout(manifest))
-
-
-def read_changes(spark: SparkSession, table_dir: str,
-                 from_version: int, to_version: int) -> DataFrame:
-    """Incremental (CDC-style) read: rows ADDED between two snapshots.
-
-    Because data dirs are immutable and manifests are append-lists, the
-    delta is exactly the dirs in ``to`` that ``from`` does not list — an
-    O(manifest) set difference, then an ordinary parquet scan of only
-    the new dirs. The incremental-processing primitive: a downstream job
-    consumes each commit's rows exactly once without re-scanning the
-    table. (Overwrite commits restart lineage; a delta across an
-    overwrite boundary raises rather than guessing.)
-    """
-    to_manifest = _read_manifest(table_dir, to_version)
-    old = _read_manifest(table_dir, from_version)["data_dirs"]
-    new = to_manifest["data_dirs"]
-    if not set(old).issubset(new):
-        raise ValueError(
-            f"v{to_version} does not extend v{from_version} "
-            "(overwrite boundary) — incremental read undefined")
-    delta = [d for d in new if d not in set(old)]
-    if not delta:
-        return read_snapshot(spark, table_dir, to_version).limit(0)
-    return _read_dirs(spark, table_dir, delta, _layout(to_manifest))
-
-
-def compact_snapshot(spark: SparkSession, table_dir: str, key_col: str,
-                     id_col: str, target_rows: int) -> int:
-    """Rewrite the latest snapshot into the compaction plan's file counts.
-
-    The maintenance pass plans/compaction.py plans for: read the current
-    snapshot, join back the per-key planned file count (broadcast — plan
-    cardinality is the key domain), route each row to a deterministic
-    intra-key bucket (xxhash64 of its id, modulo the key's plan), and
-    commit ONE overwrite snapshot laid out ``key=``-partitioned with at
-    most the planned number of files per key. Data is bit-identical
-    (pure rewrite); old versions remain time-travelable.
-    """
-    from pyspark.sql import functions as F
-
-    from ..plans.compaction import compaction_plan
-
-    cur = read_snapshot(spark, table_dir)
-    plan = compaction_plan(cur, key_col, target_rows).select(
-        key_col, "n_files")
-    routed = (
-        cur.join(F.broadcast(plan), key_col)
-        .withColumn("_bucket", F.pmod(F.xxhash64(id_col), F.col("n_files")))
-        .drop("n_files")
-    )
-    out = routed.repartition(F.col(key_col), F.col("_bucket")).drop("_bucket")
-    # bucket routing parallelizes hot keys across tasks; maxRecordsPerFile
-    # enforces the per-file bound WITHIN a task (several buckets of one
-    # key hashed into the same task still split at the target), so the
-    # per-key file count lands on the plan's ceil(n/target) regardless of
-    # shuffle collisions
-    return write_snapshot(out, table_dir, mode="overwrite",
-                          partition_by=[key_col],
-                          writer_options={"maxRecordsPerFile":
-                                          str(int(target_rows))})
-
-
-def vacuum_snapshots(table_dir: str, keep_versions: int = 1) -> dict:
-    """Garbage-collect history: retain the newest ``keep_versions``
-    manifests, delete older manifests and any data dir no retained
-    manifest references. Returns {"kept": [...], "deleted_dirs": n,
-    "deleted_manifests": n}.
-
-    Safe by construction: the retained manifests' dir lists are closed
-    under the append lineage (an append manifest lists all its
-    ancestors' dirs), so a reader of any KEPT version never loses a
-    file; only time travel past the horizon is given up.
-
-    Concurrent-writer safe: a committer writes its data dir BEFORE its
-    manifest, so an unreferenced dir may simply be a commit in flight.
-    Vacuum only deletes dirs older (mtime) than the newest retained
-    manifest — any dir written after that commit point is left for a
-    later vacuum, by which time its manifest exists (referenced) or its
-    writer is long dead (collected).
-    """
-    import shutil
-
-    assert keep_versions >= 1
-    versions = snapshot_versions(table_dir)
-    keep = versions[-keep_versions:]
-    referenced: set[str] = set()
-    for v in keep:
-        referenced.update(_read_manifest(table_dir, v)["data_dirs"])
-    horizon = (os.path.getmtime(_manifest_path(table_dir, keep[-1]))
-               if keep else float("inf"))
-    deleted_dirs = 0
-    data_root = os.path.join(table_dir, "data")
-    if os.path.isdir(data_root):
-        for name in os.listdir(data_root):
-            rel = os.path.join("data", name)
-            path = os.path.join(data_root, name)
-            try:
-                in_flight = os.path.getmtime(path) >= horizon
-            except OSError:
-                in_flight = True
-            if rel not in referenced and not in_flight:
-                shutil.rmtree(path, ignore_errors=True)
-                deleted_dirs += 1
-    deleted_manifests = 0
-    for v in versions:
-        if v not in keep:
-            os.remove(_manifest_path(table_dir, v))
-            deleted_manifests += 1
-    return {"kept": keep, "deleted_dirs": deleted_dirs,
-            "deleted_manifests": deleted_manifests}
+    paths = [os.path.join(table_dir, d)
+             for d in _read_manifest(table_dir, v)["data_dirs"]]
+    parts = [spark.read.parquet(p) for p in paths]
+    schemas = {tuple((f.name, f.dataType.simpleString())
+                     for f in df.schema.fields) for df in parts}
+    if len(schemas) == 1:
+        return spark.read.parquet(*paths)
+    return reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)

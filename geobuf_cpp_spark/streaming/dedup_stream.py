@@ -1,52 +1,23 @@
-"""Streaming exact dedup — first-seen-wins over an unbounded ingest.
+"""Exact dedup with first-seen-wins by arrival time.
 
-The streaming twin of ``operators.dedup.exact_dedup``: as document files
-land (the Common-Crawl dump cadence), emit each distinct text exactly
-once, keyed by content digest. ``dropDuplicatesWithinWatermark`` keeps
-per-key state only until the watermark passes the first arrival's event
-time plus the delay — plain ``dropDuplicates`` would NOT evict here
-(Spark only bounds dedup state when the event-time column is part of the
-dedup key subset), so its state grows without bound on an unbounded
-ingest. The trade: a duplicate arriving later than the watermark window
-re-emits, and the batch job downstream re-dedups — the standard
-state/completeness trade at unbounded scale.
-
-First-seen-wins here is ARRIVAL order (micro-batch order), matching what
-a real ingest can know online; the batch twin's deterministic
-min(doc_id) keeper is the reconciliation rule, and the two agree
-whenever files land in doc_id order (asserted in tests and by the
-``stream_dedup`` gate's batch twin).
+The arrival-ordered variant of ``operators.dedup.exact_dedup``: per
+distinct text the keeper is the first arrival, not the smallest id —
+what an online ingest can know. Gated as ``stream_dedup``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-DOCS_SCHEMA = (
-    "doc_id long, ts timestamp, text string, lang string, source string"
-)
-
-
-def read_doc_stream(spark: SparkSession, source_dir: str,
-                    max_files_per_trigger: int = 4) -> DataFrame:
-    return (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
 
 
 def dedup_batch_twin(docs: DataFrame, ts_col: str = "ts",
                      id_col: str = "doc_id") -> DataFrame:
-    """Deterministic batch reconciliation of ``dedup_stream``.
-
-    First-seen-wins with a total order: per distinct text (md5 digest),
-    keep the row with the smallest (event time, id) — what the stream
-    emits whenever files land in event-time order, and the rule the
-    downstream batch re-dedup applies regardless. Returns the kept row
-    plus the group's copy count. One digest-keyed shuffle; the same shape
-    as ``operators.dedup.exact_dedup`` and safe at corpus scale.
+    """First-seen-wins with a total order: per distinct text (md5
+    digest), keep the row with the smallest (event time, id). Returns
+    the kept row plus the group's copy count. One digest-keyed shuffle;
+    the same shape as ``operators.dedup.exact_dedup`` and safe at corpus
+    scale.
     """
     from pyspark.sql import Window
 
@@ -64,19 +35,4 @@ def dedup_batch_twin(docs: DataFrame, ts_col: str = "ts",
             F.col(ts_col).alias("kept_ts"),
             "n_copies",
         )
-    )
-
-
-def dedup_stream(docs: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Emit the first arrival of each distinct text.
-
-    State per key is evicted once the watermark passes the first
-    arrival's event time + ``watermark``; duplicates inside that window
-    are dropped, later ones re-emit (bounded-state contract above).
-    """
-    return (
-        docs.withColumn("_fp", F.md5(F.col("text").cast("binary")))
-        .withWatermark("ts", watermark)
-        .dropDuplicatesWithinWatermark(["_fp"])
-        .drop("_fp")
     )

@@ -1,81 +1,15 @@
-"""Structured Streaming surface: windowed event aggregation with late data.
+"""Event-time windowed cell rollup over the ping stream.
 
-The reference is batch-only; the engine adds the streaming shape a
-web-scale ingest needs: file-source streams (each micro-batch = newly
-landed parquet/json under a prefix, the Common-Crawl dump cadence),
-event-time windows with a watermark for late arrivals, and an idempotent
-sink contract (checkpointed, exactly-once per micro-batch).
-
-``windowed_counts`` is the streaming twin of the batch ``events_hourly``
-query — same grouping semantics, so a stream caught up to a static prefix
-must equal the batch answer (asserted in tests).
+``cell_hotspot_counts`` is one expression that runs on a batch frame
+(the ``stream_cells`` gate) or on a Structured Streaming file source,
+where a watermark bounds the window state; a drained stream equals the
+batch answer (asserted in tests).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-EVENTS_SCHEMA = (
-    "event_id long, ts timestamp, user_id long, event_type string, "
-    "value double, props string"
-)
-
-
-def read_event_stream(spark: SparkSession, source_dir: str,
-                      max_files_per_trigger: int = 8) -> DataFrame:
-    return (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
-
-
-def windowed_counts(events: DataFrame, window: str = "1 hour",
-                    watermark: str = "2 hours") -> DataFrame:
-    """Event-time windowed aggregation; late rows beyond the watermark drop."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.min("value").alias("min_value"),
-            F.max("value").alias("max_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type", "n", "min_value", "max_value",
-        )
-    )
-
-
-def run_to_memory(stream_df: DataFrame, name: str, checkpoint: str,
-                  output_mode: str = "complete"):
-    """Drain all available input into an in-memory table (test/dev sink).
-
-    ``complete`` suits aggregations; row-level operators (dedup, maps)
-    only support ``append``.
-    """
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-    q.processAllAvailable()
-    return q
-
-
-def run_to_parquet(stream_df: DataFrame, out_dir: str, checkpoint: str):
-    """Production shape: append sink + checkpoint = exactly-once resume."""
-    return (
-        stream_df.writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
 
 
 def _ping_cell_expr(res: int) -> str:

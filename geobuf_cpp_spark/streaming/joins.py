@@ -1,20 +1,7 @@
-"""Watermarked stream-stream interval join + its batch twin.
-
-The remaining Structured Streaming join surface a web-scale event pipeline
-needs: each left event (e.g. a click) joins the right events (e.g. views)
-of the same key whose timestamps fall in the trailing ``within`` interval
-— attribution, funnel stitching, impression-click joins.
-
-Streaming semantics: BOTH sides carry a watermark and the join condition
-carries BOTH time bounds, so Spark can bound the join state to the
-watermark horizon per side (state is evicted once rows can no longer
-match) — the requirement for an unbounded 100 TB/day stream. Inner-join
-matches emit as they are discovered (append mode).
-
-Batch twin: the identical condition as a plain join — the backfill path
-and the DuckDB-gated correctness surface (``interval_view`` gate). The
-condition is built ONCE by ``_interval_cond`` and shared by both, so
-stream and batch cannot drift.
+"""Interval join: each left event (e.g. a click) joins the right events
+(e.g. views) of the same key whose timestamps fall in the trailing
+``within`` interval — attribution, funnel stitching, impression-click
+joins. Gated as ``interval_view``.
 """
 
 from __future__ import annotations
@@ -27,13 +14,11 @@ def _interval_cond(key_col: str, left_ts: str, right_ts: str,
                    within_seconds: int):
     """key equality + right_ts in (left_ts - within, left_ts].
 
-    Deliberately RAW timestamp-interval arithmetic (not an epoch
-    conversion): Spark derives the streaming state-eviction bounds by
-    analyzing range predicates on the watermarked event-time columns
-    themselves — wrapping them in unix_micros() would keep results correct
-    but defeat state cleanup, which is the whole point at stream scale.
-    Timestamp ± INTERVAL is exact integer-microsecond arithmetic in both
-    Spark and DuckDB, so the batch twin stays oracle-portable.
+    Raw timestamp-interval arithmetic, not an epoch conversion: range
+    predicates on the event-time columns themselves are what Spark
+    analyzes to bound a watermarked join's state. Timestamp ± INTERVAL is
+    exact integer-microsecond arithmetic in both Spark and DuckDB, so the
+    join stays oracle-portable.
     """
     lts = F.col(f"l.{left_ts}")
     rts = F.col(f"r.{right_ts}")
@@ -48,22 +33,9 @@ def _interval_cond(key_col: str, left_ts: str, right_ts: str,
 def interval_join_batch(left: DataFrame, right: DataFrame, key_col: str,
                         left_ts: str = "ts", right_ts: str = "ts",
                         within_seconds: int = 1800) -> DataFrame:
-    """Batch twin — same condition, plain inner join. Caller projects the
+    """Plain inner join on the interval condition. Caller projects the
     sides to disjoint column names (besides the key) before calling."""
     cond = _interval_cond(key_col, left_ts, right_ts, within_seconds)
     return left.alias("l").join(right.alias("r"), cond, "inner").drop(
-        F.col(f"r.{key_col}")
-    )
-
-
-def interval_join_stream(left: DataFrame, right: DataFrame, key_col: str,
-                         left_ts: str = "ts", right_ts: str = "ts",
-                         within_seconds: int = 1800,
-                         watermark: str = "2 hours") -> DataFrame:
-    """Streaming form: watermarks on both sides bound the join state."""
-    lw = left.withWatermark(left_ts, watermark)
-    rw = right.withWatermark(right_ts, watermark)
-    cond = _interval_cond(key_col, left_ts, right_ts, within_seconds)
-    return lw.alias("l").join(rw.alias("r"), cond, "inner").drop(
         F.col(f"r.{key_col}")
     )

@@ -1,201 +1,19 @@
-"""Custom stateful streaming: per-user sessionization via
-``applyInPandasWithState``.
-
-The gap-timeout session is the canonical operator that watermarked windows
-CANNOT express (session boundaries depend on the previous event's time, not
-a fixed grid). State per user: the open session's (start, last_ts, n,
-sum_value). An event extends the session when it lands within ``gap`` of
-the last event; otherwise the open session is emitted and a new one
-starts. With ``flush_after_ms`` set, a processing-time timeout flushes
-idle open sessions (production cadence); the default keeps state until
-the next event (deterministic for drain-style tests and backfills).
-
-Out-of-order arrival ACROSS micro-batches (within a batch, events sort by
-event time first): a late event inside the open session's gap envelope
-[start - gap, last + gap] extends the session both ways (start shrinks to
-min, end grows to max — never rewinds); late events older than
-``start - gap`` sessionize among themselves with the normal gap rule and
-emit as closed sessions — unless an in-envelope event BRIDGES the chain
-into the open session (chain within ``gap`` of that event), in which case
-the session merges and its start extends backward. What
-append mode cannot do is retroactively MERGE sessions already emitted —
-exact stream == batch equivalence therefore requires arrivals ordered at
-session granularity (each user's sessions close before older data shows
-up), the normal log-ingest cadence. For arbitrarily shuffled history, run
-the batch twin.
-
-Batch twin: ``sessionize_batch`` computes the identical sessions with a
-window lag + cumulative-sum session id — the test oracle, and the backfill
-path of a lambda-style deployment (stream and batch share semantics by
-assertion, not by hope).
-
-State size is O(active users), not O(events) — the shape that survives a
-100 TB/day event stream; the shuffle key is user_id (one partition-local
-dict per task via the state store).
+"""Gap-timeout sessionization: per-user sessions split where the gap
+between consecutive events exceeds ``gap_seconds``. Gated as
+``sessions``.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterable, Iterator, Tuple
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-SESSION_SCHEMA = (
-    "user_id long, session_start timestamp, session_end timestamp, "
-    "n_events long, sum_value double"
-)
-# timestamps ride as integer MICROSECONDS (exact; float seconds would
-# leave nanosecond dust that Arrow's safe cast rejects)
-STATE_SCHEMA = "start long, last long, n long, sum_value double"
-
-
-def _us_to_ts(us: int) -> pd.Timestamp:
-    return pd.Timestamp(int(us) * 1000, tz="UTC")
-
-
-def _flush(state: GroupState, user_id: int) -> pd.DataFrame:
-    start, last, n, sv = state.get
-    state.remove()
-    return pd.DataFrame(
-        {
-            "user_id": [user_id],
-            "session_start": [_us_to_ts(start)],
-            "session_end": [_us_to_ts(last)],
-            "n_events": [n],
-            "sum_value": [sv],
-        }
-    )
-
-
-def sessionize_stream(events: DataFrame, gap_seconds: float = 1800.0,
-                      flush_after_ms: int | None = None) -> DataFrame:
-    """events(ts, user_id, value, ...) -> closed sessions per user."""
-    timeout_conf = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if flush_after_ms
-        else GroupStateTimeout.NoTimeout
-    )
-
-    def update(
-        key: Tuple[Any, ...],
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.hasTimedOut:
-            if state.exists:
-                yield _flush(state, user_id)
-            return
-        gap_us = int(gap_seconds * 1_000_000)
-        ts: list[int] = []
-        vals: list[float] = []
-        for pdf in pdfs:
-            ts.extend(int(t.value) // 1000 for t in pdf["ts"])  # ns -> us
-            vals.extend(float(v) for v in pdf["value"])
-        order = sorted(range(len(ts)), key=ts.__getitem__)
-        out = []
-        if state.exists:
-            start, last, n, sv = state.get
-        else:
-            start = last = None  # type: ignore[assignment]
-            n, sv = 0, 0.0
-        # Late events OLDER than the open session's envelope (t < start -
-        # gap) come first in sorted order. They sessionize among THEMSELVES
-        # with the normal gap rule (two mutually-in-gap late events form
-        # ONE session, matching the batch twin), and if the final late
-        # chain reaches within gap of the open session it MERGES into it
-        # instead of emitting.
-        c_start = c_last = None
-        c_n, c_sv = 0, 0.0
-        for i in order:
-            t, v = ts[i], vals[i]
-            if last is not None and t < start - gap_us:
-                if c_last is None:
-                    c_start, c_last, c_n, c_sv = t, t, 1, v
-                elif t - c_last > gap_us:
-                    out.append(
-                        (user_id, _us_to_ts(c_start), _us_to_ts(c_last),
-                         c_n, c_sv)
-                    )
-                    c_start, c_last, c_n, c_sv = t, t, 1, v
-                else:
-                    c_last = t
-                    c_n += 1
-                    c_sv += v
-                continue
-            if c_last is not None:
-                # first non-late event: resolve the pending late chain.
-                # The chain's last event is < start - gap by construction
-                # (it can never connect to the open session DIRECTLY), but
-                # this event can BRIDGE them: t is in-envelope, so a chain
-                # within gap of t chains through it into the session.
-                if t - c_last <= gap_us:
-                    start = c_start  # bridged -> extend backward
-                    n += c_n
-                    sv += c_sv
-                else:
-                    out.append(
-                        (user_id, _us_to_ts(c_start), _us_to_ts(c_last),
-                         c_n, c_sv)
-                    )
-                c_start = c_last = None
-                c_n, c_sv = 0, 0.0
-            if last is None:
-                start, last, n, sv = t, t, 1, v
-            elif t > last + gap_us:
-                out.append(
-                    (user_id, _us_to_ts(start), _us_to_ts(last), n, sv)
-                )
-                start, last, n, sv = t, t, 1, v
-            else:
-                # in-envelope (possibly late) event: extend both ways —
-                # the session end never rewinds on out-of-order arrival
-                start = min(start, t)
-                last = max(last, t)
-                n += 1
-                sv += v
-        if c_last is not None:
-            # batch held only pre-envelope events: the chain is closed by
-            # construction (its last event is > gap before the open
-            # session's start, and nothing bridged it) — emit it
-            out.append(
-                (user_id, _us_to_ts(c_start), _us_to_ts(c_last), c_n, c_sv)
-            )
-        state.update((start, last, n, sv))
-        if flush_after_ms:
-            state.setTimeoutDuration(flush_after_ms)
-        if out:
-            yield pd.DataFrame(
-                out,
-                columns=["user_id", "session_start", "session_end",
-                         "n_events", "sum_value"],
-            )
-
-    return (
-        # NTZ sources cast to session-zone TIMESTAMP so both twins emit
-        # the same type (the state kernel works in integer microseconds)
-        events.select(F.col("ts").cast("timestamp").alias("ts"),
-                      "user_id", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType=SESSION_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=timeout_conf,
-        )
-    )
 
 
 def sessionize_batch(events: DataFrame, gap_seconds: float = 1800.0) -> DataFrame:
-    """Batch twin: identical sessions via lag + cumulative session ids.
+    """Sessions via lag + cumulative session ids.
 
-    Pure DataFrame ops (two window functions over one user-keyed shuffle)
-    — the backfill/oracle path. Includes the trailing (still-open) session,
-    which the stream emits on timeout.
+    Pure DataFrame ops (two window functions over one user-keyed shuffle).
+    Includes each user's trailing session.
     """
     from pyspark.sql import Window
 

@@ -6,7 +6,6 @@ import pytest
 from geobuf_cpp_spark.operators.multimodal import (
     decode_stub,
     extract_media_features,
-    frame_sample,
     media_dataframe,
     media_stats,
     synth_media_batch,
@@ -50,12 +49,6 @@ def test_feature_extraction_shapes(spark, media):
     assert (feats["mean_byte"] > 0).all()
 
 
-def test_frame_sampling_explodes(spark, media):
-    frames = frame_sample(media, every_n=4).toPandas()
-    assert len(frames) > 120  # explode: multiple frames per media row
-    assert (frames.groupby("media_id").size() >= 1).all()
-
-
 def test_media_stats_prunes_payload(spark, media, tmp_path):
     # pruning is a property of the columnar scan: persist to parquet first
     path = str(tmp_path / "media")
@@ -67,40 +60,6 @@ def test_media_stats_prunes_payload(spark, media, tmp_path):
     plan = stats._jdf.queryExecution().executedPlan().toString()
     scan = [l for l in plan.splitlines() if "FileScan" in l or "ReadSchema" in l]
     assert scan and all("payload" not in l for l in scan), plan
-
-def test_resize_media_nearest_neighbor(spark):
-    """The resize output must equal a local numpy nearest-neighbor gather
-    on the decoded grid — shape AND bytes."""
-    import numpy as np
-
-    from geobuf_cpp_spark.operators.multimodal import (
-        decode_stub,
-        media_dataframe,
-        resize_media,
-        synth_media_batch,
-    )
-
-    out = {
-        r["media_id"]: r
-        for r in resize_media(media_dataframe(spark, 30), out_w=8, out_h=8).collect()
-    }
-    assert len(out) == 30
-    local = synth_media_batch(np.arange(30))
-    for _, row in local.iterrows():
-        got = out[row["media_id"]]
-        w, h, body = decode_stub(bytes(row["payload"]))
-        if row["kind"] == "image":
-            img = body[: w * h].reshape(h, w)
-            yi = (np.arange(8) * h) // 8
-            xi = (np.arange(8) * w) // 8
-            expect = img[yi[:, None], xi].tobytes()
-        else:
-            n = 64
-            idx = (np.arange(n) * body.size) // n
-            expect = body[np.minimum(idx, body.size - 1)].tobytes()
-        assert bytes(got["pixels"]) == expect
-        assert (got["out_w"], got["out_h"]) == (8, 8)
-
 
 # ---------------------------------------------------------------------------
 # real PNG codec: decode verified against an INDEPENDENT test-side encoder

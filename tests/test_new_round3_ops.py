@@ -1345,34 +1345,6 @@ def test_snapshot_time_travel_and_crash_safety(spark, tmp_path):
         read_snapshot(spark, table, version=9)
 
 
-def test_snapshot_incremental_changes_read(spark, tmp_path):
-    from geobuf_cpp_spark.sources.snapshots import (
-        read_changes,
-        write_snapshot,
-    )
-
-    table = str(tmp_path / "cdc")
-    write_snapshot(spark.range(0, 10).selectExpr("id"), table,
-                   mode="overwrite")
-    write_snapshot(spark.range(10, 15).selectExpr("id"), table,
-                   mode="append")
-    write_snapshot(spark.range(15, 17).selectExpr("id"), table,
-                   mode="append")
-    assert sorted(r["id"] for r in
-                  read_changes(spark, table, 1, 2).collect()) == \
-        list(range(10, 15))
-    assert sorted(r["id"] for r in
-                  read_changes(spark, table, 1, 3).collect()) == \
-        list(range(10, 17))
-    assert read_changes(spark, table, 2, 2).count() == 0
-
-    import pytest as _pytest
-    write_snapshot(spark.range(99, 100).selectExpr("id"), table,
-                   mode="overwrite")
-    with _pytest.raises(ValueError, match="overwrite boundary"):
-        read_changes(spark, table, 2, 4)
-
-
 def test_point_segment_range_join_matches_rational_oracle(spark):
     from fractions import Fraction
 
@@ -1415,75 +1387,6 @@ def test_point_segment_range_join_matches_rational_oracle(spark):
     assert got == expect
     assert (900, 900) in got and (902, 901) in got   # inclusive boundary
     assert (903, 900) not in got and (904, 901) not in got
-
-
-def test_compact_snapshot_bounds_files_and_preserves_rows(spark, tmp_path):
-    import glob as _glob
-
-    from geobuf_cpp_spark.sources.snapshots import (
-        compact_snapshot,
-        read_snapshot,
-        write_snapshot,
-    )
-
-    table = str(tmp_path / "compact_tbl")
-    # 40 fragmented commits of the same skewed table -> small-files mess
-    base = spark.range(0, 4000).selectExpr(
-        "id", "CASE WHEN id % 10 < 7 THEN 'hot' ELSE concat('k', id % 3) "
-        "END AS k")
-    for i in range(8):
-        write_snapshot(base.filter(f"id % 8 = {i}").repartition(6),
-                       table, mode="append")
-    before = read_snapshot(spark, table)
-    before_rows = sorted(r["id"] for r in before.collect())
-    n_files_before = len(_glob.glob(table + "/data/*/part-*.parquet"))
-
-    v = compact_snapshot(spark, table, key_col="k", id_col="id",
-                         target_rows=1000)
-    after = read_snapshot(spark, table, version=v)
-    assert sorted(r["id"] for r in after.collect()) == before_rows
-    # planned: hot=2800 rows -> 3 files; k0/k1/k2 ~400 each -> 1 file
-    import re as _re
-    per_key = {}
-    for f in _glob.glob(table + f"/data/*/k=*/part-*.parquet"):
-        key = _re.search(r"k=([^/]+)/", f).group(1)
-        per_key[key] = per_key.get(key, 0) + 1
-    assert per_key["hot"] == 3   # 2800 rows at target 1000
-    assert all(per_key[k] == 1 for k in ("k0", "k1", "k2"))
-    assert sum(per_key.values()) < n_files_before
-    # history intact: the pre-compaction version still reads
-    assert read_snapshot(spark, table, version=8).count() == 4000
-
-
-def test_vacuum_snapshots_drops_only_unreferenced(spark, tmp_path):
-    import glob as _glob
-
-    from geobuf_cpp_spark.sources.snapshots import (
-        read_snapshot,
-        snapshot_versions,
-        vacuum_snapshots,
-        write_snapshot,
-    )
-
-    table = str(tmp_path / "vac")
-    write_snapshot(spark.range(0, 10).selectExpr("id"), table,
-                   mode="overwrite")          # v1
-    write_snapshot(spark.range(10, 20).selectExpr("id"), table,
-                   mode="append")             # v2 (refs v1's dir too)
-    write_snapshot(spark.range(50, 55).selectExpr("id"), table,
-                   mode="overwrite")          # v3: lineage restart
-    write_snapshot(spark.range(55, 60).selectExpr("id"), table,
-                   mode="append")             # v4
-
-    out = vacuum_snapshots(table, keep_versions=1)
-    assert out["kept"] == [4]
-    # v3's dir is still referenced by v4's append lineage — must survive;
-    # v1/v2's dirs are unreferenced — must be gone
-    assert out["deleted_dirs"] == 2 and out["deleted_manifests"] == 3
-    assert snapshot_versions(table) == [4]
-    assert sorted(r["id"] for r in read_snapshot(spark, table).collect()) \
-        == list(range(50, 60))
-    assert len(_glob.glob(table + "/data/*")) == 2
 
 
 # ---------------------------------------------------------------------------

@@ -1,5 +1,5 @@
-"""Round-5 additions: snapshot optimistic concurrency + layout
-uniformity + vacuum in-flight safety, and the new operator gates.
+"""Round-5 additions: snapshot optimistic concurrency and the new
+operator gates.
 """
 
 from __future__ import annotations
@@ -7,8 +7,6 @@ from __future__ import annotations
 import json
 import os
 import threading
-
-import pytest
 
 
 # ---------------------------------------------------------------------------
@@ -88,63 +86,6 @@ def test_publish_manifest_retries_after_lost_cas(spark, tmp_path, monkeypatch):
     head = snap._read_manifest(table, 3)
     assert len(head["data_dirs"]) == 2  # rival's lineage + our dir
     assert snap.read_snapshot(spark, table).count() == 9
-
-
-def test_batch_id_idempotent_across_cas_retry(spark, tmp_path):
-    """Exactly-once: committing the same batch_id twice (the replay
-    path) returns the original version without writing a new one."""
-    from geobuf_cpp_spark.sources.snapshots import (
-        snapshot_versions,
-        write_snapshot,
-    )
-
-    table = str(tmp_path / "once")
-    v1 = write_snapshot(spark.range(0, 4).selectExpr("id"), table,
-                        mode="append", batch_id=7)
-    v2 = write_snapshot(spark.range(0, 4).selectExpr("id"), table,
-                        mode="append", batch_id=7)
-    assert v1 == v2 == 1
-    assert snapshot_versions(table) == [1]
-
-
-# ---------------------------------------------------------------------------
-# lineage layout uniformity (ADVICE low: compact + append mixed layouts)
-# ---------------------------------------------------------------------------
-
-
-def test_append_after_compaction_adopts_partitioned_layout(spark, tmp_path):
-    from geobuf_cpp_spark.sources.snapshots import (
-        compact_snapshot,
-        read_snapshot,
-        write_snapshot,
-    )
-
-    table = str(tmp_path / "layout")
-    base = spark.range(0, 400).selectExpr(
-        "concat('k', cast(id % 4 as string)) AS grp", "id")
-    write_snapshot(base, table, mode="overwrite")                  # v1 flat
-    compact_snapshot(spark, table, "grp", "id", target_rows=200)   # v2 hive
-
-    # pre-fix this append wrote a FLAT dir into a hive-partitioned
-    # lineage and the union read blew up with conflicting directory
-    # structures; now it adopts grp-partitioning from the manifest
-    late = spark.range(400, 440).selectExpr(
-        "concat('k', cast(id % 4 as string)) AS grp", "id")
-    v3 = write_snapshot(late, table, mode="append")
-    assert v3 == 3
-    got = read_snapshot(spark, table)
-    assert got.count() == 440
-    assert sorted(r["id"] for r in got.where("grp = 'k1'").collect()) \
-        == sorted(i for i in range(440) if i % 4 == 1)
-
-    # an append demanding a DIFFERENT layout is refused, not mixed in
-    with pytest.raises(ValueError, match="layout"):
-        write_snapshot(late, table, mode="append", partition_by=["id"])
-
-
-# ---------------------------------------------------------------------------
-# vacuum in-flight safety (ADVICE medium, second half)
-# ---------------------------------------------------------------------------
 
 
 def test_hll_estimate_parts_merge_and_accuracy(spark):
@@ -375,48 +316,6 @@ def test_incremental_neardup_index_maintenance(spark, tmp_path):
         == [(20, 1)]
 
 
-def test_streaming_sketch_equals_batch_sketch(spark, tmp_path):
-    """The micro-batch-merged quantile sketch equals the batch-built
-    sketch of the same data ROW FOR ROW (exact associativity makes
-    stream == batch provable, not approximate), with one snapshot
-    version per micro-batch and batch_id-idempotent commits."""
-    from geobuf_cpp_spark.operators.qsketch import quantile_sketch
-    from geobuf_cpp_spark.sources.snapshots import (
-        read_snapshot,
-        snapshot_versions,
-    )
-    from geobuf_cpp_spark.streaming.qsketch_stream import sketch_stream_sink
-
-    src = str(tmp_path / "src")
-    rows = spark.range(0, 6000).selectExpr(
-        "concat('t', cast(id % 3 as string)) AS event_type",
-        "cast((id * 37) % 90000 as bigint) AS cents")
-    # 4 files -> maxFilesPerTrigger=1 gives 4 micro-batches
-    rows.repartition(4).write.parquet(src)
-
-    table = str(tmp_path / "sketch_table")
-    stream = (
-        spark.readStream.schema("event_type string, cents bigint")
-        .option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    q = (
-        stream.writeStream
-        .foreachBatch(sketch_stream_sink(table, "cents", "event_type"))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    versions = snapshot_versions(table)
-    assert len(versions) == 4  # one commit per micro-batch
-    got = sorted(map(tuple, read_snapshot(spark, table).collect()))
-    want = sorted(map(tuple,
-                      quantile_sketch(rows, "cents", "event_type")
-                      .collect()))
-    assert got == want
-
-
 def test_hll_grouped_shard_merge(spark):
     """Grouped register tables merge across shards by idempotent max —
     the union-then-max of shard sketches equals the whole-corpus
@@ -475,33 +374,6 @@ def test_qbucket_sql_matches_bit_math_reference():
         assert got == reference(v), v
 
     check()
-
-
-def test_vacuum_skips_in_flight_data_dir(spark, tmp_path):
-    """A data dir written AFTER the newest retained manifest may belong
-    to a commit in flight (data lands before its manifest) — vacuum must
-    leave it alone even though no manifest references it yet."""
-    from geobuf_cpp_spark.sources.snapshots import (
-        snapshot_versions,
-        vacuum_snapshots,
-        write_snapshot,
-    )
-
-    table = str(tmp_path / "vacflight")
-    write_snapshot(spark.range(0, 10).selectExpr("id"), table,
-                   mode="overwrite")   # v1
-    write_snapshot(spark.range(10, 15).selectExpr("id"), table,
-                   mode="overwrite")   # v2: v1's dir now unreferenced
-    inflight = os.path.join(table, "data", "deadbeef0000")
-    os.makedirs(inflight)
-    with open(os.path.join(inflight, "part-0.parquet"), "wb") as fh:
-        fh.write(b"not yet committed")
-
-    out = vacuum_snapshots(table, keep_versions=1)
-    assert out["kept"] == [2]
-    assert out["deleted_dirs"] == 1          # v1's dir only
-    assert os.path.isdir(inflight)           # in-flight dir survives
-    assert snapshot_versions(table) == [2]
 
 
 # ---------------------------------------------------------------------------
@@ -1751,28 +1623,6 @@ def test_heavy_hitters_two_pass_exact(spark):
         got = {(x.tok, x.n)
                for x in heavy_hitters(df.repartition(parts), k).collect()}
         assert got == expect and ("hot", cnt["hot"]) in got
-
-
-def test_misra_gries_candidates_bound_and_superset(spark):
-    """Merged MG summary: size <= k, underestimates, and contains every
-    token above the N/(k+1) threshold."""
-    from collections import Counter
-    from geobuf_cpp_spark.operators.sketches import misra_gries_candidates
-
-    words = [f"t{i % 13}" for i in range(400)] + ["mega"] * 200
-    docs = [(i, " ".join(words[i * 60:(i + 1) * 60])) for i in range(10)]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    k = 5
-    got = {x.tok: x.est for x in
-           misra_gries_candidates(df.repartition(4), k).collect()}
-    assert len(got) <= k
-    cnt = Counter(w for _, t in docs for w in t.split(" ") if w)
-    n = sum(cnt.values())
-    for tok, est in got.items():
-        assert est <= cnt[tok]
-    for tok, c in cnt.items():
-        if c * (k + 1) > n:
-            assert tok in got, f"heavy token {tok} missing"
 
 
 def test_shingle_containment_catches_partial_copy(spark):

@@ -37,6 +37,9 @@ def test_shingle_sid_sets_is_order_isomorphic_bijection(spark):
     ds = shingle_sets(docs)
     dsi = shingle_sid_sets(docs)
 
+    # BIGINT ids: an INT id overflows past 2^31 - 1 distinct shingles
+    assert dict(dsi.dtypes)["shingle"] == "bigint"
+
     # same index shape: one int row per distinct (doc, shingle) row
     assert dsi.count() == ds.count()
     per_doc = dict(
@@ -181,6 +184,32 @@ def test_source_quality_ci_out_of_range_quotient_raises(spark):
                                 "source string, n_docs long, n_keep long")
     with pytest.raises(Exception, match="CAST_OVERFLOW"):
         _wilson_parts(row, "source", 10_000).collect()
+
+
+def test_knuth_hash_defined_at_bigint_boundaries(spark):
+    """``sql_knuth_hash`` over the BIGINT extremes and the 31/32-bit
+    edges: neither the ANSI Spark session nor DuckDB raises, and both
+    equal the Python residue ((id mod 2^31) * KNUTH) mod 2^32."""
+    import duckdb
+
+    from geobuf_cpp_spark.operators.curation import sql_knuth_hash
+
+    ids = [-2**63, -2**31 - 1, -1, 0, 2**31 - 1, 2**31, 2**63 - 1]
+    want = {i: ((i % 2**31) * 2654435761) % 2**32 for i in ids}
+    sql = sql_knuth_hash("id")
+
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    df = spark.createDataFrame([(i,) for i in ids], "id long")
+    got = {r["id"]: r["h"]
+           for r in df.selectExpr("id", f"{sql} AS h").collect()}
+    assert got == want
+
+    con = duckdb.connect()
+    values = ", ".join(f"(CAST({i} AS BIGINT))" for i in ids)
+    got = dict(con.execute(
+        f"SELECT id, {sql} AS h FROM (VALUES {values}) AS t(id)"
+    ).fetchall())
+    assert got == want
 
 
 def test_table_df_memoizes_plan_only_and_respects_sf_switch(spark, tmp_path):

@@ -231,16 +231,6 @@ def test_encode_feature_collections(spark, features):
         assert len(doc["features"]) == r["n_features"]
 
 
-def test_read_pages_parquet_fallback(spark, pages, tmp_path):
-    from geobuf_cpp_spark.sources.readers import read_pages
-
-    path = str(tmp_path / "pages_pq")
-    pages.write.parquet(path)
-    got = read_pages(spark, path, fmt="auto")
-    assert got.count() == pages.count()
-    assert set(got.columns) == set(pages.columns)
-
-
 def test_pip_join_large_matches_broadcast(spark, features):
     from geobuf_cpp_spark.operators.pip_join import pip_join_large
     from geobuf_cpp_spark.sources.pages import ADMIN_SCHEMA
@@ -477,60 +467,6 @@ def test_knn_distributed_boundary_tie_uses_fallback(spark):
     assert got[0]["dist2"] == ext * ext
 
 
-def test_typed_prop_accessors(spark):
-    """All six wire value kinds, encoded through the real codec into the
-    canonical-JSON property map, come back typed via the accessors."""
-    from geobuf_cpp_spark.functions.props import (
-        prop_bool,
-        prop_double,
-        prop_int,
-        prop_is_null,
-        prop_json,
-        prop_str,
-    )
-    from geobuf_cpp_spark.functions.udfs import _props_to_json_map
-
-    props = {
-        "s": "hello, \"world\"",      # string (tag 1)
-        "d": 2.5,                      # double (tag 2)
-        "u": 12,                       # non-negative int (tag 3 uint64)
-        "i": -7,                       # negative int (tag 4)
-        "b": True,                     # bool (tag 5)
-        "j": {"nested": [1, 2]},       # JSON (tag 6)
-        "z": None,                     # JSON null (tag 6)
-    }
-    # through the REAL codec: encode a feature, decode, re-map
-    blob = gb.encode(
-        {"type": "Feature",
-         "geometry": {"type": "Point", "coordinates": [0.0, 0.0]},
-         "properties": props}
-    )
-    decoded = gb.decode(blob)["properties"]
-    pdf = pd.DataFrame({"id": [0], "props": [_props_to_json_map(decoded)]})
-    df = spark.createDataFrame(pdf, schema="id long, props map<string,string>")
-    row = df.select(
-        prop_str("props", "s").alias("s"),
-        prop_double("props", "d").alias("d"),
-        prop_int("props", "u").alias("u"),
-        prop_int("props", "i").alias("i"),
-        prop_bool("props", "b").alias("b"),
-        prop_json("props", "j").alias("j"),
-        prop_is_null("props", "z").alias("z"),
-        # type-mismatch and missing-key -> NULL, never a cast error
-        prop_int("props", "s").alias("bad_int"),
-        prop_str("props", "d").alias("bad_str"),
-        prop_double("props", "missing").alias("missing"),
-    ).collect()[0]
-    assert row["s"] == 'hello, "world"'
-    assert row["d"] == 2.5
-    assert row["u"] == 12 and row["i"] == -7
-    assert row["b"] is True
-    assert row["j"] == '{"nested":[1,2]}'
-    assert row["z"] is True
-    assert row["bad_int"] is None and row["bad_str"] is None
-    assert row["missing"] is None
-
-
 def test_read_geobuf_dir(spark, tmp_path):
     """Raw .pbf files (the reference CLI's output unit) read back as a
     feature DataFrame via the binaryFile source + Arrow decode."""
@@ -562,40 +498,6 @@ def test_read_geobuf_dir(spark, tmp_path):
     assert set(got["kind"]) == {"Point", "LineString"}
     a = got[got["properties"].apply(lambda m: m.get("name") == '"a"')]
     assert len(a) == 1 and list(a.iloc[0]["geom"]["coords"])[:2] == [1.5, 2.5]
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Two tables bucketed on the same key join with ZERO shuffle —
-    the co-located big-big join strategy."""
-    from geobuf_cpp_spark.plans.bucketing import (
-        bucketed_join,
-        plan_has_shuffle,
-        write_bucketed,
-    )
-
-    # warehouse dir is a static conf; the default ./spark-warehouse is
-    # gitignored and tables are dropped below
-    left = spark.range(0, 10_000).selectExpr("id AS k", "id * 2 AS a")
-    right = spark.range(0, 10_000).selectExpr("id AS k", "id * 3 AS b")
-    write_bucketed(left, "bk_left", "k", 8)
-    write_bucketed(right, "bk_right", "k", 8)
-    try:
-        # force the sort-merge path (broadcast would hide the question)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            joined = bucketed_join(spark, "bk_left", "bk_right", "k")
-            assert not plan_has_shuffle(joined), "bucketed join still shuffles"
-            # and a plain (non-bucketed) join DOES shuffle — the control
-            plain = left.join(right, "k")
-            assert plan_has_shuffle(plain)
-        finally:
-            spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        assert joined.count() == 10_000
-        row = joined.filter("k = 7").collect()[0]
-        assert row["a"] == 14 and row["b"] == 21
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bk_left")
-        spark.sql("DROP TABLE IF EXISTS bk_right")
 
 
 def test_geobuf_file_sink_roundtrip(spark, features, tmp_path):
@@ -650,21 +552,6 @@ def test_repartition_by_cell_prefix_colocates_parents(spark):
         k: v for k, v in parent_to_parts.items() if len(v) > 1}
     # and the layout actually spreads across partitions
     assert len({pid for pid, _ in rows}) > 1
-
-
-def test_admin_polygons_dataframe_matches_generator(spark):
-    """The Spark-side admin polygon source equals the pandas generator
-    row for row (the API a distributed PIP caller uses directly)."""
-    from geobuf_cpp_spark.sources.pages import (
-        admin_polygons_dataframe,
-        generate_admin_polygons,
-    )
-
-    sdf = admin_polygons_dataframe(spark)
-    pdf = generate_admin_polygons()
-    assert sdf.count() == len(pdf)
-    assert sorted(r["admin_id"] for r in sdf.collect()) == sorted(
-        pdf["admin_id"].tolist())
 
 
 # ---------------------------------------------------------------------------

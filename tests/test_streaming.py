@@ -1,391 +1,9 @@
-"""Structured Streaming: file-source windowed aggregation equals batch."""
+"""Structured Streaming: operators that run on a file-source stream
+equal their batch form."""
 
 import os
 
 from pyspark.sql import functions as F
-
-from geobuf_cpp_spark.streaming.events import (
-    read_event_stream,
-    run_to_memory,
-    windowed_counts,
-)
-
-
-def test_stream_matches_batch(spark, tmp_path):
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    src = str(tmp_path / "stream_src")
-    # land the data as three separate "arrivals"
-    events.filter("event_id % 3 = 0").write.parquet(os.path.join(src, "a"))
-    events.filter("event_id % 3 = 1").write.parquet(os.path.join(src, "b"))
-    events.filter("event_id % 3 = 2").write.parquet(os.path.join(src, "c"))
-
-    stream = read_event_stream(spark, src + "/*", max_files_per_trigger=2)
-    agg = windowed_counts(stream, window="1 hour", watermark="2 hours")
-    q = run_to_memory(agg, "ev_counts", str(tmp_path / "ckpt"))
-    try:
-        got = spark.table("ev_counts").toPandas()
-    finally:
-        q.stop()
-
-    expect = (
-        events.groupBy(
-            F.window("ts", "1 hour").alias("w"), "event_type"
-        )
-        .agg(
-            F.count("*").alias("n"),
-            F.min("value").alias("min_value"),
-            F.max("value").alias("max_value"),
-        )
-        .select(F.col("w.start").alias("window_start"), "event_type", "n",
-                "min_value", "max_value")
-        .toPandas()
-    )
-    key = ["window_start", "event_type"]
-    got = got.sort_values(key).reset_index(drop=True)
-    expect = expect.sort_values(key).reset_index(drop=True)
-    assert len(got) == len(expect) and len(got) > 0
-    assert (got["n"].to_numpy() == expect["n"].to_numpy()).all()
-    assert (got["min_value"].to_numpy() == expect["min_value"].to_numpy()).all()
-
-
-def test_stream_resume_from_checkpoint(spark, tmp_path):
-    """Kill the query, land more data, restart with the same checkpoint —
-    counts reflect everything exactly once."""
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    src = str(tmp_path / "src2")
-    ckpt = str(tmp_path / "ckpt2")
-    events.filter("event_id % 2 = 0").write.parquet(os.path.join(src, "a"))
-
-    stream = read_event_stream(spark, src + "/*")
-    q = run_to_memory(windowed_counts(stream), "ev_resume", ckpt)
-    first = spark.table("ev_resume").agg(F.sum("n")).collect()[0][0]
-    q.stop()
-
-    events.filter("event_id % 2 = 1").write.parquet(os.path.join(src, "b"))
-    q2 = run_to_memory(
-        windowed_counts(read_event_stream(spark, src + "/*")), "ev_resume", ckpt
-    )
-    try:
-        total = spark.table("ev_resume").agg(F.sum("n")).collect()[0][0]
-    finally:
-        q2.stop()
-    assert first < total == events.count()
-
-
-def test_streaming_geo_pipeline_matches_batch(spark, tmp_path):
-    """pages stream -> extract -> windowed cell counts == batch answer."""
-    from geobuf_cpp_spark.functions.cells import sql_cell
-    from geobuf_cpp_spark.sources.pages import pages_dataframe
-    from geobuf_cpp_spark.streaming.pages_stream import (
-        extract_features_with_ts,
-        read_pages_stream,
-        streaming_cell_counts,
-    )
-
-    pages = pages_dataframe(spark, 400, partitions=4)
-    src = str(tmp_path / "pages_src")
-    pages.filter("length(url) % 2 = 0").write.parquet(os.path.join(src, "a"))
-    pages.filter("length(url) % 2 = 1").write.parquet(os.path.join(src, "b"))
-
-    stream = read_pages_stream(spark, src + "/*", max_files_per_trigger=3)
-    agg = streaming_cell_counts(stream, res=6, window="1 day", watermark="2 days")
-    from geobuf_cpp_spark.streaming.events import run_to_memory
-
-    q = run_to_memory(agg, "geo_counts", str(tmp_path / "ckpt"))
-    try:
-        got = spark.table("geo_counts").toPandas()
-    finally:
-        q.stop()
-
-    batch = (
-        extract_features_with_ts(pages)
-        .withColumn("cell", F.expr(sql_cell("lat", "lon", 6)))
-        .groupBy(F.window("warc_ts", "1 day").alias("w"), "cell")
-        .agg(F.count("*").alias("n_features"))
-        .select(F.col("w.start").alias("window_start"), "cell", "n_features")
-        .toPandas()
-    )
-    key = ["window_start", "cell"]
-    got = got.sort_values(key).reset_index(drop=True)
-    batch = batch.sort_values(key).reset_index(drop=True)
-    assert len(got) == len(batch) > 0
-    assert (got["n_features"].to_numpy() == batch["n_features"].to_numpy()).all()
-
-
-def test_sessionize_stream_late_arrivals(spark, tmp_path):
-    """Out-of-order arrival ACROSS micro-batches: an in-envelope late event
-    extends the open session (end never rewinds, start can move back); a
-    too-old late event becomes its own closed singleton session."""
-    import datetime as dt
-
-    from geobuf_cpp_spark.streaming.events import read_event_stream
-    from geobuf_cpp_spark.streaming.sessions import sessionize_stream
-
-    base = dt.datetime(2026, 1, 1, 12, 0, 0)
-    t = lambda s: base + dt.timedelta(seconds=s)  # noqa: E731
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    )
-    # batch a: open session [0s, 40s] (2 events)
-    a = spark.createDataFrame(
-        [(1, t(0), 7, "view", 1.0, ""), (2, t(40), 7, "view", 2.0, "")], schema
-    )
-    # batch b: t=20s is LATE but inside the envelope -> extends to n=3;
-    # t=-200s and t=-170s are older than start - gap AND mutually in-gap
-    # -> ONE closed two-event session (matching the batch twin), emitted
-    # now; t=200s opens a new session, closing [0s..40s]
-    b = spark.createDataFrame(
-        [(3, t(20), 7, "view", 4.0, ""), (4, t(-200), 7, "view", 8.0, ""),
-         (6, t(-170), 7, "view", 32.0, ""),
-         (5, t(200), 7, "view", 16.0, "")], schema
-    )
-    src = str(tmp_path / "late_src")
-    # ONE file per arrival: multiple part files would enter the file
-    # source in mtime order (task completion order — nondeterministic),
-    # splitting batch b into arbitrarily ordered micro-batches
-    a.coalesce(1).write.parquet(os.path.join(src, "a"))
-    b.coalesce(1).write.parquet(os.path.join(src, "b"))
-
-    stream = read_event_stream(spark, src + "/*", max_files_per_trigger=1)
-    sessions = sessionize_stream(stream, gap_seconds=60.0)
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName("late_sessions")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "late_ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = spark.table("late_sessions").toPandas()
-    finally:
-        q.stop()
-
-    import pandas as pd
-
-    def naive(col):
-        s = pd.to_datetime(col)
-        return (s.dt.tz_convert("UTC").dt.tz_localize(None)
-                if s.dt.tz is not None else s)
-
-    got["session_start"] = naive(got["session_start"])
-    got["session_end"] = naive(got["session_end"])
-    rows = sorted(
-        (r.session_start.to_pydatetime(), r.session_end.to_pydatetime(),
-         int(r.n_events), float(r.sum_value))
-        for r in got.itertuples(index=False)
-    )
-    assert rows == [
-        (t(-200), t(-170), 2, 40.0),
-        (t(0), t(40), 3, 7.0),
-    ]
-
-
-def test_sessionize_stream_late_chain_merges_into_open(spark, tmp_path):
-    """A late chain that reaches within the gap of the open session MERGES
-    into it (start extends backward) instead of emitting separately."""
-    import datetime as dt
-
-    from geobuf_cpp_spark.streaming.events import read_event_stream
-    from geobuf_cpp_spark.streaming.sessions import sessionize_stream
-
-    base = dt.datetime(2026, 1, 1, 12, 0, 0)
-    t = lambda s: base + dt.timedelta(seconds=s)  # noqa: E731
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    )
-    a = spark.createDataFrame([(1, t(0), 7, "view", 1.0, "")], schema)
-    # chain -150s -> -100s -> -50s: each link within gap=60, and -50s is
-    # within gap of the open session's start (0s) -> one merged session
-    b = spark.createDataFrame(
-        [(2, t(-150), 7, "view", 2.0, ""), (3, t(-100), 7, "view", 4.0, ""),
-         (4, t(-50), 7, "view", 8.0, ""),
-         (5, t(500), 7, "view", 16.0, "")], schema
-    )
-    src = str(tmp_path / "merge_src")
-    a.coalesce(1).write.parquet(os.path.join(src, "a"))
-    b.coalesce(1).write.parquet(os.path.join(src, "b"))
-
-    stream = read_event_stream(spark, src + "/*", max_files_per_trigger=1)
-    q = (
-        sessionize_stream(stream, gap_seconds=60.0)
-        .writeStream.format("memory")
-        .queryName("merge_sessions")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "merge_ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = spark.table("merge_sessions").toPandas()
-    finally:
-        q.stop()
-    assert len(got) == 1
-    r = got.iloc[0]
-    assert int(r["n_events"]) == 4 and float(r["sum_value"]) == 15.0
-
-
-def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
-    """Watermarked stream-stream interval join (clicks x trailing views)
-    drained over multiple micro-batches equals the batch twin — the
-    condition is BUILT ONCE and shared, and the time-ordered arrivals stay
-    inside the watermark, so no match drops."""
-    from geobuf_cpp_spark.streaming.events import read_event_stream
-    from geobuf_cpp_spark.streaming.joins import (
-        interval_join_batch,
-        interval_join_stream,
-    )
-
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    bounds = [r[0] for r in events.selectExpr(
-        "percentile_approx(ts, array(0.5))").collect()][0]
-    src = str(tmp_path / "ij_src")
-    events.filter(F.col("ts") <= bounds[0]).coalesce(1).write.parquet(
-        os.path.join(src, "a"))
-    events.filter(F.col("ts") > bounds[0]).coalesce(1).write.parquet(
-        os.path.join(src, "b"))
-
-    def split(df):
-        clicks = df.filter("event_type = 'click'").select(
-            "user_id", "ts", "event_id")
-        views = df.filter("event_type = 'view'").selectExpr(
-            "user_id", "ts AS v_ts", "event_id AS view_event_id")
-        return clicks, views
-
-    stream = read_event_stream(spark, src + "/*", max_files_per_trigger=1)
-    sc, sv = split(stream)
-    joined = interval_join_stream(
-        sc, sv, "user_id", left_ts="ts", right_ts="v_ts",
-        within_seconds=3600, watermark="4 hours",
-    ).select("event_id", "view_event_id")
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("ij_stream")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ij_ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {
-            (r.event_id, r.view_event_id)
-            for r in spark.table("ij_stream").collect()
-        }
-    finally:
-        q.stop()
-
-    bc, bv = split(events)
-    expect = {
-        (r.event_id, r.view_event_id)
-        for r in interval_join_batch(
-            bc, bv, "user_id", left_ts="ts", right_ts="v_ts",
-            within_seconds=3600,
-        ).select("event_id", "view_event_id").collect()
-    }
-    assert len(expect) > 0
-    assert got == expect
-
-
-def test_sessionize_stream_matches_batch(spark, tmp_path):
-    """Custom stateful operator (applyInPandasWithState): per-user
-    gap-timeout sessions from the stream equal the batch twin's CLOSED
-    sessions (the still-open trailing session flushes on timeout, which a
-    drained test stream does not wait for)."""
-    from geobuf_cpp_spark.streaming.sessions import (
-        sessionize_batch,
-        sessionize_stream,
-    )
-
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    # time-ordered arrivals (the log-ingest cadence this operator assumes)
-    bounds = [r[0] for r in events.selectExpr(
-        "percentile_approx(ts, array(0.33, 0.66))").collect()][0]
-    src = str(tmp_path / "sess_src")
-    events.filter(F.col("ts") <= bounds[0]).write.parquet(os.path.join(src, "a"))
-    events.filter(
-        (F.col("ts") > bounds[0]) & (F.col("ts") <= bounds[1])
-    ).write.parquet(os.path.join(src, "b"))
-    events.filter(F.col("ts") > bounds[1]).write.parquet(os.path.join(src, "c"))
-
-    from geobuf_cpp_spark.streaming.events import read_event_stream
-
-    gap = 6 * 3600.0
-    stream = read_event_stream(spark, src + "/*", max_files_per_trigger=1)
-    sessions = sessionize_stream(stream, gap_seconds=gap)
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName("sessions")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "sess_ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = spark.table("sessions").toPandas()
-    finally:
-        q.stop()
-
-    batch = (
-        sessionize_batch(events, gap_seconds=gap)
-        .withColumn("session_start", F.col("session_start").cast("timestamp"))
-        .withColumn("session_end", F.col("session_end").cast("timestamp"))
-        .toPandas()
-    )
-    # closed sessions = batch sessions minus each user's LAST session
-    batch = batch.sort_values(["user_id", "session_start"])
-    # include_groups=False: grouping columns stay out of the applied
-    # frame (g keeps user_id as a regular column via the sort above);
-    # silences the pandas 2.x DeprecationWarning that becomes an error
-    # on a future pandas major (VERDICT r5 item #4)
-    closed = batch.groupby("user_id", group_keys=False)[batch.columns].apply(
-        lambda g: g.iloc[:-1]
-    )
-    key = ["user_id", "session_start", "session_end", "n_events"]
-
-    def norm(pdf):
-        return sorted(
-            (int(r.user_id), str(r.session_start), str(r.session_end),
-             int(r.n_events), round(float(r.sum_value), 9))
-            for r in pdf.itertuples(index=False)
-        )
-
-    assert len(got) > 0, "no sessions closed during the stream"
-    assert norm(got) == norm(closed[key + ["sum_value"]])
-
-
-def test_dedup_stream_emits_each_text_once(spark, tmp_path):
-    from geobuf_cpp_spark.streaming.dedup_stream import (
-        dedup_stream, read_doc_stream,
-    )
-    from geobuf_cpp_spark.streaming.events import run_to_memory
-
-    # docs land in doc_id order across three files; ids 0-9 unique texts,
-    # 10-14 duplicate texts of 0-4 (later arrivals — must not re-emit)
-    rows = [(i, f"2024-01-01 0{i % 10}:00:00", f"text number {i % 10}",
-             "en", "src") for i in range(15)]
-    df = spark.createDataFrame(
-        rows, "doc_id long, ts string, text string, lang string, source string"
-    ).selectExpr("doc_id", "CAST(ts AS TIMESTAMP) AS ts", "text", "lang",
-                 "source")
-    src = str(tmp_path / "docs_src")
-    df.filter("doc_id < 5").coalesce(1).write.parquet(src + "/a")
-    df.filter("doc_id >= 5 AND doc_id < 10").coalesce(1).write.parquet(src + "/b")
-    df.filter("doc_id >= 10").coalesce(1).write.parquet(src + "/c")
-
-    stream = read_doc_stream(spark, src + "/*", max_files_per_trigger=1)
-    q = run_to_memory(dedup_stream(stream), "dedup_docs",
-                      str(tmp_path / "ckpt_dedup"), output_mode="append")
-    try:
-        got = spark.table("dedup_docs").toPandas()
-    finally:
-        q.stop()
-
-    # exactly one row per distinct text, and it is the FIRST arrival
-    assert len(got) == 10
-    assert sorted(got["text"]) == sorted(f"text number {i}" for i in range(10))
-    assert set(got["doc_id"]) == set(range(10))
 
 
 def test_sliding_stats_stream_twin(spark, tmp_path):
@@ -400,7 +18,13 @@ def test_sliding_stats_stream_twin(spark, tmp_path):
         events.filter(f"event_id % 3 = {k}").write.parquet(
             os.path.join(src, name))
 
-    stream = read_event_stream(spark, src + "/*", max_files_per_trigger=2)
+    schema = ("event_id long, ts timestamp, user_id long, "
+              "event_type string, value double, props string")
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 2)
+        .parquet(src + "/*")
+    )
     agg = (
         stream.withWatermark("ts", "4 hours")
         .groupBy(F.window("ts", "7200 seconds", "3600 seconds").alias("w"),
@@ -413,8 +37,14 @@ def test_sliding_stats_stream_twin(spark, tmp_path):
             .alias("win_start"),
             "event_type", "n_events", "v_min", "v_max")
     )
-    q = run_to_memory(agg, "slide_counts", str(tmp_path / "slide_ckpt"))
+    q = (
+        agg.writeStream.format("memory").queryName("slide_counts")
+        .outputMode("complete")
+        .option("checkpointLocation", str(tmp_path / "slide_ckpt"))
+        .start()
+    )
     try:
+        q.processAllAvailable()
         got = spark.table("slide_counts").toPandas()
     finally:
         q.stop()
@@ -462,75 +92,6 @@ def test_cms_sketch_stream_twin(spark, tmp_path):
     assert got == want and len(want) > 0
 
 
-def test_run_to_parquet_appends_exactly_source_rows(spark, tmp_path):
-    """The production parquet sink (append + checkpoint): a pass-through
-    stream lands every source row exactly once."""
-    events = spark.read.parquet(
-        "/root/testdata/sf0.001/events.parquet").limit(200)
-    src = str(tmp_path / "rp_src")
-    events.write.parquet(src)
-    from geobuf_cpp_spark.streaming.events import run_to_parquet
-
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-        .select("event_id", "user_id")
-    )
-    out = str(tmp_path / "rp_out")
-    q = run_to_parquet(stream, out, str(tmp_path / "rp_ckpt"))
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = spark.read.parquet(out)
-    assert got.count() == events.count()
-    assert sorted(r["event_id"] for r in got.collect()) == sorted(
-        r["event_id"] for r in events.collect())
-
-
-def test_snapshot_stream_sink_exactly_once(spark, tmp_path):
-    """Streaming ingest into the snapshot table via foreachBatch:
-    every source row lands exactly once, and a replayed micro-batch
-    (same batch_id) is a no-op instead of duplicate rows."""
-    from geobuf_cpp_spark.sources.snapshots import (
-        read_snapshot,
-        snapshot_stream_sink,
-        snapshot_versions,
-        write_snapshot,
-    )
-
-    src = str(tmp_path / "snap_src")
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    for k, name in enumerate("ab"):
-        events.filter(f"event_id % 2 = {k}").write.parquet(
-            os.path.join(src, name))
-
-    table = str(tmp_path / "snap_table")
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/*")
-    )
-    q = (
-        stream.writeStream.foreachBatch(snapshot_stream_sink(table))
-        .option("checkpointLocation", str(tmp_path / "ckpt_snap"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    total = events.count()
-    assert read_snapshot(spark, table).count() == total
-    n_versions = len(snapshot_versions(table))
-
-    # simulate a micro-batch REPLAY: re-commit batch_id 0 — no-op
-    replay = write_snapshot(
-        events.limit(5), table, mode="append", batch_id=0)
-    assert replay == 1
-    assert len(snapshot_versions(table)) == n_versions
-    assert read_snapshot(spark, table).count() == total
-
-
 def test_cell_hotspot_stream_matches_batch(spark, tmp_path):
     """The windowed cell rollup drained from a file-source stream equals
     the batch twin on the same rows (the gate oracles the twin)."""
@@ -553,9 +114,15 @@ def test_cell_hotspot_stream_matches_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 2)
         .parquet(src + "/*")
     )
-    q = run_to_memory(cell_hotspot_counts(stream), "cell_hot",
-                      str(tmp_path / "cell_ckpt"))
+    q = (
+        cell_hotspot_counts(stream).writeStream.format("memory")
+        .queryName("cell_hot")
+        .outputMode("complete")
+        .option("checkpointLocation", str(tmp_path / "cell_ckpt"))
+        .start()
+    )
     try:
+        q.processAllAvailable()
         got = spark.table("cell_hot").toPandas()
     finally:
         q.stop()
@@ -566,55 +133,3 @@ def test_cell_hotspot_stream_matches_batch(spark, tmp_path):
     assert len(got) == len(expect) and len(got) > 0
     for c in ("n_pings", "max_event_id"):
         assert (got[c].to_numpy() == expect[c].to_numpy()).all(), c
-
-
-def test_geofence_stream_matches_batch(spark, tmp_path):
-    """Stateful streaming geofence transitions == the batch twin when
-    per-user arrival is chronological across micro-batches."""
-    from geobuf_cpp_spark.streaming.geofence_stream import (
-        geofence_transitions_stream)
-    from geobuf_cpp_spark.operators.trajectory import geofence_events
-
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    lo, hi = events.selectExpr(
-        "percentile_approx(unix_timestamp(ts), 0.33)",
-        "percentile_approx(unix_timestamp(ts), 0.66)").first()
-    src = str(tmp_path / "gsrc")
-    # time-sliced arrivals: per-user order preserved across batches
-    events.filter(F.unix_timestamp("ts") < lo).write.parquet(
-        os.path.join(src, "a"))
-    events.filter(
-        (F.unix_timestamp("ts") >= lo) & (F.unix_timestamp("ts") < hi)
-    ).write.parquet(os.path.join(src, "b"))
-    events.filter(F.unix_timestamp("ts") >= hi).write.parquet(
-        os.path.join(src, "c"))
-
-    boxes_rows = [(i, i * 89 % 300 * 100 - 18000 + 0,
-                   i * 53 % 150 * 100 - 8500,
-                   i * 89 % 300 * 100 - 18000 + 1200,
-                   i * 53 % 150 * 100 - 8500 + 900) for i in range(25)]
-    boxes_df = spark.createDataFrame(
-        boxes_rows,
-        "admin_id long, lon0 long, lat0 long, lon1 long, lat1 long")
-
-    stream = read_event_stream(spark, src + "/*", max_files_per_trigger=1)
-    pings = stream.withColumn(
-        "ix", F.expr("(event_id * 7919) % 36000")
-    ).withColumn("iy", F.expr("(event_id * 9973) % 17000"))
-    q = run_to_memory(
-        geofence_transitions_stream(pings, boxes_rows), "geo_trans",
-        str(tmp_path / "gckpt"), output_mode="append")
-    try:
-        got = {tuple(r) for r in
-               spark.table("geo_trans").toPandas().itertuples(index=False)}
-    finally:
-        q.stop()
-
-    batch_pings = events.selectExpr(
-        "event_id", "user_id", "ts",
-        "(event_id * 7919) % 36000 AS ix",
-        "(event_id * 9973) % 17000 AS iy")
-    expect = {(r.user_id, r.seq, r.e, r.region, r.prev_region)
-              for r in geofence_events(batch_pings, boxes_df).collect()}
-    assert len(got) > 10
-    assert got == expect

@@ -617,47 +617,6 @@ def test_curation_funnel_deterministic_counts(spark):
                for r in decon.select("text").collect())
 
 
-def test_ivf_index_save_load_roundtrip(spark, tmp_path):
-    """Persisted IVF index reloads bit-identically (centroids + every
-    assignment) and the reloaded index answers queries exactly like the
-    freshly built one; the on-disk layout is list_id-partitioned so a
-    probe prunes unprobed lists at the file level."""
-    import os
-
-    from geobuf_cpp_spark.operators.ann import (
-        build_ivf,
-        ivf_topk,
-        load_ivf_index,
-        save_ivf_index,
-    )
-
-    pdf = _emb_frame(n=300)
-    emb = spark.createDataFrame(pdf).repartition(4)
-    centroids, assignments = build_ivf(emb, n_lists=8)
-    path = str(tmp_path / "ivf_index")
-    save_ivf_index(path, centroids, assignments)
-
-    c2, a2 = load_ivf_index(spark, path)
-    assert (c2 == centroids).all()
-    orig = {(r["vec_id"], r["list_id"]) for r in assignments.collect()}
-    back = {(r["vec_id"], r["list_id"]) for r in a2.collect()}
-    assert back == orig
-    # physical layout: one directory per list
-    dirs = [d for d in os.listdir(os.path.join(path, "assignments"))
-            if d.startswith("list_id=")]
-    assert len(dirs) == len({lst for _, lst in orig})
-
-    queries = pd.DataFrame(
-        {"query_id": range(6), "vec": pdf["embedding"][:6].tolist()})
-    fresh = {(r["query_id"], r["rank"]): r["vec_id"]
-             for r in ivf_topk(emb, assignments, centroids, queries,
-                               k=10, nprobe=8).collect()}
-    loaded = {(r["query_id"], r["rank"]): r["vec_id"]
-              for r in ivf_topk(emb, a2, c2, queries,
-                                k=10, nprobe=8).collect()}
-    assert loaded == fresh
-
-
 def test_mixture_interleave_prefix_ratios(spark):
     """Sorted by order_key, every long-enough prefix of the stream
     serves strata in their weight ratio (weighted round-robin), and the
