@@ -59,12 +59,14 @@ from __future__ import annotations
 import base64
 import json
 import math
+import struct
+from math import copysign, floor
 from typing import Any
 
 import numpy as np
 
 from .jsonio import loads_relaxed
-from .pbf import PbfReader, PbfWriter
+from .pbf import PbfReader, pack_sint64_array, varint
 
 DEFAULT_DIM = 2
 DEFAULT_PRECISION = 6
@@ -106,6 +108,77 @@ def json_dumps_canonical(obj: Any) -> str:
 # Encoder
 # ---------------------------------------------------------------------------
 
+# The write pass returns each message as ``bytes``: its fields joined in
+# wire order, a sub-message written as one length-delimited field of its
+# parent. Field keys are constants, and the one-byte varints (below 128:
+# most lengths and key/value indexes of a web-page feature) come from a
+# table.
+
+_U64_MAX = 0xFFFFFFFFFFFFFFFF
+_DOUBLE = struct.Struct("<d")
+_VARINTS = tuple(bytes((n,)) for n in range(0x80))
+_N_VARINTS = len(_VARINTS)
+
+
+def _uvarint(n: int) -> bytes:
+    return _VARINTS[n] if 0 <= n < _N_VARINTS else varint(n)
+
+
+def _field(key: bytes, payload: bytes) -> bytes:
+    """Length-delimited field: key, varint byte length, payload."""
+    n = len(payload)
+    return key + (_VARINTS[n] if n < _N_VARINTS else varint(n)) + payload
+
+
+def _key(tag: int, wire: int) -> bytes:
+    return _uvarint((tag << 3) | wire)
+
+
+# Data message (geobuf.cpp:217-253)
+_DATA_KEY = _key(1, 2)
+_DATA_DIM = _key(2, 0)
+_DATA_PRECISION = _key(3, 0)
+_DATA_FC = _key(4, 2)
+_DATA_FEATURE = _key(5, 2)
+_DATA_GEOMETRY = _key(6, 2)
+# FeatureCollection / Feature / Geometry members (geobuf.cpp:374-445)
+_FC_FEATURE = _key(1, 2)
+_FEATURE_GEOMETRY = _key(1, 2)
+_FEATURE_ID_STRING = _key(11, 2)
+_FEATURE_ID_INT = _key(12, 0)
+_VALUES = _key(13, 2)
+_PROPERTIES = _key(14, 2)
+_CUSTOM_PROPERTIES = _key(15, 2)
+_GEOMETRY_TYPE = tuple(_key(1, 0) + _uvarint(code) for code in range(len(GEOM_TYPES)))
+_GEOMETRY_LENGTHS = _key(2, 2)
+_GEOMETRY_COORDS = _key(3, 2)
+_GEOMETRY_MEMBER = _key(4, 2)
+# Value variant (geobuf.cpp:462-470)
+_VALUE_STRING = _key(1, 2)
+_VALUE_DOUBLE = _key(2, 1)
+_VALUE_POS_INT = _key(3, 0)
+_VALUE_NEG_INT = _key(4, 0)
+_VALUE_FALSE = _key(5, 0) + _uvarint(0)
+_VALUE_TRUE = _key(5, 0) + _uvarint(1)
+_VALUE_JSON = _key(6, 2)
+
+# nesting depth of a coordinate array below the geometry, by type
+_COORD_DEPTH = {
+    "Point": 0,
+    "MultiPoint": 1,
+    "LineString": 1,
+    "MultiLineString": 2,
+    "Polygon": 2,
+    "MultiPolygon": 3,
+}
+
+# Lines of up to this many points are analyzed, and then quantized,
+# delta-coded and packed, by scalar loops; longer ones by the numpy
+# kernels. Below it numpy's per-call set-up costs more than the loops
+# (measured single-core on 2D lines: the packing crossover lies at 64-96
+# points, the analyze crossover past 96).
+_SCALAR_MAX_POINTS = 64
+
 
 class Encoder:
     """One instance per document; not thread safe (mirrors reference Encoder)."""
@@ -115,22 +188,29 @@ class Encoder:
         self.dim = DEFAULT_DIM
         self.e = 1.0
         self.keys: dict[str, int] = {}
+        # custom members of the document's objects, by object identity: the
+        # analyze pass computes them, the write pass reads them back
+        self._customs: dict[int, dict] = {}
 
     # -- analyze pass (geobuf.cpp:285-358) --------------------------------
 
-    def _analyze_point(self, pt) -> None:
-        z = pt[2] if len(pt) > 2 else 0.0
-        if z != 0:
-            self.dim = 3
-        if self.e >= self.max_precision:
-            return
-        for i in range(self.dim if len(pt) >= self.dim else len(pt)):
-            c = pt[i]
-            while (
-                round_half_away(c, self.e) / self.e != c
-                and self.e < self.max_precision
-            ):
-                self.e *= 10
+    def _analyze_points(self, pts) -> None:
+        """dim and precision over a list of points, point by point: any
+        nonzero z promotes dim to 3; ``e`` grows x10 while a coordinate
+        within dim does not round-trip through ``round(c * e) / e``."""
+        e = self.e
+        max_e = self.max_precision
+        for pt in pts:
+            if len(pt) > 2 and pt[2] != 0:
+                self.dim = 3
+            if e < max_e:
+                for c in pt[: self.dim]:
+                    while e < max_e:
+                        v = c * e
+                        if copysign(floor(abs(v) + 0.5), v) / e == c:
+                            break
+                        e *= 10
+        self.e = e
 
     def _analyze_matrix(self, arr: np.ndarray) -> None:
         """Vectorized analyze over an (n, k) coordinate matrix.
@@ -155,28 +235,29 @@ class Encoder:
 
     def _analyze_coords(self, coords, depth: int) -> None:
         if depth == 0:
-            self._analyze_point(coords)
-        elif depth == 1 and coords:
-            k = len(coords[0])
-            if len(coords) >= 24 and all(len(pt) == k for pt in coords):
-                # homogeneous 2D/3D point list, big enough to amortize the
-                # numpy kernel setup -> vectorized
+            self._analyze_points((coords,))
+        elif depth == 1:
+            k = len(coords[0]) if coords else 0
+            if len(coords) > _SCALAR_MAX_POINTS and all(len(pt) == k for pt in coords):
                 self._analyze_matrix(np.asarray(coords, dtype=np.float64))
-            else:  # small or ragged: per-point scalar loop is faster
-                for pt in coords:
-                    self._analyze_point(pt)
+            else:  # short or ragged
+                self._analyze_points(coords)
         else:
             for sub in coords:
                 self._analyze_coords(sub, depth - 1)
 
-    def _save_key(self, key: str) -> None:
-        if key not in self.keys:
-            self.keys[key] = len(self.keys)
-
-    def _save_keys(self, props: dict | None) -> None:
+    def _save_keys(self, props) -> None:
         if props:
+            keys = self.keys
             for k in props:
-                self._save_key(k)
+                if k not in keys:
+                    keys[k] = len(keys)
+
+    def _analyze_custom(self, obj: dict, std_keys: set) -> None:
+        if not obj.keys() <= std_keys:
+            custom = _custom_props(obj, std_keys)
+            self._customs[id(obj)] = custom
+            self._save_keys(custom)
 
     def _analyze_geometry(self, geom: dict | None) -> None:
         if not geom:
@@ -185,21 +266,13 @@ class Encoder:
         if t == "GeometryCollection":
             for sub in geom.get("geometries", ()):
                 self._analyze_geometry(sub)
-        elif t in GEOM_TYPE_CODE:
-            depth = {
-                "Point": 0,
-                "MultiPoint": 1,
-                "LineString": 1,
-                "MultiLineString": 2,
-                "Polygon": 2,
-                "MultiPolygon": 3,
-            }[t]
-            self._analyze_coords(geom.get("coordinates", ()), depth)
-        self._save_keys(_custom_props(geom, _GEOMETRY_STD_KEYS))
+        elif t in _COORD_DEPTH:
+            self._analyze_coords(geom.get("coordinates", ()), _COORD_DEPTH[t])
+        self._analyze_custom(geom, _GEOMETRY_STD_KEYS)
 
     def _analyze_feature(self, f: dict) -> None:
         self._save_keys(f.get("properties"))
-        self._save_keys(_custom_props(f, _FEATURE_STD_KEYS))
+        self._analyze_custom(f, _FEATURE_STD_KEYS)
         self._analyze_geometry(f.get("geometry"))
 
     # -- write pass (geobuf.cpp:210-552) -----------------------------------
@@ -208,130 +281,114 @@ class Encoder:
         self.dim = DEFAULT_DIM
         self.e = 1.0
         self.keys = {}
+        self._customs = {}
 
         t = obj.get("type")
         if t == "FeatureCollection":
             for f in obj.get("features", ()):
                 self._analyze_feature(f)
-            self._save_keys(_custom_props(obj, _FC_STD_KEYS))
+            self._analyze_custom(obj, _FC_STD_KEYS)
         elif t == "Feature":
             self._analyze_feature(obj)
         else:
             self._analyze_geometry(obj)
 
-        pbf = PbfWriter()
-        for key in self.keys:  # insertion order == index order
-            pbf.add_string(1, key)
+        parts = [_field(_DATA_KEY, key.encode("utf-8")) for key in self.keys]
         if self.dim != DEFAULT_DIM:
-            pbf.add_uint32(2, self.dim)
+            parts.append(_DATA_DIM + _uvarint(self.dim))
         precision = int(round(math.log10(min(self.e, self.max_precision))))
         if precision != DEFAULT_PRECISION:
-            pbf.add_uint32(3, precision)
-
+            parts.append(_DATA_PRECISION + _uvarint(precision))
         if t == "FeatureCollection":
-            sub = PbfWriter()
-            self._write_fc(obj, sub)
-            pbf.add_message(4, sub)
+            parts.append(_field(_DATA_FC, self._fc(obj)))
         elif t == "Feature":
-            sub = PbfWriter()
-            self._write_feature(obj, sub)
-            pbf.add_message(5, sub)
+            parts.append(_field(_DATA_FEATURE, self._feature(obj)))
         else:
-            sub = PbfWriter()
-            self._write_geometry(obj, sub)
-            pbf.add_message(6, sub)
-        return pbf.tobytes()
+            parts.append(_field(_DATA_GEOMETRY, self._geometry(obj)))
+        return b"".join(parts)
 
-    def _write_fc(self, fc: dict, pbf: PbfWriter) -> None:
-        for f in fc.get("features", ()):
-            sub = PbfWriter()
-            self._write_feature(f, sub)
-            pbf.add_message(1, sub)
-        custom = _custom_props(fc, _FC_STD_KEYS)
+    def _fc(self, fc: dict) -> bytes:
+        parts = [_field(_FC_FEATURE, self._feature(f)) for f in fc.get("features", ())]
+        custom = self._customs.get(id(fc))
         if custom:
-            self._write_props(custom, pbf, 15, 0)
+            self._props(custom, _CUSTOM_PROPERTIES, 0, parts)
+        return b"".join(parts)
 
-    def _write_feature(self, f: dict, pbf: PbfWriter) -> None:
+    def _feature(self, f: dict) -> bytes:
+        parts = []
         geom = f.get("geometry")
         if geom:
-            sub = PbfWriter()
-            self._write_geometry(geom, sub)
-            pbf.add_message(1, sub)
+            parts.append(_field(_FEATURE_GEOMETRY, self._geometry(geom)))
         fid = f.get("id")
-        if fid is not None:
-            if isinstance(fid, bool) or not isinstance(fid, (int, str)):
-                pbf.add_string(11, json_dumps_canonical(fid))
-            elif isinstance(fid, int):
-                if -(1 << 63) <= fid < (1 << 63):
-                    pbf.add_int64(12, fid)
-                else:
-                    # reference geobuf.cpp:392-397: an id outside int64
-                    # (the uint64 upper half, or a Python bigint) is not
-                    # the int64 alternative — it takes the generic branch
-                    # and is JSON-dumped into the tag-11 string id
-                    pbf.add_string(11, json_dumps_canonical(fid))
-            else:
-                pbf.add_string(11, fid)
+        if isinstance(fid, str):
+            parts.append(_field(_FEATURE_ID_STRING, fid.encode("utf-8")))
+        elif (isinstance(fid, int) and not isinstance(fid, bool)
+              and -(1 << 63) <= fid < (1 << 63)):
+            parts.append(_FEATURE_ID_INT + _uvarint(fid & _U64_MAX))
+        elif fid is not None:
+            # reference geobuf.cpp:392-397: any other id takes the generic
+            # branch and is JSON-dumped into the tag-11 string id — also an
+            # int outside int64 (the uint64 upper half, or a Python bigint)
+            parts.append(_field(_FEATURE_ID_STRING,
+                                json_dumps_canonical(fid).encode("utf-8")))
         n = 0
         props = f.get("properties")
         if props:
-            n = self._write_props(props, pbf, 14, 0)
-        custom = _custom_props(f, _FEATURE_STD_KEYS)
+            n = self._props(props, _PROPERTIES, 0, parts)
+        custom = self._customs.get(id(f))
         if custom:
-            self._write_props(custom, pbf, 15, n)
+            self._props(custom, _CUSTOM_PROPERTIES, n, parts)
+        return b"".join(parts)
 
-    def _write_geometry(self, geom: dict, pbf: PbfWriter) -> None:
-        t = geom.get("type")
+    def _geometry(self, geom: dict) -> bytes:
+        code = GEOM_TYPE_CODE.get(geom.get("type"))
         coords = geom.get("coordinates")
-        if t == "Point":
-            pbf.add_enum(1, 0)
-            # scalar path: Points dominate web corpora and numpy setup
-            # costs more than the 2-3 values themselves
-            q = [round_half_away(coords[i] if i < len(coords) else 0.0, self.e)
-                 for i in range(self.dim)]
-            from .pbf import pack_sint64_array
-
-            pbf.add_bytes(3, pack_sint64_array(np.asarray(q, dtype=np.int64)))
-        elif t == "MultiPoint":
-            pbf.add_enum(1, 1)
-            pbf.add_bytes(3, self._pack_line(coords, closed=False))
-        elif t == "LineString":
-            pbf.add_enum(1, 2)
-            pbf.add_bytes(3, self._pack_line(coords, closed=False))
-        elif t == "MultiLineString":
-            pbf.add_enum(1, 3)
-            self._write_multiline(coords, pbf, closed=False)
-        elif t == "Polygon":
-            pbf.add_enum(1, 4)
-            self._write_multiline(coords, pbf, closed=True)
-        elif t == "MultiPolygon":
-            pbf.add_enum(1, 5)
-            self._write_multipolygon(coords, pbf)
-        elif t == "GeometryCollection":
-            pbf.add_enum(1, 6)
-            for sub_geom in geom.get("geometries", ()):
-                sub = PbfWriter()
-                self._write_geometry(sub_geom, sub)
-                pbf.add_message(4, sub)
-        custom = _custom_props(geom, _GEOMETRY_STD_KEYS)
+        if code is None:
+            parts = []
+        elif code == 0:  # Point
+            parts = [_GEOMETRY_TYPE[0],
+                     _field(_GEOMETRY_COORDS, _pack_scalar((coords,), 1, self.dim, self.e))]
+        elif code <= 2:  # MultiPoint, LineString
+            parts = [_GEOMETRY_TYPE[code], _field(_GEOMETRY_COORDS, self._lines((coords,), False))]
+        elif code <= 4:  # MultiLineString, Polygon (rings are closed)
+            closed = code == 4
+            parts = [_GEOMETRY_TYPE[code]]
+            if len(coords) != 1:
+                drop = 1 if closed else 0
+                parts.append(_field(_GEOMETRY_LENGTHS,
+                                    _packed_uvarints([len(line) - drop for line in coords])))
+            parts.append(_field(_GEOMETRY_COORDS, self._lines(coords, closed)))
+        elif code == 5:  # MultiPolygon
+            parts = [_GEOMETRY_TYPE[5]]
+            if len(coords) != 1 or len(coords[0]) != 1:
+                lengths = [len(coords)]
+                for poly in coords:
+                    lengths.append(len(poly))
+                    lengths.extend(len(ring) - 1 for ring in poly)
+                parts.append(_field(_GEOMETRY_LENGTHS, _packed_uvarints(lengths)))
+            parts.append(_field(_GEOMETRY_COORDS, self._lines(
+                [ring for poly in coords for ring in poly], True)))
+        else:  # GeometryCollection
+            parts = [_GEOMETRY_TYPE[6]]
+            parts.extend(_field(_GEOMETRY_MEMBER, self._geometry(sub))
+                         for sub in geom.get("geometries", ()))
+        custom = self._customs.get(id(geom))
         if custom:
-            self._write_props(custom, pbf, 15, 0)
+            self._props(custom, _CUSTOM_PROPERTIES, 0, parts)
+        return b"".join(parts)
+
+    def _lines(self, lines, closed: bool) -> bytes:
+        """Packed coords of consecutive lines or rings: the delta running
+        sum resets per line (geobuf.cpp:537-552) and a closed ring drops its
+        last point. One numpy pack covers all lines once any is long."""
+        if all(0 < len(line) <= _SCALAR_MAX_POINTS for line in lines):
+            drop = 1 if closed else 0
+            return b"".join([_pack_scalar(line, len(line) - drop, self.dim, self.e)
+                             for line in lines])
+        return pack_sint64_array(np.concatenate([self._deltas(line, closed) for line in lines]))
 
     def _deltas(self, line, closed: bool) -> np.ndarray:
-        """Quantize + per-ring delta (running sum resets here, geobuf.cpp:537-552)."""
-        if 0 < len(line) <= 16:  # scalar path for short rings (see pbf.py note)
-            n = len(line) - (1 if closed else 0)
-            out = np.empty(n * self.dim, dtype=np.int64)
-            prev = [0] * self.dim
-            at = 0
-            for i in range(n):
-                pt = line[i]
-                for j in range(self.dim):
-                    q = round_half_away(pt[j] if j < len(pt) else 0.0, self.e)
-                    out[at] = q - prev[j]
-                    prev[j] = q
-                    at += 1
-            return out
+        """Quantize + per-line delta of one line with numpy."""
         k0 = len(line[0]) if line else 0
         if line and not all(len(pt) == k0 for pt in line):
             # ragged mixed 2/3-coord points: missing z defaults to 0
@@ -349,45 +406,50 @@ class Encoder:
         out[1:] -= q[:-1]
         return out.ravel()
 
-    def _pack_line(self, line, closed: bool) -> bytes:
-        from .pbf import pack_sint64_array
-
-        return pack_sint64_array(self._deltas(line, closed))
-
-    def _write_multiline(self, lines, pbf: PbfWriter, closed: bool) -> None:
-        drop = 1 if closed else 0
-        if len(lines) != 1:
-            pbf.add_packed_uint32(2, [len(line) - drop for line in lines])
-        parts = [self._deltas(line, closed) for line in lines]
-        pbf.add_packed_sint64(3, np.concatenate(parts) if parts else np.empty(0, np.int64))
-
-    def _write_multipolygon(self, polygons, pbf: PbfWriter) -> None:
-        if len(polygons) != 1 or len(polygons[0]) != 1:
-            lengths: list[int] = [len(polygons)]
-            for poly in polygons:
-                lengths.append(len(poly))
-                lengths.extend(len(ring) - 1 for ring in poly)
-            pbf.add_packed_uint32(2, lengths)
-        parts = [self._deltas(ring, True) for poly in polygons for ring in poly]
-        pbf.add_packed_sint64(3, np.concatenate(parts) if parts else np.empty(0, np.int64))
-
-    def _write_props(self, props: dict, pbf: PbfWriter, tag: int, value_offset: int) -> int:
-        """Write tag-13 values + packed [key_idx, val_idx] pairs.
+    def _props(self, props: dict, tag_key: bytes, value_offset: int, parts: list) -> int:
+        """Append tag-13 values + the packed [key_idx, val_idx] pairs.
 
         Returns the number of values written so a second group in the same
         parent message can continue the value index (deviation #1 above).
         """
-        indexes: list[int] = []
+        keys = self.keys
+        pairs = []
         value_index = value_offset
         for key, value in props.items():
-            sub = PbfWriter()
-            _write_value(value, sub)
-            pbf.add_message(13, sub)
-            indexes.append(self.keys[key])
-            indexes.append(value_index)
+            parts.append(_field(_VALUES, _value(value)))
+            pairs.append(_uvarint(keys[key]))
+            pairs.append(_uvarint(value_index))
             value_index += 1
-        pbf.add_packed_uint32(tag, indexes)
+        parts.append(_field(tag_key, b"".join(pairs)))
         return value_index - value_offset
+
+
+def _pack_scalar(pts, n: int, dim: int, e: float) -> bytes:
+    """The first ``n`` points, ``dim`` values each (missing ones are 0):
+    quantize half away from zero, delta against the previous point, zigzag,
+    varint — the scalar twin of ``_deltas`` + ``pack_sint64_array``."""
+    out = bytearray()
+    prev = [0] * dim
+    for i in range(n):
+        pt = pts[i]
+        k = len(pt)
+        for j in range(dim):
+            v = (pt[j] if j < k else 0.0) * e
+            q = int(copysign(floor(abs(v) + 0.5), v))
+            d = q - prev[j]
+            prev[j] = q
+            z = (d << 1) ^ (d >> 63)
+            if z > _U64_MAX:
+                raise OverflowError(f"quantized coordinate delta {d} outside int64")
+            while z > 0x7F:
+                out.append((z & 0x7F) | 0x80)
+                z >>= 7
+            out.append(z)
+    return bytes(out)
+
+
+def _packed_uvarints(values) -> bytes:
+    return b"".join([_uvarint(v) for v in values])
 
 
 def _pad(arr: np.ndarray, dim: int) -> np.ndarray:
@@ -408,24 +470,23 @@ def _custom_props(obj: dict, std_keys: set) -> dict:
     return {k: v for k, v in obj.items() if k not in std_keys}
 
 
-def _write_value(value: Any, pbf: PbfWriter) -> None:
+def _value(value: Any) -> bytes:
     """6-way value variant (geobuf.cpp:462-470; int sign split per
     pybind11_helpers.hpp:352-358; bytes -> base64 per :68-75)."""
     if isinstance(value, bool):
-        pbf.add_bool(5, value)
-    elif isinstance(value, int):
+        return _VALUE_TRUE if value else _VALUE_FALSE
+    if isinstance(value, int):
         if value >= 0:
-            pbf.add_uint64(3, value)
-        else:
-            pbf.add_uint64(4, -value)
-    elif isinstance(value, float):
-        pbf.add_double(2, value)
-    elif isinstance(value, str):
-        pbf.add_string(1, value)
-    elif isinstance(value, bytes):
-        pbf.add_string(1, base64.b64encode(value).decode("ascii"))
-    else:  # None / list / dict -> JSON string under tag 6
-        pbf.add_string(6, json_dumps_canonical(value))
+            return _VALUE_POS_INT + _uvarint(value)
+        return _VALUE_NEG_INT + _uvarint(-value)
+    if isinstance(value, float):
+        return _VALUE_DOUBLE + _DOUBLE.pack(value)
+    if isinstance(value, str):
+        return _field(_VALUE_STRING, value.encode("utf-8"))
+    if isinstance(value, bytes):
+        return _field(_VALUE_STRING, base64.b64encode(value))
+    # None / list / dict -> JSON string under tag 6
+    return _field(_VALUE_JSON, json_dumps_canonical(value).encode("utf-8"))
 
 
 # ---------------------------------------------------------------------------

@@ -4,13 +4,14 @@ Implements exactly the subset of the protobuf wire format the Geobuf codec
 needs: varint (wire type 0), 64-bit fixed (wire type 1, for doubles), and
 length-delimited (wire type 2, for strings / sub-messages / packed arrays).
 Wire semantics follow the protozero usage in the reference encoder
-(/root/reference/src/geobuf/geobuf.cpp:210-552): ``add_packed_sint64`` is
-zigzag+varint, ``add_int64`` is plain two's-complement varint,
-``add_uint32``/``add_uint64`` are plain varints.
+(reference src/geobuf/geobuf.cpp:210-552): packed sint64 is zigzag+varint,
+int64 is a plain two's-complement varint, uint32/uint64 are plain varints.
+The writer side is the scalar ``varint`` and the packed-array kernels;
+``codec.geobuf.Encoder`` assembles the messages from them.
 
 The coordinate hot path (`pack_sint64_array`) is vectorized with numpy so the
-Arrow-batched pandas UDFs that wrap this codec never loop per-coordinate in
-Python.
+Arrow-batched UDFs that wrap this codec never loop per-coordinate in Python
+over a long geometry.
 """
 
 from __future__ import annotations
@@ -75,8 +76,8 @@ def decode_varints(buf: bytes | memoryview) -> np.ndarray:
     Small payloads (single Points dominate web corpora — a coords field
     is 2 varints) take a scalar path: the numpy kernel's masked-gather
     setup costs ~35us per call regardless of n, while the scalar loop
-    is well under 1us per byte — the same size cutover
-    ``pack_sint64_array`` applies on the encode side.
+    is well under 1us per byte. On the encode side the encoder's own
+    scalar loop packs Points and short lines.
     """
     if len(buf) <= 32:
         out = []
@@ -112,23 +113,9 @@ def decode_varints(buf: bytes | memoryview) -> np.ndarray:
 def pack_sint64_array(vals: np.ndarray) -> bytes:
     """zigzag + varint a signed int64 array (packed field payload).
 
-    Small arrays (single Points and short rings dominate web corpora) take
-    a scalar path: the numpy kernel's setup costs ~70us regardless of n,
-    while the scalar loop is ~1us per value.
+    The encoder packs Points and short lines with its own scalar loop
+    (``codec.geobuf._pack_scalar``) and long lines here.
     """
-    if vals.size <= 16:
-        out = bytearray()
-        for n in vals.tolist():
-            z = ((n << 1) ^ (n >> 63)) & 0xFFFFFFFFFFFFFFFF
-            while True:
-                b = z & 0x7F
-                z >>= 7
-                if z:
-                    out.append(b | 0x80)
-                else:
-                    out.append(b)
-                    break
-        return bytes(out)
     return encode_varints(zigzag_encode(vals))
 
 
@@ -167,60 +154,6 @@ def varint(value: int) -> bytes:
         else:
             out.append(b)
             return bytes(out)
-
-
-class PbfWriter:
-    """Append-only protobuf message builder (mirrors protozero pbf_writer use)."""
-
-    __slots__ = ("_parts",)
-
-    def __init__(self) -> None:
-        self._parts: list[bytes] = []
-
-    def _key(self, tag: int, wire: int) -> None:
-        self._parts.append(varint((tag << 3) | wire))
-
-    def add_varint(self, tag: int, value: int) -> None:
-        self._key(tag, 0)
-        self._parts.append(varint(value))
-
-    # reference: pbf.add_uint32 / add_uint64 / add_enum are all plain varints
-    add_uint32 = add_varint
-    add_uint64 = add_varint
-    add_enum = add_varint
-
-    def add_int64(self, tag: int, value: int) -> None:
-        """Two's-complement varint (negative -> 10 bytes), protozero add_int64."""
-        self._key(tag, 0)
-        self._parts.append(varint(value & 0xFFFFFFFFFFFFFFFF))
-
-    def add_bool(self, tag: int, value: bool) -> None:
-        self.add_varint(tag, 1 if value else 0)
-
-    def add_double(self, tag: int, value: float) -> None:
-        self._key(tag, 1)
-        self._parts.append(struct.pack("<d", value))
-
-    def add_string(self, tag: int, value: str) -> None:
-        self.add_bytes(tag, value.encode("utf-8"))
-
-    def add_bytes(self, tag: int, value: bytes) -> None:
-        self._key(tag, 2)
-        self._parts.append(varint(len(value)))
-        self._parts.append(value)
-
-    def add_message(self, tag: int, sub: "PbfWriter") -> None:
-        self.add_bytes(tag, sub.tobytes())
-
-    def add_packed_uint32(self, tag: int, values) -> None:
-        payload = b"".join(varint(int(v)) for v in values)
-        self.add_bytes(tag, payload)
-
-    def add_packed_sint64(self, tag: int, values: np.ndarray) -> None:
-        self.add_bytes(tag, pack_sint64_array(np.asarray(values, dtype=np.int64)))
-
-    def tobytes(self) -> bytes:
-        return b"".join(self._parts)
 
 
 class PbfReader:

@@ -8,8 +8,8 @@ from Common-Crawl-style pages, with byte-identical extracted text per url.
 This module IS the locked reference implementation both for tests and for
 the per-url "byte-identical extracted text" invariant — it is deliberately
 regex-based, dependency-free, and deterministic. The Spark layer wraps
-these functions in Arrow-batched ``mapInPandas`` (no per-row Python at the
-DataFrame API surface).
+these functions in an Arrow-batched ``mapInArrow`` stage (no per-row
+Python at the DataFrame API surface).
 """
 
 from __future__ import annotations
@@ -53,7 +53,7 @@ def extract_geometries(html: str) -> list[dict]:
     """
     out: list[dict] = []
     for m in _RE_META_GEO.finditer(html):
-        lat, lon = _parse_latlon(m.group(1), m.group(2))
+        lat, lon = _latlon(m.group(1), m.group(2))
         if lat is not None:
             out.append(
                 {
@@ -63,7 +63,7 @@ def extract_geometries(html: str) -> list[dict]:
                 }
             )
     for m in _RE_META_ICBM.finditer(html):
-        lat, lon = _parse_latlon(m.group(1), m.group(2))
+        lat, lon = _latlon(m.group(1), m.group(2))
         if lat is not None:
             out.append(
                 {
@@ -74,22 +74,20 @@ def extract_geometries(html: str) -> list[dict]:
             )
     for m in _RE_GEOJSON.finditer(html):
         try:
-            doc = json.loads(m.group(1))
-        except ValueError:
+            rows = list(_flatten_geojson(json.loads(m.group(1))))
+        except (ValueError, RecursionError):  # bad JSON, or nested too deep
             continue
-        for geom, props in _flatten_geojson(doc):
+        for geom, props in rows:
             out.append({"kind": "geojson", "geometry": geom, "properties": props})
     for m in _RE_JSONLD.finditer(html):
         try:
             doc = json.loads(m.group(1))
-        except ValueError:
+        except (ValueError, RecursionError):
             continue
         geo = doc.get("geo") if isinstance(doc, dict) else None
         if isinstance(geo, dict) and geo.get("@type") == "GeoCoordinates":
-            try:
-                lat = float(geo["latitude"])
-                lon = float(geo["longitude"])
-            except (KeyError, TypeError, ValueError):
+            lat, lon = _latlon(geo.get("latitude"), geo.get("longitude"))
+            if lat is None:
                 continue
             props = {"name": doc["name"]} if isinstance(doc.get("name"), str) else {}
             out.append(
@@ -102,58 +100,95 @@ def extract_geometries(html: str) -> list[dict]:
     return out
 
 
-def _valid_coords(coords) -> bool:
-    """Finite, non-empty coordinate structure (malformed payloads skip)."""
-    if not isinstance(coords, list) or not coords:
+# nesting depth of a GeoJSON geometry's coordinates around its positions
+_COORD_DEPTH = {
+    "Point": 0,
+    "MultiPoint": 1,
+    "LineString": 1,
+    "MultiLineString": 2,
+    "Polygon": 2,
+    "MultiPolygon": 3,
+}
+# largest accepted GeoJSON coordinate magnitude: quantized at a precision of
+# up to 10**9, a coordinate and the delta between two stay inside the int64
+# the geobuf codec packs
+_MAX_ABS_COORD = 1e9
+
+
+def _valid_coords(coords, depth: int) -> bool:
+    """``depth`` levels of non-empty lists around positions of two or more
+    finite numbers within ``_MAX_ABS_COORD`` (malformed payloads skip)."""
+    if type(coords) is not list or not coords:
         return False
-
-    def walk(c):
-        if isinstance(c, (int, float)):
-            return isinstance(c, (int, float)) and not isinstance(c, bool) and \
-                -1e308 < float(c) < 1e308 and float(c) == float(c)
-        if isinstance(c, list) and c:
-            return all(walk(s) for s in c)
+    if depth:
+        for sub in coords:
+            if not _valid_coords(sub, depth - 1):
+                return False
+        return True
+    if len(coords) < 2:
         return False
+    for c in coords:
+        # JSON numbers are exactly int or float (not bool); NaN fails the range
+        if type(c) not in (int, float) or not -_MAX_ABS_COORD <= c <= _MAX_ABS_COORD:
+            return False
+    return True
 
-    return walk(coords)
 
-
-def _parse_latlon(a: str, b: str):
+def _latlon(lat, lon):
+    """(lat, lon) as floats inside the WGS84 range, else (None, None)."""
     try:
-        lat, lon = float(a.strip()), float(b.strip())
-    except ValueError:
+        lat, lon = float(lat), float(lon)
+    except (TypeError, ValueError, OverflowError):
         return None, None
     if not (-90.0 <= lat <= 90.0 and -180.0 <= lon <= 180.0):
         return None, None
     return lat, lon
 
 
-def _flatten_geojson(doc: dict):
+def _flatten_geojson(doc):
     """GeoJSON document -> [(geometry, properties)] rows.
 
-    GeometryCollections explode to one row per member geometry (the wire
-    geometry struct is flat; collections are rows, not objects — SURVEY
-    §1.4 Spark mapping).
+    A Feature whose ``properties`` is neither an object nor null is
+    skipped, and so is every geometry ``_geometries`` does not yield.
     """
     if not isinstance(doc, dict):
         return
     t = doc.get("type")
     if t == "FeatureCollection":
-        for f in doc.get("features", []):
+        for f in _members(doc, "features"):
             yield from _flatten_geojson(f)
     elif t == "Feature":
-        geom = doc.get("geometry")
-        props = doc.get("properties") or {}
-        if isinstance(geom, dict) and geom.get("type") == "GeometryCollection":
-            for sub in geom.get("geometries", []):
-                for g, _ in _flatten_geojson(sub):
-                    yield g, props
-        elif geom:
-            yield geom, props
-    elif t == "GeometryCollection":
-        for sub in doc.get("geometries", []):
-            yield from _flatten_geojson(sub)
-    elif t in ("Point", "MultiPoint", "LineString", "MultiLineString",
-               "Polygon", "MultiPolygon"):
-        if _valid_coords(doc.get("coordinates")):
-            yield doc, {}
+        props = doc.get("properties")
+        if props is None:
+            props = {}
+        if isinstance(props, dict):
+            for geom in _geometries(doc.get("geometry")):
+                yield geom, props
+    else:
+        for geom in _geometries(doc):
+            yield geom, {}
+
+
+def _geometries(geom):
+    """The well-formed simple geometries of a GeoJSON geometry.
+
+    GeometryCollections explode to their member geometries (the wire
+    geometry struct is flat; collections are rows, not objects — SURVEY
+    §1.4 Spark mapping). A simple geometry needs a known type and
+    coordinates ``_valid_coords`` accepts for it.
+    """
+    if not isinstance(geom, dict):
+        return
+    t = geom.get("type")
+    if t == "GeometryCollection":
+        for sub in _members(geom, "geometries"):
+            yield from _geometries(sub)
+    elif isinstance(t, str) and t in _COORD_DEPTH:
+        if _valid_coords(geom.get("coordinates"), _COORD_DEPTH[t]):
+            yield geom
+
+
+def _members(doc: dict, key: str) -> list:
+    """``doc[key]`` when it is a list, else no members."""
+    members = doc.get(key)
+    return members if isinstance(members, list) else []

@@ -6,13 +6,17 @@ JSON fragments, and the ``custom_properties`` / ``geom_custom_properties``
 maps for feature- and geometry-level custom members. Every conversion
 between that row and a GeoJSON Feature goes through ``_feature_row`` (in)
 and ``_row_features`` (out); the HTML extract loop lives in
-``extract_encode_features``. The geobuf sink and reader reuse them.
+``_extract_encode_batch``. The geobuf sink and reader reuse them.
 
-All heavy work happens inside ``mapInPandas`` generators (Arrow batches in,
+All heavy work happens inside Arrow-batched generators (Arrow batches in,
 Arrow batches out — no per-row Python at the DataFrame boundary, per
-BASELINE.json input_hint). The codec kernels themselves are numpy-vectorized
-(codec/pbf.py); the per-feature message scaffolding is smaller than the
-Arrow transfer cost at this payload size.
+BASELINE.json input_hint). On web-page payloads (mostly Points) the
+per-feature cost is Python work, not Arrow transfer: the encoder's message
+assembly, and a pandas frame of the output plus pyspark's per-element
+conversion of it would cost about half as much again as the encode. So the
+headline stage, ``extract_encode_features``, is a ``mapInArrow`` stage that
+builds its output columns itself; the codec and decode stages, off the
+headline path, are ``mapInPandas`` / ``applyInPandas``.
 """
 
 from __future__ import annotations
@@ -21,6 +25,9 @@ import json
 from typing import Iterator
 
 import pandas as pd
+import pyarrow as pa
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from ..codec import geobuf as gb
 from ..extract.html import extract_geometries
@@ -40,10 +47,6 @@ FEATURES_SCHEMA = (
     "url string, feature_idx int, kind string, lon double, lat double, "
     f"geom {GEOM_STRUCT}, properties map<string,string>{CUSTOM_MAPS}"
 )
-_FEATURES_COLUMNS = [
-    "url", "feature_idx", "kind", "lon", "lat", "geom",
-    "properties", "custom_properties", "geom_custom_properties",
-]
 
 DECODED_SCHEMA = (
     "url string, feature_idx int, precision int, dim int, "
@@ -65,8 +68,7 @@ def _feature_row(feature: dict, customs: bool = True) -> dict:
     """GeoJSON Feature (with a geometry) -> feature-row fields.
 
     ``customs=False`` skips the custom-member scan and leaves both custom
-    maps empty — for features whose extra keys are not wire members (the
-    HTML extractor's ``kind``) or whose reader carries no custom columns.
+    maps empty — for a reader that carries no custom columns.
     """
     geometry = feature["geometry"]
     t, dim, lengths, coords = geojson_to_wire(geometry)
@@ -138,35 +140,83 @@ def extract_encode_features(pages_df, max_precision: int = 10**7):
     a prefilter anchor for lines/polygons). The extracted GeoJSON is
     encoded directly, without a row round trip.
 
-    Chaining two mapInPandas stages spawns two Python workers per task and
-    pays an extra Arrow round trip; the fused stage halves worker count and
-    transfer volume — the difference is ~2x steady-state throughput on the
-    headline pipeline and much cheaper worker warmup on wide executors.
+    One ``mapInArrow`` stage: the pages' Arrow batches go in, and
+    ``_extract_encode_batch`` builds each output column with one
+    ``pyarrow.array`` call from plain Python lists — no pandas frame and
+    no per-element pyspark conversion. Fusing extract and encode keeps one
+    Python worker per task and one Arrow round trip.
     """
-    enc = gb.Encoder(max_precision=max_precision)
-    columns = _FEATURES_COLUMNS + ["geobuf"]
+    ddl = FEATURES_SCHEMA + ", geobuf binary"
+    schema = to_arrow_schema(StructType.fromDDL(ddl))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                text = bytes(html).decode("utf-8", errors="replace")
-                for idx, feat in enumerate(extract_geometries(text)):
-                    row = _feature_row(feat, customs=False)
-                    coords = row["geom"]["coords"]
-                    row.update(url=url, feature_idx=idx, kind=feat["kind"],
-                               lon=coords[0], lat=coords[1])
-                    row["geobuf"] = enc.encode({
-                        "type": "Feature",
-                        "geometry": feat["geometry"],
-                        "properties": feat["properties"],
-                    })
-                    rows.append(row)
-            yield pd.DataFrame(rows, columns=columns)
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        enc = gb.Encoder(max_precision=max_precision)
+        for batch in batches:
+            yield _extract_encode_batch(batch, enc, schema)
 
-    return pages_df.select("url", "html").mapInPandas(
-        gen, FEATURES_SCHEMA + ", geobuf binary"
+    return pages_df.select("url", "html").mapInArrow(gen, ddl)
+
+
+def _extract_encode_batch(batch: pa.RecordBatch, enc: gb.Encoder,
+                          schema: pa.Schema) -> pa.RecordBatch:
+    """One Arrow batch of pages (url, html) -> its feature rows with geobuf
+    blobs, as a record batch of ``schema`` (the Arrow form of
+    ``FEATURES_SCHEMA + ", geobuf binary"``)."""
+    urls, idxs, kinds, lons, lats, blobs = [], [], [], [], [], []
+    types, dims, lengths, coords = [], [], [], []
+    prop_offsets, prop_keys, prop_values = [0], [], []
+    for url, html in zip(batch.column("url").to_pylist(),
+                         batch.column("html").to_pylist()):
+        text = html.decode("utf-8", errors="replace")
+        for idx, feat in enumerate(extract_geometries(text)):
+            geometry, props = feat["geometry"], feat["properties"]
+            t, dim, lens, flat = geojson_to_wire(geometry)
+            urls.append(url)
+            idxs.append(idx)
+            kinds.append(feat["kind"])
+            lons.append(flat[0])
+            lats.append(flat[1])
+            types.append(t)
+            dims.append(dim)
+            lengths.append(lens)
+            coords.append(flat)
+            json_props = _props_to_json_map(props)
+            prop_keys.extend(json_props)
+            prop_values.extend(json_props.values())
+            prop_offsets.append(len(prop_keys))
+            blobs.append(enc.encode(
+                {"type": "Feature", "geometry": geometry, "properties": props}
+            ))
+
+    def column(name: str, values: list) -> pa.Array:
+        return pa.array(values, schema.field(name).type)
+
+    def json_map(name: str, offsets: list, keys: list, values: list) -> pa.MapArray:
+        t = schema.field(name).type
+        return pa.MapArray.from_arrays(
+            pa.array(offsets, pa.int32()), pa.array(keys, t.key_type),
+            pa.array(values, t.item_type), type=t,
+        )
+
+    geom_type = schema.field("geom").type
+    geom = pa.StructArray.from_arrays(
+        [pa.array(values, geom_type.field(i).type)
+         for i, values in enumerate((types, dims, lengths, coords))],
+        fields=list(geom_type),
     )
+    no_customs = [0] * len(prop_offsets)
+    return pa.RecordBatch.from_arrays([
+        column("url", urls),
+        column("feature_idx", idxs),
+        column("kind", kinds),
+        column("lon", lons),
+        column("lat", lats),
+        geom,
+        json_map("properties", prop_offsets, prop_keys, prop_values),
+        json_map("custom_properties", no_customs, [], []),
+        json_map("geom_custom_properties", no_customs, [], []),
+        column("geobuf", blobs),
+    ], schema=schema)
 
 
 def encode_feature_collections(features_df, max_precision: int = 10**7):

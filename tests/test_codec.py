@@ -80,6 +80,22 @@ def test_tie_rounding_case():
     assert gb.round_half_away(-119882812.5, 1.0) == -119882813
 
 
+def test_encoder_rounding_matches_reference_kernel():
+    # the encoder inlines round_half_away in its scalar path and uses the
+    # numpy twin _quantize on long lines; both must round as the reference
+    ties = [0.5, -0.5, 2.5, -2.5, 1.4999999, 119882812.5, -119882812.5]
+    want = [float(gb.round_half_away(c, 1.0)) for c in ties]
+    for c, w in zip(ties, want):
+        point = gb.decode(gb.encode({"type": "Point", "coordinates": [c, -c]},
+                                    max_precision=1))
+        assert point["coordinates"] == [w, -w]
+    for n in (2, 40):  # the scalar loop, then the numpy kernel
+        line = [[c, c] for c in ties] * n
+        back = gb.decode(gb.encode({"type": "LineString", "coordinates": line},
+                                   max_precision=1))["coordinates"]
+        assert back == [[w, w] for w in want] * n
+
+
 # ---------------------------------------------------------------------------
 # fixture corpus round-trips
 # ---------------------------------------------------------------------------
@@ -475,3 +491,24 @@ def test_pbf_decode_printable_walks_real_geobuf():
 
     assert "<malformed>" in to_printable(b"\xff\xff\xff")
     assert to_printable(b"") == ""
+
+
+def test_encoder_golden_bytes_on_generated_pages():
+    """Byte pin of the encoder on the pipeline's feature mix (Points, short
+    LineStrings and Polygons with int properties), independent of Spark."""
+    from geobuf_cpp_spark.extract.html import extract_geometries
+    from geobuf_cpp_spark.sources.pages import generate_pages_batch
+
+    enc = gb.Encoder(max_precision=10**7)
+    digest = hashlib.sha256()
+    n = 0
+    for html in generate_pages_batch(np.arange(0, 2000, dtype=np.int64))["html"]:
+        for f in extract_geometries(bytes(html).decode("utf-8")):
+            blob = enc.encode({"type": "Feature", "geometry": f["geometry"],
+                               "properties": f["properties"]})
+            digest.update(len(blob).to_bytes(4, "little") + blob)
+            n += 1
+    assert n == 1633
+    assert digest.hexdigest() == (
+        "a014727fd5b8f5759fd3ddcc945af29907e7a7664bb6cadb1753a234849d48bd"
+    )

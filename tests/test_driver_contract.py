@@ -46,6 +46,7 @@ TEST_ONLY_ALLOWED = {
     "point_in_wire_polygon": "reference kernel for the PIP refine",
     "cosine_neardup_pairs": "exact reference for the LSH near-dup pairs",
     "hll_estimate_value": "reference estimator for the SQL HLL estimate",
+    "round_half_away": "reference kernel for the encoder's inlined rounding",
     # north-star surfaces (tiles, materialized geobuf layout)
     "rasterize_tiles": "north-star surface: raster tiles",
     "vectorize_raster": "north-star surface: raster to vector",

@@ -108,6 +108,46 @@ def test_geobuf_spark_roundtrip_byte_identical(spark, pages, features):
     assert stats["n"] > 100 and stats["ok"] == stats["n"]
 
 
+def test_extract_encode_stage_schema_empty_batches_and_malformed_pages(spark):
+    """The Arrow stage keeps the feature-row schema, yields zero rows (empty
+    record batches) for pages without geo payloads, and skips a malformed
+    Feature instead of failing the job."""
+    point = ('<script type="application/geo+json">{"type":"Feature","geometry":'
+             '{"type":"Point","coordinates":[13.4,52.5]},"properties":{"n":1}}</script>')
+    circle = ('<script type="application/geo+json">{"type":"Feature","geometry":'
+              '{"type":"Circle","coordinates":[1,2]},"properties":{}}</script>')
+    schema = "url string, html binary"
+    no_geo = spark.createDataFrame(
+        [(f"u{i}", b"<html><p>no geo here</p></html>") for i in range(6)], schema
+    ).repartition(3)
+    out = extract_encode_features(no_geo)
+    assert out.dtypes == [
+        ("url", "string"), ("feature_idx", "int"), ("kind", "string"),
+        ("lon", "double"), ("lat", "double"),
+        ("geom", "struct<type:tinyint,dim:tinyint,lengths:array<int>,"
+                 "coords:array<double>>"),
+        ("properties", "map<string,string>"),
+        ("custom_properties", "map<string,string>"),
+        ("geom_custom_properties", "map<string,string>"),
+        ("geobuf", "binary"),
+    ]
+    assert out.collect() == []
+
+    pages = spark.createDataFrame(
+        [("bad", f"<html>{circle}{point}</html>".encode())], schema
+    )
+    rows = extract_encode_features(pages).collect()
+    assert [(r.url, r.feature_idx, r.kind, r.lon, r.lat, r.properties)
+            for r in rows] == [("bad", 0, "geojson", 13.4, 52.5, {"n": "1"})]
+    assert rows[0].geom.asDict() == {"type": 0, "dim": 2, "lengths": [],
+                                     "coords": [13.4, 52.5]}
+    assert rows[0].custom_properties == {} and rows[0].geom_custom_properties == {}
+    assert gb.decode(bytes(rows[0].geobuf)) == {
+        "type": "Feature", "properties": {"n": 1},
+        "geometry": {"type": "Point", "coordinates": [13.4, 52.5]},
+    }
+
+
 def test_geobuf_blob_decodes_with_pure_python(spark, features):
     rows = encode_features(features).limit(20).collect()
     for r in rows:
