@@ -9,7 +9,10 @@ count; a real cluster submit overrides via spark-submit --conf).
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
 import tempfile
 import weakref
 import zipfile
@@ -68,17 +71,28 @@ def session_memo(spark: SparkSession, key, build, sf_dir: str | None = None):
     return value
 
 
+@functools.cache
+def _process_tmpdir() -> str:
+    """A directory of this process's own, removed at exit."""
+    path = tempfile.mkdtemp(prefix="geobuf_cpp_spark_")
+    atexit.register(shutil.rmtree, path, True)
+    return path
+
+
 def build_pkg_zip(zip_path: str | None = None) -> str:
     """Zip this package for ``spark-submit --py-files`` / ``addPyFile``.
 
     The archive roots at the package name, so ``import geobuf_cpp_spark``
     resolves from the zip alone — no repo checkout needed on executors
-    (or, for a real submit, on the driver either).
+    (or, for a real submit, on the driver either). The default path is
+    per process: executors fetch the shipped path when their first task
+    runs, and Spark fails every Python task if another process has
+    rewritten that file in between.
     """
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     root = os.path.dirname(pkg_dir)
     zip_path = zip_path or os.path.join(
-        tempfile.gettempdir(), "geobuf_cpp_spark_pkg.zip")
+        _process_tmpdir(), "geobuf_cpp_spark_pkg.zip")
     with zipfile.ZipFile(zip_path, "w") as zf:
         for dirpath, _dirnames, filenames in os.walk(pkg_dir):
             if "__pycache__" in dirpath:

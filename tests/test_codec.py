@@ -7,6 +7,7 @@ forms (tests/test_geobuf.py:352-391), wire-layout specifics
 
 import hashlib
 import json
+from pathlib import Path
 
 import numpy as np
 import pytest
@@ -463,7 +464,7 @@ def test_simplify_geojson_recursion_and_cli_flag(tmp_path):
     subprocess.run(
         [sys.executable, "-m", "geobuf_cpp_spark", "json2geobuf",
          str(src), str(pbf), "--simplify", "1.0"],
-        cwd="/root/repo", check=True, capture_output=True)
+        cwd=Path(__file__).resolve().parents[1], check=True, capture_output=True)
     from geobuf_cpp_spark.codec import geobuf as gb
     dec = gb.decode(pbf.read_bytes())
     assert len(dec["features"][0]["geometry"]["coordinates"]) == 4

@@ -6,10 +6,14 @@ Spark master is fixed per JVM."""
 import json
 import subprocess
 import sys
+from pathlib import Path
+
+# `python -c` puts its cwd first on sys.path: the job scripts import the
+# package of the checkout these tests run from
+ROOT = Path(__file__).resolve().parents[1]
 
 JOB = r"""
 import json, sys
-sys.path.insert(0, "/root/repo")
 from geobuf_cpp_spark.session import get_spark
 from geobuf_cpp_spark.sources.pages import pages_dataframe, generate_admin_polygons
 from geobuf_cpp_spark.functions.udfs import extract_encode_features
@@ -36,7 +40,7 @@ spark.stop()
 def _run(cpus: int) -> dict:
     out = subprocess.run(
         [sys.executable, "-c", JOB, str(cpus)],
-        capture_output=True, text=True, timeout=400, cwd="/root/repo",
+        capture_output=True, text=True, timeout=400, cwd=ROOT,
     )
     lines = [l for l in out.stdout.splitlines() if l.startswith("RESULT ")]
     assert lines, out.stderr[-2000:]
@@ -52,7 +56,6 @@ def test_same_results_at_n_and_4n():
 
 JOB_SHUFFLE = r"""
 import json, sys
-sys.path.insert(0, "/root/repo")
 from geobuf_cpp_spark.session import get_spark
 
 cpus = int(sys.argv[1])
@@ -79,10 +82,10 @@ def test_shuffle_operators_same_at_n_and_4n():
     gives the extract->PIP path."""
     out2 = subprocess.run(
         [sys.executable, "-c", JOB_SHUFFLE, "2"],
-        capture_output=True, text=True, timeout=400, cwd="/root/repo")
+        capture_output=True, text=True, timeout=400, cwd=ROOT)
     out8 = subprocess.run(
         [sys.executable, "-c", JOB_SHUFFLE, "8"],
-        capture_output=True, text=True, timeout=400, cwd="/root/repo")
+        capture_output=True, text=True, timeout=400, cwd=ROOT)
     rs = []
     for out in (out2, out8):
         lines = [l for l in out.stdout.splitlines()
@@ -95,7 +98,6 @@ def test_shuffle_operators_same_at_n_and_4n():
 
 JOB_SPATIAL = r"""
 import json, sys
-sys.path.insert(0, "/root/repo")
 from geobuf_cpp_spark.session import get_spark
 import pyspark.sql.functions as F
 
@@ -141,7 +143,7 @@ def test_spatial_and_sketch_round5_ops_same_at_n_and_4n():
     for cpus in ("2", "8"):
         out = subprocess.run(
             [sys.executable, "-c", JOB_SPATIAL, cpus],
-            capture_output=True, text=True, timeout=400, cwd="/root/repo")
+            capture_output=True, text=True, timeout=400, cwd=ROOT)
         lines = [l for l in out.stdout.splitlines()
                  if l.startswith("RESULT ")]
         assert lines, out.stderr[-2000:]
