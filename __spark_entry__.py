@@ -293,7 +293,7 @@ def q_cell_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             sql_cell_parent(sql_cell("lat", "lon", CELL_RES), CELL_RES, ROLLUP_RES)
         ).alias("cell6")
     )
-    return salted_count(pts, ["cell6"], n_salt=16).select(
+    return salted_count(pts, ["cell6"]).select(
         "cell6", F.col("count").alias("n_points")
     )
 
@@ -404,7 +404,7 @@ def q_pip_large(spark: SparkSession, sf_dir: str) -> DataFrame:
     admin_df = spark.createDataFrame(
         admin_pdf.to_dict("records"), schema=ADMIN_SCHEMA)
     return pip_join_large(
-        pts, admin_df, res=PIP_RES, point_keys=("point_id",)
+        pts, admin_df, res=PIP_RES
     ).select("point_id", "admin_id")
 
 
@@ -801,9 +801,6 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TFIDF_K = 5
-
-
 def q_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc top-k salient terms under the exact-integer idf weighting
     (operators/textstats.tfidf_topk) — the retrieval/keyword-extraction
@@ -811,7 +808,7 @@ def q_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geobuf_cpp_spark.operators.textstats import tfidf_topk
 
     _prep(spark, sf_dir, "documents")
-    return tfidf_topk(spark.table("documents"), k=TFIDF_K)
+    return tfidf_topk(spark.table("documents"))
 
 
 
@@ -873,7 +870,7 @@ def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         .toPandas()
         .rename(columns={"q_lon": "lon", "q_lat": "lat"})
     )
-    return knn_broadcast(pts, queries, KNN_K, id_cols=("point_id",)).select(
+    return knn_broadcast(pts, queries, KNN_K).select(
         "query_id", "rank", "point_id", "dist2"
     )
 
@@ -886,8 +883,7 @@ def q_knn_rings(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = P.queries_df(spark, sf_dir).selectExpr(
         "query_id", "q_lat AS lat", "q_lon AS lon"
     )
-    return knn_distributed(pts, queries, KNN_K, res=7, radius=2,
-                           id_cols=("point_id",)).select(
+    return knn_distributed(pts, queries, KNN_K).select(
         "query_id", "rank", "point_id", "dist2"
     )
 
@@ -930,7 +926,7 @@ def q_quality_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _prep(spark, sf_dir, "documents")
     return exact_rank_buckets(
-        spark.table("documents"), "n_chars", "doc_id", n_buckets=10
+        spark.table("documents"), "n_chars", "doc_id"
     ).withColumnRenamed("bucket", "decile")
 
 
@@ -947,8 +943,7 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     updates = spark.sql(
         "SELECT o_custkey AS custkey, o_orderpriority AS segment, "
         "CAST(o_orderdate AS TIMESTAMP) AS ts FROM orders")
-    return merge_upsert(base, updates, ["custkey"], "ts",
-                        tie_cols=["segment"])
+    return merge_upsert(base, updates, ["custkey"], "ts")
 
 
 def q_tile_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -988,7 +983,7 @@ def q_hot_cells_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(sql_cell("lat", "lon", ROLLUP_RES)).alias("cell")
     )
     return (
-        salted_count(pts, ["cell"], n_salt=16)
+        salted_count(pts, ["cell"])
         .select("cell", F.col("count").alias("n_points"))
         .orderBy(F.desc("n_points"), F.asc("cell"))
         .limit(20)
@@ -1154,7 +1149,7 @@ def q_geobuf_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_dir = f"/root/repo/.scratch/geobuf_files_{tag}"
     shutil.rmtree(out_dir, ignore_errors=True)
     manifest = write_geobuf_files(
-        feats, out_dir, res=PIP_RES, prefix_res=3, max_precision=MAX_PRECISION
+        feats, out_dir, res=PIP_RES, max_precision=MAX_PRECISION
     )
     manifest.count()  # materialize the sink (files land on disk)
     back = read_geobuf_dir(spark, out_dir)
@@ -1384,7 +1379,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "+ make_interval(0, 0, 0, 0, CAST(doc_id % 7 AS INT), 0, 0)"
         ),
     )
-    return dedup_batch_twin(docs, ts_col="ts", id_col="doc_id")
+    return dedup_batch_twin(docs)
 
 
 def q_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1427,7 +1422,7 @@ def q_interval_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", "ts", "event_id AS view_event_id"
     )
     return interval_join_batch(
-        clicks, views, "user_id", within_seconds=1800
+        clicks, views, "user_id"
     ).select("event_id", "user_id", "view_event_id")
 
 
@@ -1632,7 +1627,7 @@ def q_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geobuf_cpp_spark.operators.textstats import top_terms
 
     _prep(spark, sf_dir, "documents")
-    return top_terms(spark.table("documents"), k=10)
+    return top_terms(spark.table("documents"))
 
 
 def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1687,7 +1682,7 @@ def q_pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb, qp = _ann_queries(spark, sf_dir)
     n = emb.count()
-    books = pq_train(emb, m=8, k=16)
+    books = pq_train(emb)
     codes = pq_encode(emb, books)
     return pq_topk_rerank(
         codes, emb, books, qp, k=10, n_candidates=max(400, int(n * 0.8))
@@ -1704,7 +1699,7 @@ def q_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     planted = spark.sql(planted_spark_sql())
     return hyperplane_lsh_pairs(
-        planted, threshold=0.7, n_planes=32, n_bands=8
+        planted, threshold=0.7
     ).select("id_a", "id_b")
 
 
@@ -1730,7 +1725,7 @@ def q_ivf_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geobuf_cpp_spark.operators.ann import build_ivf, ivf_topk
 
     planted, qp = _planted_with_queries(spark)
-    centroids, assignments = build_ivf(planted, n_lists=16)
+    centroids, assignments = build_ivf(planted)
     return ivf_topk(
         planted, assignments, centroids, qp, k=10, nprobe=2
     ).select("query_id", "rank", "vec_id")
@@ -1745,10 +1740,7 @@ def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geobuf_cpp_spark.operators.ann import ivfpq_topk
 
     planted, qp = _planted_with_queries(spark)
-    return ivfpq_topk(
-        planted, qp, k=10, n_lists=16, nprobe=2,
-        m=8, kcode=16, n_candidates=50,
-    ).select("query_id", "rank", "vec_id")
+    return ivfpq_topk(planted, qp, k=10).select("query_id", "rank", "vec_id")
 
 
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1758,12 +1750,10 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shared (session memo): `dedup_clusters` takes it as its graph."""
     from geobuf_cpp_spark.operators.dedup import ngram_jaccard_pairs
 
-    _prep(spark, sf_dir, "documents")
     return _shared_df(
         spark, sf_dir, "ngram_pairs",
         lambda: ngram_jaccard_pairs(
-            spark.table("documents"), threshold=MINHASH_THRESHOLD,
-            ds=_shared_shingles(spark, sf_dir)))
+            _shared_shingles(spark, sf_dir), threshold=MINHASH_THRESHOLD))
 
 
 def _shared_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1792,11 +1782,8 @@ def q_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     join."""
     from geobuf_cpp_spark.operators.dedup import prefix_jaccard_pairs
 
-    _prep(spark, sf_dir, "documents")
     return prefix_jaccard_pairs(
-        spark.table("documents"), threshold=MINHASH_THRESHOLD,
-        ds=_shared_shingles(spark, sf_dir)
-    )
+        _shared_shingles(spark, sf_dir), threshold=MINHASH_THRESHOLD)
 
 
 def q_media_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1837,7 +1824,7 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geobuf_cpp_spark.operators.ann import build_ivf, ivf_topk
 
     emb, qp = _ann_queries(spark, sf_dir)
-    centroids, assignments = build_ivf(emb, n_lists=16)
+    centroids, assignments = build_ivf(emb)
     return ivf_topk(emb, assignments, centroids, qp, k=10, nprobe=16).select(
         "query_id", "rank", "vec_id"
     )
@@ -2049,9 +2036,7 @@ def q_snap_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays the identical CASE arithmetic with ``//``."""
     from geobuf_cpp_spark.operators.segments import snap_to_segments
 
-    return snap_to_segments(
-        None, None, SEG_NEAR_RADIUS, SEG_CELL,
-        candidates=_point_seg_cands(spark, sf_dir))
+    return snap_to_segments(_point_seg_cands(spark, sf_dir))
 
 
 def q_trajectory_len(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2256,7 +2241,7 @@ def q_ngram_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     split = F.expr(sql_knuth_hash("doc_id"))
     held = docs.where(split < 429496730)
     train = docs.where(split >= 429496730)
-    return ngram_decontaminate(train, held, n=5).select(
+    return ngram_decontaminate(train, held).select(
         "doc_id", "lang", "n_chars"
     )
 
@@ -2336,7 +2321,7 @@ def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geobuf_cpp_spark.operators.sketches import kmv_distinct, kmv_sketch
 
     sketch = _docs_sketch(spark, sf_dir, kmv_sketch)
-    return kmv_distinct(spark.table("documents"), sketch=sketch)
+    return kmv_distinct(sketch)
 
 
 def q_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2391,7 +2376,7 @@ def q_ams_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geobuf_cpp_spark.operators.sketches import ams_f2, ams_sketch
 
     sk = _docs_sketch(spark, sf_dir, ams_sketch)
-    return ams_f2(spark.table("documents"), sketch=sk)
+    return ams_f2(spark.table("documents"), sk)
 
 
 QSKETCH_VALUE = "CAST(round(value * 100) AS BIGINT)"   # exact cents
@@ -2792,7 +2777,7 @@ def _traj_geo_sql() -> str:
     from geobuf_cpp_spark.operators.range_join import sql_sphere_xyz
     from geobuf_cpp_spark.operators.trajectory import sql_isqrt_exact
 
-    xyz = ", ".join(sql_sphere_xyz("ix", "iy"))
+    xyz = ", ".join(sql_sphere_xyz())
     win = "OVER (PARTITION BY user_id ORDER BY ts, event_id)"
     step = sql_isqrt_exact("d2")
     return (
@@ -3224,10 +3209,8 @@ def q_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     index (operators/dedup.shingle_containment_pairs)."""
     from geobuf_cpp_spark.operators.dedup import shingle_containment_pairs
 
-    _prep(spark, sf_dir, "documents")
     return shingle_containment_pairs(
-        spark.table("documents"), CONT_NUM, CONT_DEN,
-        ds=_shared_shingles(spark, sf_dir))
+        _shared_shingles(spark, sf_dir), CONT_NUM, CONT_DEN)
 
 
 def _containment_sql() -> str:
@@ -3361,8 +3344,8 @@ def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("query_id").orderBy("rank")
     sem = sem.withColumn("rank", F.row_number().over(w)).where(
         F.col("rank") <= 10)
-    lex = token_overlap_topk(spark.table("documents"), 20, 10)
-    return rrf_fuse(sem, lex, 10, RRF_K, RRF_SCALE, max_rank=10)
+    lex = token_overlap_topk(spark.table("documents"), 20)
+    return rrf_fuse(sem, lex, RRF_K, RRF_SCALE)
 
 
 def _hybrid_rrf_sql() -> str:
@@ -3609,8 +3592,7 @@ def q_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geobuf_cpp_spark.operators.curation import temperature_weights
 
     _prep(spark, sf_dir, "documents")
-    return temperature_weights(spark.table("documents"), "source",
-                               TEMP_SCALE)
+    return temperature_weights(spark.table("documents"), TEMP_SCALE)
 
 
 def _temperature_weights_sql() -> str:
@@ -3952,8 +3934,7 @@ def q_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geobuf_cpp_spark.operators.sketches import kmv_overlap
 
     _prep(spark, sf_dir, "documents")
-    return kmv_overlap(spark.table("documents"), "source",
-                       k=KMV_OVERLAP_K)
+    return kmv_overlap(spark.table("documents"), k=KMV_OVERLAP_K)
 
 
 PR_BASE = 10 ** 9   # rank scale (exact integer arithmetic)
@@ -3992,7 +3973,7 @@ def q_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geobuf_cpp_spark.operators.textstats import ngram_repetition
 
     _prep(spark, sf_dir, "documents")
-    return ngram_repetition(spark.table("documents"), sizes=(2, 3))
+    return ngram_repetition(spark.table("documents"))
 
 
 def q_domain_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -286,7 +286,7 @@ def sql_equirect_tile_y(lat_expr: str, z: int) -> str:
 GEOHASH_ALPHABET = "0123456789bcdefghjkmnpqrstuvwxyz"
 
 
-def geohash_of(lat, lon, length: int = 6):
+def geohash_of(lat, lon, length: int):
     """Vectorized standard geohashes (base32, lon bit first).
 
     The textbook successive-bisection encoding is closed-form: with
@@ -324,7 +324,7 @@ def geohash_of(lat, lon, length: int = 6):
     return out
 
 
-def sql_geohash(lat_expr: str, lon_expr: str, length: int = 6) -> str:
+def sql_geohash(lat_expr: str, lon_expr: str, length: int) -> str:
     """geohash_of as portable SQL (evaluates identically in Spark SQL and
     DuckDB): per-character CONCAT of SUBSTR lookups into the alphabet,
     each 5-bit group summed from FLOOR-division parity bits — the same
@@ -369,8 +369,7 @@ HEX_W = 56   # within-row center spacing (odd-row parity shift = w/2 = 28)
 HEX_VY = 48  # row spacing; w < sqrt(3)*vy keeps the 4-candidate set sufficient
 
 
-def hex_candidates_sql(x_col: str, y_col: str,
-                       w: int = HEX_W, vy: int = HEX_VY) -> list[str]:
+def hex_candidates_sql(x_col: str, y_col: str) -> list[str]:
     """SQL for the 4 candidate hex centers (r, c, d2) of a lattice point.
 
     Hexagonal cells are the Voronoi regions of a triangular center
@@ -388,29 +387,30 @@ def hex_candidates_sql(x_col: str, y_col: str,
     and neighbor structure identical to a regular hex grid.)
     Requires x, y >= 0 (the engine's lattice domain).
     """
-    assert w * w < 3 * vy * vy, "4-candidate sufficiency needs w < sqrt(3)*vy"
+    assert HEX_W * HEX_W < 3 * HEX_VY * HEX_VY, \
+        "4-candidate sufficiency needs w < sqrt(3)*vy"
     out = []
     for r_off in (0, 1):
         for c_off in (0, 1):
-            r = f"(({y_col}) div {vy} + {r_off})"
-            sx = f"(({r}) % 2) * {w}"
+            r = f"(({y_col}) div {HEX_VY} + {r_off})"
+            sx = f"(({r}) % 2) * {HEX_W}"
             # column bracketing needs FLOOR division, but the numerator
             # 2x - sx can be negative (odd rows, x < w/2) where Spark's
             # `div` truncates toward zero while DuckDB's `//` floors.
             # Shifting the numerator by +2w (one whole period, subtracted
             # back from c) keeps it positive for every x >= 0, so both
             # engines' operators agree exactly — no divergence zone.
-            c = f"((2 * ({x_col}) - {sx} + {2 * w}) div {2 * w} - 1 + {c_off})"
-            cx2 = f"(2 * ({c}) * {w} + {sx})"
-            cy2 = f"(2 * ({r}) * {vy})"
+            c = (f"((2 * ({x_col}) - {sx} + {2 * HEX_W}) div {2 * HEX_W}"
+                 f" - 1 + {c_off})")
+            cx2 = f"(2 * ({c}) * {HEX_W} + {sx})"
+            cy2 = f"(2 * ({r}) * {HEX_VY})"
             d2 = (f"((2 * ({x_col}) - {cx2}) * (2 * ({x_col}) - {cx2}) + "
                   f"(2 * ({y_col}) - {cy2}) * (2 * ({y_col}) - {cy2}))")
             out.append(f"struct({d2} AS d2, {r} AS hr, {c} AS hc)")
     return out
 
 
-def hex_bin(points, x_col: str = "ix", y_col: str = "iy",
-            id_col: str = "point_id", w: int = HEX_W, vy: int = HEX_VY):
+def hex_bin(points):
     """(id, hr, hc, d2): each point's hexagonal bin, exact integers.
 
     One projection: array_min over the 4 candidate structs picks the
@@ -419,12 +419,12 @@ def hex_bin(points, x_col: str = "ix", y_col: str = "iy",
     """
     from pyspark.sql import functions as F
 
-    cands = ", ".join(hex_candidates_sql(x_col, y_col, w, vy))
+    cands = ", ".join(hex_candidates_sql("ix", "iy"))
     return points.select(
-        id_col,
+        "point_id",
         F.expr(f"array_min(array({cands}))").alias("_b"),
     ).select(
-        id_col,
+        "point_id",
         F.col("_b.hr").alias("hr"),
         F.col("_b.hc").alias("hc"),
         F.col("_b.d2").alias("d2"),

@@ -52,8 +52,7 @@ def hilbert_d(x: np.ndarray, y: np.ndarray, order: int) -> np.ndarray:
 
 
 def hilbert_coarse_ranges(x0: int, x1: int, y0: int, y1: int,
-                          order: int, max_cells: int = 4096,
-                          max_intervals: int = 64) -> list[tuple[int, int]]:
+                          order: int) -> list[tuple[int, int]]:
     """Covering Hilbert-index intervals for the inclusive grid bbox
     [x0, x1] x [y0, y1] — the planning step of a space-filling-curve
     range query (the access path behind Z-order/liquid-clustered
@@ -62,12 +61,12 @@ def hilbert_coarse_ranges(x0: int, x1: int, y0: int, y1: int,
     prune on, instead of a full scan).
 
     The decomposition is hierarchical: pick the finest coarse order
-    ``g`` whose bbox footprint stays within ``max_cells`` coarse cells
+    ``g`` whose bbox footprint stays within 4096 coarse cells
     (driver-side work is bounded by construction — a planet-sized bbox
     plans as cheaply as a city block), Hilbert-index those cells at
     order ``g`` (each is one CONTIGUOUS fine range, because the curve
     visits a quadrant completely before leaving it), sort, and fuse
-    abutting runs. If more than ``max_intervals`` runs survive, the
+    abutting runs. If more than 64 runs survive, the
     smallest inter-run gaps are swallowed — the cover only ever GROWS,
     so pairing it with an exact bbox refine (as ``zone_pruned_read``
     re-applies its predicate) keeps results exact while the scan skips
@@ -81,7 +80,7 @@ def hilbert_coarse_ranges(x0: int, x1: int, y0: int, y1: int,
     g = order
     while g > 0 and (
         ((x1 >> (order - g)) - (x0 >> (order - g)) + 1)
-        * ((y1 >> (order - g)) - (y0 >> (order - g)) + 1) > max_cells
+        * ((y1 >> (order - g)) - (y0 >> (order - g)) + 1) > 4096
     ):
         g -= 1
     if g == 0:
@@ -103,11 +102,11 @@ def hilbert_coarse_ranges(x0: int, x1: int, y0: int, y1: int,
             intervals.append((cur_lo, cur_hi))
             cur_lo, cur_hi = lo, lo + span - 1
     intervals.append((cur_lo, cur_hi))
-    if len(intervals) > max_intervals:
+    if len(intervals) > 64:
         order_by_gap = sorted(
             range(1, len(intervals)),
             key=lambda i: (intervals[i][0] - intervals[i - 1][1], i))
-        drop = set(order_by_gap[: len(intervals) - max_intervals])
+        drop = set(order_by_gap[: len(intervals) - 64])
         fused: list[tuple[int, int]] = []
         for i, iv in enumerate(intervals):
             if i in drop:
@@ -118,9 +117,8 @@ def hilbert_coarse_ranges(x0: int, x1: int, y0: int, y1: int,
     return intervals
 
 
-def sql_hilbert_query(base_sql: str, carry_cols: list[str],
-                      x_col: str, y_col: str, order: int,
-                      out_col: str = "hilbert") -> str:
+def sql_hilbert_query(base_sql: str, carry_cols: list[str], x_col: str,
+                      y_col: str, order: int) -> str:
     """Full WITH-chain SQL computing the Hilbert index per row.
 
     ``base_sql`` must select ``carry_cols`` plus integer grid coords
@@ -158,5 +156,5 @@ def sql_hilbert_query(base_sql: str, carry_cols: list[str],
         step = nxt
     ctes = "), ".join(parts) + ")"
     return (
-        f"WITH {ctes} SELECT {carry}, hd AS {out_col} FROM h{step}"
+        f"WITH {ctes} SELECT {carry}, hd AS hilbert FROM h{step}"
     )

@@ -112,7 +112,10 @@ def _row_features(pdf: pd.DataFrame) -> Iterator[dict]:
         yield feature
 
 
-def encode_features(features_df, max_precision: int = 10**7):
+MAX_PRECISION = 10**7  # Encoder precision of both encode stages
+
+
+def encode_features(features_df):
     """Append a ``geobuf`` binary column — one encoded Feature per row.
 
     Input needs at least (geom, properties); all input columns pass through.
@@ -122,7 +125,7 @@ def encode_features(features_df, max_precision: int = 10**7):
     ) + ", geobuf binary"
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        enc = gb.Encoder(max_precision=max_precision)
+        enc = gb.Encoder(max_precision=MAX_PRECISION)
         for pdf in batches:
             out = pdf.copy()
             out["geobuf"] = [enc.encode(f) for f in _row_features(pdf)]
@@ -131,7 +134,7 @@ def encode_features(features_df, max_precision: int = 10**7):
     return features_df.mapInPandas(gen, out_schema)
 
 
-def extract_encode_features(pages_df, max_precision: int = 10**7):
+def extract_encode_features(pages_df):
     """pages(url, html, ...) -> one row per extracted geo feature, with its
     geobuf blob, in ONE Arrow stage.
 
@@ -150,7 +153,7 @@ def extract_encode_features(pages_df, max_precision: int = 10**7):
     schema = to_arrow_schema(StructType.fromDDL(ddl))
 
     def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        enc = gb.Encoder(max_precision=max_precision)
+        enc = gb.Encoder(max_precision=MAX_PRECISION)
         for batch in batches:
             yield _extract_encode_batch(batch, enc, schema)
 

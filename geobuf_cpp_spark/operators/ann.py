@@ -6,10 +6,10 @@
   per-partition candidates. Shuffle volume is O(partitions * queries * k),
   never O(n) — this is the scale-correct brute-force shape.
 * ``build_ivf`` / ``ivf_topk`` — the scale path: deterministic k-means
-  (seeded init by vec_id, fixed iterations) builds ``n_lists`` centroids;
+  (seeded init by vec_id, fixed iterations) builds 16 centroids;
   vectors are assigned to their nearest list (one shuffle, reusable
   layout); queries probe the ``nprobe`` nearest lists only, so compute and
-  shuffle shrink by ~n_lists/nprobe at equal recall on clustered data.
+  shuffle shrink by ~16/nprobe at equal recall on clustered data.
 * ``pq_train`` / ``pq_encode`` / ``pq_topk[_rerank]`` — the compressed
   path: product-quantized codes (m bytes/vector) + asymmetric-distance
   search, optionally refined by an exact rerank of the candidate pool.
@@ -42,8 +42,7 @@ def _normalize(mat: np.ndarray) -> np.ndarray:
     return mat / norms
 
 
-def cosine_topk(emb_df, queries_pdf: pd.DataFrame, k: int,
-                id_col: str = "vec_id", vec_col: str = "embedding"):
+def cosine_topk(emb_df, queries_pdf: pd.DataFrame, k: int):
     """Exact cosine top-k. ``queries_pdf``: (query_id, vec list[float])."""
     q_ids = queries_pdf["query_id"].to_numpy()
     q_mat = _normalize(_as_matrix(queries_pdf["vec"]))
@@ -57,9 +56,9 @@ def cosine_topk(emb_df, queries_pdf: pd.DataFrame, k: int,
             # resolve to the smaller vec_id, matching the global
             # (sim DESC, vec_id ASC) window — the local cut can never drop
             # a vector the exact answer would keep
-            pdf = pdf.sort_values(id_col)
-            ids = pdf[id_col].to_numpy()
-            mat = _normalize(_as_matrix(pdf[vec_col]))
+            pdf = pdf.sort_values("vec_id")
+            ids = pdf["vec_id"].to_numpy()
+            mat = _normalize(_as_matrix(pdf["embedding"]))
             sims = q_mat @ mat.T  # (n_q, n_vec)
             take = min(k, sims.shape[1])
             idx = np.argsort(-sims, axis=1, kind="stable")[:, :take]
@@ -70,7 +69,7 @@ def cosine_topk(emb_df, queries_pdf: pd.DataFrame, k: int,
             }
             yield pd.DataFrame(rows)
 
-    partials = emb_df.select(id_col, vec_col).mapInPandas(partial, TOPK_SCHEMA)
+    partials = emb_df.select("vec_id", "embedding").mapInPandas(partial, TOPK_SCHEMA)
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
     return (
         partials.withColumn("rank", F.row_number().over(w))
@@ -120,28 +119,24 @@ def cosine_neardup_pairs(emb_df, threshold: float,
     )
 
 
-def cosine_neardup_blocked(emb_df, threshold: float, n_blocks: int = 8,
-                           id_col: str = "vec_id", vec_col: str = "embedding"):
+def cosine_neardup_blocked(emb_df, threshold: float):
     """Distributed EXACT near-duplicate pairs — no driver collect anywhere.
 
     2-D block decomposition of the n x n similarity matrix: each vector
-    hashes to one of ``n_blocks`` blocks and replicates to the n_blocks
+    hashes to one of B = 8 blocks and replicates to the B
     unordered block-pair groups it belongs to (a JVM array explode — the
-    only shuffle, n * n_blocks rows). Group (ka <= kb) holds exactly the
+    only shuffle, n * B rows). Group (ka <= kb) holds exactly the
     vectors of blocks ka and kb (~2n/B rows) and computes one local numpy
     matmul; an unordered pair {x, y} materializes in exactly one group
     (the one keyed by its block multiset), counted once via id_a < id_b
     plus the block-membership mask. Compute stays O(n^2 d) — inherent to
     exact near-dup — but it is spread over B(B+1)/2 independent tasks with
-    per-task memory O((2n/B)^2): size ``n_blocks`` ~ n / rows-per-task so
-    a 1000-executor cluster scales by raising B, never by growing any
-    single task. The driver never sees a vector (contrast
+    per-task memory O((2n/B)^2). The driver never sees a vector (contrast
     ``cosine_neardup_pairs``, the fits-in-memory baseline).
     """
-    B = int(n_blocks)
-    assert B >= 1
+    B = 8
     tagged = emb_df.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v")
+        "vec_id", F.col("embedding").alias("v")
     ).withColumn("blk", F.pmod(F.xxhash64(F.col("vec_id")), F.lit(B)).cast("int"))
     pair_keys = F.array_distinct(
         F.array(
@@ -191,27 +186,25 @@ def cosine_neardup_blocked(emb_df, threshold: float, n_blocks: int = 8,
     )
 
 
-def hyperplane_lsh_pairs(emb_df, threshold: float, n_planes: int = 16,
-                         n_bands: int = 4, seed: int = 42,
-                         max_bucket: int = 256,
-                         id_col: str = "vec_id", vec_col: str = "embedding"):
+def hyperplane_lsh_pairs(emb_df, threshold: float):
     """Scale path for embedding near-dup: random-hyperplane LSH.
 
     Signature bit i = sign(x . h_i) with fixed seeded gaussian hyperplanes;
     collision probability per bit is 1 - angle/pi, so near-duplicates
-    (angle -> 0) collide on whole bands. Bands of ``n_planes / n_bands``
+    (angle -> 0) collide on whole bands. 32 planes in 8 bands of 4
     bits bucket the corpus; candidates meet only inside (band, bucket) —
     the shuffle key is the bucket, never a pair enumeration — and an exact
     cosine verify keeps (id_a < id_b, sim >= threshold). Probabilistic
-    recall (tune n_planes/n_bands per corpus); the exact operators are
+    recall; the exact operators are
     ``cosine_neardup_pairs`` (broadcast) and ``cosine_neardup_blocked``
-    (distributed). The persisted band table (n_bands rows/vector) lives
+    (distributed). The persisted band table (8 rows/vector) lives
     until the session ends or the caller runs
     ``spark.catalog.clearCache()``.
     """
-    rng = np.random.default_rng(seed)
+    n_planes, n_bands = 32, 8
+    rng = np.random.default_rng(42)
     # emb dim discovered from the first row (driver-side, one row)
-    dim = len(emb_df.select(vec_col).first()[0])
+    dim = len(emb_df.select("embedding").first()[0])
     planes = rng.normal(size=(dim, n_planes))
     rpb = n_planes // n_bands
 
@@ -219,8 +212,8 @@ def hyperplane_lsh_pairs(emb_df, threshold: float, n_planes: int = 16,
         for pdf in batches:
             if pdf.empty:
                 continue
-            ids = pdf[id_col].to_numpy()
-            mat = _normalize(_as_matrix(pdf[vec_col]))
+            ids = pdf["vec_id"].to_numpy()
+            mat = _normalize(_as_matrix(pdf["embedding"]))
             bits = (mat @ planes) >= 0                  # (n, n_planes)
             out = []
             for band in range(n_bands):
@@ -237,12 +230,12 @@ def hyperplane_lsh_pairs(emb_df, threshold: float, n_planes: int = 16,
 
     # persisted: the sign-bit stage would otherwise run once per
     # self-join side (n_bands rows per vector — tiny)
-    bands = emb_df.select(id_col, vec_col).mapInPandas(
+    bands = emb_df.select("vec_id", "embedding").mapInPandas(
         sigs, "vec_id long, band int, bucket long"
     ).persist()
     sized = bands.withColumn(
         "bsize", F.count("*").over(Window.partitionBy("band", "bucket"))
-    ).filter(F.col("bsize") <= max_bucket)
+    ).filter(F.col("bsize") <= 256)
     left = sized.select(F.col("vec_id").alias("id_a"), "band", "bucket")
     right = sized.select(F.col("vec_id").alias("id_b"), "band", "bucket")
     cand = (
@@ -251,7 +244,7 @@ def hyperplane_lsh_pairs(emb_df, threshold: float, n_planes: int = 16,
         .select("id_a", "id_b")
         .distinct()
     )
-    vecs = emb_df.select(F.col(id_col).alias("_vid"), F.col(vec_col).alias("_v"))
+    vecs = emb_df.select(F.col("vec_id").alias("_vid"), F.col("embedding").alias("_v"))
     joined = (
         cand.join(vecs.withColumnRenamed("_vid", "id_a").withColumnRenamed("_v", "v_a"), "id_a")
         .join(vecs.withColumnRenamed("_vid", "id_b").withColumnRenamed("_v", "v_b"), "id_b")
@@ -280,9 +273,7 @@ def hyperplane_lsh_pairs(emb_df, threshold: float, n_planes: int = 16,
 # IVF
 # ---------------------------------------------------------------------------
 
-def build_ivf(emb_df, n_lists: int = 16, iters: int = 5,
-              id_col: str = "vec_id", vec_col: str = "embedding",
-              sample: int = 4096):
+def build_ivf(emb_df):
     """Deterministic k-means centroids + (vec_id, list_id) assignment DF.
 
     Init = the ``n_lists`` lowest vec_ids (stable under any partitioning);
@@ -290,15 +281,16 @@ def build_ivf(emb_df, n_lists: int = 16, iters: int = 5,
     need exact k-means). Returns (centroids ndarray, assignments DataFrame);
     the assignment shuffle keyed by list_id is the reusable ANN layout.
     """
+    n_lists = 16
     seed_pdf = (
-        emb_df.select(id_col, vec_col)
-        .orderBy(id_col)
-        .limit(max(n_lists, min(sample, 4096)))
+        emb_df.select("vec_id", "embedding")
+        .orderBy("vec_id")
+        .limit(4096)
         .toPandas()
     )
-    mat = _normalize(_as_matrix(seed_pdf[vec_col]))
+    mat = _normalize(_as_matrix(seed_pdf["embedding"]))
     centroids = mat[:n_lists].copy()
-    for _ in range(iters):
+    for _ in range(5):
         assign = np.argmax(mat @ centroids.T, axis=1)
         for c in range(n_lists):
             members = mat[assign == c]
@@ -310,21 +302,20 @@ def build_ivf(emb_df, n_lists: int = 16, iters: int = 5,
         for pdf in batches:
             if pdf.empty:
                 continue
-            m = _normalize(_as_matrix(pdf[vec_col]))
+            m = _normalize(_as_matrix(pdf["embedding"]))
             lists = np.argmax(m @ centroids.T, axis=1)
             yield pd.DataFrame(
-                {"vec_id": pdf[id_col].to_numpy(), "list_id": lists.astype(np.int32)}
+                {"vec_id": pdf["vec_id"].to_numpy(), "list_id": lists.astype(np.int32)}
             )
 
-    assignments = emb_df.select(id_col, vec_col).mapInPandas(
+    assignments = emb_df.select("vec_id", "embedding").mapInPandas(
         assign_lists, "vec_id long, list_id int"
     )
     return centroids, assignments
 
 
 def ivf_topk(emb_df, assignments, centroids: np.ndarray,
-             queries_pdf: pd.DataFrame, k: int, nprobe: int = 4,
-             id_col: str = "vec_id", vec_col: str = "embedding"):
+             queries_pdf: pd.DataFrame, k: int, nprobe: int = 4):
     """Probe the nprobe nearest lists per query, exact rerank inside them."""
     q_mat = _normalize(_as_matrix(queries_pdf["vec"]))
     probe = np.argsort(-(q_mat @ centroids.T), axis=1)[:, :nprobe]
@@ -339,9 +330,9 @@ def ivf_topk(emb_df, assignments, centroids: np.ndarray,
     )
     # restrict the table to probed lists, then brute-force within
     probed_vecs = (
-        emb_df.join(assignments, id_col)
+        emb_df.join(assignments, "vec_id")
         .join(F.broadcast(probe_df.select("list_id").distinct()), "list_id")
-        .select(id_col, vec_col, "list_id")
+        .select("vec_id", "embedding", "list_id")
     )
     q_ids = queries_pdf["query_id"].to_numpy()
     # (n_queries, n_lists) boolean probe mask — the batch filter below is a
@@ -353,10 +344,10 @@ def ivf_topk(emb_df, assignments, centroids: np.ndarray,
         for pdf in batches:
             if pdf.empty:
                 continue
-            pdf = pdf.sort_values(id_col)  # stable (sim, vec_id) ties
-            ids = pdf[id_col].to_numpy()
+            pdf = pdf.sort_values("vec_id")  # stable (sim, vec_id) ties
+            ids = pdf["vec_id"].to_numpy()
             lists = pdf["list_id"].to_numpy()
-            mat = _normalize(_as_matrix(pdf[vec_col]))
+            mat = _normalize(_as_matrix(pdf["embedding"]))
             sims = q_mat @ mat.T                      # (n_q, n_vec)
             sims = np.where(probe_mask[:, lists], sims, -np.inf)
             take = min(k, sims.shape[1])
@@ -385,9 +376,7 @@ def ivf_topk(emb_df, assignments, centroids: np.ndarray,
 # Product quantization (PQ): the compressed-vector scale path
 # ---------------------------------------------------------------------------
 
-def pq_train(emb_df, m: int = 8, k: int = 16, sample: int = 2048,
-             iters: int = 8, id_col: str = "vec_id",
-             vec_col: str = "embedding") -> np.ndarray:
+def pq_train(emb_df) -> np.ndarray:
     """Train (m, k, d/m) PQ codebooks on a deterministic sample.
 
     At 100 TB the raw float32 vectors dominate storage and shuffle bytes
@@ -399,14 +388,14 @@ def pq_train(emb_df, m: int = 8, k: int = 16, sample: int = 2048,
     """
     # codes are stored as array<tinyint> (int8): k above 128 would wrap
     # negative and pq_topk's codebook gather would silently read wrong rows
-    assert 1 <= k <= 128, f"PQ codebook size k={k} must be in [1, 128]"
+    m, k = 8, 16
     pdf = (
-        emb_df.select(id_col, vec_col).orderBy(id_col)
-        .limit(max(sample, k)).toPandas()
+        emb_df.select("vec_id", "embedding").orderBy("vec_id")
+        .limit(2048).toPandas()
     )
     # unit-normalize: L2 on the unit sphere is monotone with cosine, so
     # PQ rankings line up with the cosine operators
-    mat = _normalize(_as_matrix(pdf[vec_col]))
+    mat = _normalize(_as_matrix(pdf["embedding"]))
     d = mat.shape[1]
     assert d % m == 0, f"dim {d} not divisible by m={m}"
     dsub = d // m
@@ -414,7 +403,7 @@ def pq_train(emb_df, m: int = 8, k: int = 16, sample: int = 2048,
     for j in range(m):
         sub = mat[:, j * dsub : (j + 1) * dsub]
         cent = sub[:k].copy()
-        for _ in range(iters):
+        for _ in range(8):
             d2 = ((sub[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
             assign = np.argmin(d2, axis=1)
             for c in range(k):
@@ -425,8 +414,7 @@ def pq_train(emb_df, m: int = 8, k: int = 16, sample: int = 2048,
     return books
 
 
-def pq_encode(emb_df, codebooks: np.ndarray,
-              id_col: str = "vec_id", vec_col: str = "embedding"):
+def pq_encode(emb_df, codebooks: np.ndarray):
     """(vec_id, codes array<tinyint>) — one Arrow pass, argmin per
     subspace; the codes table is the PERSISTENT ANN artifact."""
     m, k, dsub = codebooks.shape
@@ -436,7 +424,7 @@ def pq_encode(emb_df, codebooks: np.ndarray,
         for pdf in batches:
             if pdf.empty:
                 continue
-            mat = _normalize(_as_matrix(pdf[vec_col]))
+            mat = _normalize(_as_matrix(pdf["embedding"]))
             codes = np.empty((len(pdf), m), dtype=np.int8)
             for j in range(m):
                 sub = mat[:, j * dsub : (j + 1) * dsub]
@@ -444,12 +432,12 @@ def pq_encode(emb_df, codebooks: np.ndarray,
                 codes[:, j] = np.argmin(d2, axis=1).astype(np.int8)
             yield pd.DataFrame(
                 {
-                    "vec_id": pdf[id_col].to_numpy(),
+                    "vec_id": pdf["vec_id"].to_numpy(),
                     "codes": [c.tolist() for c in codes],
                 }
             )
 
-    return emb_df.select(id_col, vec_col).mapInPandas(
+    return emb_df.select("vec_id", "embedding").mapInPandas(
         enc, "vec_id long, codes array<tinyint>"
     )
 
@@ -497,30 +485,27 @@ def pq_topk(codes_df, codebooks: np.ndarray, queries_pdf: pd.DataFrame,
     )
 
 
-def ivfpq_topk(emb_df, queries_pdf: pd.DataFrame, k: int,
-               n_lists: int = 16, nprobe: int = 2,
-               m: int = 8, kcode: int = 16, n_candidates: int = 50,
-               id_col: str = "vec_id", vec_col: str = "embedding"):
+def ivfpq_topk(emb_df, queries_pdf: pd.DataFrame, k: int):
     """IVF-PQ with exact rerank — the canonical 100 TB ANN configuration.
 
     Composes the two pruning axes: the IVF coarse quantizer restricts the
-    scan to ``nprobe / n_lists`` of the corpus (rows), PQ codes shrink what
-    that scan reads to ``m`` bytes per vector (bytes), ADC proposes
-    ``n_candidates`` per query, and a broadcast-id join reranks the
+    scan to 2 of the 16 lists of the corpus (rows), PQ codes shrink what
+    that scan reads to m = 8 bytes per vector (bytes), ADC proposes
+    50 candidates per query, and a broadcast-id join reranks the
     candidates against raw vectors — exactly FAISS's IVFPQ + refine, as a
     composition of DataFrame ops. Per-batch the probe filter is the same
     (queries x lists) boolean mask as ``ivf_topk``; no per-row Python.
-    On clustered corpora with cluster size >= k and nprobe covering the
-    true cluster, the result EQUALS exact brute force (gated against the
+    On clustered corpora with cluster size >= k and the 2 probed lists covering
+    the true cluster, the result EQUALS exact brute force (gated against the
     exact SQL top-k on the planted table).
     """
-    centroids, assignments = build_ivf(emb_df, n_lists=n_lists,
-                                       id_col=id_col, vec_col=vec_col)
-    books = pq_train(emb_df, m=m, k=kcode, id_col=id_col, vec_col=vec_col)
-    codes = pq_encode(emb_df, books, id_col=id_col, vec_col=vec_col)
+    centroids, assignments = build_ivf(emb_df)
+    books = pq_train(emb_df)
+    codes = pq_encode(emb_df, books)
 
     q_ids = queries_pdf["query_id"].to_numpy()
     q_mat = _normalize(_as_matrix(queries_pdf["vec"]))
+    nprobe, n_candidates = 2, 50
     probe = np.argsort(-(q_mat @ centroids.T), axis=1)[:, :nprobe]
     probe_mask = np.zeros((len(q_ids), centroids.shape[0]), dtype=bool)
     probe_mask[np.arange(len(q_ids))[:, None], probe] = True
@@ -573,7 +558,7 @@ def ivfpq_topk(emb_df, queries_pdf: pd.DataFrame, k: int,
         .filter(F.col("rank") <= n_candidates)
         .select("query_id", "vec_id")
     ).persist()
-    return _exact_rerank(cand, emb_df, queries_pdf, k, id_col, vec_col)
+    return _exact_rerank(cand, emb_df, queries_pdf, k)
 
 
 def _adc_tables(codebooks: np.ndarray, q_mat: np.ndarray) -> np.ndarray:
@@ -588,19 +573,16 @@ def _adc_tables(codebooks: np.ndarray, q_mat: np.ndarray) -> np.ndarray:
     return tables
 
 
-def _exact_rerank(cand, emb_df, queries_pdf: pd.DataFrame, k: int,
-                  id_col: str, vec_col: str):
+def _exact_rerank(cand, emb_df, queries_pdf: pd.DataFrame, k: int):
     """Exact cosine rerank of a (query_id, vec_id) candidate pool.
 
     The Q x C candidate ids broadcast into the vectors table (only the
     candidates' raw vectors are ever read back), then one Arrow pass
     scores and a window takes the final top-k. Shared by pq_topk_rerank
-    and ivfpq_topk; ``id_col`` normalizes to vec_id so the join key
-    resolves for any input schema.
+    and ivfpq_topk.
     """
-    cand_vecs = emb_df.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col)
-    ).join(F.broadcast(cand.select("vec_id").distinct()), "vec_id")
+    cand_vecs = emb_df.select("vec_id", "embedding").join(
+        F.broadcast(cand.select("vec_id").distinct()), "vec_id")
     pairs = cand.join(cand_vecs, "vec_id")
     q_ids = queries_pdf["query_id"].to_numpy()
     q_mat = _normalize(_as_matrix(queries_pdf["vec"]))
@@ -610,7 +592,7 @@ def _exact_rerank(cand, emb_df, queries_pdf: pd.DataFrame, k: int,
         for pdf in batches:
             if pdf.empty:
                 continue
-            mat = _normalize(_as_matrix(pdf[vec_col]))
+            mat = _normalize(_as_matrix(pdf["embedding"]))
             qi = np.array([q_index[int(q)] for q in pdf["query_id"]])
             sim = (q_mat[qi] * mat).sum(axis=1)
             yield pd.DataFrame(
@@ -631,9 +613,7 @@ def _exact_rerank(cand, emb_df, queries_pdf: pd.DataFrame, k: int,
 
 
 def pq_topk_rerank(codes_df, emb_df, codebooks: np.ndarray,
-                   queries_pdf: pd.DataFrame, k: int,
-                   n_candidates: int = 50,
-                   id_col: str = "vec_id", vec_col: str = "embedding"):
+                   queries_pdf: pd.DataFrame, k: int, n_candidates: int):
     """PQ candidates + exact rerank (the FAISS refine pattern).
 
     ADC over the m-byte codes proposes ``n_candidates`` per query —
@@ -647,12 +627,10 @@ def pq_topk_rerank(codes_df, emb_df, codebooks: np.ndarray,
     cand = pq_topk(codes_df, codebooks, queries_pdf, k=n_candidates).select(
         "query_id", "vec_id"
     )
-    return _exact_rerank(cand, emb_df, queries_pdf, k, id_col, vec_col)
+    return _exact_rerank(cand, emb_df, queries_pdf, k)
 
 
-def kmeans_lite(emb_df, k: int = 8, rounds: int = 2,
-                scale: int = 1 << 20, id_col: str = "vec_id",
-                vec_col: str = "embedding"):
+def kmeans_lite(emb_df, k: int, rounds: int, scale: int):
     """Fixed-round Lloyd's k-means in EXACT integer arithmetic — the
     oracle-gateable twin of `build_ivf`'s float trainer (whose numpy
     reductions cannot hash-match another engine).
@@ -677,8 +655,8 @@ def kmeans_lite(emb_df, k: int = 8, rounds: int = 2,
     work is Catalyst planning."""
     q = (
         emb_df.select(
-            F.col(id_col).alias("vid"),
-            F.posexplode(vec_col).alias("dim", "v"),
+            F.col("vec_id").alias("vid"),
+            F.posexplode("embedding").alias("dim", "v"),
         )
         .select(
             "vid", "dim",
@@ -723,32 +701,27 @@ def kmeans_lite(emb_df, k: int = 8, rounds: int = 2,
         F.col("dim").cast("int").alias("dim"), "n", "qsum")
 
 
-def rrf_fuse(rank_a, rank_b, k_out: int = 10, k_const: int = 60,
-             scale: int | None = None, max_rank: int = 20):
+def rrf_fuse(rank_a, rank_b, k_const: int, scale: int):
     """Reciprocal-rank fusion of two retrieval rankings — the standard
     hybrid-search combiner (Cormack et al., SIGIR'09): fused score
     sum_i 1/(K + rank_i), items absent from a list contribute 0.
 
-    Exact-integer form: with ranks in 1..k and K fixed, every
-    denominator lies in {K+1 .. K+k}; multiplying through by
-    scale = lcm(K+1 .. K+k) turns each reciprocal into an exact BIGINT
-    (scale div (K+r)) — the fused ordering is EXACTLY the rational RRF
-    ordering, no float summation anywhere, so both engines agree
-    bit-for-bit.
+    Exact-integer form: with ranks in 1..10 and K fixed, every
+    denominator lies in {K+1 .. K+10}; multiplying through by a common
+    multiple ``scale`` of them (lcm(K+1 .. K+10)) turns each reciprocal
+    into an exact BIGINT (scale div (K+r)) — the fused ordering is
+    EXACTLY the rational RRF ordering, no float summation anywhere, so
+    both engines agree bit-for-bit.
 
     Inputs are (query_id, rank, vec_id) frames. Plan: one full outer
     equi-join on (query_id, vec_id) — both sides are top-k lists, so
     the join is O(queries * k), then a per-query window over <= 2k
     rows. Corpus-scale cost lives in the upstream rankers, not here.
 
-    Returns (query_id, rank, vec_id, rrf_score) with rank <= k_out by
+    Returns (query_id, rank, vec_id, rrf_score) with rank <= 10 by
     (score DESC, vec_id ASC).
     """
-    import math
-
-    dens = [k_const + r for r in range(1, int(max_rank) + 1)]
-    if scale is None:
-        scale = math.lcm(*dens)
+    dens = [k_const + r for r in range(1, 11)]
     assert all(scale % d == 0 for d in dens), \
         "scale must be a common multiple of every K+rank denominator"
     a = rank_a.select("query_id", F.col("rank").alias("ra"), "vec_id")
@@ -766,7 +739,7 @@ def rrf_fuse(rank_a, rank_b, k_out: int = 10, k_const: int = 60,
         F.desc("rrf_score"), F.asc("vec_id"))
     return (
         fused.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k_out)
+        .filter(F.col("rank") <= 10)
         .select("query_id", F.col("rank").cast("int").alias("rank"),
                 "vec_id", "rrf_score")
     )

@@ -22,9 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def token_windows(docs_df: DataFrame, size: int = 8, stride: int = 4,
-                  id_col: str = "doc_id", text_col: str = "text",
-                  ) -> DataFrame:
+def token_windows(docs_df: DataFrame, size: int, stride: int) -> DataFrame:
     """(doc_id, window_id, n_tokens, text_md5) per overlapping window.
 
     Window w covers token positions [w*stride, w*stride + size); every
@@ -34,8 +32,8 @@ def token_windows(docs_df: DataFrame, size: int = 8, stride: int = 4,
     """
     assert 0 < stride <= size, "need 0 < stride <= size"
     toks = docs_df.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(F.split(F.trim(F.col(text_col)), " "))
+        "doc_id",
+        F.posexplode(F.split(F.trim(F.col("text")), " "))
         .alias("pos", "tok"),
     ).filter(F.col("tok") != "")
     # windows containing position p: w in [ceil((p-size+1)/stride), p/stride]

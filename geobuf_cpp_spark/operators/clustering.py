@@ -37,14 +37,13 @@ from geobuf_cpp_spark.operators.dedup import dedup_clusters
 _FWD_OFFSETS = ((0, 1), (1, -1), (1, 0), (1, 1))
 
 
-def dense_cells(points_df: DataFrame, res: int, min_pts: int,
-                lat_col: str = "lat", lon_col: str = "lon") -> DataFrame:
+def dense_cells(points_df: DataFrame, res: int, min_pts: int) -> DataFrame:
     """Aggregate points onto the grid and keep cells with >= min_pts.
 
     One map-side-combined shuffle on the cell id; everything below the
     density threshold is noise and never reaches the clustering step.
     """
-    cell = F.expr(sql_cell(lat_col, lon_col, res))
+    cell = F.expr(sql_cell("lat", "lon", res))
     return (
         points_df.groupBy(cell.alias("cell"))
         .agg(F.count("*").alias("n_points"))
@@ -136,8 +135,7 @@ def _driver_union_find(cells, res: int):
     return [(int(c), int(ids[r])) for c, r in zip(ids, roots)]
 
 
-def grid_cluster(points_df: DataFrame, res: int, min_pts: int,
-                 lat_col: str = "lat", lon_col: str = "lon") -> DataFrame:
+def grid_cluster(points_df: DataFrame, res: int, min_pts: int) -> DataFrame:
     """DBSCAN-lite: dense cells -> 8-neighbor components -> cluster ids.
 
     Returns (cell, n_points, cluster_id) for every dense cell;
@@ -151,7 +149,7 @@ def grid_cluster(points_df: DataFrame, res: int, min_pts: int,
     pointer-jumping loop shared with fuzzy dedup. Both paths produce
     identical labels (pytest-asserted).
     """
-    dense = dense_cells(points_df, res, min_pts, lat_col, lon_col)
+    dense = dense_cells(points_df, res, min_pts)
     dense = dense.persist()
     if (1 << (2 * res)) <= GRID_UF_MAX_CELLS:
         cells = [r["cell"] for r in dense.select("cell").collect()]
@@ -164,7 +162,7 @@ def grid_cluster(points_df: DataFrame, res: int, min_pts: int,
         )
     edges = _neighbor_edges(dense, res)
     labels = dedup_clusters(dense.withColumnRenamed("cell", "doc_id"),
-                            edges, id_col="doc_id")
+                            edges)
     out = (
         dense.join(
             labels.withColumnRenamed("doc_id", "cell"), "cell", "inner"

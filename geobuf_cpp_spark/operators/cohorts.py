@@ -22,34 +22,27 @@ from pyspark.sql import DataFrame, Window, functions as F
 WEEK_S = 7 * 24 * 3600
 
 
-def cohort_retention(events: DataFrame, entity_col: str = "user_id",
-                     ts_col: str = "ts", max_k: int | None = None) -> DataFrame:
+def cohort_retention(events: DataFrame) -> DataFrame:
     """(cohort_week, k, n_users): users of cohort_week active k weeks on.
 
     k = 0 rows give cohort sizes (every user is active in their first
     week by construction).
     """
     weeks = events.select(
-        F.col(entity_col).alias("entity"),
-        F.floor(F.unix_timestamp(ts_col) / WEEK_S).cast("long").alias("week"),
+        F.col("user_id").alias("entity"),
+        F.floor(F.unix_timestamp("ts") / WEEK_S).cast("long").alias("week"),
     ).distinct()
     first = weeks.groupBy("entity").agg(F.min("week").alias("cohort_week"))
     joined = weeks.join(first, "entity").select(
         "entity", "cohort_week",
         (F.col("week") - F.col("cohort_week")).alias("k"),
     )
-    if max_k is not None:
-        joined = joined.where(F.col("k") <= int(max_k))
     return joined.groupBy("cohort_week", "k").agg(
         F.count("*").cast("long").alias("n_users")
     )
 
 
-def markov_transitions(events_df: DataFrame,
-                       entity_col: str = "user_id",
-                       state_col: str = "event_type",
-                       ts_col: str = "ts",
-                       tie_col: str = "event_id") -> DataFrame:
+def markov_transitions(events_df: DataFrame) -> DataFrame:
     """First-order Markov transition counts over per-entity event
     streams — the behavioral-analytics rollup ("after a click, what
     happens next?") and the `od_matrix` shape applied to states instead
@@ -70,10 +63,10 @@ def markov_transitions(events_df: DataFrame,
     the totals."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy(entity_col).orderBy(ts_col, tie_col)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     t = (
-        events_df.select(entity_col, ts_col, tie_col,
-                         F.col(state_col).alias("to_state"))
+        events_df.select("user_id", "ts", "event_id",
+                         F.col("event_type").alias("to_state"))
         .withColumn("from_state", F.lag("to_state").over(w))
         .filter(F.col("from_state").isNotNull())
     )
@@ -85,9 +78,7 @@ def markov_transitions(events_df: DataFrame,
         "from_state", "to_state", "n_transitions", "from_total")
 
 
-def cusum_changepoint(events_df: DataFrame,
-                      group_col: str = "event_type",
-                      ts_col: str = "ts") -> DataFrame:
+def cusum_changepoint(events_df: DataFrame) -> DataFrame:
     """Per-group CUSUM change-point scan over hourly counts, exact
     integers end to end — the drift detector a data-quality dashboard
     runs per source/event stream (where did the rate break?).
@@ -106,23 +97,23 @@ def cusum_changepoint(events_df: DataFrame,
     argmax needs no second window pass.
     """
     hours = events_df.select(
-        group_col,
+        "event_type",
         # integer div on positive epochs: Spark `div` == DuckDB `//`
-        F.expr(f"unix_timestamp({ts_col}) div 3600").alias("hour"),
-    ).groupBy(group_col, "hour").agg(F.count("*").alias("c"))
-    tot = hours.groupBy(group_col).agg(
+        F.expr("unix_timestamp(ts) div 3600").alias("hour"),
+    ).groupBy("event_type", "hour").agg(F.count("*").alias("c"))
+    tot = hours.groupBy("event_type").agg(
         F.sum("c").alias("total"),
         F.count("*").alias("n_hours"),
     )
-    w = (Window.partitionBy(group_col).orderBy("hour")
+    w = (Window.partitionBy("event_type").orderBy("hour")
          .rowsBetween(Window.unboundedPreceding, 0))
     s = (
-        hours.join(tot, group_col)
+        hours.join(tot, "event_type")
         .withColumn(
             "s", F.sum(F.col("c") * F.col("n_hours") - F.col("total"))
             .over(w))
     )
-    best = s.groupBy(group_col, "n_hours", "total").agg(
+    best = s.groupBy("event_type", "n_hours", "total").agg(
         F.max(F.struct(
             F.abs("s").alias("a"),
             (-F.col("hour")).alias("nh"),
@@ -130,7 +121,7 @@ def cusum_changepoint(events_df: DataFrame,
         )).alias("m")
     )
     return best.select(
-        group_col,
+        "event_type",
         F.col("n_hours").cast("long").alias("n_hours"),
         F.col("total").cast("long").alias("total"),
         (-F.col("m.nh")).cast("long").alias("peak_hour"),
@@ -139,10 +130,7 @@ def cusum_changepoint(events_df: DataFrame,
 
 
 def session_paths(events_df: DataFrame, gap_seconds: int,
-                  min_sessions: int = 2,
-                  entity_col: str = "user_id", ts_col: str = "ts",
-                  seq_col: str = "event_id",
-                  step_col: str = "event_type") -> DataFrame:
+                  min_sessions: int) -> DataFrame:
     """Top behavioral paths: the ordered event-type SEQUENCE of each
     gap-timeout session, counted across sessions — the product-analytics
     "what do users actually do" query (funnels assert a path; this
@@ -167,11 +155,11 @@ def session_paths(events_df: DataFrame, gap_seconds: int,
 
     w = Window.partitionBy("entity").orderBy("e", "seq")
     base = events_df.select(
-        F.col(entity_col).alias("entity"),
-        F.col(seq_col).alias("seq"),
-        F.floor(F.unix_timestamp(ts_col).cast("double")).cast("long")
+        F.col("user_id").alias("entity"),
+        F.col("event_id").alias("seq"),
+        F.floor(F.unix_timestamp("ts").cast("double")).cast("long")
         .alias("e"),
-        F.col(step_col).alias("step"),
+        F.col("event_type").alias("step"),
     )
     flagged = base.withColumn(
         "new_sess",

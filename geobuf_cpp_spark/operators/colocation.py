@@ -38,9 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def colocation_pairs(pings: DataFrame, radius: int, tau: int,
-                     entity_col: str = "user_id", ts_col: str = "ts",
-                     x_col: str = "ix", y_col: str = "iy") -> DataFrame:
+def colocation_pairs(pings: DataFrame, radius: int, tau: int) -> DataFrame:
     """Contact counts per unordered entity pair.
 
     Returns (user_a, user_b, n_contacts): user_a < user_b, n_contacts =
@@ -50,11 +48,11 @@ def colocation_pairs(pings: DataFrame, radius: int, tau: int,
     """
     r, t = int(radius), int(tau)
     base = pings.select(
-        F.col(entity_col).alias("u"),
-        F.floor(F.unix_timestamp(ts_col).cast("double")).cast("long")
+        F.col("user_id").alias("u"),
+        F.floor(F.unix_timestamp("ts").cast("double")).cast("long")
         .alias("e"),
-        F.col(x_col).cast("long").alias("x"),
-        F.col(y_col).cast("long").alias("y"),
+        F.col("ix").cast("long").alias("x"),
+        F.col("iy").cast("long").alias("y"),
     )
     # home block (build side): floor-div by the doubled window. Coords
     # and epochs are non-negative here, so Spark `div` == floor.

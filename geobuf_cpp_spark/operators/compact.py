@@ -25,8 +25,7 @@ from pyspark.sql import functions as F
 from ..functions.cells import sql_cell_parent
 
 
-def compact_cover(cover_df, res: int, min_res: int,
-                  id_col: str = "admin_id", cell_col: str = "cell"):
+def compact_cover(cover_df, res: int, min_res: int):
     """(id, res, cell) minimal cover from a single-resolution one.
 
     ``cover_df`` holds (id, cell) at resolution ``res`` with DISTINCT
@@ -34,23 +33,23 @@ def compact_cover(cover_df, res: int, min_res: int,
     """
     assert res > min_res >= 0
     out = None
-    cur = cover_df.select(id_col, F.col(cell_col).alias("cell"))
+    cur = cover_df.select("admin_id", "cell")
     for r in range(res, min_res, -1):
         d = cur.withColumn(
             "parent", F.expr(sql_cell_parent("cell", r, r - 1))
         ).withColumn(
-            "sib", F.count("*").over(Window.partitionBy(id_col, "parent"))
+            "sib", F.count("*").over(Window.partitionBy("admin_id", "parent"))
         )
         keep = d.filter(F.col("sib") < 4).select(
-            id_col, F.lit(r).cast("long").alias("res"), "cell"
+            "admin_id", F.lit(r).cast("long").alias("res"), "cell"
         )
         out = keep if out is None else out.unionByName(keep)
         cur = (
             d.filter(F.col("sib") == 4)
-            .select(id_col, F.col("parent").alias("cell"))
-            .dropDuplicates([id_col, "cell"])
+            .select("admin_id", F.col("parent").alias("cell"))
+            .dropDuplicates(["admin_id", "cell"])
         )
     last = cur.select(
-        id_col, F.lit(min_res).cast("long").alias("res"), "cell"
+        "admin_id", F.lit(min_res).cast("long").alias("res"), "cell"
     )
     return out.unionByName(last) if out is not None else last

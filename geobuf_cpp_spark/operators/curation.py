@@ -46,8 +46,7 @@ def stratum_threshold(rate: float) -> int:
 
 
 def sql_stratified_keep(id_col: str, stratum_col: str,
-                        rates: dict[str, float],
-                        default_rate: float = 0.0) -> str:
+                        rates: dict[str, float]) -> str:
     """Portable SQL predicate: keep row iff hash(id) < threshold(stratum).
 
     Built once, executed verbatim by Spark and the DuckDB oracle.
@@ -56,22 +55,18 @@ def sql_stratified_keep(id_col: str, stratum_col: str,
         f"WHEN '{k}' THEN {stratum_threshold(v)}" for k, v in rates.items()
     )
     thr = (f"CASE {stratum_col} {cases} "
-           f"ELSE {stratum_threshold(default_rate)} END")
+           "ELSE 0 END")
     return f"{sql_knuth_hash(id_col)} < {thr}"
 
 
-def stratified_sample(df: DataFrame, rates: dict[str, float],
-                      id_col: str = "doc_id", stratum_col: str = "lang",
-                      default_rate: float = 0.0) -> DataFrame:
+def stratified_sample(df: DataFrame, rates: dict[str, float]) -> DataFrame:
     """Keep each stratum at its target rate, deterministically."""
     return df.where(
-        F.expr(sql_stratified_keep(id_col, stratum_col, rates, default_rate))
+        F.expr(sql_stratified_keep("doc_id", "lang", rates))
     )
 
 
-def mixture_interleave(df: DataFrame, weights: dict[str, int],
-                       id_col: str = "doc_id",
-                       stratum_col: str = "lang") -> DataFrame:
+def mixture_interleave(df: DataFrame, weights: dict[str, int]) -> DataFrame:
     """Deterministic weighted interleave order for training-data mixing.
 
     Each stratum's documents are ranked by (Knuth hash, id) — a
@@ -94,18 +89,18 @@ def mixture_interleave(df: DataFrame, weights: dict[str, int],
         norm *= w
     from pyspark.sql import Window
 
-    hash_col = F.expr(sql_knuth_hash(id_col))
-    w_rank = Window.partitionBy(stratum_col).orderBy(
-        hash_col.asc(), F.col(id_col).asc())
+    hash_col = F.expr(sql_knuth_hash("doc_id"))
+    w_rank = Window.partitionBy("lang").orderBy(
+        hash_col.asc(), F.col("doc_id").asc())
     stride = F.coalesce(
-        *[F.when(F.col(stratum_col) == k, F.lit(norm // w))
+        *[F.when(F.col("lang") == k, F.lit(norm // w))
           for k, w in weights.items()]
     ) if len(weights) > 1 else F.lit(norm // next(iter(weights.values())))
     out = df.filter(
-        F.col(stratum_col).isin(*weights.keys())
+        F.col("lang").isin(*weights.keys())
     ).select(
-        F.col(id_col),
-        F.col(stratum_col),
+        F.col("doc_id"),
+        F.col("lang"),
         F.row_number().over(w_rank).cast("long").alias("stratum_rank"),
     ).withColumn(
         "order_key",
@@ -114,8 +109,8 @@ def mixture_interleave(df: DataFrame, weights: dict[str, int],
     return out
 
 
-def exact_rank_buckets(df: DataFrame, value_col: str, id_col: str,
-                       n_buckets: int = 10) -> DataFrame:
+def exact_rank_buckets(df: DataFrame, value_col: str,
+                       id_col: str) -> DataFrame:
     """Exact global-rank bucketing (deciles etc.) WITHOUT a global sort.
 
     A bare NTILE window has no partition key — one reducer sorts the
@@ -126,7 +121,7 @@ def exact_rank_buckets(df: DataFrame, value_col: str, id_col: str,
     DISTINCT value domain, cumulated on a single small partition of
     value-counts (bounded by the domain, never the corpus) and broadcast
     back; the second is a window partitioned by value, which distributes.
-    bucket = ((rank-1) * n_buckets) div N + 1 — exact, deterministic,
+    bucket = ((rank-1) * 10) div N + 1 — exact, deterministic,
     identical in any engine.
     """
     from pyspark.sql import Window
@@ -150,15 +145,14 @@ def exact_rank_buckets(df: DataFrame, value_col: str, id_col: str,
             id_col,
             value_col,
             "rank",
-            (F.expr(f"(rank - 1) * {int(n_buckets)} div _N") + 1)
+            (F.expr("(rank - 1) * 10 div _N") + 1)
             .cast("int").alias("bucket"),
         )
     )
 
 
 def importance_weights(docs_df: DataFrame, is_target,
-                       id_col: str = "doc_id", text_col: str = "text",
-                       n_buckets: int = 4096) -> DataFrame:
+                       n_buckets: int) -> DataFrame:
     """DSIR-style importance scores in whole bits (Xie et al. 2023,
     "Data Selection for Language Models via Importance Resampling").
 
@@ -191,12 +185,12 @@ def importance_weights(docs_df: DataFrame, is_target,
     from ..plans.partitioning import spread
 
     toks = spread(
-        docs_df.select(F.col(id_col), is_target.alias("_is_t"),
-                       F.col(text_col))
+        docs_df.select(F.col("doc_id"), is_target.alias("_is_t"),
+                       F.col("text"))
     ).select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.col("_is_t").cast("long").alias("is_t"),
-        F.explode(F.split(F.col(text_col), " ")).alias("tok"),
+        F.explode(F.split(F.col("text"), " ")).alias("tok"),
     ).filter(F.col("tok") != "")
     tb = toks.withColumn("b", _bucket(F.col("tok"), 0, n_buckets))
     stats = tb.groupBy("b").agg(
@@ -266,9 +260,7 @@ def robots_filter(urls_df: DataFrame, rules_df: DataFrame) -> DataFrame:
     )
 
 
-def pps_systematic_sample(df: DataFrame, n: int, weight_col: str,
-                          id_col: str = "doc_id",
-                          bucket_width: int = 256) -> DataFrame:
+def pps_systematic_sample(df: DataFrame, n: int, weight_col: str) -> DataFrame:
     """Systematic probability-proportional-to-size sampling — the
     deterministic mixture-builder's tool: pick ~n documents where a
     document's selection count is proportional to its weight (chars,
@@ -283,13 +275,11 @@ def pps_systematic_sample(df: DataFrame, n: int, weight_col: str,
 
     The prefix sum is the interesting part at scale: a global window
     would serialize on one partition, so this runs the two-level scan —
-    bucket ids by id div bucket_width, per-bucket totals, ONE window
-    over the bucket directory for bucket offsets, then the within-bucket
-    running sum as a window PARTITIONed by bucket. Every corpus-sized
-    stage is parallel; the directory window sees n_ids / bucket_width
-    rows, so size bucket_width ~ sqrt(n) (e.g. 10^6 at 10^12 ids) and
-    BOTH levels stay ~10^6 rows — two-level suffices at any realistic
-    scale. The offsets join is a plain equi-join on the bucket key (no
+    bucket ids by id div 256, per-bucket totals, ONE window over the
+    bucket directory for bucket offsets, then the within-bucket running
+    sum as a window PARTITIONed by bucket. Every corpus-sized stage is
+    parallel; the directory window sees max_id / 256 rows. The offsets
+    join is a plain equi-join on the bucket key (no
     forced broadcast; AQE picks hash vs merge by directory size).
 
     Returns (id, weight, mult) for items with mult >= 1; sum(mult) == n
@@ -302,14 +292,14 @@ def pps_systematic_sample(df: DataFrame, n: int, weight_col: str,
     nn = int(n)
     w = (
         df.select(
-            F.col(id_col).alias("id"),
+            F.col("doc_id").alias("id"),
             F.col(weight_col).cast("long").alias("wt"),
         )
         .where(F.col("wt") > 0)
-        .withColumn("bkt", F.expr(f"id div {int(bucket_width)}"))
+        .withColumn("bkt", F.expr("id div 256"))
     )
     btot = w.groupBy("bkt").agg(F.sum("wt").alias("bw"))
-    # bounded directory: one window over <= (max_id / bucket_width) rows
+    # bounded directory: one window over <= max_id / 256 rows
     boff = btot.withColumn(
         "off",
         F.coalesce(
@@ -334,13 +324,12 @@ def pps_systematic_sample(df: DataFrame, n: int, weight_col: str,
              - F.expr(f"((c - wt) * {nn}) div W")).cast("long"),
         )
         .where(F.col("mult") >= 1)
-        .select(F.col("id").alias(id_col),
+        .select(F.col("id").alias("doc_id"),
                 F.col("wt").cast("long").alias("weight"), "mult")
     )
 
 
-def temperature_weights(docs_df: DataFrame, group_col: str = "source",
-                        scale: int = 10**6) -> DataFrame:
+def temperature_weights(docs_df: DataFrame, scale: int) -> DataFrame:
     """Temperature-balanced mixture weights (alpha = 1/2): sampling
     weight proportional to sqrt(group size) — the standard fix for
     head-language/domain dominance in multilingual or multi-source
@@ -362,10 +351,10 @@ def temperature_weights(docs_df: DataFrame, group_col: str = "source",
     """
     from .trajectory import sql_isqrt_exact
 
-    counts = docs_df.groupBy(F.col(group_col).alias("grp")).agg(
+    counts = docs_df.groupBy(F.col("source").alias("grp")).agg(
         F.count("*").cast("long").alias("n_docs"))
     expr = sql_isqrt_exact(f"n_docs * {int(scale)} * {int(scale)}")
     return counts.select(
-        F.col("grp").alias(group_col), "n_docs",
+        F.col("grp").alias("source"), "n_docs",
         F.expr(expr).cast("long").alias("w_num"),
     )

@@ -7,7 +7,7 @@ Four families, each a DataFrame-in / DataFrame-out operator:
 * ``minhash_lsh_pairs`` — shingle -> 64-perm MinHash -> banded LSH
   bucket-join -> exact-Jaccard verify. Candidate generation never compares
   all pairs: docs meet only inside (band, bucket) groups, so the shuffle
-  key is the band hash and hot buckets are bounded by ``max_bucket``.
+  key is the band hash and hot buckets are bounded at 64 docs.
 * ``simhash_pairs`` — 64-bit SimHash, banded by 4x16-bit chunks (any pair
   at Hamming distance <= 3 shares at least one exact chunk — pigeonhole),
   then exact Hamming verify.
@@ -34,10 +34,11 @@ from ..plans.iterate import loop_checkpoint
 MERSENNE_P = (1 << 61) - 1
 N_PERM = 64
 N_BANDS = 16  # x 4 rows per band
+SHINGLE_W = 3  # words per shingle, for every shingle operator here
 
 
-def _perm_params(seed: int = 42) -> tuple[np.ndarray, np.ndarray]:
-    rng = np.random.default_rng(seed)
+def _perm_params() -> tuple[np.ndarray, np.ndarray]:
+    rng = np.random.default_rng(42)
     # a < 2^31 keeps every intermediate product below 2^63: a*hi < 2^60 and
     # a*lo < 2^63, so the mod-P arithmetic is exact in uint64 (no wrapping)
     a = rng.integers(1, 1 << 31, size=N_PERM, dtype=np.uint64)
@@ -55,8 +56,8 @@ def _mix64(x: np.ndarray) -> np.ndarray:
     return x ^ (x >> np.uint64(31))
 
 
-def shingle_hashes(text: str, w: int = 3, _cache: dict | None = None) -> np.ndarray:
-    """w-word shingle hashes, vectorized.
+def shingle_hashes(text: str, cache: dict) -> np.ndarray:
+    """SHINGLE_W-word shingle hashes, vectorized.
 
     Per document: md5-low-64 each DISTINCT word once (cross-doc cache),
     then a rolling order-sensitive polynomial over the word-hash vector +
@@ -68,15 +69,13 @@ def shingle_hashes(text: str, w: int = 3, _cache: dict | None = None) -> np.ndar
     if not words:
         return np.empty(0, dtype=np.uint64)
     hv = np.empty(len(words), dtype=np.uint64)
-    if _cache is None:
-        _cache = {}
     for i, wd in enumerate(words):
-        h = _cache.get(wd)
+        h = cache.get(wd)
         if h is None:
             h = word_hash_md5_low(wd)
-            _cache[wd] = h
+            cache[wd] = h
         hv[i] = h
-    k = min(w, len(words))
+    k = min(SHINGLE_W, len(words))
     n = len(words) - k + 1
     acc = hv[:n].copy()
     for j in range(1, k):
@@ -113,13 +112,13 @@ def jaccard(a: np.ndarray, b: np.ndarray) -> float:
     return len(sa & sb) / len(sa | sb)
 
 
-def exact_dedup(docs_df, id_col: str = "doc_id", text_col: str = "text"):
+def exact_dedup(docs_df):
     """Groups of byte-identical documents: (dup_key, n_docs, keeper_id)."""
     return (
-        docs_df.groupBy(F.md5(F.col(text_col).cast("binary")).alias("dup_key"))
+        docs_df.groupBy(F.md5(F.col("text").cast("binary")).alias("dup_key"))
         .agg(
             F.count("*").alias("n_docs"),
-            F.min(id_col).alias("keeper_id"),
+            F.min("doc_id").alias("keeper_id"),
         )
     )
 
@@ -128,36 +127,34 @@ BANDS_SCHEMA = "doc_id long, band int, bucket long"
 SIG_SCHEMA = "doc_id long, sig array<long>"
 
 
-def minhash_signatures(docs_df, id_col: str = "doc_id", text_col: str = "text",
-                       w: int = 3, seed: int = 42):
+def minhash_signatures(docs_df):
     """(doc_id, sig array<long>) — one Arrow pass; the signature is the
     reusable LSH artifact (at 100 TB it would be checkpointed via
     plans.manifest and every downstream stage reads it back)."""
-    a, b = _perm_params(seed)
+    a, b = _perm_params()
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cache: dict = {}
         for pdf in batches:
             ids, sigs = [], []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                sig = minhash_signature(shingle_hashes(text, w, cache), a, b)
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                sig = minhash_signature(shingle_hashes(text, cache), a, b)
                 ids.append(int(doc_id))
                 sigs.append(sig.view(np.int64).tolist())
             yield pd.DataFrame({"doc_id": ids, "sig": sigs})
 
     from ..plans.partitioning import spread
 
-    return spread(docs_df.select(id_col, text_col)).mapInPandas(gen, SIG_SCHEMA)
+    return spread(docs_df.select("doc_id", "text")).mapInPandas(gen, SIG_SCHEMA)
 
 
-def minhash_bands(docs_df, id_col: str = "doc_id", text_col: str = "text",
-                  w: int = 3, seed: int = 42, sigs=None):
+def minhash_bands(docs_df, sigs=None):
     """(doc_id, band, bucket) rows — the LSH shuffle key table.
 
     Band buckets are derived JVM-side (xxhash64 over the signature slice —
     whole-stage codegen, no second Python pass over the corpus)."""
     if sigs is None:
-        sigs = minhash_signatures(docs_df, id_col, text_col, w, seed)
+        sigs = minhash_signatures(docs_df)
     rpb = N_PERM // N_BANDS
     band_structs = F.array(
         *[
@@ -176,28 +173,23 @@ def minhash_bands(docs_df, id_col: str = "doc_id", text_col: str = "text",
 PREFILTER_MIN_DOCS = 100_000
 
 
-def minhash_lsh_pairs(docs_df, id_col: str = "doc_id", text_col: str = "text",
-                      threshold: float = 0.7, w: int = 3, seed: int = 42,
-                      max_bucket: int = 64, prefilter_margin: float = 0.25,
-                      prefilter: bool | None = None):
+def minhash_lsh_pairs(docs_df, threshold: float):
     """Near-duplicate pairs (id_a < id_b, jaccard >= threshold).
 
     Bucket-join candidate generation, then (on large corpora) a SIGNATURE
     prefilter — estimated Jaccard = matching-row fraction, computed
     JVM-side on the 512-byte signatures — so only the survivors join the
     full texts for the exact shingle-Jaccard verify: at scale the candidate
-    shuffle carries signatures, never the corpus. ``prefilter_margin``
-    keeps any pair whose estimate is within 4 sigma (64 perms -> sigma
+    shuffle carries signatures, never the corpus. The prefilter keeps any
+    pair whose estimate is within 0.25 = 4 sigma (64 perms -> sigma
     ~= 0.0625) of the threshold; a true pair is dropped only when its
     estimate lands beyond 4 sigma low (~3e-5 per pair) — near-certain, not
-    certain. Pass ``prefilter=False`` for the exact post-banding verify on
-    every candidate (exactness-sensitive runs), ``prefilter=True`` to
-    force it; the default probes whether the corpus reaches
-    ``PREFILTER_MIN_DOCS`` (a LIMIT-bounded count, never a full scan) —
-    below that the two extra by-id joins cost more than shipping the texts.
-    ``max_bucket`` caps degenerate buckets (e.g. boilerplate shingles) — a
-    skew guard: capped buckets are dropped, trading recall on pathological
-    keys for bounded work.
+    certain. It runs only when the corpus reaches ``PREFILTER_MIN_DOCS``
+    (a LIMIT-bounded probe, never a full scan) — below that the two extra
+    by-id joins cost more than shipping the texts, and every candidate
+    gets the exact post-banding verify. Buckets above 64 docs are dropped
+    (e.g. boilerplate shingles) — a skew guard, trading recall on
+    pathological keys for bounded work.
 
     The persisted signature table lives until the session ends or the
     caller runs ``spark.catalog.clearCache()`` (long-lived sessions own
@@ -207,11 +199,11 @@ def minhash_lsh_pairs(docs_df, id_col: str = "doc_id", text_col: str = "text",
     # the by-id prefilter joins); persist so the corpus-wide shingle+perm
     # pass runs once — the in-session analogue of checkpointing the
     # signature table (plans.manifest) in a long-lived pipeline
-    sigs = minhash_signatures(docs_df, id_col, text_col, w, seed).persist()
-    bands = minhash_bands(docs_df, id_col, text_col, w, seed, sigs=sigs)
+    sigs = minhash_signatures(docs_df).persist()
+    bands = minhash_bands(docs_df, sigs=sigs)
     sized = bands.withColumn(
         "bsize", F.count("*").over(Window.partitionBy("band", "bucket"))
-    ).filter(F.col("bsize") <= max_bucket)
+    ).filter(F.col("bsize") <= 64)
     left = sized.select(F.col("doc_id").alias("id_a"), "band", "bucket")
     right = sized.select(F.col("doc_id").alias("id_b"), "band", "bucket")
     cand = (
@@ -220,16 +212,12 @@ def minhash_lsh_pairs(docs_df, id_col: str = "doc_id", text_col: str = "text",
         .select("id_a", "id_b")
         .distinct()
     )
-    if prefilter is None:
-        # switchover heuristic: the prefilter pays for itself once the
-        # candidate texts would dominate the shuffle — proxied by corpus
-        # size. limit(n).count() short-circuits after n rows, so the probe
-        # is O(PREFILTER_MIN_DOCS) regardless of corpus size.
-        prefilter = (
-            docs_df.select(id_col).limit(PREFILTER_MIN_DOCS).count()
-            >= PREFILTER_MIN_DOCS
-        )
-    if prefilter:
+    # switchover heuristic: the prefilter pays for itself once the
+    # candidate texts would dominate the shuffle — proxied by corpus
+    # size. limit(n).count() short-circuits after n rows, so the probe
+    # is O(PREFILTER_MIN_DOCS) regardless of corpus size.
+    if (docs_df.select("doc_id").limit(PREFILTER_MIN_DOCS).count()
+            >= PREFILTER_MIN_DOCS):
         sig_a = sigs.select(F.col("doc_id").alias("id_a"), F.col("sig").alias("sig_a"))
         sig_b = sigs.select(F.col("doc_id").alias("id_b"), F.col("sig").alias("sig_b"))
         est = F.aggregate(
@@ -240,12 +228,12 @@ def minhash_lsh_pairs(docs_df, id_col: str = "doc_id", text_col: str = "text",
         survivors = (
             cand.join(sig_a, "id_a")
             .join(sig_b, "id_b")
-            .filter(est >= F.lit(threshold - prefilter_margin))
+            .filter(est >= F.lit(threshold - 0.25))
             .select("id_a", "id_b")
         )
     else:
         survivors = cand
-    texts = docs_df.select(F.col(id_col).alias("_tid"), F.col(text_col).alias("_text"))
+    texts = docs_df.select(F.col("doc_id").alias("_tid"), F.col("text").alias("_text"))
     joined = (
         survivors.join(texts.withColumnRenamed("_tid", "id_a").withColumnRenamed("_text", "text_a"), "id_a")
         .join(texts.withColumnRenamed("_tid", "id_b").withColumnRenamed("_text", "text_b"), "id_b")
@@ -258,7 +246,7 @@ def minhash_lsh_pairs(docs_df, id_col: str = "doc_id", text_col: str = "text",
             for id_a, id_b, ta, tb in zip(
                 pdf["id_a"], pdf["id_b"], pdf["text_a"], pdf["text_b"]
             ):
-                j = jaccard(shingle_hashes(ta, w, cache), shingle_hashes(tb, w, cache))
+                j = jaccard(shingle_hashes(ta, cache), shingle_hashes(tb, cache))
                 if j >= threshold:
                     rows.append((int(id_a), int(id_b), float(j)))
             yield pd.DataFrame(rows, columns=["id_a", "id_b", "jaccard"])
@@ -274,40 +262,40 @@ def minhash_lsh_pairs(docs_df, id_col: str = "doc_id", text_col: str = "text",
         verify, "id_a long, id_b long, jaccard double")
 
 
-def shingle_sets(docs_df, w: int = 3, id_col: str = "doc_id",
-                 text_col: str = "text"):
+def shingle_sets(docs_df):
     """The DISTINCT (doc_id, shingle) inverted index — the shared input
     of every exact-shingle operator here (``ngram_jaccard_pairs``,
     ``prefix_jaccard_pairs``, ``shingle_containment_pairs``). Built as
     split -> shingle index explode -> DISTINCT, all-JVM; at scale this
     is the structure a dedup pipeline materializes ONCE and feeds to
-    each verify/candidate tier, so callers may persist the result and
-    pass it back via the operators' ``ds=`` parameter instead of
-    paying the tokenize+explode+distinct scan per operator.
+    each verify/candidate tier; the operators take it (dictionary-encoded
+    by ``shingle_sid_sets``) as their ``ds`` input instead of paying the
+    tokenize+explode+distinct scan per operator.
 
     Shingle indexing is 1-based over a literal-space split (empty
     tokens kept), mirroring the SQL oracle token-for-token; documents
-    with fewer than ``w`` tokens contribute no shingles.
+    with fewer than ``SHINGLE_W`` tokens contribute no shingles.
     """
     from ..plans.partitioning import spread
 
-    toks = F.split(F.col(text_col), " ")
+    toks = F.split(F.col("text"), " ")
     base = spread(docs_df.select(
-        F.col(id_col).alias("doc_id"), toks.alias("toks")
-    ).filter(F.size("toks") >= w))
+        "doc_id", toks.alias("toks")
+    ).filter(F.size("toks") >= SHINGLE_W))
     idx = base.select(
         "doc_id",
         "toks",
-        F.explode(F.sequence(F.lit(1), F.size("toks") - (w - 1))).alias("i"),
+        F.explode(F.sequence(F.lit(1), F.size("toks") - (SHINGLE_W - 1))
+                  ).alias("i"),
     )
     shingle = F.concat_ws(
-        " ", *[F.element_at("toks", F.col("i") + F.lit(k)) for k in range(w)]
+        " ", *[F.element_at("toks", F.col("i") + F.lit(k))
+               for k in range(SHINGLE_W)]
     )
     return idx.select("doc_id", shingle.alias("shingle")).distinct()
 
 
-def shingle_sid_sets(docs_df, w: int = 3, id_col: str = "doc_id",
-                     text_col: str = "text"):
+def shingle_sid_sets(docs_df):
     """Dictionary-encoded ``shingle_sets``: the same DISTINCT
     (doc_id, shingle) index with every shingle string replaced by a
     dense BIGINT id assigned in ascending (global doc-frequency, shingle)
@@ -331,8 +319,7 @@ def shingle_sid_sets(docs_df, w: int = 3, id_col: str = "doc_id",
     wherever the boundaries fall.
     """
     spark = docs_df.sparkSession
-    ds = shingle_sets(docs_df, w, id_col, text_col).localCheckpoint(
-        eager=False)
+    ds = shingle_sets(docs_df).localCheckpoint(eager=False)
     freq = ds.groupBy("shingle").agg(F.count("*").alias("df"))
     nparts = max(2, int(spark.conf.get("spark.sql.shuffle.partitions")))
     ranked = (
@@ -358,10 +345,10 @@ def shingle_sid_sets(docs_df, w: int = 3, id_col: str = "doc_id",
         "doc_id", F.col("sid").alias("shingle"))
 
 
-def ngram_jaccard_pairs(docs_df, threshold: float = 0.5, w: int = 3,
-                        id_col: str = "doc_id", text_col: str = "text",
-                        ds=None):
-    """EXACT n-gram (w-word shingle) Jaccard near-dup pairs — all-JVM.
+def ngram_jaccard_pairs(ds, threshold: float):
+    """EXACT n-gram (SHINGLE_W-word shingle) Jaccard near-dup pairs —
+    all-JVM, over a (doc_id, shingle) index ``ds`` (``shingle_sets`` or
+    its dictionary-encoded ``shingle_sid_sets``).
 
     Pure DataFrame composition, no Python stage anywhere: split -> shingle
     index explode -> DISTINCT shingle set -> shingle equi-join counts the
@@ -370,19 +357,14 @@ def ngram_jaccard_pairs(docs_df, threshold: float = 0.5, w: int = 3,
     structure a 100 TB dedup would materialize once and reuse.
 
     Exactness costs skew-exposure: a boilerplate shingle shared by k docs
-    contributes k^2 join rows (no ``max_bucket`` guard here, because
+    contributes k^2 join rows (no 64-doc bucket guard here, because
     dropping it would change the EXACT answer). ``minhash_lsh_pairs`` is
     the skew-capped approximate-candidate variant of the same contract;
     at scale run that first and reserve this operator for the verify tier.
 
-    Shingle indexing is 1-based over a literal-space split (empty tokens
-    kept), mirroring the SQL oracle token-for-token; documents with fewer
-    than ``w`` tokens contribute no shingles. ``ds``: optionally pass a
-    prebuilt (persisted) ``shingle_sets`` index to share its scan with
-    sibling operators.
+    The index is built once and shared with the sibling operators
+    (``prefix_jaccard_pairs``, ``shingle_containment_pairs``).
     """
-    if ds is None:
-        ds = shingle_sets(docs_df, w, id_col, text_col)
     sizes = ds.groupBy("doc_id").agg(F.count("*").alias("n"))
     left = ds.select(F.col("doc_id").alias("id_a"), "shingle")
     right = ds.select(F.col("doc_id").alias("id_b"), "shingle")
@@ -406,7 +388,7 @@ def ngram_jaccard_pairs(docs_df, threshold: float = 0.5, w: int = 3,
     )
 
 
-def dedup_clusters(docs_df, pairs_df, id_col: str = "doc_id"):
+def dedup_clusters(docs_df, pairs_df):
     """Fuzzy-dedup completion: connected components over near-dup pairs.
 
     Pair detection (minhash/simhash/ngram/embedding) yields EDGES; what a
@@ -496,18 +478,18 @@ def dedup_clusters(docs_df, pairs_df, id_col: str = "doc_id"):
             break
         prev_sum = cur_sum
     singletons = (
-        docs_df.select(F.col(id_col).alias("id"))
+        docs_df.select(F.col("doc_id").alias("id"))
         .join(labels.select("id"), "id", "left_anti")
         .withColumn("lbl", F.col("id"))
     )
     out = labels.unionByName(singletons)
     edges.unpersist()
     return out.select(
-        F.col("id").alias(id_col), F.col("lbl").alias("cluster_id")
+        F.col("id").alias("doc_id"), F.col("lbl").alias("cluster_id")
     )
 
 
-def decontaminate(train_df, heldout_df, text_col: str = "text"):
+def decontaminate(train_df, heldout_df):
     """Remove training documents whose exact text appears in a held-out
     set — the decontamination pass every evaluation-aware corpus build
     runs. Anti-join on md5(text): the held-out fingerprint set is
@@ -515,14 +497,13 @@ def decontaminate(train_df, heldout_df, text_col: str = "text"):
     training corpus never shuffles; with a huge held-out side it degrades
     gracefully to a shuffle anti-join on the digest.
     """
-    fp = F.md5(F.col(text_col).cast("binary")).alias("_fp")
+    fp = F.md5(F.col("text").cast("binary")).alias("_fp")
     train = train_df.withColumn("_fp", fp)
     seen = heldout_df.select(fp).distinct()
     return train.join(seen, "_fp", "left_anti").drop("_fp")
 
 
-def ngram_decontaminate(train_df, heldout_df, n: int = 5,
-                        id_col: str = "doc_id", text_col: str = "text"):
+def ngram_decontaminate(train_df, heldout_df):
     """N-gram-overlap decontamination (the GPT-3 recipe): drop a training
     document if it shares ANY word n-gram with the held-out set — far
     stricter than exact-text matching, which misses partial copies and
@@ -535,26 +516,26 @@ def ngram_decontaminate(train_df, heldout_df, n: int = 5,
     With a pathological held-out side both joins degrade to hash
     shuffles on the 16-byte digest, never on text.
     """
-    w = int(n)
+    w = 5  # n-gram width
     # CASE guard: sequence(1, 0) in Spark is the DESCENDING [1, 0], so a
     # doc shorter than n words must yield an empty gram array explicitly
     grams = F.expr(
-        f"explode(CASE WHEN size(split(trim({text_col}), ' ')) >= {w} THEN "
-        f"transform(sequence(1, size(split(trim({text_col}), ' ')) - {w - 1}),"
-        f" i -> md5(array_join(slice(split(trim({text_col}), ' '), i, {w}), ' '))) "
+        f"explode(CASE WHEN size(split(trim(text), ' ')) >= {w} THEN "
+        f"transform(sequence(1, size(split(trim(text), ' ')) - {w - 1}),"
+        f" i -> md5(array_join(slice(split(trim(text), ' '), i, {w}), ' '))) "
         "ELSE array() END)"
     )
     from ..plans.partitioning import spread
 
-    held_grams = spread(heldout_df.select(text_col)).select(
+    held_grams = spread(heldout_df.select("text")).select(
         grams.alias("g")).distinct()
-    train_grams = spread(train_df.select(id_col, text_col)).select(
-        F.col(id_col).alias("_tid"), grams.alias("g"))
+    train_grams = spread(train_df.select("doc_id", "text")).select(
+        F.col("doc_id").alias("_tid"), grams.alias("g"))
     contaminated = (
         train_grams.join(held_grams, "g", "left_semi").select("_tid").distinct()
     )
     return train_df.join(
-        contaminated, train_df[id_col] == contaminated["_tid"], "left_anti"
+        contaminated, train_df["doc_id"] == contaminated["_tid"], "left_anti"
     )
 
 
@@ -569,11 +550,11 @@ def word_hash_md5_low(word: str) -> int:
     return int.from_bytes(hashlib.md5(word.encode("utf-8")).digest()[8:16], "little")
 
 
-def simhash64(text: str, _cache: dict | None = None) -> int:
+def simhash64(text: str, cache: dict) -> int:
     """64-bit SimHash over word hashes — vectorized.
 
-    Per document: hash the DISTINCT words once (with an optional cross-doc
-    cache), unpack all 64 bits of every hash in one ``np.unpackbits``, and
+    Per document: hash the DISTINCT words once (through a cross-doc
+    ``cache``), unpack all 64 bits of every hash in one ``np.unpackbits``, and
     reduce with a single (+-1 weight x count) matmul — no per-word Python
     beyond the md5 call itself.
     """
@@ -582,16 +563,12 @@ def simhash64(text: str, _cache: dict | None = None) -> int:
         return 0
     uniq, counts = np.unique(words, return_counts=True)
     hv = np.empty(len(uniq), dtype=np.uint64)
-    if _cache is None:
-        for i, w in enumerate(uniq):
-            hv[i] = word_hash_md5_low(w)
-    else:
-        for i, w in enumerate(uniq):
-            h = _cache.get(w)
-            if h is None:
-                h = word_hash_md5_low(w)
-                _cache[w] = h
-            hv[i] = h
+    for i, w in enumerate(uniq):
+        h = cache.get(w)
+        if h is None:
+            h = word_hash_md5_low(w)
+            cache[w] = h
+        hv[i] = h
     # bit j of flat row == (h >> j) & 1: little-endian byte view + little
     # bitorder keeps numpy's layout aligned with the arithmetic definition
     bits = np.unpackbits(
@@ -605,8 +582,7 @@ def simhash64(text: str, _cache: dict | None = None) -> int:
     return out - (1 << 64) if out >= (1 << 63) else out
 
 
-def simhash_pairs(docs_df, id_col: str = "doc_id", text_col: str = "text",
-                  max_hamming: int = 3):
+def simhash_pairs(docs_df, max_hamming: int):
     """Pairs at Hamming distance <= max_hamming (banded exact search).
 
     The persisted band table (4 rows/doc) lives until the session ends or
@@ -617,7 +593,7 @@ def simhash_pairs(docs_df, id_col: str = "doc_id", text_col: str = "text",
         cache: dict = {}
         for pdf in batches:
             rows = []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
                 sh = simhash64(text, cache)
                 u = sh & 0xFFFFFFFFFFFFFFFF
                 for band in range(4):
@@ -630,7 +606,7 @@ def simhash_pairs(docs_df, id_col: str = "doc_id", text_col: str = "text",
 
     # 4 rows/doc; persisted so the signature stage runs once instead of
     # once per self-join side (exchange reuse does not cover it)
-    bands = spread(docs_df.select(id_col, text_col)).mapInPandas(
+    bands = spread(docs_df.select("doc_id", "text")).mapInPandas(
         gen, "doc_id long, simhash long, band int, chunk int"
     ).persist()
     left = bands.select(
@@ -653,8 +629,7 @@ def simhash_pairs(docs_df, id_col: str = "doc_id", text_col: str = "text",
     )
 
 
-def chunk_dedup(docs_df, chunk_words: int = 8,
-                id_col: str = "doc_id", text_col: str = "text"):
+def chunk_dedup(docs_df, chunk_words: int):
     """Sub-document (CCNet-style paragraph) dedup over fixed word chunks.
 
     Web corpora repeat at the PARAGRAPH level (boilerplate, quoted
@@ -681,12 +656,12 @@ def chunk_dedup(docs_df, chunk_words: int = 8,
     from ..plans.partitioning import spread
 
     w = int(chunk_words)
-    chunks = spread(docs_df.select(id_col, text_col)).select(
-        F.col(id_col).alias("doc_id"),
+    chunks = spread(docs_df.select("doc_id", "text")).select(
+        "doc_id",
         F.expr(
             "posexplode(transform("
-            f"  sequence(0, CAST(ceil(size(split(trim({text_col}), ' ')) / {w}.0) AS INT) - 1),"
-            f"  i -> array_join(slice(split(trim({text_col}), ' '), i * {w} + 1, {w}), ' ')"
+            f"  sequence(0, CAST(ceil(size(split(trim(text), ' ')) / {w}.0) AS INT) - 1),"
+            f"  i -> array_join(slice(split(trim(text), ' '), i * {w} + 1, {w}), ' ')"
             "))"
         ).alias("chunk_idx", "chunk"),
     ).filter(F.col("chunk") != "")
@@ -706,9 +681,7 @@ def chunk_dedup(docs_df, chunk_words: int = 8,
     )
 
 
-def boilerplate_chunks(docs_df, chunk_words: int = 8, min_df: int = 2,
-                       pct_den: int = 20, id_col: str = "doc_id",
-                       text_col: str = "text", src_col: str = "source"):
+def boilerplate_chunks(docs_df, chunk_words: int):
     """Within-source boilerplate detection (CCNet/RefinedWeb line filter).
 
     Web boilerplate (nav bars, footers, cookie banners) repeats across
@@ -716,8 +689,8 @@ def boilerplate_chunks(docs_df, chunk_words: int = 8, min_df: int = 2,
     global dedup: the filter is per-SOURCE document frequency. A chunk
     (fixed ``chunk_words``-token window, same segmentation as
     ``chunk_dedup``) is boilerplate within its source iff it appears in
-    >= max(min_df, source_docs/pct_den) distinct documents of that
-    source (df * pct_den >= source_docs, exact integers — default 5%).
+    >= max(2, source_docs/20) distinct documents of that source
+    (df * 20 >= source_docs, exact integers — 5% of the source).
 
     Output per doc: (doc_id, n_chunks, n_boiler, boiler_words).
 
@@ -732,13 +705,13 @@ def boilerplate_chunks(docs_df, chunk_words: int = 8, min_df: int = 2,
     from ..plans.partitioning import spread
 
     w = int(chunk_words)
-    chunks = spread(docs_df.select(id_col, src_col, text_col)).select(
-        F.col(id_col).alias("doc_id"),
-        F.col(src_col).alias("source"),
+    chunks = spread(docs_df.select("doc_id", "source", "text")).select(
+        "doc_id",
+        "source",
         F.expr(
             "posexplode(transform("
-            f"  sequence(0, CAST(ceil(size(split(trim({text_col}), ' ')) / {w}.0) AS INT) - 1),"
-            f"  i -> array_join(slice(split(trim({text_col}), ' '), i * {w} + 1, {w}), ' ')"
+            f"  sequence(0, CAST(ceil(size(split(trim(text), ' ')) / {w}.0) AS INT) - 1),"
+            f"  i -> array_join(slice(split(trim(text), ' '), i * {w} + 1, {w}), ' ')"
             "))"
         ).alias("chunk_idx", "chunk"),
     ).filter(F.col("chunk") != "")
@@ -753,14 +726,14 @@ def boilerplate_chunks(docs_df, chunk_words: int = 8, min_df: int = 2,
     df_stats = hashed.groupBy("source", "h").agg(
         F.countDistinct("doc_id").alias("df")
     )
-    src_docs = docs_df.groupBy(F.col(src_col).alias("source")).agg(
-        F.countDistinct(id_col).alias("source_docs")
+    src_docs = docs_df.groupBy("source").agg(
+        F.countDistinct("doc_id").alias("source_docs")
     )
     boiler = (
         df_stats.join(F.broadcast(src_docs), "source")
         .filter(
-            (F.col("df") >= int(min_df))
-            & (F.col("df") * int(pct_den) >= F.col("source_docs"))
+            (F.col("df") >= 2)
+            & (F.col("df") * 20 >= F.col("source_docs"))
         )
         .select("source", "h", F.lit(1).alias("is_boiler"))
     )
@@ -779,9 +752,7 @@ def boilerplate_chunks(docs_df, chunk_words: int = 8, min_df: int = 2,
     )
 
 
-def cdc_chunk_dedup(docs_df, boundary_mod: int = 8,
-                    id_col: str = "doc_id",
-                    text_col: str = "text"):
+def cdc_chunk_dedup(docs_df, boundary_mod: int):
     """Content-defined chunking dedup (the FastCDC idea at word
     granularity): chunk boundaries fall AFTER any word whose 64-bit
     hash is 0 mod ``boundary_mod``, so boundaries are a local property
@@ -806,7 +777,7 @@ def cdc_chunk_dedup(docs_df, boundary_mod: int = 8,
     the chunk hash: corpus growth adds reducers, not skew.
     """
     m = int(boundary_mod)
-    toks = f"filter(split(trim({text_col}), ' '), t -> t <> '')"
+    toks = "filter(split(trim(text), ' '), t -> t <> '')"
     if 256 % m == 0:
         # mod of a power-of-two divisor of 256 only needs the LOW byte
         # of the little-endian uint64 (hex pair 17) — 2^8 = 0 mod m
@@ -832,7 +803,7 @@ def cdc_chunk_dedup(docs_df, boundary_mod: int = 8,
     from ..plans.partitioning import spread
 
     ch = (
-        spread(docs_df.select(F.col(id_col).alias("doc_id"),
+        spread(docs_df.select("doc_id",
                               F.expr(toks).alias("t")))
         .filter(F.size("t") >= 1)
         .select(
@@ -855,12 +826,11 @@ def cdc_chunk_dedup(docs_df, boundary_mod: int = 8,
     )
 
 
-def prefix_jaccard_pairs(docs_df, threshold: float = 0.5, w: int = 3,
-                         id_col: str = "doc_id", text_col: str = "text",
-                         ds=None):
-    """EXACT w-shingle Jaccard pairs via the AllPairs/PPJoin prefix
+def prefix_jaccard_pairs(ds, threshold: float):
+    """EXACT shingle Jaccard pairs via the AllPairs/PPJoin prefix
     filter — the at-scale plan for the `ngram_jaccard_pairs` contract
-    (identical output, same oracle).
+    (identical output, same oracle), over the dictionary-encoded
+    ``shingle_sid_sets`` index ``ds``.
 
     The full inverted-index join pays k^2 rows for EVERY shingle shared
     by k docs. The prefix filter pays it only for each doc's RAREST
@@ -878,8 +848,9 @@ def prefix_jaccard_pairs(docs_df, threshold: float = 0.5, w: int = 3,
     candidate pair set.
 
     Per-doc prefix selection is a doc-keyed ARRAY sort (never global:
-    each doc's (df, shingle) structs are collected and array_sort-ed
-    within one row — no window at all. The per-doc limit
+    shingle ids are dense ranks of the (df, shingle) order, so each
+    doc's ids are collected and array_sort-ed within one row into its
+    rarest-first prefix order — no window at all. The per-doc limit
     n - ceil(t*n) + 1 is DYNAMIC, which defeats Spark's
     WindowGroupLimit rewrite, so a window variant pays a full sort of
     the joined inverted index by (doc, df, shingle)). Candidates pass
@@ -888,33 +859,12 @@ def prefix_jaccard_pairs(docs_df, threshold: float = 0.5, w: int = 3,
     index (an array_intersect verify over per-doc shingle arrays was
     measured SLOWER — it ships both docs' arrays to every pair).
     """
-    if ds is None:
-        ds = shingle_sets(docs_df, w, id_col, text_col)
-    if dict(ds.dtypes).get("shingle") in ("int", "bigint"):
-        # dictionary-encoded index (shingle_sid_sets): ids are already
-        # dense ranks of the (df, shingle) order, so the per-doc sort
-        # IS the rarest-first prefix order — the freq join and the
-        # struct sort both disappear.
-        arr = (
-            ds.groupBy("doc_id")
-            .agg(F.array_sort(F.collect_list("shingle")).alias("sh"))
-            .select("doc_id", "sh", F.size("sh").alias("n"))
-            .localCheckpoint(eager=False)
-        )
-    else:
-        freq = ds.groupBy("shingle").agg(F.count("*").alias("df"))
-        arr = (
-            ds.join(freq, "shingle")
-            .groupBy("doc_id")
-            .agg(F.array_sort(
-                F.collect_list(F.struct("df", "shingle"))).alias("sarr"))
-            .select(
-                "doc_id",
-                F.expr("transform(sarr, s -> s.shingle)").alias("sh"),
-                F.size("sarr").alias("n"),
-            )
-            .localCheckpoint(eager=False)
-        )
+    arr = (
+        ds.groupBy("doc_id")
+        .agg(F.array_sort(F.collect_list("shingle")).alias("sh"))
+        .select("doc_id", "sh", F.size("sh").alias("n"))
+        .localCheckpoint(eager=False)
+    )
     prefix = arr.select(
         "doc_id", "n",
         F.posexplode(F.expr(
@@ -967,9 +917,7 @@ def prefix_jaccard_pairs(docs_df, threshold: float = 0.5, w: int = 3,
     )
 
 
-def shingle_containment_pairs(docs_df, thr_num: int = 4, thr_den: int = 5,
-                              w: int = 3, id_col: str = "doc_id",
-                              text_col: str = "text", ds=None):
+def shingle_containment_pairs(ds, thr_num: int, thr_den: int):
     """EXACT shingle-containment pairs — the ASYMMETRIC near-dup
     detector Jaccard misses: a short document pasted into a long one
     has tiny Jaccard (the union is dominated by the long doc) but
@@ -991,8 +939,6 @@ def shingle_containment_pairs(docs_df, thr_num: int = 4, thr_den: int = 5,
     Returns (id_a, id_b, i, n_a, n_b): id_a < id_b, i = shared
     distinct shingles, n_* = distinct-shingle set sizes.
     """
-    if ds is None:
-        ds = shingle_sets(docs_df, w, id_col, text_col)
     sizes = ds.groupBy("doc_id").agg(F.count("*").alias("n"))
     inter = (
         ds.select(F.col("doc_id").alias("id_a"), "shingle")

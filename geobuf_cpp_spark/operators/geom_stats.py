@@ -16,26 +16,26 @@ import pandas as pd
 from ..functions.geometry import polygon_area, wire_rings
 
 
-def areas(polygons_df, id_col: str = "admin_id", geom_col: str = "geom"):
+def areas(polygons_df):
     """(id, area) per polygon row."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, out = [], []
-            for pid, geom in zip(pdf[id_col], pdf[geom_col]):
+            for pid, geom in zip(pdf["admin_id"], pdf["geom"]):
                 rings = wire_rings(
                     geom["type"], geom["dim"], geom["lengths"], geom["coords"]
                 )
                 ids.append(int(pid))
                 out.append(polygon_area(rings))
-            yield pd.DataFrame({id_col: ids, "area": out})
+            yield pd.DataFrame({"admin_id": ids, "area": out})
 
-    return polygons_df.select(id_col, geom_col).mapInPandas(
-        gen, f"{id_col} long, area double"
+    return polygons_df.select("admin_id", "geom").mapInPandas(
+        gen, "admin_id long, area double"
     )
 
 
-def sql_bbox_exprs(geom_col: str = "geom") -> list[str]:
+def sql_bbox_exprs() -> list[str]:
     """JVM-side bounding box of a wire-struct geometry — pure Spark SQL
     array expressions, NO Python stage anywhere.
 
@@ -48,8 +48,8 @@ def sql_bbox_exprs(geom_col: str = "geom") -> list[str]:
     """
     def axis(sel: str, agg: str, name: str) -> str:
         return (
-            f"{agg}(filter(transform({geom_col}.coords, (c, i) -> "
-            f"struct(c AS c, i AS i)), s -> s.i % {geom_col}.dim = {sel})."
+            f"{agg}(filter(transform(geom.coords, (c, i) -> "
+            f"struct(c AS c, i AS i)), s -> s.i % geom.dim = {sel})."
             f"c) AS {name}"
         )
 
@@ -61,13 +61,12 @@ def sql_bbox_exprs(geom_col: str = "geom") -> list[str]:
     ]
 
 
-def bboxes(geoms_df, id_col: str = "line_id", geom_col: str = "geom"):
+def bboxes(geoms_df):
     """(id, xmin, ymin, xmax, ymax) per geometry row, all JVM-side."""
-    return geoms_df.selectExpr(id_col, *sql_bbox_exprs(geom_col))
+    return geoms_df.selectExpr("line_id", *sql_bbox_exprs())
 
 
-def centroids(polygons_df, id_col: str = "admin_id",
-              geom_col: str = "geom"):
+def centroids(polygons_df):
     """Multi-ring polygon centroid in exact scaled parts.
 
     Per row: (id, area, cx6, cy6) where area follows ``polygon_area``'s
@@ -88,7 +87,7 @@ def centroids(polygons_df, id_col: str = "admin_id",
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, areas_, cx6s, cy6s = [], [], [], []
-            for pid, geom in zip(pdf[id_col], pdf[geom_col]):
+            for pid, geom in zip(pdf["admin_id"], pdf["geom"]):
                 rings = wire_rings(
                     geom["type"], geom["dim"], geom["lengths"], geom["coords"]
                 )
@@ -110,9 +109,9 @@ def centroids(polygons_df, id_col: str = "admin_id",
                 cx6s.append(cx6)
                 cy6s.append(cy6)
             yield pd.DataFrame(
-                {id_col: ids, "area": areas_, "cx6": cx6s, "cy6": cy6s}
+                {"admin_id": ids, "area": areas_, "cx6": cx6s, "cy6": cy6s}
             )
 
-    return polygons_df.select(id_col, geom_col).mapInPandas(
-        gen, f"{id_col} long, area double, cx6 double, cy6 double"
+    return polygons_df.select("admin_id", "geom").mapInPandas(
+        gen, "admin_id long, area double, cx6 double, cy6 double"
     )

@@ -86,8 +86,8 @@ def triangle_counts(edges_df: DataFrame) -> DataFrame:
     )
 
 
-def pagerank(edges_df: DataFrame, nodes_df: DataFrame, n_iter: int = 5,
-             base: int = 10 ** 9, damp_pct: int = 85) -> DataFrame:
+def pagerank(edges_df: DataFrame, nodes_df: DataFrame, n_iter: int, base: int,
+             damp_pct: int) -> DataFrame:
     """Weighted PageRank in exact scaled-integer arithmetic — the crawl
     engine's frontier-prioritization score over the host link graph.
 

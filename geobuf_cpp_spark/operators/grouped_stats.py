@@ -48,8 +48,7 @@ def grouped_quantiles(df: DataFrame, group_col: str, value_col: str,
     return joined.groupBy(group_col).agg(*aggs)
 
 
-def mad_outliers(df: DataFrame, group_col: str, value_col: str,
-                 k: int = 3) -> DataFrame:
+def mad_outliers(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     """Robust per-group outlier detection via median absolute deviation
     — the data-quality monitor's workhorse (mean/stddev break down on
     the very outliers being hunted; medians don't).
@@ -58,7 +57,7 @@ def mad_outliers(df: DataFrame, group_col: str, value_col: str,
     `grouped_quantiles` is an actual data value (no interpolation — the
     float quantile of most engines is un-gateable), so the deviations
     ``|v - med|`` are exact integers and so is the MAD. A value is an
-    outlier when ``dev > k * mad`` (k=3 ~ the classic 2-sigma-ish
+    outlier when ``dev > 3 * mad`` (3 ~ the classic 2-sigma-ish
     cutoff for normal-ish data). Output: (group, n_rows, med, mad,
     n_outliers).
 
@@ -81,14 +80,14 @@ def mad_outliers(df: DataFrame, group_col: str, value_col: str,
             F.max("med").cast("long").alias("med"),
             F.max("mad").cast("long").alias("mad"),
             F.sum(
-                F.when(F.col("_dev") > k * F.col("mad"), 1).otherwise(0)
+                F.when(F.col("_dev") > 3 * F.col("mad"), 1).otherwise(0)
             ).cast("long").alias("n_outliers"),
         )
     )
 
 
 def trimmed_stats(df: DataFrame, group_col: str, value_col: str,
-                  trim_pct: int = 10) -> DataFrame:
+                  trim_pct: int) -> DataFrame:
     """Per-group trimmed statistics: drop the bottom and top
     ``trim_pct`` percent of rows BY RANK (floor(n * pct / 100) rows off
     each end — a count, so the cut is exact and engine-portable, unlike
@@ -131,9 +130,7 @@ def trimmed_stats(df: DataFrame, group_col: str, value_col: str,
     )
 
 
-def kanon_cells(pings: DataFrame, cell: int, k: int,
-                entity_col: str = "user_id", ts_col: str = "ts",
-                x_col: str = "ix", y_col: str = "iy") -> DataFrame:
+def kanon_cells(pings: DataFrame, cell: int, k: int) -> DataFrame:
     """k-anonymous mobility release: per (cell, day) visit counts with
     cells seen by fewer than ``k`` DISTINCT entities suppressed — the
     minimum privacy bar for publishing aggregate mobility (a cell-day
@@ -153,13 +150,13 @@ def kanon_cells(pings: DataFrame, cell: int, k: int,
     c = int(cell)
     return (
         pings.groupBy(
-            F.expr(f"{x_col} div {c}").alias("cx"),
-            F.expr(f"{y_col} div {c}").alias("cy"),
-            F.date_format(ts_col, "yyyy-MM-dd").alias("day"),
+            F.expr(f"ix div {c}").alias("cx"),
+            F.expr(f"iy div {c}").alias("cy"),
+            F.date_format("ts", "yyyy-MM-dd").alias("day"),
         )
         .agg(
             F.count("*").cast("long").alias("n_pings"),
-            F.countDistinct(entity_col).cast("long").alias("n_entities"),
+            F.countDistinct("user_id").cast("long").alias("n_entities"),
         )
         .filter(F.col("n_entities") >= int(k))
     )

@@ -10,14 +10,12 @@ already has:
 * snapshot-versioned tables (``sources.snapshots``: atomic CAS commits,
   time travel, CDC reads),
 
-giving a maintained SIGNATURE INDEX: build once over the corpus, then
-per batch (a) join only the batch's band keys against the index —
-the corpus itself contributes zero scan bytes; candidate volume is
-O(batch x collision rate) — and (b) append the batch's bands as a new
-snapshot version, so the next batch dedups against corpus + this one.
-Exactness matches the batch path: LSH candidates verified by exact
-shingle Jaccard, old-side texts fetched by id join (point lookups at
-scale, never a corpus scan).
+giving a persisted SIGNATURE INDEX: build once over the corpus, then
+per batch join only the batch's band keys against the index — the
+corpus itself contributes zero scan bytes; candidate volume is
+O(batch x collision rate). Exactness matches the batch path: LSH
+candidates verified by exact shingle Jaccard, old-side texts fetched by
+id join (point lookups at scale, never a corpus scan).
 """
 
 from __future__ import annotations
@@ -32,43 +30,32 @@ from ..sources.snapshots import read_snapshot, write_snapshot
 from .dedup import jaccard, minhash_bands, shingle_hashes
 
 
-def build_signature_index(docs_df: DataFrame, table_dir: str,
-                          id_col: str = "doc_id", text_col: str = "text",
-                          w: int = 3, seed: int = 42,
-                          mode: str = "overwrite") -> int:
-    """Persist the corpus's LSH band table as a snapshot version.
-
-    ``mode='append'`` is the per-batch maintenance path (the new
-    batch's bands join the lineage; CAS commit makes concurrent batch
-    writers safe). Returns the committed version.
+def build_signature_index(docs_df: DataFrame, table_dir: str) -> int:
+    """Persist the corpus's LSH band table as a new snapshot lineage
+    (an overwrite commit). Returns the committed version.
     """
-    bands = minhash_bands(docs_df, id_col, text_col, w, seed)
-    return write_snapshot(bands, table_dir, mode=mode)
+    bands = minhash_bands(docs_df)
+    return write_snapshot(bands, table_dir, mode="overwrite")
 
 
 def incremental_neardup(spark: SparkSession, batch_df: DataFrame,
                         corpus_df: DataFrame, table_dir: str,
-                        threshold: float = 0.5,
-                        id_col: str = "doc_id", text_col: str = "text",
-                        w: int = 3, seed: int = 42,
-                        max_bucket: int = 64,
-                        version: int | None = None) -> DataFrame:
+                        threshold: float) -> DataFrame:
     """(id_a=batch doc, id_b=corpus doc, jaccard) near-dup pairs of a
     NEW batch against the indexed corpus.
 
     The corpus is touched only twice, both bounded: the index read
     (N_BANDS rows/doc of (doc_id, band, bucket) — no text, no shingles)
     and the exact-verify text fetch for candidate ids (a semi-join-
-    sized id lookup). ``max_bucket`` caps degenerate index buckets, the
-    same skew guard as the batch LSH path. ``version`` time-travels the
-    index (dedup against the corpus AS OF a snapshot — reproducible
-    backfills).
+    sized id lookup). Index buckets above 64 docs are dropped, the
+    same skew guard as the batch LSH path. The latest index snapshot
+    is read.
     """
-    idx = read_snapshot(spark, table_dir, version=version)
+    idx = read_snapshot(spark, table_dir)
     idx = idx.withColumn(
         "bsize", F.count("*").over(Window.partitionBy("band", "bucket"))
-    ).filter(F.col("bsize") <= max_bucket)
-    nb = minhash_bands(batch_df, id_col, text_col, w, seed)
+    ).filter(F.col("bsize") <= 64)
+    nb = minhash_bands(batch_df)
     cand = (
         nb.select(F.col("doc_id").alias("id_a"), "band", "bucket")
         .join(idx.select(F.col("doc_id").alias("id_b"), "band", "bucket"),
@@ -76,10 +63,10 @@ def incremental_neardup(spark: SparkSession, batch_df: DataFrame,
         .select("id_a", "id_b")
         .distinct()
     )
-    texts_a = batch_df.select(F.col(id_col).alias("id_a"),
-                              F.col(text_col).alias("text_a"))
-    texts_b = corpus_df.select(F.col(id_col).alias("id_b"),
-                               F.col(text_col).alias("text_b"))
+    texts_a = batch_df.select(F.col("doc_id").alias("id_a"),
+                              F.col("text").alias("text_a"))
+    texts_b = corpus_df.select(F.col("doc_id").alias("id_b"),
+                               F.col("text").alias("text_b"))
     joined = cand.join(texts_a, "id_a").join(texts_b, "id_b")
 
     def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -88,8 +75,8 @@ def incremental_neardup(spark: SparkSession, batch_df: DataFrame,
             rows = []
             for id_a, id_b, ta, tb in zip(pdf["id_a"], pdf["id_b"],
                                           pdf["text_a"], pdf["text_b"]):
-                j = jaccard(shingle_hashes(ta, w, cache),
-                            shingle_hashes(tb, w, cache))
+                j = jaccard(shingle_hashes(ta, cache),
+                            shingle_hashes(tb, cache))
                 if j >= threshold:
                     rows.append((int(id_a), int(id_b), float(j)))
             yield pd.DataFrame(rows, columns=["id_a", "id_b", "jaccard"])

@@ -34,40 +34,36 @@ def _dist2(lon_col, lat_col, qlon_col, qlat_col):
     return dx * dx + dy * dy
 
 
-def knn_broadcast(points_df, queries_pdf: pd.DataFrame, k: int,
-                  lon_col: str = "lon", lat_col: str = "lat",
-                  id_cols: tuple[str, ...] = ("url", "feature_idx")):
+def knn_broadcast(points_df, queries_pdf: pd.DataFrame, k: int):
     """Exact kNN via broadcast cross join + windowed top-k."""
     spark = points_df.sparkSession
     q = spark.createDataFrame(
         queries_pdf.rename(columns={"lon": "q_lon", "lat": "q_lat"})
     )
     pairs = points_df.crossJoin(F.broadcast(q)).withColumn(
-        "dist2", _dist2(lon_col, lat_col, "q_lon", "q_lat")
+        "dist2", _dist2("lon", "lat", "q_lon", "q_lat")
     )
     w = Window.partitionBy("query_id").orderBy(
-        F.col("dist2").asc(), *[F.col(c).asc() for c in id_cols]
+        F.col("dist2").asc(), F.col("point_id").asc()
     )
     return (
         pairs.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", "rank", *id_cols, "dist2")
+        .select("query_id", "rank", "point_id", "dist2")
     )
 
 
-def knn_distributed(points_df, queries_df, k: int, res: int = 7,
-                    radius: int = 2,
-                    lon_col: str = "lon", lat_col: str = "lat",
-                    id_cols: tuple[str, ...] = ("url", "feature_idx")):
+def knn_distributed(points_df, queries_df, k: int):
     """Exact kNN with BOTH sides as DataFrames and no driver-side loop.
 
-    One pass: each query explodes to its Chebyshev-``radius`` cell disk
-    (pure JVM array expr), candidates arrive by cell equi-join, a window
-    takes the per-query top-k with the certification flag computed in the
-    SAME window partitioning (no extra shuffle). Queries whose kth distance
-    is not certified by the searched disk (kth > radius * min-cell-extent,
-    or fewer than k candidates) fall back to a broadcast cross join — still
-    set-exact, and at a sane ``radius`` the fallback set is a sliver.
+    One pass: each query explodes to its Chebyshev-radius-2 disk of
+    resolution-7 cells (pure JVM array expr), candidates arrive by cell
+    equi-join, a window takes the per-query top-k with the certification
+    flag computed in the SAME window partitioning (no extra shuffle).
+    Queries whose kth distance is not certified by the searched disk
+    (kth > 2 * min-cell-extent, or fewer than k candidates) fall back to a
+    broadcast cross join — still set-exact, and the fallback set is a
+    sliver.
     This is the shape that serves a large query TABLE without any
     driver-side per-query loop.
 
@@ -86,8 +82,8 @@ def knn_distributed(points_df, queries_df, k: int, res: int = 7,
     """
     from ..functions.cells import sql_ix, sql_iy, sql_ring_cells_grid
 
-    min_extent, _ = cell_size_deg(res)
-    certify2 = float((radius * min_extent) ** 2)
+    min_extent, _ = cell_size_deg(7)
+    certify2 = float((2 * min_extent) ** 2)
 
     # the query-side disk explode is a pure JVM array expression — no
     # Python stage anywhere in the certified path. Grid indices project
@@ -97,22 +93,22 @@ def knn_distributed(points_df, queries_df, k: int, res: int = 7,
         "query_id",
         "lat AS q_lat",
         "lon AS q_lon",
-        f"{sql_iy('lat', res)} AS _giy",
-        f"{sql_ix('lon', res)} AS _gix",
+        f"{sql_iy('lat', 7)} AS _giy",
+        f"{sql_ix('lon', 7)} AS _gix",
     ).select(
         "query_id",
         "q_lat",
         "q_lon",
         F.explode(
-            F.expr(sql_ring_cells_grid("_giy", "_gix", res, radius))
+            F.expr(sql_ring_cells_grid("_giy", "_gix", 7, 2))
         ).alias("cell"),
     )
-    pts = points_df.withColumn("cell", F.expr(sql_cell(lat_col, lon_col, res)))
+    pts = points_df.withColumn("cell", F.expr(sql_cell("lat", "lon", 7)))
     cand = pts.join(disk, "cell").withColumn(
-        "dist2", _dist2(lon_col, lat_col, "q_lon", "q_lat")
+        "dist2", _dist2("lon", "lat", "q_lon", "q_lat")
     )
     w = Window.partitionBy("query_id").orderBy(
-        F.col("dist2").asc(), *[F.col(c).asc() for c in id_cols]
+        F.col("dist2").asc(), F.col("point_id").asc()
     )
     # Certification rides the SAME partitioning as the top-k window: after
     # the rank cut, a second (unordered) window over query_id yields the
@@ -132,7 +128,7 @@ def knn_distributed(points_df, queries_df, k: int, res: int = 7,
             (F.count("*").over(w_all) >= k)
             & (F.max("dist2").over(w_all) < F.lit(certify2)),
         )
-        .select("query_id", "rank", *id_cols, "dist2", "_cert")
+        .select("query_id", "rank", "point_id", "dist2", "_cert")
     )
     # topk (Q x k rows) feeds the certified output and the fallback's
     # anti-join; without materialization each branch re-executes the
@@ -162,18 +158,17 @@ def knn_distributed(points_df, queries_df, k: int, res: int = 7,
         F.broadcast(certified_ids), "query_id", "left_anti"
     ).selectExpr("query_id", "lat AS q_lat", "lon AS q_lon")
     fb_pairs = points_df.crossJoin(F.broadcast(uncertified_q)).withColumn(
-        "dist2", _dist2(lon_col, lat_col, "q_lon", "q_lat")
+        "dist2", _dist2("lon", "lat", "q_lon", "q_lat")
     )
     fallback = (
         fb_pairs.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", "rank", *id_cols, "dist2")
+        .select("query_id", "rank", "point_id", "dist2")
     )
     return certified.unionByName(fallback)
 
 
-def knn_geo(points_df, queries_df, k: int,
-            point_id: str = "point_id", query_id: str = "query_id"):
+def knn_geo(points_df, queries_df, k: int):
     """Exact GEODETIC kNN: nearest neighbors by great-circle distance.
 
     Both sides carry centidegree lattice coords (ix, iy); distance is
@@ -191,10 +186,8 @@ def knn_geo(points_df, queries_df, k: int,
     # spread the points before the broadcast cross join: the partial
     # top-k (WindowGroupLimit) parallelizes per input partition, and a
     # single-file scan would otherwise sort points x queries on one core
-    p = spread(points_df).selectExpr(f"{point_id} AS point_id",
-                                     *sql_sphere_xyz("ix", "iy"))
-    q = queries_df.selectExpr(f"{query_id} AS query_id",
-                              *sql_sphere_xyz("ix", "iy", prefix="q"))
+    p = spread(points_df).selectExpr("point_id", *sql_sphere_xyz())
+    q = queries_df.selectExpr("query_id", *sql_sphere_xyz(prefix="q"))
     dx = F.col("sx") - F.col("qx")
     dy = F.col("sy") - F.col("qy")
     dz = F.col("sz") - F.col("qz")

@@ -16,21 +16,20 @@ from pyspark.sql import DataFrame, functions as F
 
 
 def merge_upsert(base: DataFrame, updates: DataFrame, keys: list[str],
-                 ts_col: str, tie_cols: list[str] | None = None) -> DataFrame:
+                 ts_col: str) -> DataFrame:
     """Current view of base ⊎ updates: latest row per key.
 
-    Ordering per key: ts desc, then updates-over-base, then
-    ``tie_cols`` ascending (pass columns forming a total order when the
-    same key can carry equal timestamps in one source; otherwise the
-    result would be nondeterministic and un-gateable).
+    Ordering per key: ts desc, then updates-over-base, then ``segment``
+    ascending (it completes a total order where the same key carries
+    equal timestamps in one source; otherwise the result would be
+    nondeterministic and un-gateable).
     """
     from pyspark.sql import Window
 
-    tie = [F.col(c).asc() for c in (tie_cols or [])]
     u = updates.withColumn("_src", F.lit(1))
     b = base.withColumn("_src", F.lit(0))
     w = Window.partitionBy(*keys).orderBy(
-        F.col(ts_col).desc(), F.col("_src").desc(), *tie)
+        F.col(ts_col).desc(), F.col("_src").desc(), F.col("segment").asc())
     return (
         u.unionByName(b)
         .withColumn("_rn", F.row_number().over(w))

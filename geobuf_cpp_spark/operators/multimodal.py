@@ -4,18 +4,12 @@ Image/audio/video payloads ride as ``binary`` columns with a typed metadata
 struct; all Spark-side plumbing (schema, partitioning by media kind, Arrow
 batch shape through ``mapInPandas``) is real and tested. Codecs:
 
-* ``png`` — REAL: a pure-Python PNG decoder (stdlib zlib inflate, chunk
-  walk, all five scanline defilters, 8-bit gray/RGB/gray+alpha/RGBA,
-  non-interlaced) — no imaging library needed, verified against a
-  test-side encoder over every filter type.
 * ``wav`` — REAL: a pure-stdlib RIFF/PCM parser (chunk walk with
   unknown-chunk skipping and odd-size padding, 8/16-bit PCM) plus a
   minimal PCM16 writer — see ``decode_wav``/``encode_wav`` below.
-* ``fake`` — the deterministic synthetic format below (default for the
-  synthetic corpus).
-* anything else (jpeg, webp, compressed audio) raises
-  ``NotImplementedError`` at the decode call site, never silently:
-  those libraries are not available in this container.
+* ``fake`` — the deterministic synthetic format below, the one
+  ``extract_media_features`` decodes (image codecs such as png or jpeg
+  need libraries this engine does not ship).
 
 Synthetic payload format (deterministic, seeded):
     bytes 0..3   magic b"FIMG" | b"FAUD"
@@ -27,7 +21,6 @@ Synthetic payload format (deterministic, seeded):
 from __future__ import annotations
 
 import struct
-import zlib
 from typing import Iterator
 
 import numpy as np
@@ -100,8 +93,8 @@ def synth_media_batch(ids: np.ndarray) -> pd.DataFrame:
     return pd.DataFrame(rows)
 
 
-def media_dataframe(spark, n: int, partitions: int | None = None):
-    parts = partitions or spark.sparkContext.defaultParallelism
+def media_dataframe(spark, n: int):
+    parts = spark.sparkContext.defaultParallelism
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -110,101 +103,8 @@ def media_dataframe(spark, n: int, partitions: int | None = None):
     return spark.range(0, n, numPartitions=parts).mapInPandas(gen, MEDIA_SCHEMA)
 
 
-PNG_SIG = b"\x89PNG\r\n\x1a\n"
-# channels per PNG color type (8-bit depth, non-interlaced)
-_PNG_CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}
-
-
-def decode_png(data: bytes) -> tuple[int, int, np.ndarray]:
-    """Pure-Python PNG decode -> (width, height, grayscale uint8 pixels).
-
-    Supports 8-bit gray / RGB / gray+alpha / RGBA, all five scanline
-    filters (None/Sub/Up/Average/Paeth), non-interlaced. Color images
-    reduce to grayscale by integer channel mean (alpha ignored) so every
-    codec yields the same (h*w,) byte-grid contract as the synthetic
-    format. Interlaced, paletted, or 16-bit PNGs raise loudly.
-    """
-    if data[:8] != PNG_SIG:
-        raise ValueError("not a PNG: bad signature")
-    pos, idat, hdr = 8, [], None
-    while pos + 8 <= len(data):
-        ln = int.from_bytes(data[pos:pos + 4], "big")
-        typ = data[pos + 4:pos + 8]
-        chunk = data[pos + 8:pos + 8 + ln]
-        pos += 12 + ln  # length + type + data + crc (crc not verified)
-        if typ == b"IHDR":
-            hdr = struct.unpack(">IIBBBBB", chunk)
-        elif typ == b"IDAT":
-            idat.append(chunk)
-        elif typ == b"IEND":
-            break
-    if hdr is None:
-        raise ValueError("PNG missing IHDR")
-    w, h, bit_depth, color_type, _comp, _filt, interlace = hdr
-    if bit_depth != 8 or interlace != 0 or color_type not in _PNG_CHANNELS:
-        raise NotImplementedError(
-            f"PNG bit_depth={bit_depth} color_type={color_type} "
-            f"interlace={interlace}: only 8-bit non-interlaced "
-            "gray/RGB/gray+alpha/RGBA is implemented"
-        )
-    ch = _PNG_CHANNELS[color_type]
-    stride = w * ch
-    raw = zlib.decompress(b"".join(idat))
-    if len(raw) != h * (stride + 1):
-        raise ValueError("PNG pixel data length mismatch")
-    out = np.empty((h, stride), dtype=np.uint8)
-    prev = np.zeros(stride, dtype=np.int64)
-    rpos = 0
-    for y in range(h):
-        ftype = raw[rpos]
-        line = np.frombuffer(raw, np.uint8, stride, rpos + 1).astype(np.int64)
-        rpos += 1 + stride
-        if ftype == 0:           # None
-            cur = line
-        elif ftype == 2:         # Up — vectorized (no intra-line recursion)
-            cur = (line + prev) & 255
-        elif ftype in (1, 3, 4):  # Sub / Average / Paeth: left-recursive
-            cur = np.zeros(stride, dtype=np.int64)
-            for x in range(stride):
-                a = cur[x - ch] if x >= ch else 0   # left
-                b = prev[x]                          # up
-                if ftype == 1:
-                    pred = a
-                elif ftype == 3:
-                    pred = (a + b) // 2
-                else:
-                    c = prev[x - ch] if x >= ch else 0  # upper-left
-                    pa, pb, pc = abs(b - c), abs(a - c), abs(a + b - 2 * c)
-                    pred = a if pa <= pb and pa <= pc else (
-                        b if pb <= pc else c)
-                cur[x] = (line[x] + pred) & 255
-        else:
-            raise ValueError(f"PNG filter type {ftype} out of range")
-        out[y] = cur.astype(np.uint8)
-        prev = cur
-    px = out.reshape(h, w, ch)
-    if color_type == 0:
-        gray = px[:, :, 0]
-    elif color_type == 4:        # gray + alpha: alpha ignored
-        gray = px[:, :, 0]
-    else:                        # RGB(A): integer channel mean of RGB
-        gray = (px[:, :, :3].astype(np.int64).sum(axis=2) // 3).astype(
-            np.uint8)
-    return w, h, gray.reshape(-1)
-
-
-def decode_stub(payload: bytes, codec: str = "fake") -> tuple[int, int, np.ndarray]:
-    """Decode dispatch. ``png`` is a real pure-Python decoder;
-    ``fake`` parses the synthetic format; any other codec name documents
-    exactly what's missing in this environment."""
-    if codec == "png":
-        return decode_png(bytes(payload))
-    if codec != "fake":
-        raise NotImplementedError(
-            f"media codec '{codec}' requires imaging/audio libraries not "
-            "present in this container; available codecs: 'png' (pure-"
-            "Python) and the deterministic 'fake'"
-        )
+def decode_stub(payload: bytes) -> tuple[int, int, np.ndarray]:
+    """Decode a synthetic ``fake`` payload -> (width, height, body)."""
     magic, w, h = payload[:4], *struct.unpack("<II", payload[4:12])
     if magic not in (b"FIMG", b"FAUD"):
         raise ValueError(f"bad magic {magic!r}")
@@ -212,7 +112,7 @@ def decode_stub(payload: bytes, codec: str = "fake") -> tuple[int, int, np.ndarr
     return w, h, body
 
 
-def extract_media_features(media_df, codec: str = "fake", n_features: int = 8):
+def extract_media_features(media_df):
     """Arrow-batched decode + feature extraction (a pooled byte histogram —
     the stand-in for an embedding model's output, shape-correct end to end).
     """
@@ -223,8 +123,8 @@ def extract_media_features(media_df, codec: str = "fake", n_features: int = 8):
             for mid, kind, payload in zip(
                 pdf["media_id"], pdf["kind"], pdf["payload"]
             ):
-                w, h, body = decode_stub(bytes(payload), codec)
-                hist, _ = np.histogram(body, bins=n_features, range=(0, 256))
+                w, h, body = decode_stub(bytes(payload))
+                hist, _ = np.histogram(body, bins=8, range=(0, 256))
                 denom = max(int(body.size), 1)
                 rows.append(
                     {
@@ -257,7 +157,7 @@ def media_stats(media_df):
 
 
 # ---------------------------------------------------------------------------
-# WAV (RIFF PCM) — the second REAL codec after PNG: pure-stdlib parse,
+# WAV (RIFF PCM) — the REAL codec: pure-stdlib parse,
 # no audio library needed.
 # ---------------------------------------------------------------------------
 
@@ -307,15 +207,13 @@ def decode_wav(data: bytes) -> tuple[int, int, np.ndarray]:
     return rate, channels, samples
 
 
-def encode_wav(samples: np.ndarray, rate: int, channels: int = 1,
-               extra_chunk: bytes = b"") -> bytes:
-    """Minimal PCM16 WAV writer (the synth side of the round-trip).
-    ``extra_chunk`` is spliced in BEFORE fmt/data to exercise the
+def encode_wav(samples: np.ndarray, rate: int) -> bytes:
+    """Minimal mono PCM16 WAV writer (the synth side of the round-trip).
+    A 4-byte LIST chunk is spliced in BEFORE fmt/data to exercise the
     parser's unknown-chunk skipping."""
     pcm = np.asarray(samples, dtype="<i2").tobytes()
-    fmt = struct.pack("<HHIIHH", 1, channels, rate,
-                      rate * channels * 2, channels * 2, 16)
-    chunks = extra_chunk
+    fmt = struct.pack("<HHIIHH", 1, 1, rate, rate * 2, 2, 16)
+    chunks = b"LIST" + struct.pack("<I", 4) + b"INFO"
     chunks += b"fmt " + struct.pack("<I", len(fmt)) + fmt
     chunks += b"data" + struct.pack("<I", len(pcm)) + pcm
     if len(pcm) & 1:
@@ -345,14 +243,13 @@ def synth_wav_batch(ids: np.ndarray) -> pd.DataFrame:
         n, hp, a = _wav_params(i)
         t = np.arange(n, dtype=np.int64)
         s = np.where((t // hp) % 2 == 0, a, -a)
-        payload = encode_wav(
-            s, WAV_RATE, extra_chunk=b"LIST" + struct.pack("<I", 4) + b"INFO")
+        payload = encode_wav(s, WAV_RATE)
         rows.append({"media_id": i, "payload": payload})
     return pd.DataFrame(rows)
 
 
-def wav_dataframe(spark, n: int, partitions: int | None = None):
-    parts = partitions or spark.sparkContext.defaultParallelism
+def wav_dataframe(spark, n: int):
+    parts = spark.sparkContext.defaultParallelism
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -23,9 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def nearest_box(points: DataFrame, boxes: DataFrame,
-                x_col: str = "ix", y_col: str = "iy",
-                id_col: str = "point_id") -> DataFrame:
+def nearest_box(points: DataFrame, boxes: DataFrame) -> DataFrame:
     """(point_id, admin_id, d2): closest box by squared clamped axis
     distance, ties broken by the smaller admin_id. Points inside a box
     get d2 = 0 (distance to the CLOSED box — both edges inclusive)."""
@@ -33,13 +31,13 @@ def nearest_box(points: DataFrame, boxes: DataFrame,
 
     points = spread(points)  # parallelize the map-side min(struct) partial
     dx = F.greatest(
-        F.col("lon0") - F.col(x_col),
-        F.col(x_col) - F.col("lon1"),
+        F.col("lon0") - F.col("ix"),
+        F.col("ix") - F.col("lon1"),
         F.lit(0),
     ).cast("long")
     dy = F.greatest(
-        F.col("lat0") - F.col(y_col),
-        F.col(y_col) - F.col("lat1"),
+        F.col("lat0") - F.col("iy"),
+        F.col("iy") - F.col("lat1"),
         F.lit(0),
     ).cast("long")
     pairs = points.crossJoin(F.broadcast(boxes)).withColumn(
@@ -49,18 +47,17 @@ def nearest_box(points: DataFrame, boxes: DataFrame,
     # hash aggregate with map-side partials, no window, no shuffle of
     # anything wider than (id, best-struct)
     return (
-        pairs.groupBy(id_col)
+        pairs.groupBy("point_id")
         .agg(F.min(F.struct("d2", "admin_id")).alias("_b"))
         .select(
-            id_col,
+            "point_id",
             F.col("_b.admin_id").alias("admin_id"),
             F.col("_b.d2").alias("d2"),
         )
     )
 
 
-def nearest_center_geo(points: DataFrame, centers: DataFrame,
-                       id_col: str = "point_id") -> DataFrame:
+def nearest_center_geo(points: DataFrame, centers: DataFrame) -> DataFrame:
     """(point_id, admin_id, c2): closest admin CENTER by great-circle
     distance — exact integer chord-squared on quantized unit-sphere
     vectors (range_join.sql_sphere_xyz), monotone with the geodesic, so
@@ -79,10 +76,8 @@ def nearest_center_geo(points: DataFrame, centers: DataFrame,
 
     # spread before the broadcast cross join: the map-side partial of
     # the min(struct) aggregate parallelizes per input partition
-    p = spread(points).selectExpr(f"{id_col} AS point_id",
-                                  *sql_sphere_xyz("ix", "iy"))
-    c = centers.selectExpr("admin_id", *sql_sphere_xyz("ix", "iy",
-                                                       prefix="q"))
+    p = spread(points).selectExpr("point_id", *sql_sphere_xyz())
+    c = centers.selectExpr("admin_id", *sql_sphere_xyz(prefix="q"))
     dx = F.col("sx") - F.col("qx")
     dy = F.col("sy") - F.col("qy")
     dz = F.col("sz") - F.col("qz")

@@ -25,9 +25,8 @@ IPV4_TOKEN = "<IP>"
 PHONE_TOKEN = "<PHONE>"
 
 
-def scrub_pii(docs_df: DataFrame, id_col: str = "doc_id",
-              text_col: str = "text") -> DataFrame:
-    """Redact PII in ``text_col``; emit per-doc match counts and the
+def scrub_pii(docs_df: DataFrame) -> DataFrame:
+    """Redact PII in ``text``; emit per-doc match counts and the
     redacted text.
 
     Output: (id, n_emails, n_ips, n_phones, clean_text). Each count is
@@ -35,12 +34,12 @@ def scrub_pii(docs_df: DataFrame, id_col: str = "doc_id",
     the original, IPs after email redaction, phones after both), so the
     counts always equal the number of substitutions actually made.
     """
-    t = F.col(text_col)
+    t = F.col("text")
     after_email = F.regexp_replace(t, EMAIL_RE, EMAIL_TOKEN)
     after_ip = F.regexp_replace(after_email, IPV4_RE, IPV4_TOKEN)
     clean = F.regexp_replace(after_ip, PHONE_RE, PHONE_TOKEN)
     return docs_df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.regexp_count(t, F.lit(EMAIL_RE)).cast("long").alias("n_emails"),
         F.regexp_count(after_email, F.lit(IPV4_RE)).cast("long").alias("n_ips"),
         F.regexp_count(after_ip, F.lit(PHONE_RE)).cast("long").alias("n_phones"),

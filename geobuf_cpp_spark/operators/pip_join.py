@@ -50,7 +50,7 @@ def _rings(geom) -> list[np.ndarray]:
     return wire_rings(geom["type"], geom["dim"], geom["lengths"], geom["coords"])
 
 
-def _refine(candidates, out_cols: list[str], lon_col: str, lat_col: str,
+def _refine(candidates, out_cols: list[str],
             rings: dict[int, list[np.ndarray]] | None = None):
     """Exact refine: keep the candidate rows whose point lies in their
     ``admin_id`` polygon, projected to ``out_cols``. The rings come from
@@ -65,8 +65,8 @@ def _refine(candidates, out_cols: list[str], lon_col: str, lat_col: str,
     def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             keep = np.zeros(len(pdf), dtype=bool)
-            px = pdf[lon_col].to_numpy(dtype=np.float64)
-            py = pdf[lat_col].to_numpy(dtype=np.float64)
+            px = pdf["lon"].to_numpy(dtype=np.float64)
+            py = pdf["lat"].to_numpy(dtype=np.float64)
             for admin_id, idx in pdf.groupby("admin_id").indices.items():
                 poly = (rings[int(admin_id)] if rings is not None
                         else _rings(pdf["geom"].iloc[idx[0]]))
@@ -76,9 +76,7 @@ def _refine(candidates, out_cols: list[str], lon_col: str, lat_col: str,
     return candidates.mapInPandas(refine, out_schema)
 
 
-def pip_join_large(points_df, polygons_df, res: int = 8,
-                   lon_col: str = "lon", lat_col: str = "lat",
-                   point_keys: tuple[str, ...] = ("url", "feature_idx")):
+def pip_join_large(points_df, polygons_df, res: int):
     """PIP join where BOTH sides are distributed tables.
 
     The broadcast variant (``pip_join``) assumes the polygon side fits on
@@ -114,13 +112,12 @@ def pip_join_large(points_df, polygons_df, res: int = 8,
     poly_cover = polygons_df.select("admin_id", "geom").mapInPandas(
         cover, f"admin_id long, cell long, geom {GEOM_STRUCT}"
     )
-    pts = points_df.withColumn("cell", F.expr(sql_cell(lat_col, lon_col, res)))
+    pts = points_df.withColumn("cell", F.expr(sql_cell("lat", "lon", res)))
     candidates = pts.join(poly_cover, "cell")
-    return _refine(candidates, [*point_keys, "admin_id"], lon_col, lat_col)
+    return _refine(candidates, ["point_id", "admin_id"])
 
 
 def pip_join(points_df, admin_pdf: pd.DataFrame, res: int = 8,
-             lon_col: str = "lon", lat_col: str = "lat",
              exact_cover: bool = False):
     """Exact PIP join of a points DataFrame against a small polygon table.
 
@@ -137,7 +134,7 @@ def pip_join(points_df, admin_pdf: pd.DataFrame, res: int = 8,
         int(admin_id): _rings(geom)
         for admin_id, geom in zip(admin_pdf["admin_id"], admin_pdf["geom"])
     }
-    pts = points_df.withColumn("cell", F.expr(sql_cell(lat_col, lon_col, res)))
+    pts = points_df.withColumn("cell", F.expr(sql_cell("lat", "lon", res)))
     candidates = pts.join(F.broadcast(cover), "cell")
     out_cols = [c for c in candidates.columns if c != "cell"]
-    return _refine(candidates, out_cols, lon_col, lat_col, rings)
+    return _refine(candidates, out_cols, rings)

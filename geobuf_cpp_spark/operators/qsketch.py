@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 QSKETCH_M = 5          # sub-bucket bits per octave: 32 buckets, 3.1% width
 
 
-def sql_qbucket(v: str, m: int = QSKETCH_M) -> str:
+def sql_qbucket(v: str) -> str:
     """Shared SQL text for the log-linear bucket of a BIGINT ``v >= 0``.
 
     One CASE branch per octave keeps every divisor a CONSTANT power of
@@ -50,24 +50,25 @@ def sql_qbucket(v: str, m: int = QSKETCH_M) -> str:
     whens = []
     for e in range(63):
         hi = 1 << (e + 1)
-        if e <= m:
+        if e <= QSKETCH_M:
             expr = f"({v})"
         else:
-            expr = f"({(e - m) * (1 << m)} + ({v}) div {1 << (e - m)})"
+            expr = (f"({(e - QSKETCH_M) * (1 << QSKETCH_M)} + ({v}) div "
+                    f"{1 << (e - QSKETCH_M)})")
         whens.append(f"WHEN ({v}) < {hi} THEN {expr}")
     return ("(CASE WHEN (" + v + ") < 0 THEN NULL "
             + " ".join(whens) + " ELSE NULL END)")
 
 
-def quantile_sketch(df: DataFrame, value_sql: str, group_col: str,
-                    m: int = QSKETCH_M) -> DataFrame:
+def quantile_sketch(df: DataFrame, value_sql: str,
+                    group_col: str) -> DataFrame:
     """Build the per-group sketch: (grp, bucket, n, vmin, vmax).
 
     ``value_sql`` is a SQL expression over ``df``'s columns yielding a
     non-negative BIGINT (negative values map to a NULL bucket and are
     dropped — document the domain at the call site).
     """
-    b = sql_qbucket(value_sql, m)
+    b = sql_qbucket(value_sql)
     return (
         df.selectExpr(f"{group_col} AS grp",
                       f"CAST({b} AS BIGINT) AS bucket",
@@ -94,8 +95,7 @@ def merge_sketches(*sketches: DataFrame) -> DataFrame:
 
 
 def sketch_quantiles(sketch: DataFrame,
-                     probs_bp: tuple[int, ...] = (5000, 9000, 9900)
-                     ) -> DataFrame:
+                     probs_bp: tuple[int, ...]) -> DataFrame:
     """Resolve quantiles from a sketch by exact integer rank walk.
 
     For each probability (basis points), rank = ceil(total * p/10000);

@@ -40,9 +40,7 @@ from pyspark.sql import DataFrame, functions as F
 SPHERE_SCALE = 10**9        # quantized unit-sphere coordinate scale
 
 
-def sql_sphere_xyz(ix: str = "ix", iy: str = "iy",
-                   scale: int = SPHERE_SCALE,
-                   prefix: str = "s") -> list[str]:
+def sql_sphere_xyz(prefix: str = "s") -> list[str]:
     """Shared SQL (list of three ``expr AS name`` strings):
     centidegree lattice -> quantized unit-sphere BIGINTs.
 
@@ -52,27 +50,27 @@ def sql_sphere_xyz(ix: str = "ix", iy: str = "iy",
     downstream is pure BIGINT — empirically verified identical between
     Spark's Math and DuckDB's libm over the entire 150k-point sf0.1
     lattice (deterministic inputs make that a fixed property, not a
-    probability; scripts in round-5 notes). scale=1e9 keeps chord^2
+    probability; scripts in round-5 notes). SPHERE_SCALE=1e9 keeps chord^2
     <= 4e18 < 2^63.
     """
-    lat = f"radians((({iy}) - 8500) / 100.0)"
-    lon = f"radians((({ix}) - 18000) / 100.0)"
+    lat = "radians(((iy) - 8500) / 100.0)"
+    lon = "radians(((ix) - 18000) / 100.0)"
     return [
-        f"CAST(round({scale} * cos({lat}) * cos({lon})) AS BIGINT) "
+        f"CAST(round({SPHERE_SCALE} * cos({lat}) * cos({lon})) AS BIGINT) "
         f"AS {prefix}x",
-        f"CAST(round({scale} * cos({lat}) * sin({lon})) AS BIGINT) "
+        f"CAST(round({SPHERE_SCALE} * cos({lat}) * sin({lon})) AS BIGINT) "
         f"AS {prefix}y",
-        f"CAST(round({scale} * sin({lat})) AS BIGINT) AS {prefix}z",
+        f"CAST(round({SPHERE_SCALE} * sin({lat})) AS BIGINT) AS {prefix}z",
     ]
 
 
-def chord_threshold(radius_cdeg: int, scale: int = SPHERE_SCALE) -> int:
+def chord_threshold(radius_cdeg: int) -> int:
     """T such that great-circle distance <= radius (centidegrees) iff
     quantized chord^2 <= T^2 (up to the +-sqrt(3) quantization band,
     where classification is deterministic in both engines): the chord
     of angle theta on the scaled sphere is 2*scale*sin(theta/2)."""
     theta = math.radians(radius_cdeg / 100.0)
-    return round(2 * scale * math.sin(theta / 2.0))
+    return round(2 * SPHERE_SCALE * math.sin(theta / 2.0))
 
 
 def geo_band_widths(radius_cdeg: int) -> list[tuple[int, int]]:
@@ -97,9 +95,7 @@ def geo_band_widths(radius_cdeg: int) -> list[tuple[int, int]]:
     return out
 
 
-def geo_self_join(points: DataFrame, radius_cdeg: int,
-                  id_col: str = "point_id",
-                  scale: int = SPHERE_SCALE) -> DataFrame:
+def geo_self_join(points: DataFrame, radius_cdeg: int) -> DataFrame:
     """All unordered pairs within a GREAT-CIRCLE radius (centidegrees).
 
     The geodetic sibling of ``range_self_join``: the planar grid is
@@ -118,10 +114,10 @@ def geo_self_join(points: DataFrame, radius_cdeg: int,
     assert 0 < r < 8500, "radius must be positive centidegrees < 85 deg"
     spark = points.sparkSession
     bands = spark.createDataFrame(geo_band_widths(r), "band long, w long")
-    t2 = chord_threshold(r, scale) ** 2
+    t2 = chord_threshold(r) ** 2
 
     base = points.selectExpr(
-        f"{id_col} AS pid", "ix", "iy", *sql_sphere_xyz("ix", "iy", scale)
+        "point_id AS pid", "ix", "iy", *sql_sphere_xyz()
     ).withColumn("band", F.expr(f"iy div {r}"))
 
     # build: one (band, lon-cell) per point + antimeridian ghosts. The
@@ -173,44 +169,26 @@ def geo_self_join(points: DataFrame, radius_cdeg: int,
 
 
 def range_self_join(points: DataFrame, radius: int,
-                    id_col: str = "point_id",
-                    x_col: str = "ix", y_col: str = "iy",
                     wrap_x: int | None = None) -> DataFrame:
-    """All unordered pairs (id_a < id_b) within ``radius`` (integer planar).
+    """All unordered pairs (id_a < id_b) within ``radius`` (integer
+    planar), grid-blocked; see module docstring for the plan.
 
     Returns (id_a, id_b, d2) with d2 the exact squared distance.
-    With ``wrap_x``, a seam-crossing pair is found exactly once: probing
-    either endpoint hits the other's ghost, yielding the two orderings,
-    and the id_a < id_b cut keeps one.
-    """
-    return range_join(points, points, radius, id_col, id_col,
-                      x_col, y_col, x_col, y_col, dedupe_self=True,
-                      wrap_x=wrap_x)
-
-
-def range_join(left: DataFrame, right: DataFrame, radius: int,
-               left_id: str = "point_id", right_id: str = "point_id",
-               lx: str = "ix", ly: str = "iy",
-               rx: str = "ix", ry: str = "iy",
-               dedupe_self: bool = False,
-               wrap_x: int | None = None) -> DataFrame:
-    """Grid-blocked distance join; see module docstring for the plan.
-
-    ``dedupe_self`` emits each unordered pair once via id_a < id_b
-    (self-join contract); otherwise all ordered (left, right) matches.
-
     ``wrap_x`` enables antimeridian ghosting: x coordinates wrap with
-    that period (both sides must lie in [0, wrap_x)), and the reported
-    d2 uses the wrapped x difference. Requires wrap_x > 2 * radius.
+    that period (points must lie in [0, wrap_x)), and the reported d2
+    uses the wrapped x difference. Requires wrap_x > 2 * radius. A
+    seam-crossing pair is found exactly once: probing either endpoint
+    hits the other's ghost, yielding the two orderings, and the
+    id_a < id_b cut keeps one.
     """
     r = int(radius)
     assert r > 0, "radius must be a positive integer"
 
     # build side: one cell per point
-    bsrc = right.select(
-        F.col(right_id).alias("id_b"),
-        F.col(rx).cast("long").alias("bx"),
-        F.col(ry).cast("long").alias("by"),
+    bsrc = points.select(
+        F.col("point_id").alias("id_b"),
+        F.col("ix").cast("long").alias("bx"),
+        F.col("iy").cast("long").alias("by"),
     )
     if wrap_x is not None:
         period = int(wrap_x)
@@ -242,11 +220,11 @@ def range_join(left: DataFrame, right: DataFrame, radius: int,
     off = F.expr("explode(transform(sequence(0, 8), i -> "
                  "struct(i div 3 - 1 AS dx, i % 3 - 1 AS dy)))")
     p = (
-        left.select(
-            F.col(left_id).alias("id_a"),
-            F.col(lx).alias("ax"), F.col(ly).alias("ay"),
-            F.floor(F.col(lx) / r).cast("long").alias("pcx"),
-            F.floor(F.col(ly) / r).cast("long").alias("pcy"),
+        points.select(
+            F.col("point_id").alias("id_a"),
+            F.col("ix").alias("ax"), F.col("iy").alias("ay"),
+            F.floor(F.col("ix") / r).cast("long").alias("pcx"),
+            F.floor(F.col("iy") / r).cast("long").alias("pcy"),
         )
         .select("id_a", "ax", "ay", "pcx", "pcy", off.alias("o"))
         .select(
@@ -260,9 +238,8 @@ def range_join(left: DataFrame, right: DataFrame, radius: int,
     pairs = (
         p.join(b, on=["cx", "cy"])
         .where(dx * dx + dy * dy <= F.lit(r) * F.lit(r))
+        .where(F.col("id_a") < F.col("id_b"))
     )
-    if dedupe_self:
-        pairs = pairs.where(F.col("id_a") < F.col("id_b"))
     return pairs.select(
         "id_a", "id_b", (dx * dx + dy * dy).cast("long").alias("d2")
     )

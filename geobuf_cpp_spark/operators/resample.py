@@ -6,7 +6,7 @@ observation per (key, bucket) with a deterministic (ts, id) tie-break,
 generate the dense bucket range per key with ``sequence()``, left-join,
 then carry values forward with ``last(ignorenulls=True)`` over an
 unbounded-preceding window. No Python operator anywhere; bucket math is
-integer (unix_millis div bucket_ms), so the gated output is exact — the
+integer (unix_millis div HOUR_MS), so the gated output is exact — the
 carried value is SELECTED, never arithmetically recombined, which keeps
 float hash parity with the DuckDB oracle trivially.
 
@@ -27,10 +27,7 @@ from pyspark.sql import functions as F
 HOUR_MS = 3_600_000
 
 
-def gapfill_locf(events_df: DataFrame, bucket_ms: int = HOUR_MS,
-                 key_col: str = "user_id", ts_col: str = "ts",
-                 val_col: str = "value", id_col: str = "event_id",
-                 ) -> DataFrame:
+def gapfill_locf(events_df: DataFrame) -> DataFrame:
     """Dense per-key series: (key, bucket, v_locf) for EVERY bucket in
     [min, max] of the key's observed range; v_locf is the value of the
     latest event at-or-before the bucket's end, carried forward across
@@ -41,13 +38,13 @@ def gapfill_locf(events_df: DataFrame, bucket_ms: int = HOUR_MS,
     # column needs the cast, and the session runs UTC so it is exact
     # (same anchor as streaming/sessions.sessionize_batch)
     bk = F.expr(
-        f"unix_micros(cast({ts_col} as timestamp)) div {bucket_ms * 1000}")
+        f"unix_micros(cast(ts as timestamp)) div {HOUR_MS * 1000}")
     x = events_df.select(
-        F.col(key_col).alias("key"),
+        F.col("user_id").alias("key"),
         bk.alias("bucket"),
-        F.col(val_col).alias("v"),
-        F.col(ts_col).alias("_ts"),
-        F.col(id_col).alias("_id"),
+        F.col("value").alias("v"),
+        F.col("ts").alias("_ts"),
+        F.col("event_id").alias("_id"),
     )
     w_pick = Window.partitionBy("key", "bucket").orderBy(
         F.desc("_ts"), F.desc("_id"))
@@ -66,16 +63,13 @@ def gapfill_locf(events_df: DataFrame, bucket_ms: int = HOUR_MS,
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return joined.select(
-        F.col("key").alias(key_col),
+        F.col("key").alias("user_id"),
         F.col("bucket").cast("long").alias("bucket"),
         F.last("v", ignorenulls=True).over(w_locf).alias("v_locf"),
     )
 
 
-def sliding_stats(events_df: DataFrame, win_s: int = 7200,
-                  hop_s: int = 3600, key_col: str = "event_type",
-                  ts_col: str = "ts", val_col: str = "value",
-                  ) -> DataFrame:
+def sliding_stats(events_df: DataFrame) -> DataFrame:
     """Overlapping (sliding) time-window aggregation: per (window start,
     key): event count and min/max value.
 
@@ -86,21 +80,19 @@ def sliding_stats(events_df: DataFrame, win_s: int = 7200,
     aggregate; min/max are selections, never arithmetic, so the double
     columns stay hash-exact against the oracle.
     """
-    assert win_s % hop_s == 0, "window must be a multiple of the hop"
-    w = F.window(
-        F.col(ts_col), f"{win_s} seconds", f"{hop_s} seconds")
+    w = F.window(F.col("ts"), "7200 seconds", "3600 seconds")
     return (
         events_df.groupBy(
-            w.alias("w"), F.col(key_col).alias("key"))
+            w.alias("w"), F.col("event_type").alias("key"))
         .agg(
             F.count("*").cast("long").alias("n_events"),
-            F.min(val_col).alias("v_min"),
-            F.max(val_col).alias("v_max"),
+            F.min("value").alias("v_min"),
+            F.max("value").alias("v_max"),
         )
         .select(
             F.expr("unix_micros(cast(w.start as timestamp)) div 1000000")
             .alias("win_start"),
-            F.col("key").alias(key_col),
+            F.col("key").alias("event_type"),
             "n_events", "v_min", "v_max",
         )
     )

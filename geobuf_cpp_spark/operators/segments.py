@@ -39,7 +39,7 @@ def _onseg(px: str, py: str, qx: str, qy: str, rx: str, ry: str) -> str:
             f"GREATEST({py}, {qy}))")
 
 
-def sql_segments_intersect(a: str = "a_", b: str = "b_") -> str:
+def sql_segments_intersect() -> str:
     """CLRS SEGMENTS-INTERSECT over columns {a}ax..{a}by and {b}ax..{b}by.
 
     True iff the closed segments share at least one point (proper
@@ -47,32 +47,31 @@ def sql_segments_intersect(a: str = "a_", b: str = "b_") -> str:
     must be integers with |coord| < ~2^30 so the cross products stay in
     BIGINT range.
     """
-    d1 = _cross(f"{a}ax", f"{a}ay", f"{a}bx", f"{a}by", f"{b}ax", f"{b}ay")
-    d2 = _cross(f"{a}ax", f"{a}ay", f"{a}bx", f"{a}by", f"{b}bx", f"{b}by")
-    d3 = _cross(f"{b}ax", f"{b}ay", f"{b}bx", f"{b}by", f"{a}ax", f"{a}ay")
-    d4 = _cross(f"{b}ax", f"{b}ay", f"{b}bx", f"{b}by", f"{a}bx", f"{a}by")
+    d1 = _cross("a_ax", "a_ay", "a_bx", "a_by", "b_ax", "b_ay")
+    d2 = _cross("a_ax", "a_ay", "a_bx", "a_by", "b_bx", "b_by")
+    d3 = _cross("b_ax", "b_ay", "b_bx", "b_by", "a_ax", "a_ay")
+    d4 = _cross("b_ax", "b_ay", "b_bx", "b_by", "a_bx", "a_by")
     proper = (f"((({d1}) > 0 AND ({d2}) < 0) OR (({d1}) < 0 AND ({d2}) > 0))"
               f" AND ((({d3}) > 0 AND ({d4}) < 0) OR "
               f"(({d3}) < 0 AND ({d4}) > 0))")
     touch = " OR ".join([
         f"(({d1}) = 0 AND "
-        + _onseg(f"{a}ax", f"{a}ay", f"{a}bx", f"{a}by",
-                 f"{b}ax", f"{b}ay") + ")",
+        + _onseg("a_ax", "a_ay", "a_bx", "a_by",
+                 "b_ax", "b_ay") + ")",
         f"(({d2}) = 0 AND "
-        + _onseg(f"{a}ax", f"{a}ay", f"{a}bx", f"{a}by",
-                 f"{b}bx", f"{b}by") + ")",
+        + _onseg("a_ax", "a_ay", "a_bx", "a_by",
+                 "b_bx", "b_by") + ")",
         f"(({d3}) = 0 AND "
-        + _onseg(f"{b}ax", f"{b}ay", f"{b}bx", f"{b}by",
-                 f"{a}ax", f"{a}ay") + ")",
+        + _onseg("b_ax", "b_ay", "b_bx", "b_by",
+                 "a_ax", "a_ay") + ")",
         f"(({d4}) = 0 AND "
-        + _onseg(f"{b}ax", f"{b}ay", f"{b}bx", f"{b}by",
-                 f"{a}bx", f"{a}by") + ")",
+        + _onseg("b_ax", "b_ay", "b_bx", "b_by",
+                 "a_bx", "a_by") + ")",
     ])
     return f"(({proper}) OR {touch})"
 
 
-def segment_intersections(segs: DataFrame, cell_size: int,
-                          id_col: str = "seg_id") -> DataFrame:
+def segment_intersections(segs: DataFrame, cell_size: int) -> DataFrame:
     """(id_a, id_b) for every intersecting unordered segment pair.
 
     Size ``cell_size`` >= the max per-axis segment extent so each bbox
@@ -85,7 +84,7 @@ def segment_intersections(segs: DataFrame, cell_size: int,
     c = int(cell_size)
     assert c > 0
     spans = segs.selectExpr(
-        f"{id_col} AS sid", "ax", "ay", "bx", "by",
+        "seg_id AS sid", "ax", "ay", "bx", "by",
         f"CAST(floor(LEAST(ax, bx) / {c}) AS BIGINT) AS cx0",
         f"CAST(floor(GREATEST(ax, bx) / {c}) AS BIGINT) AS cx1",
         f"CAST(floor(LEAST(ay, by) / {c}) AS BIGINT) AS cy0",
@@ -116,7 +115,7 @@ def segment_intersections(segs: DataFrame, cell_size: int,
     )
 
 
-def sql_point_segment_within(r: int, p: str = "p_", s: str = "s_") -> str:
+def sql_point_segment_within(r: int) -> str:
     """Exact integer predicate: dist(point, closed segment) <= r.
 
     Case analysis on the projection parameter t = dot/len2 WITHOUT ever
@@ -125,9 +124,9 @@ def sql_point_segment_within(r: int, p: str = "p_", s: str = "s_") -> str:
     cross-multiplication (cross^2 <= r^2 * len2) — all BIGINT, no
     sqrt, no division, so both engines decide identically.
     """
-    dx, dy = f"({s}bx - {s}ax)", f"({s}by - {s}ay)"
-    ex, ey = f"({p}x - {s}ax)", f"({p}y - {s}ay)"
-    fx, fy = f"({p}x - {s}bx)", f"({p}y - {s}by)"
+    dx, dy = "(s_bx - s_ax)", "(s_by - s_ay)"
+    ex, ey = "(p_x - s_ax)", "(p_y - s_ay)"
+    fx, fy = "(p_x - s_bx)", "(p_y - s_by)"
     len2 = f"({dx} * {dx} + {dy} * {dy})"
     dot = f"({ex} * {dx} + {ey} * {dy})"
     cross = f"({ex} * {dy} - {ey} * {dx})"
@@ -141,8 +140,7 @@ def sql_point_segment_within(r: int, p: str = "p_", s: str = "s_") -> str:
     )
 
 
-def sql_point_segment_dist2(scale: int = 1 << 20, p: str = "p_",
-                            s: str = "s_", div_op: str = "div") -> str:
+def sql_point_segment_dist2(div_op: str = "div") -> str:
     """Exact SCALED squared distance point -> closed segment, for
     candidates already known within a small radius.
 
@@ -156,18 +154,18 @@ def sql_point_segment_dist2(scale: int = 1 << 20, p: str = "p_",
     extent<=300 segments): branch values <= r^2*scale ~ 1e10 and
     cross^2*scale <= r^2*len2*scale ~ 2e15 — well inside BIGINT.
     """
-    dx, dy = f"({s}bx - {s}ax)", f"({s}by - {s}ay)"
-    ex, ey = f"({p}x - {s}ax)", f"({p}y - {s}ay)"
-    fx, fy = f"({p}x - {s}bx)", f"({p}y - {s}by)"
+    dx, dy = "(s_bx - s_ax)", "(s_by - s_ay)"
+    ex, ey = "(p_x - s_ax)", "(p_y - s_ay)"
+    fx, fy = "(p_x - s_bx)", "(p_y - s_by)"
     len2 = f"({dx} * {dx} + {dy} * {dy})"
     dot = f"({ex} * {dx} + {ey} * {dy})"
     cross = f"({ex} * {dy} - {ey} * {dx})"
     ap2 = f"({ex} * {ex} + {ey} * {ey})"
     bp2 = f"({fx} * {fx} + {fy} * {fy})"
     return (
-        f"(CASE WHEN {len2} = 0 OR {dot} <= 0 THEN {ap2} * {scale} "
-        f"WHEN {dot} >= {len2} THEN {bp2} * {scale} "
-        f"ELSE ({cross} * {cross} * {scale}) {div_op} {len2} END)"
+        f"(CASE WHEN {len2} = 0 OR {dot} <= 0 THEN {ap2} * {1 << 20} "
+        f"WHEN {dot} >= {len2} THEN {bp2} * {1 << 20} "
+        f"ELSE ({cross} * {cross} * {1 << 20}) {div_op} {len2} END)"
     )
 
 
@@ -219,29 +217,19 @@ def point_segment_range_join(points: DataFrame, segs: DataFrame,
     ).selectExpr("pid AS point_id", "sid AS seg_id")
 
 
-def snap_to_segments(points: DataFrame, segs: DataFrame,
-                     radius: int, cell_size: int,
-                     point_id: str = "point_id",
-                     seg_id: str = "seg_id",
-                     scale: int = 1 << 20,
-                     candidates: DataFrame | None = None) -> DataFrame:
+def snap_to_segments(candidates: DataFrame) -> DataFrame:
     """Map-matching step two: snap each point to its NEAREST segment
-    within ``radius`` (argmin of the exact scaled squared distance,
+    within the radius (argmin of the exact scaled squared distance,
     seg-id tiebreak). Points with no candidate emit no row.
 
-    Plan: the same blocked candidate join as
-    `point_segment_range_join`, then one map-side-combinable
-    ``min(struct(dist, sid))`` per point — no window, no second
-    shuffle beyond the point-keyed agg. Output: (point_id, seg_id,
-    dist2_scaled). Pass a pre-built (possibly persisted)
-    ``candidates`` to reuse the blocked join across consumers."""
-    cand = candidates
-    if cand is None:
-        cand = _point_seg_candidates(
-            points, segs, radius, cell_size, point_id, seg_id)
-    d2s = F.expr(sql_point_segment_dist2(scale, div_op="div"))
+    ``candidates`` is the blocked (point, segment) join of
+    `_point_seg_candidates` (shared, possibly persisted, across
+    consumers); one map-side-combinable ``min(struct(dist, sid))`` per
+    point follows — no window, no second shuffle beyond the point-keyed
+    agg. Output: (point_id, seg_id, dist2_scaled)."""
+    d2s = F.expr(sql_point_segment_dist2(div_op="div"))
     best = (
-        cand.select("pid", d2s.alias("_d2s"), "sid")
+        candidates.select("pid", d2s.alias("_d2s"), "sid")
         .groupBy("pid")
         .agg(F.min(F.struct(
             F.col("_d2s").alias("d2s"), F.col("sid").alias("sid"),

@@ -110,16 +110,15 @@ def simplify_wire(t: int, dim: int, lengths, coords, tol: float):
     return out_lengths, flat.tolist()
 
 
-def simplify_lines(df: DataFrame, tolerance: float,
-                   geom_col: str = "geom") -> DataFrame:
-    """DataFrame operator: simplify the wire-struct ``geom_col`` in place.
+def simplify_lines(df: DataFrame, tolerance: float) -> DataFrame:
+    """DataFrame operator: simplify the wire-struct ``geom`` column in place.
 
     mapInPandas keeps the schema; Arrow batches amortize the per-geometry
     Python cost, and the numpy kernel is vectorized per DP segment.
     """
     schema = df.schema
     names = [f.name for f in schema.fields]
-    gi = names.index(geom_col)
+    gi = names.index("geom")
     tol = float(tolerance)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -37,7 +37,7 @@ CMS_DEPTH = 4
 CMS_WIDTH = 1024  # must divide 2^16 (bucket uses the low two md5 bytes)
 KMV_K = 16  # small enough that the gate corpus (31-token vocab at
             # sf0.01) exercises the estimator branch, not just the
-            # exact-count fallback; production callers pass k>=256
+            # exact-count fallback
 
 
 def md5_low64(col: Column) -> Column:
@@ -67,37 +67,35 @@ def _bucket(tok: Column, row: int, width: int) -> Column:
     return (lo + hi * 256) % width
 
 
-def _tokens(docs_df: DataFrame, text_col: str) -> DataFrame:
+def _tokens(docs_df: DataFrame) -> DataFrame:
     # spread before the explode: every sketch pays md5/conv/regex per
     # TOKEN map-side, so a single-split corpus scan would serialize the
     # whole build on one core (no-op once scan splits >= parallelism)
     from ..plans.partitioning import spread
 
     return (
-        spread(docs_df.select(F.col(text_col))).select(
-            F.explode(F.split(F.col(text_col), " ")).alias("tok")
+        spread(docs_df.select("text")).select(
+            F.explode(F.split(F.col("text"), " ")).alias("tok")
         ).filter(F.col("tok") != "")
     )
 
 
-def count_min_sketch(docs_df: DataFrame, text_col: str = "text",
-                     depth: int = CMS_DEPTH,
-                     width: int = CMS_WIDTH) -> DataFrame:
+def count_min_sketch(docs_df: DataFrame) -> DataFrame:
     """Build the CMS counter matrix: (sketch_row, bucket, cnt).
 
-    One explode + one fan-out of ``depth`` (row, bucket) pairs per token
+    One explode + one fan-out of ``CMS_DEPTH`` (row, bucket) pairs per token
     + one groupBy on at most depth*width keys. The partial aggregation
     happens map-side, so the exchange carries <= depth*width rows per
     input partition no matter the corpus size.
     """
-    assert (1 << 16) % width == 0, "width must divide 2^16"
-    toks = _tokens(docs_df, text_col)
+    assert (1 << 16) % CMS_WIDTH == 0, "width must divide 2^16"
+    toks = _tokens(docs_df)
     pairs = F.array(*[
         F.struct(
             F.lit(r).alias("sketch_row"),
-            _bucket(F.col("tok"), r, width).alias("bucket"),
+            _bucket(F.col("tok"), r, CMS_WIDTH).alias("bucket"),
         )
-        for r in range(depth)
+        for r in range(CMS_DEPTH)
     ])
     return (
         toks.select(F.explode(pairs).alias("p"))
@@ -109,9 +107,7 @@ def count_min_sketch(docs_df: DataFrame, text_col: str = "text",
     )
 
 
-def cms_estimate(sketch_df: DataFrame, queries_df: DataFrame,
-                 term_col: str = "term", depth: int = CMS_DEPTH,
-                 width: int = CMS_WIDTH) -> DataFrame:
+def cms_estimate(sketch_df: DataFrame, queries_df: DataFrame) -> DataFrame:
     """Point-query the sketch for each term: min over rows of the
     addressed counter (the CMS upper-bound estimate).
 
@@ -121,26 +117,25 @@ def cms_estimate(sketch_df: DataFrame, queries_df: DataFrame,
     pairs = F.array(*[
         F.struct(
             F.lit(r).alias("sketch_row"),
-            _bucket(F.col(term_col), r, width).alias("bucket"),
+            _bucket(F.col("term"), r, CMS_WIDTH).alias("bucket"),
         )
-        for r in range(depth)
+        for r in range(CMS_DEPTH)
     ])
     addressed = queries_df.select(
-        term_col, F.explode(pairs).alias("p")
-    ).select(term_col, "p.sketch_row", "p.bucket")
+        "term", F.explode(pairs).alias("p")
+    ).select("term", "p.sketch_row", "p.bucket")
     return (
         addressed.join(
             F.broadcast(sketch_df), ["sketch_row", "bucket"], "left"
         )
         .fillna(0, subset=["cnt"])
-        .groupBy(term_col)
+        .groupBy("term")
         .agg(F.min("cnt").alias("est"))
     )
 
 
-def kmv_sketch(docs_df: DataFrame, text_col: str = "text",
-               k: int = KMV_K) -> DataFrame:
-    """K-minimum-values distinct-count sketch: the ``k`` smallest uint64
+def kmv_sketch(docs_df: DataFrame) -> DataFrame:
+    """K-minimum-values distinct-count sketch: the ``KMV_K`` smallest uint64
     token hashes, as (rank, hash_val) with rank 1 = global minimum.
 
     Spark-native shape: explode -> map-side-deduped DISTINCT on the
@@ -153,29 +148,26 @@ def kmv_sketch(docs_df: DataFrame, text_col: str = "text",
     Deterministic function of the data -> the whole sketch hash-gates
     against DuckDB computing identical ``md5_number_lower`` values.
     """
-    toks = _tokens(docs_df, text_col)
+    toks = _tokens(docs_df)
     hashed = toks.select(md5_low64(F.col("tok")).alias("hash_val")).distinct()
-    bottom = hashed.orderBy("hash_val").limit(k)
+    bottom = hashed.orderBy("hash_val").limit(KMV_K)
     w = Window.orderBy("hash_val")
     return bottom.select(
         F.row_number().over(w).cast("int").alias("rank"), "hash_val"
     )
 
 
-def kmv_distinct(docs_df: DataFrame, text_col: str = "text",
-                 k: int = KMV_K, sketch: DataFrame | None = None) -> DataFrame:
-    """KMV distinct-token estimate as one exact-integer row.
+def kmv_distinct(sketch: DataFrame) -> DataFrame:
+    """KMV distinct-token estimate as one exact-integer row, from a
+    ``kmv_sketch`` (built once, possibly persisted, and shared across
+    consumers instead of re-scanning the corpus).
 
     est = (k-1) * 2^64 div h_k (the classic KMV estimator with the
     division floored, so both engines produce the identical integer);
-    when the vocabulary has fewer than ``k`` distinct hashes the sketch
-    IS the vocabulary and the estimate is the exact count. Pass a
-    pre-built (possibly persisted) ``sketch`` to reuse it across
-    consumers instead of re-scanning the corpus.
+    when the vocabulary has fewer than ``KMV_K`` distinct hashes the sketch
+    IS the vocabulary and the estimate is the exact count.
     """
-    if sketch is None:
-        sketch = kmv_sketch(docs_df, text_col, k)
-    num = (k - 1) << 64
+    num = (KMV_K - 1) << 64
     return sketch.agg(
         F.count("*").cast("long").alias("n_sketch"),
         F.max("hash_val").alias("kth_hash"),
@@ -183,7 +175,7 @@ def kmv_distinct(docs_df: DataFrame, text_col: str = "text",
         "n_sketch",
         "kth_hash",
         F.when(
-            F.col("n_sketch") < k, F.col("n_sketch")
+            F.col("n_sketch") < KMV_K, F.col("n_sketch")
         ).otherwise(
             F.expr(f"CAST({num} AS DECIMAL(38,0)) div kth_hash")
         ).cast("long").alias("est_distinct"),
@@ -195,8 +187,7 @@ BLOOM_M = 1 << 16   # bits; must divide 2^16 so the 2-hex-byte bucket
 BLOOM_H = 3         # hash functions
 
 
-def bloom_build(docs_df: DataFrame, text_col: str = "text",
-                m: int = BLOOM_M, h: int = BLOOM_H) -> DataFrame:
+def bloom_build(docs_df: DataFrame) -> DataFrame:
     """Bloom filter over the corpus vocabulary, as the sorted table of
     set bit positions (one row per set bit).
 
@@ -206,10 +197,10 @@ def bloom_build(docs_df: DataFrame, text_col: str = "text",
     Filter union across corpus shards is the same DISTINCT over the
     union. Deterministic -> the whole bit table hash-gates.
     """
-    assert (1 << 16) % m == 0, "m must divide 2^16"
-    toks = _tokens(docs_df, text_col)
+    assert (1 << 16) % BLOOM_M == 0, "m must divide 2^16"
+    toks = _tokens(docs_df)
     bits = F.array(*[
-        _bucket(F.col("tok"), r, m) for r in range(h)
+        _bucket(F.col("tok"), r, BLOOM_M) for r in range(BLOOM_H)
     ])
     return (
         toks.select(F.explode(bits).alias("bit"))
@@ -218,9 +209,7 @@ def bloom_build(docs_df: DataFrame, text_col: str = "text",
     )
 
 
-def bloom_probe(bloom_df: DataFrame, probe_df: DataFrame,
-                term_col: str = "term", m: int = BLOOM_M,
-                h: int = BLOOM_H) -> DataFrame:
+def bloom_probe(bloom_df: DataFrame, probe_df: DataFrame) -> DataFrame:
     """Membership probe: maybe_present = all h addressed bits set.
 
     The filter is <= m rows -> broadcast; each probe term left-joins its
@@ -232,22 +221,22 @@ def bloom_probe(bloom_df: DataFrame, probe_df: DataFrame,
     bit table is kilobytes.
     """
     bits = F.array(*[
-        _bucket(F.col(term_col), r, m) for r in range(h)
+        _bucket(F.col("term"), r, BLOOM_M) for r in range(BLOOM_H)
     ])
     addressed = probe_df.select(
-        term_col, F.explode(bits).alias("bit")
+        "term", F.explode(bits).alias("bit")
     )
     marked = addressed.join(
         F.broadcast(bloom_df.withColumn("_set", F.lit(1))), "bit", "left"
     )
     return (
-        marked.groupBy(term_col)
-        .agg((F.sum(F.coalesce("_set", F.lit(0))) == h).alias("maybe_present"))
+        marked.groupBy("term")
+        .agg((F.sum(F.coalesce("_set", F.lit(0))) == BLOOM_H).alias("maybe_present"))
     )
 
 
 def kmv_sketch_grouped(docs_df: DataFrame, group_col: str = "lang",
-                       text_col: str = "text", k: int = KMV_K) -> DataFrame:
+                       k: int = KMV_K) -> DataFrame:
     """Per-group KMV sketches: (group, rank, hash_val) with the k
     smallest distinct token hashes of EACH group — the shuffle-bounded
     way to estimate per-group cardinalities (each group contributes at
@@ -259,9 +248,9 @@ def kmv_sketch_grouped(docs_df: DataFrame, group_col: str = "lang",
     """
     from ..plans.partitioning import spread
 
-    toks = spread(docs_df.select(group_col, text_col)).select(
+    toks = spread(docs_df.select(group_col, "text")).select(
         F.col(group_col).alias("grp"),
-        F.explode(F.split(F.col(text_col), " ")).alias("tok"),
+        F.explode(F.split(F.col("text"), " ")).alias("tok"),
     ).filter(F.col("tok") != "")
     hashed = toks.select(
         "grp", md5_low64(F.col("tok")).alias("hash_val")).distinct()
@@ -273,8 +262,7 @@ def kmv_sketch_grouped(docs_df: DataFrame, group_col: str = "lang",
     )
 
 
-def kmv_overlap(docs_df: DataFrame, group_col: str = "source",
-                text_col: str = "text", k: int = 64) -> DataFrame:
+def kmv_overlap(docs_df: DataFrame, k: int) -> DataFrame:
     """Theta-sketch-style pairwise corpus overlap from per-group KMV
     sketches — "how much does source A's vocabulary overlap B's?"
     answered without ever joining the corpora.
@@ -300,8 +288,8 @@ def kmv_overlap(docs_df: DataFrame, group_col: str = "source",
     # subtrees differ), so the lazy checkpoint genuinely saves two
     # corpus scans — measured 1.20 s vs 1.33 s without it (interleaved
     # same-session A/B), despite its ~0.5 s eager-planning cost.
-    sk = kmv_sketch_grouped(docs_df, group_col, text_col, k).select(
-        F.col(group_col).alias("grp"), "hash_val"
+    sk = kmv_sketch_grouped(docs_df, "source", k).select(
+        F.col("source").alias("grp"), "hash_val"
     ).localCheckpoint(eager=False)
     groups = sk.select("grp").distinct()
     pairs = groups.select(F.col("grp").alias("grp_a")).join(
@@ -370,8 +358,7 @@ def sql_hll_rho(hex_expr: str) -> str:
     return f"CAST(57 - {bitlen} AS INT)"
 
 
-def hll_registers(docs_df: DataFrame, text_col: str = "text",
-                  b: int = HLL_B) -> DataFrame:
+def hll_registers(docs_df: DataFrame) -> DataFrame:
     """HyperLogLog register table over the corpus token stream.
 
     The fourth sketch family: bucket = digest byte 8 of the md5-low-64
@@ -385,8 +372,8 @@ def hll_registers(docs_df: DataFrame, text_col: str = "text",
     caller — registers are the portable artifact (exactly how HLLs
     ship between systems).
     """
-    assert b == 8, "bucket split is the fixed byte-8 contract"
-    toks = _tokens(docs_df, text_col)
+    assert HLL_B == 8, "bucket split is the fixed byte-8 contract"
+    toks = _tokens(docs_df)
     bucket = "CAST(conv(substring(h, 17, 2), 16, 10) AS INT)"
     rho = sql_hll_rho("h")
     return (
@@ -397,9 +384,7 @@ def hll_registers(docs_df: DataFrame, text_col: str = "text",
     )
 
 
-def hll_registers_grouped(docs_df: DataFrame, group_col: str = "lang",
-                          text_col: str = "text",
-                          b: int = HLL_B) -> DataFrame:
+def hll_registers_grouped(docs_df: DataFrame) -> DataFrame:
     """Per-group HLL register tables — (group, bucket, register).
 
     The grouped sibling of ``hll_registers`` (as ``kmv_sketch_grouped``
@@ -409,12 +394,12 @@ def hll_registers_grouped(docs_df: DataFrame, group_col: str = "lang",
     at 100 TB the shuffle is (n_groups x 256) rows regardless of corpus
     size.
     """
-    assert b == 8, "bucket split is the fixed byte-8 contract"
+    assert HLL_B == 8, "bucket split is the fixed byte-8 contract"
     from ..plans.partitioning import spread
 
-    toks = spread(docs_df.select(group_col, text_col)).select(
-        F.col(group_col).alias("grp"),
-        F.explode(F.split(F.col(text_col), " ")).alias("tok"),
+    toks = spread(docs_df.select("lang", "text")).select(
+        F.col("lang").alias("grp"),
+        F.explode(F.split(F.col("text"), " ")).alias("tok"),
     ).filter(F.col("tok") != "")
     bucket = "CAST(conv(substring(h, 17, 2), 16, 10) AS INT)"
     rho = sql_hll_rho("h")
@@ -426,7 +411,7 @@ def hll_registers_grouped(docs_df: DataFrame, group_col: str = "lang",
     )
 
 
-def hll_estimate_parts(registers_df: DataFrame, b: int = HLL_B) -> DataFrame:
+def hll_estimate_parts(registers_df: DataFrame) -> DataFrame:
     """The HLL harmonic-mean estimate in EXACT integer parts.
 
     The raw estimate is E = alpha_m * m^2 / sum_j 2^(-M[j]); the sum of
@@ -446,7 +431,7 @@ def hll_estimate_parts(registers_df: DataFrame, b: int = HLL_B) -> DataFrame:
     Buckets absent from ``registers_df`` are register-0 (2^57 terms),
     so merged-shard parts equal whole-corpus parts by max-idempotence.
     """
-    m = 1 << b
+    m = 1 << HLL_B
     two57 = 1 << 57
     agg = registers_df.agg(
         F.count("*").cast("int").alias("_present"),
@@ -506,14 +491,13 @@ def _ams_sign_sums(rows: int) -> list[Column]:
     ]
 
 
-def ams_sketch(docs_df: DataFrame, text_col: str = "text",
-               rows: int = AMS_ROWS) -> DataFrame:
-    """AMS (Alon-Matias-Szegedy) F2 linear sketch: ``rows`` signed
+def ams_sketch(docs_df: DataFrame) -> DataFrame:
+    """AMS (Alon-Matias-Szegedy) F2 linear sketch: ``AMS_ROWS`` signed
     counters over the corpus token stream, counter_r = sum over token
     occurrences of sign_r(tok), where sign_r is +1/-1 by BIT r of the
     md5-low-64 hash (the same deterministic ``md5_number_lower`` anchor
     every sketch here uses; DuckDB: ``(md5_number_lower(w) // 2^r) %
-    2``). One md5 per token supplies all ``rows`` signs — the first cut
+    2``). One md5 per token supplies all ``AMS_ROWS`` signs — the first cut
     hashed ``tok|r`` per counter and the 9x md5 work dominated the whole
     gate (11.6s at sf0.1; bits-of-one-hash is the standard AMS seeding
     and cut it to the cost of a single-scan aggregate). Being LINEAR
@@ -522,23 +506,22 @@ def ams_sketch(docs_df: DataFrame, text_col: str = "text",
     per-day rollup primitive; counter_r^2 estimates F2 = sum c_t^2, the
     repetition mass a self-join would need a full token shuffle to get.
 
-    Plan: one corpus scan computing all ``rows`` conditional sums in a
+    Plan: one corpus scan computing all ``AMS_ROWS`` conditional sums in a
     single hash-free global aggregate — no per-row fan-out, no distinct,
-    partial aggregation map-side, a ``rows``-value exchange total. The
+    partial aggregation map-side, a ``AMS_ROWS``-value exchange total. The
     final unpivot is driver-free ``stack`` over one row.
     """
-    toks = _tokens(docs_df, text_col).select(
+    toks = _tokens(docs_df).select(
         _low16(F.col("tok")).alias("h16"))
-    wide = toks.agg(*_ams_sign_sums(rows))
-    stack = ", ".join(f"{r}, c{r}" for r in range(rows))
+    wide = toks.agg(*_ams_sign_sums(AMS_ROWS))
+    stack = ", ".join(f"{r}, c{r}" for r in range(AMS_ROWS))
     return wide.selectExpr(
-        f"stack({rows}, {stack}) AS (r, counter)"
+        f"stack({AMS_ROWS}, {stack}) AS (r, counter)"
     ).select(F.col("r").cast("int").alias("r"),
              F.col("counter").cast("long").alias("counter"))
 
 
-def ams_f2(docs_df: DataFrame, text_col: str = "text",
-           sketch: DataFrame | None = None) -> DataFrame:
+def ams_f2(docs_df: DataFrame, sketch: DataFrame) -> DataFrame:
     """One-row AMS verdict: the median-of-squares F2 estimate next to
     the exact F2, both exact BIGINTs. The median of the 9 squared
     counters is taken WITHOUT a global window: sort the 9-row sketch by
@@ -547,14 +530,13 @@ def ams_f2(docs_df: DataFrame, text_col: str = "text",
     aggregate; at 100 TB you would ship only the sketch, the exact side
     exists because the gate can afford the token shuffle at test scale.
     """
-    sk = sketch if sketch is not None else ams_sketch(docs_df, text_col)
-    sq = sk.select((F.col("counter") * F.col("counter")).alias("c2"), "r")
+    sq = sketch.select((F.col("counter") * F.col("counter")).alias("c2"), "r")
     est = (
         sq.orderBy("c2", "r").limit((AMS_ROWS + 1) // 2)
         .agg(F.max("c2").cast("long").alias("est_f2"))
     )
     exact = (
-        _tokens(docs_df, text_col)
+        _tokens(docs_df)
         .groupBy("tok").agg(F.count("*").alias("cnt"))
         .agg(F.sum(F.col("cnt") * F.col("cnt")).cast("long")
              .alias("exact_f2"))
@@ -564,30 +546,28 @@ def ams_f2(docs_df: DataFrame, text_col: str = "text",
     return est.join(F.broadcast(exact))
 
 
-def ams_sketch_grouped(docs_df: DataFrame, group_col: str = "source",
-                       text_col: str = "text",
-                       rows: int = AMS_ROWS) -> DataFrame:
+def ams_sketch_grouped(docs_df: DataFrame) -> DataFrame:
     """Per-group AMS F2 counters (the grouped sibling `kmv_grouped` /
     `hll_grouped` have) — one row group's repetition mass per source /
     shard, merge = addition per (group, r). Same single-scan shape as
-    `ams_sketch`: all ``rows`` conditional sums ride one group-keyed
+    `ams_sketch`: all ``AMS_ROWS`` conditional sums ride one group-keyed
     aggregate (map-side partials, exchange bounded by groups), the
     unpivot is a per-row ``stack``.
     """
     from ..plans.partitioning import spread
 
     toks = (
-        spread(docs_df.select(group_col, text_col)).select(
-            group_col,
-            F.explode(F.split(F.col(text_col), " ")).alias("tok"),
+        spread(docs_df.select("source", "text")).select(
+            "source",
+            F.explode(F.split(F.col("text"), " ")).alias("tok"),
         ).filter(F.col("tok") != "")
-        .select(group_col, _low16(F.col("tok")).alias("h16"))
+        .select("source", _low16(F.col("tok")).alias("h16"))
     )
-    wide = toks.groupBy(group_col).agg(*_ams_sign_sums(rows))
-    stack = ", ".join(f"{r}, c{r}" for r in range(rows))
+    wide = toks.groupBy("source").agg(*_ams_sign_sums(AMS_ROWS))
+    stack = ", ".join(f"{r}, c{r}" for r in range(AMS_ROWS))
     return wide.selectExpr(
-        group_col, f"stack({rows}, {stack}) AS (r, counter)"
-    ).select(group_col,
+        "source", f"stack({AMS_ROWS}, {stack}) AS (r, counter)"
+    ).select("source",
              F.col("r").cast("int").alias("r"),
              F.col("counter").cast("long").alias("counter"))
 
@@ -617,8 +597,7 @@ def _mg_summaries(toks: DataFrame, k: int) -> DataFrame:
     return toks.select("tok").mapInPandas(gen, "tok string, est long")
 
 
-def heavy_hitters(docs_df: DataFrame, k: int,
-                  text_col: str = "text") -> DataFrame:
+def heavy_hitters(docs_df: DataFrame, k: int) -> DataFrame:
     """EXACT heavy hitters via the classic two-pass sketch pattern:
     pass 1 builds the merged Misra-Gries candidate set (bounded
     superset of every token with freq > N/(k+1)); pass 2 re-scans the
@@ -642,7 +621,7 @@ def heavy_hitters(docs_df: DataFrame, k: int,
     # re-reads it via the reused spread() exchange. The lazy checkpoint
     # variant measured SLOWER end-to-end (interleaved A/B: 1.32 s vs
     # 1.42 s with it) on top of being the wrong shape at scale.
-    toks = _tokens(docs_df, text_col)
+    toks = _tokens(docs_df)
     merged = (
         _mg_summaries(toks, int(k))
         .groupBy("tok").agg(F.sum("est").alias("est"))

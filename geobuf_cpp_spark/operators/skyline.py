@@ -10,7 +10,7 @@ dominated globally, so phase 1 prunes inside hash blocks (parallel
 windows, no global ordering) — for non-adversarial data each block keeps
 ~O(log block_size) rows — and phase 2 runs the exact two-window pass on
 the tiny survivor union. The final window is single-partition by
-construction, but over at most n_blocks * |local skyline| rows, not the
+construction, but over at most 64 blocks * |local skyline| rows, not the
 input: the same bounded-driver-set discipline as TakeOrderedAndProject.
 Both phases are pure JVM window aggregates; dominance never needs a
 self-join, let alone the quadratic NOT EXISTS the oracle replays.
@@ -45,11 +45,10 @@ def _survivors(df, min_col: str, max_col: str, block_cols: list[str]):
     return d.filter(keep).drop("_best_cheaper", "_best_same")
 
 
-def skyline2d(df, min_col: str, max_col: str, id_col: str,
-              n_blocks: int = 64):
+def skyline2d(df, min_col: str, max_col: str, id_col: str):
     """Rows of ``df`` on the (min ``min_col``, max ``max_col``) skyline."""
     blocked = df.withColumn(
-        "_blk", F.pmod(F.hash(F.col(id_col)), F.lit(int(n_blocks)))
+        "_blk", F.pmod(F.hash(F.col(id_col)), F.lit(64))
     )
     local = _survivors(blocked, min_col, max_col, ["_blk"]).drop("_blk")
     return _survivors(local, min_col, max_col, [])

@@ -34,8 +34,7 @@ from pyspark.sql import functions as F
 from .clustering import _neighbor_edges, dense_cells
 
 
-def morans_i_parts(points_df: DataFrame, res: int,
-                   lat_col: str = "lat", lon_col: str = "lon") -> DataFrame:
+def morans_i_parts(points_df: DataFrame, res: int) -> DataFrame:
     """One row: (n_cells, w_pairs, num, den) — exact Moran's I parts."""
     # the cell table feeds four consumers (totals, both join sides, the
     # denominator) with DIFFERENT column pruning — which defeats
@@ -43,7 +42,7 @@ def morans_i_parts(points_df: DataFrame, res: int,
     # corpus scans (interleaved A/B: 0.83 s vs 1.00 s without it, its
     # ~0.3 s eager-planning cost included)
     cells = dense_cells(
-        points_df, res, 1, lat_col, lon_col).localCheckpoint(eager=False)
+        points_df, res, 1).localCheckpoint(eager=False)
     tot = cells.agg(
         F.sum("n_points").alias("t_sum"),
         F.count("*").alias("n_cells"),
@@ -82,8 +81,7 @@ def morans_i_parts(points_df: DataFrame, res: int,
     return num.crossJoin(den).select("n_cells", "w_pairs", "num", "den")
 
 
-def getis_ord_parts(points_df: DataFrame, res: int,
-                    lat_col: str = "lat", lon_col: str = "lon") -> DataFrame:
+def getis_ord_parts(points_df: DataFrame, res: int) -> DataFrame:
     """Local Getis-Ord Gi* hotspot parts per occupied grid cell.
 
     Moran's I answers "is density clustered AT ALL?"; Gi* answers the
@@ -113,7 +111,7 @@ def getis_ord_parts(points_df: DataFrame, res: int,
     # checkpoints kept: multi-consumer frames with differing pruning
     # (see morans_i_parts) — A/B measured 0.63 s vs 0.80 s without
     cells = dense_cells(
-        points_df, res, 1, lat_col, lon_col).localCheckpoint(eager=False)
+        points_df, res, 1).localCheckpoint(eager=False)
     tot = cells.agg(
         F.sum("n_points").alias("t_sum"),
         F.count("*").alias("n_cells"),
@@ -154,8 +152,7 @@ def getis_ord_parts(points_df: DataFrame, res: int,
     )
 
 
-def kde_density(points_df: DataFrame, radius: int,
-                x_col: str = "ix", y_col: str = "iy") -> DataFrame:
+def kde_density(points_df: DataFrame, radius: int) -> DataFrame:
     """Kernel-density heatmap in exact integer arithmetic — the
     Epanechnikov-kernel surface behind every web-map "heat layer",
     evaluated at occupied-cell centers.
@@ -187,15 +184,15 @@ def kde_density(points_df: DataFrame, radius: int,
     w = r
     cells = (
         points_df.groupBy(
-            F.expr(f"{x_col} div {w}").alias("cx"),
-            F.expr(f"{y_col} div {w}").alias("cy"),
+            F.expr(f"ix div {w}").alias("cx"),
+            F.expr(f"iy div {w}").alias("cy"),
         )
         .agg(F.count("*").cast("long").alias("n_points"))
     )
     cand = (
         points_df.select(
-            F.col(x_col).cast("long").alias("px"),
-            F.col(y_col).cast("long").alias("py"),
+            F.col("ix").cast("long").alias("px"),
+            F.col("iy").cast("long").alias("py"),
         )
         .select(
             "px", "py",
@@ -225,9 +222,7 @@ def kde_density(points_df: DataFrame, radius: int,
     )
 
 
-def rect_union_area(rects_df: DataFrame, block: int = 4096,
-                    x0: str = "lon0", x1: str = "lon1",
-                    y0: str = "lat0", y1: str = "lat1") -> DataFrame:
+def rect_union_area(rects_df: DataFrame) -> DataFrame:
     """Exact area of the UNION of axis-aligned rectangles — the
     coverage question ("how much of the plane do these footprints
     cover?") that naive sum-of-areas gets wrong the moment two boxes
@@ -264,10 +259,10 @@ def rect_union_area(rects_df: DataFrame, block: int = 4096,
     """
     from pyspark.sql import Window
 
-    b = int(block)
+    b = 4096
     xs = (
-        rects_df.select(F.col(x0).cast("long").alias("sx"))
-        .union(rects_df.select(F.col(x1).cast("long").alias("sx")))
+        rects_df.select(F.col("lon0").cast("long").alias("sx"))
+        .union(rects_df.select(F.col("lon1").cast("long").alias("sx")))
         .distinct()
     )
     slabs = (
@@ -277,10 +272,10 @@ def rect_union_area(rects_df: DataFrame, block: int = 4096,
         .withColumn("xb", F.expr(f"sx div {b}"))
     )
     rects = rects_df.select(
-        F.col(x0).cast("long").alias("rx0"),
-        F.col(x1).cast("long").alias("rx1"),
-        F.col(y0).cast("long").alias("ry0"),
-        F.col(y1).cast("long").alias("ry1"),
+        F.col("lon0").cast("long").alias("rx0"),
+        F.col("lon1").cast("long").alias("rx1"),
+        F.col("lat0").cast("long").alias("ry0"),
+        F.col("lat1").cast("long").alias("ry1"),
     ).where((F.col("rx0") < F.col("rx1")) & (F.col("ry0") < F.col("ry1")))
     spread = rects.select(
         "rx0", "rx1", "ry0", "ry1",

@@ -22,9 +22,9 @@ def _occ(col, lit: str):
 ENGLISH_STOPWORDS = [" the ", " a ", " of ", " and ", " to "]
 
 
-def doc_stats(docs_df, id_col: str = "doc_id", text_col: str = "text"):
+def doc_stats(docs_df):
     """Per-document counts: chars, tokens, punctuation, stopword hits."""
-    t = F.col(text_col)
+    t = F.col("text")
     token_count = (
         F.length(F.trim(t)) - F.length(F.replace(F.trim(t), F.lit(" "), F.lit("")))
         + F.when(F.length(F.trim(t)) > 0, F.lit(1)).otherwise(F.lit(0))
@@ -34,7 +34,7 @@ def doc_stats(docs_df, id_col: str = "doc_id", text_col: str = "text"):
         occ = _occ(t, sw)
         stop_hits = occ if stop_hits is None else stop_hits + occ
     return docs_df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.length(t).cast("long").alias("n_chars_measured"),
         token_count.alias("n_tokens"),
         F.floor(_occ(t, ".")).cast("long").alias("n_periods"),
@@ -43,14 +43,13 @@ def doc_stats(docs_df, id_col: str = "doc_id", text_col: str = "text"):
     )
 
 
-def quality_score(docs_df, id_col: str = "doc_id", text_col: str = "text",
-                  min_tokens: int = 10, max_tokens: int = 100_000):
+def quality_score(docs_df):
     """Heuristic quality gate in the C4/Gopher style, integer-exact.
 
     keep = tokens in range AND mean token length in [2, 12] (x100 as an
     integer ratio to stay float-free for oracle parity).
     """
-    stats = doc_stats(docs_df, id_col, text_col)
+    stats = doc_stats(docs_df)
     # FLOOR before the cast: Spark's double->long cast truncates while
     # DuckDB's rounds — floor+cast is portable
     mean_tok_len_x100 = F.floor(
@@ -59,12 +58,12 @@ def quality_score(docs_df, id_col: str = "doc_id", text_col: str = "text",
         / F.greatest(F.col("n_tokens"), F.lit(1))
     ).cast("long")
     return stats.select(
-        id_col,
+        "doc_id",
         "n_tokens",
         mean_tok_len_x100.alias("mean_token_len_x100"),
         (
-            (F.col("n_tokens") >= min_tokens)
-            & (F.col("n_tokens") <= max_tokens)
+            (F.col("n_tokens") >= 10)
+            & (F.col("n_tokens") <= 100_000)
             & (mean_tok_len_x100 >= 200)
             & (mean_tok_len_x100 <= 1200)
         ).cast("int").alias("keep"),  # int not bool: engines stringify
@@ -72,15 +71,14 @@ def quality_score(docs_df, id_col: str = "doc_id", text_col: str = "text",
     )
 
 
-def lang_signal(docs_df, id_col: str = "doc_id", text_col: str = "text",
-                lang_col: str = "lang"):
+def lang_signal(docs_df):
     """n-gram language-ID heuristic vs the labeled lang column.
 
     predicts 'en' when English stopword density clears a threshold —
     deterministic and portable; on synthetic word-salad corpora this is a
     plumbing check, on real text the stopword lists do the work.
     """
-    t = F.col(text_col)
+    t = F.col("text")
     stop_hits = None
     for sw in ENGLISH_STOPWORDS:
         occ = _occ(t, sw)
@@ -92,8 +90,8 @@ def lang_signal(docs_df, id_col: str = "doc_id", text_col: str = "text",
         + F.when(F.length(F.trim(t)) > 0, F.lit(1)).otherwise(F.lit(0))
     )
     return docs_df.select(
-        F.col(id_col),
-        F.col(lang_col),
+        F.col("doc_id"),
+        F.col("lang"),
         F.floor(stop_hits).cast("long").alias("stop_hits"),
         F.floor(stop_hits * 1000 / tokens).cast("long").alias("stop_density_x1000"),
         (stop_hits * 1000 / tokens >= 30).cast("int").alias("pred_en"),
@@ -105,37 +103,35 @@ def lang_signal(docs_df, id_col: str = "doc_id", text_col: str = "text",
 BPE_TOKEN_RE = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"
 
 
-def token_counts(docs_df, id_col: str = "doc_id", text_col: str = "text"):
+def token_counts(docs_df):
     """Whitespace tokens + BPE-ish regex pieces (letter runs / digit runs /
     single punctuation) — the pre-tokenizer split every BPE vocabulary
     starts from, as a JVM-side regexp_count (no Python)."""
-    t = F.col(text_col)
+    t = F.col("text")
     ws_tokens = (
         F.length(F.trim(t)) - F.length(F.replace(F.trim(t), F.lit(" "), F.lit("")))
         + F.when(F.length(F.trim(t)) > 0, F.lit(1)).otherwise(F.lit(0))
     ).cast("long")
     return docs_df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         ws_tokens.alias("n_ws_tokens"),
         F.regexp_count(t, F.lit(BPE_TOKEN_RE)).cast("long").alias("n_bpe_tokens"),
     )
 
 
-def fingerprints(docs_df, id_col: str = "doc_id", text_col: str = "text",
-                 prefix_len: int = 64):
+def fingerprints(docs_df):
     """Stable document fingerprints: full-text md5 + prefix md5 (clusters
     shared boilerplate heads)."""
-    t = F.col(text_col)
+    t = F.col("text")
     return docs_df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.md5(t.cast("binary")).alias("fp_full"),
-        F.md5(F.substring(t, 1, prefix_len).cast("binary")).alias("fp_prefix"),
+        F.md5(F.substring(t, 1, 64).cast("binary")).alias("fp_prefix"),
         F.length(t).cast("long").alias("n_chars_measured"),
     )
 
 
-def top_terms(docs_df, k: int = 10, id_col: str = "doc_id",
-              text_col: str = "text", lang_col: str = "lang"):
+def top_terms(docs_df):
     """Per-language top-k vocabulary terms by DOCUMENT frequency — the
     corpus-vocabulary analysis every tokenizer/mixture recipe starts from.
 
@@ -148,9 +144,9 @@ def top_terms(docs_df, k: int = 10, id_col: str = "doc_id",
     from pyspark.sql import Window
 
     words = docs_df.select(
-        F.col(lang_col).alias("lang"),
-        F.col(id_col).alias("_doc"),
-        F.explode(F.split(F.col(text_col), " ")).alias("term"),
+        "lang",
+        F.col("doc_id").alias("_doc"),
+        F.explode(F.split(F.col("text"), " ")).alias("term"),
     ).filter(F.col("term") != "")
     doc_freq = (
         words.distinct()
@@ -160,12 +156,12 @@ def top_terms(docs_df, k: int = 10, id_col: str = "doc_id",
     w = Window.partitionBy("lang").orderBy(F.desc("doc_freq"), F.asc("term"))
     return (
         doc_freq.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
+        .filter(F.col("rn") <= 10)
         .select("lang", "term", "doc_freq", "rn")
     )
 
 
-def repetition_stats(docs_df, id_col: str = "doc_id", text_col: str = "text"):
+def repetition_stats(docs_df):
     """Gopher-style repetition signals, integer-exact.
 
     Per document: total tokens, distinct tokens, duplicate tokens
@@ -180,8 +176,8 @@ def repetition_stats(docs_df, id_col: str = "doc_id", text_col: str = "text"):
     pass the corpus already pays.
     """
     toks = docs_df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.split(F.trim(F.col(text_col)), " ")).alias("tok"),
+        "doc_id",
+        F.explode(F.split(F.trim(F.col("text")), " ")).alias("tok"),
     ).filter(F.col("tok") != "")
     per_tok = toks.groupBy("doc_id", "tok").agg(F.count("*").alias("c"))
     return per_tok.groupBy("doc_id").agg(
@@ -192,7 +188,7 @@ def repetition_stats(docs_df, id_col: str = "doc_id", text_col: str = "text"):
     )
 
 
-def token_rarity(docs_df, id_col: str = "doc_id", text_col: str = "text"):
+def token_rarity(docs_df):
     """Unigram-LM quality proxy without float logs: per-document sum and
     min of CORPUS token frequencies.
 
@@ -209,8 +205,8 @@ def token_rarity(docs_df, id_col: str = "doc_id", text_col: str = "text"):
     on the big side.
     """
     toks = docs_df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.split(F.trim(F.col(text_col)), " ")).alias("tok"),
+        "doc_id",
+        F.explode(F.split(F.trim(F.col("text")), " ")).alias("tok"),
     ).filter(F.col("tok") != "")
     vocab = toks.groupBy("tok").agg(F.count("*").alias("corpus_freq"))
     return (
@@ -224,9 +220,8 @@ def token_rarity(docs_df, id_col: str = "doc_id", text_col: str = "text"):
     )
 
 
-def term_cooccurrence(docs_df, vocab_size: int = 50, id_col: str = "doc_id",
-                      text_col: str = "text"):
-    """Document-level term-pair co-occurrence over the top-``vocab_size``
+def term_cooccurrence(docs_df):
+    """Document-level term-pair co-occurrence over the top-50
     vocabulary — the exact-integer numerator family of PMI / word
     association mining (pair_docs, docs_a, docs_b, n_docs per pair;
     PMI = log(pair_docs * n_docs / (docs_a * docs_b)) is left to the
@@ -236,19 +231,19 @@ def term_cooccurrence(docs_df, vocab_size: int = 50, id_col: str = "doc_id",
     persisted — it feeds the vocabulary count, and both sides of the
     pair join (without the persist Catalyst would inline the lineage and
     re-scan the corpus four times). The big side is then filtered by a
-    broadcast join against the vocabulary (<= vocab_size rows, built by
+    broadcast join against the vocabulary (<= 50 rows, built by
     the same map-side-limited top-k as ``top_terms``), so the incidence
-    list entering the doc_id self-join carries at most vocab_size rows
+    list entering the doc_id self-join carries at most 50 rows
     per document. The self-join shuffles once on doc_id and the
     ``a.term < b.term`` predicate keeps each unordered pair once; pair
     counts then two-phase aggregate on a key space bounded by
-    vocab_size^2/2, independent of corpus size. The persisted incidence
+    50^2/2, independent of corpus size. The persisted incidence
     lives until session end or ``spark.catalog.clearCache()`` (same
     caller contract as the dedup/ann persists).
     """
     words = docs_df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.split(F.col(text_col), " ")).alias("term"),
+        "doc_id",
+        F.explode(F.split(F.col("text"), " ")).alias("term"),
     ).filter(F.col("term") != "").distinct().persist()
     doc_freq = words.groupBy("term").agg(F.count("*").alias("doc_freq"))
     # top-k as orderBy+limit -> TakeOrderedAndProject (per-partition
@@ -256,7 +251,7 @@ def term_cooccurrence(docs_df, vocab_size: int = 50, id_col: str = "doc_id",
     # window, which would funnel the whole vocabulary through one task
     vocab = (
         doc_freq.orderBy(F.desc("doc_freq"), F.asc("term"))
-        .limit(vocab_size)
+        .limit(50)
         .select("term", "doc_freq")
     )
     inc = words.join(F.broadcast(vocab), "term").select(
@@ -275,12 +270,11 @@ def term_cooccurrence(docs_df, vocab_size: int = 50, id_col: str = "doc_id",
             F.first(F.col("b.doc_freq")).cast("long").alias("docs_b"),
         )
     )
-    n_docs = docs_df.select(F.countDistinct(id_col).alias("n_docs"))
+    n_docs = docs_df.select(F.countDistinct("doc_id").alias("n_docs"))
     return pairs.crossJoin(F.broadcast(n_docs))
 
 
-def tfidf_topk(docs_df, k: int = 5, id_col: str = "doc_id",
-               text_col: str = "text", scale: int = 1 << 20):
+def tfidf_topk(docs_df):
     """Per-document top-k salient terms by exact-integer inverse document
     frequency: score = (tf * scale) div df.
 
@@ -300,19 +294,19 @@ def tfidf_topk(docs_df, k: int = 5, id_col: str = "doc_id",
     from pyspark.sql import Window
 
     toks = docs_df.select(
-        F.col(id_col), F.explode(F.split(text_col, " ")).alias("term")
+        F.col("doc_id"), F.explode(F.split("text", " ")).alias("term")
     ).filter(F.col("term") != "")
-    tf = toks.groupBy(id_col, "term").agg(
+    tf = toks.groupBy("doc_id", "term").agg(
         F.count("*").cast("long").alias("tf"))
     df = tf.groupBy("term").agg(F.count("*").cast("long").alias("df"))
     scored = tf.join(df, "term").withColumn(
-        "score", F.expr(f"(tf * {int(scale)}) div df"))
-    w = Window.partitionBy(id_col).orderBy(
+        "score", F.expr(f"(tf * {1 << 20}) div df"))
+    w = Window.partitionBy("doc_id").orderBy(
         F.desc("score"), F.asc("term"))
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select(id_col, "rank", "term", "tf", "df", "score")
+        .filter(F.col("rank") <= 5)
+        .select("doc_id", "rank", "term", "tf", "df", "score")
     )
 
 
@@ -329,7 +323,7 @@ def sql_flog2(v: str) -> str:
             + " ".join(whens) + " ELSE NULL END)")
 
 
-def lm_surprisal(docs_df, id_col: str = "doc_id", text_col: str = "text"):
+def lm_surprisal(docs_df):
     """Per-document bigram-LM surprisal in whole bits — the exact-integer
     form of CCNet's KenLM perplexity filter.
 
@@ -353,11 +347,11 @@ def lm_surprisal(docs_df, id_col: str = "doc_id", text_col: str = "text"):
     """
     from pyspark.sql import Window
 
-    toks = f"filter(split(trim({text_col}), ' '), t -> t <> '')"
+    toks = "filter(split(trim(text), ' '), t -> t <> '')"
     from ..plans.partitioning import spread
 
-    pairs = spread(docs_df.select(id_col, text_col)).select(
-        F.col(id_col).alias("doc_id"),
+    pairs = spread(docs_df.select("doc_id", "text")).select(
+        "doc_id",
         F.expr(
             f"explode(zip_with("
             f"slice({toks}, 1, greatest(size({toks}) - 1, 0)), "
@@ -383,8 +377,7 @@ def lm_surprisal(docs_df, id_col: str = "doc_id", text_col: str = "text"):
     )
 
 
-def ngram_repetition(docs_df, sizes: tuple = (2, 3),
-                     id_col: str = "doc_id", text_col: str = "text"):
+def ngram_repetition(docs_df):
     """Gopher-style duplicate n-gram statistics, exact integers.
 
     The Gopher/MassiveText quality rules drop documents whose n-grams
@@ -408,7 +401,7 @@ def ngram_repetition(docs_df, sizes: tuple = (2, 3),
     and at 100 TB it is the difference between a map-only pass and
     shuffling the corpus' full gram stream twice.
     """
-    toks = f"filter(split(trim({text_col}), ' '), t -> t <> '')"
+    toks = "filter(split(trim(text), ' '), t -> t <> '')"
 
     def stats(n: int) -> str:
         grams = (
@@ -440,12 +433,12 @@ def ngram_repetition(docs_df, sizes: tuple = (2, 3),
         f"named_struct('n', CAST({int(n)} AS BIGINT), 's', {stats(int(n))}), "
         "CAST(NULL AS STRUCT<n: BIGINT, s: STRUCT<n_grams: BIGINT, "
         "dup_occurrences: BIGINT, dup_distinct: BIGINT>>))"
-        for n in sizes
+        for n in (2, 3)
     )
     from ..plans.partitioning import spread
 
     return (
-        spread(docs_df.select(F.col(id_col).alias("doc_id"),
+        spread(docs_df.select("doc_id",
                               F.expr(toks).alias("t")))
         .select(
             "doc_id",
@@ -456,9 +449,7 @@ def ngram_repetition(docs_df, sizes: tuple = (2, 3),
     )
 
 
-def source_quality_ci(docs_df, id_col: str = "doc_id",
-                      source_col: str = "source",
-                      scale: int = 10_000):
+def source_quality_ci(docs_df):
     """Per-source quality keep-rate with a Wilson-score LOWER bound in
     exact integer parts — the statistic a curation pipeline actually
     ranks sources by (a 3/3 source must not outrank a 9500/10000 one,
@@ -484,15 +475,15 @@ def source_quality_ci(docs_df, id_col: str = "doc_id",
     source-keyed aggregate; the CI arithmetic is a scalar projection on
     the aggregated row — sources, not documents, bound the output.
     """
-    q = quality_score(docs_df, id_col=id_col)
-    src = docs_df.select(id_col, source_col)
+    q = quality_score(docs_df)
+    src = docs_df.select("doc_id", "source")
     g = (
-        q.join(src, id_col)
-        .groupBy(source_col)
+        q.join(src, "doc_id")
+        .groupBy("source")
         .agg(F.count("*").cast("long").alias("n_docs"),
              F.sum("keep").cast("long").alias("n_keep"))
     )
-    return _wilson_parts(g, source_col, scale)
+    return _wilson_parts(g, "source", 10_000)
 
 
 def _wilson_parts(g, source_col: str, scale: int):
@@ -512,8 +503,7 @@ def _wilson_parts(g, source_col: str, scale: int):
     )
 
 
-def inverted_index(docs_df, id_col: str = "doc_id",
-                   text_col: str = "text", min_df: int = 2):
+def inverted_index(docs_df, min_df: int):
     """Inverted-index materialization: term -> document frequency +
     the full sorted posting list — the retrieval-side structure a
     web-corpus search/RAG stack builds from the same token stream the
@@ -535,7 +525,7 @@ def inverted_index(docs_df, id_col: str = "doc_id",
     build; the structure itself stays a single hash aggregation.
     """
     toks = docs_df.select(
-        F.col(id_col), F.explode(F.split(text_col, " ")).alias("term")
+        F.col("doc_id"), F.explode(F.split("text", " ")).alias("term")
     ).filter(F.col("term") != "")
     posting = toks.distinct()
     return (
@@ -544,7 +534,7 @@ def inverted_index(docs_df, id_col: str = "doc_id",
             F.count("*").cast("long").alias("df"),
             F.array_join(
                 F.transform(
-                    F.sort_array(F.collect_list(F.col(id_col))),
+                    F.sort_array(F.collect_list(F.col("doc_id"))),
                     lambda x: x.cast("string"),
                 ),
                 ",",
@@ -554,8 +544,7 @@ def inverted_index(docs_df, id_col: str = "doc_id",
     )
 
 
-def token_overlap_topk(docs_df, n_queries: int, k: int = 10,
-                       id_col: str = "doc_id", text_col: str = "text"):
+def token_overlap_topk(docs_df, n_queries: int):
     """Lexical retrieval ranking: for each of the first ``n_queries``
     documents (as queries), rank all OTHER documents by the count of
     shared DISTINCT tokens — the sparse/lexical half of a hybrid
@@ -577,8 +566,8 @@ def token_overlap_topk(docs_df, n_queries: int, k: int = 10,
 
     ds = (
         docs_df.select(
-            F.col(id_col).alias("d"),
-            F.explode(F.split(text_col, " ")).alias("tok"))
+            F.col("doc_id").alias("d"),
+            F.explode(F.split("text", " ")).alias("tok"))
         .filter(F.col("tok") != "")
         .distinct()
     )
@@ -594,14 +583,13 @@ def token_overlap_topk(docs_df, n_queries: int, k: int = 10,
         F.desc("shared"), F.asc("vec_id"))
     return (
         overlap.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 10)
         .select("query_id", F.col("rank").cast("int").alias("rank"),
                 "vec_id")
     )
 
 
-def bpe_pair_counts(docs_df, top_n: int = 50,
-                    text_col: str = "text"):
+def bpe_pair_counts(docs_df, top_n: int):
     """The distributable core of BPE tokenizer training: corpus-wide
     adjacent-symbol pair frequencies (the statistic each BPE merge
     round maximizes). At 100 TB this count IS tokenizer training's
@@ -623,7 +611,7 @@ def bpe_pair_counts(docs_df, top_n: int = 50,
     from pyspark.sql import Window
 
     words = docs_df.select(
-        F.explode(F.split(text_col, " ")).alias("w")
+        F.explode(F.split("text", " ")).alias("w")
     ).filter(F.length("w") >= 2)
     pairs = words.select(
         F.explode(F.sequence(F.lit(1), F.length("w") - 1)).alias("i"),

@@ -166,8 +166,7 @@ def clip_boxes_to_tiles(boxes_df, z: int):
     )
 
 
-def smooth_cell_counts(counts_df, x_col: str = "ix", y_col: str = "iy",
-                       n_col: str = "n_points"):
+def smooth_cell_counts(counts_df):
     """Raster smoothing: 3x3 neighbor-sum convolution over a sparse cell
     grid (the density-surface step between counting and rendering).
 
@@ -182,26 +181,25 @@ def smooth_cell_counts(counts_df, x_col: str = "ix", y_col: str = "iy",
     off = F.expr("explode(transform(sequence(0, 8), i -> "
                  "struct(i div 3 - 1 AS dx, i % 3 - 1 AS dy)))")
     contrib = counts_df.select(
-        F.col(x_col).alias("_x"), F.col(y_col).alias("_y"),
-        F.col(n_col).alias("_n"), off.alias("o"),
+        F.col("ix").alias("_x"), F.col("iy").alias("_y"),
+        F.col("n_points").alias("_n"), off.alias("o"),
     ).select(
-        (F.col("_x") + F.col("o.dx")).alias(x_col),
-        (F.col("_y") + F.col("o.dy")).alias(y_col),
+        (F.col("_x") + F.col("o.dx")).alias("ix"),
+        (F.col("_y") + F.col("o.dy")).alias("iy"),
         F.col("_n"),
     )
-    smoothed = contrib.groupBy(x_col, y_col).agg(
+    smoothed = contrib.groupBy("ix", "iy").agg(
         F.sum("_n").cast("long").alias("smoothed")
     )
     # keep only real cells (ones that have their own count), attaching
     # the original density next to the smoothed one
-    return counts_df.join(smoothed, on=[x_col, y_col]).select(
-        x_col, y_col, F.col(n_col).cast("long").alias(n_col),
+    return counts_df.join(smoothed, on=["ix", "iy"]).select(
+        "ix", "iy", F.col("n_points").cast("long").alias("n_points"),
         "smoothed",
     )
 
 
-def tile_pyramid(points_df, z_base: int, z_min: int,
-                 lon_col: str = "lon", lat_col: str = "lat"):
+def tile_pyramid(points_df, z_base: int, z_min: int):
     """Multi-zoom tile counts (z_min..z_base) built HIERARCHICALLY: the
     corpus is scanned once for the base level, then each coarser level
     aggregates the previous level's tile counts (4 children -> 1
@@ -217,7 +215,7 @@ def tile_pyramid(points_df, z_base: int, z_min: int,
     # (defeating the point); a level table is <= 4^z rows — tiny.
     # Persists live until session end / spark.catalog.clearCache().
     base = (
-        assign_tiles(points_df, z_base, lon_col, lat_col)
+        assign_tiles(points_df, z_base, "lon", "lat")
         .groupBy("z", "tx", "ty")
         .agg(F.count("*").cast("long").alias("n_points"))
         .persist()
@@ -242,15 +240,14 @@ def tile_pyramid(points_df, z_base: int, z_min: int,
     return out
 
 
-def adaptive_quadtree(points_df, cap: int, max_z: int, root_pow: int = 16,
-                      x_col: str = "ix", y_col: str = "iy"):
+def adaptive_quadtree(points_df, cap: int, max_z: int):
     """Adaptive quadtree leaf decomposition: split every tile that holds
     more than ``cap`` points, down to ``max_z`` — the data-dependent
     tiling behind vector-tile serving and spatial load balancing (a
     uniform zoom either over-splits empty ocean or under-splits cities;
     the reference's fixed-precision grid has no answer to skew).
 
-    Leaf rule, per occupied cell at level z (cell width 2^(root_pow-z)):
+    Leaf rule, per occupied cell at level z (cell width 2^(16-z)):
     a cell is a leaf iff its ancestor chain says the split stopped
     there — (z == 0 OR parent_count > cap) AND (count <= cap OR
     z == max_z). Counts are non-increasing down the chain, so exactly
@@ -264,15 +261,15 @@ def adaptive_quadtree(points_df, cap: int, max_z: int, root_pow: int = 16,
     cells) — never a per-level pass over the corpus, and no driver
     iteration: the whole recursion is one join because "split further"
     depends only on (count, parent count). Coordinates must be
-    non-negative lattice ints < 2^root_pow.
+    non-negative lattice ints < 2^16.
 
     Returns (z, cx, cy, n_points) for each leaf.
     """
     zs = int(max_z)
     counts = (
         points_df.select(
-            F.col(x_col).cast("long").alias("px"),
-            F.col(y_col).cast("long").alias("py"),
+            F.col("ix").cast("long").alias("px"),
+            F.col("iy").cast("long").alias("py"),
         )
         .select(
             "px", "py",
@@ -280,8 +277,8 @@ def adaptive_quadtree(points_df, cap: int, max_z: int, root_pow: int = 16,
         )
         .groupBy(
             "z",
-            F.expr(f"shiftright(px, {int(root_pow)} - z)").alias("cx"),
-            F.expr(f"shiftright(py, {int(root_pow)} - z)").alias("cy"),
+            F.expr("shiftright(px, 16 - z)").alias("cx"),
+            F.expr("shiftright(py, 16 - z)").alias("cy"),
         )
         .agg(F.count("*").cast("long").alias("n_points"))
         .localCheckpoint(eager=False)

@@ -23,6 +23,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+# coarse mobility zones of od_matrix and cell_dwell:
+# zone = (ix div ZONE_W) + ZONE_NX * (iy div ZONE_H)
+ZONE_W, ZONE_H, ZONE_NX = 2250, 2125, 16
+
 
 def _floor_isqrt(d2col):
     """floor(sqrt(n)) for exact-integer n < 2^53 — portable (IEEE sqrt
@@ -30,23 +34,19 @@ def _floor_isqrt(d2col):
     return F.floor(F.sqrt(d2col.cast("double"))).cast("long")
 
 
-def path_stats(points: DataFrame,
-               entity_col: str = "user_id",
-               ts_col: str = "ts",
-               order_tiebreak: str = "event_id",
-               x_col: str = "ix", y_col: str = "iy") -> DataFrame:
+def path_stats(points: DataFrame) -> DataFrame:
     """Per-entity track stats: steps, exact integer path length, net
     displacement (floor of straight-line start→end distance).
 
     Ordering is (ts, tiebreak) so duplicate timestamps are deterministic.
-    Output: (entity_col, n_steps, path_len, net_disp), all BIGINT.
+    Output: (user_id, n_steps, path_len, net_disp), all BIGINT.
     """
-    w = Window.partitionBy(entity_col).orderBy(ts_col, order_tiebreak)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     lagged = points.select(
-        entity_col, ts_col, order_tiebreak,
-        F.col(x_col).alias("_x"), F.col(y_col).alias("_y"),
+        "user_id", "ts", "event_id",
+        F.col("ix").alias("_x"), F.col("iy").alias("_y"),
     ).select(
-        entity_col, "_x", "_y",
+        "user_id", "_x", "_y",
         F.lag("_x").over(w).alias("_px"),
         F.lag("_y").over(w).alias("_py"),
         F.row_number().over(w).alias("_rn"),
@@ -58,7 +58,7 @@ def path_stats(points: DataFrame,
     fy = F.min_by("_y", F.col("_rn"))
     lx = F.max_by("_x", F.col("_rn"))   # last point (max rn)
     ly = F.max_by("_y", F.col("_rn"))
-    return stepped.groupBy(entity_col).agg(
+    return stepped.groupBy("user_id").agg(
         (F.count("*") - 1).cast("long").alias("n_steps"),
         F.coalesce(F.sum("_step"), F.lit(0)).cast("long").alias("path_len"),
         _floor_isqrt((fx - lx) * (fx - lx) + (fy - ly) * (fy - ly))
@@ -66,16 +66,13 @@ def path_stats(points: DataFrame,
     )
 
 
-def od_matrix(pings: DataFrame, cell_w: int = 2250, cell_h: int = 2125,
-              nx: int = 16, entity_col: str = "user_id",
-              ts_col: str = "ts", tie_col: str = "event_id",
-              x_col: str = "ix", y_col: str = "iy") -> DataFrame:
+def od_matrix(pings: DataFrame) -> DataFrame:
     """Origin-destination matrix: per-entity cell-to-cell transition
     counts — the standard mobility-analytics rollup (where do trips
     between zones actually flow?).
 
-    Each ping lands in a coarse zone ``cell = (x div cell_w) + nx *
-    (y div cell_h)``; consecutive pings of the same entity (ordered by
+    Each ping lands in a coarse zone ``cell = (ix div ZONE_W) + ZONE_NX *
+    (iy div ZONE_H)``; consecutive pings of the same entity (ordered by
     timestamp, ties broken by the id column so the order is total and
     cross-engine deterministic) emit one transition; stays
     (from == to) are excluded — an OD matrix counts movements. Output:
@@ -87,11 +84,11 @@ def od_matrix(pings: DataFrame, cell_w: int = 2250, cell_h: int = 2125,
     the (from, to) pair — zone pairs are bounded by (grid size)^2
     however many pings flow through. The n_users distinct count rides
     the same aggregation (partial distinct on the pair key)."""
-    w = Window.partitionBy(entity_col).orderBy(ts_col, tie_col)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     cells = pings.select(
-        entity_col, ts_col, tie_col,
-        (F.expr(f"{x_col} div {cell_w}")
-         + nx * F.expr(f"{y_col} div {cell_h}")).alias("cell"),
+        "user_id", "ts", "event_id",
+        (F.expr(f"ix div {ZONE_W}")
+         + ZONE_NX * F.expr(f"iy div {ZONE_H}")).alias("cell"),
     )
     t = cells.withColumn("prev", F.lag("cell").over(w))
     return (
@@ -101,7 +98,7 @@ def od_matrix(pings: DataFrame, cell_w: int = 2250, cell_h: int = 2125,
                  F.col("cell").alias("cell_to"))
         .agg(
             F.count("*").cast("long").alias("n_trips"),
-            F.countDistinct(entity_col).cast("long").alias("n_users"),
+            F.countDistinct("user_id").cast("long").alias("n_users"),
         )
     )
 
@@ -121,9 +118,7 @@ def sql_isqrt_exact(v: str) -> str:
     )
 
 
-def geo_path_stats(pings: DataFrame, entity_col: str = "user_id",
-                   ts_col: str = "ts", tie_col: str = "event_id",
-                   x_col: str = "ix", y_col: str = "iy") -> DataFrame:
+def geo_path_stats(pings: DataFrame) -> DataFrame:
     """Per-entity GREAT-CIRCLE track stats — the geodetic sibling of
     `path_stats`, closing the flat-earth gap for lat/lon corpora.
 
@@ -141,8 +136,8 @@ def geo_path_stats(pings: DataFrame, entity_col: str = "user_id",
     from geobuf_cpp_spark.operators.range_join import sql_sphere_xyz
 
     xyz = pings.selectExpr(
-        entity_col, ts_col, tie_col, *sql_sphere_xyz(x_col, y_col))
-    w = Window.partitionBy(entity_col).orderBy(ts_col, tie_col)
+        "user_id", "ts", "event_id", *sql_sphere_xyz())
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     d = (
         xyz.withColumn("px", F.lag("sx").over(w))
         .withColumn("py", F.lag("sy").over(w))
@@ -152,17 +147,14 @@ def geo_path_stats(pings: DataFrame, entity_col: str = "user_id",
             "(sx-px)*(sx-px) + (sy-py)*(sy-py) + (sz-pz)*(sz-pz)"))
     )
     step = F.expr(sql_isqrt_exact("d2"))
-    return d.groupBy(entity_col).agg(
+    return d.groupBy("user_id").agg(
         F.count("*").cast("long").alias("n_steps"),
         F.sum(step).cast("long").alias("chord_len"),
         F.max(step).cast("long").alias("max_step"),
     )
 
 
-def cell_dwell(pings: DataFrame, cell_w: int = 2250, cell_h: int = 2125,
-               nx: int = 16, entity_col: str = "user_id",
-               ts_col: str = "ts", tie_col: str = "event_id",
-               x_col: str = "ix", y_col: str = "iy") -> DataFrame:
+def cell_dwell(pings: DataFrame) -> DataFrame:
     """Dwell-time rollup: per (entity, zone) — ping count, VISIT count
     (maximal runs of consecutive same-zone pings, the gaps-and-islands
     segmentation), and total dwell seconds (each inter-ping interval is
@@ -178,32 +170,30 @@ def cell_dwell(pings: DataFrame, cell_w: int = 2250, cell_h: int = 2125,
     combined groupBy on (entity, zone) — output bounded by entities x
     zones, never by ping count.
     """
-    w = Window.partitionBy(entity_col).orderBy(ts_col, tie_col)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     cells = pings.select(
-        entity_col, ts_col, tie_col,
-        (F.expr(f"{x_col} div {cell_w}")
-         + nx * F.expr(f"{y_col} div {cell_h}")).alias("cell"),
+        "user_id", "ts", "event_id",
+        (F.expr(f"ix div {ZONE_W}")
+         + ZONE_NX * F.expr(f"iy div {ZONE_H}")).alias("cell"),
     )
     t = cells.select(
-        entity_col, "cell",
+        "user_id", "cell",
         F.when(F.lag("cell").over(w).isNull()
                | (F.lag("cell").over(w) != F.col("cell")), 1)
         .otherwise(0).alias("new_visit"),
         (F.coalesce(
-            F.unix_timestamp(F.lead(ts_col).over(w)),
-            F.unix_timestamp(F.col(ts_col)))
-         - F.unix_timestamp(F.col(ts_col))).alias("dwell_secs"),
+            F.unix_timestamp(F.lead("ts").over(w)),
+            F.unix_timestamp(F.col("ts")))
+         - F.unix_timestamp(F.col("ts"))).alias("dwell_secs"),
     )
-    return t.groupBy(entity_col, "cell").agg(
+    return t.groupBy("user_id", "cell").agg(
         F.count("*").cast("long").alias("n_pings"),
         F.sum("new_visit").cast("long").alias("n_visits"),
         F.sum("dwell_secs").cast("long").alias("dwell_secs"),
     )
 
 
-def self_crossings(pings: DataFrame, entity_col: str = "user_id",
-                   ts_col: str = "ts", tie_col: str = "event_id",
-                   x_col: str = "ix", y_col: str = "iy") -> DataFrame:
+def self_crossings(pings: DataFrame) -> DataFrame:
     """Per-entity path self-intersection count — the GPS-quality /
     route-complexity metric (a clean commute crosses itself rarely; a
     noisy or looping track constantly).
@@ -224,14 +214,14 @@ def self_crossings(pings: DataFrame, entity_col: str = "user_id",
     """
     from geobuf_cpp_spark.operators.segments import sql_segments_intersect
 
-    w = Window.partitionBy(entity_col).orderBy(ts_col, tie_col)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     steps = (
         pings.select(
-            entity_col,
+            "user_id",
             F.row_number().over(w).alias("i"),
-            F.col(x_col).alias("ax"), F.col(y_col).alias("ay"),
-            F.lead(x_col).over(w).alias("bx"),
-            F.lead(y_col).over(w).alias("by"),
+            F.col("ix").alias("ax"), F.col("iy").alias("ay"),
+            F.lead("ix").over(w).alias("bx"),
+            F.lead("iy").over(w).alias("by"),
         )
         .filter(F.col("bx").isNotNull())
         # no checkpoint: both join sides prune identically, so the
@@ -239,33 +229,32 @@ def self_crossings(pings: DataFrame, entity_col: str = "user_id",
         # 0.78 s with the checkpoint)
     )
     a = steps.selectExpr(
-        entity_col, "i AS ia", "ax AS a_ax", "ay AS a_ay",
+        "user_id", "i AS ia", "ax AS a_ax", "ay AS a_ay",
         "bx AS a_bx", "by AS a_by")
     b = steps.selectExpr(
-        entity_col, "i AS ib", "ax AS b_ax", "ay AS b_ay",
+        "user_id", "i AS ib", "ax AS b_ax", "ay AS b_ay",
         "bx AS b_bx", "by AS b_by")
     pairs = (
-        a.join(b, entity_col)
+        a.join(b, "user_id")
         .where("ib >= ia + 2")
         .where("LEAST(a_ax, a_bx) <= GREATEST(b_ax, b_bx) AND "
                "LEAST(b_ax, b_bx) <= GREATEST(a_ax, a_bx) AND "
                "LEAST(a_ay, a_by) <= GREATEST(b_ay, b_by) AND "
                "LEAST(b_ay, b_by) <= GREATEST(a_ay, a_by)")
         .where(F.expr(sql_segments_intersect()))
-        .groupBy(entity_col)
+        .groupBy("user_id")
         .agg(F.count("*").cast("long").alias("n_crossings"))
     )
-    totals = steps.groupBy(entity_col).agg(
+    totals = steps.groupBy("user_id").agg(
         F.count("*").cast("long").alias("n_segs"))
-    return totals.join(pairs, entity_col, "left").select(
-        entity_col, "n_segs",
+    return totals.join(pairs, "user_id", "left").select(
+        "user_id", "n_segs",
         F.coalesce("n_crossings", F.lit(0)).cast("long")
         .alias("n_crossings"),
     )
 
 
-def traj_diameter(pings: DataFrame, entity_col: str = "user_id",
-                  x_col: str = "ix", y_col: str = "iy") -> DataFrame:
+def traj_diameter(pings: DataFrame) -> DataFrame:
     """Per-entity trajectory diameter: the exact maximum squared
     Euclidean distance between any two of the entity's pings — the
     "how far does this user range" metric.
@@ -299,15 +288,15 @@ def traj_diameter(pings: DataFrame, entity_col: str = "user_id",
     from ..plans.partitioning import spread_groups
 
     prepared = pings.select(
-        F.col(entity_col).alias("entity"),
-        F.col(x_col).cast("long").alias("x"),
-        F.col(y_col).cast("long").alias("y"),
+        F.col("user_id").alias("entity"),
+        F.col("ix").cast("long").alias("x"),
+        F.col("iy").cast("long").alias("y"),
     )
     return (
         spread_groups(prepared, "entity")
         .groupBy("entity")
         .applyInPandas(per_entity, "entity long, n_pings long, diam2 long")
-        .withColumnRenamed("entity", entity_col)
+        .withColumnRenamed("entity", "user_id")
     )
 
 
@@ -361,18 +350,15 @@ def hull_diam2(xs: list[int], ys: list[int]) -> int:
 
 
 
-def gps_jumps(pings: DataFrame, vmax_num: int, vmax_den: int = 1,
-              entity_col: str = "user_id", ts_col: str = "ts",
-              x_col: str = "ix", y_col: str = "iy",
-              seq_col: str = "event_id") -> DataFrame:
+def gps_jumps(pings: DataFrame, vmax_num: int) -> DataFrame:
     """Teleportation detection — the first cleaning pass every GPS /
     geotagged-web corpus needs: flag consecutive ping pairs whose
     implied speed exceeds vmax, i.e. dx^2 + dy^2 > (vmax * dt)^2.
 
-    The comparison runs fully cross-multiplied in BIGINT with a
-    rational vmax = vmax_num / vmax_den (lattice units per second):
+    The comparison runs fully in BIGINT with an integer vmax =
+    vmax_num (lattice units per second):
 
-        (dx^2 + dy^2) * vmax_den^2  >  vmax_num^2 * dt^2
+        dx^2 + dy^2  >  vmax_num^2 * dt^2
 
     — no sqrt, no floats, bit-identical across engines. dt uses
     floor()ed epoch seconds (the cross-engine discipline of
@@ -388,15 +374,15 @@ def gps_jumps(pings: DataFrame, vmax_num: int, vmax_den: int = 1,
     """
     from pyspark.sql import Window
 
-    vn, vd = int(vmax_num), int(vmax_den)
+    vn = int(vmax_num)
     w = Window.partitionBy("entity").orderBy("e", "seq")
     base = pings.select(
-        F.col(entity_col).alias("entity"),
-        F.col(seq_col).alias("seq"),
-        F.floor(F.unix_timestamp(ts_col).cast("double")).cast("long")
+        F.col("user_id").alias("entity"),
+        F.col("event_id").alias("seq"),
+        F.floor(F.unix_timestamp("ts").cast("double")).cast("long")
         .alias("e"),
-        F.col(x_col).cast("long").alias("x"),
-        F.col(y_col).cast("long").alias("y"),
+        F.col("ix").cast("long").alias("x"),
+        F.col("iy").cast("long").alias("y"),
     )
     lagged = base.select(
         "entity", "seq", "e", "x", "y",
@@ -409,16 +395,12 @@ def gps_jumps(pings: DataFrame, vmax_num: int, vmax_den: int = 1,
     return (
         lagged.withColumn("dt", dt.cast("long"))
         .withColumn("d2", d2.cast("long"))
-        .where(F.col("d2") * (vd * vd) > (vn * vn) * F.col("dt")
-               * F.col("dt"))
-        .select(F.col("entity").alias(entity_col), "seq", "dt", "d2")
+        .where(F.col("d2") > (vn * vn) * F.col("dt") * F.col("dt"))
+        .select(F.col("entity").alias("user_id"), "seq", "dt", "d2")
     )
 
 
-def geofence_events(pings: DataFrame, boxes: DataFrame,
-                    entity_col: str = "user_id", ts_col: str = "ts",
-                    x_col: str = "ix", y_col: str = "iy",
-                    seq_col: str = "event_id") -> DataFrame:
+def geofence_events(pings: DataFrame, boxes: DataFrame) -> DataFrame:
     """Geofence transition stream: per entity, the pings where the
     containing admin region CHANGED since the previous ping — the
     enter/exit event feed behind location-based alerting, visit
@@ -442,12 +424,12 @@ def geofence_events(pings: DataFrame, boxes: DataFrame,
     from pyspark.sql import Window
 
     base = pings.select(
-        F.col(entity_col).alias("entity"),
-        F.col(seq_col).alias("seq"),
-        F.floor(F.unix_timestamp(ts_col).cast("double")).cast("long")
+        F.col("user_id").alias("entity"),
+        F.col("event_id").alias("seq"),
+        F.floor(F.unix_timestamp("ts").cast("double")).cast("long")
         .alias("e"),
-        F.col(x_col).cast("long").alias("x"),
-        F.col(y_col).cast("long").alias("y"),
+        F.col("ix").cast("long").alias("x"),
+        F.col("iy").cast("long").alias("y"),
     )
     hit = (
         base.join(
@@ -466,7 +448,7 @@ def geofence_events(pings: DataFrame, boxes: DataFrame,
             "prev_region",
             F.coalesce(F.lag("region").over(w), F.lit(-2)).cast("long"))
         .where(F.col("region") != F.col("prev_region"))
-        .select(F.col("entity").alias(entity_col), "seq", "e",
+        .select(F.col("entity").alias("user_id"), "seq", "e",
                 "region", "prev_region")
     )
 
@@ -504,9 +486,7 @@ def sql_polyline_chunks(v: str) -> str:
     )
 
 
-def polyline_encode(pings: DataFrame, entity_col: str = "user_id",
-                    ts_col: str = "ts", seq_col: str = "event_id",
-                    x_col: str = "ix", y_col: str = "iy") -> DataFrame:
+def polyline_encode(pings: DataFrame) -> DataFrame:
     """Per-entity Google-polyline trajectory encoding over lattice
     coordinates: deltas against the previous ping in (ts, seq) order,
     each delta armored by ``sql_polyline_chunks``, concatenated
@@ -524,12 +504,12 @@ def polyline_encode(pings: DataFrame, entity_col: str = "user_id",
 
     w = Window.partitionBy("entity").orderBy("e", "seq")
     base = pings.select(
-        F.col(entity_col).alias("entity"),
-        F.col(seq_col).alias("seq"),
-        F.floor(F.unix_timestamp(ts_col).cast("double")).cast("long")
+        F.col("user_id").alias("entity"),
+        F.col("event_id").alias("seq"),
+        F.floor(F.unix_timestamp("ts").cast("double")).cast("long")
         .alias("e"),
-        F.col(x_col).cast("long").alias("x"),
-        F.col(y_col).cast("long").alias("y"),
+        F.col("ix").cast("long").alias("x"),
+        F.col("iy").cast("long").alias("y"),
     )
     deltas = base.select(
         "entity", "seq", "e",
@@ -554,5 +534,5 @@ def polyline_encode(pings: DataFrame, entity_col: str = "user_id",
                 "",
             ).alias("polyline"),
         )
-        .withColumnRenamed("entity", entity_col)
+        .withColumnRenamed("entity", "user_id")
     )

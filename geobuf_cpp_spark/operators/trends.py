@@ -26,18 +26,17 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 
-def group_trend(events_df, group_col: str = "event_type",
-                ts_col: str = "ts", val_col: str = "value"):
+def group_trend(events_df):
     """(group, n, x0, slope_num, slope_den, icept_num) — exact parts."""
     e = events_df.select(
-        F.col(group_col).alias("g"),
+        F.col("event_type").alias("g"),
         # explicit cast: the testdata's TIMESTAMP_NTZ column + a UTC
         # session make this the exact epoch instant (the same anchor as
         # resample.gapfill_locf)
         F.expr(
-            f"unix_millis(cast({ts_col} as timestamp)) div 3600000"
+            "unix_millis(cast(ts as timestamp)) div 3600000"
         ).alias("x"),
-        F.expr(f"CAST(floor({val_col} * 1000) AS BIGINT)").alias("y"),
+        F.expr("CAST(floor(value * 1000) AS BIGINT)").alias("y"),
     )
     s = e.groupBy("g").agg(
         F.count("*").alias("n"),
@@ -58,7 +57,7 @@ def group_trend(events_df, group_col: str = "event_type",
     csxy = sxy - x0 * sy
     csxx = sxx - F.lit(2).cast("decimal(38,0)") * x0 * sx + n * x0 * x0
     return s.select(
-        F.col("g").alias(group_col),
+        F.col("g").alias("event_type"),
         F.col("n").cast("long").alias("n"),
         F.col("x0").cast("long").alias("x0"),
         (n * csxy - csx * sy).cast("decimal(38,0)").cast("string")

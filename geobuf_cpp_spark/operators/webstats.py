@@ -40,7 +40,7 @@ def url_sql(cast_type: str = "STRING") -> str:
     )
 
 
-def domain_rollup(docs_with_url, url_col: str = "url"):
+def domain_rollup(docs_with_url):
     """Per-registered-domain rollup over a corpus with a URL column.
 
     Registered domain = last two dot-labels of the host (the eTLD+1
@@ -49,9 +49,9 @@ def domain_rollup(docs_with_url, url_col: str = "url"):
     total_chars, n_with_query) — all BIGINT.
     """
     parts = docs_with_url.select(
-        F.expr(f"parse_url({url_col}, 'HOST')").alias("host"),
-        F.expr(f"parse_url({url_col}, 'PATH')").alias("path"),
-        F.expr(f"parse_url({url_col}, 'QUERY')").alias("query"),
+        F.expr("parse_url(url, 'HOST')").alias("host"),
+        F.expr("parse_url(url, 'PATH')").alias("path"),
+        F.expr("parse_url(url, 'QUERY')").alias("query"),
         "lang",
         "n_chars",
     ).withColumn(

@@ -21,7 +21,7 @@ _CONF = {
 }
 
 
-def run_skew_join_demo(spark, n_rows: int = 200_000) -> tuple[int, str]:
+def run_skew_join_demo(spark) -> tuple[int, str]:
     """Execute the hot-key join; return (row_count, final adaptive plan).
 
     The join's OWN query execution is driven JVM-side (``.execute()`` on
@@ -33,7 +33,7 @@ def run_skew_join_demo(spark, n_rows: int = 200_000) -> tuple[int, str]:
     try:
         for k, v in _CONF.items():
             conf.set(k, v)
-        left = spark.range(0, n_rows).selectExpr(
+        left = spark.range(0, 200_000).selectExpr(
             "CASE WHEN id % 20 > 0 THEN CAST(0 AS BIGINT) "
             "ELSE id % 97 END AS cell",
             "id AS row_id",

@@ -58,14 +58,8 @@ def stage_is_complete(root: str, stage: str, input_fp: str) -> bool:
     return bool(m and m.get("status") == "COMPLETE" and m.get("input_fp") == input_fp)
 
 
-def run_stage(
-    spark: SparkSession,
-    root: str,
-    stage: str,
-    input_fp: str,
-    build: "callable",
-    partition_cols: list[str] | None = None,
-) -> DataFrame:
+def run_stage(spark: SparkSession, root: str, stage: str, input_fp: str,
+              build: "callable") -> DataFrame:
     """Run (or resume) one checkpointed stage.
 
     ``build()`` produces the stage DataFrame lazily — it is only invoked on
@@ -81,10 +75,7 @@ def run_stage(
     df = build()
     tmp = data + "_tmp"
     shutil.rmtree(tmp, ignore_errors=True)
-    writer = df.write.mode("overwrite")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(tmp)
+    df.write.mode("overwrite").parquet(tmp)
 
     out = spark.read.parquet(tmp)
     per_partition = []

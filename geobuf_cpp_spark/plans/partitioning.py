@@ -108,8 +108,7 @@ def materialize_geobuf(features_df, out_dir: str, res: int = 8,
     return spark.read.parquet(out_dir)
 
 
-def with_salt(df: DataFrame, n_salt: int, salt_col: str = "_salt",
-              salt_cols: list[str] | None = None) -> DataFrame:
+def with_salt(df: DataFrame, n_salt: int) -> DataFrame:
     """Add a salt column that is genuinely row-spreading.
 
     Default source is the row's physical position
@@ -118,36 +117,27 @@ def with_salt(df: DataFrame, n_salt: int, salt_col: str = "_salt",
     values — a hot key's rows always fan out, even when the frame was
     already projected down to just the group key (the failure mode of
     hashing column values: every row of a hot key hashes identically).
-    Pass ``salt_cols`` to derive the salt from column content instead when
-    a content-deterministic salt is required (e.g. co-salting two sides of
-    a join); callers must then include a row-unique column.
 
     Determinism note: the positional salt depends on shuffle fetch order,
     so a PARTIAL stage re-execution could observe different salts per row.
     Spark classifies such stages indeterminate and rolls back whole stages
     on retry (SPARK-23207), which is what keeps salted aggregates exact
     under failure — results rely on that mechanism, not on salt stability.
-    Content-derived ``salt_cols`` with a row-unique column sidesteps the
-    dependency when one is available.
     """
-    if salt_cols:
-        src = F.pmod(F.xxhash64(*salt_cols), F.lit(n_salt))
-    else:
-        src = F.pmod(F.monotonically_increasing_id(), F.lit(n_salt))
-    return df.withColumn(salt_col, src.cast("int"))
+    src = F.pmod(F.monotonically_increasing_id(), F.lit(n_salt))
+    return df.withColumn("_salt", src.cast("int"))
 
 
-def salted_count(df: DataFrame, key_cols: list[str], n_salt: int = 16,
-                 salt_cols: list[str] | None = None) -> DataFrame:
+def salted_count(df: DataFrame, key_cols: list[str]) -> DataFrame:
     """count() per key via two-phase salted aggregation.
 
-    Phase 1 shuffles on (key, salt) — the hot key fans out over ``n_salt``
+    Phase 1 shuffles on (key, salt) — the hot key fans out over 16
     partial aggregates (position-derived salt, see ``with_salt``); phase 2
-    merges the (at most n_salt) partials per key. Result rows are identical
+    merges the (at most 16) partials per key. Result rows are identical
     to ``df.groupBy(key).count()`` for any CONSISTENT salt assignment;
     under partial retries that consistency comes from Spark's
     indeterminate-stage rollback (see ``with_salt``'s determinism note).
     """
-    salted = with_salt(df, n_salt, salt_cols=salt_cols)
+    salted = with_salt(df, 16)
     partial = salted.groupBy(*key_cols, "_salt").agg(F.count("*").alias("_partial"))
     return partial.groupBy(*key_cols).agg(F.sum("_partial").alias("count"))

@@ -35,15 +35,14 @@ from ..functions.udfs import _row_features
 MANIFEST_SCHEMA = "path string, cell_prefix long, n_features long, n_bytes long"
 
 
-def write_geobuf_files(features_df, out_dir: str, res: int = 8,
-                       prefix_res: int = 3, max_precision: int = 10**7,
-                       lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
+def write_geobuf_files(features_df, out_dir: str, res: int,
+                       max_precision: int) -> DataFrame:
     """features(lon, lat, geom, properties, ...) -> .pbf files + manifest."""
     os.makedirs(out_dir, exist_ok=True)
 
     with_prefix = features_df.withColumn(
         "cell_prefix",
-        F.expr(sql_cell_parent(sql_cell(lat_col, lon_col, res), res, prefix_res)),
+        F.expr(sql_cell_parent(sql_cell("lat", "lon", res), res, 3)),
     )
 
     def write_group(pdf: pd.DataFrame) -> pd.DataFrame:

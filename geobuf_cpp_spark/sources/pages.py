@@ -207,7 +207,7 @@ def _regular_ring(lat_c: float, lon_c: float, radius_deg: float, n_vertices: int
     return ring
 
 
-def generate_admin_polygons(n_per_city: int = 3) -> pd.DataFrame:
+def generate_admin_polygons() -> pd.DataFrame:
     """Deterministic admin polygons around the city centers.
 
     Per city: level-0 octagon (radius 1.2°), level-1 hexagon (0.45°),
@@ -220,7 +220,7 @@ def generate_admin_polygons(n_per_city: int = 3) -> pd.DataFrame:
     for c, (lat_c, lon_c) in enumerate(CITY_CENTERS):
         specs = [
             (0, 1.2, 8), (1, 0.45, 6), (2, 0.18, 4),
-        ][: n_per_city]
+        ][: 3]
         for level, radius, nv in specs:
             if level == 0 and c == 0:
                 geom = {

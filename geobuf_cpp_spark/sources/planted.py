@@ -42,17 +42,17 @@ def _elem(i: str, j: str) -> str:
     )
 
 
-def planted_spark_sql(n: int = PLANTED_N) -> str:
+def planted_spark_sql() -> str:
     return (
         "SELECT id AS vec_id, "
         f"transform(sequence(0, {PLANTED_D - 1}), j -> {_elem('id', 'j')}) "
-        f"AS embedding FROM range({n})"
+        f"AS embedding FROM range({PLANTED_N})"
     )
 
 
-def planted_duckdb_sql(n: int = PLANTED_N) -> str:
+def planted_duckdb_sql() -> str:
     return (
-        f"WITH ids AS (SELECT range AS i FROM range({n})) "
+        f"WITH ids AS (SELECT range AS i FROM range({PLANTED_N})) "
         "SELECT i AS vec_id, "
         f"list_transform(generate_series(0, {PLANTED_D - 1}), j -> {_elem('i', 'j')}) "
         "AS embedding FROM ids"

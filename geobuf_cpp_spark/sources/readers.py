@@ -15,8 +15,7 @@ def table_df(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return session_memo(spark, path, lambda: spark.read.parquet(path), sf_dir)
 
 
-def read_geobuf_dir(spark: SparkSession, location: str,
-                    pattern: str = "*.pbf") -> DataFrame:
+def read_geobuf_dir(spark: SparkSession, location: str) -> DataFrame:
     """Read a directory of raw geobuf files into a feature DataFrame.
 
     Spark's ``binaryFile`` source streams each blob (one file = one geobuf
@@ -36,7 +35,7 @@ def read_geobuf_dir(spark: SparkSession, location: str,
 
     raw = (
         spark.read.format("binaryFile")
-        .option("pathGlobFilter", pattern)
+        .option("pathGlobFilter", "*.pbf")
         .load(location)
         .select("path", "content")
     )

@@ -11,8 +11,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def dedup_batch_twin(docs: DataFrame, ts_col: str = "ts",
-                     id_col: str = "doc_id") -> DataFrame:
+def dedup_batch_twin(docs: DataFrame) -> DataFrame:
     """First-seen-wins with a total order: per distinct text (md5
     digest), keep the row with the smallest (event time, id). Returns
     the kept row plus the group's copy count. One digest-keyed shuffle;
@@ -22,7 +21,7 @@ def dedup_batch_twin(docs: DataFrame, ts_col: str = "ts",
     from pyspark.sql import Window
 
     w_ord = Window.partitionBy("_fp").orderBy(
-        F.col(ts_col).asc(), F.col(id_col).asc())
+        F.col("ts").asc(), F.col("doc_id").asc())
     w_all = Window.partitionBy("_fp")
     return (
         docs.withColumn("_fp", F.md5(F.col("text").cast("binary")))
@@ -31,8 +30,8 @@ def dedup_batch_twin(docs: DataFrame, ts_col: str = "ts",
         .filter("_rn = 1")
         .select(
             F.col("_fp").alias("fp"),
-            F.col(id_col).alias("kept_doc_id"),
-            F.col(ts_col).alias("kept_ts"),
+            F.col("doc_id").alias("kept_doc_id"),
+            F.col("ts").alias("kept_ts"),
             "n_copies",
         )
     )

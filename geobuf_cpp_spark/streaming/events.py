@@ -21,9 +21,7 @@ def _ping_cell_expr(res: int) -> str:
     return sql_cell("((iy - 8500) / 100.0)", "((ix - 18000) / 100.0)", res)
 
 
-def cell_hotspot_counts(pings: DataFrame, res: int = 8,
-                        window: str = "1 hour",
-                        watermark: str = "2 hours") -> DataFrame:
+def cell_hotspot_counts(pings: DataFrame) -> DataFrame:
     """Streaming geo hotspots: event-time windowed per-cell ping counts.
 
     The streaming half of the cell-index story — the batch engine rolls
@@ -38,12 +36,12 @@ def cell_hotspot_counts(pings: DataFrame, res: int = 8,
     is the deterministic "latest ping" witness (floats and distincts
     are deliberately absent — append-mode streaming aggs want
     watermark-evictable, merge-friendly state)."""
-    cell = F.expr(_ping_cell_expr(res))
+    cell = F.expr(_ping_cell_expr(8))
     src = pings
     if pings.isStreaming:
-        src = pings.withWatermark("ts", watermark)
+        src = pings.withWatermark("ts", "2 hours")
     return (
-        src.groupBy(F.window("ts", window).alias("w"), cell.alias("cell"))
+        src.groupBy(F.window("ts", "1 hour").alias("w"), cell.alias("cell"))
         .agg(
             F.count("*").cast("long").alias("n_pings"),
             F.max("event_id").cast("long").alias("max_event_id"),

@@ -30,12 +30,11 @@ def _interval_cond(key_col: str, left_ts: str, right_ts: str,
     )
 
 
-def interval_join_batch(left: DataFrame, right: DataFrame, key_col: str,
-                        left_ts: str = "ts", right_ts: str = "ts",
-                        within_seconds: int = 1800) -> DataFrame:
+def interval_join_batch(left: DataFrame, right: DataFrame,
+                        key_col: str) -> DataFrame:
     """Plain inner join on the interval condition. Caller projects the
     sides to disjoint column names (besides the key) before calling."""
-    cond = _interval_cond(key_col, left_ts, right_ts, within_seconds)
+    cond = _interval_cond(key_col, "ts", "ts", 1800)
     return left.alias("l").join(right.alias("r"), cond, "inner").drop(
         F.col(f"r.{key_col}")
     )

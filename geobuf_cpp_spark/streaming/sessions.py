@@ -9,7 +9,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def sessionize_batch(events: DataFrame, gap_seconds: float = 1800.0) -> DataFrame:
+def sessionize_batch(events: DataFrame, gap_seconds: float) -> DataFrame:
     """Sessions via lag + cumulative session ids.
 
     Pure DataFrame ops (two window functions over one user-keyed shuffle).

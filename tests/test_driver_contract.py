@@ -73,17 +73,29 @@ def _referenced_names(path):
     return names
 
 
-def test_no_test_only_public_api():
-    """A public top-level function or class of the package that tests
-    reference must also be referenced by production code: the package
-    itself (CLI included), __spark_entry__.py, scripts/ or perfbench/.
-    Test-only API is deleted with its tests, not kept; the allow-list
-    above names the exceptions, and each entry must still be test-only."""
-    import ast
+def _source_files():
+    """(root, package files, production files): production is the
+    package itself (CLI included), __spark_entry__.py, bench.py,
+    scripts/ and perfbench/."""
     import pathlib
 
     root = pathlib.Path(__file__).resolve().parent.parent
     pkg = sorted((root / "geobuf_cpp_spark").rglob("*.py"))
+    prod = pkg + [root / "__spark_entry__.py", root / "bench.py"] \
+        + sorted((root / "scripts").glob("*.py")) \
+        + sorted((root / "perfbench").glob("*.py"))
+    return root, pkg, prod
+
+
+def test_no_test_only_public_api():
+    """A public top-level function or class of the package that tests
+    reference must also be referenced by production code (see
+    ``_source_files``). Test-only API is deleted with its tests, not
+    kept; the allow-list above names the exceptions, and each entry must
+    still be test-only."""
+    import ast
+
+    root, pkg, prod_files = _source_files()
     public = set()
     for path in pkg:
         for node in ast.parse(path.read_text()).body:
@@ -91,12 +103,94 @@ def test_no_test_only_public_api():
                                  ast.ClassDef)) \
                     and not node.name.startswith("_"):
                 public.add(node.name)
-    prod_files = pkg + [root / "__spark_entry__.py"] \
-        + sorted((root / "scripts").glob("*.py")) \
-        + sorted((root / "perfbench").glob("*.py"))
     prod = set().union(*map(_referenced_names, prod_files))
     tests = set().union(*map(_referenced_names,
                              sorted((root / "tests").glob("*.py"))))
     test_only = (public & tests) - prod
     assert sorted(test_only - set(TEST_ONLY_ALLOWED)) == []
     assert sorted(set(TEST_ONLY_ALLOWED) - test_only) == []
+
+
+def _defaulted_parameters(fn):
+    """(name, default text, positional index or None) per defaulted
+    parameter of a FunctionDef."""
+    import ast
+
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    out = [(arg.arg, ast.unparse(d), pos.index(arg))
+           for arg, d in zip(pos[len(pos) - len(a.defaults):], a.defaults)]
+    out += [(arg.arg, ast.unparse(d), None)
+            for arg, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+    return out
+
+
+def test_no_unvaried_parameters():
+    """Every defaulted parameter of a package function must receive two
+    or more distinct argument texts from production calls (an omitted
+    argument counts as its default). A parameter that production never
+    varies is folded into the code instead: its value is inlined, or,
+    when it is a constant the oracle also reads, passed explicitly
+    without a default. Out of scope: the codec (the reference
+    Encoder/Decoder API), session.py deployment settings, the CLI in
+    __main__.py and the names in TEST_ONLY_ALLOWED. Calls resolve by
+    name, through ``from ... import x as y`` aliases."""
+    import ast
+    import collections
+
+    root, pkg, prod_files = _source_files()
+    base = root / "geobuf_cpp_spark"
+    funcs = collections.defaultdict(list)
+    for path in pkg:
+        rel = path.relative_to(base).as_posix()
+        if rel.startswith("codec/") or rel in ("session.py", "__main__.py"):
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) \
+                    and node.name not in TEST_ONLY_ALLOWED:
+                funcs[node.name].append((rel, node))
+    values = collections.defaultdict(set)
+    for path in prod_files:
+        tree = ast.parse(path.read_text())
+        alias = {a.asname: a.name for node in ast.walk(tree)
+                 if isinstance(node, ast.ImportFrom)
+                 for a in node.names if a.asname}
+        for call in ast.walk(tree):
+            if not isinstance(call, ast.Call):
+                continue
+            f = call.func
+            name = f.id if isinstance(f, ast.Name) else \
+                f.attr if isinstance(f, ast.Attribute) else None
+            kws = {k.arg: k.value for k in call.keywords if k.arg}
+            for rel, fn in funcs.get(alias.get(name, name), []):
+                for param, default, idx in _defaulted_parameters(fn):
+                    if param in kws:
+                        text = ast.unparse(kws[param])
+                    elif idx is not None and idx < len(call.args):
+                        text = ast.unparse(call.args[idx])
+                    else:
+                        text = default
+                    values[rel, fn.name, param].add(text)
+    unvaried = sorted(
+        f"{rel}:{fn.lineno} {fn.name}({param}={default})"
+        for lst in funcs.values() for rel, fn in lst
+        for param, default, _ in _defaulted_parameters(fn)
+        if len(values[rel, fn.name, param]) < 2
+    )
+    assert unvaried == [], f"{len(unvaried)} unvaried: {unvaried}"
+
+
+def test_oracle_texts_and_query_order_unchanged():
+    """The frozen driver contract: the oracle_sql() texts and the order
+    of queries(). A change to either is a change of the harness, not of
+    the engine, and needs its own reviewed update of these digests."""
+    import hashlib
+
+    import __spark_entry__ as E
+
+    oracles = E.oracle_sql()
+    assert len(oracles) == 183
+    assert hashlib.md5(repr(sorted(oracles.items())).encode()).hexdigest() \
+        == "c25ecffe7ad4f0364c33acd9b5775cd6"
+    assert hashlib.md5(repr(list(E.queries())).encode()).hexdigest() \
+        == "29251b38d406ea4b76b2e2a6796d9ee0"

@@ -48,23 +48,6 @@ def test_range_self_join_matches_brute_force(spark):
     assert (1000, 1002, 625) in got
 
 
-def test_range_join_two_sided_ordered_pairs(spark):
-    from geobuf_cpp_spark.operators.range_join import range_join
-
-    left = spark.createDataFrame(
-        [(1, 0, 0), (2, 100, 100)], "point_id long, ix long, iy long"
-    )
-    right = spark.createDataFrame(
-        [(10, 3, 4), (11, 100, 104), (12, 999, 999)],
-        "point_id long, ix long, iy long",
-    )
-    got = {
-        (row.id_a, row.id_b, row.d2)
-        for row in range_join(left, right, 5).collect()
-    }
-    assert got == {(1, 10, 25), (2, 11, 16)}
-
-
 def test_range_self_join_antimeridian_wrap(spark):
     from geobuf_cpp_spark.operators.range_join import range_self_join
 
@@ -131,7 +114,7 @@ def test_path_stats_matches_scalar_oracle(spark):
         rows, "event_id long, user_id long, ts double, ix long, iy long"
     )
     got = {r.user_id: (r.n_steps, r.path_len, r.net_disp)
-           for r in path_stats(df, ts_col="ts").collect()}
+           for r in path_stats(df).collect()}
 
     def oracle(seq):
         seq = sorted(seq, key=lambda t: (t[2], t[0]))
@@ -254,9 +237,12 @@ def test_text_ops_stay_jvm_side(spark):
     df = spark.createDataFrame(
         [(1, "a b c d e f g h i j")], "doc_id long, text string"
     )
-    for op in (chunk_dedup, scrub_pii, repetition_stats, token_rarity):
-        plan = op(df)._jdf.queryExecution().executedPlan().toString()
-        assert "PythonUDF" not in plan and "ArrowEval" not in plan, op.__name__
+    for name, out in (("chunk_dedup", chunk_dedup(df, 8)),
+                      ("scrub_pii", scrub_pii(df)),
+                      ("repetition_stats", repetition_stats(df)),
+                      ("token_rarity", token_rarity(df))):
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "PythonUDF" not in plan and "ArrowEval" not in plan, name
 
 
 # ---------------------------------------------------------------------------
@@ -289,7 +275,7 @@ def test_ngram_decontaminate_catches_partial_copies(spark):
     )
     exact_ids = {r.doc_id for r in decontaminate(train, held).collect()}
     ngram_ids = {r.doc_id
-                 for r in ngram_decontaminate(train, held, n=5).collect()}
+                 for r in ngram_decontaminate(train, held).collect()}
     assert exact_ids == {2, 3, 4}
     assert ngram_ids == {3, 4}
 
@@ -812,8 +798,14 @@ def test_md5_low64_matches_duckdb_anchor(spark):
 
 def test_kmv_estimate_within_error_bound(spark):
     """KMV relative error is ~1/sqrt(k-2); on a 2000-token vocabulary
-    with k=64 the estimate must land within 3 standard errors."""
-    from geobuf_cpp_spark.operators.sketches import kmv_distinct
+    with k=KMV_K the estimate must land within 3 standard errors."""
+    import hashlib
+
+    from geobuf_cpp_spark.operators.sketches import (
+        KMV_K,
+        kmv_distinct,
+        kmv_sketch,
+    )
 
     n = 2000
     docs = spark.createDataFrame(
@@ -821,10 +813,18 @@ def test_kmv_estimate_within_error_bound(spark):
          for i in range(n // 20)],
         "doc_id long, text string",
     )
-    row = kmv_distinct(docs, k=64).collect()[0]
-    assert row["n_sketch"] == 64
+    row = kmv_distinct(kmv_sketch(docs)).collect()[0]
+    assert row["n_sketch"] == KMV_K
     rel_err = abs(row["est_distinct"] - n) / n
-    assert rel_err < 3 / (62 ** 0.5), rel_err
+    assert rel_err < 3 / ((KMV_K - 2) ** 0.5), rel_err
+    # pin the estimator exactly: the KMV_K-th smallest md5-low64 token
+    # hash, recomputed here, and (k-1) * 2^64 div h_k from it
+    hashes = sorted(
+        int.from_bytes(hashlib.md5(f"w{j}".encode()).digest()[8:16],
+                       "little")
+        for j in range(n))
+    assert int(row["kth_hash"]) == hashes[KMV_K - 1]
+    assert row["est_distinct"] == ((KMV_K - 1) << 64) // hashes[KMV_K - 1]
 
 
 def test_kmv_sketch_merge_is_union_bottom_k(spark):
@@ -842,14 +842,14 @@ def test_kmv_sketch_merge_is_union_bottom_k(spark):
         "doc_id long, text string")
     k = 16
     merged = (
-        kmv_sketch(a, k=k).select("hash_val")
-        .unionByName(kmv_sketch(b, k=k).select("hash_val"))
+        kmv_sketch(a).select("hash_val")
+        .unionByName(kmv_sketch(b).select("hash_val"))
         .distinct()
         .orderBy("hash_val").limit(k)
         .select(F.row_number().over(Window.orderBy("hash_val"))
                 .cast("int").alias("rank"), "hash_val")
     )
-    whole = kmv_sketch(a.unionByName(b), k=k)
+    whole = kmv_sketch(a.unionByName(b))
     key = lambda r: (r["rank"], r["hash_val"])  # noqa: E731
     assert sorted(map(key, merged.collect())) == sorted(
         map(key, whole.collect()))
@@ -868,7 +868,7 @@ def test_term_cooccurrence_hand_counts(spark):
     )
     rows = {(r["term_a"], r["term_b"]):
             (r["pair_docs"], r["docs_a"], r["docs_b"], r["n_docs"])
-            for r in term_cooccurrence(docs, vocab_size=10).collect()}
+            for r in term_cooccurrence(docs).collect()}
     assert rows == {
         ("cat", "dog"): (2, 3, 3, 4),
         ("cat", "fish"): (1, 3, 2, 4),
@@ -902,8 +902,8 @@ def test_grid_cluster_driver_and_distributed_paths_agree(spark, monkeypatch):
 
 def test_bloom_probe_no_false_negatives(spark):
     """Every inserted term probes maybe_present=True (Bloom filters
-    cannot false-negative); an absent term with a deliberately tiny
-    filter width demonstrates the deterministic false-positive side."""
+    cannot false-negative), and absent terms miss at the production
+    width."""
     from geobuf_cpp_spark.operators.sketches import bloom_build, bloom_probe
 
     docs = spark.createDataFrame(
@@ -922,13 +922,6 @@ def test_bloom_probe_no_false_negatives(spark):
         assert got[t] is True, t
     # 15 set bits in 65536: absent terms must miss at least one bucket
     assert got["zeta"] is False and got["omega"] is False
-
-    # m=4: every bit saturates -> absent terms become false positives,
-    # deterministically
-    tiny = bloom_build(docs, m=4)
-    got4 = {r["term"]: r["maybe_present"]
-            for r in bloom_probe(tiny, probe, m=4).collect()}
-    assert all(got4.values())
 
 
 def test_bloom_shard_union_is_same_distinct(spark):
@@ -1118,7 +1111,7 @@ def test_vocab_topk_plans_take_ordered(spark):
         [(i, f"a{i % 5} b{i % 3} c") for i in range(50)],
         "doc_id long, text string",
     )
-    for df in [term_cooccurrence(docs, vocab_size=4), kmv_sketch(docs)]:
+    for df in [term_cooccurrence(docs), kmv_sketch(docs)]:
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")
@@ -1137,7 +1130,7 @@ def test_merge_upsert_updates_beat_base_on_ties(spark):
     base = spark.createDataFrame(
         [(1, "old", "2024-01-01 00:00:00"), (2, "keep", "2024-06-01 00:00:00")],
         "k long, v string, ts string",
-    ).selectExpr("k", "v", "CAST(ts AS TIMESTAMP) AS ts")
+    ).selectExpr("k", "v", "CAST(ts AS TIMESTAMP) AS ts", "v AS segment")
     updates = spark.createDataFrame(
         [
             (1, "tie-wins", "2024-01-01 00:00:00"),   # equal ts: update wins
@@ -1146,11 +1139,10 @@ def test_merge_upsert_updates_beat_base_on_ties(spark):
             (3, "insert-late", "2024-04-01 00:00:00"),  # latest wins in-source
         ],
         "k long, v string, ts string",
-    ).selectExpr("k", "v", "CAST(ts AS TIMESTAMP) AS ts")
+    ).selectExpr("k", "v", "CAST(ts AS TIMESTAMP) AS ts", "v AS segment")
     got = {
         r["k"]: r["v"]
-        for r in merge_upsert(base, updates, ["k"], "ts",
-                              tie_cols=["v"]).collect()
+        for r in merge_upsert(base, updates, ["k"], "ts").collect()
     }
     assert got == {1: "tie-wins", 2: "keep", 3: "insert-late"}
 
@@ -1186,11 +1178,11 @@ def test_exact_rank_buckets_matches_global_ntile_semantics(spark):
         "v": [(i * 13) % 7 for i in range(37)],   # heavy value ties
     })
     got = exact_rank_buckets(
-        spark.createDataFrame(pdf), "v", "id", n_buckets=4
+        spark.createDataFrame(pdf), "v", "id"
     ).toPandas().sort_values("id").reset_index(drop=True)
     expect = pdf.sort_values(["v", "id"]).reset_index(drop=True)
     expect["rank"] = range(1, len(expect) + 1)
-    expect["bucket"] = (expect["rank"] - 1) * 4 // len(expect) + 1
+    expect["bucket"] = (expect["rank"] - 1) * 10 // len(expect) + 1
     merged = got.merge(expect, on="id", suffixes=("", "_e"))
     assert (merged["rank"] == merged["rank_e"]).all()
     assert (merged["bucket"] == merged["bucket_e"]).all()

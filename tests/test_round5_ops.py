@@ -270,11 +270,10 @@ def test_star_polygon_cover_and_reflex_membership():
         assert bool(g) == want, name
 
 
-def test_incremental_neardup_index_maintenance(spark, tmp_path):
-    """The persisted signature index supports the rolling-crawl loop:
-    batch N dedups against everything indexed so far, then its bands
-    append as a new snapshot version; time travel reproduces the dedup
-    as of any earlier version."""
+def test_incremental_neardup_against_signature_index(spark, tmp_path):
+    """A batch dedups against the persisted signature index of the
+    corpus; rebuilding the index commits a new snapshot lineage that
+    holds only the rebuilt corpus's bands."""
     from geobuf_cpp_spark.operators.incremental import (
         build_signature_index,
         incremental_neardup,
@@ -300,20 +299,14 @@ def test_incremental_neardup_index_maintenance(spark, tmp_path):
     p1 = incremental_neardup(spark, b1, corpus, table, threshold=0.5)
     assert sorted((r["id_a"], r["id_b"]) for r in p1.collect()) == [(10, 1)]
 
-    # maintenance: append batch 1's bands; the searchable corpus is now
-    # corpus + b1 (texts via union for the verify fetch)
-    build_signature_index(b1, table, mode="append")
+    # a rebuild over batch 1 alone starts a new lineage: doc 1 is no
+    # longer indexed, so batch 2 only finds doc 10
+    assert build_signature_index(b1, table) == 2
     assert snapshot_versions(table) == [1, 2]
     p2 = incremental_neardup(spark, b2, corpus.unionByName(b1), table,
                              threshold=0.5)
     assert sorted((r["id_a"], r["id_b"]) for r in p2.collect()) \
-        == [(20, 1), (20, 10)]
-
-    # time travel: as of v1 the index has never seen batch 1
-    p2_v1 = incremental_neardup(spark, b2, corpus.unionByName(b1), table,
-                                threshold=0.5, version=1)
-    assert sorted((r["id_a"], r["id_b"]) for r in p2_v1.collect()) \
-        == [(20, 1)]
+        == [(20, 10)]
 
 
 def test_hll_grouped_shard_merge(spark):
@@ -411,16 +404,20 @@ def test_skyline_block_count_invariant(spark):
     same frontier (a locally dominated row is globally dominated)."""
     import random
 
-    from geobuf_cpp_spark.operators.skyline import skyline2d
+    from geobuf_cpp_spark.operators.skyline import _survivors, skyline2d
 
     rnd = random.Random(11)
     rows = [(i, rnd.randrange(50), rnd.randrange(50)) for i in range(500)]
     df = spark.createDataFrame(rows, "id long, cost long, gain long")
+    # one block: the exact global pass alone; many: skyline2d's 64 blocks
     one = {tuple(r) for r in
-           skyline2d(df, "cost", "gain", "id", n_blocks=1).collect()}
+           _survivors(df, "cost", "gain", []).collect()}
     many = {tuple(r) for r in
-            skyline2d(df, "cost", "gain", "id", n_blocks=64).collect()}
-    assert one == many
+            skyline2d(df, "cost", "gain", "id").collect()}
+    want = {p for p in rows if not any(
+        (q[1] < p[1] and q[2] >= p[2]) or (q[1] <= p[1] and q[2] > p[2])
+        for q in rows)}
+    assert one == many == want
 
 
 def test_group_trend_recovers_planted_slope(spark):
@@ -734,7 +731,10 @@ def test_snap_to_segments_argmin_and_tiebreak(spark):
     5) ties the degenerate segment 2 (endpoint distance 5) at exactly
     25*scale -> the seg-id tiebreak keeps 1. Point (2000,2000) snaps to
     its only candidate at distance 1."""
-    from geobuf_cpp_spark.operators.segments import snap_to_segments
+    from geobuf_cpp_spark.operators.segments import (
+        _point_seg_candidates,
+        snap_to_segments,
+    )
 
     pts = spark.createDataFrame(
         [(1, 1000, 1000), (2, 2000, 2000)], "point_id long, ix long, iy long")
@@ -744,7 +744,8 @@ def test_snap_to_segments_argmin_and_tiebreak(spark):
          (4, 2001, 1990, 2001, 2010)], # vertical, 1 right of point 2
         "seg_id long, ax long, ay long, bx long, by long")
     out = {r.point_id: r for r in
-           snap_to_segments(pts, segs, 100, 512).collect()}
+           snap_to_segments(_point_seg_candidates(
+               pts, segs, 100, 512, "point_id", "seg_id")).collect()}
     scale = 1 << 20
     assert (out[1].seg_id, out[1].dist2_scaled) == (1, 25 * scale)
     assert (out[2].seg_id, out[2].dist2_scaled) == (4, 1 * scale)
@@ -924,15 +925,20 @@ def test_kmv_overlap_exact_small_vocab(spark):
 def test_kmv_overlap_union_sketch_is_kmv_of_union(spark):
     """Mergeability: the pair (a, b) union sketch's theta equals the kth
     smallest hash of the combined corpus's own KMV sketch."""
-    from geobuf_cpp_spark.operators.sketches import kmv_overlap, kmv_sketch
+    from geobuf_cpp_spark.operators.sketches import (
+        KMV_K,
+        kmv_overlap,
+        kmv_sketch,
+    )
 
-    k = 4
-    rows = [("a", "t0 t1 t2 t3 t4 t5"), ("b", "t4 t5 t6 t7 t8 t9")]
-    df = spark.createDataFrame(rows, "source string, text string")
+    k = KMV_K
+    a = " ".join(f"t{i}" for i in range(20))
+    b = " ".join(f"t{i}" for i in range(10, 30))
+    df = spark.createDataFrame([("a", a), ("b", b)],
+                               "source string, text string")
     [pair] = kmv_overlap(df, k=k).collect()
-    combined = spark.createDataFrame(
-        [("t0 t1 t2 t3 t4 t5 t4 t5 t6 t7 t8 t9",)], "text string")
-    ref = kmv_sketch(combined, k=k).collect()
+    combined = spark.createDataFrame([(a + " " + b,)], "text string")
+    ref = kmv_sketch(combined).collect()
     assert pair.k_union == k
     assert pair.theta == max(r.hash_val for r in ref)
 
@@ -947,7 +953,7 @@ def test_pagerank_dangling_chain(spark):
         [("a", "b", 1)], "src string, dst string, w long")
     nodes = spark.createDataFrame([("a",), ("b",)], "node string")
     out = {r.node: r.pr for r in
-           pagerank(edges, nodes, n_iter=5, base=100).collect()}
+           pagerank(edges, nodes, n_iter=5, base=100, damp_pct=85).collect()}
     assert out == {"a": 15, "b": 27}
 
 
@@ -962,7 +968,7 @@ def test_pagerank_weighted_split(spark):
     nodes = spark.createDataFrame(
         [("a",), ("b",), ("c",)], "node string")
     out = {r.node: r.pr for r in
-           pagerank(edges, nodes, n_iter=5, base=100).collect()}
+           pagerank(edges, nodes, n_iter=5, base=100, damp_pct=85).collect()}
     assert out == {"a": 15, "b": 22, "c": 17}
 
 
@@ -974,7 +980,7 @@ def test_ngram_repetition_hand_computed(spark):
     df = spark.createDataFrame(
         [(0, "a a a b"), (1, "x")], "doc_id long, text string")
     out = {(r.doc_id, r.n): r
-           for r in ngram_repetition(df, sizes=(2, 3)).collect()}
+           for r in ngram_repetition(df).collect()}
     assert set(out) == {(0, 2), (0, 3)}
     r2, r3 = out[(0, 2)], out[(0, 3)]
     assert (r2.n_grams, r2.dup_occurrences, r2.dup_distinct) == (3, 2, 1)
@@ -1066,7 +1072,8 @@ def test_ams_sketch_linear_merge_and_replay(spark):
         assert ca[r] + cb[r] == cu[r]
         assert cu[r] == sum(sign(t, r) for t in toks)
 
-    row = ams_f2(mk(shard_a + shard_b)).collect()[0]
+    row = ams_f2(mk(shard_a + shard_b),
+                 ams_sketch(mk(shard_a + shard_b))).collect()[0]
     # counts: a=2, b=5, c=1, d=1 -> F2 = 4+25+1+1 = 31
     assert row.exact_f2 == 31
     sq = sorted((cu[r] * cu[r], r) for r in range(9))
@@ -1096,6 +1103,8 @@ def test_prefix_jaccard_matches_full_join_on_boilerplate_corpus(spark):
     from geobuf_cpp_spark.operators.dedup import (
         ngram_jaccard_pairs,
         prefix_jaccard_pairs,
+        shingle_sets,
+        shingle_sid_sets,
     )
 
     boiler = "copyright acme corp"
@@ -1108,9 +1117,9 @@ def test_prefix_jaccard_matches_full_join_on_boilerplate_corpus(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     full = {(r.id_a, r.id_b): r.jaccard
-            for r in ngram_jaccard_pairs(df, 0.5).collect()}
+            for r in ngram_jaccard_pairs(shingle_sets(df), 0.5).collect()}
     pref = {(r.id_a, r.id_b): r.jaccard
-            for r in prefix_jaccard_pairs(df, 0.5).collect()}
+            for r in prefix_jaccard_pairs(shingle_sid_sets(df), 0.5).collect()}
     assert full == pref
     assert (0, 1) in pref and (2, 3) in pref
 
@@ -1298,16 +1307,21 @@ def test_cdc_and_prefix_jaccard_partition_invariant(spark):
     from geobuf_cpp_spark.operators.dedup import (
         cdc_chunk_dedup,
         prefix_jaccard_pairs,
+        shingle_sid_sets,
     )
 
     rows = [(i, " ".join(f"w{(i * 7 + j) % 40}" for j in range(30)))
             for i in range(24)]
     base = spark.createDataFrame(rows, "doc_id long, text string")
-    for op, key in ((cdc_chunk_dedup, "doc_id"),
-                    (prefix_jaccard_pairs, "id_a")):
+    ops = {
+        "cdc_chunk_dedup": lambda d: cdc_chunk_dedup(d, 8),
+        "prefix_jaccard_pairs":
+            lambda d: prefix_jaccard_pairs(shingle_sid_sets(d), 0.5),
+    }
+    for name, op in ops.items():
         a = sorted(map(tuple, op(base.repartition(1)).collect()))
         b = sorted(map(tuple, op(base.repartition(13)).collect()))
-        assert a == b and a, op.__name__
+        assert a == b and a, name
 
 
 def test_grid_cluster_geo_matches_interval_union_find(spark):
@@ -1383,12 +1397,13 @@ def test_hilbert_coarse_ranges_cover_and_skip(spark, tmp_path):
     from geobuf_cpp_spark.plans.zonemap import collect_zone_map, prune_files
 
     order = 7                       # 128x128 — exhaustive check is cheap
-    for bbox, cap in [((5, 90, 17, 73), 64), ((0, 127, 0, 127), 8),
-                      ((33, 34, 90, 90), 16)]:
+    # (0, 127, 63, 64): a 2-row strip across the curve's middle fold has
+    # 85 raw runs at the fine order, so the gap fusion down to 64 runs
+    for bbox in [(5, 90, 17, 73), (0, 127, 0, 127), (33, 34, 90, 90),
+                 (0, 127, 63, 64)]:
         x0, x1, y0, y1 = bbox
-        plan = hilbert_coarse_ranges(x0, x1, y0, y1, order,
-                                     max_cells=256, max_intervals=cap)
-        assert 1 <= len(plan) <= cap
+        plan = hilbert_coarse_ranges(x0, x1, y0, y1, order)
+        assert 1 <= len(plan) <= 64
         assert all(lo <= hi for lo, hi in plan)
         assert all(plan[i][1] < plan[i + 1][0] for i in range(len(plan) - 1))
         gx, gy = np.meshgrid(np.arange(x0, x1 + 1), np.arange(y0, y1 + 1))
@@ -1397,6 +1412,10 @@ def test_hilbert_coarse_ranges_cover_and_skip(spark, tmp_path):
         idx = np.searchsorted(starts, d, side="right") - 1
         assert (idx >= 0).all()
         assert (d <= np.array([hi for _, hi in plan])[idx]).all()
+        if bbox == (0, 127, 63, 64):
+            ds = np.sort(d)
+            assert 1 + int((np.diff(ds) != 1).sum()) > 64
+            assert len(plan) == 64
 
     # file-skip: 16 range-clustered files, a small bbox's intervals
     # must not touch most of them
@@ -1410,8 +1429,7 @@ def test_hilbert_coarse_ranges_cover_and_skip(spark, tmp_path):
     df.repartitionByRange(16, "h").write.mode("overwrite").parquet(path)
     zmap = collect_zone_map(spark, path, ["h"]).cache()
     n_files = zmap.count()
-    plan = hilbert_coarse_ranges(40, 55, 40, 55, order,
-                                 max_cells=256, max_intervals=16)
+    plan = hilbert_coarse_ranges(40, 55, 40, 55, order)
     touched = set()
     for lo, hi in plan:
         touched.update(prune_files(zmap, "h", lo, hi))
@@ -1566,7 +1584,7 @@ def test_rect_union_area_overlaps_and_gaps(spark):
     ]
     df = spark.createDataFrame(
         boxes, "admin_id long, lon0 long, lat0 long, lon1 long, lat1 long")
-    rows = rect_union_area(df, block=8).collect()
+    rows = rect_union_area(df).collect()
     total = sum(r.area for r in rows)
     # brute force over unit lattice cells
     brute = sum(
@@ -1629,21 +1647,21 @@ def test_shingle_containment_catches_partial_copy(spark):
     """A short doc pasted into a long one: low Jaccard, high
     containment — the asymmetric detector fires, Jaccard's would not."""
     from geobuf_cpp_spark.operators.dedup import (
-        ngram_jaccard_pairs, shingle_containment_pairs)
+        ngram_jaccard_pairs, shingle_containment_pairs, shingle_sid_sets)
 
     quote = "alpha beta gamma delta epsilon zeta"
     filler = " ".join(f"x{i}" for i in range(60))
     docs = [(1, quote), (2, filler + " " + quote),
             (3, "unrelated words only here today")]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
+    ds = shingle_sid_sets(spark.createDataFrame(docs, "doc_id long, text string"))
     pairs = {(x.id_a, x.id_b): (x.i, x.n_a, x.n_b)
-             for x in shingle_containment_pairs(df, 4, 5).collect()}
+             for x in shingle_containment_pairs(ds, 4, 5).collect()}
     assert (1, 2) in pairs
     i, n_a, n_b = pairs[(1, 2)]
     assert i == n_a == 4  # all 4 shingles of the quote appear in doc 2
     # the symmetric Jaccard at 0.5 misses the same pair
     jac = {(x.id_a, x.id_b)
-           for x in ngram_jaccard_pairs(df, 0.5).collect()}
+           for x in ngram_jaccard_pairs(ds, 0.5).collect()}
     assert (1, 2) not in jac
 
 
@@ -1653,20 +1671,36 @@ def test_pps_sample_multiplicity_and_two_level_scan(spark):
     two-level prefix sum is order-deterministic)."""
     from geobuf_cpp_spark.operators.curation import pps_systematic_sample
 
-    rows = [(i, 10) for i in range(100)]          # W=1000, step=10 @ n=100
+    def want(rows, n):
+        # global prefix sum over the id-ordered weight line
+        total = sum(wt for _, wt in rows)
+        out, c = {}, 0
+        for i, wt in sorted(rows):
+            c += wt
+            m = c * n // total - (c - wt) * n // total
+            if m >= 1:
+                out[i] = m
+        return out
+
+    # ids step by 97 so the rows span 38 of the 256-id buckets and the
+    # cross-bucket offsets (not just the within-bucket sums) are exercised
+    rows = [(i * 97, 10) for i in range(100)]     # W=1000, step=10 @ n=100
+    assert len({i // 256 for i, _ in rows}) > 1
     df = spark.createDataFrame(rows, "doc_id long, n_chars long")
-    got = pps_systematic_sample(df, 20, "n_chars", bucket_width=16).collect()
+    got = pps_systematic_sample(df, 20, "n_chars").collect()
     assert sum(x.mult for x in got) == 20
     assert all(x.mult == 1 for x in got)
+    assert {x.doc_id: x.mult for x in got} == want(rows, 20)
 
-    heavy = [(0, 500)] + [(i, 5) for i in range(1, 101)]  # W=1000, n=10
+    heavy = [(0, 500)] + [(i * 97, 5) for i in range(1, 101)]  # W=1000
     hdf = spark.createDataFrame(heavy, "doc_id long, n_chars long")
     for parts in (1, 7):
         hs = {x.doc_id: x.mult for x in pps_systematic_sample(
-            hdf.repartition(parts), 10, "n_chars", bucket_width=8
+            hdf.repartition(parts), 10, "n_chars"
         ).collect()}
         assert hs[0] == 5          # half the mass -> half the picks
         assert sum(hs.values()) == 10
+        assert hs == want(heavy, 10)
 
 
 def test_gps_jumps_exact_threshold(spark):
@@ -1734,7 +1768,7 @@ def test_rrf_fuse_exact_integer_ordering(spark):
         [(0, 1, 12), (0, 2, 13), (0, 3, 10)],
         "query_id long, rank int, vec_id long")
     got = [(x.vec_id, x.rrf_score)
-           for x in rrf_fuse(a, b, 10, 60, max_rank=3).collect()]
+           for x in rrf_fuse(a, b, 60, entry.RRF_SCALE).collect()]
     # rational reference
     K = 60
     ra = {10: 1, 11: 2, 12: 3}
@@ -1749,10 +1783,9 @@ def test_rrf_fuse_exact_integer_ordering(spark):
         ref[v] = s
     order = sorted(ref, key=lambda v: (-ref[v], v))
     assert [v for v, _ in got] == order
-    # direct exactness check: score == scale_used * rational
-    used = math.lcm(61, 62, 63)
+    # direct exactness check: score == scale * rational
     for v, sc in got:
-        assert sc == used * ref[v]
+        assert sc == entry.RRF_SCALE * ref[v]
 
 
 def test_token_overlap_topk_ranking(spark):
@@ -1762,7 +1795,7 @@ def test_token_overlap_topk_ranking(spark):
             (3, "q r s t"), (4, "a b q q")]
     df = spark.createDataFrame(docs, "doc_id long, text string")
     got = {}
-    for x in token_overlap_topk(df, 1, 10).collect():
+    for x in token_overlap_topk(df, 1).collect():
         got[x.vec_id] = x.rank
     # overlaps with doc0: d1=3, d4=2, d2=1, d3=0(absent)
     assert got == {1: 1, 4: 2, 2: 3}
@@ -1836,7 +1869,8 @@ def test_trimmed_stats_tie_invariance(spark):
     rows = [(i, "g", v) for i, v in enumerate(vals)]
     df = spark.createDataFrame(rows, "id long, lang string, n_chars long")
     for parts in (1, 4):
-        got = trimmed_stats(df.repartition(parts), "lang", "n_chars").first()
+        got = trimmed_stats(df.repartition(parts), "lang", "n_chars",
+                            10).first()
         # dropped: one min (1) and one max (9); survivors sum = 2+8+6*5
         assert (got.n_rows, got.n_kept, got.trimmed_sum) == (10, 8, 40)
 
@@ -1878,7 +1912,7 @@ def test_temperature_weights_exact_sqrt(spark):
     docs = [(i, "s%d" % (i % 3)) for i in range(70)]
     df = spark.createDataFrame(docs, "doc_id long, source string")
     got = {x.source: (x.n_docs, x.w_num)
-           for x in temperature_weights(df, "source", 1000).collect()}
+           for x in temperature_weights(df, 1000).collect()}
     for s, (n, w) in got.items():
         assert w == math.isqrt(n * 1000 * 1000)
     # sqrt compresses the head: ratio of weights < ratio of counts

@@ -87,23 +87,24 @@ def test_shingle_sid_sets_is_order_isomorphic_bijection(spark):
 @pytest.mark.parametrize("threshold", [0.3, 0.5, 0.8])
 def test_prefix_jaccard_identical_on_sid_index(spark, threshold):
     """prefix_jaccard_pairs over the dictionary-encoded index must equal
-    the string-index path pair-for-pair, jaccard included (the int fast
-    path skips the freq join and sorts by id alone)."""
+    the exact full-join pairs over the string index pair-for-pair,
+    jaccard included (the prefix sorts by id alone)."""
     from geobuf_cpp_spark.operators.dedup import (
+        ngram_jaccard_pairs,
         prefix_jaccard_pairs,
+        shingle_sets,
         shingle_sid_sets,
     )
 
     docs = _docs(spark)
     a = {
         (r.id_a, r.id_b): r.jaccard
-        for r in prefix_jaccard_pairs(docs, threshold).collect()
+        for r in ngram_jaccard_pairs(shingle_sets(docs), threshold).collect()
     }
     b = {
         (r.id_a, r.id_b): r.jaccard
         for r in prefix_jaccard_pairs(
-            docs, threshold, ds=shingle_sid_sets(docs)
-        ).collect()
+            shingle_sid_sets(docs), threshold).collect()
     }
     assert a == b
 
@@ -112,27 +113,29 @@ def test_ngram_and_containment_identical_on_sid_index(spark):
     from geobuf_cpp_spark.operators.dedup import (
         ngram_jaccard_pairs,
         shingle_containment_pairs,
+        shingle_sets,
         shingle_sid_sets,
     )
 
     docs = _docs(spark)
+    ds = shingle_sets(docs)
     dsi = shingle_sid_sets(docs)
     a = {
         (r.id_a, r.id_b): r.jaccard
-        for r in ngram_jaccard_pairs(docs, 0.5).collect()
+        for r in ngram_jaccard_pairs(ds, 0.5).collect()
     }
     b = {
         (r.id_a, r.id_b): r.jaccard
-        for r in ngram_jaccard_pairs(docs, 0.5, ds=dsi).collect()
+        for r in ngram_jaccard_pairs(dsi, 0.5).collect()
     }
     assert a == b
     c = {
         (r.id_a, r.id_b, r.i, r.n_a, r.n_b)
-        for r in shingle_containment_pairs(docs, 4, 5).collect()
+        for r in shingle_containment_pairs(ds, 4, 5).collect()
     }
     d = {
         (r.id_a, r.id_b, r.i, r.n_a, r.n_b)
-        for r in shingle_containment_pairs(docs, 4, 5, ds=dsi).collect()
+        for r in shingle_containment_pairs(dsi, 4, 5).collect()
     }
     assert c == d
 

@@ -76,13 +76,12 @@ def test_extraction_matches_local_oracle(pages, features):
 
 
 def test_geobuf_spark_roundtrip_byte_identical(spark, pages, features):
-    encoded = encode_features(features, max_precision=10**7)
+    encoded = encode_features(features)
     decoded = decode_features(encoded)
     # re-encode the decoded features: bytes must be identical (fixpoint,
     # same methodology as reference tests/test_geobuf.py:360-364)
     reencoded = encode_features(
         decoded.select("url", "feature_idx", "geom", "properties"),
-        max_precision=10**7,
     ).select("url", "feature_idx", F.col("geobuf").alias("geobuf2"))
     joined = (
         encoded.select("url", "feature_idx", "geobuf")
@@ -95,7 +94,7 @@ def test_geobuf_spark_roundtrip_byte_identical(spark, pages, features):
     assert stats["n"] > 100 and stats["ok"] == stats["n"]
     # the fused extract+encode stage encodes the extracted GeoJSON directly;
     # its blobs must equal encode_features over the same rows
-    fused = extract_encode_features(pages, max_precision=10**7).select(
+    fused = extract_encode_features(pages).select(
         "url", "feature_idx", F.col("geobuf").alias("fused")
     )
     cmp = encoded.select("url", "feature_idx", "geobuf").join(
@@ -191,16 +190,17 @@ def test_knn_strategies_agree(spark, features):
             "lon": [-74.1, -0.2, 139.7, 2.4, 37.7, 116.5, -99.0, -46.7, 77.3, 121.5],
         }
     )
-    pts = features.select("url", "feature_idx", "lon", "lat")
+    pts = features.select(
+        F.xxhash64("url", "feature_idx").alias("point_id"), "lon", "lat")
     brute = knn_broadcast(pts, queries, k=5).toPandas()
     rings = knn_distributed(
-        pts, spark.createDataFrame(queries), k=5, res=7
+        pts, spark.createDataFrame(queries), k=5
     ).toPandas()
     b = brute.sort_values(["query_id", "rank"]).reset_index(drop=True)
     r = rings.sort_values(["query_id", "rank"]).reset_index(drop=True)
     pd.testing.assert_frame_equal(
-        b[["query_id", "rank", "url", "feature_idx"]],
-        r[["query_id", "rank", "url", "feature_idx"]],
+        b[["query_id", "rank", "point_id"]],
+        r[["query_id", "rank", "point_id"]],
     )
     assert (b.groupby("query_id").size() == 5).all()
 
@@ -252,7 +252,7 @@ def test_salted_count_equals_plain(spark, features):
     }
     salted = {
         r["cell"]: r["count"]
-        for r in salted_count(with_cell.select("cell", "url"), ["cell"], n_salt=8).collect()
+        for r in salted_count(with_cell.select("cell", "url"), ["cell"]).collect()
     }
     assert plain == salted
 
@@ -277,13 +277,14 @@ def test_pip_join_large_matches_broadcast(spark, features):
 
     admin = generate_admin_polygons()
     admin_df = spark.createDataFrame(admin.to_dict("records"), schema=ADMIN_SCHEMA)
-    pts = features.select("url", "feature_idx", "lon", "lat")
+    pts = features.select(
+        F.xxhash64("url", "feature_idx").alias("point_id"), "lon", "lat")
     broadcast_out = {
-        (r["url"], r["feature_idx"], r["admin_id"])
-        for r in pip_join(pts, admin, res=8).select("url", "feature_idx", "admin_id").collect()
+        (r["point_id"], r["admin_id"])
+        for r in pip_join(pts, admin, res=8).select("point_id", "admin_id").collect()
     }
     large_out = {
-        (r["url"], r["feature_idx"], r["admin_id"])
+        (r["point_id"], r["admin_id"])
         for r in pip_join_large(pts, admin_df, res=8).collect()
     }
     assert large_out == broadcast_out and len(large_out) > 50
@@ -383,7 +384,7 @@ def test_custom_properties_spark_roundtrip(spark, tmp_path):
     with_pt = df.withColumn("lon", F.col("geom.coords")[0]).withColumn(
         "lat", F.col("geom.coords")[1]
     )
-    manifest = write_geobuf_files(with_pt, out, res=8, prefix_res=3).toPandas()
+    manifest = write_geobuf_files(with_pt, out, res=8, max_precision=10**7).toPandas()
     assert manifest["n_features"].sum() == 3
     for p in manifest["path"]:
         doc = gb.decode(open(p, "rb").read())
@@ -456,7 +457,7 @@ def test_salt_spreads_hot_key(spark):
     partials = salted.groupBy("k", "_salt").count().count()
     assert partials == 16
     # and the final result is still the plain count
-    assert salted_count(hot, ["k"], n_salt=16).collect()[0]["count"] == 10_000
+    assert salted_count(hot, ["k"]).collect()[0]["count"] == 10_000
 
 
 def test_aqe_skew_join_splits_hot_key(spark):
@@ -484,7 +485,7 @@ def test_knn_distributed_boundary_tie_uses_fallback(spark):
     from geobuf_cpp_spark.functions.cells import cell_size_deg
     from geobuf_cpp_spark.operators.knn import knn_distributed
 
-    res, radius = 7, 1
+    res, radius = 7, 2  # knn_distributed's fixed grid and disk
     ext = cell_size_deg(res)[0]  # 1.40625, exactly representable
     # query at a cell corner; nearest point at EXACTLY radius*ext
     pts = spark.createDataFrame(
@@ -492,19 +493,17 @@ def test_knn_distributed_boundary_tie_uses_fallback(spark):
             {
                 "point_id": [1, 2, 3],
                 "lon": [0.0, 0.0, 50.0],
-                "lat": [ext, 4.0, 50.0],
+                "lat": [radius * ext, 4.0, 50.0],
             }
         )
     )
     queries = spark.createDataFrame(
         pd.DataFrame({"query_id": [0], "lat": [0.0], "lon": [0.0]})
     )
-    got = knn_distributed(
-        pts, queries, k=1, res=res, radius=radius, id_cols=("point_id",)
-    ).collect()
+    got = knn_distributed(pts, queries, k=1).collect()
     assert len(got) == 1
     assert got[0]["point_id"] == 1
-    assert got[0]["dist2"] == ext * ext
+    assert got[0]["dist2"] == (radius * ext) ** 2
 
 
 def test_read_geobuf_dir(spark, tmp_path):
@@ -549,7 +548,7 @@ def test_geobuf_file_sink_roundtrip(spark, features, tmp_path):
     out = str(tmp_path / "pbf_store")
     src = features.select("lon", "lat", "geom", "properties")
     n_in = src.count()
-    manifest = write_geobuf_files(src, out, res=8, prefix_res=3).toPandas()
+    manifest = write_geobuf_files(src, out, res=8, max_precision=10**7).toPandas()
     assert manifest["n_features"].sum() == n_in
     assert all(manifest["n_bytes"] > 0)
     # files on disk match the manifest byte-for-byte

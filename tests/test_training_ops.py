@@ -58,7 +58,7 @@ def test_minhash_recall_vs_bruteforce(spark, docs):
     pdf = _corpus()
     # brute-force truth at jaccard >= 0.7
     truth = set()
-    hashes = {r.doc_id: shingle_hashes(r.text) for r in pdf.itertuples()}
+    hashes = {r.doc_id: shingle_hashes(r.text, {}) for r in pdf.itertuples()}
     ids = list(pdf["doc_id"])
     for i in range(len(ids)):
         for j in range(i + 1, len(ids)):
@@ -76,7 +76,10 @@ def test_minhash_recall_vs_bruteforce(spark, docs):
 def test_ngram_jaccard_exact_and_all_jvm(spark, docs):
     """The all-JVM shingle-join operator returns EXACTLY the brute-force
     Jaccard pair set, and its plan contains no Python stage."""
-    from geobuf_cpp_spark.operators.dedup import ngram_jaccard_pairs
+    from geobuf_cpp_spark.operators.dedup import (
+        ngram_jaccard_pairs,
+        shingle_sets,
+    )
 
     pdf = _corpus()
     truth = {}
@@ -94,7 +97,7 @@ def test_ngram_jaccard_exact_and_all_jvm(spark, docs):
             jac = len(sa & sb) / len(sa | sb)
             if jac >= 0.7:
                 truth[(ids[i], ids[j])] = jac
-    out = ngram_jaccard_pairs(docs, threshold=0.7)
+    out = ngram_jaccard_pairs(shingle_sets(docs), threshold=0.7)
     got = {
         (int(r["id_a"]), int(r["id_b"])): r["jaccard"] for r in out.collect()
     }
@@ -139,7 +142,8 @@ def test_dedup_clusters_matches_union_find(spark):
 
 def test_simhash_pairs_match_bruteforce(spark, docs):
     pdf = _corpus()
-    sh = {r.doc_id: simhash64(r.text) & ((1 << 64) - 1) for r in pdf.itertuples()}
+    sh = {r.doc_id: simhash64(r.text, {}) & ((1 << 64) - 1)
+          for r in pdf.itertuples()}
     truth = set()
     ids = list(pdf["doc_id"])
     for i in range(len(ids)):
@@ -186,7 +190,7 @@ def test_ivf_recall(spark):
         {"query_id": range(10), "vec": pdf["embedding"][:10].tolist()}
     )
     exact = cosine_topk(emb, queries, k=10).toPandas()
-    centroids, assignments = build_ivf(emb, n_lists=8)
+    centroids, assignments = build_ivf(emb)
     approx = ivf_topk(emb, assignments, centroids, queries, k=10, nprobe=3).toPandas()
     recalls = []
     for qid in range(10):
@@ -204,16 +208,16 @@ def test_textstats_formulas(spark):
         {
             "doc_id": [0, 1, 2],
             "text": [
-                "the cat sat on the mat.",
+                "the cat sat on the mat and the dog sat too.",
                 "x",
                 "a of and to the a of and to the words here, more words.",
             ],
         }
     )
     out = doc_stats(spark.createDataFrame(pdf)).orderBy("doc_id").toPandas()
-    assert out["n_tokens"].tolist() == [6, 1, 14]
+    assert out["n_tokens"].tolist() == [11, 1, 14]
     assert out["n_periods"].tolist() == [1, 0, 1]
-    q = quality_score(spark.createDataFrame(pdf), min_tokens=3).orderBy("doc_id").toPandas()
+    q = quality_score(spark.createDataFrame(pdf)).orderBy("doc_id").toPandas()
     assert q["keep"].tolist() == [True, False, True]
 
 
@@ -239,8 +243,8 @@ def test_ivf_pruned_probe_recall_on_clustered_data(spark):
         {"query_id": range(10), "vec": pdf["embedding"][:10].tolist()}
     )
     exact = cosine_topk(emb, queries, k=10).toPandas()
-    centroids, assignments = build_ivf(emb, n_lists=8)
-    # probe only 2 of 8 lists: 4x less distance work than brute force
+    centroids, assignments = build_ivf(emb)
+    # probe only 2 of 16 lists: 8x less distance work than brute force
     approx = ivf_topk(emb, assignments, centroids, queries, k=10, nprobe=2).toPandas()
     recalls = []
     for qid in range(10):
@@ -264,10 +268,11 @@ def test_ivf_full_probe_equals_exact(spark):
         (r["query_id"], r["rank"]): r["vec_id"]
         for r in cosine_topk(emb, queries, k=10).collect()
     }
-    centroids, assignments = build_ivf(emb, n_lists=8)
+    centroids, assignments = build_ivf(emb)
     full = {
         (r["query_id"], r["rank"]): r["vec_id"]
-        for r in ivf_topk(emb, assignments, centroids, queries, k=10, nprobe=8).collect()
+        for r in ivf_topk(emb, assignments, centroids, queries, k=10,
+                          nprobe=len(centroids)).collect()
     }
     assert full == exact
 
@@ -299,7 +304,7 @@ def test_simhash_matches_duckdb_oracle():
             "THEN -9223372036854775808 ELSE 0 END) AS BIGINT) FROM acc"
         )
         expect = con.execute(sql, [t]).fetchone()[0]
-        assert simhash64(t) == expect, t
+        assert simhash64(t, {}) == expect, t
 
 
 def test_media_meta_matches_sql_model():
@@ -348,7 +353,7 @@ def test_cosine_neardup_blocked_matches_exact(spark):
     emb = spark.createDataFrame(pdf).repartition(4)
     got = {
         (r["id_a"], r["id_b"])
-        for r in cosine_neardup_blocked(emb, 0.9, n_blocks=5).collect()
+        for r in cosine_neardup_blocked(emb, 0.9).collect()
     }
     mat = np.array(pdf["embedding"].tolist())
     mat /= np.linalg.norm(mat, axis=1, keepdims=True)
@@ -403,7 +408,7 @@ def test_hyperplane_lsh_recall_on_clustered_data(spark):
     }
     lsh = {
         (r["id_a"], r["id_b"])
-        for r in hyperplane_lsh_pairs(emb, 0.9, n_planes=16, n_bands=8).collect()
+        for r in hyperplane_lsh_pairs(emb, 0.9).collect()
     }
     assert lsh.issubset(exact)  # the verify stage is exact
     assert len(lsh & exact) / len(exact) >= 0.9, (len(lsh), len(exact))
@@ -538,10 +543,7 @@ def test_ivfpq_equals_exact_on_clustered_data(spark):
     }
     got = {
         (r["query_id"], r["rank"]): r["vec_id"]
-        for r in ivfpq_topk(
-            emb, queries, k=10, n_lists=8, nprobe=3, m=8, kcode=16,
-            n_candidates=50,
-        ).collect()
+        for r in ivfpq_topk(emb, queries, k=10).collect()
     }
     assert got == exact
 
@@ -561,7 +563,7 @@ def test_pq_roundtrip_and_recall(spark):
 
     pdf = _clustered_emb_frame(n=400)
     emb = spark.createDataFrame(pdf).repartition(4)
-    books = pq_train(emb, m=8, k=16)
+    books = pq_train(emb)
     assert books.shape == (8, 16, 4)
     codes = pq_encode(emb, books).persist()
     rows = codes.collect()
