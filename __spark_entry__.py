@@ -14,6 +14,7 @@ sizes), and range()-regenerated media metadata (media_*).
 
 from __future__ import annotations
 
+import tempfile
 from collections.abc import Callable
 from typing import Iterator
 
@@ -35,7 +36,7 @@ from geobuf_cpp_spark.functions.cells import (
 from geobuf_cpp_spark.functions.sql_codec import sql_roundtrip
 from geobuf_cpp_spark.operators.curation import sql_knuth_hash
 from geobuf_cpp_spark.plans.partitioning import spread
-from geobuf_cpp_spark.session import ship_package
+from geobuf_cpp_spark.session import process_tmpdir, session_memo, ship_package
 from geobuf_cpp_spark.sources import points as P
 from geobuf_cpp_spark.sources.readers import table_df
 
@@ -255,13 +256,17 @@ def _shared_df(spark: SparkSession, sf_dir: str, key, build,
     # every join above it to sort-merge on the cold pass (measured:
     # prefix_jaccard 4.0s -> 23.7s cold under persist); a
     # checkpointed RDD keeps real sizes and partitioning.
-    from geobuf_cpp_spark.session import session_memo
-
     return session_memo(
         spark, key,
         lambda: (build().localCheckpoint(eager=False) if how == "ckpt"
                  else build().persist()),
         sf_dir)
+
+
+def _gate_dir(name: str) -> str:
+    """A fresh directory for a gate's side-effect files, inside this
+    process's own directory (removed at exit)."""
+    return tempfile.mkdtemp(prefix=f"{name}_", dir=process_tmpdir())
 
 
 def _docs_sketch(spark: SparkSession, sf_dir: str, sketch) -> DataFrame:
@@ -449,34 +454,22 @@ def q_zonemap_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     point lattice range-clustered, collect per-file min/max, answer a
     range query reading ONLY surviving files. The oracle runs the same
     range predicate over all rows — a pruning bug that skips a needed
-    file loses rows and fails the hash."""
-    import glob as _glob
-    import hashlib
-    import os
-    import shutil
-
+    file loses rows and fails the hash. The clustered copy is written
+    once per session and rebuilt when a table under ``sf_dir`` changes."""
     from geobuf_cpp_spark.plans.zonemap import (
         collect_zone_map,
         zone_pruned_read,
     )
 
     _prep(spark, sf_dir, "orders")
-    for old in _glob.glob("/root/repo/.scratch/zm_*_*"):
-        try:
-            pid = int(old.rsplit("_", 1)[-1])
-        except ValueError:
-            continue
-        try:
-            os.kill(pid, 0)
-        except ProcessLookupError:
-            shutil.rmtree(old, ignore_errors=True)
-        except PermissionError:
-            pass
-    tag = f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}_{os.getpid()}"
-    path = f"/root/repo/.scratch/zm_{tag}"
-    if not os.path.isdir(path):
+
+    def build() -> str:
+        path = _gate_dir("zonemap")
         spark.sql(P.IPOINTS_SELECT).repartitionByRange(16, "ix").write.mode(
             "overwrite").parquet(path)
+        return path
+
+    path = session_memo(spark, q_zonemap_query, build, sf_dir)
     zm = collect_zone_map(spark, path, ["ix"])
     return zone_pruned_read(spark, zm, "ix", ZM_LO, ZM_HI).select(
         "point_id", "ix", "iy")
@@ -1109,9 +1102,6 @@ def q_geobuf_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference geobuf.cpp:346-358), then the quantize/divide round trip.
     Sums are over BIGINT quantized ints, so they are summation-order-free.
     """
-    import hashlib
-    import shutil
-
     from geobuf_cpp_spark.functions.sql_codec import sql_quantize_int
     from geobuf_cpp_spark.sources.geobuf_sink import write_geobuf_files
     from geobuf_cpp_spark.sources.readers import read_geobuf_dir
@@ -1127,27 +1117,7 @@ def q_geobuf_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("geom"),
         F.create_map(F.lit("src"), F.lit('"orders"')).alias("properties"),
     )
-    import glob
-    import os
-
-    # pid-suffixed scratch dir: a concurrent run (bench vs gate) over the
-    # same sf_dir must not rmtree files another process's lazy scan reads.
-    # Dead-pid leftovers from prior runs are reaped here so repeated
-    # bench/gate invocations cannot accumulate sink output unboundedly.
-    for old in glob.glob("/root/repo/.scratch/geobuf_files_*_*"):
-        try:
-            pid = int(old.rsplit("_", 1)[-1])
-        except ValueError:
-            continue
-        try:
-            os.kill(pid, 0)  # raises if the owning process is gone
-        except ProcessLookupError:
-            shutil.rmtree(old, ignore_errors=True)
-        except PermissionError:
-            pass  # pid alive under another uid: leave it
-    tag = f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}_{os.getpid()}"
-    out_dir = f"/root/repo/.scratch/geobuf_files_{tag}"
-    shutil.rmtree(out_dir, ignore_errors=True)
+    out_dir = _gate_dir("geobuf_files")
     manifest = write_geobuf_files(
         feats, out_dir, res=PIP_RES, max_precision=MAX_PRECISION
     )
@@ -1288,11 +1258,6 @@ def q_snapshot_reads(spark: SparkSession, sf_dir: str) -> DataFrame:
     each version's aggregates straight from documents — correct only if
     v1 stays immutable under the append and each manifest pins exactly
     its dirs."""
-    import glob as _glob
-    import hashlib
-    import os
-    import shutil
-
     from geobuf_cpp_spark.sources.snapshots import (
         read_snapshot,
         write_snapshot,
@@ -1300,22 +1265,7 @@ def q_snapshot_reads(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _prep(spark, sf_dir, "documents")
     docs = spark.table("documents").select("doc_id", "lang", "n_chars")
-    # pid-scoped scratch + dead-pid reaping, same discipline as
-    # q_geobuf_files (concurrent bench/gate runs must not collide)
-    for old in _glob.glob("/root/repo/.scratch/snap_*_*"):
-        try:
-            pid = int(old.rsplit("_", 1)[-1])
-        except ValueError:
-            continue
-        try:
-            os.kill(pid, 0)
-        except ProcessLookupError:
-            shutil.rmtree(old, ignore_errors=True)
-        except PermissionError:
-            pass
-    tag = f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}_{os.getpid()}"
-    table = f"/root/repo/.scratch/snap_{tag}"
-    shutil.rmtree(table, ignore_errors=True)
+    table = _gate_dir("snapshot_reads")
     write_snapshot(docs.where("doc_id % 2 = 0"), table, mode="overwrite")
     write_snapshot(docs.where("doc_id % 2 = 1"), table, mode="append")
     out = None
@@ -1337,10 +1287,6 @@ def q_snapshot_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs; the latest read surfaces NULL n_chars for pre-evolution rows
     (the Iceberg/Delta contract) and a per-lang aggregate hash-gates
     against the oracle predicting it straight from documents."""
-    import hashlib
-    import os
-    import shutil
-
     from geobuf_cpp_spark.sources.snapshots import (
         read_snapshot,
         write_snapshot,
@@ -1348,9 +1294,7 @@ def q_snapshot_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _prep(spark, sf_dir, "documents")
     docs = spark.table("documents")
-    tag = f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}_{os.getpid()}"
-    table = f"/root/repo/.scratch/snapev_{tag}"
-    shutil.rmtree(table, ignore_errors=True)
+    table = _gate_dir("snapshot_evolve")
     write_snapshot(docs.where("doc_id % 2 = 0").select("doc_id", "lang"),
                    table, mode="overwrite")
     write_snapshot(
@@ -1528,38 +1472,25 @@ def q_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys against the index (zero corpus scan bytes) and verifies
     candidates by exact shingle Jaccard — the maintained-index dedup
     workflow a rolling 100 TB crawl actually runs. Oracle: exact
-    Jaccard over the batch x corpus split in DuckDB."""
-    import glob as _glob
-    import hashlib
-    import os
-    import shutil
-
+    Jaccard over the batch x corpus split in DuckDB. The index is built
+    once per session and rebuilt when a table under ``sf_dir`` changes."""
     from geobuf_cpp_spark.operators.incremental import (
         build_signature_index,
         incremental_neardup,
     )
-    from geobuf_cpp_spark.sources.snapshots import snapshot_versions
 
     _prep(spark, sf_dir, "documents")
     corpus = spark.table("documents").filter(
         f"doc_id % {INCR_SPLIT} != 0")
     batch = spark.table("documents").filter(
         f"doc_id % {INCR_SPLIT} = 0")
-    for old in _glob.glob("/root/repo/.scratch/sigidx_*_*"):
-        try:
-            pid = int(old.rsplit("_", 1)[-1])
-        except ValueError:
-            continue
-        try:
-            os.kill(pid, 0)
-        except ProcessLookupError:
-            shutil.rmtree(old, ignore_errors=True)
-        except PermissionError:
-            pass
-    tag = f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}_{os.getpid()}"
-    table = f"/root/repo/.scratch/sigidx_{tag}"
-    if not snapshot_versions(table):
+
+    def build() -> str:
+        table = _gate_dir("signature_index")
         build_signature_index(corpus, table)
+        return table
+
+    table = session_memo(spark, q_incremental_neardup, build, sf_dir)
     return incremental_neardup(spark, batch, corpus, table,
                                threshold=MINHASH_THRESHOLD)
 

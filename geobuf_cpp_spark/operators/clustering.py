@@ -102,7 +102,7 @@ def _driver_union_find(cells, res: int):
     computation (same contract as the bounded k-means sample in
     operators/ann.py), not a collect of distributed data. Neighbor
     lookups are numpy searchsorted against the sorted id array; the
-    union-find itself is path-halving over <= 4^res nodes.
+    hits go to ``_driver_union_find_pairs``.
     """
     import numpy as np
 
@@ -110,14 +110,7 @@ def _driver_union_find(cells, res: int):
     n = 1 << res
     base = res * RES_BASE
     iy, ix = (ids - base) // n, (ids - base) % n
-    parent = np.arange(len(ids))
-
-    def find(i):
-        while parent[i] != i:
-            parent[i] = parent[parent[i]]
-            i = parent[i]
-        return i
-
+    pairs = []
     for dy, dx in _FWD_OFFSETS:
         ny, nx = iy + dy, ix + dx
         ok = (ny >= 0) & (ny < n) & (nx >= 0) & (nx < n)
@@ -126,13 +119,8 @@ def _driver_union_find(cells, res: int):
         pos_ok = ok & (pos < len(ids))
         hit = np.flatnonzero(pos_ok)
         hit = hit[ids[pos[hit]] == nbr_id[hit]]
-        for a, b in zip(hit, pos[hit]):
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-    roots = np.array([find(i) for i in range(len(ids))])
-    # min id per component == id of the root (ids sorted, unions keep min)
-    return [(int(c), int(ids[r])) for c, r in zip(ids, roots)]
+        pairs += zip(ids[hit].tolist(), nbr_id[hit].tolist())
+    return _driver_union_find_pairs(ids, pairs)
 
 
 def grid_cluster(points_df: DataFrame, res: int, min_pts: int) -> DataFrame:
@@ -175,13 +163,11 @@ GEO_CELL_BASE = 1_000_000   # cell_id = band * BASE + cx (cx < 36000)
 
 
 def _driver_union_find_pairs(node_ids, pairs):
-    """Bounded driver union-find over an explicit edge list.
-
-    Same contract as ``_driver_union_find`` (path-halving, unions keep
-    the min id as root because ids are processed sorted), but takes
-    arbitrary (id_a, id_b) pairs instead of deriving grid adjacency —
-    the component engine for bounded graphs whose adjacency rule is
-    computed distributed (geodetic band overlap, crossing graphs).
+    """Bounded driver union-find over an explicit edge list: the
+    component engine for bounded graphs, whether the adjacency is grid
+    neighbours (``_driver_union_find``) or computed distributed
+    (geodetic band overlap, crossing graphs). Path-halving; unions keep
+    the min id as root because ids are processed sorted.
     Returns [(id, min-id-of-component)] for every node.
     """
     import numpy as np

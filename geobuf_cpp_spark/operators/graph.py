@@ -145,6 +145,19 @@ def pagerank(edges_df: DataFrame, nodes_df: DataFrame, n_iter: int, base: int,
     return ranks
 
 
+def _doubled_edges(edges_df: DataFrame) -> DataFrame:
+    """Undirected (id_a, id_b) pairs as (src, dst) in both directions,
+    partitioned on ``src`` and lazily checkpointed once."""
+    und = edges_df.select(F.col("id_a").alias("src"),
+                          F.col("id_b").alias("dst"))
+    return (
+        und.unionByName(und.select(F.col("dst").alias("src"),
+                                   F.col("src").alias("dst")))
+        .repartition("src")
+        .localCheckpoint(eager=False)
+    )
+
+
 def bfs_hops(edges_df: DataFrame, sources_df: DataFrame,
              rounds: int) -> DataFrame:
     """Bounded multi-source BFS: exact hop distance from the nearest
@@ -167,14 +180,7 @@ def bfs_hops(edges_df: DataFrame, sources_df: DataFrame,
     ``edges_df``: undirected (id_a, id_b) pairs; ``sources_df``: (id)
     seed set. Returns (id, hops) with hops in [0, rounds].
     """
-    und = edges_df.select(F.col("id_a").alias("src"),
-                          F.col("id_b").alias("dst"))
-    edges = (
-        und.unionByName(und.select(F.col("dst").alias("src"),
-                                   F.col("src").alias("dst")))
-        .repartition("src")
-        .localCheckpoint(eager=False)
-    )
+    edges = _doubled_edges(edges_df)
     dist = sources_df.select(
         "id", F.lit(0).cast("long").alias("hops")).localCheckpoint(
         eager=False)
@@ -206,14 +212,7 @@ def kcore(edges_df: DataFrame, k: int, rounds: int) -> DataFrame:
     (the `pagerank`/`bfs_hops` discipline). Returns (node, deg): every
     surviving node with its within-core degree.
     """
-    und = edges_df.select(F.col("id_a").alias("src"),
-                          F.col("id_b").alias("dst"))
-    e = (
-        und.unionByName(und.select(F.col("dst").alias("src"),
-                                   F.col("src").alias("dst")))
-        .repartition("src")
-        .localCheckpoint(eager=False)
-    )
+    e = _doubled_edges(edges_df)
     for _ in range(rounds):
         keep = (
             e.groupBy("src").agg(F.count("*").alias("deg"))

@@ -194,3 +194,32 @@ def test_oracle_texts_and_query_order_unchanged():
         == "c25ecffe7ad4f0364c33acd9b5775cd6"
     assert hashlib.md5(repr(list(E.queries())).encode()).hexdigest() \
         == "29251b38d406ea4b76b2e2a6796d9ee0"
+
+
+def test_no_checkout_path_literals():
+    """No string in the package, __spark_entry__.py or scripts/ names the
+    absolute path of the checkout it runs from: files a run writes go
+    to ``session.process_tmpdir()``, so any checkout, copy or install
+    works alike. Docstrings may show a deployment example; testdata
+    defaults are deployment paths and are not the checkout."""
+    import ast
+
+    root, pkg, _ = _source_files()
+    files = pkg + [root / "__spark_entry__.py"] \
+        + sorted((root / "scripts").glob("*.py"))
+    hits = []
+    for path in files:
+        tree = ast.parse(path.read_text())
+        docstrings = {
+            id(node.body[0].value) for node in ast.walk(tree)
+            if isinstance(node, (ast.Module, ast.FunctionDef,
+                                 ast.AsyncFunctionDef, ast.ClassDef))
+            and ast.get_docstring(node, clean=False) is not None
+        }
+        hits += [f"{path.relative_to(root)}:{node.lineno}"
+                 for node in ast.walk(tree)
+                 if isinstance(node, ast.Constant)
+                 and isinstance(node.value, str)
+                 and id(node) not in docstrings
+                 and str(root) in node.value]
+    assert hits == []

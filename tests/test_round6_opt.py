@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pytest
 
+SF_SMALL = "/root/testdata/sf0.001"
 
 CORPUS = [
     (0, "copyright acme corp alpha beta gamma delta"),
@@ -270,3 +271,82 @@ def test_table_df_memoizes_plan_only_and_respects_sf_switch(spark, tmp_path):
     assert old.storageLevel == StorageLevel.NONE
     new = E._shared_df(spark, d2, "total", total)
     assert new is not old and new.collect()[0][0] == 5
+
+
+def test_zonemap_query_follows_in_session_table_rewrite(spark, tmp_path):
+    """zonemap_query's range-clustered copy is a session memo under the
+    tables' directory stamp: after orders.parquet is rewritten in the
+    session, the gate answers from the new rows, not the old copy."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as E
+    from geobuf_cpp_spark.sources import points as P
+
+    src = f"{SF_SMALL}/orders.parquet"
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    shutil.copyfile(src, sf / "orders.parquet")
+
+    def brute_force():
+        return spark.sql(
+            f"SELECT count(*) FROM ({P.IPOINTS_SELECT}) "
+            f"WHERE ix BETWEEN {E.ZM_LO} AND {E.ZM_HI}").collect()[0][0]
+
+    full = E.q_zonemap_query(spark, str(sf)).count()
+    assert full == brute_force() == 375
+    orders = pq.read_table(src)
+    pq.write_table(orders.slice(0, orders.num_rows // 2),
+                   sf / "orders.parquet")
+    half = E.q_zonemap_query(spark, str(sf)).count()
+    assert half == brute_force() == 187
+
+
+STORAGE_GATES = ("zonemap_query", "geobuf_files", "snapshot_reads",
+                 "snapshot_evolve", "incremental_neardup")
+
+
+def test_storage_gates_write_only_under_tmpdir(spark, tmp_path, monkeypatch):
+    """The five gates that write files keep them in the process's own
+    directory under TMPDIR, and nothing under the checkout's .scratch/.
+    The tables are copied to a fresh directory so no memo entry of an
+    earlier test is reused."""
+    import os
+    import shutil
+    import tempfile
+    from pathlib import Path
+
+    import __spark_entry__ as E
+    from geobuf_cpp_spark.session import process_tmpdir
+
+    scratch = Path(__file__).resolve().parents[1] / ".scratch"
+
+    def listing():
+        return sorted(str(p) for p in scratch.rglob("*")) \
+            if scratch.exists() else []
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    for t in ("orders", "nation", "documents"):
+        shutil.copyfile(f"{SF_SMALL}/{t}.parquet", sf / f"{t}.parquet")
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    before = listing()
+    monkeypatch.setenv("TMPDIR", str(tmp))
+    monkeypatch.setattr(tempfile, "tempdir", None)   # re-read TMPDIR
+    process_tmpdir.cache_clear()
+    try:
+        q = E.queries()
+        counts = {name: q[name](spark, str(sf)).count()
+                  for name in STORAGE_GATES}
+        own = Path(process_tmpdir())
+        dirs = sorted(os.listdir(own))
+    finally:
+        process_tmpdir.cache_clear()
+    assert listing() == before
+    assert own.parent == tmp
+    assert all(n > 0 for n in counts.values()), counts
+    for prefix in ("zonemap_", "geobuf_files_", "snapshot_reads_",
+                   "snapshot_evolve_", "signature_index_"):
+        assert any(d.startswith(prefix) for d in dirs), dirs

@@ -151,3 +151,45 @@ def test_spatial_and_sketch_round5_ops_same_at_n_and_4n():
     assert rs[0] == rs[1]
     assert rs[0]["hh_n"] > 10 and rs[0]["qt_n"] > 10
     assert rs[0]["qt_sum"] == 1500   # leaves partition the 1500 points
+
+
+JOB_HOST_DEFAULTS = r"""
+import json
+from geobuf_cpp_spark.session import get_spark
+
+spark = get_spark("host_defaults")
+sc = spark.sparkContext
+print("RESULT " + json.dumps({
+    "master": sc.master,
+    "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
+    "driver_memory": sc.getConf().get("spark.driver.memory"),
+    "max_heap": sc._jvm.java.lang.Runtime.getRuntime().maxMemory(),
+}))
+spark.stop()
+"""
+
+
+def test_session_defaults_come_from_the_host():
+    """With SPARK_GRAFT_CPUS and SPARK_DRIVER_MEMORY unset, get_spark runs
+    one task slot per usable core and gives the driver a quarter of the
+    host's RAM (at least 1g, at most 32g) — the rule perfbench applies."""
+    import os
+
+    env = {k: v for k, v in os.environ.items()
+           if k not in ("SPARK_GRAFT_CPUS", "SPARK_DRIVER_MEMORY")}
+    out = subprocess.run(
+        [sys.executable, "-c", JOB_HOST_DEFAULTS],
+        capture_output=True, text=True, timeout=400, cwd=ROOT, env=env)
+    lines = [l for l in out.stdout.splitlines() if l.startswith("RESULT ")]
+    assert lines, out.stderr[-2000:]
+    res = json.loads(lines[-1][len("RESULT "):])
+
+    cpus = len(os.sched_getaffinity(0))
+    with open("/proc/meminfo") as fh:
+        kib = next(int(l.split()[1]) for l in fh if l.startswith("MemTotal:"))
+    gib = max(1, min(32, int(kib / 2**20 // 4)))
+    assert res["master"] == f"local[{cpus}]"
+    assert res["shuffle_partitions"] == str(cpus)
+    assert res["driver_memory"] == f"{gib}g"
+    # the setting reaches the JVM: its heap cap is about that size
+    assert 0.8 * gib * 2**30 <= res["max_heap"] <= gib * 2**30
