@@ -26,11 +26,16 @@ and spatial joins at cluster scale).
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from geobuf_cpp_spark.functions.cells import RES_BASE, sql_cell
-from geobuf_cpp_spark.operators.dedup import dedup_clusters
+from geobuf_cpp_spark.operators.dedup import (
+    _driver_union_find_pairs,
+    dedup_clusters,
+)
+from geobuf_cpp_spark.operators.graph import _driver_rows, _local_frame
 
 # lexicographically-forward neighbor offsets: each undirected 8-neighbor
 # edge is generated exactly once ((dy,dx) > (0,0) in (y,x) order)
@@ -94,7 +99,7 @@ GRID_UF_MAX_CELLS = 1 << 22  # 4^11: grids at res <= 11 have a provably
                              # driver union-find fast path
 
 
-def _driver_union_find(cells, res: int):
+def _driver_union_find(ids, res: int):
     """Vectorized 8-neighbor components over a BOUNDED dense-cell list.
 
     Input size is capped by the grid (4^res), never the corpus — the
@@ -104,13 +109,11 @@ def _driver_union_find(cells, res: int):
     lookups are numpy searchsorted against the sorted id array; the
     hits go to ``_driver_union_find_pairs``.
     """
-    import numpy as np
-
-    ids = np.sort(np.asarray(cells, dtype=np.int64))
+    ids = np.sort(ids)
     n = 1 << res
     base = res * RES_BASE
     iy, ix = (ids - base) // n, (ids - base) % n
-    pairs = []
+    id_a, id_b = [], []
     for dy, dx in _FWD_OFFSETS:
         ny, nx = iy + dy, ix + dx
         ok = (ny >= 0) & (ny < n) & (nx >= 0) & (nx < n)
@@ -119,8 +122,10 @@ def _driver_union_find(cells, res: int):
         pos_ok = ok & (pos < len(ids))
         hit = np.flatnonzero(pos_ok)
         hit = hit[ids[pos[hit]] == nbr_id[hit]]
-        pairs += zip(ids[hit].tolist(), nbr_id[hit].tolist())
-    return _driver_union_find_pairs(ids, pairs)
+        id_a.append(ids[hit])
+        id_b.append(nbr_id[hit])
+    return _driver_union_find_pairs(ids, np.concatenate(id_a),
+                                    np.concatenate(id_b))
 
 
 def grid_cluster(points_df: DataFrame, res: int, min_pts: int) -> DataFrame:
@@ -139,12 +144,13 @@ def grid_cluster(points_df: DataFrame, res: int, min_pts: int) -> DataFrame:
     """
     dense = dense_cells(points_df, res, min_pts)
     dense = dense.persist()
+    cells = None
     if (1 << (2 * res)) <= GRID_UF_MAX_CELLS:
-        cells = [r["cell"] for r in dense.select("cell").collect()]
-        spark = points_df.sparkSession
-        labels = spark.createDataFrame(
-            _driver_union_find(cells, res), "cell long, cluster_id long"
-        )
+        cells = _driver_rows(dense.select("cell"), GRID_UF_MAX_CELLS)
+    if cells is not None:
+        labels = _local_frame(
+            points_df.sparkSession, "cell long, cluster_id long",
+            *_driver_union_find(cells["cell"].to_numpy(np.int64), res))
         return dense.join(F.broadcast(labels), "cell", "inner").select(
             "cell", "n_points", "cluster_id"
         )
@@ -160,36 +166,6 @@ def grid_cluster(points_df: DataFrame, res: int, min_pts: int) -> DataFrame:
 
 
 GEO_CELL_BASE = 1_000_000   # cell_id = band * BASE + cx (cx < 36000)
-
-
-def _driver_union_find_pairs(node_ids, pairs):
-    """Bounded driver union-find over an explicit edge list: the
-    component engine for bounded graphs, whether the adjacency is grid
-    neighbours (``_driver_union_find``) or computed distributed
-    (geodetic band overlap, crossing graphs). Path-halving; unions keep
-    the min id as root because ids are processed sorted.
-    Returns [(id, min-id-of-component)] for every node.
-    """
-    import numpy as np
-
-    ids = np.sort(np.asarray(node_ids, dtype=np.int64))
-    parent = np.arange(len(ids))
-
-    def find(i):
-        while parent[i] != i:
-            parent[i] = parent[parent[i]]
-            i = parent[i]
-        return i
-
-    pos_a = np.searchsorted(ids, np.asarray([a for a, _ in pairs],
-                                            dtype=np.int64))
-    pos_b = np.searchsorted(ids, np.asarray([b for _, b in pairs],
-                                            dtype=np.int64))
-    for a, b in zip(pos_a, pos_b):
-        ra, rb = find(int(a)), find(int(b))
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    return [(int(ids[i]), int(ids[find(i)])) for i in range(len(ids))]
 
 
 def grid_cluster_geo(points_df: DataFrame, radius_cdeg: int,
@@ -264,7 +240,10 @@ def grid_cluster_geo(points_df: DataFrame, radius_cdeg: int,
     # 36000 cdeg / w_band — a geometry constant, never the corpus), so
     # up to the planar UF cap the components run as a bounded driver
     # union-find over the COLLECTED edge list (the adjacency itself
-    # stays a distributed join above). Beyond the cap fall back to the
+    # stays a distributed join above; cells and edges each come back in
+    # one Arrow collect, and an edge list past the cap, which a bounded
+    # per-cell fan-out keeps out of reach, or a null id takes the
+    # distributed path). Beyond the cap fall back to the
     # distributed min-label fixpoint — correct but linear-round-prone
     # on near-percolation grids (observed ~1 band/round label crawl at
     # sf0.1: the banded interval graph defeats pointer-jumping's
@@ -280,14 +259,17 @@ def grid_cluster_geo(points_df: DataFrame, radius_cdeg: int,
     n_dense = grid_bound if grid_bound <= GRID_UF_MAX_CELLS \
         else dense.count()
     if n_dense <= GRID_UF_MAX_CELLS:
-        node_ids = [r["cell_id"] for r in
-                    dense.select("cell_id").collect()]
-        pair_rows = [(r["id_a"], r["id_b"]) for r in edges.collect()]
-        labels = spark.createDataFrame(
-            _driver_union_find_pairs(node_ids, pair_rows),
-            "cell_id long, cluster_id long")
-        return dense.join(F.broadcast(labels), "cell_id").select(
-            "band", "cx", "n_points", "cluster_id")
+        cells = _driver_rows(dense.select("cell_id"), GRID_UF_MAX_CELLS)
+        pairs = _driver_rows(edges, GRID_UF_MAX_CELLS)
+        if cells is not None and pairs is not None:
+            labels = _local_frame(
+                spark, "cell_id long, cluster_id long",
+                *_driver_union_find_pairs(
+                    cells["cell_id"].to_numpy(np.int64),
+                    pairs["id_a"].to_numpy(np.int64),
+                    pairs["id_b"].to_numpy(np.int64)))
+            return dense.join(F.broadcast(labels), "cell_id").select(
+                "band", "cx", "n_points", "cluster_id")
     labels = dedup_clusters(nodes, edges)
     return dense.join(
         labels.withColumnRenamed("doc_id", "cell_id"), "cell_id"

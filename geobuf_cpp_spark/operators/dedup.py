@@ -28,8 +28,15 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from ..plans.iterate import loop_checkpoint
+from .graph import (
+    DRIVER_LOOP_MAX_EDGES,
+    _dense_ids,
+    _driver_rows,
+    _local_frame,
+)
 
 MERSENNE_P = (1 << 61) - 1
 N_PERM = 64
@@ -388,31 +395,66 @@ def ngram_jaccard_pairs(ds, threshold: float):
     )
 
 
+def _driver_union_find_pairs(node_ids, id_a, id_b):
+    """Connected components of a bounded graph on the driver: the
+    component engine for graphs small enough to collect, whether the
+    adjacency is grid neighbours (``clustering._driver_union_find``),
+    computed distributed (geodetic band overlap) or a probed edge list
+    (``dedup_clusters``).
+
+    Vectorized hook-and-shortcut: every root hooks onto the smallest
+    root across its edges, then pointers jump until each tree is a star;
+    each pass removes at least one root, and a root only ever points to
+    a smaller index, so the surviving root is the component's min id.
+    Returns (ids, labels): every id of ``node_ids``, ``id_a`` or
+    ``id_b``, sorted, with the min id of its component.
+    """
+    ids, (_, a, b) = _dense_ids(np.asarray(node_ids), np.asarray(id_a),
+                                np.asarray(id_b))
+    lbl = np.arange(len(ids))
+    while True:
+        ra, rb = lbl[a], lbl[b]
+        if np.array_equal(ra, rb):
+            return ids, ids[lbl]
+        np.minimum.at(lbl, ra, rb)
+        np.minimum.at(lbl, rb, ra)
+        while not np.array_equal(lbl[lbl], lbl):
+            lbl = lbl[lbl]
+
+
 def dedup_clusters(docs_df, pairs_df):
     """Fuzzy-dedup completion: connected components over near-dup pairs.
 
     Pair detection (minhash/simhash/ngram/embedding) yields EDGES; what a
     training-data pipeline actually needs is one keeper per duplicate
-    CLUSTER — the transitive closure. Min-label propagation with pointer
-    jumping: every doc starts labeled with its own id; each round takes
-    the min over neighbors' labels, then compresses one level of
-    indirection (lbl <- lbl[lbl], the Wyllie/pointer-doubling step), so
-    convergence is O(log diameter) rounds, not O(diameter) — chains of
-    adjacent grid cells (`operators/clustering.py`) would otherwise need
-    a round per link. Each round is two JVM joins + one aggregate; the
-    DRIVER only runs the convergence loop (bounded by log(diameter),
-    never by corpus size — the same shape GraphX/Pregel uses). Every
-    round materializes via ``plans.iterate.loop_checkpoint`` — a lazy
-    localCheckpoint that ALSO resets the checkpoint-inherited size
-    statistics: the loop body references ``labels`` twice, so without
-    plan truncation the logical tree doubles per round, and without the
-    stats reset the inherited sizeInBytes estimates multiply per round
-    until Catalyst's stats visitor grinds million-digit BigInteger
-    products (see plans/iterate.py for the measured failure curve). (On a real cluster with
-    executor churn, swap in reliable ``checkpoint()`` — same contract,
-    see plans/manifest.py for the durable variant.) Returns
-    (doc_id, cluster_id) for every document; singletons label themselves;
+    CLUSTER — the transitive closure. Returns (doc_id, cluster_id) for
+    every document and every pair endpoint (an endpoint absent from
+    ``docs_df`` is labeled too); singletons label themselves;
     cluster_id = min doc id of the component (the keeper).
+
+    The doubled edge list is lazily localCheckpoint-ed once; under AQE
+    that call runs its shuffle. When it holds at most
+    ``DRIVER_LOOP_MAX_EDGES`` rows it comes back in one Arrow collect
+    and ``_driver_union_find_pairs`` labels its nodes on the driver.
+
+    Above that, min-label propagation with pointer jumping: every node
+    starts labeled with its own id; each round takes the min over
+    neighbors' labels, then compresses one level of indirection
+    (lbl <- lbl[lbl], the Wyllie/pointer-doubling step), so convergence
+    is O(log diameter) rounds, not O(diameter) — chains of adjacent grid
+    cells (`operators/clustering.py`) would otherwise need a round per
+    link. Each round is two JVM joins + one aggregate; the DRIVER only
+    runs the convergence loop (bounded by log(diameter), never by corpus
+    size — the same shape GraphX/Pregel uses). Every round's labels are
+    a ``plans.iterate.loop_checkpoint``, whose call runs the round's
+    shuffle stages, with the stats reset: the loop body references
+    ``labels`` twice, so without plan truncation the logical tree
+    doubles per round, and without the stats reset the inherited
+    sizeInBytes estimates multiply per round until Catalyst's stats
+    visitor grinds million-digit BigInteger products (see
+    plans/iterate.py for the measured failure curve). (On a real cluster
+    with executor churn, swap in reliable ``checkpoint()`` — same
+    contract, see plans/manifest.py for the durable variant.)
     """
     e = pairs_df.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     # one up-front shuffle onto the per-round join key: localCheckpoint
@@ -422,11 +464,35 @@ def dedup_clusters(docs_df, pairs_df):
     edges = e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).repartition("dst").localCheckpoint(eager=False)
-    # The loop runs ONLY over nodes that appear in an edge: singletons
-    # (the overwhelming majority of a deduped corpus — and of a road
-    # network's crossing graph) can never change label, so hauling them
-    # through every iteration's joins and checkpoints just multiplies
-    # per-round cost; they rejoin as self-labeled rows at the end.
+    rows = _driver_rows(edges, DRIVER_LOOP_MAX_EDGES)
+    if rows is not None:
+        src = rows["src"].to_numpy()
+        t = edges.schema["src"].dataType
+        labels = _local_frame(
+            docs_df.sparkSession,
+            StructType([StructField("id", t), StructField("lbl", t)]),
+            *_driver_union_find_pairs(src, src, rows["dst"].to_numpy()))
+    else:
+        labels = _label_loop(edges)
+    # Only nodes that appear in an edge went through the labeling:
+    # singletons (the overwhelming majority of a deduped corpus — and of
+    # a road network's crossing graph) can never change label, so they
+    # rejoin here as self-labeled rows.
+    singletons = (
+        docs_df.select(F.col("doc_id").alias("id"))
+        .join(labels.select("id"), "id", "left_anti")
+        .withColumn("lbl", F.col("id"))
+    )
+    out = labels.unionByName(singletons)
+    edges.unpersist()
+    return out.select(
+        F.col("id").alias("doc_id"), F.col("lbl").alias("cluster_id")
+    )
+
+
+def _label_loop(edges):
+    """The distributed min-label loop of ``dedup_clusters`` over its
+    doubled edge list; returns (id, lbl) for every node of an edge."""
     labels = (
         edges.select(F.col("src").alias("id")).distinct()
         .withColumn("lbl", F.col("id"))
@@ -436,10 +502,8 @@ def dedup_clusters(docs_df, pairs_df):
     # so the label sum is strictly monotone until the fixpoint — one
     # aggregate per round instead of an old-vs-new join. Summed in
     # decimal(38,0) so corpus-scale id sums cannot overflow/wrap. The
-    # checkpoints are LAZY: this aggregate is the single Spark job per
-    # round, materializing the round's checkpoint as a side effect
-    # (eager checkpoints would double the job count, and driver-side
-    # job latency — not data — dominates small/medium graphs).
+    # checkpoints are LAZY (eager ones would add a job per round), so
+    # this aggregate is the round's last job.
     prev_sum = None
     while True:
         nbr = (
@@ -475,18 +539,8 @@ def dedup_clusters(docs_df, pairs_df):
         labels.unpersist()
         labels = new_labels
         if cur_sum == prev_sum:
-            break
+            return labels
         prev_sum = cur_sum
-    singletons = (
-        docs_df.select(F.col("doc_id").alias("id"))
-        .join(labels.select("id"), "id", "left_anti")
-        .withColumn("lbl", F.col("id"))
-    )
-    out = labels.unionByName(singletons)
-    edges.unpersist()
-    return out.select(
-        F.col("id").alias("doc_id"), F.col("lbl").alias("cluster_id")
-    )
 
 
 def decontaminate(train_df, heldout_df):

@@ -307,19 +307,11 @@ def test_point_feature_size_formula():
     import math
 
     import duckdb
+    import pandas as pd
 
     from geobuf_cpp_spark.functions.sql_codec import sql_point_feature_size
 
     model = sql_point_feature_size("lon", "lat", 10**6)
-    con = duckdb.connect()
-
-    def predicted(lon, lat):
-        row = con.execute(
-            f"SELECT {model['precision']}, {model['nbytes']} FROM "
-            "(SELECT ? AS lon, ? AS lat)",
-            [lon, lat],
-        ).fetchone()
-        return int(row[0]), int(row[1])
 
     cases = [
         (0.0, 0.0),
@@ -338,7 +330,17 @@ def test_point_feature_size_formula():
         lat = float((k * 9973) % 17000) / 100.0 - 85.0
         cases.append((lon, lat))
 
-    for lon, lat in cases:
+    # one query over all cases: the model is a large expression, and
+    # planning it once per case took most of this test's time
+    con = duckdb.connect()
+    con.register("cases", pd.DataFrame(
+        [(i, lon, lat) for i, (lon, lat) in enumerate(cases)],
+        columns=["i", "lon", "lat"]))
+    predicted = con.execute(
+        f"SELECT {model['precision']}, {model['nbytes']} FROM cases "
+        "ORDER BY i").fetchall()
+    assert len(predicted) == len(cases)
+    for (lon, lat), (p, nb) in zip(cases, predicted):
         enc = gb.Encoder(max_precision=10**6)
         blob = enc.encode(
             {
@@ -347,7 +349,6 @@ def test_point_feature_size_formula():
                 "properties": {"src": "orders"},
             }
         )
-        p, nb = predicted(lon, lat)
         assert nb == len(blob), (lon, lat, nb, len(blob))
         assert p == round(math.log10(enc.e)), (lon, lat, p, enc.e)
 

@@ -274,8 +274,7 @@ boxes_strategy = st.lists(
 def test_union_find_pairs_matches_networkx_free_closure(bxs):
     """Driver union-find labels == a reference BFS closure on a random
     interval-overlap graph built from the boxes' x-projections."""
-    from geobuf_cpp_spark.operators.clustering import (
-        _driver_union_find_pairs)
+    from geobuf_cpp_spark.operators.dedup import _driver_union_find_pairs
 
     ids = list(range(len(bxs)))
     ivs = [(x, x + w) for x, _, w, _ in bxs]
@@ -284,7 +283,8 @@ def test_union_find_pairs_matches_networkx_free_closure(bxs):
         for a in ids for b in ids
         if a < b and ivs[a][0] < ivs[b][1] and ivs[b][0] < ivs[a][1]
     ]
-    got = dict(_driver_union_find_pairs(ids, pairs))
+    ends = np.array(pairs, dtype=np.int64).reshape(-1, 2)
+    got = dict(zip(*_driver_union_find_pairs(ids, ends[:, 0], ends[:, 1])))
     # reference: BFS components
     adj = {i: set() for i in ids}
     for a, b in pairs:

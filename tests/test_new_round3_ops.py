@@ -709,19 +709,20 @@ def test_grid_cluster_matches_union_find(spark):
     assert got == expect  # noise cell absent, components exact
 
 
-def test_dedup_clusters_long_chain_pointer_jumping(spark):
+def test_dedup_clusters_long_chain_pointer_jumping(spark, loop_paths):
     """A diameter-60 chain converges without plan blowup — the case that
     OOM'd the pre-pointer-jumping O(diameter) loop (plan doubled per
-    round). Pointer jumping needs ~log2(60) rounds."""
+    round). Pointer jumping needs ~log2(60) rounds. Both paths."""
     from geobuf_cpp_spark.operators.dedup import dedup_clusters
 
     n = 61
     edges = [(i, i + 1) for i in range(n - 1)]
     docs = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    got = {r["doc_id"]: r["cluster_id"]
-           for r in dedup_clusters(docs, pairs).collect()}
-    assert got == {i: 0 for i in range(n)}
+    for cap in loop_paths():
+        got = {r["doc_id"]: r["cluster_id"]
+               for r in dedup_clusters(docs, pairs).collect()}
+        assert got == {i: 0 for i in range(n)}, cap
 
 
 # ---------------------------------------------------------------------------

@@ -109,9 +109,10 @@ def test_ngram_jaccard_exact_and_all_jvm(spark, docs):
         assert marker not in plan, marker
 
 
-def test_dedup_clusters_matches_union_find(spark):
+def test_dedup_clusters_matches_union_find(spark, loop_paths):
     """Min-label propagation equals a plain union-find, including a
-    diameter-4 chain (multiple propagation rounds) and singletons."""
+    diameter-4 chain (multiple propagation rounds) and singletons. Both
+    paths."""
     from geobuf_cpp_spark.operators.dedup import dedup_clusters
 
     n = 40
@@ -133,11 +134,12 @@ def test_dedup_clusters_matches_union_find(spark):
 
     docs = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    got = {
-        r["doc_id"]: r["cluster_id"]
-        for r in dedup_clusters(docs, pairs).collect()
-    }
-    assert got == expect
+    for cap in loop_paths():
+        got = {
+            r["doc_id"]: r["cluster_id"]
+            for r in dedup_clusters(docs, pairs).collect()
+        }
+        assert got == expect, cap
 
 
 def test_simhash_pairs_match_bruteforce(spark, docs):
