@@ -93,21 +93,14 @@ def _neighbor_edges(dense: DataFrame, res: int) -> DataFrame:
     ).select("id_a", "id_b")
 
 
-GRID_UF_MAX_CELLS = 1 << 22  # 4^11: grids at res <= 11 have a provably
-                             # bounded cell table (<= 4M rows INDEPENDENT
-                             # of corpus size), small enough for the
-                             # driver union-find fast path
-
-
 def _driver_union_find(ids, res: int):
     """Vectorized 8-neighbor components over a BOUNDED dense-cell list.
 
-    Input size is capped by the grid (4^res), never the corpus — the
-    points were already aggregated away — so this is a bounded driver
-    computation (same contract as the bounded k-means sample in
-    operators/ann.py), not a collect of distributed data. Neighbor
-    lookups are numpy searchsorted against the sorted id array; the
-    hits go to ``_driver_union_find_pairs``.
+    The points were already aggregated away, and the cell list is one
+    ``_driver_rows`` probe admitted, so this is a bounded driver
+    computation, not a collect of the corpus. Neighbor lookups are numpy
+    searchsorted against the sorted id array; the hits go to
+    ``_driver_union_find_pairs``.
     """
     ids = np.sort(ids)
     n = 1 << res
@@ -135,18 +128,17 @@ def grid_cluster(points_df: DataFrame, res: int, min_pts: int) -> DataFrame:
     cluster_id is the min cell id of the connected component, so
     singleton dense cells label themselves.
 
-    Adaptive strategy: after the density aggregation the cell table is
-    bounded by 4^res, so for res <= 11 the component step runs as a
-    bounded driver union-find (one collect of <= 4M ids, zero fixpoint
-    jobs); at finer resolutions it falls back to the distributed
-    pointer-jumping loop shared with fuzzy dedup. Both paths produce
-    identical labels (pytest-asserted).
+    Adaptive strategy: the dense cells are probed by
+    ``graph._driver_rows``. When they come back (at most
+    ``graph.DRIVER_LOOP_MAX_EDGES`` rows), numpy enumerates their
+    neighbour pairs and a driver union-find labels them, with zero
+    fixpoint jobs; otherwise the neighbour edges are a distributed join
+    and ``dedup_clusters`` labels them. Both paths produce identical
+    labels (pytest-asserted).
     """
     dense = dense_cells(points_df, res, min_pts)
     dense = dense.persist()
-    cells = None
-    if (1 << (2 * res)) <= GRID_UF_MAX_CELLS:
-        cells = _driver_rows(dense.select("cell"), GRID_UF_MAX_CELLS)
+    cells = _driver_rows(dense.select("cell"))
     if cells is not None:
         labels = _local_frame(
             points_df.sparkSession, "cell long, cluster_id long",
@@ -179,15 +171,16 @@ def grid_cluster_geo(points_df: DataFrame, radius_cdeg: int,
 
     Dense cells (>= min_pts) connect when their longitude intervals
     overlap after expanding a cell by one own-width on each side:
-    within a band that is exactly the +1-forward neighbor join (O(dense)
-    id enumeration, no pair scan); across adjacent bands the candidate
-    cx' range under the other band's width is enumerated by exact floor
-    division ((cx-1)*w1 and (cx+2)*w1 - 1 over w2 — doubles are exact
-    here: quotients are either exact integers or >= 2^-16 from one) and
-    equi-joined, a bounded <= 3*w1/w2 + 2 fan-out per cell. Like the
-    planar sibling, borders are guarded and there is NO antimeridian
-    wrap for adjacency (a cluster crossing +-180 splits — documented
-    family convention; the geodetic distance JOINS do ghost the seam).
+    within a band that is exactly the +1-forward neighbor; across
+    adjacent bands the candidate cx' range under the other band's width
+    is enumerated by exact floor division ((cx-1)*w1 and (cx+2)*w1 - 1
+    over w2 — doubles are exact here: quotients are either exact
+    integers or >= 2^-16 from one), a bounded <= 3*w1/w2 + 2 fan-out per
+    cell. Both kinds of candidate meet the dense cells in one equi-join
+    (O(dense) id enumeration, no pair scan). Like the planar sibling,
+    borders are guarded and there is NO antimeridian wrap for adjacency
+    (a cluster crossing +-180 splits — documented family convention;
+    the geodetic distance JOINS do ghost the seam).
     Components via the shared min-label engine; cluster_id = min
     cell_id (band * 10^6 + cx).
 
@@ -196,9 +189,8 @@ def grid_cluster_geo(points_df: DataFrame, radius_cdeg: int,
     from geobuf_cpp_spark.operators.range_join import geo_band_widths
 
     r = int(radius_cdeg)
-    spark = points_df.sparkSession
-    band_widths = geo_band_widths(r)
-    bands = spark.createDataFrame(band_widths, "band long, w long")
+    bands = points_df.sparkSession.createDataFrame(geo_band_widths(r),
+                                                   "band long, w long")
     dense = (
         points_df.withColumn("band", F.expr(f"iy div {r}"))
         .join(F.broadcast(bands), "band")
@@ -209,68 +201,38 @@ def grid_cluster_geo(points_df: DataFrame, radius_cdeg: int,
                     F.expr(f"band * {GEO_CELL_BASE} + cx"))
         .persist()
     )
-    nodes = dense.select(F.col("cell_id").alias("doc_id"))
-    same = (
-        dense.selectExpr("cell_id AS id_a", "band",
-                         "cx + 1 AS cx_next")
-        .join(dense.selectExpr("cell_id AS id_b", "band",
-                               "cx AS cx_next"),
-              ["band", "cx_next"])
+    # each dense cell's candidate neighbours: the next cell of its band
+    # and the cx' range of the band above, from its own width w and that
+    # band's width w2 (none above the top band, where the left join
+    # leaves w2 null)
+    fdiv = "CAST(FLOOR(CAST({n} AS DOUBLE) / w2) AS BIGINT)"
+    above = (
+        "transform(coalesce(sequence(GREATEST("
+        + fdiv.format(n="(cx - 1) * w") + ", 0), "
+        + fdiv.format(n="(cx + 2) * w - 1")
+        + "), CAST(array() AS array<bigint>)), "
+        "c -> named_struct('band', band + 1, 'cx', c))")
+    edges = (
+        dense.join(F.broadcast(bands.selectExpr("band - 1 AS band",
+                                                "w AS w2")),
+                   "band", "left")
+        .selectExpr("cell_id AS id_a",
+                    "inline(concat(array(named_struct('band', band, "
+                    "'cx', cx + 1)), " + above + "))")
+        .join(dense.selectExpr("cell_id AS id_b", "band", "cx"),
+              ["band", "cx"])
         .select("id_a", "id_b")
     )
-    fdiv = ("CAST(FLOOR(CAST({n} AS DOUBLE) / w2) AS BIGINT)")
-    up = (
-        dense.selectExpr(
-            "cell_id AS id_a", "band + 1 AS band_b", "cx", "w AS w1")
-        .join(F.broadcast(bands.selectExpr("band AS band_b",
-                                           "w AS w2")), "band_b")
-        .selectExpr(
-            "id_a", "band_b",
-            "explode(sequence(GREATEST("
-            + fdiv.format(n="(cx - 1) * w1") + ", 0), "
-            + fdiv.format(n="(cx + 2) * w1 - 1") + ")) AS cx_b")
-        .join(dense.selectExpr("cell_id AS id_b", "band AS band_b",
-                               "cx AS cx_b"),
-              ["band_b", "cx_b"])
-        .select("id_a", "id_b")
-    )
-    edges = same.unionByName(up).selectExpr("id_a", "id_b")
-    # Adaptive component strategy, same contract as the planar sibling:
-    # the dense-cell table is bounded by the GRID (sum over bands of
-    # 36000 cdeg / w_band — a geometry constant, never the corpus), so
-    # up to the planar UF cap the components run as a bounded driver
-    # union-find over the COLLECTED edge list (the adjacency itself
-    # stays a distributed join above; cells and edges each come back in
-    # one Arrow collect, and an edge list past the cap, which a bounded
-    # per-cell fan-out keeps out of reach, or a null id takes the
-    # distributed path). Beyond the cap fall back to the
-    # distributed min-label fixpoint — correct but linear-round-prone
-    # on near-percolation grids (observed ~1 band/round label crawl at
+    # Components via dedup_clusters, which probes this edge list: a
+    # bounded one (the usual case, since the dense-cell table is bounded
+    # by the grid and each cell's fan-out by its band widths) is
+    # labelled on the driver; a larger one runs the distributed
+    # min-label fixpoint — correct but linear-round-prone on
+    # near-percolation grids (observed ~1 band/round label crawl at
     # sf0.1: the banded interval graph defeats pointer-jumping's
-    # log-diameter bound in practice, which is why the bounded path is
-    # the default here).
-    # the dense-cell count is bounded by the GRID itself (<= 360 deg of
-    # longitude over each band's width), a geometry constant the planar
-    # sibling also guards on STATICALLY — so the driver-UF eligibility
-    # check needs no count job at all when the whole grid fits the cap;
-    # the dynamic count remains only for geometries whose full grid
-    # exceeds it (tiny radii), where dense occupancy may still fit.
-    grid_bound = sum(36000 // w + 2 for _, w in band_widths)
-    n_dense = grid_bound if grid_bound <= GRID_UF_MAX_CELLS \
-        else dense.count()
-    if n_dense <= GRID_UF_MAX_CELLS:
-        cells = _driver_rows(dense.select("cell_id"), GRID_UF_MAX_CELLS)
-        pairs = _driver_rows(edges, GRID_UF_MAX_CELLS)
-        if cells is not None and pairs is not None:
-            labels = _local_frame(
-                spark, "cell_id long, cluster_id long",
-                *_driver_union_find_pairs(
-                    cells["cell_id"].to_numpy(np.int64),
-                    pairs["id_a"].to_numpy(np.int64),
-                    pairs["id_b"].to_numpy(np.int64)))
-            return dense.join(F.broadcast(labels), "cell_id").select(
-                "band", "cx", "n_points", "cluster_id")
-    labels = dedup_clusters(nodes, edges)
+    # log-diameter bound in practice).
+    labels = dedup_clusters(dense.select(F.col("cell_id").alias("doc_id")),
+                            edges)
     return dense.join(
         labels.withColumnRenamed("doc_id", "cell_id"), "cell_id"
     ).select("band", "cx", "n_points", "cluster_id")

@@ -32,10 +32,11 @@ from pyspark.sql.types import StructField, StructType
 
 from ..plans.iterate import loop_checkpoint
 from .graph import (
-    DRIVER_LOOP_MAX_EDGES,
     _dense_ids,
-    _driver_rows,
+    _doubled_edges,
     _local_frame,
+    _pair_type,
+    _probe_pairs,
 )
 
 MERSENNE_P = (1 << 61) - 1
@@ -155,13 +156,12 @@ def minhash_signatures(docs_df):
     return spread(docs_df.select("doc_id", "text")).mapInPandas(gen, SIG_SCHEMA)
 
 
-def minhash_bands(docs_df, sigs=None):
+def minhash_bands(docs_df):
     """(doc_id, band, bucket) rows — the LSH shuffle key table.
 
     Band buckets are derived JVM-side (xxhash64 over the signature slice —
     whole-stage codegen, no second Python pass over the corpus)."""
-    if sigs is None:
-        sigs = minhash_signatures(docs_df)
+    sigs = minhash_signatures(docs_df)
     rpb = N_PERM // N_BANDS
     band_structs = F.array(
         *[
@@ -177,37 +177,15 @@ def minhash_bands(docs_df, sigs=None):
     )
 
 
-PREFILTER_MIN_DOCS = 100_000
-
-
 def minhash_lsh_pairs(docs_df, threshold: float):
     """Near-duplicate pairs (id_a < id_b, jaccard >= threshold).
 
-    Bucket-join candidate generation, then (on large corpora) a SIGNATURE
-    prefilter — estimated Jaccard = matching-row fraction, computed
-    JVM-side on the 512-byte signatures — so only the survivors join the
-    full texts for the exact shingle-Jaccard verify: at scale the candidate
-    shuffle carries signatures, never the corpus. The prefilter keeps any
-    pair whose estimate is within 0.25 = 4 sigma (64 perms -> sigma
-    ~= 0.0625) of the threshold; a true pair is dropped only when its
-    estimate lands beyond 4 sigma low (~3e-5 per pair) — near-certain, not
-    certain. It runs only when the corpus reaches ``PREFILTER_MIN_DOCS``
-    (a LIMIT-bounded probe, never a full scan) — below that the two extra
-    by-id joins cost more than shipping the texts, and every candidate
-    gets the exact post-banding verify. Buckets above 64 docs are dropped
-    (e.g. boilerplate shingles) — a skew guard, trading recall on
-    pathological keys for bounded work.
-
-    The persisted signature table lives until the session ends or the
-    caller runs ``spark.catalog.clearCache()`` (long-lived sessions own
-    their cache).
+    Bucket-join candidate generation, then the exact shingle-Jaccard
+    verify of every candidate against the full texts. Buckets above 64
+    docs are dropped (e.g. boilerplate shingles) — a skew guard, trading
+    recall on pathological keys for bounded work.
     """
-    # the signature stage feeds two different exchanges (band buckets and
-    # the by-id prefilter joins); persist so the corpus-wide shingle+perm
-    # pass runs once — the in-session analogue of checkpointing the
-    # signature table (plans.manifest) in a long-lived pipeline
-    sigs = minhash_signatures(docs_df).persist()
-    bands = minhash_bands(docs_df, sigs=sigs)
+    bands = minhash_bands(docs_df)
     sized = bands.withColumn(
         "bsize", F.count("*").over(Window.partitionBy("band", "bucket"))
     ).filter(F.col("bsize") <= 64)
@@ -219,30 +197,9 @@ def minhash_lsh_pairs(docs_df, threshold: float):
         .select("id_a", "id_b")
         .distinct()
     )
-    # switchover heuristic: the prefilter pays for itself once the
-    # candidate texts would dominate the shuffle — proxied by corpus
-    # size. limit(n).count() short-circuits after n rows, so the probe
-    # is O(PREFILTER_MIN_DOCS) regardless of corpus size.
-    if (docs_df.select("doc_id").limit(PREFILTER_MIN_DOCS).count()
-            >= PREFILTER_MIN_DOCS):
-        sig_a = sigs.select(F.col("doc_id").alias("id_a"), F.col("sig").alias("sig_a"))
-        sig_b = sigs.select(F.col("doc_id").alias("id_b"), F.col("sig").alias("sig_b"))
-        est = F.aggregate(
-            F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-            F.lit(0),
-            lambda acc, v: acc + v,
-        ) / F.lit(N_PERM)
-        survivors = (
-            cand.join(sig_a, "id_a")
-            .join(sig_b, "id_b")
-            .filter(est >= F.lit(threshold - 0.25))
-            .select("id_a", "id_b")
-        )
-    else:
-        survivors = cand
     texts = docs_df.select(F.col("doc_id").alias("_tid"), F.col("text").alias("_text"))
     joined = (
-        survivors.join(texts.withColumnRenamed("_tid", "id_a").withColumnRenamed("_text", "text_a"), "id_a")
+        cand.join(texts.withColumnRenamed("_tid", "id_a").withColumnRenamed("_text", "text_a"), "id_a")
         .join(texts.withColumnRenamed("_tid", "id_b").withColumnRenamed("_text", "text_b"), "id_b")
     )
 
@@ -398,9 +355,9 @@ def ngram_jaccard_pairs(ds, threshold: float):
 def _driver_union_find_pairs(node_ids, id_a, id_b):
     """Connected components of a bounded graph on the driver: the
     component engine for graphs small enough to collect, whether the
-    adjacency is grid neighbours (``clustering._driver_union_find``),
-    computed distributed (geodetic band overlap) or a probed edge list
-    (``dedup_clusters``).
+    adjacency is grid neighbours (``clustering._driver_union_find``) or
+    a probed edge list (``dedup_clusters``, which the geodetic grid's
+    band-overlap edges also go through).
 
     Vectorized hook-and-shortcut: every root hooks onto the smallest
     root across its edges, then pointers jump until each tree is a star;
@@ -432,10 +389,10 @@ def dedup_clusters(docs_df, pairs_df):
     ``docs_df`` is labeled too); singletons label themselves;
     cluster_id = min doc id of the component (the keeper).
 
-    The doubled edge list is lazily localCheckpoint-ed once; under AQE
-    that call runs its shuffle. When it holds at most
-    ``DRIVER_LOOP_MAX_EDGES`` rows it comes back in one Arrow collect
-    and ``_driver_union_find_pairs`` labels its nodes on the driver.
+    The pairs are probed by ``graph._probe_pairs``. When they hold at
+    most ``graph.DRIVER_LOOP_MAX_EDGES`` rows they come back in one Arrow
+    collect and ``_driver_union_find_pairs`` labels their nodes on the
+    driver. ``docs_df`` is never probed: it can be the whole corpus.
 
     Above that, min-label propagation with pointer jumping: every node
     starts labeled with its own id; each round takes the min over
@@ -456,24 +413,21 @@ def dedup_clusters(docs_df, pairs_df):
     with executor churn, swap in reliable ``checkpoint()`` — same
     contract, see plans/manifest.py for the durable variant.)
     """
-    e = pairs_df.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    # one up-front shuffle onto the per-round join key: localCheckpoint
-    # preserves outputPartitioning, so every round's edges-side of the
-    # neighbor join (the largest table in the loop) reuses this layout
-    # instead of re-exchanging — saves one edge shuffle per round
-    edges = e.unionByName(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).repartition("dst").localCheckpoint(eager=False)
-    rows = _driver_rows(edges, DRIVER_LOOP_MAX_EDGES)
-    if rows is not None:
-        src = rows["src"].to_numpy()
-        t = edges.schema["src"].dataType
+    und, pairs = _probe_pairs(pairs_df)
+    if pairs is not None:
+        src, dst = pairs
+        t = _pair_type(und)
         labels = _local_frame(
             docs_df.sparkSession,
             StructType([StructField("id", t), StructField("lbl", t)]),
-            *_driver_union_find_pairs(src, src, rows["dst"].to_numpy()))
+            *_driver_union_find_pairs(src, src, dst))
     else:
-        labels = _label_loop(edges)
+        # one up-front shuffle onto the per-round join key:
+        # localCheckpoint preserves outputPartitioning, so every round's
+        # edges-side of the neighbor join (the largest table in the
+        # loop) reuses this layout instead of re-exchanging — saves one
+        # edge shuffle per round
+        labels = _label_loop(_doubled_edges(und, "dst"))
     # Only nodes that appear in an edge went through the labeling:
     # singletons (the overwhelming majority of a deduped corpus — and of
     # a road network's crossing graph) can never change label, so they
@@ -483,9 +437,7 @@ def dedup_clusters(docs_df, pairs_df):
         .join(labels.select("id"), "id", "left_anti")
         .withColumn("lbl", F.col("id"))
     )
-    out = labels.unionByName(singletons)
-    edges.unpersist()
-    return out.select(
+    return labels.unionByName(singletons).select(
         F.col("id").alias("doc_id"), F.col("lbl").alias("cluster_id")
     )
 

@@ -12,8 +12,9 @@ corners form the wedge, the closing edge is probed by equi-join.
 Connected components live in ``operators/dedup.py:dedup_clusters``
 (pointer-jumping min-label). The bounded loops here — ``pagerank``,
 ``bfs_hops``, ``kcore`` — and ``dedup_clusters`` share one probe,
-``_driver_rows``: a graph of at most ``DRIVER_LOOP_MAX_EDGES`` edge rows
-runs its rounds on the driver in numpy, a larger one in Spark.
+``_driver_rows``: a graph of at most ``DRIVER_LOOP_MAX_EDGES`` rows in
+the probed frame runs its rounds on the driver in numpy, a larger one in
+Spark over edge lists built only then.
 """
 
 from __future__ import annotations
@@ -93,12 +94,15 @@ def triangle_counts(edges_df: DataFrame) -> DataFrame:
     )
 
 
-# Edge rows up to which a bounded loop (pagerank, bfs_hops, kcore,
-# dedup_clusters) runs on the driver: its probe collects at most this
-# many rows plus one through Arrow, and below it the fixed rounds run in
-# numpy. Measured on 4 cores (local[4], 3g driver heap), seeded
-# synthetic graphs of m random edges over m/4 nodes, seconds per call
-# plus one aggregate action, driver path / distributed path:
+# Rows of a probed frame up to which a bounded loop (pagerank, bfs_hops,
+# kcore, dedup_clusters, grid_cluster) runs on the driver: its probe
+# collects at most this many rows plus one through Arrow, and below it
+# the fixed rounds run in numpy. The probed frame is the caller's
+# undirected (id_a, id_b) pairs (pagerank: its degree-joined edge list;
+# grid_cluster: its dense cells). Measured on 4 cores (local[4], 3g
+# driver heap), seeded synthetic graphs of m random edges over m/4 nodes,
+# seconds per call plus one aggregate action, driver path / distributed
+# path:
 #
 #   m edges     kcore        bfs_hops     pagerank     dedup_clusters
 #   10^3        0.40 / 1.16  0.31 / 1.20  0.39 / 1.12  0.25 / 1.44
@@ -106,29 +110,65 @@ def triangle_counts(edges_df: DataFrame) -> DataFrame:
 #   10^5        0.60 / 1.71  0.67 / 1.78  0.69 / 1.68  0.74 / 4.42
 #   10^6        3.37 / 6.22  3.44 / 6.84  4.69 / 7.27  4.84 / 14.99
 #
-# The driver path wins at every size measured, so the cutoff sits at the
-# largest: 10^6 undirected edges are 2*10^6 rows of a doubled list (2^21
-# = 2.1M). That frame is about 32 MB of BIGINT pairs in Arrow, well
-# inside the driver heap. Above the cutoff the declined probe costs one
-# collect of that size on top of the distributed rounds (kcore on 1.1M
-# edges: 7.8-9.7 s against 5.9-6.6 s with no probe).
-DRIVER_LOOP_MAX_EDGES = 1 << 21
+# The driver path wins at every size measured, so the cutoff sits just
+# above the largest: 2^20 = 1,048,576 rows admits 10^6 edges and no
+# larger graph than that. That frame is about 16 MB of BIGINT pairs in
+# Arrow, well inside the driver heap. Above the cutoff the declined
+# probe costs one collect of that size on top of the distributed rounds
+# (kcore on 1.1M edges, probing 2^21 + 1 rows of its doubled list: 7.8-9.7
+# s against 5.9-6.6 s with no probe).
+DRIVER_LOOP_MAX_EDGES = 1 << 20
 
 
-def _driver_rows(df: DataFrame, cap: int) -> pd.DataFrame | None:
+def _driver_rows(df: DataFrame) -> pd.DataFrame | None:
     """All rows of ``df`` through one Arrow collect, or None when it has
-    more than ``cap`` rows or holds a null.
+    more than ``DRIVER_LOOP_MAX_EDGES`` rows or holds a null.
 
-    The probe of every bounded loop. It reads a frame the distributed
-    loop materializes anyway (its checkpointed edge list), so the edge
-    build runs once whichever path follows, and it never collects more
-    than ``cap + 1`` rows. A null id takes the distributed path, whose
-    joins drop it.
+    The probe of every bounded loop. It reads a frame whichever path
+    follows needs (a checkpointed edge list), so the edge build runs
+    once, and it never collects more than the cutoff plus one rows. A
+    null id takes the distributed path, whose joins drop it.
     """
-    pdf = df.limit(cap + 1).toPandas()
-    if len(pdf) > cap or pdf.isna().to_numpy().any():
+    pdf = df.limit(DRIVER_LOOP_MAX_EDGES + 1).toPandas()
+    if len(pdf) > DRIVER_LOOP_MAX_EDGES or pdf.isna().to_numpy().any():
         return None
     return pdf
+
+
+def _probe_pairs(edges_df: DataFrame):
+    """The probe of the loops over undirected pairs (``bfs_hops``,
+    ``kcore``, ``dedup_clusters``). Returns the caller's (id_a, id_b)
+    pairs, lazily checkpointed once (under AQE the call runs their
+    build's shuffles), and, when ``_driver_rows`` admits them, the
+    pairs doubled on the driver as (src, dst) id arrays, else None.
+    A declined probe leaves the doubled edge list to ``_doubled_edges``
+    over the same checkpoint, so the edge build runs once either way.
+    """
+    und = edges_df.select("id_a", "id_b").localCheckpoint(eager=False)
+    rows = _driver_rows(und)
+    if rows is None:
+        return und, None
+    a, b = rows["id_a"].to_numpy(), rows["id_b"].to_numpy()
+    return und, (np.concatenate([a, b]), np.concatenate([b, a]))
+
+
+def _pair_type(und: DataFrame):
+    """The id type of the doubled edge list over ``und``: the union of its
+    id_a and id_b columns, resolved without building it."""
+    return und.select("id_a").union(und.select("id_b")).schema[0].dataType
+
+
+def _doubled_edges(und: DataFrame, key: str) -> DataFrame:
+    """The checkpointed pairs ``und`` as (src, dst) in both directions,
+    partitioned on ``key`` and lazily checkpointed once: the edge list
+    of the distributed rounds."""
+    e = und.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+    return (
+        e.unionByName(e.select(F.col("dst").alias("src"),
+                               F.col("src").alias("dst")))
+        .repartition(key)
+        .localCheckpoint(eager=False)
+    )
 
 
 def _local_frame(spark, schema, *cols) -> DataFrame:
@@ -226,9 +266,8 @@ def pagerank(edges_df: DataFrame, nodes_df: DataFrame, n_iter: int, base: int,
         .select("src", "dst", "w", "deg")
         .localCheckpoint(eager=False)
     )
-    e = _driver_rows(edges, DRIVER_LOOP_MAX_EDGES)
-    nodes = None if e is None else _driver_rows(
-        nodes_df.select("node"), DRIVER_LOOP_MAX_EDGES)
+    e = _driver_rows(edges)
+    nodes = None if e is None else _driver_rows(nodes_df.select("node"))
     if nodes is not None:
         ids, (node, src, dst) = _dense_ids(
             nodes["node"].to_numpy(), e["src"].to_numpy(),
@@ -275,19 +314,6 @@ def pagerank(edges_df: DataFrame, nodes_df: DataFrame, n_iter: int, base: int,
     return ranks
 
 
-def _doubled_edges(edges_df: DataFrame) -> DataFrame:
-    """Undirected (id_a, id_b) pairs as (src, dst) in both directions,
-    partitioned on ``src`` and lazily checkpointed once."""
-    und = edges_df.select(F.col("id_a").alias("src"),
-                          F.col("id_b").alias("dst"))
-    return (
-        und.unionByName(und.select(F.col("dst").alias("src"),
-                                   F.col("src").alias("dst")))
-        .repartition("src")
-        .localCheckpoint(eager=False)
-    )
-
-
 def bfs_hops(edges_df: DataFrame, sources_df: DataFrame,
              rounds: int) -> DataFrame:
     """Bounded multi-source BFS: exact hop distance from the nearest
@@ -302,26 +328,24 @@ def bfs_hops(edges_df: DataFrame, sources_df: DataFrame,
     frontier drains cannot change any emitted row. A source id listed
     twice is emitted twice with hop 0.
 
-    The doubled edge list is lazily checkpointed once, pre-partitioned
-    on the probe key; under AQE that call runs its shuffle. When it and
-    the source list each hold at most ``DRIVER_LOOP_MAX_EDGES`` rows,
-    they come back in one Arrow collect each and the rounds expand the
-    frontier over a CSR adjacency on the driver. Above that, each round
-    is a node-keyed equi-join + distinct + anti-join whose
-    ``loop_checkpoint`` call runs the round's shuffle stages, with an
-    ``isEmpty`` probe per round for the early stop.
+    The pairs are probed by ``_probe_pairs``. When they and the source
+    list each hold at most ``DRIVER_LOOP_MAX_EDGES`` rows, they come
+    back in one Arrow collect each and the rounds expand the frontier
+    over a CSR adjacency on the driver. Above that, the doubled edge
+    list is lazily checkpointed once, pre-partitioned on the probe key
+    (under AQE that call runs its shuffle), and each round is a
+    node-keyed equi-join + distinct + anti-join whose ``loop_checkpoint``
+    call runs the round's shuffle stages, with an ``isEmpty`` probe per
+    round for the early stop.
 
     ``edges_df``: undirected (id_a, id_b) pairs; ``sources_df``: (id)
     seed set. Returns (id, hops) with hops in [0, rounds].
     """
-    edges = _doubled_edges(edges_df)
-    e = _driver_rows(edges, DRIVER_LOOP_MAX_EDGES)
-    seeds = None if e is None else _driver_rows(
-        sources_df.select("id"), DRIVER_LOOP_MAX_EDGES)
+    und, pairs = _probe_pairs(edges_df)
+    seeds = None if pairs is None else _driver_rows(sources_df.select("id"))
     if seeds is not None:
         seed_ids = seeds["id"].to_numpy()
-        ids, (seed, src, dst) = _dense_ids(
-            seed_ids, e["src"].to_numpy(), e["dst"].to_numpy())
+        ids, (seed, src, dst) = _dense_ids(seed_ids, *pairs)
         order = np.argsort(src)
         nbr = dst[order]
         start = np.searchsorted(src[order], np.arange(len(ids) + 1))
@@ -338,14 +362,15 @@ def bfs_hops(edges_df: DataFrame, sources_df: DataFrame,
                 break
             hops[frontier] = r
         reached = np.flatnonzero(hops > 0)
-        id_type = sources_df.select("id").unionByName(
-            edges.select(F.col("dst").alias("id"))).schema["id"]
+        id_type = sources_df.select("id").union(und.select("id_a")).union(
+            und.select("id_b")).schema["id"]
         return _local_frame(
             edges_df.sparkSession,
             StructType([id_type, StructField("hops", LongType())]),
             np.concatenate([seed_ids, ids[reached]]),
             np.concatenate([np.zeros(len(seed_ids), np.int64),
                             hops[reached]]))
+    edges = _doubled_edges(und, "src")
     dist = sources_df.select(
         "id", F.lit(0).cast("long").alias("hops")).localCheckpoint(
         eager=False)
@@ -372,21 +397,19 @@ def kcore(edges_df: DataFrame, k: int, rounds: int) -> DataFrame:
     oracle is ``rounds`` unrolled degree-filter CTEs, no recursion.
     Degrees count edge rows, so a duplicate edge counts twice.
 
-    The doubled edge list is lazily checkpointed once; under AQE that
-    call runs its shuffle. When it holds at most
-    ``DRIVER_LOOP_MAX_EDGES`` rows it comes back in one Arrow collect
+    The pairs are probed by ``_probe_pairs``. When they hold at most
+    ``DRIVER_LOOP_MAX_EDGES`` rows they come back in one Arrow collect
     and each peel is an ``np.bincount`` degree pass over dense node ids.
-    Above that, each round is one node-keyed degree aggregate + two
-    semi-joins pruning edges whose either endpoint fell out — O(E)
-    shuffle — and its ``loop_checkpoint`` call runs the round's shuffle
-    stages. Returns (node, deg): every surviving node with its
-    within-core degree.
+    Above that, the doubled edge list is lazily checkpointed once (under
+    AQE that call runs its shuffle), and each round is one node-keyed
+    degree aggregate + two semi-joins pruning edges whose either
+    endpoint fell out — O(E) shuffle — whose ``loop_checkpoint`` call
+    runs the round's shuffle stages. Returns (node, deg): every
+    surviving node with its within-core degree.
     """
-    e = _doubled_edges(edges_df)
-    rows = _driver_rows(e, DRIVER_LOOP_MAX_EDGES)
-    if rows is not None:
-        ids, (src, dst) = _dense_ids(rows["src"].to_numpy(),
-                                     rows["dst"].to_numpy())
+    und, pairs = _probe_pairs(edges_df)
+    if pairs is not None:
+        ids, (src, dst) = _dense_ids(*pairs)
         alive = np.ones(len(src), bool)
         for _ in range(rounds):
             keep = np.bincount(src[alive], minlength=len(ids)) >= k
@@ -395,9 +418,10 @@ def kcore(edges_df: DataFrame, k: int, rounds: int) -> DataFrame:
         core = np.flatnonzero(deg)
         return _local_frame(
             edges_df.sparkSession,
-            StructType([StructField("node", e.schema["src"].dataType),
+            StructType([StructField("node", _pair_type(und)),
                         StructField("deg", LongType())]),
             ids[core], deg[core].astype(np.int64))
+    e = _doubled_edges(und, "src")
     for _ in range(rounds):
         keep = (
             e.groupBy("src").agg(F.count("*").alias("deg"))

@@ -34,12 +34,9 @@ def _dist2(lon_col, lat_col, qlon_col, qlat_col):
     return dx * dx + dy * dy
 
 
-def knn_broadcast(points_df, queries_pdf: pd.DataFrame, k: int):
-    """Exact kNN via broadcast cross join + windowed top-k."""
-    spark = points_df.sparkSession
-    q = spark.createDataFrame(
-        queries_pdf.rename(columns={"lon": "q_lon", "lat": "q_lat"})
-    )
+def _broadcast_topk(points_df, q, k: int):
+    """The ``k`` nearest points of every query of the small frame ``q``
+    (query_id, q_lon, q_lat): broadcast cross join + windowed top-k."""
     pairs = points_df.crossJoin(F.broadcast(q)).withColumn(
         "dist2", _dist2("lon", "lat", "q_lon", "q_lat")
     )
@@ -51,6 +48,14 @@ def knn_broadcast(points_df, queries_pdf: pd.DataFrame, k: int):
         .filter(F.col("rank") <= k)
         .select("query_id", "rank", "point_id", "dist2")
     )
+
+
+def knn_broadcast(points_df, queries_pdf: pd.DataFrame, k: int):
+    """Exact kNN via broadcast cross join + windowed top-k."""
+    q = points_df.sparkSession.createDataFrame(
+        queries_pdf.rename(columns={"lon": "q_lon", "lat": "q_lat"})
+    )
+    return _broadcast_topk(points_df, q, k)
 
 
 def knn_distributed(points_df, queries_df, k: int):
@@ -157,15 +162,7 @@ def knn_distributed(points_df, queries_df, k: int):
     uncertified_q = queries_df.join(
         F.broadcast(certified_ids), "query_id", "left_anti"
     ).selectExpr("query_id", "lat AS q_lat", "lon AS q_lon")
-    fb_pairs = points_df.crossJoin(F.broadcast(uncertified_q)).withColumn(
-        "dist2", _dist2("lon", "lat", "q_lon", "q_lat")
-    )
-    fallback = (
-        fb_pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "point_id", "dist2")
-    )
-    return certified.unionByName(fallback)
+    return certified.unionByName(_broadcast_topk(points_df, uncertified_q, k))
 
 
 def knn_geo(points_df, queries_df, k: int):

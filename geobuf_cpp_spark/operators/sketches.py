@@ -67,15 +67,17 @@ def _bucket(tok: Column, row: int, width: int) -> Column:
     return (lo + hi * 256) % width
 
 
-def _tokens(docs_df: DataFrame) -> DataFrame:
+def _tokens(docs_df: DataFrame, *keys: str) -> DataFrame:
+    """(keys..., tok): one row per non-empty space-separated token of
+    ``text``, carrying the grouping columns ``keys`` of its document."""
     # spread before the explode: every sketch pays md5/conv/regex per
     # TOKEN map-side, so a single-split corpus scan would serialize the
     # whole build on one core (no-op once scan splits >= parallelism)
     from ..plans.partitioning import spread
 
     return (
-        spread(docs_df.select("text")).select(
-            F.explode(F.split(F.col("text"), " ")).alias("tok")
+        spread(docs_df.select(*keys, "text")).select(
+            *keys, F.explode(F.split(F.col("text"), " ")).alias("tok")
         ).filter(F.col("tok") != "")
     )
 
@@ -246,19 +248,13 @@ def kmv_sketch_grouped(docs_df: DataFrame, group_col: str = "lang",
     per-group WindowGroupLimit (partitioned window -> map-side partial
     limit before the shuffle; no global ordering anywhere).
     """
-    from ..plans.partitioning import spread
-
-    toks = spread(docs_df.select(group_col, "text")).select(
-        F.col(group_col).alias("grp"),
-        F.explode(F.split(F.col("text"), " ")).alias("tok"),
-    ).filter(F.col("tok") != "")
-    hashed = toks.select(
-        "grp", md5_low64(F.col("tok")).alias("hash_val")).distinct()
-    w = Window.partitionBy("grp").orderBy("hash_val")
+    hashed = _tokens(docs_df, group_col).select(
+        group_col, md5_low64(F.col("tok")).alias("hash_val")).distinct()
+    w = Window.partitionBy(group_col).orderBy("hash_val")
     return (
         hashed.withColumn("rank", F.row_number().over(w).cast("int"))
         .filter(F.col("rank") <= k)
-        .select(F.col("grp").alias(group_col), "rank", "hash_val")
+        .select(group_col, "rank", "hash_val")
     )
 
 
@@ -372,20 +368,12 @@ def hll_registers(docs_df: DataFrame) -> DataFrame:
     caller — registers are the portable artifact (exactly how HLLs
     ship between systems).
     """
-    assert HLL_B == 8, "bucket split is the fixed byte-8 contract"
-    toks = _tokens(docs_df)
-    bucket = "CAST(conv(substring(h, 17, 2), 16, 10) AS INT)"
-    rho = sql_hll_rho("h")
-    return (
-        toks.select(F.md5(F.col("tok").cast("binary")).alias("h"))
-        .selectExpr(f"{bucket} AS bucket", f"{rho} AS rho")
-        .groupBy("bucket")
-        .agg(F.max("rho").cast("int").alias("register"))
-    )
+    return _hll(docs_df)
 
 
 def hll_registers_grouped(docs_df: DataFrame) -> DataFrame:
-    """Per-group HLL register tables — (group, bucket, register).
+    """Per-group HLL register tables — (grp, bucket, register), one per
+    ``lang``.
 
     The grouped sibling of ``hll_registers`` (as ``kmv_sketch_grouped``
     is to ``kmv_sketch``): one 256-register sketch per group from a
@@ -394,19 +382,20 @@ def hll_registers_grouped(docs_df: DataFrame) -> DataFrame:
     at 100 TB the shuffle is (n_groups x 256) rows regardless of corpus
     size.
     """
-    assert HLL_B == 8, "bucket split is the fixed byte-8 contract"
-    from ..plans.partitioning import spread
+    return _hll(docs_df.withColumnRenamed("lang", "grp"), "grp")
 
-    toks = spread(docs_df.select("lang", "text")).select(
-        F.col("lang").alias("grp"),
-        F.explode(F.split(F.col("text"), " ")).alias("tok"),
-    ).filter(F.col("tok") != "")
+
+def _hll(docs_df: DataFrame, *keys: str) -> DataFrame:
+    """(keys..., bucket, register): the HLL registers of each group of
+    ``keys``; with no key, of the whole corpus."""
+    assert HLL_B == 8, "bucket split is the fixed byte-8 contract"
     bucket = "CAST(conv(substring(h, 17, 2), 16, 10) AS INT)"
     rho = sql_hll_rho("h")
     return (
-        toks.select("grp", F.md5(F.col("tok").cast("binary")).alias("h"))
-        .selectExpr("grp", f"{bucket} AS bucket", f"{rho} AS rho")
-        .groupBy("grp", "bucket")
+        _tokens(docs_df, *keys)
+        .select(*keys, F.md5(F.col("tok").cast("binary")).alias("h"))
+        .selectExpr(*keys, f"{bucket} AS bucket", f"{rho} AS rho")
+        .groupBy(*keys, "bucket")
         .agg(F.max("rho").cast("int").alias("register"))
     )
 
@@ -511,13 +500,22 @@ def ams_sketch(docs_df: DataFrame) -> DataFrame:
     partial aggregation map-side, a ``AMS_ROWS``-value exchange total. The
     final unpivot is driver-free ``stack`` over one row.
     """
-    toks = _tokens(docs_df).select(
-        _low16(F.col("tok")).alias("h16"))
-    wide = toks.agg(*_ams_sign_sums(AMS_ROWS))
+    return _ams(docs_df)
+
+
+def _ams(docs_df: DataFrame, *keys: str) -> DataFrame:
+    """(keys..., r, counter): the AMS counters of each group of ``keys``;
+    with no key, of the whole corpus."""
+    wide = (
+        _tokens(docs_df, *keys)
+        .select(*keys, _low16(F.col("tok")).alias("h16"))
+        .groupBy(*keys).agg(*_ams_sign_sums(AMS_ROWS))
+    )
     stack = ", ".join(f"{r}, c{r}" for r in range(AMS_ROWS))
     return wide.selectExpr(
-        f"stack({AMS_ROWS}, {stack}) AS (r, counter)"
-    ).select(F.col("r").cast("int").alias("r"),
+        *keys, f"stack({AMS_ROWS}, {stack}) AS (r, counter)"
+    ).select(*keys,
+             F.col("r").cast("int").alias("r"),
              F.col("counter").cast("long").alias("counter"))
 
 
@@ -554,22 +552,7 @@ def ams_sketch_grouped(docs_df: DataFrame) -> DataFrame:
     aggregate (map-side partials, exchange bounded by groups), the
     unpivot is a per-row ``stack``.
     """
-    from ..plans.partitioning import spread
-
-    toks = (
-        spread(docs_df.select("source", "text")).select(
-            "source",
-            F.explode(F.split(F.col("text"), " ")).alias("tok"),
-        ).filter(F.col("tok") != "")
-        .select("source", _low16(F.col("tok")).alias("h16"))
-    )
-    wide = toks.groupBy("source").agg(*_ams_sign_sums(AMS_ROWS))
-    stack = ", ".join(f"{r}, c{r}" for r in range(AMS_ROWS))
-    return wide.selectExpr(
-        "source", f"stack({AMS_ROWS}, {stack}) AS (r, counter)"
-    ).select("source",
-             F.col("r").cast("int").alias("r"),
-             F.col("counter").cast("long").alias("counter"))
+    return _ams(docs_df, "source")
 
 
 def _mg_summaries(toks: DataFrame, k: int) -> DataFrame:

@@ -17,17 +17,15 @@ def spark():
 @pytest.fixture
 def loop_paths(monkeypatch):
     """Iterate a test body over both paths of the bounded graph loops
-    (pagerank, bfs_hops, kcore, dedup_clusters): first the default
-    edge cutoff, under which small test graphs run on the driver, then
-    a cutoff of 0, which sends every graph through the distributed
+    (pagerank, bfs_hops, kcore, dedup_clusters, grid_cluster): first the
+    default cutoff, under which small test graphs run on the driver,
+    then a cutoff of 0, which sends every graph through the distributed
     rounds. Yields the cutoff in force."""
-    import geobuf_cpp_spark.operators.dedup as D
     import geobuf_cpp_spark.operators.graph as G
 
     def paths():
         for cap in (G.DRIVER_LOOP_MAX_EDGES, 0):
             monkeypatch.setattr(G, "DRIVER_LOOP_MAX_EDGES", cap)
-            monkeypatch.setattr(D, "DRIVER_LOOP_MAX_EDGES", cap)
             yield cap
 
     return paths

@@ -877,7 +877,7 @@ def test_term_cooccurrence_hand_counts(spark):
     }
 
 
-def test_grid_cluster_driver_and_distributed_paths_agree(spark, monkeypatch):
+def test_grid_cluster_driver_and_distributed_paths_agree(spark, loop_paths):
     """The bounded driver union-find fast path and the distributed
     pointer-jumping fallback produce identical labels on the same
     clustered point cloud."""
@@ -893,11 +893,9 @@ def test_grid_cluster_driver_and_distributed_paths_agree(spark, monkeypatch):
                         clon + rng.uniform(-0.4, 0.4)))
     df = spark.createDataFrame(pts, "point_id long, lat double, lon double")
 
-    fast = {(r["cell"], r["n_points"], r["cluster_id"])
-            for r in C.grid_cluster(df, 7, 2).collect()}
-    monkeypatch.setattr(C, "GRID_UF_MAX_CELLS", 0)
-    slow = {(r["cell"], r["n_points"], r["cluster_id"])
-            for r in C.grid_cluster(df, 7, 2).collect()}
+    fast, slow = [{(r["cell"], r["n_points"], r["cluster_id"])
+                   for r in C.grid_cluster(df, 7, 2).collect()}
+                  for _ in loop_paths()]
     assert fast == slow and len(fast) > 0
 
 

@@ -1215,10 +1215,10 @@ def test_dedup_clusters_paths_agree(spark, loop_paths):
 
 def test_probe_does_not_rerun_the_edge_build(spark, monkeypatch):
     """A probe that declines (cutoff below the graph size) reads the
-    loop's checkpointed edge list. It fires exactly one job more than
-    the same call with the probe stubbed out, and the operator reads its
-    input edges as often as one build of that edge list does (counted
-    by an accumulator in the input's map), so the edge build is not run
+    loop's checkpointed pairs. It fires exactly one job more than the
+    same call with the probe stubbed out, and the operator reads its
+    input edges as often as one pass over them does (counted by an
+    accumulator in the input's map), so the edge build is not run
     twice."""
     import geobuf_cpp_spark.operators.dedup as D
     import geobuf_cpp_spark.operators.graph as G
@@ -1251,18 +1251,48 @@ def test_probe_does_not_rerun_the_edge_build(spark, monkeypatch):
             sc.setLocalProperty("spark.jobGroup.id", None)
         return len(sc.statusTracker().getJobIdsForGroup(group)), reads.value
 
-    G._doubled_edges(edges).count()
+    edges.count()
     one_build = reads.value
     for name in ops:
         monkeypatch.setattr(G, "DRIVER_LOOP_MAX_EDGES", 1)
-        monkeypatch.setattr(D, "DRIVER_LOOP_MAX_EDGES", 1)
         probed, probed_reads = run(name, f"probe-{name}")
-        for mod in (G, D):
-            monkeypatch.setattr(mod, "_driver_rows", lambda df, cap: None)
+        monkeypatch.setattr(G, "_driver_rows", lambda df: None)
         unprobed, _ = run(name, f"no-probe-{name}")
         monkeypatch.undo()
         assert probed == unprobed + 1, (name, probed, unprobed)
         assert probed_reads == one_build, (name, probed_reads, one_build)
+
+
+def test_driver_paths_build_no_doubled_edge_list(spark, monkeypatch):
+    """Below the cutoff, bfs_hops, kcore and dedup_clusters run from the
+    probed pairs alone: neither ``_doubled_edges`` nor any repartition
+    (the distributed rounds' edge-list layout) is called."""
+    from pyspark.sql import DataFrame
+
+    import geobuf_cpp_spark.operators.dedup as D
+    import geobuf_cpp_spark.operators.graph as G
+
+    edges = spark.createDataFrame([(1, 2), (2, 3), (3, 1), (3, 4), (7, 8)],
+                                  "id_a long, id_b long")
+    docs = spark.createDataFrame([(i,) for i in range(1, 10)], "doc_id long")
+    seeds = spark.createDataFrame([(1,)], "id long")
+
+    def forbid(name):
+        def called(*args, **kwargs):
+            raise AssertionError(f"a driver path called {name}")
+        return called
+
+    monkeypatch.setattr(G, "_doubled_edges", forbid("_doubled_edges"))
+    monkeypatch.setattr(D, "_doubled_edges", forbid("_doubled_edges"),
+                        raising=False)
+    monkeypatch.setattr(DataFrame, "repartition", forbid("repartition"))
+    hops = sorted(map(tuple, G.bfs_hops(edges, seeds, 2).collect()))
+    core = sorted(map(tuple, G.kcore(edges, 2, 3).collect()))
+    clusters = dict(map(tuple, D.dedup_clusters(docs, edges).collect()))
+    assert hops == [(1, 0), (2, 1), (3, 1), (4, 2)]
+    assert core == [(1, 2), (2, 2), (3, 2)]
+    assert clusters == {1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 6: 6, 7: 7, 8: 7,
+                        9: 9}
 
 
 def test_prefix_jaccard_matches_full_join_on_boilerplate_corpus(spark):
@@ -1494,12 +1524,13 @@ def test_cdc_and_prefix_jaccard_partition_invariant(spark):
         assert a == b and a, name
 
 
-def test_grid_cluster_geo_matches_interval_union_find(spark):
+def test_grid_cluster_geo_matches_interval_union_find(spark, loop_paths):
     """Geodetic dense-cell components equal a scalar union-find over the
     same adjacency, derived independently here as INTERVAL OVERLAP (cell
     expanded one own-width each side vs the other band's cells) rather
     than the operator's floor-division enumeration — the two must agree
-    exactly. High-latitude bands exercise unequal adjacent widths."""
+    exactly, on the driver path and on the distributed one. High-latitude
+    bands exercise unequal adjacent widths."""
     from geobuf_cpp_spark.operators.clustering import (
         GEO_CELL_BASE,
         grid_cluster_geo,
@@ -1516,8 +1547,9 @@ def test_grid_cluster_geo_matches_interval_union_find(spark):
             pts.append((pid, ix, iy))
             pid += 1
     df = spark.createDataFrame(pts, "point_id long, ix long, iy long")
-    got = {(row.band, row.cx): (row.n_points, row.cluster_id)
-           for row in grid_cluster_geo(df, r, min_pts).collect()}
+    got = [{(row.band, row.cx): (row.n_points, row.cluster_id)
+            for row in grid_cluster_geo(df, r, min_pts).collect()}
+           for _ in loop_paths()]
 
     from collections import Counter
     cnt = Counter((iy // r, ix // widths[iy // r]) for _, ix, iy in pts)
@@ -1548,7 +1580,7 @@ def test_grid_cluster_geo_matches_interval_union_find(spark):
                     union((b1, c1), (bb, c2))
     expect = {c: (n, find(c)[0] * GEO_CELL_BASE + find(c)[1])
               for c, n in dense.items()}
-    assert got == expect and len(dense) > 10
+    assert got == [expect, expect] and len(dense) > 10
     # the fixture must actually exercise a cross-band merge
     assert any(find(c)[0] != c[0] for c in dense)
 
