@@ -26,6 +26,29 @@ from pyspark.sql import DataFrame, SparkSession
 _MEMO: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 _MEMO_CAP = 512
 
+# Entries of Spark's LRU cache of Janino-compiled generated classes
+# (`spark.sql.codegen.cache.maxEntries`, a static conf, default 100).
+# Each gate call builds a fresh plan, but equal plans generate equal
+# code, so a repeated call finds its classes in the cache while the
+# cache holds the working set. One round of the 15 `gates_sf0.01` gates
+# generates about 179 classes and one pass of all 183 gates about 1,870
+# distinct ones, so at the default every round evicts and recompiles.
+# Measured on 4 cores (local[4], 15 GiB host) at sf0.01 in one session,
+# compiles counted by `CodegenMetrics.METRIC_COMPILATION_TIME`:
+#
+#   gates  cache entries  compiles per round    time      metaspace
+#   15     100 (default)  173, every round      5.45 s *
+#   15     larger         2-6 after the first   4.12 s *
+#   183    100 (default)  about 2,520 each      71.6 s ** 190 MiB
+#   183    unbounded      1,815, then 52        52.1 s ** 205 MiB
+#
+#   * sum of each gate's fastest call; ** the second round
+#
+# A class averages about 3 KB of bytecode: holding the whole working set
+# costs about 15 MiB of metaspace. The cap is the next power of two
+# above twice that set.
+CODEGEN_CACHE_ENTRIES = 4096
+
 
 def _stamp(sf_dir: str | None):
     """The modification times of the table entries under ``sf_dir``: an
@@ -145,6 +168,9 @@ def get_spark(
         # overflow raises (ARITHMETIC_OVERFLOW, CAST_OVERFLOW) instead of
         # wrapping; the 4.x default, pinned so every plan runs one way
         .config("spark.sql.ansi.enabled", "true")
+        # static and JVM-wide: only a session that starts the JVM sets it
+        .config("spark.sql.codegen.cache.maxEntries",
+                str(CODEGEN_CACHE_ENTRIES))
         # local[n] runs EVERY executor thread inside the driver JVM, so
         # the driver heap is the whole cluster's execution+storage
         # memory: 8g across 32 concurrent tasks (~250MB each) showed

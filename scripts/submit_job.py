@@ -10,7 +10,12 @@ scratch dir; no repo checkout on sys.path):
     PY
     cp scripts/submit_job.py /tmp/ && cd /tmp && \
     /opt/spark/bin/spark-submit --master 'local[8]' \
+        --conf spark.sql.codegen.cache.maxEntries=4096 \
         --py-files /tmp/engine.zip /tmp/submit_job.py 20000
+
+The session exists before this script runs, so static settings such as
+the codegen class cache size (``session.CODEGEN_CACHE_ENTRIES``, see
+SCALING.md) come from ``--conf``.
 
 Prints one JSON line with pages/sec and the PIP match count; exit 0
 means the submit path (zip import on driver AND executors, pandas UDFs

@@ -1213,6 +1213,23 @@ def test_dedup_clusters_paths_agree(spark, loop_paths):
     assert driver[1] == [("doc_id", "bigint"), ("cluster_id", "bigint")]
 
 
+def test_small_driver_results_are_local_relations(spark):
+    """Under Arrow, ``createDataFrame(pandas, schema)`` keeps a frame
+    below ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB by
+    default) on the driver as a ``LocalRelation``: a small graph's
+    driver-path result of ``kcore`` or ``bfs_hops`` is read back from
+    the plan, not from an RDD."""
+    from geobuf_cpp_spark.operators.graph import bfs_hops, kcore
+
+    edges = spark.createDataFrame(
+        [(a, b) for a in range(4) for b in range(a + 1, 4)],
+        "id_a long, id_b long")
+    src = spark.createDataFrame([(0,)], "id long")
+    for df in (kcore(edges, 2, 3), bfs_hops(edges, src, 2)):
+        plan = df._jdf.queryExecution().analyzed().toString()
+        assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+
+
 def test_probe_does_not_rerun_the_edge_build(spark, monkeypatch):
     """A probe that declines (cutoff below the graph size) reads the
     loop's checkpointed pairs. It fires exactly one job more than the

@@ -216,6 +216,58 @@ def test_knuth_hash_defined_at_bigint_boundaries(spark):
     assert got == want
 
 
+def test_ship_priority_revenue_at_the_bigint_boundary(spark):
+    """The cents x basis-point revenue of ``SHIP_PRIORITY_SQL`` over
+    one-row tables: a line whose rev_c4 product lies 207 below the BIGINT
+    maximum comes back exactly from the ANSI Spark session and from
+    DuckDB running the oracle text; one cent step (16 at this magnitude
+    of a double) further, both engines raise on the multiply."""
+    import duckdb
+    from pyspark.errors import ArithmeticException
+
+    import __spark_entry__ as E
+
+    assert E.oracle_sql()["ship_priority"] == E.SHIP_PRIORITY_SQL
+    inside, past = 970881267037344.8, 970881267037345.0
+    # ROUND(price * 100) is exact: at this magnitude every double is an
+    # integer; the discount factor is 100 - ROUND(0.05 * 100) = 95
+    assert round(inside * 100) * 95 == 2**63 - 1 - 207
+    assert round(past * 100) * 95 > 2**63 - 1
+
+    def spark_rows(price):
+        s = spark.newSession()  # its own temp views
+        s.createDataFrame([(1, price, 0.05)], "l_orderkey long, "
+                          "l_extendedprice double, l_discount double"
+                          ).createOrReplaceTempView("lineitem")
+        s.createDataFrame([(1, 7, "1-URGENT")], "o_orderkey long, "
+                          "o_custkey long, o_orderpriority string"
+                          ).createOrReplaceTempView("orders")
+        s.createDataFrame([(7, "BUILDING")], "c_custkey long, "
+                          "c_mktsegment string"
+                          ).createOrReplaceTempView("customer")
+        return [tuple(r) for r in s.sql(E.SHIP_PRIORITY_SQL).collect()]
+
+    def duckdb_rows(price):
+        con = duckdb.connect()
+        con.execute("CREATE TABLE lineitem AS SELECT 1::BIGINT l_orderkey, "
+                    f"{price!r}::DOUBLE l_extendedprice, "
+                    "0.05::DOUBLE l_discount")
+        con.execute("CREATE TABLE orders AS SELECT 1::BIGINT o_orderkey, "
+                    "7::BIGINT o_custkey, '1-URGENT' o_orderpriority")
+        con.execute("CREATE TABLE customer AS SELECT 7::BIGINT c_custkey, "
+                    "'BUILDING' c_mktsegment")
+        return con.execute(E.oracle_sql()["ship_priority"]).fetchall()
+
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    want = [(1, "1-URGENT", 2**63 - 1 - 207, 1)]
+    assert spark_rows(inside) == want
+    assert duckdb_rows(inside) == want
+    with pytest.raises(ArithmeticException, match="ARITHMETIC_OVERFLOW"):
+        spark_rows(past)
+    with pytest.raises(duckdb.OutOfRangeException, match="Overflow"):
+        duckdb_rows(past)
+
+
 def test_table_df_memoizes_plan_only_and_respects_sf_switch(spark, tmp_path):
     """table_df caches the lazy reader per (session, dir, table) — same
     object back, no data materialization — and _prep-style re-

@@ -164,6 +164,7 @@ print("RESULT " + json.dumps({
     "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
     "driver_memory": sc.getConf().get("spark.driver.memory"),
     "max_heap": sc._jvm.java.lang.Runtime.getRuntime().maxMemory(),
+    "codegen_cache": spark.conf.get("spark.sql.codegen.cache.maxEntries"),
 }))
 spark.stop()
 """
@@ -172,8 +173,12 @@ spark.stop()
 def test_session_defaults_come_from_the_host():
     """With SPARK_GRAFT_CPUS and SPARK_DRIVER_MEMORY unset, get_spark runs
     one task slot per usable core and gives the driver a quarter of the
-    host's RAM (at least 1g, at most 32g) — the rule perfbench applies."""
+    host's RAM (at least 1g, at most 32g) — the rule perfbench applies.
+    Spark's cache of compiled generated classes holds the engine's
+    working set, ``session.CODEGEN_CACHE_ENTRIES``."""
     import os
+
+    from geobuf_cpp_spark.session import CODEGEN_CACHE_ENTRIES
 
     env = {k: v for k, v in os.environ.items()
            if k not in ("SPARK_GRAFT_CPUS", "SPARK_DRIVER_MEMORY")}
@@ -193,3 +198,48 @@ def test_session_defaults_come_from_the_host():
     assert res["driver_memory"] == f"{gib}g"
     # the setting reaches the JVM: its heap cap is about that size
     assert 0.8 * gib * 2**30 <= res["max_heap"] <= gib * 2**30
+    assert res["codegen_cache"] == str(CODEGEN_CACHE_ENTRIES)
+
+
+JOB_CODEGEN = r"""
+import json, os, shutil, sys, tempfile
+sys.path.insert(0, "perfbench")
+import __spark_entry__ as entry
+from gatesets import GATES
+from geobuf_cpp_spark.session import get_spark
+
+spark = get_spark("codegen_cache")
+spark.sparkContext.setLogLevel("ERROR")
+compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+    .METRIC_COMPILATION_TIME()
+queries = entry.queries()
+counts = []
+with tempfile.TemporaryDirectory() as tmp:
+    for rnd in range(2):
+        d = shutil.copytree(sys.argv[1], os.path.join(tmp, str(rnd)))
+        before = compiles.getCount()
+        for gate in GATES["gates_sf0.01"]:
+            queries[gate](spark, d).write.format("noop").mode("overwrite").save()
+        spark.catalog.clearCache()
+        counts.append(compiles.getCount() - before)
+print("RESULT " + json.dumps(counts))
+spark.stop()
+"""
+
+
+def test_gate_rounds_reuse_compiled_code():
+    """A fresh session runs the 15 ``gates_sf0.01`` gates of perfbench
+    twice, each round over its own copy of the tables (cold engine
+    memos, new plans). Equal plans generate equal code, so the second
+    round finds nearly all of its classes in Spark's codegen cache: it
+    compiles at most 5% as many as the first. At Spark's default of 100
+    entries the first round evicts its own classes and the second
+    compiles about as many again."""
+    out = subprocess.run(
+        [sys.executable, "-c", JOB_CODEGEN, "/root/testdata/sf0.001"],
+        capture_output=True, text=True, timeout=400, cwd=ROOT)
+    lines = [l for l in out.stdout.splitlines() if l.startswith("RESULT ")]
+    assert lines, out.stderr[-2000:]
+    first, second = json.loads(lines[-1][len("RESULT "):])
+    assert first > 100, first
+    assert second <= 0.05 * first, (first, second)
