@@ -253,9 +253,11 @@ def _shared_df(spark: SparkSession, sf_dir: str, key, build,
     # "ckpt": lazy localCheckpoint instead of persist — an
     # InMemoryRelation is an AQE re-planning barrier and carries
     # defaultSizeInBytes stats until materialized, which can flip
-    # every join above it to sort-merge on the cold pass (measured:
-    # prefix_jaccard 4.0s -> 23.7s cold under persist); a
-    # checkpointed RDD keeps real sizes and partitioning.
+    # every join above it to sort-merge on the cold pass; a
+    # checkpointed RDD keeps real sizes and partitioning (measured on
+    # the shingle index, 4 cores: containment at sf0.01 took
+    # 0.42-0.51 s persisted against 0.27-0.38 s checkpointed, 3/3
+    # adjacent sessions).
     return session_memo(
         spark, key,
         lambda: (build().localCheckpoint(eager=False) if how == "ckpt"
@@ -1678,7 +1680,8 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact n-gram Jaccard dedup, all-JVM (no Python stage) — an
     independent Spark implementation gated against the independent DuckDB
     shingle-explosion SQL (the same oracle text minhash_neardup uses).
-    Shared (session memo): `dedup_clusters` takes it as its graph."""
+    The prefix_jaccard gate, same oracle, runs it too. Shared (session
+    memo): `dedup_clusters` takes it as its graph."""
     from geobuf_cpp_spark.operators.dedup import ngram_jaccard_pairs
 
     return _shared_df(
@@ -1688,33 +1691,17 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _shared_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The DISTINCT (doc, shingle) inverted index (session memo): four
-    gates consume it — ngram_jaccard / prefix_jaccard / containment /
-    dedup_clusters — one tokenize+explode+distinct corpus scan instead
-    of four (the sketch-family sharing discipline). Dictionary-encoded
-    (`shingle_sid_sets`): the shingle key is a dense BIGINT id in
-    (df, shingle) order — a bijection, so intersection counts and set
-    sizes are untouched, while every downstream join shuffles 8-byte
-    ids instead of ~25-byte strings and the prefix filter reads its
-    rarest-first order straight off the id (guide §2.3)."""
-    from geobuf_cpp_spark.operators.dedup import shingle_sid_sets
+    """The DISTINCT (doc, shingle) inverted index (session memo): the
+    exact-shingle gates consume it — ngram_jaccard / prefix_jaccard /
+    containment / dedup_clusters — one tokenize+explode+distinct corpus
+    scan instead of one per gate (the sketch-family sharing
+    discipline)."""
+    from geobuf_cpp_spark.operators.dedup import shingle_sets
 
     _prep(spark, sf_dir, "documents")
     return _shared_df(
         spark, sf_dir, "shingles",
-        lambda: shingle_sid_sets(spark.table("documents")), how="ckpt")
-
-
-def q_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AllPairs/PPJoin prefix-filtered EXACT Jaccard: identical output
-    contract to ngram_jaccard (same oracle) from a plan that joins only
-    each doc's rarest n-ceil(t*n)+1 shingles, then verifies candidates
-    exactly — the at-scale shape where boilerplate shingles never
-    join."""
-    from geobuf_cpp_spark.operators.dedup import prefix_jaccard_pairs
-
-    return prefix_jaccard_pairs(
-        _shared_shingles(spark, sf_dir), threshold=MINHASH_THRESHOLD)
+        lambda: shingle_sets(spark.table("documents")), how="ckpt")
 
 
 def q_media_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4086,7 +4073,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ams_f2": q_ams_f2,
         "ams_grouped": q_ams_grouped,
         "user_kcore": q_user_kcore,
-        "prefix_jaccard": q_prefix_jaccard,
+        "prefix_jaccard": q_ngram_jaccard,
         "cell_dwell": q_cell_dwell,
         "source_quality": q_source_quality,
         "robots_filter": q_robots_filter,

@@ -229,11 +229,10 @@ def minhash_lsh_pairs(docs_df, threshold: float):
 def shingle_sets(docs_df):
     """The DISTINCT (doc_id, shingle) inverted index — the shared input
     of every exact-shingle operator here (``ngram_jaccard_pairs``,
-    ``prefix_jaccard_pairs``, ``shingle_containment_pairs``). Built as
-    split -> shingle index explode -> DISTINCT, all-JVM; at scale this
-    is the structure a dedup pipeline materializes ONCE and feeds to
-    each verify/candidate tier; the operators take it (dictionary-encoded
-    by ``shingle_sid_sets``) as their ``ds`` input instead of paying the
+    ``shingle_containment_pairs``). Built as split -> shingle index
+    explode -> DISTINCT, all-JVM; at scale this is the structure a dedup
+    pipeline materializes ONCE and feeds to each verify/candidate tier;
+    the operators take it as their ``ds`` input instead of paying the
     tokenize+explode+distinct scan per operator.
 
     Shingle indexing is 1-based over a literal-space split (empty
@@ -259,96 +258,90 @@ def shingle_sets(docs_df):
     return idx.select("doc_id", shingle.alias("shingle")).distinct()
 
 
-def shingle_sid_sets(docs_df):
-    """Dictionary-encoded ``shingle_sets``: the same DISTINCT
-    (doc_id, shingle) index with every shingle string replaced by a
-    dense BIGINT id assigned in ascending (global doc-frequency, shingle)
-    order. The mapping is a bijection, so every set operator downstream
-    (equi-join intersection counts, set sizes) is unchanged, and it is
-    order-isomorphic to the (df, shingle) total order the AllPairs
-    prefix filter sorts by, so ``prefix_jaccard_pairs`` can order by
-    the id alone — the join/shuffle key narrows from a ~25-byte shingle
-    string to 8 bytes (guide §2.3 "narrower types"), which shrinks
-    every exchange in the family's joins. BIGINT, not INT: a dictionary
-    past 2^31 - 1 shingles would overflow an INT id (CAST_OVERFLOW
-    under ANSI, a silent wrap without it).
+def _shared_shingle_counts(ds):
+    """(id_a, id_b, i, n_a, n_b) for every doc pair that shares a
+    shingle of the (doc_id, shingle) index ``ds``: id_a < id_b, i =
+    shared distinct shingles, n_* = distinct-shingle set sizes, all
+    BIGINT. One shingle equi-join counts the intersection, then two
+    size joins; the exact-shingle operators differ only in the filter
+    they put on top.
 
-    Id assignment is the scalable two-pass zipWithIndex shape: range-
-    partition the dictionary by the sort key, rank within partitions,
-    add per-partition offsets. The only driver-side step collects one
-    row count PER PARTITION (bounded by the shuffle-partition count,
-    never by dictionary size). Range-boundary sampling variance cannot
-    change the ids: partitions tile the (df, shingle) order, so
-    offset + within-partition rank is the exact global dense rank
-    wherever the boundaries fall.
-    """
-    spark = docs_df.sparkSession
-    ds = shingle_sets(docs_df).localCheckpoint(eager=False)
-    freq = ds.groupBy("shingle").agg(F.count("*").alias("df"))
-    nparts = max(2, int(spark.conf.get("spark.sql.shuffle.partitions")))
-    ranked = (
-        freq.repartitionByRange(nparts, "df", "shingle")
-        .withColumn("pid", F.spark_partition_id())
-        .withColumn(
-            "r",
-            F.row_number().over(
-                Window.partitionBy("pid").orderBy("df", "shingle")),
-        )
-        .localCheckpoint(eager=False)
-    )
-    counts = ranked.groupBy("pid").agg(F.count("*").alias("c")).collect()
-    off, acc = {}, 0
-    for row in sorted(counts, key=lambda r: r["pid"]):
-        off[row["pid"]] = acc
-        acc += row["c"]
-    off_df = spark.createDataFrame(
-        [(int(p), int(o)) for p, o in off.items()], "pid int, off long")
-    sid = ranked.join(F.broadcast(off_df), "pid").select(
-        "shingle", (F.col("off") + F.col("r")).cast("long").alias("sid"))
-    return ds.join(sid, "shingle").select(
-        "doc_id", F.col("sid").alias("shingle"))
-
-
-def ngram_jaccard_pairs(ds, threshold: float):
-    """EXACT n-gram (SHINGLE_W-word shingle) Jaccard near-dup pairs —
-    all-JVM, over a (doc_id, shingle) index ``ds`` (``shingle_sets`` or
-    its dictionary-encoded ``shingle_sid_sets``).
-
-    Pure DataFrame composition, no Python stage anywhere: split -> shingle
-    index explode -> DISTINCT shingle set -> shingle equi-join counts the
-    intersection -> set-size joins -> threshold filter. Whole-stage codegen
-    end to end; the inverted shingle index (the ``ds`` table) is the same
-    structure a 100 TB dedup would materialize once and reuse.
-
-    Exactness costs skew-exposure: a boilerplate shingle shared by k docs
-    contributes k^2 join rows (no 64-doc bucket guard here, because
-    dropping it would change the EXACT answer). ``minhash_lsh_pairs`` is
-    the skew-capped approximate-candidate variant of the same contract;
-    at scale run that first and reserve this operator for the verify tier.
-
-    The index is built once and shared with the sibling operators
-    (``prefix_jaccard_pairs``, ``shingle_containment_pairs``).
+    Exactness costs skew-exposure: a boilerplate shingle shared by k
+    docs contributes k^2 join rows (no 64-doc bucket guard here,
+    because dropping it would change the EXACT answer). At sf0.1 the
+    join makes 1.27M pair rows for 256 Jaccard pairs; an AllPairs
+    prefix filter cut that to 137k candidates but measured slower
+    end to end (per-doc array sort, checkpoint and a second verify
+    join), so it is not kept.
     """
     sizes = ds.groupBy("doc_id").agg(F.count("*").alias("n"))
-    left = ds.select(F.col("doc_id").alias("id_a"), "shingle")
-    right = ds.select(F.col("doc_id").alias("id_b"), "shingle")
     inter = (
-        left.join(right, "shingle")
+        ds.select(F.col("doc_id").alias("id_a"), "shingle")
+        .join(ds.select(F.col("doc_id").alias("id_b"), "shingle"),
+              "shingle")
         .filter(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("i"))
     )
     return (
         inter.join(sizes.select(F.col("doc_id").alias("id_a"),
-                                F.col("n").alias("na")), "id_a")
+                                F.col("n").alias("n_a")), "id_a")
         .join(sizes.select(F.col("doc_id").alias("id_b"),
-                           F.col("n").alias("nb")), "id_b")
+                           F.col("n").alias("n_b")), "id_b")
+    )
+
+
+def ngram_jaccard_pairs(ds, threshold: float):
+    """EXACT n-gram (SHINGLE_W-word shingle) Jaccard near-dup pairs —
+    all-JVM, over the (doc_id, shingle) index ``ds`` (``shingle_sets``).
+
+    Pure DataFrame composition, no Python stage anywhere: the inverted
+    index join of ``_shared_shingle_counts`` -> jaccard -> threshold
+    filter. Whole-stage codegen end to end; the inverted shingle index
+    (the ``ds`` table) is the same structure a 100 TB dedup would
+    materialize once and reuse (here it is shared with
+    ``shingle_containment_pairs``). ``minhash_lsh_pairs`` is the
+    skew-capped approximate-candidate variant of the same contract; at
+    scale run that first and reserve this operator for the verify tier.
+    """
+    return (
+        _shared_shingle_counts(ds)
         .withColumn(
             "jaccard",
-            F.col("i") * F.lit(1.0) / (F.col("na") + F.col("nb") - F.col("i")),
+            F.col("i") * F.lit(1.0)
+            / (F.col("n_a") + F.col("n_b") - F.col("i")),
         )
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
+    )
+
+
+def shingle_containment_pairs(ds, thr_num: int, thr_den: int):
+    """EXACT shingle-containment pairs — the ASYMMETRIC near-dup
+    detector Jaccard misses: a short document pasted into a long one
+    has tiny Jaccard (the union is dominated by the long doc) but
+    containment |S(A) cap S(B)| / min(|S(A)|, |S(B)|) ~ 1. This is the
+    partial-copy / quotation / boilerplate-inclusion case a web-corpus
+    dedup pass must catch (Broder's containment measure, the other half
+    of the resemblance/containment pair from the original shingling
+    paper).
+
+    Same inverted-index join as ``ngram_jaccard_pairs``
+    (``_shared_shingle_counts``), with the threshold applied as an
+    exact integer cross-multiplication: keep pairs with
+    inter * thr_den >= thr_num * least(n_a, n_b) — no float division
+    anywhere, so both engines agree bit-for-bit. Same skew exposure as
+    the Jaccard twin (exactness forbids bucket caps); the LSH variants
+    are the scale-out candidate tier.
+
+    Returns (id_a, id_b, i, n_a, n_b), all BIGINT.
+    """
+    return (
+        _shared_shingle_counts(ds)
+        .filter(
+            F.col("i") * int(thr_den)
+            >= int(thr_num) * F.least("n_a", "n_b"))
+        .select("id_a", "id_b", "i", "n_a", "n_b")
     )
 
 
@@ -829,140 +822,4 @@ def cdc_chunk_dedup(docs_df, boundary_mod: int):
             F.sum(F.when(F.col("nd") >= 2, 1).otherwise(0))
             .cast("long").alias("n_dup_chunks"),
         )
-    )
-
-
-def prefix_jaccard_pairs(ds, threshold: float):
-    """EXACT shingle Jaccard pairs via the AllPairs/PPJoin prefix
-    filter — the at-scale plan for the `ngram_jaccard_pairs` contract
-    (identical output, same oracle), over the dictionary-encoded
-    ``shingle_sid_sets`` index ``ds``.
-
-    The full inverted-index join pays k^2 rows for EVERY shingle shared
-    by k docs. The prefix filter pays it only for each doc's RAREST
-    shingles: order the universe by (global doc-frequency, shingle)
-    ascending and keep each doc's first n - ceil(t*n) + 1 shingles; any
-    pair with Jaccard >= t MUST share a prefix shingle (if two sets
-    disagree on all of either prefix, the overlap is at most
-    n - prefix_len = ceil(t*n) - 1 < t*n <= t*|union| — pigeonhole on
-    the common total order), so joining prefixes only is lossless. High-
-    frequency boilerplate shingles land at the order's tail and never
-    join — the skew k^2 blowup the exact variant documents is cut at
-    the source rather than capped. Candidates then pass the size filter
-    (min(n_a,n_b) >= t*max — else J < t even at full containment) and
-    are verified by an exact intersection count restricted to the
-    candidate pair set.
-
-    Per-doc prefix selection is a doc-keyed ARRAY sort (never global:
-    shingle ids are dense ranks of the (df, shingle) order, so each
-    doc's ids are collected and array_sort-ed within one row into its
-    rarest-first prefix order — no window at all. The per-doc limit
-    n - ceil(t*n) + 1 is DYNAMIC, which defeats Spark's
-    WindowGroupLimit rewrite, so a window variant pays a full sort of
-    the joined inverted index by (doc, df, shingle)). Candidates pass
-    the size filter AND the PPJoin positional filter before the
-    distinct, then are verified exactly on the skinny (doc, shingle)
-    index (an array_intersect verify over per-doc shingle arrays was
-    measured SLOWER — it ships both docs' arrays to every pair).
-    """
-    arr = (
-        ds.groupBy("doc_id")
-        .agg(F.array_sort(F.collect_list("shingle")).alias("sh"))
-        .select("doc_id", "sh", F.size("sh").alias("n"))
-        .localCheckpoint(eager=False)
-    )
-    prefix = arr.select(
-        "doc_id", "n",
-        F.posexplode(F.expr(
-            f"slice(sh, 1, CAST(n - ceil({threshold} * n) + 1 AS INT))"
-        )).alias("pos", "shingle"),
-    )
-    pa = prefix.select(F.col("doc_id").alias("id_a"), "shingle",
-                       F.col("n").alias("na"), F.col("pos").alias("pa"))
-    pb = prefix.select(F.col("doc_id").alias("id_b"), "shingle",
-                       F.col("n").alias("nb"), F.col("pos").alias("pb"))
-    # PPJoin positional filter (lossless): common shingles of a pair
-    # matching at (0-based) prefix positions (pa, pb) all lie at or
-    # after those positions in the shared total order, so the overlap
-    # is <= min(na - pa, nb - pb); J >= t needs overlap >=
-    # alpha = ceil(t/(1+t) * (na+nb)) (i integer). Dropping instances
-    # below the bound cannot drop a true pair — the pair's EARLIEST
-    # match carries its loosest bound and survives. Cuts candidates
-    # 309,803 -> 137,133 at sf0.1 before the distinct + verify.
-    alpha = F.ceil(F.lit(threshold / (1.0 + threshold))
-                   * (F.col("na") + F.col("nb")))
-    cands = (
-        pa.join(pb, "shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(F.least("na", "nb")
-                >= F.lit(threshold) * F.greatest("na", "nb"))
-        .filter(F.least(F.col("na") - F.col("pa"),
-                        F.col("nb") - F.col("pb")) >= alpha)
-        .select("id_a", "id_b", "na", "nb")
-        .distinct()
-    )
-    # verify on the SKINNY inverted index, not the doc arrays: shipping
-    # both docs' shingle arrays to every candidate pair moved ~2 orders
-    # of magnitude more bytes than the (doc, shingle) rows do (measured
-    # slower), while the index join + pair-keyed count stays narrow.
-    inter = (
-        cands.join(ds.select(F.col("doc_id").alias("id_a"), "shingle"),
-                   "id_a")
-        .join(ds.select(F.col("doc_id").alias("id_b"), "shingle"),
-              ["id_b", "shingle"])
-        .groupBy("id_a", "id_b", "na", "nb")
-        .agg(F.count("*").alias("i"))
-    )
-    return (
-        inter.withColumn(
-            "jaccard",
-            F.col("i") * F.lit(1.0) / (F.col("na") + F.col("nb") - F.col("i")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
-def shingle_containment_pairs(ds, thr_num: int, thr_den: int):
-    """EXACT shingle-containment pairs — the ASYMMETRIC near-dup
-    detector Jaccard misses: a short document pasted into a long one
-    has tiny Jaccard (the union is dominated by the long doc) but
-    containment |S(A) cap S(B)| / min(|S(A)|, |S(B)|) ~ 1. This is the
-    partial-copy / quotation / boilerplate-inclusion case a web-corpus
-    dedup pass must catch (Broder's containment measure, the other half
-    of the resemblance/containment pair from the original shingling
-    paper).
-
-    Same all-JVM inverted-shingle-index plan as ``ngram_jaccard_pairs``
-    (split -> shingle explode -> DISTINCT sets -> shingle equi-join ->
-    size joins), with the threshold applied as an exact integer
-    cross-multiplication: keep pairs with
-    inter * thr_den >= thr_num * least(n_a, n_b) — no float division
-    anywhere, so both engines agree bit-for-bit. Same skew exposure as
-    the Jaccard twin (exactness forbids bucket caps); the LSH variants
-    are the scale-out candidate tier.
-
-    Returns (id_a, id_b, i, n_a, n_b): id_a < id_b, i = shared
-    distinct shingles, n_* = distinct-shingle set sizes.
-    """
-    sizes = ds.groupBy("doc_id").agg(F.count("*").alias("n"))
-    inter = (
-        ds.select(F.col("doc_id").alias("id_a"), "shingle")
-        .join(ds.select(F.col("doc_id").alias("id_b"), "shingle"),
-              "shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").cast("long").alias("i"))
-    )
-    return (
-        inter.join(sizes.select(F.col("doc_id").alias("id_a"),
-                                F.col("n").alias("n_a")), "id_a")
-        .join(sizes.select(F.col("doc_id").alias("id_b"),
-                           F.col("n").alias("n_b")), "id_b")
-        .filter(
-            F.col("i") * int(thr_den)
-            >= int(thr_num) * F.least("n_a", "n_b"))
-        .select("id_a", "id_b", "i",
-                F.col("n_a").cast("long").alias("n_a"),
-                F.col("n_b").cast("long").alias("n_b"))
     )

@@ -2,7 +2,9 @@
 
 Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin on
 DuckDB over the same parquet tables, then compares row count, column names,
-and an order-insensitive value hash. Usage:
+and an order-insensitive value hash. Each OK / FAIL line ends with the
+gate's Spark seconds (construction plus collect) and DuckDB seconds.
+Usage:
 
     python scripts/check_correctness.py [sf_dir] [query ...]
 """
@@ -12,6 +14,7 @@ from __future__ import annotations
 import hashlib
 import os
 import sys
+import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -66,22 +69,28 @@ def main() -> int:
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        t0 = time.perf_counter()
         try:
             got = fn(spark, sf_dir)
             got_pdf = got.toPandas()
         except Exception as ex:  # noqa: BLE001
-            print(f"FAIL  {name}: spark error: {ex}")
+            print(f"FAIL  {name}: spark error: {ex}  "
+                  f"[spark {time.perf_counter() - t0:.2f}s]")
             failures += 1
             continue
+        spark_s = time.perf_counter() - t0
         if name not in oracles:
             print(f"rows  {name}: {len(got_pdf)} rows (no oracle)")
             continue
+        t0 = time.perf_counter()
         try:
             exp_pdf = con.execute(oracles[name]).fetchdf()
         except Exception as ex:  # noqa: BLE001
-            print(f"FAIL  {name}: duckdb error: {ex}")
+            print(f"FAIL  {name}: duckdb error: {ex}  "
+                  f"[spark {spark_s:.2f}s]")
             failures += 1
             continue
+        secs = f"[spark {spark_s:.2f}s duckdb {time.perf_counter() - t0:.2f}s]"
         problems = []
         if sorted(got_pdf.columns) != sorted(exp_pdf.columns):
             problems.append(
@@ -101,9 +110,9 @@ def main() -> int:
                 problems.append("sample diff:\n" + diff.head(6).to_string())
         if problems:
             failures += 1
-            print(f"FAIL  {name}: " + "; ".join(problems))
+            print(f"FAIL  {name}: " + "; ".join(problems) + f"  {secs}")
         else:
-            print(f"OK    {name}: {len(got_pdf)} rows match")
+            print(f"OK    {name}: {len(got_pdf)} rows match  {secs}")
     spark.stop()
     return 1 if failures else 0
 

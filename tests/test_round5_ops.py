@@ -1312,16 +1312,17 @@ def test_driver_paths_build_no_doubled_edge_list(spark, monkeypatch):
                         9: 9}
 
 
-def test_prefix_jaccard_matches_full_join_on_boilerplate_corpus(spark):
-    """Prefix filter is lossless: on a corpus where every doc shares a
-    boilerplate shingle (the worst case for the full inverted-index
-    join), the prefix-filtered pairs equal the exact full-join pairs,
-    jaccard values included."""
+def test_ngram_jaccard_matches_python_sets_on_boilerplate_corpus(spark):
+    """On a corpus where every doc shares a boilerplate shingle (the
+    worst case for the inverted-index join: every pair meets on it),
+    the exact Jaccard pairs equal a pure-Python set Jaccard over the
+    same 3-word shingles, jaccard values included. A doc shorter than
+    one shingle has an empty set and pairs with nothing."""
+    from itertools import combinations
+
     from geobuf_cpp_spark.operators.dedup import (
         ngram_jaccard_pairs,
-        prefix_jaccard_pairs,
         shingle_sets,
-        shingle_sid_sets,
     )
 
     boiler = "copyright acme corp"
@@ -1331,14 +1332,22 @@ def test_prefix_jaccard_matches_full_join_on_boilerplate_corpus(spark):
         (2, f"{boiler} zeta eta theta iota"),
         (3, f"{boiler} zeta eta theta kappa"),
         (4, f"{boiler} solo unique words here"),
+        (5, "short doc"),
     ]
+    sets = {}
+    for d, text in rows:
+        toks = text.split(" ")
+        sets[d] = {" ".join(toks[i:i + 3]) for i in range(len(toks) - 2)}
+    want = {}
+    for a, b in combinations(sorted(sets), 2):
+        j = len(sets[a] & sets[b]) / len(sets[a] | sets[b])
+        if j >= 0.5:
+            want[(a, b)] = j
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    full = {(r.id_a, r.id_b): r.jaccard
-            for r in ngram_jaccard_pairs(shingle_sets(df), 0.5).collect()}
-    pref = {(r.id_a, r.id_b): r.jaccard
-            for r in prefix_jaccard_pairs(shingle_sid_sets(df), 0.5).collect()}
-    assert full == pref
-    assert (0, 1) in pref and (2, 3) in pref
+    got = {(r.id_a, r.id_b): r.jaccard
+           for r in ngram_jaccard_pairs(shingle_sets(df), 0.5).collect()}
+    assert got == pytest.approx(want)
+    assert set(want) == {(0, 1), (2, 3)}
 
 
 def test_cell_dwell_hand_computed(spark):
@@ -1515,30 +1524,19 @@ def test_ams_grouped_sums_to_global(spark):
     assert acc == glob
 
 
-def test_cdc_and_prefix_jaccard_partition_invariant(spark):
-    """The two order-sensitive new operators must not depend on input
-    partitioning: cdc rebuilds chunk text via sort_array (collect_list
-    alone is order-unstable), prefix selection orders by (df, shingle)
-    within a doc-keyed window. Same corpus at 1 and 13 partitions ->
+def test_cdc_partition_invariant(spark):
+    """cdc_chunk_dedup is order-sensitive and must not depend on input
+    partitioning: it rebuilds chunk text via sort_array (collect_list
+    alone is order-unstable). Same corpus at 1 and 13 partitions ->
     identical rows."""
-    from geobuf_cpp_spark.operators.dedup import (
-        cdc_chunk_dedup,
-        prefix_jaccard_pairs,
-        shingle_sid_sets,
-    )
+    from geobuf_cpp_spark.operators.dedup import cdc_chunk_dedup
 
     rows = [(i, " ".join(f"w{(i * 7 + j) % 40}" for j in range(30)))
             for i in range(24)]
     base = spark.createDataFrame(rows, "doc_id long, text string")
-    ops = {
-        "cdc_chunk_dedup": lambda d: cdc_chunk_dedup(d, 8),
-        "prefix_jaccard_pairs":
-            lambda d: prefix_jaccard_pairs(shingle_sid_sets(d), 0.5),
-    }
-    for name, op in ops.items():
-        a = sorted(map(tuple, op(base.repartition(1)).collect()))
-        b = sorted(map(tuple, op(base.repartition(13)).collect()))
-        assert a == b and a, name
+    a = sorted(map(tuple, cdc_chunk_dedup(base.repartition(1), 8).collect()))
+    b = sorted(map(tuple, cdc_chunk_dedup(base.repartition(13), 8).collect()))
+    assert a == b and a
 
 
 def test_grid_cluster_geo_matches_interval_union_find(spark, loop_paths):
@@ -1866,15 +1864,19 @@ def test_shingle_containment_catches_partial_copy(spark):
     """A short doc pasted into a long one: low Jaccard, high
     containment — the asymmetric detector fires, Jaccard's would not."""
     from geobuf_cpp_spark.operators.dedup import (
-        ngram_jaccard_pairs, shingle_containment_pairs, shingle_sid_sets)
+        ngram_jaccard_pairs, shingle_containment_pairs, shingle_sets)
 
     quote = "alpha beta gamma delta epsilon zeta"
     filler = " ".join(f"x{i}" for i in range(60))
     docs = [(1, quote), (2, filler + " " + quote),
             (3, "unrelated words only here today")]
-    ds = shingle_sid_sets(spark.createDataFrame(docs, "doc_id long, text string"))
+    ds = shingle_sets(spark.createDataFrame(docs, "doc_id long, text string"))
+    cont = shingle_containment_pairs(ds, 4, 5)
+    assert cont.dtypes == [("id_a", "bigint"), ("id_b", "bigint"),
+                           ("i", "bigint"), ("n_a", "bigint"),
+                           ("n_b", "bigint")]
     pairs = {(x.id_a, x.id_b): (x.i, x.n_a, x.n_b)
-             for x in shingle_containment_pairs(ds, 4, 5).collect()}
+             for x in cont.collect()}
     assert (1, 2) in pairs
     i, n_a, n_b = pairs[(1, 2)]
     assert i == n_a == 4  # all 4 shingles of the quote appear in doc 2
