@@ -245,24 +245,15 @@ def _prep(spark: SparkSession, sf_dir: str, *tables: str) -> None:
         table_df(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
-def _shared_df(spark: SparkSession, sf_dir: str, key, build,
-               how: str = "persist"):
+def _shared_df(spark: SparkSession, sf_dir: str, key, build):
     """A derived input that sibling gates share: the first consumer in a
-    session builds and persists it, later ones reuse it — identical
-    results, one corpus scan instead of one per gate."""
-    # "ckpt": lazy localCheckpoint instead of persist — an
-    # InMemoryRelation is an AQE re-planning barrier and carries
-    # defaultSizeInBytes stats until materialized, which can flip
-    # every join above it to sort-merge on the cold pass; a
-    # checkpointed RDD keeps real sizes and partitioning (measured on
-    # the shingle index, 4 cores: containment at sf0.01 took
-    # 0.42-0.51 s persisted against 0.27-0.38 s checkpointed, 3/3
-    # adjacent sessions).
+    session builds it as a lazy local checkpoint, later ones reuse it —
+    identical results, one corpus scan instead of one per gate. A
+    checkpointed RDD keeps real sizes and partitioning for AQE, where an
+    InMemoryRelation carries default size stats until materialized
+    (measured in ``plans.iterate``)."""
     return session_memo(
-        spark, key,
-        lambda: (build().localCheckpoint(eager=False) if how == "ckpt"
-                 else build().persist()),
-        sf_dir)
+        spark, key, lambda: build().localCheckpoint(eager=False), sf_dir)
 
 
 def _gate_dir(name: str) -> str:
@@ -617,9 +608,10 @@ PYRAMID_Z_BASE, PYRAMID_Z_MIN = 6, 3
 
 
 def q_tile_pyramid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-zoom tile pyramid built hierarchically (one corpus scan +
-    child->parent rollups); the oracle recomputes every level directly
-    from the points, proving the hierarchical sums exact."""
+    """Multi-zoom tile pyramid as one aggregation (base tiles grouped
+    once, exploded over every zoom and summed by parent tile); the
+    oracle recomputes every level directly from the points, proving the
+    parent-key sums exact."""
     from geobuf_cpp_spark.operators.tiles import tile_pyramid
 
     return tile_pyramid(
@@ -1701,7 +1693,7 @@ def _shared_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     _prep(spark, sf_dir, "documents")
     return _shared_df(
         spark, sf_dir, "shingles",
-        lambda: shingle_sets(spark.table("documents")), how="ckpt")
+        lambda: shingle_sets(spark.table("documents")))
 
 
 def q_media_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1872,7 +1864,7 @@ def q_segment_crossings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _shared_seg_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The crossing-pair set feeds BOTH segment_crossings (directly) and
-    segment_components (as the CC edge list) — build + persist once per
+    segment_components (as the CC edge list) — build + checkpoint once per
     session, like the sketch family's shared intermediates (cms_sketch
     went 1.51s -> 0.11s under the same memo)."""
     from geobuf_cpp_spark.operators.segments import segment_intersections
@@ -1907,7 +1899,7 @@ BFS_ROUNDS = 6
 
 def q_network_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Network distance to the nearest arterial: bounded multi-source
-    BFS (operators/graph.bfs_hops) over the SAME persisted crossing
+    BFS (operators/graph.bfs_hops) over the SAME checkpointed crossing
     graph the components gate uses — exact hop counts, frontier-delta
     rounds. Oracle: bounded recursive-CTE walk over the banded intersect
     pairs taking min(depth) per node."""

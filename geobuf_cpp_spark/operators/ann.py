@@ -25,7 +25,6 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from ..plans.iterate import loop_checkpoint
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -197,9 +196,9 @@ def hyperplane_lsh_pairs(emb_df, threshold: float):
     cosine verify keeps (id_a < id_b, sim >= threshold). Probabilistic
     recall; the exact operators are
     ``cosine_neardup_pairs`` (broadcast) and ``cosine_neardup_blocked``
-    (distributed). The persisted band table (8 rows/vector) lives
-    until the session ends or the caller runs
-    ``spark.catalog.clearCache()``.
+    (distributed). Both self-join sides read the band table (8
+    rows/vector) through one window exchange, which AQE reuses, so the
+    signature stage runs once with no cache.
     """
     n_planes, n_bands = 32, 8
     rng = np.random.default_rng(42)
@@ -228,11 +227,9 @@ def hyperplane_lsh_pairs(emb_df, threshold: float):
 
     from pyspark.sql import Window
 
-    # persisted: the sign-bit stage would otherwise run once per
-    # self-join side (n_bands rows per vector — tiny)
     bands = emb_df.select("vec_id", "embedding").mapInPandas(
         sigs, "vec_id long, band int, bucket long"
-    ).persist()
+    )
     sized = bands.withColumn(
         "bsize", F.count("*").over(Window.partitionBy("band", "bucket"))
     ).filter(F.col("bsize") <= 256)
@@ -549,10 +546,9 @@ def ivfpq_topk(emb_df, queries_pdf: pd.DataFrame, k: int):
         partial, "query_id long, vec_id long, dist double"
     )
     w = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("vec_id"))
-    # persisted: cand (Q x C rows) feeds BOTH the broadcast distinct-id
-    # subplan and the pairs join — without it the whole ADC pipeline
-    # (codes scan + assignment join + window) re-executes per branch.
-    # Lives until session end / spark.catalog.clearCache().
+    # cand (Q x C rows) feeds both the broadcast distinct-id subplan and
+    # the pairs join; persisted, it lives until session end or
+    # spark.catalog.clearCache()
     cand = (
         partials.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= n_candidates)
@@ -651,8 +647,10 @@ def kmeans_lite(emb_df, k: int, rounds: int, scale: int):
     broadcast join against the k*D centroid rows + one (vid, cid) hash
     agg (rows shuffled: N*D*k — the spill-aware exhaustive baseline;
     the IVF path is the pruned alternative at scale), update is one
-    more map-side-combined agg. No windows; the only per-round driver
-    work is Catalyst planning."""
+    more map-side-combined agg. No windows and no per-round job: the
+    k*D centroid rows of each round stay inline (the rounds are few and
+    every round reads the checkpointed triples, never the table), so
+    all rounds run as one plan."""
     q = (
         emb_df.select(
             F.col("vec_id").alias("vid"),
@@ -692,10 +690,10 @@ def kmeans_lite(emb_df, k: int, rounds: int, scale: int):
                 F.sum("qv").cast("long").alias("qsum"),
             )
         )
-        cent = loop_checkpoint(upd.select(
+        cent = upd.select(
             "cid", "dim",
             (F.expr(f"(qsum + n * {scale}) div n") - scale).alias("cd"),
-        ))
+        )
     return upd.select(
         F.col("cid").alias("cluster_id"),
         F.col("dim").cast("int").alias("dim"), "n", "qsum")

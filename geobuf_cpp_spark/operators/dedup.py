@@ -603,8 +603,7 @@ def simhash_pairs(docs_df, max_hamming: int):
 
     from ..plans.partitioning import spread
 
-    # 4 rows/doc; persisted so the signature stage runs once instead of
-    # once per self-join side (exchange reuse does not cover it)
+    # 4 rows/doc, read by both self-join sides
     bands = spread(docs_df.select("doc_id", "text")).mapInPandas(
         gen, "doc_id long, simhash long, band int, chunk int"
     ).persist()
@@ -714,9 +713,8 @@ def boilerplate_chunks(docs_df, chunk_words: int):
             "))"
         ).alias("chunk_idx", "chunk"),
     ).filter(F.col("chunk") != "")
-    # the hashed chunk stream feeds BOTH the df aggregate and the
-    # join-back scan: lazily checkpoint it so the split+chunk+md5 pass
-    # over the corpus runs once, not once per consumer
+    # the hashed chunk stream feeds both the df aggregate and the
+    # join-back scan
     hashed = chunks.select(
         "doc_id", "source",
         F.md5(F.col("chunk")).alias("h"),

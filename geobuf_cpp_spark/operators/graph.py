@@ -69,7 +69,7 @@ def triangle_counts(edges_df: DataFrame) -> DataFrame:
     Shuffle volume is O(m^(3/2)) worst case — the orientation bound —
     never hub-degree-squared.
     """
-    o = _oriented(edges_df).persist()
+    o = _oriented(edges_df).localCheckpoint(eager=False)
     w1 = o.select(F.col("src").alias("a"), F.col("dst").alias("b"),
                   F.col("dst_key").alias("kb"))
     w2 = o.select(F.col("src").alias("a"), F.col("dst").alias("c"),
@@ -336,7 +336,8 @@ def bfs_hops(edges_df: DataFrame, sources_df: DataFrame,
     (under AQE that call runs its shuffle), and each round is a
     node-keyed equi-join + distinct + anti-join whose ``loop_checkpoint``
     call runs the round's shuffle stages, with an ``isEmpty`` probe per
-    round for the early stop.
+    round for the early stop. The result is the union of the seed
+    frame and the rounds' checkpoints.
 
     ``edges_df``: undirected (id_a, id_b) pairs; ``sources_df``: (id)
     seed set. Returns (id, hops) with hops in [0, rounds].
@@ -384,7 +385,7 @@ def bfs_hops(edges_df: DataFrame, sources_df: DataFrame,
         )
         if nxt.isEmpty():
             break
-        dist = loop_checkpoint(dist.unionByName(nxt))
+        dist = dist.unionByName(nxt)
         frontier = nxt
     return dist
 

@@ -72,18 +72,18 @@ def knn_distributed(points_df, queries_df, k: int):
     This is the shape that serves a large query TABLE without any
     driver-side per-query loop.
 
-    The Q x k top-k intermediate is eagerly ``localCheckpoint``-ed:
-    it feeds the certified output AND the fallback's anti-join, and
-    truncating its lineage there keeps the points table at exactly two
-    scans (candidate join + fallback) while shrinking downstream plan
-    compilation — round 3's persist + aggregate-branch shape cost ~9s
-    cold at sf0.1, mostly in codegen of re-derived branches.
+    The Q x k top-k intermediate is eagerly ``localCheckpoint``-ed
+    (measured in ``plans.iterate``): it feeds the certified output AND
+    the fallback's anti-join, so the points table is scanned at most
+    twice (candidate join + fallback).
 
-    One bounded driver-side scalar (a count over the checkpointed Q x k
-    rows plus an anti-join probe of the query table — O(Q), never O(table))
-    decides whether any query needs the fallback; when none does (the
-    common case at a sane radius) the fallback branch is not built at all,
-    so the certified plan stays a single-scan pipeline.
+    Bounded driver-side probes (an uncertified row of the checkpointed
+    Q x k rows, else the first row of the query table anti-joined with
+    the certified query ids — O(Q), never O(table)) decide whether any
+    query needs the fallback, and that anti-join is the fallback's query
+    set; when no query needs it (the common case at a sane radius) the
+    fallback branch is not built at all, so the certified plan stays a
+    single-scan pipeline.
     """
     from ..functions.cells import sql_ix, sql_iy, sql_ring_cells_grid
 
@@ -118,8 +118,7 @@ def knn_distributed(points_df, queries_df, k: int):
     # Certification rides the SAME partitioning as the top-k window: after
     # the rank cut, a second (unordered) window over query_id yields the
     # candidate count and the kth distance with no extra shuffle and no
-    # separate aggregate branch — round 3's aggregate + broadcast-rejoin
-    # shape cost ~9s cold at sf0.1 in plan compilation and job chaining.
+    # separate aggregate branch.
     # STRICT bound: a point just outside the searched disk can sit at
     # exactly radius*min_extent and, under the (dist2, id) tie-break,
     # displace the kth result — ties at the certification radius must fall
@@ -135,33 +134,23 @@ def knn_distributed(points_df, queries_df, k: int):
         )
         .select("query_id", "rank", "point_id", "dist2", "_cert")
     )
-    # topk (Q x k rows) feeds the certified output and the fallback's
-    # anti-join; without materialization each branch re-executes the
-    # candidate join — 3 scans of the points table in the final plan, which
-    # at 100 TB is the whole cost. Checkpointed, the table is scanned at
-    # most twice: candidate join + (only if needed) fallback.
     topk = topk.localCheckpoint(eager=True)
     certified = topk.filter("_cert").drop("_cert")
 
-    # Bounded driver-side scalar over the materialized Q x k intermediate:
-    # does ANY query need the exact fallback? (uncertified rows present, or
-    # a query with zero candidates in its disk — absent from topk). O(Q).
-    needs_fallback = (
-        topk.filter(~F.col("_cert")).limit(1).count() > 0
-        or queries_df.join(topk.select("query_id"), "query_id", "left_anti")
-        .limit(1)
-        .count()
-        > 0
-    )
-    if not needs_fallback:
-        return certified
-
-    # Fallback: the uncertified queries — normally an empty sliver —
-    # broadcast into a cross join with the full table, window top-k, union.
-    certified_ids = topk.filter("_cert").select("query_id")
+    # The queries the certified rows do not answer (``_cert`` is constant
+    # per query, and a query with zero candidates in its disk is absent
+    # from topk) — normally an empty sliver, broadcast into a cross join
+    # with the full table, window top-k, union. Bounded driver-side
+    # probes, cheapest first, decide whether any query needs it: an
+    # uncertified top-k row (a read of the checkpointed Q x k rows),
+    # else a first row of this O(Q) frame.
     uncertified_q = queries_df.join(
-        F.broadcast(certified_ids), "query_id", "left_anti"
+        F.broadcast(topk.filter("_cert").select("query_id")),
+        "query_id", "left_anti",
     ).selectExpr("query_id", "lat AS q_lat", "lon AS q_lon")
+    if (topk.filter(~F.col("_cert")).limit(1).count() == 0
+            and uncertified_q.limit(1).count() == 0):
+        return certified
     return certified.unionByName(_broadcast_topk(points_df, uncertified_q, k))
 
 

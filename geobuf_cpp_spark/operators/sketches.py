@@ -161,7 +161,7 @@ def kmv_sketch(docs_df: DataFrame) -> DataFrame:
 
 def kmv_distinct(sketch: DataFrame) -> DataFrame:
     """KMV distinct-token estimate as one exact-integer row, from a
-    ``kmv_sketch`` (built once, possibly persisted, and shared across
+    ``kmv_sketch`` (built once, possibly checkpointed, and shared across
     consumers instead of re-scanning the corpus).
 
     est = (k-1) * 2^64 div h_k (the classic KMV estimator with the
@@ -280,10 +280,7 @@ def kmv_overlap(docs_df: DataFrame, k: int) -> DataFrame:
     list (declared BNLJ, same as the kNN serving shape).
     """
     # consumed three times (groups, ra, rb) with DIFFERENT column
-    # pruning, which defeats ReuseExchange (the canonical exchange
-    # subtrees differ), so the lazy checkpoint genuinely saves two
-    # corpus scans — measured 1.20 s vs 1.33 s without it (interleaved
-    # same-session A/B), despite its ~0.5 s eager-planning cost.
+    # pruning, which defeats ReuseExchange
     sk = kmv_sketch_grouped(docs_df, "source", k).select(
         F.col("source").alias("grp"), "hash_val"
     ).localCheckpoint(eager=False)

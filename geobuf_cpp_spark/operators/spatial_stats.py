@@ -37,10 +37,8 @@ from .clustering import _neighbor_edges, dense_cells
 def morans_i_parts(points_df: DataFrame, res: int) -> DataFrame:
     """One row: (n_cells, w_pairs, num, den) — exact Moran's I parts."""
     # the cell table feeds four consumers (totals, both join sides, the
-    # denominator) with DIFFERENT column pruning — which defeats
-    # ReuseExchange — so the lazy checkpoint genuinely saves repeated
-    # corpus scans (interleaved A/B: 0.83 s vs 1.00 s without it, its
-    # ~0.3 s eager-planning cost included)
+    # denominator) with DIFFERENT column pruning, which defeats
+    # ReuseExchange
     cells = dense_cells(
         points_df, res, 1).localCheckpoint(eager=False)
     tot = cells.agg(
@@ -108,8 +106,7 @@ def getis_ord_parts(points_df: DataFrame, res: int) -> DataFrame:
     stays in BIGINT: N <= 4^res and local sums are corpus counts, so
     the product is < 2^16 * 2^40 even at 10^12 points.
     """
-    # checkpoints kept: multi-consumer frames with differing pruning
-    # (see morans_i_parts) — A/B measured 0.63 s vs 0.80 s without
+    # multi-consumer frames with differing pruning (see morans_i_parts)
     cells = dense_cells(
         points_df, res, 1).localCheckpoint(eager=False)
     tot = cells.agg(

@@ -200,44 +200,33 @@ def smooth_cell_counts(counts_df):
 
 
 def tile_pyramid(points_df, z_base: int, z_min: int):
-    """Multi-zoom tile counts (z_min..z_base) built HIERARCHICALLY: the
-    corpus is scanned once for the base level, then each coarser level
-    aggregates the previous level's tile counts (4 children -> 1
-    parent, exact because floor(v*2^z) div 2 == floor(v*2^(z-1)) for
-    the equirect fractions). At 100 TB the pyramid costs one corpus
-    pass plus z_base - z_min tile-table aggregations, not one scan per
-    zoom — the materialized-view rollup pattern every tile server
-    needs.
+    """Multi-zoom tile counts (z_min..z_base) from ONE aggregation: the
+    corpus is grouped once into base tiles at ``z_base``, each base tile
+    is exploded over the zooms z_min..z_base, and the copies are summed
+    by (z, tx div 2^(z_base-z), ty div 2^(z_base-z)) — exact because
+    floor(v*2^z_base) div 2^k == floor(v*2^(z_base-k)) for the equirect
+    fractions. One corpus scan, no cache and no per-level loop: the
+    second aggregation reads at most (z_base - z_min + 1) rows per
+    occupied base tile.
     """
     assert 0 <= z_min <= z_base
-    # each level is persisted: the union's branches would otherwise
-    # inline the shared lineage and re-scan the corpus once per zoom
-    # (defeating the point); a level table is <= 4^z rows — tiny.
-    # Persists live until session end / spark.catalog.clearCache().
     base = (
         assign_tiles(points_df, z_base, "lon", "lat")
-        .groupBy("z", "tx", "ty")
-        .agg(F.count("*").cast("long").alias("n_points"))
-        .persist()
+        .groupBy("tx", "ty")
+        .agg(F.count("*").alias("n"))
     )
-    levels, cur = [base], base
-    for z in range(z_base - 1, z_min - 1, -1):
-        cur = (
-            cur.select(
-                F.lit(z).alias("z"),
-                F.expr("tx div 2").alias("tx"),
-                F.expr("ty div 2").alias("ty"),
-                "n_points",
-            )
-            .groupBy("z", "tx", "ty")
-            .agg(F.sum("n_points").cast("long").alias("n_points"))
-            .persist()
+    return (
+        base.select(
+            "tx", "ty", "n",
+            F.explode(F.sequence(F.lit(z_min), F.lit(z_base))).alias("z"),
         )
-        levels.append(cur)
-    out = levels[0]
-    for lv in levels[1:]:
-        out = out.unionByName(lv)
-    return out
+        .groupBy(
+            "z",
+            F.expr(f"tx div shiftleft(1L, {z_base} - z)").alias("tx"),
+            F.expr(f"ty div shiftleft(1L, {z_base} - z)").alias("ty"),
+        )
+        .agg(F.sum("n").cast("long").alias("n_points"))
+    )
 
 
 def adaptive_quadtree(points_df, cap: int, max_z: int):

@@ -32,6 +32,71 @@ The rebuild loses the checkpoint's preserved output partitioning, so
 use plain ``localCheckpoint`` for ONE-SHOT frames that are partitioned
 once and reused read-only across rounds (e.g. a pre-repartitioned edge
 list), and ``loop_checkpoint`` for the frames REBUILT every round.
+
+Materialization sites
+---------------------
+Every ``persist`` / ``localCheckpoint`` / ``loop_checkpoint`` call in the
+package and ``__spark_entry__.py`` has a row below, named by module,
+top-level function and primitive (``lc`` = lazy ``localCheckpoint``,
+``eager`` = ``localCheckpoint(eager=True)``, ``loop`` =
+``loop_checkpoint``); a test fails on any call without one. Each site was
+timed three ways on 4 cores (local[4], 15 GiB): as it was, dropped, and
+with the other primitive (``lc`` for ``persist`` and the reverse; plain
+``lc`` without the stats reset for ``loop``; eager also against ``lc``).
+A figure is the fastest of 3 calls, in seconds, of the gate(s) named
+(construction plus execution to a ``noop`` sink), every call on a fresh
+copy of the tables, variants interleaved in one session per scale
+factor; every variant's output matched the gate's DuckDB oracle. Gates
+marked * ran with ``graph.DRIVER_LOOP_MAX_EDGES = 0``: at these scale
+factors their graphs take the driver path, where the site does not run.
+
+The rule: a site is dropped only when dropping it is no slower at both
+scale factors AND the dropped plan scans no table and runs no Python
+stage more often (read from the executed plans of every query the gate
+runs). Otherwise it keeps its primitive unless the other one is more
+than 5% faster at both scale factors (the host's call-to-call noise).
+
+Columns: was / dropped / other, at sf0.01 and at sf0.1.
+
+| site | primitive | gate | sf0.01 | sf0.1 | decision |
+| --- | --- | --- | --- | --- | --- |
+| ``operators.ann.ivfpq_topk`` | ``persist`` | ivfpq_topk | 1.17 / 1.24 / 1.28 | 1.32 / 1.17 / 1.13 | keep: lc split |
+| ``operators.ann.kmeans_lite`` | ``localCheckpoint`` | kmeans_lite | 1.02 / 1.31 / 1.10 | 0.82 / 1.77 / 0.88 | keep |
+| ``operators.clustering.grid_cluster`` | ``persist`` | grid_cluster | 0.34 / 0.37 / 0.34 | 0.66 / 0.67 / 0.63 | keep: lc within noise |
+| ``operators.clustering.grid_cluster_geo`` | ``persist`` | grid_cluster_geo | 1.57 / 2.39 / 1.54 | 1.05 / 1.35 / 1.17 | keep |
+| ``operators.dedup._label_loop`` | ``localCheckpoint`` | segment_components* | 1.09 / 1.14 / 1.22 | 3.53 / 3.54 / 3.77 | keep |
+| ``operators.dedup._label_loop`` | ``loop_checkpoint`` | segment_components* | 1.44 / 2.39 / 1.36 | 3.53 (row above) / heap OOM / — | keep: dropped ran out of driver heap |
+| ``operators.dedup.simhash_pairs`` | ``persist`` | simhash_neardup | 0.53 / 0.66 / 0.45 | 0.70 / 1.05 / 0.76 | keep: lc split |
+| ``operators.dedup.boilerplate_chunks`` | ``localCheckpoint`` | boilerplate | 0.71 / 0.76 / 0.76 | 0.54 / 0.90 / 0.71 | keep |
+| ``operators.graph.triangle_counts`` | ``localCheckpoint`` | triangle_count | 2.50 / 3.33 / 1.90 | 3.10 / 3.15 / 2.47 | was persist: lc faster at both |
+| ``operators.graph._probe_pairs`` | ``localCheckpoint`` | network_hops, user_kcore, segment_components | 1.45 / 1.55 / 1.23 | 1.82 / 2.06 / 1.79 | keep: persist within noise at sf0.1 |
+| ``operators.graph._doubled_edges`` | ``localCheckpoint`` | network_hops*, user_kcore*, segment_components* | 2.82 / 3.11 / 3.04 | 7.52 / 9.62 / 9.00 | keep |
+| ``operators.graph.pagerank`` | ``localCheckpoint`` | host_pagerank* | 1.26 / 2.20 / 1.50 | 1.30 / 2.71 / 1.55 | keep |
+| ``operators.graph.pagerank`` | ``loop_checkpoint`` | host_pagerank* | 1.76 / 1.81 / 1.70 | 2.05 / 1.98 / 2.00 | keep |
+| ``operators.graph.bfs_hops`` | ``localCheckpoint`` | network_hops* | 0.72 / 0.75 / 0.76 | 1.64 / 1.68 / 1.59 | keep |
+| ``operators.graph.bfs_hops`` | ``loop_checkpoint`` | network_hops* | 1.22 / 1.44 / 1.16 | 1.93 / 4.59 / 1.94 | keep (frontier) |
+| ``operators.graph.kcore`` | ``loop_checkpoint`` | user_kcore* | 1.83 / 2.06 / 1.79 | 4.17 / 4.40 / 3.31 | keep: lc split |
+| ``operators.knn.knn_distributed`` | ``localCheckpoint`` | knn_rings | 0.89 / 1.46 / 1.15 | 0.61 / 0.88 / 0.69 | keep eager (lc 0.91, 0.63) |
+| ``operators.sketches.kmv_overlap`` | ``localCheckpoint`` | kmv_overlap | 0.88 / 0.84 / 1.05 | 0.61 / 0.63 / 0.83 | keep |
+| ``operators.spatial_stats.morans_i_parts`` | ``localCheckpoint`` | morans_i | 0.60 / 0.83 / 0.94 | 0.40 / 0.44 / 0.54 | keep |
+| ``operators.spatial_stats.getis_ord_parts`` | ``localCheckpoint`` | getis_ord | 0.63 / 0.86 / 0.86 | 0.52 / 0.60 / 0.62 | keep (cells) |
+| ``operators.spatial_stats.getis_ord_parts`` | ``localCheckpoint`` | getis_ord | 0.56 / 0.60 / 0.65 | 0.49 / 0.42 / 0.50 | keep (edges) |
+| ``operators.textstats.term_cooccurrence`` | ``persist`` | term_cooccur | 0.73 / 0.72 / 0.61 | 0.68 / 0.85 / 0.84 | keep |
+| ``operators.tiles.adaptive_quadtree`` | ``localCheckpoint`` | adaptive_tiles | 0.35 / 0.37 / 0.37 | 0.26 / 0.27 / 0.29 | keep: dropped scans the points twice |
+| ``__spark_entry__._shared_df`` | ``localCheckpoint`` | 24 shared-subresult gates | 7.89 / 11.79 / 6.62 | 23.15 / 32.79 / 18.13 | one primitive: the persist branch lost at both (below) |
+| ``operators.ann.hyperplane_lsh_pairs`` | dropped | lsh_neardup | 0.99 / 0.76 / 0.90 | 0.62 / 0.58 / 0.62 | was persist: both join sides reuse one exchange, signature stage runs once |
+| ``operators.ann.kmeans_lite`` | dropped | kmeans_lite | 1.58 / 1.14 / 1.53 | 1.51 / 1.19 / 1.55 | was loop: same scans, 2 jobs fewer |
+| ``operators.graph.bfs_hops`` | dropped | network_hops* | 1.34 / 0.98 / 1.35 | 2.27 / 2.16 / 2.09 | was loop (``dist``): a union of checkpoints |
+| ``operators.tiles.tile_pyramid`` | dropped | tile_pyramid | 1.65 / 0.68 | 1.37 / 0.67 | was 2 persist + a per-level loop: one aggregation (old / new) |
+
+``_shared_df`` had two sites, ``persist`` (the docs sketches, range and
+segment pairs, point-segment candidates, quantile sketch and n-gram
+pairs) and ``lc`` (the shingle index, 0.97 / 1.13 / 1.31 and
+2.64 / 3.20 / 3.13 over ngram_jaccard, prefix_jaccard, containment and
+dedup_clusters). Its row times the 24 gates that read a shared
+subresult as one round, persist / dropped / lc: lc was the faster of
+the two primitives on 19 of them at sf0.01 and 22 at sf0.1, so every
+shared subresult is now a lazy checkpoint.
 """
 
 from __future__ import annotations

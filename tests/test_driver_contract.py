@@ -223,3 +223,42 @@ def test_no_checkout_path_literals():
                  and id(node) not in docstrings
                  and str(root) in node.value]
     assert hits == []
+
+
+def test_materialization_sites_measured():
+    """Every ``persist`` / ``localCheckpoint`` / ``loop_checkpoint`` call
+    in the package and __spark_entry__.py, as (module.function,
+    primitive) with the top-level function or class that holds it, is a
+    row of the measured table in the ``plans.iterate`` docstring, and
+    every row that names a primitive names a call: a new cache or
+    checkpoint lands with its kept / dropped / other-primitive numbers,
+    and a removed one keeps its row only as "dropped". The body of
+    ``loop_checkpoint`` is the primitive itself, not a site."""
+    import ast
+    import collections
+
+    from geobuf_cpp_spark.plans import iterate
+
+    root, pkg, _ = _source_files()
+    prims = {"persist", "localCheckpoint", "loop_checkpoint"}
+    found = collections.Counter()
+    for path in pkg + [root / "__spark_entry__.py"]:
+        rel = path.relative_to(root).with_suffix("")
+        module = ".".join(rel.parts[rel.parts[0] == "geobuf_cpp_spark":])
+        tree = ast.parse(path.read_text())
+        owner = {id(node): top.name for top in tree.body
+                 if isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                     ast.ClassDef))
+                 for node in ast.walk(top)}
+        for call in ast.walk(tree):
+            if not isinstance(call, ast.Call):
+                continue
+            name = getattr(call.func, "attr", getattr(call.func, "id", None))
+            site = f"{module}.{owner.get(id(call), '<module>')}"
+            if name in prims and site != "plans.iterate.loop_checkpoint":
+                found[site, name] += 1
+    rows = [[cell.strip().strip("`") for cell in ln.split("|")[1:3]]
+            for ln in iterate.__doc__.splitlines()
+            if ln.strip().startswith("| ``")]
+    listed = collections.Counter(tuple(r) for r in rows if r[1] in prims)
+    assert found == listed, (found - listed, listed - found)

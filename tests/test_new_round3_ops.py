@@ -1044,32 +1044,43 @@ def test_token_windows_overlap_semantics(spark):
 
 
 def test_tile_pyramid_single_scan_and_conservation(spark):
-    """The pyramid reads its source ONCE (one scan leaf in the plan for
-    all zoom levels) and every level conserves the total point count."""
+    """The pyramid is one aggregation: its plan reads the source ONCE
+    and caches nothing, its schema is fixed, and every level equals the
+    direct per-level tile counts (so every level conserves the total
+    point count), including a pyramid down to z=0 and a single level."""
     import io
     from contextlib import redirect_stdout
 
-    from geobuf_cpp_spark.operators.tiles import tile_pyramid
+    from geobuf_cpp_spark.operators.tiles import assign_tiles, tile_pyramid
 
     import numpy as np
     rng = np.random.default_rng(3)
     pts = [(i, float(la), float(lo)) for i, (la, lo) in enumerate(
         zip(rng.uniform(-80, 80, 500), rng.uniform(-170, 170, 500)))]
     df = spark.createDataFrame(pts, "point_id long, lat double, lon double")
-    pyr = tile_pyramid(df, z_base=5, z_min=2)
-    per_level = {r["z"]: r["total"] for r in
-                 pyr.groupBy("z").agg(F.sum("n_points").alias("total"))
-                 .collect()}
-    assert per_level == {z: 500 for z in range(2, 6)}
+
+    for z_base, z_min in [(5, 2), (2, 0), (4, 4)]:
+        pyr = tile_pyramid(df, z_base=z_base, z_min=z_min)
+        assert pyr.schema.simpleString() == \
+            "struct<z:int,tx:bigint,ty:bigint,n_points:bigint>"
+        got = sorted(tuple(r) for r in pyr.collect())
+        direct = sorted(
+            tuple(r) for z in range(z_min, z_base + 1)
+            for r in assign_tiles(df, z).groupBy("z", "tx", "ty")
+            .agg(F.count("*").alias("n_points")).collect())
+        assert got == direct, (z_base, z_min)
+        per_level = {}
+        for z, _, _, n in got:
+            per_level[z] = per_level.get(z, 0) + n
+        assert per_level == {z: 500 for z in range(z_min, z_base + 1)}
 
     buf = io.StringIO()
     with redirect_stdout(buf):
-        pyr.explain("formatted")
+        tile_pyramid(df, z_base=5, z_min=2).explain("formatted")
     plan = buf.getvalue()
-    source_leaves = [ln for ln in plan.splitlines()
-                     if ln.strip().startswith("(") and "Scan" in ln
-                     and "InMemory" not in ln]
-    assert len(source_leaves) == 1, source_leaves  # persisted levels
+    nodes = [ln for ln in plan.splitlines() if ln.strip().startswith("(")]
+    assert len([ln for ln in nodes if "Scan" in ln]) == 1, nodes
+    assert "InMemoryTableScan" not in plan
 
 
 def test_sketches_partition_invariant(spark):

@@ -479,11 +479,12 @@ def test_aqe_skew_join_splits_hot_key(spark):
 def test_knn_distributed_boundary_tie_uses_fallback(spark):
     """kth distance exactly equal to the certification radius must NOT be
     certified (strict <): the query takes the exact fallback path and the
-    answer still matches brute force."""
+    answer still matches brute force. A query with no candidate in its
+    disk takes the fallback too and matches ``knn_broadcast``."""
     import pandas as pd
 
     from geobuf_cpp_spark.functions.cells import cell_size_deg
-    from geobuf_cpp_spark.operators.knn import knn_distributed
+    from geobuf_cpp_spark.operators.knn import knn_broadcast, knn_distributed
 
     res, radius = 7, 2  # knn_distributed's fixed grid and disk
     ext = cell_size_deg(res)[0]  # 1.40625, exactly representable
@@ -504,6 +505,17 @@ def test_knn_distributed_boundary_tie_uses_fallback(spark):
     assert len(got) == 1
     assert got[0]["point_id"] == 1
     assert got[0]["dist2"] == (radius * ext) ** 2
+
+    # second input: query 0 is certified (a point sits on it) and query 1
+    # has no point in its radius-2 disk, so it is absent from the top-k
+    # rows and only the fallback answers it
+    qpdf = pd.DataFrame({"query_id": [0, 1], "lat": [50.0, -60.0],
+                         "lon": [50.0, -120.0]})
+    got = sorted(tuple(r) for r in knn_distributed(
+        pts, spark.createDataFrame(qpdf), k=1).collect())
+    want = sorted(tuple(r) for r in knn_broadcast(pts, qpdf, 1).collect())
+    assert got == want and [r[0] for r in got] == [0, 1]
+    assert got[0][2] == 3
 
 
 def test_read_geobuf_dir(spark, tmp_path):
