@@ -245,15 +245,18 @@ def _prep(spark: SparkSession, sf_dir: str, *tables: str) -> None:
         table_df(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
-def _shared_df(spark: SparkSession, sf_dir: str, key, build):
+def _shared_df(spark: SparkSession, sf_dir: str, key, build,
+               how: str = "persist"):
     """A derived input that sibling gates share: the first consumer in a
-    session builds it as a lazy local checkpoint, later ones reuse it —
-    identical results, one corpus scan instead of one per gate. A
-    checkpointed RDD keeps real sizes and partitioning for AQE, where an
-    InMemoryRelation carries default size stats until materialized
-    (measured in ``plans.iterate``)."""
+    session builds and persists it, later ones reuse it — identical
+    results, one corpus scan instead of one per gate."""
+    # "ckpt": lazy localCheckpoint instead of persist; each value is
+    # measured on its consumers in ``plans.iterate``.
     return session_memo(
-        spark, key, lambda: build().localCheckpoint(eager=False), sf_dir)
+        spark, key,
+        lambda: (build().localCheckpoint(eager=False) if how == "ckpt"
+                 else build().persist()),
+        sf_dir)
 
 
 def _gate_dir(name: str) -> str:
@@ -1693,7 +1696,7 @@ def _shared_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     _prep(spark, sf_dir, "documents")
     return _shared_df(
         spark, sf_dir, "shingles",
-        lambda: shingle_sets(spark.table("documents")))
+        lambda: shingle_sets(spark.table("documents")), how="ckpt")
 
 
 def q_media_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1864,7 +1867,7 @@ def q_segment_crossings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _shared_seg_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The crossing-pair set feeds BOTH segment_crossings (directly) and
-    segment_components (as the CC edge list) — build + checkpoint once per
+    segment_components (as the CC edge list) — build + persist once per
     session, like the sketch family's shared intermediates (cms_sketch
     went 1.51s -> 0.11s under the same memo)."""
     from geobuf_cpp_spark.operators.segments import segment_intersections
@@ -1899,7 +1902,7 @@ BFS_ROUNDS = 6
 
 def q_network_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Network distance to the nearest arterial: bounded multi-source
-    BFS (operators/graph.bfs_hops) over the SAME checkpointed crossing
+    BFS (operators/graph.bfs_hops) over the SAME persisted crossing
     graph the components gate uses — exact hop counts, frontier-delta
     rounds. Oracle: bounded recursive-CTE walk over the banded intersect
     pairs taking min(depth) per node."""

@@ -223,7 +223,7 @@ def snap_to_segments(candidates: DataFrame) -> DataFrame:
     seg-id tiebreak). Points with no candidate emit no row.
 
     ``candidates`` is the blocked (point, segment) join of
-    `_point_seg_candidates` (shared, possibly checkpointed, across
+    `_point_seg_candidates` (shared, possibly persisted, across
     consumers); one map-side-combinable ``min(struct(dist, sid))`` per
     point follows — no window, no second shuffle beyond the point-keyed
     agg. Output: (point_id, seg_id, dist2_scaled)."""

@@ -36,27 +36,21 @@ list), and ``loop_checkpoint`` for the frames REBUILT every round.
 Materialization sites
 ---------------------
 Every ``persist`` / ``localCheckpoint`` / ``loop_checkpoint`` call in the
-package and ``__spark_entry__.py`` has a row below, named by module,
-top-level function and primitive (``lc`` = lazy ``localCheckpoint``,
-``eager`` = ``localCheckpoint(eager=True)``, ``loop`` =
-``loop_checkpoint``); a test fails on any call without one. Each site was
-timed three ways on 4 cores (local[4], 15 GiB): as it was, dropped, and
-with the other primitive (``lc`` for ``persist`` and the reverse; plain
-``lc`` without the stats reset for ``loop``; eager also against ``lc``).
-A figure is the fastest of 3 calls, in seconds, of the gate(s) named
-(construction plus execution to a ``noop`` sink), every call on a fresh
-copy of the tables, variants interleaved in one session per scale
-factor; every variant's output matched the gate's DuckDB oracle. Gates
-marked * ran with ``graph.DRIVER_LOOP_MAX_EDGES = 0``: at these scale
-factors their graphs take the driver path, where the site does not run.
+package and ``__spark_entry__.py`` has a row below (a test fails on any
+call without one). ``lc`` = lazy ``localCheckpoint``, ``eager`` =
+``localCheckpoint(eager=True)``, ``loop`` = ``loop_checkpoint``. Figures
+are seconds, fastest of 3 calls of the gate(s) named (construction plus
+execution to a ``noop`` sink) on fresh table copies, variants interleaved
+in one session per scale factor, 4 cores (local[4], 15 GiB); every
+output matched the gate's DuckDB oracle. Columns: was / dropped / other
+primitive (``lc`` for ``persist`` and the reverse; ``lc`` without the
+stats reset for ``loop``). Gates marked * ran with
+``graph.DRIVER_LOOP_MAX_EDGES = 0``, the distributed path.
 
-The rule: a site is dropped only when dropping it is no slower at both
-scale factors AND the dropped plan scans no table and runs no Python
-stage more often (read from the executed plans of every query the gate
-runs). Otherwise it keeps its primitive unless the other one is more
-than 5% faster at both scale factors (the host's call-to-call noise).
-
-Columns: was / dropped / other, at sf0.01 and at sf0.1.
+Rule: drop a site only when dropping is no slower at both scale factors
+AND the executed plans scan no table and run no Python stage more often;
+otherwise keep its primitive unless the other is more than 5% faster at
+both (the host's call-to-call noise).
 
 | site | primitive | gate | sf0.01 | sf0.1 | decision |
 | --- | --- | --- | --- | --- | --- |
@@ -83,20 +77,21 @@ Columns: was / dropped / other, at sf0.01 and at sf0.1.
 | ``operators.spatial_stats.getis_ord_parts`` | ``localCheckpoint`` | getis_ord | 0.56 / 0.60 / 0.65 | 0.49 / 0.42 / 0.50 | keep (edges) |
 | ``operators.textstats.term_cooccurrence`` | ``persist`` | term_cooccur | 0.73 / 0.72 / 0.61 | 0.68 / 0.85 / 0.84 | keep |
 | ``operators.tiles.adaptive_quadtree`` | ``localCheckpoint`` | adaptive_tiles | 0.35 / 0.37 / 0.37 | 0.26 / 0.27 / 0.29 | keep: dropped scans the points twice |
-| ``__spark_entry__._shared_df`` | ``localCheckpoint`` | 24 shared-subresult gates | 7.89 / 11.79 / 6.62 | 23.15 / 32.79 / 18.13 | one primitive: the persist branch lost at both (below) |
+| ``__spark_entry__._shared_df`` | ``persist`` | 24 shared-subresult gates, one round | 7.89 / 11.79 / 6.62 | 23.15 / 32.79 / 18.13 | keep: lc split by consumer (below) |
+| ``__spark_entry__._shared_df`` | ``localCheckpoint`` | ngram_jaccard, prefix_jaccard, containment, dedup_clusters | 0.97 / 1.13 / 1.31 | 2.64 / 3.20 / 3.13 | keep |
 | ``operators.ann.hyperplane_lsh_pairs`` | dropped | lsh_neardup | 0.99 / 0.76 / 0.90 | 0.62 / 0.58 / 0.62 | was persist: both join sides reuse one exchange, signature stage runs once |
 | ``operators.ann.kmeans_lite`` | dropped | kmeans_lite | 1.58 / 1.14 / 1.53 | 1.51 / 1.19 / 1.55 | was loop: same scans, 2 jobs fewer |
 | ``operators.graph.bfs_hops`` | dropped | network_hops* | 1.34 / 0.98 / 1.35 | 2.27 / 2.16 / 2.09 | was loop (``dist``): a union of checkpoints |
 | ``operators.tiles.tile_pyramid`` | dropped | tile_pyramid | 1.65 / 0.68 | 1.37 / 0.67 | was 2 persist + a per-level loop: one aggregation (old / new) |
 
-``_shared_df`` had two sites, ``persist`` (the docs sketches, range and
-segment pairs, point-segment candidates, quantile sketch and n-gram
-pairs) and ``lc`` (the shingle index, 0.97 / 1.13 / 1.31 and
-2.64 / 3.20 / 3.13 over ngram_jaccard, prefix_jaccard, containment and
-dedup_clusters). Its row times the 24 gates that read a shared
-subresult as one round, persist / dropped / lc: lc was the faster of
-the two primitives on 19 of them at sf0.01 and 22 at sf0.1, so every
-shared subresult is now a lazy checkpoint.
+``_shared_df``'s ``persist`` row times all its consumers as one round:
+``lc`` was slower on kmv_sketch, kmv_distinct, hll_registers,
+qhist_quantiles and containment at sf0.01 (0.19 / 0.21, 0.05 / 0.06,
+0.27 / 0.29, 0.61 / 0.62, 0.19 / 0.20) and on kmv_distinct and
+hll_registers at sf0.1 (0.05 / 0.06, 1.02 / 1.13). Interleaved pairs at
+sf0.1 favoured ``persist`` on term_cooccur (``lc`` won 0 of 5) and
+cms_estimate (1 of 5), where fastest-of-3 favoured ``lc``, so both
+values stay until a per-consumer split is measured in pairs.
 """
 
 from __future__ import annotations

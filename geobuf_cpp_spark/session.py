@@ -17,7 +17,7 @@ import tempfile
 import weakref
 import zipfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # All per-session engine state: session (weakly, so a stopped session's
 # entries go with it) -> sf_dir (None: built from no table directory) ->
@@ -65,25 +65,31 @@ def _stamp(sf_dir: str | None):
         return None
 
 
+def _release(values) -> None:
+    for v in values:
+        if isinstance(v, DataFrame) and v.is_cached:
+            v.unpersist()
+
+
 def session_memo(spark: SparkSession, key, build, sf_dir: str | None = None):
     """``build()`` once per (session, ``sf_dir``, ``key``): the table
     readers, the subresults sibling gates share, the ``spread`` hints and
     the package-shipped flag. An entry built from tables must pass their
     ``sf_dir``: a change of its stamp (any table there rewritten) drops
-    every entry of that directory (a shared subresult is a lazy local
-    checkpoint, whose blocks Spark frees once the frame is
-    unreferenced)."""
+    every entry of that directory and unpersists the cached frames."""
     dirs = _MEMO.setdefault(spark, {})
     stamp = _stamp(sf_dir)
     held = dirs.get(sf_dir)
     if held is None or held[0] != stamp:
+        if held is not None:
+            _release(held[1].values())
         held = dirs[sf_dir] = (stamp, {})
     entries = held[1]
     if key in entries:
         entries[key] = value = entries.pop(key)
         return value
     if len(entries) >= _MEMO_CAP:
-        entries.pop(next(iter(entries)))
+        _release([entries.pop(next(iter(entries)))])
     entries[key] = value = build()
     return value
 

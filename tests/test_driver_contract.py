@@ -226,10 +226,11 @@ def test_no_checkout_path_literals():
 
 
 def test_materialization_sites_measured():
-    """Every ``persist`` / ``localCheckpoint`` / ``loop_checkpoint`` call
-    in the package and __spark_entry__.py, as (module.function,
-    primitive) with the top-level function or class that holds it, is a
-    row of the measured table in the ``plans.iterate`` docstring, and
+    """Every ``persist`` / ``cache`` / ``localCheckpoint`` /
+    ``checkpoint`` / ``loop_checkpoint`` call in the package and
+    __spark_entry__.py, as (module.function, primitive) with the
+    top-level function or class that holds it, is a row of the measured
+    table in the ``plans.iterate`` docstring, and
     every row that names a primitive names a call: a new cache or
     checkpoint lands with its kept / dropped / other-primitive numbers,
     and a removed one keeps its row only as "dropped". The body of
@@ -240,7 +241,8 @@ def test_materialization_sites_measured():
     from geobuf_cpp_spark.plans import iterate
 
     root, pkg, _ = _source_files()
-    prims = {"persist", "localCheckpoint", "loop_checkpoint"}
+    prims = {"persist", "cache", "localCheckpoint", "checkpoint",
+             "loop_checkpoint"}
     found = collections.Counter()
     for path in pkg + [root / "__spark_entry__.py"]:
         rel = path.relative_to(root).with_suffix("")

@@ -141,7 +141,7 @@ def test_table_df_memoizes_plan_only_and_respects_sf_switch(spark, tmp_path):
     object back, no data materialization — and _prep-style re-
     registration after a directory switch must rebind the view to the
     other directory's data. A table rewritten in the session is read
-    afresh, and shared frames built over it are rebuilt."""
+    afresh, and shared frames built over it are rebuilt and released."""
     from geobuf_cpp_spark.sources.readers import table_df
 
     d1 = str(tmp_path / "a"); d2 = str(tmp_path / "b")
@@ -171,7 +171,10 @@ def test_table_df_memoizes_plan_only_and_respects_sf_switch(spark, tmp_path):
         "append").parquet(f"{d1}/t.parquet")
     assert sorted(r.x for r in table_df(spark, d1, "t").collect()) == [2, 3, 4]
 
-    # a shared subresult over a rewritten table is rebuilt
+    # a shared subresult over a rewritten table is rebuilt, and the
+    # superseded persisted frame is released
+    from pyspark import StorageLevel
+
     import __spark_entry__ as E
 
     def total():
@@ -182,6 +185,10 @@ def test_table_df_memoizes_plan_only_and_respects_sf_switch(spark, tmp_path):
     assert E._shared_df(spark, d2, "total", total) is old
     spark.createDataFrame([(5,)], "x long").write.mode(
         "overwrite").parquet(f"{d2}/t.parquet")
+    # any memo read under the rewritten directory applies the rule; the
+    # check comes before the rebuild, whose plan matches the old one
+    table_df(spark, d2, "t")
+    assert old.storageLevel == StorageLevel.NONE
     new = E._shared_df(spark, d2, "total", total)
     assert new is not old and new.collect()[0][0] == 5
 
