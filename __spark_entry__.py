@@ -16,7 +16,6 @@ from __future__ import annotations
 
 import tempfile
 from collections.abc import Callable
-from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -485,24 +484,13 @@ def q_hex_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_quadkey_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bing-style quadkeys: Spark runs the NUMPY kernel, the oracle the
     SQL digit cascade — independent implementations, same strings."""
-    import pandas as pd
-
     from geobuf_cpp_spark.functions.cells import quadkey_of
+    from geobuf_cpp_spark.functions.udfs import with_kernel_column
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "point_id": pdf["point_id"],
-                    "quadkey": quadkey_of(
-                        pdf["lat"].to_numpy(), pdf["lon"].to_numpy(), ROLLUP_RES
-                    ),
-                }
-            )
-
-    return spread(P.points_df(spark, sf_dir)).mapInPandas(
-        gen, "point_id long, quadkey string"
-    )
+    return with_kernel_column(
+        spread(P.points_df(spark, sf_dir)), "quadkey", "string",
+        quadkey_of, ["lat", "lon"], ROLLUP_RES,
+    ).select("point_id", "quadkey")
 
 
 def q_ship_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -809,25 +797,13 @@ def q_geohash_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Standard base32 geohashes: Spark runs the NUMPY closed-form
     kernel, the oracle the SQL bit cascade (functions/cells.py:
     sql_geohash) — independent implementations, same strings."""
-    import pandas as pd
-
     from geobuf_cpp_spark.functions.cells import geohash_of
+    from geobuf_cpp_spark.functions.udfs import with_kernel_column
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "point_id": pdf["point_id"],
-                    "geohash": geohash_of(
-                        pdf["lat"].to_numpy(), pdf["lon"].to_numpy(),
-                        GEOHASH_LEN,
-                    ),
-                }
-            )
-
-    return spread(P.points_df(spark, sf_dir)).mapInPandas(
-        gen, "point_id long, geohash string"
-    )
+    return with_kernel_column(
+        spread(P.points_df(spark, sf_dir)), "geohash", "string",
+        geohash_of, ["lat", "lon"], GEOHASH_LEN,
+    ).select("point_id", "geohash")
 
 
 def q_cell_month_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -852,17 +828,11 @@ def q_admin_areas(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from geobuf_cpp_spark.operators.knn import knn_broadcast
+    """Exact kNN: broadcast query set, cross join, windowed top-k."""
+    from geobuf_cpp_spark.operators.knn import _broadcast_topk
 
-    pts = spread(P.points_df(spark, sf_dir))
-    queries = (
-        P.queries_df(spark, sf_dir)
-        .toPandas()
-        .rename(columns={"q_lon": "lon", "q_lat": "lat"})
-    )
-    return knn_broadcast(pts, queries, KNN_K).select(
-        "query_id", "rank", "point_id", "dist2"
-    )
+    return _broadcast_topk(spread(P.points_df(spark, sf_dir)),
+                           P.queries_df(spark, sf_dir), KNN_K)
 
 
 def q_knn_rings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -994,26 +964,7 @@ def q_geobuf_roundtrip_3d(spark: SparkSession, sf_dir: str) -> DataFrame:
     feature precision covers all three axes, and decode divides z by the
     same e. Oracle: the arithmetic quantization model over (lon, lat,
     alt) with the shared-e max."""
-    import pandas as pd
-
-    from geobuf_cpp_spark.codec import geobuf as gb
-
-    def rt(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        enc = gb.Encoder(max_precision=MAX_PRECISION)
-        dec = gb.Decoder()
-        for pdf in batches:
-            lons, lats, alts = [], [], []
-            for lon, lat, alt in zip(pdf["lon"], pdf["lat"], pdf["alt"]):
-                doc = dec.decode(enc.encode(
-                    {"type": "Point", "coordinates": [lon, lat, alt]}))
-                c = doc["coordinates"]
-                lons.append(c[0])
-                lats.append(c[1])
-                alts.append(c[2] if len(c) > 2 else 0.0)
-            yield pd.DataFrame(
-                {"point_id": pdf["point_id"], "rt_lon": lons,
-                 "rt_lat": lats, "rt_alt": alts}
-            )
+    from geobuf_cpp_spark.functions.udfs import with_point_roundtrip
 
     _prep(spark, sf_dir, "orders")
     pts = spark.sql(
@@ -1021,36 +972,18 @@ def q_geobuf_roundtrip_3d(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{P.POINT_LON_SQL} AS lon, {P.POINT_LAT_SQL} AS lat, "
         f"{ALT_SQL} AS alt FROM orders"
     )
-    return spread(pts).mapInPandas(
-        rt, "point_id long, rt_lon double, rt_lat double, rt_alt double"
-    )
+    return with_point_roundtrip(
+        spread(pts), ["lon", "lat", "alt"], MAX_PRECISION
+    ).select("point_id", "rt_lon", "rt_lat", "rt_alt")
 
 
 def q_geobuf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """encode(Point) -> decode through the real codec, per point."""
-    import pandas as pd
+    from geobuf_cpp_spark.functions.udfs import with_point_roundtrip
 
-    from geobuf_cpp_spark.codec import geobuf as gb
-
-    def rt(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        enc = gb.Encoder(max_precision=MAX_PRECISION)
-        dec = gb.Decoder()
-        for pdf in batches:
-            out_lon, out_lat = [], []
-            for lon, lat in zip(pdf["lon"], pdf["lat"]):
-                doc = dec.decode(
-                    enc.encode({"type": "Point", "coordinates": [lon, lat]})
-                )
-                c = doc["coordinates"]
-                out_lon.append(c[0])
-                out_lat.append(c[1])
-            yield pd.DataFrame(
-                {"point_id": pdf["point_id"], "rt_lon": out_lon, "rt_lat": out_lat}
-            )
-
-    return spread(P.points_df(spark, sf_dir)).mapInPandas(
-        rt, "point_id long, rt_lon double, rt_lat double"
-    )
+    return with_point_roundtrip(
+        spread(P.points_df(spark, sf_dir)), ["lon", "lat"], MAX_PRECISION
+    ).select("point_id", "rt_lon", "rt_lat")
 
 
 def q_geobuf_size_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1059,26 +992,11 @@ def q_geobuf_size_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     The Spark side runs the REAL codec per point; the DuckDB oracle runs
     the arithmetic size model (functions.sql_codec.sql_point_feature_size)
     — real encoder vs independent formula is the hard cross-check."""
-    import pandas as pd
+    from geobuf_cpp_spark.functions.udfs import with_point_feature_size
 
-    from geobuf_cpp_spark.codec import geobuf as gb
-
-    def sz(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        enc = gb.Encoder(max_precision=MAX_PRECISION)
-        for pdf in batches:
-            rows = []
-            for lon, lat in zip(pdf["lon"], pdf["lat"]):
-                blob = enc.encode(
-                    {
-                        "type": "Feature",
-                        "geometry": {"type": "Point", "coordinates": [lon, lat]},
-                        "properties": {"src": "orders"},
-                    }
-                )
-                rows.append((int(round(__import__("math").log10(enc.e))), len(blob)))
-            yield pd.DataFrame(rows, columns=["precision", "nbytes"])
-
-    sized = spread(P.points_df(spark, sf_dir)).mapInPandas(sz, "precision int, nbytes int")
+    sized = with_point_feature_size(
+        spread(P.points_df(spark, sf_dir)), ["lon", "lat"], MAX_PRECISION,
+        {"src": "orders"})
     return sized.groupBy("precision").agg(
         F.count("*").alias("n"),
         F.sum("nbytes").alias("total_bytes"),
@@ -1995,9 +1913,15 @@ def q_hilbert_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hilbert layout key per point: Spark runs the vectorized NUMPY
     kernel, the oracle an independently-derived unrolled SQL bit chain
     — two implementations of the curve, cross-checked per row."""
-    import pandas as pd
+    return _hilbert_keyed(spark, sf_dir).select("point_id", "hilbert")
 
+
+def _hilbert_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(point_id, gx, gy, hilbert): each point's cell on the
+    ``ix div RANGE_RADIUS`` grid and its Hilbert key from the numpy
+    kernel."""
     from geobuf_cpp_spark.functions.hilbert import hilbert_d
+    from geobuf_cpp_spark.functions.udfs import with_kernel_column
 
     _prep(spark, sf_dir, "orders")
     pts = spark.sql(P.IPOINTS_SELECT).selectExpr(
@@ -2005,18 +1929,8 @@ def q_hilbert_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"ix div {RANGE_RADIUS} AS gx",
         f"iy div {RANGE_RADIUS} AS gy",
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "point_id": pdf["point_id"],
-                "hilbert": hilbert_d(
-                    pdf["gx"].to_numpy(), pdf["gy"].to_numpy(),
-                    HILBERT_ORDER,
-                ),
-            })
-
-    return pts.mapInPandas(gen, "point_id long, hilbert long")
+    return with_kernel_column(pts, "hilbert", "long", hilbert_d,
+                              ["gx", "gy"], HILBERT_ORDER)
 
 
 # SFC range-query bbox on the 512x512 hilbert grid (gx < 360, gy < 170):
@@ -2033,34 +1947,16 @@ def q_hilbert_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
     At scale the intervals hit a hilbert-sorted layout's zone maps /
     row-group stats and the scan skips everything else; here the gate
     proves the cover loses NO rows — the oracle filters the bbox
-    directly and never touches the curve. (The key is computed here
-    with the vectorized numpy kernel via mapInPandas, like
-    `hilbert_index` — the unrolled CTE chain is DuckDB-oracle-only:
-    Spark inlines CTEs, so each bit level would square the expression
-    tree and blow up the analyzer.)"""
-    import pandas as pd
+    directly and never touches the curve. (The key is the numpy
+    kernel's, on the frame `hilbert_index` builds — the unrolled CTE
+    chain is DuckDB-oracle-only: Spark inlines CTEs, so each bit level
+    would square the expression tree and blow up the analyzer.)"""
+    from geobuf_cpp_spark.functions.hilbert import hilbert_coarse_ranges
 
-    from geobuf_cpp_spark.functions.hilbert import (
-        hilbert_coarse_ranges,
-        hilbert_d,
-    )
-
-    _prep(spark, sf_dir, "orders")
     x0, x1, y0, y1 = HRANGE_BBOX
     plan = hilbert_coarse_ranges(x0, x1, y0, y1, HILBERT_ORDER)
-    pts = spark.sql(P.IPOINTS_SELECT).selectExpr(
-        "point_id", "ix div 100 AS gx", "iy div 100 AS gy")
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["h"] = hilbert_d(
-                pdf["gx"].to_numpy(), pdf["gy"].to_numpy(), HILBERT_ORDER)
-            yield pdf
-
-    keyed = pts.mapInPandas(gen, "point_id long, gx long, gy long, h long")
-    pred = " OR ".join(f"(h BETWEEN {lo} AND {hi})" for lo, hi in plan)
-    return keyed.where(
+    pred = " OR ".join(f"(hilbert BETWEEN {lo} AND {hi})" for lo, hi in plan)
+    return _hilbert_keyed(spark, sf_dir).where(
         f"({pred}) AND gx BETWEEN {x0} AND {x1} "
         f"AND gy BETWEEN {y0} AND {y1}"
     ).select("point_id", "gx", "gy")
@@ -2448,81 +2344,14 @@ def q_user_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     >= 25 shared days): operators/graph.kcore runs 4 fixed peel rounds
     of degree-filter + semi-join pruning — the dense-community / bot-
     ring extractor. Oracle: identical edges + the same 4 rounds
-    unrolled as chained CTEs.
-
-    Edge build (result-identical to the oracle's per-day self-join,
-    restructured for scale — the r5 verdict's acknowledged quadratic):
-    each user's active-day set becomes 64-day bitmask chunks keyed by
-    ``day div 64`` relative to the corpus' first day, after a
-    prefilter keeping only users with >= KCORE_MIN_DAYS active days
-    (a pair sharing >= m days forces BOTH endpoints past m — lossless
-    pigeonhole). Pairs join chunk-on-chunk with the tiny mask table
-    broadcast, shared days = sum of bit_count(mask_a & mask_b): the
-    per-day join's days * (users/day)^2 row blowup (26.8M rows at
-    sf0.1) collapses to active_users^2/2 mask-AND probes (~1.1M) with
-    no shuffle on the pair side — a ~30x row cut at any scale, growing
-    to days x at denser calendars.
+    unrolled as chained CTEs. The edge build (graph.coactivity_edges)
+    is result-identical to the oracle's per-day self-join, restructured
+    for scale as 64-day bitmask chunks.
     """
-    from geobuf_cpp_spark.operators.graph import kcore
+    from geobuf_cpp_spark.operators.graph import coactivity_edges, kcore
 
     _prep(spark, sf_dir, "events")
-    ud = (
-        spark.table("events")
-        .select("user_id", F.date_trunc("day", "ts").alias("d"))
-        .distinct()
-    )
-    # one bounded scalar agg (driver-side, like the CC convergence
-    # check): the corpus' day span decides how many 64-day chunks a
-    # user mask needs — with ONE chunk (any <= 64-day telemetry
-    # window, whatever the user count) the pair aggregation below
-    # degenerates to a projection and its shuffle is skipped outright.
-    lo_hi = ud.agg(F.min("d").alias("d0"), F.max("d").alias("d1")).first()
-    d0 = lo_hi["d0"]
-    span_days = (
-        0 if d0 is None else (lo_hi["d1"] - d0).days
-    )
-    one_chunk = span_days < 64
-    # users that can possibly reach KCORE_MIN_DAYS shared days
-    active = (
-        ud.groupBy("user_id").agg(F.count("*").alias("nd"))
-        .filter(F.col("nd") >= KCORE_MIN_DAYS).select("user_id")
-    )
-    masks = (
-        ud.join(F.broadcast(active), "user_id")
-        .select(
-            "user_id",
-            F.datediff(F.col("d"), F.lit(d0)).alias("rel"),
-        )
-        .select(
-            "user_id",
-            F.expr("rel div 64").alias("chunk"),
-            F.expr("shiftleft(CAST(1 AS BIGINT), "
-                   "CAST(rel % 64 AS INT))").alias("bit"),
-        )
-        .groupBy("user_id", "chunk")
-        .agg(F.expr("bit_or(bit)").alias("mask"))
-    )
-    ma = masks.select(F.col("user_id").alias("id_a"), "chunk",
-                      F.col("mask").alias("mask_a"))
-    mb = masks.select(F.col("user_id").alias("id_b"), "chunk",
-                      F.col("mask").alias("mask_b"))
-    pairs = ma.join(F.broadcast(mb), "chunk").filter(
-        F.col("id_a") < F.col("id_b"))
-    if one_chunk:
-        # every pair meets in exactly one row: no (id_a, id_b) shuffle
-        edges = pairs.filter(
-            F.bit_count(F.col("mask_a").bitwiseAND(F.col("mask_b")))
-            >= KCORE_MIN_DAYS
-        ).select("id_a", "id_b")
-    else:
-        edges = (
-            pairs.groupBy("id_a", "id_b")
-            .agg(F.sum(F.bit_count(
-                F.col("mask_a").bitwiseAND(F.col("mask_b"))))
-                .alias("days"))
-            .filter(F.col("days") >= KCORE_MIN_DAYS)
-            .select("id_a", "id_b")
-        )
+    edges = coactivity_edges(spark.table("events"), KCORE_MIN_DAYS)
     return kcore(edges, KCORE_K, KCORE_ROUNDS).withColumnRenamed(
         "node", "user_id")
 

@@ -1,4 +1,5 @@
-"""Arrow-batched Spark transforms: extraction + geobuf codec stages.
+"""Arrow-batched Spark transforms: extraction, geobuf codec and numpy
+kernel stages.
 
 This module owns the engine's feature-row format: a wire ``geom`` struct
 (functions/geometry.py), a ``properties`` map whose values are canonical
@@ -17,11 +18,24 @@ conversion of it would cost about half as much again as the encode. So the
 headline stage, ``extract_encode_features``, is a ``mapInArrow`` stage that
 builds its output columns itself; the codec and decode stages, off the
 headline path, are ``mapInPandas`` / ``applyInPandas``.
+
+The per-point stages append columns to a frame in one ``mapInArrow``
+stage each (``_append_stage``), one body per kernel, so a caller passes
+only a frame, columns and constants:
+
+- ``with_kernel_column``: any numpy kernel over its columns (the
+  quadkey, geohash and Hilbert keys);
+- ``with_point_roundtrip``: encode(Point) -> decode over the coordinate
+  columns, 2D and 3D alike;
+- ``with_point_feature_size``: the encoded size and precision of a
+  Point Feature (the real codec that the SQL size model is checked
+  against).
 """
 
 from __future__ import annotations
 
 import json
+import math
 from typing import Iterator
 
 import pandas as pd
@@ -316,3 +330,76 @@ def decode_features(encoded_df):
     return encoded_df.select("url", "feature_idx", "geobuf").mapInPandas(
         gen, DECODED_SCHEMA
     )
+
+
+def _append_stage(df, ddl: str, body):
+    """``df`` plus the columns of ``ddl`` in one ``mapInArrow`` stage:
+    ``body(batch, arrow_types)`` returns one array per new column for
+    each Arrow batch of ``df``, and every input column passes through."""
+    new = StructType.fromDDL(ddl)
+    schema = StructType(df.schema.fields + new.fields)
+    types = [f.type for f in to_arrow_schema(new)]
+
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            cols = body(batch, types)
+            yield pa.RecordBatch.from_arrays(
+                batch.columns + cols,
+                names=batch.schema.names + [f.name for f in new.fields])
+
+    return df.mapInArrow(gen, schema)
+
+
+def with_kernel_column(df, name: str, ddl_type: str, kernel, cols: list,
+                       *consts):
+    """``df`` plus column ``name``: the numpy ``kernel(*arrays, *consts)``
+    over the arrays of ``cols``, batch by batch."""
+
+    def body(batch: pa.RecordBatch, types: list) -> list:
+        arrays = [batch.column(c).to_numpy(zero_copy_only=False)
+                  for c in cols]
+        return [pa.array(kernel(*arrays, *consts), types[0])]
+
+    return _append_stage(df, f"{name} {ddl_type}", body)
+
+
+def with_point_roundtrip(df, cols: list, max_precision: int):
+    """``df`` plus ``rt_<c>`` for each coordinate column ``c`` of
+    ``cols`` (lon, lat[, alt]): each row's Point through encode -> decode
+    of the real codec. The encoder writes dim 3 only for a non-zero
+    altitude, so a zero altitude comes back as 0.0."""
+
+    def body(batch: pa.RecordBatch, types: list) -> list:
+        enc = gb.Encoder(max_precision=max_precision)
+        dec = gb.Decoder()
+        out = [[] for _ in cols]
+        for pt in zip(*(batch.column(c).to_pylist() for c in cols)):
+            rt = dec.decode(enc.encode(
+                {"type": "Point", "coordinates": list(pt)}))["coordinates"]
+            for i, o in enumerate(out):
+                o.append(rt[i] if i < len(rt) else 0.0)
+        return [pa.array(o, t) for o, t in zip(out, types)]
+
+    return _append_stage(
+        df, ", ".join(f"rt_{c} double" for c in cols), body)
+
+
+def with_point_feature_size(df, cols: list, max_precision: int,
+                            properties: dict):
+    """``df`` plus (precision, nbytes) of each row's Point Feature with
+    ``properties`` from the coordinate columns ``cols``, as the real
+    encoder writes it: the precision it chose and the blob's length."""
+
+    def body(batch: pa.RecordBatch, types: list) -> list:
+        enc = gb.Encoder(max_precision=max_precision)
+        precision, nbytes = [], []
+        for pt in zip(*(batch.column(c).to_pylist() for c in cols)):
+            nbytes.append(len(enc.encode({
+                "type": "Feature",
+                "geometry": {"type": "Point", "coordinates": list(pt)},
+                "properties": properties,
+            })))
+            precision.append(int(round(math.log10(enc.e))))
+        return [pa.array(precision, types[0]), pa.array(nbytes, types[1])]
+
+    return _append_stage(df, "precision int, nbytes int", body)

@@ -81,8 +81,8 @@ def cosine_neardup_pairs(emb_df, threshold: float,
                          id_col: str = "vec_id", vec_col: str = "embedding"):
     """Exact embedding near-duplicate pairs: (id_a < id_b, cos >= threshold).
 
-    Broadcast-side exact baseline (the near-dup analogue of
-    ``knn_broadcast``): the reference matrix is collected ONCE and ships to
+    Broadcast-side exact baseline (the near-dup analogue of kNN's
+    ``_broadcast_topk``): the reference matrix is collected ONCE and ships to
     every partition; each Arrow batch then does a single (n_ref, batch)
     matmul — O(n^2 d) compute spread over the cluster with no pair
     shuffle at all (output is only the qualifying pairs). Right ONLY when

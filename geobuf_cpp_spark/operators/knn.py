@@ -3,9 +3,10 @@
 Two physical strategies, same exact semantics (ties broken by
 (dist, point id) so results are deterministic):
 
-* ``knn_broadcast`` — broadcast the query set, crossJoin + windowed top-k.
-  Exact, one shuffle of (n_points x n_queries) pairs; right when the query
-  set is small (the common online-serving shape).
+* ``_broadcast_topk`` — broadcast the query set, crossJoin + windowed
+  top-k. Exact, one shuffle of (n_points x n_queries) pairs; right when
+  the query set is small (the common online-serving shape). It is also
+  ``knn_distributed``'s fallback for uncertified queries.
 * ``knn_distributed`` — the scale path mandated by BASELINE.json
   north_star: one-pass cell-disk candidate join with distance
   certification (any point outside Chebyshev ring r lies at degree
@@ -21,7 +22,6 @@ Spark, numpy, and the DuckDB oracle; monotone in true planar distance).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -48,14 +48,6 @@ def _broadcast_topk(points_df, q, k: int):
         .filter(F.col("rank") <= k)
         .select("query_id", "rank", "point_id", "dist2")
     )
-
-
-def knn_broadcast(points_df, queries_pdf: pd.DataFrame, k: int):
-    """Exact kNN via broadcast cross join + windowed top-k."""
-    q = points_df.sparkSession.createDataFrame(
-        queries_pdf.rename(columns={"lon": "q_lon", "lat": "q_lat"})
-    )
-    return _broadcast_topk(points_df, q, k)
 
 
 def knn_distributed(points_df, queries_df, k: int):
@@ -162,7 +154,7 @@ def knn_geo(points_df, queries_df, k: int):
     (``range_join.sql_sphere_xyz`` — monotone with great-circle, so the
     top-k set and order equal true geodesic kNN), with (c2, point id)
     tie-break for determinism. Broadcast query set + windowed top-k,
-    the online-serving shape of ``knn_broadcast`` made sphere-correct:
+    the online-serving shape of ``_broadcast_topk`` made sphere-correct:
     near the poles or across the antimeridian the planar variant ranks
     wrongly, the chord never does.
     """

@@ -264,3 +264,25 @@ def test_materialization_sites_measured():
             if ln.strip().startswith("| ``")]
     listed = collections.Counter(tuple(r) for r in rows if r[1] in prims)
     assert found == listed, (found - listed, listed - found)
+
+
+def test_contract_holds_no_python_stages():
+    """__spark_entry__.py builds no Python stage itself: no call,
+    reference or import of ``mapInPandas``, ``mapInArrow``,
+    ``applyInPandas`` or ``pandas_udf``. The package owns one body per
+    kernel (``functions/udfs.py`` for the per-point stages), and a gate
+    passes it only tables, columns and constants."""
+    import ast
+
+    root, _, _ = _source_files()
+    stages = {"mapInPandas", "mapInArrow", "applyInPandas", "pandas_udf"}
+    tree = ast.parse((root / "__spark_entry__.py").read_text())
+    hits = [f"__spark_entry__.py:{node.lineno} {name}"
+            for node in ast.walk(tree)
+            if isinstance(node, (ast.Name, ast.Attribute, ast.ImportFrom))
+            for name in ([a.name for a in node.names]
+                         if isinstance(node, ast.ImportFrom)
+                         else [getattr(node, "attr",
+                                       getattr(node, "id", None))])
+            if name in stages]
+    assert hits == []

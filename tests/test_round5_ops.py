@@ -1194,6 +1194,63 @@ def test_kcore_paths_agree(spark, loop_paths):
     assert driver[1] == [("node", "bigint"), ("deg", "bigint")]
 
 
+def _coactive_pairs_brute(events, min_days):
+    """Per-day self-join on the driver: user pairs (a < b) sharing at
+    least ``min_days`` distinct active days."""
+    import collections
+    import itertools
+
+    days = collections.defaultdict(set)
+    for user, ts in events:
+        days[ts.date()].add(user)
+    shared = collections.Counter(
+        pair for users in days.values()
+        for pair in itertools.combinations(sorted(users), 2))
+    return {pair for pair, n in shared.items() if n >= min_days}
+
+
+def test_coactivity_edges_across_day_chunks(spark):
+    """The multi-chunk edge build (a day span of 64 or more) against the
+    brute-force per-day self-join: a seeded 150-day calendar, and a
+    30-day window at days 50-79 behind one early event, so the window
+    straddles the 64-day chunk boundary. There a pair sharing 14 days
+    in the first chunk and 11 in the second is an edge (25 days), and
+    one sharing 14 and 10 is not."""
+    import datetime
+    import random
+
+    from __spark_entry__ import KCORE_MIN_DAYS
+    from geobuf_cpp_spark.operators.graph import coactivity_edges
+
+    assert KCORE_MIN_DAYS == 25
+    day0 = datetime.datetime(2024, 1, 1, tzinfo=datetime.timezone.utc)
+    rng = random.Random(17)
+
+    def at(day):
+        return day0 + datetime.timedelta(days=day,
+                                         seconds=rng.randrange(86400))
+
+    long_cal = [(u, at(d)) for u in range(12) for d in range(150)
+                if rng.random() < 0.4 for _ in range(rng.randint(1, 2))]
+    window = [(99, at(0))]
+    window += [(u, at(d)) for u in range(10) for d in range(50, 80)
+               if rng.random() < 0.85]
+    window += [(u, at(d)) for u, days in ((20, range(50, 75)),
+                                          (21, range(50, 75)),
+                                          (22, range(50, 74)),
+                                          (23, range(50, 74)))
+               for d in days]
+    for events in (long_cal, window):
+        span = max(ts for _, ts in events) - min(ts for _, ts in events)
+        assert span.days >= 64
+        df = spark.createDataFrame(events, "user_id long, ts timestamp")
+        got = {tuple(r) for r in coactivity_edges(df, KCORE_MIN_DAYS)
+               .collect()}
+        want = _coactive_pairs_brute(events, KCORE_MIN_DAYS)
+        assert got == want and 0 < len(want)
+    assert (20, 21) in got and (22, 23) not in got
+
+
 def test_dedup_clusters_paths_agree(spark, loop_paths):
     """Seeded pairs whose endpoints 50-59 are absent from docs_df: both
     paths label them, and give the same rows and dtypes."""

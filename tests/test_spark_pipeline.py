@@ -18,7 +18,7 @@ from geobuf_cpp_spark.functions.udfs import (
     encode_features,
     extract_encode_features,
 )
-from geobuf_cpp_spark.operators.knn import knn_broadcast, knn_distributed
+from geobuf_cpp_spark.operators.knn import _broadcast_topk, knn_distributed
 from geobuf_cpp_spark.operators.pip_join import pip_join
 from geobuf_cpp_spark.operators.tiles import rasterize_tiles, vectorize_raster
 from geobuf_cpp_spark.sources.pages import (
@@ -192,10 +192,11 @@ def test_knn_strategies_agree(spark, features):
     )
     pts = features.select(
         F.xxhash64("url", "feature_idx").alias("point_id"), "lon", "lat")
-    brute = knn_broadcast(pts, queries, k=5).toPandas()
-    rings = knn_distributed(
-        pts, spark.createDataFrame(queries), k=5
+    qdf = spark.createDataFrame(queries)
+    brute = _broadcast_topk(
+        pts, qdf.selectExpr("query_id", "lon AS q_lon", "lat AS q_lat"), 5
     ).toPandas()
+    rings = knn_distributed(pts, qdf, k=5).toPandas()
     b = brute.sort_values(["query_id", "rank"]).reset_index(drop=True)
     r = rings.sort_values(["query_id", "rank"]).reset_index(drop=True)
     pd.testing.assert_frame_equal(
@@ -480,11 +481,10 @@ def test_knn_distributed_boundary_tie_uses_fallback(spark):
     """kth distance exactly equal to the certification radius must NOT be
     certified (strict <): the query takes the exact fallback path and the
     answer still matches brute force. A query with no candidate in its
-    disk takes the fallback too and matches ``knn_broadcast``."""
+    disk takes the fallback too and matches ``_broadcast_topk``."""
     import pandas as pd
 
     from geobuf_cpp_spark.functions.cells import cell_size_deg
-    from geobuf_cpp_spark.operators.knn import knn_broadcast, knn_distributed
 
     res, radius = 7, 2  # knn_distributed's fixed grid and disk
     ext = cell_size_deg(res)[0]  # 1.40625, exactly representable
@@ -509,11 +509,12 @@ def test_knn_distributed_boundary_tie_uses_fallback(spark):
     # second input: query 0 is certified (a point sits on it) and query 1
     # has no point in its radius-2 disk, so it is absent from the top-k
     # rows and only the fallback answers it
-    qpdf = pd.DataFrame({"query_id": [0, 1], "lat": [50.0, -60.0],
-                         "lon": [50.0, -120.0]})
-    got = sorted(tuple(r) for r in knn_distributed(
-        pts, spark.createDataFrame(qpdf), k=1).collect())
-    want = sorted(tuple(r) for r in knn_broadcast(pts, qpdf, 1).collect())
+    qdf = spark.createDataFrame(pd.DataFrame(
+        {"query_id": [0, 1], "lat": [50.0, -60.0], "lon": [50.0, -120.0]}))
+    got = sorted(tuple(r) for r in knn_distributed(pts, qdf, k=1).collect())
+    want = sorted(tuple(r) for r in _broadcast_topk(
+        pts, qdf.selectExpr("query_id", "lon AS q_lon", "lat AS q_lat"), 1
+    ).collect())
     assert got == want and [r[0] for r in got] == [0, 1]
     assert got[0][2] == 3
 
@@ -704,7 +705,7 @@ def test_whole_surface_plan_hygiene(spark):
         "star_centroid",
     }
     py_markers = ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
-                  "FlatMapGroupsInPandas")
+                  "MapInArrow", "FlatMapGroupsInPandas")
     problems = []
     for name, fn in entry.queries().items():
         plan = fn(spark, SF_SMALL)._jdf.queryExecution(
