@@ -373,7 +373,7 @@ def _star_crossing_sql() -> str:
 
 def q_box_polyfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Polyfill (polygon -> covering cell set): the REAL cover builder
-    the PIP broadcast side uses (operators/pip_join.polygon_coverings
+    the PIP join uses (operators/pip_join.polygon_coverings
     over wire polygons), aggregated per admin; the oracle regenerates
     the cover closed-form from the box corners with the shared grid
     index formulas + generate_series."""

@@ -62,11 +62,11 @@ def main() -> None:
 
     section(
         "pip_boxes_join — big side never shuffles",
-        "The polygon covering broadcasts; the points side meets it in a "
-        "BroadcastHashJoin (no Exchange on the scan side), then the exact "
-        "refine is a narrow Arrow stage.",
+        "One MapInArrow over the points scan finds each point's cell, its "
+        "candidate polygons in the covering shipped with the stage, and "
+        "refines them exactly: no join and no Exchange anywhere.",
         E.q_pip_boxes_join(spark, SF_DIR),
-        [r"BroadcastHashJoin", r"BroadcastExchange", r"ArrowEvalPython|MapInPandas"],
+        [r"MapInArrow", r"Scan parquet", r"Join|Exchange"],
     )
     section(
         "bbox_filter — column pruning on derived coordinates",

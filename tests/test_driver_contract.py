@@ -36,7 +36,6 @@ TEST_ONLY_ALLOWED = {
     "str2json2str": "codec surface (reference string round trip)",
     "str2geojson2str": "codec surface (reference string round trip)",
     # numpy reference kernels that tests compare the SQL forms against
-    "cell_of": "reference kernel for sql_cell",
     "cell_parent": "reference kernel for the SQL parent cell",
     "cell_center": "reference kernel for the SQL cell center",
     "ring_cells": "reference kernel for sql_ring_cells",

@@ -314,6 +314,95 @@ def test_pip_join_exact_cover_same_result(spark, features):
     assert a == b
 
 
+def _with_neighbours(values):
+    """``values`` plus each one's next double below and above."""
+    v = np.asarray(values, dtype=np.float64)
+    return np.concatenate([v, np.nextafter(v, -np.inf), np.nextafter(v, np.inf)])
+
+
+def test_cell_of_matches_spark_sql_cell_on_cell_edges(spark):
+    """pip_join finds each point's cell with numpy ``cell_of``, the gates'
+    SQL with ``sql_cell`` on the JVM: both must agree on every cell edge,
+    on the doubles either side of it and at the +-180 / +-90 clamps."""
+    from __spark_entry__ import PIP_RES
+
+    for res in (8, PIP_RES):
+        n = 1 << res
+        k = np.arange(n + 1, dtype=np.float64)
+        lon = _with_neighbours(np.r_[k / n * 360.0 - 180.0, -180.0, 180.0])
+        lat = _with_neighbours(np.r_[k / n * 180.0 - 90.0, -90.0, 90.0])
+        lat = np.concatenate([lat, np.random.default_rng(res).permutation(lat)])
+        lon = np.resize(lon, len(lat))
+        pdf = pd.DataFrame({"i": np.arange(len(lat)), "lat": lat, "lon": lon})
+        got = (
+            spark.createDataFrame(pdf)
+            .select("i", F.expr(C.sql_cell("lat", "lon", res)).alias("cell"))
+            .toPandas().sort_values("i")["cell"].to_numpy()
+        )
+        assert np.array_equal(got, C.cell_of(lat, lon, res)), res
+
+
+@pytest.mark.parametrize("res", [8, 6])
+def test_pip_join_polygon_on_cell_edges_matches_brute_force(spark, res):
+    """An L-shaped polygon whose every vertex is a cell corner, probed at
+    the cell edges, their neighbouring doubles and the cell centres:
+    pip_join (bbox and exact cover) equals brute-force ``pip_mask``."""
+    from geobuf_cpp_spark.functions.geometry import pip_mask
+
+    h, w = C.cell_size_deg(res)
+    x0, y0 = 10 * w - 180.0, 40 * h - 90.0  # a cell corner
+    ring = np.array([[0, 0], [4, 0], [4, 1], [1, 1], [1, 3], [0, 3], [0, 0]],
+                    dtype=np.float64) * [w, h] + [x0, y0]
+    admin = pd.DataFrame({"admin_id": [7], "geom": [{
+        "type": 4, "dim": 2, "lengths": [len(ring)],
+        "coords": ring.ravel().tolist()}]})
+    xs = _with_neighbours(x0 + w * np.arange(-1, 6))
+    ys = _with_neighbours(y0 + h * np.arange(-1, 5))
+    xs = np.r_[xs, x0 + w * (np.arange(-1, 5) + 0.5)]
+    ys = np.r_[ys, y0 + h * (np.arange(-1, 4) + 0.5)]
+    px, py = (a.ravel() for a in np.meshgrid(xs, ys))
+    pts = spark.createDataFrame(pd.DataFrame(
+        {"point_id": np.arange(len(px)), "lon": px, "lat": py}))
+    want = set(np.flatnonzero(pip_mask(px, py, [ring])).tolist())
+    assert 0 < len(want) < len(px)
+    for exact in (False, True):
+        got = [r.point_id for r in pip_join(pts, admin, res, exact).collect()]
+        assert sorted(got) == sorted(want), exact
+
+
+def test_pip_join_null_coordinates_give_no_rows(spark):
+    """A null (or NaN) lon or lat has no cell: no output row, and no
+    NaN-cast cell 0 candidate even where a polygon covers cell 0."""
+    import warnings
+
+    import pyarrow as pa
+
+    from geobuf_cpp_spark.operators import pip_join as PJ
+
+    ring = [-180.0, -90.0, -170.0, -90.0, -170.0, -80.0, -180.0, -80.0,
+            -180.0, -90.0]  # covers the cell a NaN cast would land in
+    admin = pd.DataFrame({"admin_id": [1], "geom": [
+        {"type": 4, "dim": 2, "lengths": [5], "coords": ring}]})
+    rows = [(0, -175.0, -85.0), (1, None, -85.0), (2, -175.0, None),
+            (3, None, None), (4, float("nan"), -85.0), (5, 0.0, 0.0)]
+    pts = spark.createDataFrame(rows, "point_id long, lon double, lat double")
+    out = pip_join(pts, admin, res=8)
+    assert out.schema.simpleString() == (
+        "struct<point_id:bigint,lon:double,lat:double,admin_id:bigint>")
+    assert [(r.point_id, r.admin_id) for r in out.collect()] == [(0, 1)]
+
+    # the batch body itself raises no numpy RuntimeWarning on them
+    cover = PJ.polygon_coverings(admin, 8)
+    batch = pa.RecordBatch.from_pylist(
+        [dict(zip(("point_id", "lon", "lat"), r)) for r in rows])
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        got = PJ._pip_batch(batch, 8, cover["cell"].to_numpy(),
+                            cover["admin_id"].to_numpy(),
+                            {1: PJ._rings(admin["geom"][0])})
+    assert got.column("point_id").to_pylist() == [0]
+
+
 def test_custom_properties_spark_roundtrip(spark, tmp_path):
     """The reference's signature extension — custom members at geometry,
     feature, AND feature-collection level (wire tag 15,
@@ -624,13 +713,16 @@ def _plan_of(spark, name):
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_plan_guard_pip_join_broadcasts_boxes(spark):
-    """PIP join must broadcast the admin-box side: the corpus side joins
-    with NO hash-partition shuffle (at 100 TB the shuffle IS the cost)."""
+def test_plan_guard_pip_join_one_arrow_stage_over_points(spark):
+    """PIP join is one Arrow stage over the points scan: no join and no
+    exchange of any kind, so the corpus side never shuffles (at 100 TB
+    the shuffle IS the cost) and each point crosses to Python once."""
     plan = _plan_of(spark, "pip_boxes_join")
-    assert "BroadcastHashJoin" in plan, plan[:1500]
-    assert "SortMergeJoin" not in plan
-    assert "Exchange hashpartitioning" not in plan, plan[:1500]
+    for node in ("Exchange", "SortMergeJoin", "Join", "CartesianProduct"):
+        assert node not in plan, (node, plan[:1500])
+    assert plan.count("MapInArrow") == 1, plan[:1500]
+    below = plan.split("MapInArrow", 1)[1]
+    assert "FileScan parquet" in below and "orders.parquet" in below, plan[:1500]
 
 
 def test_plan_guard_topk_uses_window_group_limit(spark):
