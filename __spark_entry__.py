@@ -37,7 +37,7 @@ from geobuf_cpp_spark.operators.curation import sql_knuth_hash
 from geobuf_cpp_spark.plans.partitioning import spread
 from geobuf_cpp_spark.session import process_tmpdir, session_memo, ship_package
 from geobuf_cpp_spark.sources import points as P
-from geobuf_cpp_spark.sources.readers import table_df
+from geobuf_cpp_spark.sources.readers import sql_df, table_df
 
 from geobuf_cpp_spark.operators.segments import sql_segments_intersect
 
@@ -99,8 +99,7 @@ def q_value_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Integer-unit histogram of the events value measure per type —
     binning floats without float drift (exact two-decimal recovery,
     then integer division)."""
-    _prep(spark, sf_dir, "events")
-    return spark.sql(VALUE_HIST_SQL.replace("//", "div"))
+    return sql_df(spark, sf_dir, VALUE_HIST_SQL.replace("//", "div"), "events")
 
 
 # Q3-style shipping priority over the 3-way join, with revenue in exact
@@ -225,25 +224,6 @@ BOXES_CTE = f"boxes AS ({P.BOXES_SELECT})"
 QUERIES_CTE = f"qs AS ({P.QUERIES_SELECT})"
 
 
-def _prep(spark: SparkSession, sf_dir: str, *tables: str) -> None:
-    ship_package(spark)
-    for t in tables:
-        # NOTE on scan parallelism: the test tables are ONE parquet row
-        # group each, so a scan is ONE task and a query's map side
-        # serializes on one core until its first exchange. The fix
-        # lives in the OPERATORS, not here: functions whose map side is
-        # heavy per row (token/shingle explodes, md5/regex per token,
-        # Python stages) call plans.partitioning.spread() on their own
-        # input — conditional, a no-op at production layouts where scan
-        # splits >= parallelism (guide §2.5). A blanket repartition here
-        # was measured BOTH ways at sf0.1: it wins big on token-heavy
-        # gates but taxes every cheap scan+agg with an exchange that
-        # costs more than the one-core scan, netting ~zero — so plain
-        # views stay. Readers and shared subresults: see
-        # session.session_memo.
-        table_df(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
 def _shared_df(spark: SparkSession, sf_dir: str, key, build,
                how: str = "persist"):
     """A derived input that sibling gates share: the first consumer in a
@@ -267,9 +247,8 @@ def _gate_dir(name: str) -> str:
 def _docs_sketch(spark: SparkSession, sf_dir: str, sketch) -> DataFrame:
     """``sketch(documents)``, shared by the gates that read it; the sketch
     function is its own key."""
-    _prep(spark, sf_dir, "documents")
     return _shared_df(spark, sf_dir, sketch,
-                      lambda: sketch(spark.table("documents")))
+                      lambda: sketch(table_df(spark, sf_dir, "documents")))
 
 
 # ---------------------------------------------------------------------------
@@ -429,9 +408,8 @@ def q_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     trick that makes k-means/IVF centroid updates summation-order-free
     (plain double sums hash-differ across partitionings). The caller
     divides qsum/n/scale once at the end."""
-    _prep(spark, sf_dir, "embeddings")
     return (
-        spark.table("embeddings")
+        table_df(spark, sf_dir, "embeddings")
         .select("label", F.posexplode("embedding").alias("dim", "v"))
         .groupBy("label", "dim")
         .agg(
@@ -456,12 +434,10 @@ def q_zonemap_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         zone_pruned_read,
     )
 
-    _prep(spark, sf_dir, "orders")
-
     def build() -> str:
         path = _gate_dir("zonemap")
-        spark.sql(P.IPOINTS_SELECT).repartitionByRange(16, "ix").write.mode(
-            "overwrite").parquet(path)
+        pts = sql_df(spark, sf_dir, P.IPOINTS_SELECT, "orders")
+        pts.repartitionByRange(16, "ix").write.mode("overwrite").parquet(path)
         return path
 
     path = session_memo(spark, q_zonemap_query, build, sf_dir)
@@ -477,8 +453,7 @@ def q_hex_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     via UNION ALL + window min (independent plan, identical integers)."""
     from geobuf_cpp_spark.functions.cells import hex_bin
 
-    _prep(spark, sf_dir, "orders")
-    return hex_bin(spark.sql(P.IPOINTS_SELECT))
+    return hex_bin(sql_df(spark, sf_dir, P.IPOINTS_SELECT, "orders"))
 
 
 def q_quadkey_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -497,8 +472,8 @@ def q_ship_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3-shaped shipping priority: customer⨝orders⨝lineitem with
     exact-integer revenue (cents x basis points). Catalyst broadcasts
     the filtered customer side; the top-10 is TakeOrderedAndProject."""
-    _prep(spark, sf_dir, "lineitem", "orders", "customer")
-    return spark.sql(SHIP_PRIORITY_SQL)
+    return sql_df(spark, sf_dir, SHIP_PRIORITY_SQL,
+                  "lineitem", "orders", "customer")
 
 
 def q_local_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -506,9 +481,8 @@ def q_local_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     exercises Catalyst's join reordering + broadcast selection on the
     dimension chain (region/nation/supplier broadcast; only the
     orders⨝lineitem edge shuffles)."""
-    _prep(spark, sf_dir, "lineitem", "orders", "customer", "supplier",
-          "nation", "region")
-    return spark.sql(LOCAL_VOLUME_SQL)
+    return sql_df(spark, sf_dir, LOCAL_VOLUME_SQL, "lineitem", "orders",
+                  "customer", "supplier", "nation", "region")
 
 
 PROFILE_COLS = ["o_orderkey", "o_custkey", "o_orderstatus",
@@ -521,11 +495,11 @@ def q_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     unpivots via stack)."""
     from geobuf_cpp_spark.operators.profile import profile_table
 
-    _prep(spark, sf_dir, "orders")
     # the multi-distinct Expand multiplies every scanned row x(cols+1)
     # map-side — spread the single-split scan so that work fans out
     # (no-op on multi-split production layouts)
-    return profile_table(spread(spark.table("orders")), PROFILE_COLS)
+    return profile_table(spread(table_df(spark, sf_dir, "orders")),
+                         PROFILE_COLS)
 
 
 def q_kmv_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -534,21 +508,19 @@ def q_kmv_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-group bottom-k map-side)."""
     from geobuf_cpp_spark.operators.sketches import kmv_sketch_grouped
 
-    _prep(spark, sf_dir, "documents")
-    return kmv_sketch_grouped(spark.table("documents"))
+    return kmv_sketch_grouped(table_df(spark, sf_dir, "documents"))
 
 
 def q_interarrival(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user event inter-arrival statistics in exact integer
     microseconds (lag over the (ts, event_id) order): gap count,
     min/max gap — the burstiness profile telemetry pipelines compute."""
-    _prep(spark, sf_dir, "events")
     from pyspark.sql import Window
 
     us = F.expr("unix_micros(cast(ts as timestamp))")
     w = Window.partitionBy("user_id").orderBy(us.asc(), F.col("event_id").asc())
     gaps = (
-        spark.table("events")
+        table_df(spark, sf_dir, "events")
         .select("user_id", (us - F.lag(us).over(w)).alias("gap_us"))
         .filter(F.col("gap_us").isNotNull())
     )
@@ -563,8 +535,7 @@ def q_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source duplication report — the summary every curation run
     prints: docs, distinct texts, duplicates removed, dup rate in
     basis points (integer, so the gate stays drift-free)."""
-    _prep(spark, sf_dir, "documents")
-    docs = spark.table("documents")
+    docs = table_df(spark, sf_dir, "documents")
     return (
         docs.groupBy("source")
         .agg(
@@ -591,8 +562,8 @@ def q_mixture_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream serves 'en' 3x as often as 'fr' at every prefix."""
     from geobuf_cpp_spark.operators.curation import mixture_interleave
 
-    _prep(spark, sf_dir, "documents")
-    return mixture_interleave(spark.table("documents"), MIX_WEIGHTS)
+    return mixture_interleave(table_df(spark, sf_dir, "documents"),
+                              MIX_WEIGHTS)
 
 
 PYRAMID_Z_BASE, PYRAMID_Z_MIN = 6, 3
@@ -654,9 +625,9 @@ SIMPLIFY_GOLDEN_VALUES = (
 def _planted_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The planted 5-vertex zigzag LineStrings (wire structs) shared by
     the simplify and geom_bbox gates."""
-    _prep(spark, sf_dir, "orders")
     amp = "CASE {k} % 5 " + SIMPLIFY_AMPS + " END"
-    return spark.table("orders").filter("o_orderkey % 17 = 0").selectExpr(
+    orders = table_df(spark, sf_dir, "orders")
+    return orders.filter("o_orderkey % 17 = 0").selectExpr(
         "o_orderkey AS line_id",
         "named_struct("
         "'type', CAST(2 AS TINYINT), 'dim', CAST(2 AS TINYINT), "
@@ -680,8 +651,7 @@ def q_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geobuf_cpp_spark.functions.cells import sql_quadkey
     from geobuf_cpp_spark.plans.compaction import compaction_plan
 
-    _prep(spark, sf_dir, "orders")
-    keyed = spark.sql(P.POINTS_SELECT).selectExpr(
+    keyed = P.points_df(spark, sf_dir).selectExpr(
         "point_id",
         sql_quadkey("lat", "lon", COMPACT_PREFIX_RES) + " AS prefix",
     )
@@ -729,9 +699,8 @@ def q_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both engines' levenshtein agree on ASCII; DuckDB's is byte-based on
     multibyte text, so non-ASCII corpora need a normalization pass first
     (documented, not hit here)."""
-    _prep(spark, sf_dir, "part")
     names = (
-        spark.table("part").select("p_name").distinct()
+        table_df(spark, sf_dir, "part").select("p_name").distinct()
         .select(
             F.col("p_name").alias("name"),
             F.element_at(F.split("p_name", " "), -1).alias("blk"),
@@ -759,8 +728,8 @@ def q_token_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     reconstructed text content byte-for-byte."""
     from geobuf_cpp_spark.operators.chunking import token_windows
 
-    _prep(spark, sf_dir, "documents")
-    return token_windows(spark.table("documents"), CHUNK_SIZE, CHUNK_STRIDE)
+    return token_windows(table_df(spark, sf_dir, "documents"), CHUNK_SIZE,
+                         CHUNK_STRIDE)
 
 
 def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -768,8 +737,7 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf, first_pos) via posexplode — the IR building block; positions are
     1-based indexes into the raw split array so both engines count
     identically."""
-    _prep(spark, sf_dir, "documents")
-    toks = spark.table("documents").select(
+    toks = table_df(spark, sf_dir, "documents").select(
         "doc_id",
         F.posexplode(F.split("text", " ")).alias("pos0", "term"),
     ).filter(F.col("term") != "")
@@ -785,8 +753,7 @@ def q_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     primitive, gated without transcendental floats."""
     from geobuf_cpp_spark.operators.textstats import tfidf_topk
 
-    _prep(spark, sf_dir, "documents")
-    return tfidf_topk(spark.table("documents"))
+    return tfidf_topk(table_df(spark, sf_dir, "documents"))
 
 
 
@@ -809,8 +776,7 @@ def q_geohash_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_cell_month_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spatio-temporal rollup: order counts per (coarse cell, month) —
     shared SQL text executed verbatim by both engines."""
-    _prep(spark, sf_dir, "orders")
-    return spark.sql(CELL_MONTH_SQL)
+    return sql_df(spark, sf_dir, CELL_MONTH_SQL, "orders")
 
 
 def q_admin_areas(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -855,10 +821,9 @@ def q_nearest_admin(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus shuffle."""
     from geobuf_cpp_spark.operators.nearest import nearest_box
 
-    _prep(spark, sf_dir, "orders", "nation")
-    pts = spark.sql(P.IPOINTS_SELECT).selectExpr(
+    pts = sql_df(spark, sf_dir, P.IPOINTS_SELECT, "orders").selectExpr(
         "point_id", "ix - 18000 AS ix", "iy - 8500 AS iy")
-    boxes = spark.sql(P.IBOXES_SELECT)
+    boxes = sql_df(spark, sf_dir, P.IBOXES_SELECT, "nation")
     return nearest_box(pts, boxes)
 
 
@@ -870,12 +835,13 @@ def q_nearest_admin_geo(spark: SparkSession, sf_dir: str) -> DataFrame:
     nearest. Broadcast dimension + min(struct) map-side aggregate."""
     from geobuf_cpp_spark.operators.nearest import nearest_center_geo
 
-    _prep(spark, sf_dir, "orders", "nation")
-    centers = spark.sql(
+    centers = sql_df(
+        spark, sf_dir,
         "SELECT CAST(n_nationkey AS BIGINT) AS admin_id, "
         f"CAST({P.STAR_CX_SQL} AS BIGINT) AS ix, "
-        f"CAST({P.STAR_CY_SQL} AS BIGINT) AS iy FROM nation")
-    return nearest_center_geo(spark.sql(P.IPOINTS_SELECT), centers)
+        f"CAST({P.STAR_CY_SQL} AS BIGINT) AS iy FROM nation", "nation")
+    return nearest_center_geo(
+        sql_df(spark, sf_dir, P.IPOINTS_SELECT, "orders"), centers)
 
 
 def q_quality_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -884,9 +850,8 @@ def q_quality_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     decomposition) — the quality-bucketed mixture-construction step."""
     from geobuf_cpp_spark.operators.curation import exact_rank_buckets
 
-    _prep(spark, sf_dir, "documents")
     return exact_rank_buckets(
-        spark.table("documents"), "n_chars", "doc_id"
+        table_df(spark, sf_dir, "documents"), "n_chars", "doc_id"
     ).withColumnRenamed("bucket", "decile")
 
 
@@ -896,13 +861,14 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     compiles to WindowGroupLimit so shuffle volume is O(keys)."""
     from geobuf_cpp_spark.operators.merge import merge_upsert
 
-    _prep(spark, sf_dir, "customer", "orders")
-    base = spark.sql(
+    base = sql_df(
+        spark, sf_dir,
         "SELECT c_custkey AS custkey, c_mktsegment AS segment, "
-        "TIMESTAMP '1990-01-01 00:00:00' AS ts FROM customer")
-    updates = spark.sql(
+        "TIMESTAMP '1990-01-01 00:00:00' AS ts FROM customer", "customer")
+    updates = sql_df(
+        spark, sf_dir,
         "SELECT o_custkey AS custkey, o_orderpriority AS segment, "
-        "CAST(o_orderdate AS TIMESTAMP) AS ts FROM orders")
+        "CAST(o_orderdate AS TIMESTAMP) AS ts FROM orders", "orders")
     return merge_upsert(base, updates, ["custkey"], "ts")
 
 
@@ -966,12 +932,11 @@ def q_geobuf_roundtrip_3d(spark: SparkSession, sf_dir: str) -> DataFrame:
     alt) with the shared-e max."""
     from geobuf_cpp_spark.functions.udfs import with_point_roundtrip
 
-    _prep(spark, sf_dir, "orders")
-    pts = spark.sql(
+    pts = sql_df(
+        spark, sf_dir,
         "SELECT o_orderkey AS point_id, "
         f"{P.POINT_LON_SQL} AS lon, {P.POINT_LAT_SQL} AS lat, "
-        f"{ALT_SQL} AS alt FROM orders"
-    )
+        f"{ALT_SQL} AS alt FROM orders", "orders")
     return with_point_roundtrip(
         spread(pts), ["lon", "lat", "alt"], MAX_PRECISION
     ).select("point_id", "rt_lon", "rt_lat", "rt_alt")
@@ -1060,43 +1025,40 @@ def q_geobuf_files(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark, sf_dir, "events")
-    return spark.sql(
+    return sql_df(
+        spark, sf_dir,
         "SELECT date_trunc('hour', ts) AS hour, event_type, "
         "count(*) AS n, min(value) AS min_value, max(value) AS max_value "
-        "FROM events GROUP BY date_trunc('hour', ts), event_type"
-    )
+        "FROM events GROUP BY date_trunc('hour', ts), event_type", "events")
 
 
 def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark, sf_dir, "lineitem")
-    return spark.sql(
+    return sql_df(
+        spark, sf_dir,
         "SELECT l_returnflag, l_linestatus, count(*) AS n, "
         "sum(l_quantity) AS sum_qty, count(DISTINCT l_orderkey) AS n_orders "
-        "FROM lineitem GROUP BY l_returnflag, l_linestatus"
-    )
+        "FROM lineitem GROUP BY l_returnflag, l_linestatus", "lineitem")
 
 
 def q_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join + agg + deterministic top-k (ties broken by key)."""
-    _prep(spark, sf_dir, "orders", "customer")
-    return spark.sql(
+    return sql_df(
+        spark, sf_dir,
         "SELECT c.c_custkey, c.c_mktsegment, count(*) AS n_orders "
         "FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey "
         "GROUP BY c.c_custkey, c.c_mktsegment "
-        "ORDER BY n_orders DESC, c.c_custkey ASC LIMIT 10"
-    )
+        "ORDER BY n_orders DESC, c.c_custkey ASC LIMIT 10",
+        "orders", "customer")
 
 
 def q_last_event_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Window top-1 per key (deduplication-by-recency, a standard pipeline op)."""
-    _prep(spark, sf_dir, "events")
-    return spark.sql(
+    return sql_df(
+        spark, sf_dir,
         "SELECT user_id, event_id, event_type FROM ("
         "SELECT user_id, event_id, event_type, "
         "ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn "
-        "FROM events) t WHERE rn = 1"
-    )
+        "FROM events) t WHERE rn = 1", "events")
 
 
 def q_rolling_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1104,8 +1066,7 @@ def q_rolling_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     window frame over integer microseconds — exact in both engines)."""
     from pyspark.sql import Window
 
-    _prep(spark, sf_dir, "events")
-    ev = spark.table("events")
+    ev = table_df(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
         .orderBy(F.unix_micros(F.col("ts").cast("timestamp")))
@@ -1119,37 +1080,35 @@ def q_rolling_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact discrete p50/p95 per event type via row_number selection —
     no interpolation, so the value is engine-portable by construction."""
-    _prep(spark, sf_dir, "events")
-    return spark.sql(QUANTILES_SQL)
+    return sql_df(spark, sf_dir, QUANTILES_SQL, "events")
 
 
 def q_nation_rollup_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUP BY ROLLUP over the region/nation hierarchy (super-aggregate
     rows carry NULL group keys in both engines)."""
-    _prep(spark, sf_dir, "region", "nation", "customer")
-    return spark.sql(ROLLUP_SQL)
+    return sql_df(spark, sf_dir, ROLLUP_SQL, "region", "nation", "customer")
 
 
 def q_customers_no_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-anti join: customers that never ordered."""
-    _prep(spark, sf_dir, "customer", "orders")
-    cust = spark.table("customer").select("c_custkey", "c_mktsegment")
-    orders = spark.table("orders").select(F.col("o_custkey").alias("c_custkey"))
+    cust = table_df(spark, sf_dir, "customer").select(
+        "c_custkey", "c_mktsegment")
+    orders = table_df(spark, sf_dir, "orders").select(
+        F.col("o_custkey").alias("c_custkey"))
     return cust.join(orders, "c_custkey", "left_anti")
 
 
 def q_region_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-way dim join rollup (broadcast-friendly star shape)."""
-    _prep(spark, sf_dir, "region", "nation", "customer", "orders")
-    return spark.sql(
+    return sql_df(
+        spark, sf_dir,
         "SELECT r.r_name, count(*) AS n_orders, "
         "count(DISTINCT c.c_custkey) AS n_customers "
         "FROM orders o "
         "JOIN customer c ON o.o_custkey = c.c_custkey "
         "JOIN nation n ON c.c_nationkey = n.n_nationkey "
         "JOIN region r ON n.n_regionkey = r.r_regionkey "
-        "GROUP BY r.r_name"
-    )
+        "GROUP BY r.r_name", "region", "nation", "customer", "orders")
 
 
 def q_lang_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1159,9 +1118,8 @@ def q_lang_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     window-rank formulation (independent derivation, same definition)."""
     from geobuf_cpp_spark.operators.grouped_stats import grouped_quantiles
 
-    _prep(spark, sf_dir, "documents")
     return grouped_quantiles(
-        spark.table("documents"), "lang", "n_chars",
+        table_df(spark, sf_dir, "documents"), "lang", "n_chars",
         [(1, 2, "p50_chars"), (9, 10, "p90_chars")],
     )
 
@@ -1178,8 +1136,8 @@ def q_snapshot_reads(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_snapshot,
     )
 
-    _prep(spark, sf_dir, "documents")
-    docs = spark.table("documents").select("doc_id", "lang", "n_chars")
+    docs = table_df(spark, sf_dir, "documents").select(
+        "doc_id", "lang", "n_chars")
     table = _gate_dir("snapshot_reads")
     write_snapshot(docs.where("doc_id % 2 = 0"), table, mode="overwrite")
     write_snapshot(docs.where("doc_id % 2 = 1"), table, mode="append")
@@ -1207,8 +1165,7 @@ def q_snapshot_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_snapshot,
     )
 
-    _prep(spark, sf_dir, "documents")
-    docs = spark.table("documents")
+    docs = table_df(spark, sf_dir, "documents")
     table = _gate_dir("snapshot_evolve")
     write_snapshot(docs.where("doc_id % 2 = 0").select("doc_id", "lang"),
                    table, mode="overwrite")
@@ -1230,8 +1187,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     bearing, distinguishing this from exact_dedup's plain min(doc_id)."""
     from geobuf_cpp_spark.streaming.dedup_stream import dedup_batch_twin
 
-    _prep(spark, sf_dir, "documents")
-    docs = spark.table("documents").withColumn(
+    docs = table_df(spark, sf_dir, "documents").withColumn(
         "ts",
         F.expr(
             "timestamp '2024-01-01 00:00:00' "
@@ -1246,10 +1202,9 @@ def q_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     order is engine-specific, the session STRUCTURE is the contract)."""
     from geobuf_cpp_spark.streaming.sessions import sessionize_batch
 
-    _prep(spark, sf_dir, "events")
-    return sessionize_batch(spark.table("events"), gap_seconds=SESSION_GAP_S).select(
-        "user_id", "session_start", "session_end", "n_events"
-    )
+    return sessionize_batch(
+        table_df(spark, sf_dir, "events"), gap_seconds=SESSION_GAP_S
+    ).select("user_id", "session_start", "session_end", "n_events")
 
 
 def q_asof_view(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1257,8 +1212,7 @@ def q_asof_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     before it (NULL when none) — single shuffle + running window, no join."""
     from geobuf_cpp_spark.operators.asof import asof_join
 
-    _prep(spark, sf_dir, "events")
-    ev = spark.table("events")
+    ev = table_df(spark, sf_dir, "events")
     clicks = ev.filter("event_type = 'click'").select("user_id", "ts", "event_id")
     views = ev.filter("event_type = 'view'").select(
         "user_id", "ts", "event_id", "value"
@@ -1274,8 +1228,7 @@ def q_interval_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the user's views in the trailing 30 minutes (streaming.joins)."""
     from geobuf_cpp_spark.streaming.joins import interval_join_batch
 
-    _prep(spark, sf_dir, "events")
-    ev = spark.table("events")
+    ev = table_df(spark, sf_dir, "events")
     clicks = ev.filter("event_type = 'click'").select("user_id", "ts", "event_id")
     views = ev.filter("event_type = 'view'").selectExpr(
         "user_id", "ts", "event_id AS view_event_id"
@@ -1292,8 +1245,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     reachable id. An ITERATIVE algorithm with a full value oracle."""
     from geobuf_cpp_spark.operators.dedup import dedup_clusters
 
-    _prep(spark, sf_dir, "documents")
-    docs = spark.table("documents")
+    docs = table_df(spark, sf_dir, "documents")
     # the ngram_jaccard gate's edge list, shared
     return dedup_clusters(docs, q_ngram_jaccard(spark, sf_dir))
 
@@ -1301,22 +1253,19 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geobuf_cpp_spark.operators.dedup import exact_dedup
 
-    _prep(spark, sf_dir, "documents")
-    return exact_dedup(spark.table("documents"))
+    return exact_dedup(table_df(spark, sf_dir, "documents"))
 
 
 def q_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geobuf_cpp_spark.operators.textstats import doc_stats
 
-    _prep(spark, sf_dir, "documents")
-    return doc_stats(spark.table("documents"))
+    return doc_stats(table_df(spark, sf_dir, "documents"))
 
 
 def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geobuf_cpp_spark.operators.textstats import quality_score
 
-    _prep(spark, sf_dir, "documents")
-    return quality_score(spark.table("documents"))
+    return quality_score(table_df(spark, sf_dir, "documents"))
 
 
 def q_source_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1325,8 +1274,7 @@ def q_source_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     float resolve stays with the caller."""
     from geobuf_cpp_spark.operators.textstats import source_quality_ci
 
-    _prep(spark, sf_dir, "documents")
-    return source_quality_ci(spark.table("documents"))
+    return source_quality_ci(table_df(spark, sf_dir, "documents"))
 
 
 def _source_quality_sql() -> str:
@@ -1359,22 +1307,20 @@ def _source_quality_sql() -> str:
 def q_lang_signal(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geobuf_cpp_spark.operators.textstats import lang_signal
 
-    _prep(spark, sf_dir, "documents")
-    return lang_signal(spark.table("documents"))
+    return lang_signal(table_df(spark, sf_dir, "documents"))
 
 
 def q_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geobuf_cpp_spark.operators.textstats import fingerprints
 
-    _prep(spark, sf_dir, "documents")
-    return fingerprints(spark.table("documents"))
+    return fingerprints(table_df(spark, sf_dir, "documents"))
 
 
 def q_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geobuf_cpp_spark.operators.dedup import minhash_lsh_pairs
 
-    _prep(spark, sf_dir, "documents")
-    return minhash_lsh_pairs(spark.table("documents"), threshold=MINHASH_THRESHOLD)
+    return minhash_lsh_pairs(table_df(spark, sf_dir, "documents"),
+                             threshold=MINHASH_THRESHOLD)
 
 
 INCR_SPLIT = 4   # doc_id % 4 == 0 plays the incoming crawl batch
@@ -1394,11 +1340,9 @@ def q_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         incremental_neardup,
     )
 
-    _prep(spark, sf_dir, "documents")
-    corpus = spark.table("documents").filter(
-        f"doc_id % {INCR_SPLIT} != 0")
-    batch = spark.table("documents").filter(
-        f"doc_id % {INCR_SPLIT} = 0")
+    docs = table_df(spark, sf_dir, "documents")
+    corpus = docs.filter(f"doc_id % {INCR_SPLIT} != 0")
+    batch = docs.filter(f"doc_id % {INCR_SPLIT} = 0")
 
     def build() -> str:
         table = _gate_dir("signature_index")
@@ -1413,8 +1357,8 @@ def q_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geobuf_cpp_spark.operators.dedup import simhash_pairs
 
-    _prep(spark, sf_dir, "documents")
-    return simhash_pairs(spark.table("documents"), max_hamming=SIMHASH_MAX_HAMMING)
+    return simhash_pairs(table_df(spark, sf_dir, "documents"),
+                         max_hamming=SIMHASH_MAX_HAMMING)
 
 
 def q_corpus_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1425,8 +1369,7 @@ def q_corpus_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geobuf_cpp_spark.operators.dedup import exact_dedup
     from geobuf_cpp_spark.operators.textstats import lang_signal, quality_score
 
-    _prep(spark, sf_dir, "documents")
-    docs = spark.table("documents")
+    docs = table_df(spark, sf_dir, "documents")
     quality = quality_score(docs).filter("keep = 1").select("doc_id", "n_tokens")
     lang = lang_signal(docs).filter("pred_en = 1").select("doc_id")
     keepers = exact_dedup(docs).select(F.col("keeper_id").alias("doc_id"))
@@ -1442,15 +1385,13 @@ def q_doc_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     the id — reproducible across engines, runs, and cluster sizes (the
     property training-data sampling needs; rand()-based sampling has none
     of them). Shared SQL text."""
-    _prep(spark, sf_dir, "documents")
-    return spark.sql(DOC_SAMPLE_SQL)
+    return sql_df(spark, sf_dir, DOC_SAMPLE_SQL, "documents")
 
 
 def q_top_docs_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Curation: top-5 documents per language by (token count, id) — the
     group-wise top-k every corpus-mixing recipe runs. Shared SQL text."""
-    _prep(spark, sf_dir, "documents")
-    return spark.sql(TOP_DOCS_SQL)
+    return sql_df(spark, sf_dir, TOP_DOCS_SQL, "documents")
 
 
 def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1459,8 +1400,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     on md5(text), broadcastable held-out side."""
     from geobuf_cpp_spark.operators.dedup import decontaminate
 
-    _prep(spark, sf_dir, "documents")
-    docs = spark.table("documents")
+    docs = table_df(spark, sf_dir, "documents")
     in_sample = F.expr(sql_knuth_hash("doc_id")) < F.lit(429496730)
     heldout = docs.filter(in_sample)
     train = docs.filter(~in_sample)
@@ -1472,15 +1412,13 @@ def q_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenizer-recipe first query) — all JVM, ties on binary term order."""
     from geobuf_cpp_spark.operators.textstats import top_terms
 
-    _prep(spark, sf_dir, "documents")
-    return top_terms(spark.table("documents"))
+    return top_terms(table_df(spark, sf_dir, "documents"))
 
 
 def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geobuf_cpp_spark.operators.textstats import token_counts
 
-    _prep(spark, sf_dir, "documents")
-    return token_counts(spark.table("documents"))
+    return token_counts(table_df(spark, sf_dir, "documents"))
 
 
 def q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1611,10 +1549,9 @@ def _shared_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline)."""
     from geobuf_cpp_spark.operators.dedup import shingle_sets
 
-    _prep(spark, sf_dir, "documents")
     return _shared_df(
         spark, sf_dir, "shingles",
-        lambda: shingle_sets(spark.table("documents")), how="ckpt")
+        lambda: shingle_sets(table_df(spark, sf_dir, "documents")), how="ckpt")
 
 
 def q_media_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1692,10 +1629,10 @@ def _range_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     set and `ripley_k` re-aggregates it — one blocked join, two gates."""
     from geobuf_cpp_spark.operators.range_join import range_self_join
 
-    _prep(spark, sf_dir, "orders")
     return _shared_df(
         spark, sf_dir, "range_pairs",
-        lambda: range_self_join(spark.sql(P.IPOINTS_SELECT), RANGE_RADIUS))
+        lambda: range_self_join(
+            sql_df(spark, sf_dir, P.IPOINTS_SELECT, "orders"), RANGE_RADIUS))
 
 
 RIPLEY_RADII = (30, 60, 100)  # centidegrees; max must equal RANGE_RADIUS
@@ -1708,7 +1645,7 @@ def q_ripley_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     -stats family: global Moran's I, local Gi*, now the multi-scale
     clustering curve."""
     pairs = _range_pairs(spark, sf_dir)
-    pts = spark.sql(P.IPOINTS_SELECT)
+    pts = sql_df(spark, sf_dir, P.IPOINTS_SELECT, "orders")
     tot = pts.agg(F.count("*").cast("long").alias("n_points"))
     # coalesce: a radius with ZERO pairs (sparse SFs) must report 0,
     # not the empty-agg NULL
@@ -1731,9 +1668,8 @@ def q_range_join_wrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle brute-forces the wrapped metric least(|dx|, P-|dx|)."""
     from geobuf_cpp_spark.operators.range_join import range_self_join
 
-    _prep(spark, sf_dir, "orders")
-    return range_self_join(spark.sql(P.IPOINTS_SELECT), RANGE_RADIUS,
-                           wrap_x=X_PERIOD)
+    return range_self_join(sql_df(spark, sf_dir, P.IPOINTS_SELECT, "orders"),
+                           RANGE_RADIUS, wrap_x=X_PERIOD)
 
 
 GEO_RADIUS = 100            # great-circle radius, centidegrees (1 deg)
@@ -1749,8 +1685,8 @@ def q_range_join_geo(spark: SparkSession, sf_dir: str) -> DataFrame:
     (IEJoin-prunable) with the identical quantized predicate."""
     from geobuf_cpp_spark.operators.range_join import geo_self_join
 
-    _prep(spark, sf_dir, "orders")
-    return geo_self_join(spark.sql(P.IPOINTS_SELECT), GEO_RADIUS)
+    return geo_self_join(sql_df(spark, sf_dir, P.IPOINTS_SELECT, "orders"),
+                         GEO_RADIUS)
 
 
 def q_knn_geo(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1762,12 +1698,13 @@ def q_knn_geo(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross join + row_number on the identical quantized coordinates."""
     from geobuf_cpp_spark.operators.knn import knn_geo
 
-    _prep(spark, sf_dir, "orders", "nation")
-    qs = spark.sql(
+    qs = sql_df(
+        spark, sf_dir,
         "SELECT CAST(n_nationkey AS BIGINT) AS query_id, "
         f"CAST({P.STAR_CX_SQL} AS BIGINT) AS ix, "
-        f"CAST({P.STAR_CY_SQL} AS BIGINT) AS iy FROM nation")
-    return knn_geo(spark.sql(P.IPOINTS_SELECT), qs, KNN_K)
+        f"CAST({P.STAR_CY_SQL} AS BIGINT) AS iy FROM nation", "nation")
+    return knn_geo(sql_df(spark, sf_dir, P.IPOINTS_SELECT, "orders"), qs,
+                   KNN_K)
 
 
 SEG_CELL = 512              # >= max per-axis segment extent (300)
@@ -1779,7 +1716,6 @@ def q_segment_crossings(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the smallest shared cell (no DISTINCT). Oracle: brute-force
     O(n^2) with the IDENTICAL predicate text plus implied bbox-overlap
     band conditions for IEJoin pruning."""
-    _prep(spark, sf_dir, "orders")
     return _shared_seg_pairs(spark, sf_dir)
 
 
@@ -1792,7 +1728,8 @@ def _shared_seg_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return _shared_df(
         spark, sf_dir, "seg_pairs",
-        lambda: segment_intersections(spark.sql(P.ISEGS_SELECT), SEG_CELL))
+        lambda: segment_intersections(
+            sql_df(spark, sf_dir, P.ISEGS_SELECT, "orders"), SEG_CELL))
 
 
 SEG_NEAR_RADIUS = 100
@@ -1806,8 +1743,7 @@ def q_segment_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive-CTE transitive closure over the banded intersect pairs."""
     from geobuf_cpp_spark.operators.dedup import dedup_clusters
 
-    _prep(spark, sf_dir, "orders")
-    segs = spark.sql(P.ISEGS_SELECT)
+    segs = sql_df(spark, sf_dir, P.ISEGS_SELECT, "orders")
     pairs = _shared_seg_pairs(spark, sf_dir)
     return dedup_clusters(
         segs.selectExpr("seg_id AS doc_id"), pairs
@@ -1826,8 +1762,7 @@ def q_network_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs taking min(depth) per node."""
     from geobuf_cpp_spark.operators.graph import bfs_hops
 
-    _prep(spark, sf_dir, "orders")
-    segs = spark.sql(P.ISEGS_SELECT)
+    segs = sql_df(spark, sf_dir, P.ISEGS_SELECT, "orders")
     pairs = _shared_seg_pairs(spark, sf_dir)
     return bfs_hops(
         pairs,
@@ -1853,11 +1788,11 @@ def _point_seg_cands(spark: SparkSession, sf_dir: str) -> DataFrame:
     `points_near_segments` projects it, `snap_route` argmins it."""
     from geobuf_cpp_spark.operators.segments import _point_seg_candidates
 
-    _prep(spark, sf_dir, "orders")
     return _shared_df(
         spark, sf_dir, "point_seg_cands",
         lambda: _point_seg_candidates(
-            spark.sql(P.IPOINTS_SELECT), spark.sql(P.ISEGS_SELECT),
+            sql_df(spark, sf_dir, P.IPOINTS_SELECT, "orders"),
+            sql_df(spark, sf_dir, P.ISEGS_SELECT, "orders"),
             SEG_NEAR_RADIUS, SEG_CELL, "point_id", "seg_id"))
 
 
@@ -1874,8 +1809,7 @@ def q_trajectory_len(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user GPS-track stats over the events ping stream."""
     from geobuf_cpp_spark.operators.trajectory import path_stats
 
-    _prep(spark, sf_dir, "events")
-    return path_stats(spark.sql(P.IPINGS_SELECT))
+    return path_stats(sql_df(spark, sf_dir, P.IPINGS_SELECT, "events"))
 
 
 def q_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1883,16 +1817,15 @@ def q_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     8-word chunks; per-doc survival counts."""
     from geobuf_cpp_spark.operators.dedup import chunk_dedup
 
-    _prep(spark, sf_dir, "documents")
-    return chunk_dedup(spark.table("documents"), chunk_words=CHUNK_WORDS)
+    return chunk_dedup(table_df(spark, sf_dir, "documents"),
+                       chunk_words=CHUNK_WORDS)
 
 
 def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style per-doc token repetition counts (integer-exact)."""
     from geobuf_cpp_spark.operators.textstats import repetition_stats
 
-    _prep(spark, sf_dir, "documents")
-    return repetition_stats(spark.table("documents"))
+    return repetition_stats(table_df(spark, sf_dir, "documents"))
 
 
 def q_token_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1900,8 +1833,7 @@ def q_token_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     frequencies (the integer twin of mean log-probability)."""
     from geobuf_cpp_spark.operators.textstats import token_rarity
 
-    _prep(spark, sf_dir, "documents")
-    return token_rarity(spark.table("documents"))
+    return token_rarity(table_df(spark, sf_dir, "documents"))
 
 
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
@@ -1923,8 +1855,7 @@ def _hilbert_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geobuf_cpp_spark.functions.hilbert import hilbert_d
     from geobuf_cpp_spark.functions.udfs import with_kernel_column
 
-    _prep(spark, sf_dir, "orders")
-    pts = spark.sql(P.IPOINTS_SELECT).selectExpr(
+    pts = sql_df(spark, sf_dir, P.IPOINTS_SELECT, "orders").selectExpr(
         "point_id",
         f"ix div {RANGE_RADIUS} AS gx",
         f"iy div {RANGE_RADIUS} AS gy",
@@ -1976,8 +1907,7 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly cohort retention matrix over the events stream."""
     from geobuf_cpp_spark.operators.cohorts import cohort_retention
 
-    _prep(spark, sf_dir, "events")
-    return cohort_retention(spark.table("events"))
+    return cohort_retention(table_df(spark, sf_dir, "events"))
 
 
 def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1986,8 +1916,7 @@ def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     — never the k-way self-join naive SQL pays."""
     from geobuf_cpp_spark.operators.funnel import funnel_earliest
 
-    _prep(spark, sf_dir, "events")
-    return funnel_earliest(spark.table("events"), FUNNEL_STEPS)
+    return funnel_earliest(table_df(spark, sf_dir, "events"), FUNNEL_STEPS)
 
 
 def q_cell_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1995,9 +1924,8 @@ def q_cell_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
     convolution on the aggregated counts, O(9·cells) not O(points)."""
     from geobuf_cpp_spark.operators.tiles import smooth_cell_counts
 
-    _prep(spark, sf_dir, "orders")
     counts = (
-        spark.sql(P.IPOINTS_SELECT)
+        sql_df(spark, sf_dir, P.IPOINTS_SELECT, "orders")
         .selectExpr(f"ix div {RANGE_RADIUS} AS ix",
                     f"iy div {RANGE_RADIUS} AS iy")
         .groupBy("ix", "iy")
@@ -2016,8 +1944,7 @@ def q_event_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange — half the shuffle at 100 TB. Equivalence with `.pivot()`
     is pytest-asserted.
     """
-    _prep(spark, sf_dir, "events")
-    return spark.table("events").groupBy("user_id").agg(
+    return table_df(spark, sf_dir, "events").groupBy("user_id").agg(
         *[
             F.count_if(F.col("event_type") == t).alias(f"n_{t}")
             for t in EVENT_TYPES
@@ -2033,9 +1960,8 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     (downsample the dominant language, keep the tail)."""
     from geobuf_cpp_spark.operators.curation import stratified_sample
 
-    _prep(spark, sf_dir, "documents")
     return stratified_sample(
-        spark.table("documents"), STRATA_RATES
+        table_df(spark, sf_dir, "documents"), STRATA_RATES
     ).select("doc_id", "lang", "n_chars")
 
 
@@ -2045,8 +1971,7 @@ def q_ngram_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps."""
     from geobuf_cpp_spark.operators.dedup import ngram_decontaminate
 
-    _prep(spark, sf_dir, "documents")
-    docs = spark.table("documents")
+    docs = table_df(spark, sf_dir, "documents")
     split = F.expr(sql_knuth_hash("doc_id"))
     held = docs.where(split < 429496730)
     train = docs.where(split >= 429496730)
@@ -2059,8 +1984,7 @@ def q_tile_clip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vector-tile clipping: nation boxes cut to the z=5 tile grid."""
     from geobuf_cpp_spark.operators.tiles import clip_boxes_to_tiles
 
-    _prep(spark, sf_dir, "nation")
-    return clip_boxes_to_tiles(spark.sql(P.BOXES_SELECT), TILE_STATS_Z)
+    return clip_boxes_to_tiles(P.boxes_df(spark, sf_dir), TILE_STATS_Z)
 
 
 def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2068,8 +1992,7 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus; counts + redacted-text fingerprint."""
     from geobuf_cpp_spark.operators.pii import scrub_pii
 
-    _prep(spark, sf_dir, "documents")
-    injected = spark.table("documents").selectExpr(
+    injected = table_df(spark, sf_dir, "documents").selectExpr(
         "doc_id", f"{PII_TEXT_SQL} AS text"
     )
     return scrub_pii(injected).select(
@@ -2102,7 +2025,7 @@ def q_cms_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     sketch = _docs_sketch(spark, sf_dir, count_min_sketch)
-    docs = spark.table("documents")
+    docs = table_df(spark, sf_dir, "documents")
     top = (
         docs.select(F.explode(F.split("text", " ")).alias("term"))
         .filter(F.col("term") != "")
@@ -2173,8 +2096,7 @@ def q_ams_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan, exchange bounded by groups x 9."""
     from geobuf_cpp_spark.operators.sketches import ams_sketch_grouped
 
-    _prep(spark, sf_dir, "documents")
-    return ams_sketch_grouped(spark.table("documents"))
+    return ams_sketch_grouped(table_df(spark, sf_dir, "documents"))
 
 
 def q_ams_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2185,7 +2107,7 @@ def q_ams_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geobuf_cpp_spark.operators.sketches import ams_f2, ams_sketch
 
     sk = _docs_sketch(spark, sf_dir, ams_sketch)
-    return ams_f2(spark.table("documents"), sk)
+    return ams_f2(table_df(spark, sf_dir, "documents"), sk)
 
 
 QSKETCH_VALUE = "CAST(round(value * 100) AS BIGINT)"   # exact cents
@@ -2197,8 +2119,8 @@ def _shared_qsketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return _shared_df(
         spark, sf_dir, "qsketch",
-        lambda: quantile_sketch(spark.table("events"), QSKETCH_VALUE,
-                                "event_type"))
+        lambda: quantile_sketch(table_df(spark, sf_dir, "events"),
+                                QSKETCH_VALUE, "event_type"))
 
 
 def q_qhist_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2207,7 +2129,6 @@ def q_qhist_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sketch family's quantile member (KLL's contract without KLL's
     randomized compactors, which an oracle-paired gate cannot accept).
     Fixed <=1,920-bucket size; shard merge is an additive groupBy."""
-    _prep(spark, sf_dir, "events")
     return _shared_qsketch(spark, sf_dir).withColumnRenamed(
         "grp", "event_type")
 
@@ -2219,7 +2140,6 @@ def q_qhist_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     [q_lo, q_hi] with < 2^-5 relative spread."""
     from geobuf_cpp_spark.operators.qsketch import sketch_quantiles
 
-    _prep(spark, sf_dir, "events")
     return sketch_quantiles(
         _shared_qsketch(spark, sf_dir), QSKETCH_PROBS
     ).withColumnRenamed("grp", "event_type")
@@ -2232,9 +2152,8 @@ def q_hll_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_groups x 256 rows regardless of corpus size."""
     from geobuf_cpp_spark.operators.sketches import hll_registers_grouped
 
-    _prep(spark, sf_dir, "documents")
-    return hll_registers_grouped(spark.table("documents")).withColumnRenamed(
-        "grp", "lang")
+    return hll_registers_grouped(
+        table_df(spark, sf_dir, "documents")).withColumnRenamed("grp", "lang")
 
 
 def q_gapfill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2243,8 +2162,7 @@ def q_gapfill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     selected (never recombined), so float hash parity is exact."""
     from geobuf_cpp_spark.operators.resample import gapfill_locf
 
-    _prep(spark, sf_dir, "events")
-    return gapfill_locf(spark.table("events"))
+    return gapfill_locf(table_df(spark, sf_dir, "events"))
 
 
 TRI_EDGE_MIN_DOCS = 300     # co-occurrence weight threshold for the
@@ -2273,8 +2191,7 @@ def q_sliding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     sliding aggregation. min/max are selections, so doubles hash-gate."""
     from geobuf_cpp_spark.operators.resample import sliding_stats
 
-    _prep(spark, sf_dir, "events")
-    return sliding_stats(spark.table("events"))
+    return sliding_stats(table_df(spark, sf_dir, "events"))
 
 
 def q_bloom_bits(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2293,10 +2210,9 @@ def q_bloom_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     positives are deterministic, so the gate hash-matches them too."""
     from geobuf_cpp_spark.operators.sketches import bloom_build, bloom_probe
 
-    _prep(spark, sf_dir, "part")
     bloom = _docs_sketch(spark, sf_dir, bloom_build)
     probe = (
-        spark.table("part")
+        table_df(spark, sf_dir, "part")
         .select(F.explode(F.split("p_name", " ")).alias("term"))
         .filter(F.col("term") != "")
         .distinct()
@@ -2309,10 +2225,9 @@ def q_props_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     props column JVM-side (get_json_object, no Python) and aggregate per
     event type — the schema-on-read path every event pipeline needs.
     Null extractions are counted, not dropped."""
-    _prep(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("long")
     return (
-        spark.table("events")
+        table_df(spark, sf_dir, "events")
         .select("event_type", k.alias("k"))
         .groupBy("event_type")
         .agg(
@@ -2350,8 +2265,7 @@ def q_user_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from geobuf_cpp_spark.operators.graph import coactivity_edges, kcore
 
-    _prep(spark, sf_dir, "events")
-    edges = coactivity_edges(spark.table("events"), KCORE_MIN_DAYS)
+    edges = coactivity_edges(table_df(spark, sf_dir, "events"), KCORE_MIN_DAYS)
     return kcore(edges, KCORE_K, KCORE_ROUNDS).withColumnRenamed(
         "node", "user_id")
 
@@ -2397,9 +2311,8 @@ def q_grid_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from geobuf_cpp_spark.operators.clustering import grid_cluster
 
-    _prep(spark, sf_dir, "orders")
-    pts = spark.sql(P.POINTS_SELECT)
-    return grid_cluster(pts, GRID_CLUSTER_RES, GRID_CLUSTER_MIN_PTS)
+    return grid_cluster(P.points_df(spark, sf_dir), GRID_CLUSTER_RES,
+                        GRID_CLUSTER_MIN_PTS)
 
 
 # ---------------------------------------------------------------------------
@@ -2431,11 +2344,10 @@ COMPACT_RES = 10
 COMPACT_MIN_RES = 7
 
 
-def _box_cover_df(spark: SparkSession, res: int) -> DataFrame:
+def _box_cover_df(spark: SparkSession, sf_dir: str, res: int) -> DataFrame:
     """Single-resolution box polyfill built distributively (sequence()
     explode from the corner grid indices — no driver materialization)."""
-    boxes = spark.sql(P.BOXES_SELECT)
-    g = boxes.selectExpr(
+    g = P.boxes_df(spark, sf_dir).selectExpr(
         "admin_id",
         f"{sql_ix('lon0', res)} AS x0",
         f"{sql_ix('lon1', res)} AS x1",
@@ -2462,9 +2374,9 @@ def q_cover_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     cover."""
     from geobuf_cpp_spark.operators.compact import compact_cover
 
-    _prep(spark, sf_dir, "nation")
     comp = compact_cover(
-        _box_cover_df(spark, COMPACT_RES), COMPACT_RES, COMPACT_MIN_RES)
+        _box_cover_df(spark, sf_dir, COMPACT_RES), COMPACT_RES,
+        COMPACT_MIN_RES)
     return comp.groupBy("admin_id", "res").agg(
         F.count("*").cast("long").alias("n_cells"),
         F.sum("cell").cast("long").alias("cell_sum"),
@@ -2476,8 +2388,7 @@ def q_lm_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-gateable form of CCNet's KenLM perplexity filter)."""
     from geobuf_cpp_spark.operators.textstats import lm_surprisal
 
-    _prep(spark, sf_dir, "documents")
-    return lm_surprisal(spark.table("documents"))
+    return lm_surprisal(table_df(spark, sf_dir, "documents"))
 
 
 MORANS_RES = 8  # 256 x 256 grid, same as grid_cluster
@@ -2490,8 +2401,7 @@ def q_morans_i(spark: SparkSession, sf_dir: str) -> DataFrame:
     and HUGEINT products."""
     from geobuf_cpp_spark.operators.spatial_stats import morans_i_parts
 
-    _prep(spark, sf_dir, "orders")
-    return morans_i_parts(spark.sql(P.POINTS_SELECT), MORANS_RES)
+    return morans_i_parts(P.points_df(spark, sf_dir), MORANS_RES)
 
 
 def q_getis_ord(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2501,8 +2411,7 @@ def q_getis_ord(spark: SparkSession, sf_dir: str) -> DataFrame:
     same integer lattice arithmetic."""
     from geobuf_cpp_spark.operators.spatial_stats import getis_ord_parts
 
-    _prep(spark, sf_dir, "orders")
-    return getis_ord_parts(spark.sql(P.POINTS_SELECT), MORANS_RES)
+    return getis_ord_parts(P.points_df(spark, sf_dir), MORANS_RES)
 
 
 def q_trajectory_geo(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2511,8 +2420,7 @@ def q_trajectory_geo(spark: SparkSession, sf_dir: str) -> DataFrame:
     sphere quantization, window order, and corrected floor-sqrt."""
     from geobuf_cpp_spark.operators.trajectory import geo_path_stats
 
-    _prep(spark, sf_dir, "events")
-    return geo_path_stats(spark.sql(P.IPINGS_SELECT))
+    return geo_path_stats(sql_df(spark, sf_dir, P.IPINGS_SELECT, "events"))
 
 
 def _traj_geo_sql() -> str:
@@ -2541,8 +2449,7 @@ def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays the same rank arithmetic in SQL windows."""
     from geobuf_cpp_spark.operators.grouped_stats import mad_outliers
 
-    _prep(spark, sf_dir, "events")
-    e = spark.table("events").select(
+    e = table_df(spark, sf_dir, "events").select(
         "event_type",
         F.expr("CAST(floor(value * 1000) AS BIGINT)").alias("y"),
     )
@@ -2594,8 +2501,7 @@ def q_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash, prefix-sum chunk indexes, and ordered chunk digests."""
     from geobuf_cpp_spark.operators.dedup import cdc_chunk_dedup
 
-    _prep(spark, sf_dir, "documents")
-    return cdc_chunk_dedup(spark.table("documents"), CDC_MOD)
+    return cdc_chunk_dedup(table_df(spark, sf_dir, "documents"), CDC_MOD)
 
 
 KMEANS_K = 8
@@ -2608,9 +2514,8 @@ def q_kmeans_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
     update); the oracle replays both rounds as chained CTEs."""
     from geobuf_cpp_spark.operators.ann import kmeans_lite
 
-    _prep(spark, sf_dir, "embeddings")
-    return kmeans_lite(spark.table("embeddings"), KMEANS_K, KMEANS_ROUNDS,
-                       CENTROID_SCALE)
+    return kmeans_lite(table_df(spark, sf_dir, "embeddings"), KMEANS_K,
+                       KMEANS_ROUNDS, CENTROID_SCALE)
 
 
 def _kmeans_sql() -> str:
@@ -2650,8 +2555,7 @@ def q_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     the identical total order and pair rollup."""
     from geobuf_cpp_spark.operators.cohorts import markov_transitions
 
-    _prep(spark, sf_dir, "events")
-    return markov_transitions(spark.table("events"))
+    return markov_transitions(table_df(spark, sf_dir, "events"))
 
 
 def q_stream_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2660,8 +2564,8 @@ def q_stream_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared expression against the DuckDB oracle)."""
     from geobuf_cpp_spark.streaming.events import cell_hotspot_counts
 
-    _prep(spark, sf_dir, "events")
-    return cell_hotspot_counts(spark.sql(P.IPINGS_SELECT))
+    return cell_hotspot_counts(
+        sql_df(spark, sf_dir, P.IPINGS_SELECT, "events"))
 
 
 def _stream_cells_sql() -> str:
@@ -2683,8 +2587,7 @@ def q_cell_dwell(spark: SparkSession, sf_dir: str) -> DataFrame:
     stay-side complement of od_matrix over the same ping stream."""
     from geobuf_cpp_spark.operators.trajectory import cell_dwell
 
-    _prep(spark, sf_dir, "events")
-    return cell_dwell(spark.sql(P.IPINGS_SELECT))
+    return cell_dwell(sql_df(spark, sf_dir, P.IPINGS_SELECT, "events"))
 
 
 def q_self_crossings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2694,8 +2597,7 @@ def q_self_crossings(spark: SparkSession, sf_dir: str) -> DataFrame:
     volume is bounded by track length squared per user)."""
     from geobuf_cpp_spark.operators.trajectory import self_crossings
 
-    _prep(spark, sf_dir, "events")
-    return self_crossings(spark.sql(P.IPINGS_SELECT))
+    return self_crossings(sql_df(spark, sf_dir, P.IPINGS_SELECT, "events"))
 
 
 def _self_crossings_sql() -> str:
@@ -2738,8 +2640,8 @@ def q_colocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     inequality self-join that never sees a block."""
     from geobuf_cpp_spark.operators.colocation import colocation_pairs
 
-    _prep(spark, sf_dir, "events")
-    return colocation_pairs(spark.sql(P.IPINGS_SELECT), CO_RADIUS, CO_TAU)
+    return colocation_pairs(sql_df(spark, sf_dir, P.IPINGS_SELECT, "events"),
+                            CO_RADIUS, CO_TAU)
 
 
 def _colocation_sql() -> str:
@@ -2765,8 +2667,7 @@ def q_traj_diameter(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(k^2) all-pairs max, so the gate cross-checks two algorithms."""
     from geobuf_cpp_spark.operators.trajectory import traj_diameter
 
-    _prep(spark, sf_dir, "events")
-    return traj_diameter(spark.sql(P.IPINGS_SELECT))
+    return traj_diameter(sql_df(spark, sf_dir, P.IPINGS_SELECT, "events"))
 
 
 def _traj_diameter_sql() -> str:
@@ -2792,8 +2693,8 @@ def q_kde_heat(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates by a BETWEEN range join instead."""
     from geobuf_cpp_spark.operators.spatial_stats import kde_density
 
-    _prep(spark, sf_dir, "orders")
-    return kde_density(spark.sql(P.IPOINTS_SELECT), KDE_RADIUS)
+    return kde_density(sql_df(spark, sf_dir, P.IPOINTS_SELECT, "orders"),
+                       KDE_RADIUS)
 
 
 def _kde_heat_sql() -> str:
@@ -2830,8 +2731,8 @@ def q_postings_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregated retrieval structure."""
     from geobuf_cpp_spark.operators.textstats import inverted_index
 
-    _prep(spark, sf_dir, "documents")
-    return inverted_index(spark.table("documents"), min_df=INVIDX_MIN_DF)
+    return inverted_index(table_df(spark, sf_dir, "documents"),
+                          min_df=INVIDX_MIN_DF)
 
 
 def _postings_lists_sql() -> str:
@@ -2852,8 +2753,7 @@ def q_union_area(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a direct inequality join instead of the grid-blocked equi-join."""
     from geobuf_cpp_spark.operators.spatial_stats import rect_union_area
 
-    _prep(spark, sf_dir, "nation")
-    return rect_union_area(spark.sql(P.IBOXES_SELECT))
+    return rect_union_area(sql_df(spark, sf_dir, P.IBOXES_SELECT, "nation"))
 
 
 def _union_area_sql() -> str:
@@ -2892,9 +2792,8 @@ def q_adaptive_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/tiles.adaptive_quadtree); leaves partition the points."""
     from geobuf_cpp_spark.operators.tiles import adaptive_quadtree
 
-    _prep(spark, sf_dir, "orders")
     return adaptive_quadtree(
-        spark.sql(P.IPOINTS_SELECT), QT_CAP, QT_MAX_Z)
+        sql_df(spark, sf_dir, P.IPOINTS_SELECT, "orders"), QT_CAP, QT_MAX_Z)
 
 
 def _adaptive_tiles_sql() -> str:
@@ -2925,8 +2824,7 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the gate proves the pigeonhole guarantee end to end."""
     from geobuf_cpp_spark.operators.sketches import heavy_hitters
 
-    _prep(spark, sf_dir, "documents")
-    return heavy_hitters(spark.table("documents"), HH_K)
+    return heavy_hitters(table_df(spark, sf_dir, "documents"), HH_K)
 
 
 def _heavy_hitters_sql() -> str:
@@ -2987,9 +2885,8 @@ def q_pps_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     same multiplicities with a single global window cumsum."""
     from geobuf_cpp_spark.operators.curation import pps_systematic_sample
 
-    _prep(spark, sf_dir, "documents")
     return pps_systematic_sample(
-        spark.table("documents"), PPS_N, "n_chars")
+        table_df(spark, sf_dir, "documents"), PPS_N, "n_chars")
 
 
 def _pps_sample_sql() -> str:
@@ -3015,8 +2912,8 @@ def q_gps_jumps(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/trajectory.gps_jumps) — no sqrt, no floats."""
     from geobuf_cpp_spark.operators.trajectory import gps_jumps
 
-    _prep(spark, sf_dir, "events")
-    return gps_jumps(spark.sql(P.IPINGS_SELECT), JUMP_VMAX)
+    return gps_jumps(sql_df(spark, sf_dir, P.IPINGS_SELECT, "events"),
+                     JUMP_VMAX)
 
 
 def _gps_jumps_sql() -> str:
@@ -3044,9 +2941,9 @@ def q_geofence_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the explicit -1 state, first ping always transitions from -2."""
     from geobuf_cpp_spark.operators.trajectory import geofence_events
 
-    _prep(spark, sf_dir, "events", "nation")
     return geofence_events(
-        spark.sql(P.IPINGS_SELECT), spark.sql(P.IBOXES_SELECT))
+        sql_df(spark, sf_dir, P.IPINGS_SELECT, "events"),
+        sql_df(spark, sf_dir, P.IBOXES_SELECT, "nation"))
 
 
 def _geofence_events_sql() -> str:
@@ -3079,14 +2976,13 @@ def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geobuf_cpp_spark.operators.ann import cosine_topk, rrf_fuse
     from geobuf_cpp_spark.operators.textstats import token_overlap_topk
 
-    _prep(spark, sf_dir, "documents")
     emb, qp = _ann_queries(spark, sf_dir)
     sem = cosine_topk(emb, qp, k=11).where(
         F.col("vec_id") != F.col("query_id"))
     w = Window.partitionBy("query_id").orderBy("rank")
     sem = sem.withColumn("rank", F.row_number().over(w)).where(
         F.col("rank") <= 10)
-    lex = token_overlap_topk(spark.table("documents"), 20)
+    lex = token_overlap_topk(table_df(spark, sf_dir, "documents"), 20)
     return rrf_fuse(sem, lex, RRF_K, RRF_SCALE)
 
 
@@ -3134,8 +3030,7 @@ def q_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     structs, never collect_list order."""
     from geobuf_cpp_spark.operators.cohorts import session_paths
 
-    _prep(spark, sf_dir, "events")
-    return session_paths(spark.table("events"), int(SESSION_GAP_S),
+    return session_paths(table_df(spark, sf_dir, "events"), int(SESSION_GAP_S),
                          PATH_MIN_SESSIONS)
 
 
@@ -3164,9 +3059,8 @@ def q_benford_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
     Benford/digit-frequency data-quality scan that flags synthetic or
     truncated sources (a source whose lengths all start with one digit
     was generated, not crawled). Pure JVM string ops."""
-    _prep(spark, sf_dir, "documents")
     return (
-        spark.table("documents")
+        table_df(spark, sf_dir, "documents")
         .where(F.col("n_chars") > 0)
         .groupBy(
             "source",
@@ -3191,8 +3085,7 @@ def q_chi2_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (obs*N - rt*ct)^2 exceeds BIGINT) over den = rt*ct*N; the caller
     sums num/den. The independence test every event-quality dashboard
     runs, with zero float drift between engines."""
-    _prep(spark, sf_dir, "events")
-    ev = spark.table("events").select(
+    ev = table_df(spark, sf_dir, "events").select(
         "event_type", F.dayofweek("ts").alias("dow"))
     obs = ev.groupBy("event_type", "dow").agg(
         F.count("*").cast("long").alias("obs"))
@@ -3245,9 +3138,8 @@ def q_trimmed_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal-value ordering)."""
     from geobuf_cpp_spark.operators.grouped_stats import trimmed_stats
 
-    _prep(spark, sf_dir, "documents")
     return trimmed_stats(
-        spark.table("documents"), "lang", "n_chars", TRIM_PCT)
+        table_df(spark, sf_dir, "documents"), "lang", "n_chars", TRIM_PCT)
 
 
 def _trimmed_stats_sql() -> str:
@@ -3277,8 +3169,8 @@ def q_kanon_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     decision is a privacy property, not a statistic."""
     from geobuf_cpp_spark.operators.grouped_stats import kanon_cells
 
-    _prep(spark, sf_dir, "events")
-    return kanon_cells(spark.sql(P.IPINGS_SELECT), KANON_CELL, KANON_K)
+    return kanon_cells(sql_df(spark, sf_dir, P.IPINGS_SELECT, "events"),
+                       KANON_CELL, KANON_K)
 
 
 def _kanon_cells_sql() -> str:
@@ -3303,8 +3195,7 @@ def q_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-break."""
     from geobuf_cpp_spark.operators.textstats import bpe_pair_counts
 
-    _prep(spark, sf_dir, "documents")
-    return bpe_pair_counts(spark.table("documents"), BPE_TOP_N)
+    return bpe_pair_counts(table_df(spark, sf_dir, "documents"), BPE_TOP_N)
 
 
 def _bpe_pairs_sql() -> str:
@@ -3333,8 +3224,8 @@ def q_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-source sampling fix, in exact integer parts."""
     from geobuf_cpp_spark.operators.curation import temperature_weights
 
-    _prep(spark, sf_dir, "documents")
-    return temperature_weights(spark.table("documents"), TEMP_SCALE)
+    return temperature_weights(table_df(spark, sf_dir, "documents"),
+                               TEMP_SCALE)
 
 
 def _temperature_weights_sql() -> str:
@@ -3360,9 +3251,8 @@ def q_cell_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     key-derived coordinates (the same derivation the point tables use);
     term counting is the one-scan explode + hash agg; the per-cell
     top-k is a rank window WindowGroupLimit keeps map-side partial."""
-    _prep(spark, sf_dir, "documents")
     toks = (
-        spark.table("documents")
+        table_df(spark, sf_dir, "documents")
         .selectExpr(
             f"(doc_id * 7919) % 36000 div {CTT_CELL} AS cx",
             f"(doc_id * 9973) % 17000 div {CTT_CELL} AS cy",
@@ -3412,9 +3302,8 @@ def q_term_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     two aggregates)."""
     from pyspark.sql import Window
 
-    _prep(spark, sf_dir, "documents")
     toks = (
-        spark.table("documents")
+        table_df(spark, sf_dir, "documents")
         .selectExpr("doc_id % 2 AS epoch",
                     "explode(split(text, ' ')) AS term")
         .where("term <> ''")
@@ -3462,8 +3351,7 @@ def q_polyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     pytest-pinned against the canonical python algorithm)."""
     from geobuf_cpp_spark.operators.trajectory import polyline_encode
 
-    _prep(spark, sf_dir, "events")
-    return polyline_encode(spark.sql(P.IPINGS_SELECT))
+    return polyline_encode(sql_df(spark, sf_dir, P.IPINGS_SELECT, "events"))
 
 
 def _polyline_sql() -> str:
@@ -3502,8 +3390,7 @@ def q_grid_cluster_geo(spark: SparkSession, sf_dir: str) -> DataFrame:
     closure."""
     from geobuf_cpp_spark.operators.clustering import grid_cluster_geo
 
-    _prep(spark, sf_dir, "orders")
-    return grid_cluster_geo(spark.sql(P.IPOINTS_SELECT),
+    return grid_cluster_geo(sql_df(spark, sf_dir, P.IPOINTS_SELECT, "orders"),
                             GEO_CLUSTER_R, GEO_CLUSTER_MIN_PTS)
 
 
@@ -3551,8 +3438,7 @@ def q_admin_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-axis and Chebyshev gap distances (0 = touching/overlapping).
     The overlay primitive behind merge-adjacent-regions decisions; a
     25-row dimension self-join — broadcast nested loop IS the plan."""
-    _prep(spark, sf_dir, "nation")
-    b = spark.sql(P.IBOXES_SELECT)
+    b = sql_df(spark, sf_dir, P.IBOXES_SELECT, "nation")
     a = b.selectExpr("admin_id AS id_a", "lon0 AS a_lon0",
                      "lat0 AS a_lat0", "lon1 AS a_lon1", "lat1 AS a_lat1")
     c = b.selectExpr("admin_id AS id_b", "lon0 AS b_lon0",
@@ -3579,8 +3465,7 @@ def q_cusum_change(spark: SparkSession, sf_dir: str) -> DataFrame:
     group-keyed max(struct)."""
     from geobuf_cpp_spark.operators.cohorts import cusum_changepoint
 
-    _prep(spark, sf_dir, "events")
-    return cusum_changepoint(spark.table("events"))
+    return cusum_changepoint(table_df(spark, sf_dir, "events"))
 
 
 def q_star_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3630,8 +3515,7 @@ def q_robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus never shuffles."""
     from geobuf_cpp_spark.operators.curation import robots_filter
 
-    _prep(spark, sf_dir, "documents")
-    docs = spark.table("documents")
+    docs = table_df(spark, sf_dir, "documents")
     urls = docs.selectExpr(
         "doc_id", "source AS host",
         "concat('/p', cast(doc_id % 17 as string), '/', lang) AS path")
@@ -3646,8 +3530,7 @@ def q_od_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays the same total order and integer zone arithmetic."""
     from geobuf_cpp_spark.operators.trajectory import od_matrix
 
-    _prep(spark, sf_dir, "events")
-    return od_matrix(spark.sql(P.IPINGS_SELECT))
+    return od_matrix(sql_df(spark, sf_dir, P.IPINGS_SELECT, "events"))
 
 
 DSIR_BUCKETS = 4096  # hashed feature space (must divide 2^16)
@@ -3659,9 +3542,8 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bucket log-ratio table from identical md5 bucket arithmetic."""
     from geobuf_cpp_spark.operators.curation import importance_weights
 
-    _prep(spark, sf_dir, "documents")
     return importance_weights(
-        spark.table("documents"), F.col("lang") == "en",
+        table_df(spark, sf_dir, "documents"), F.col("lang") == "en",
         n_buckets=DSIR_BUCKETS)
 
 
@@ -3675,8 +3557,7 @@ def q_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5_number_lower hashes."""
     from geobuf_cpp_spark.operators.sketches import kmv_overlap
 
-    _prep(spark, sf_dir, "documents")
-    return kmv_overlap(spark.table("documents"), k=KMV_OVERLAP_K)
+    return kmv_overlap(table_df(spark, sf_dir, "documents"), k=KMV_OVERLAP_K)
 
 
 PR_BASE = 10 ** 9   # rank scale (exact integer arithmetic)
@@ -3692,8 +3573,7 @@ def q_host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geobuf_cpp_spark.operators.graph import pagerank
     from geobuf_cpp_spark.operators.sketches import md5_low64
 
-    _prep(spark, sf_dir, "documents")
-    docs = spark.table("documents")
+    docs = table_df(spark, sf_dir, "documents")
     dst = F.concat(
         F.lit("src"),
         (md5_low64(F.concat(F.col("doc_id").cast("string"),
@@ -3714,8 +3594,7 @@ def q_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     n in {2, 3} — exact integers."""
     from geobuf_cpp_spark.operators.textstats import ngram_repetition
 
-    _prep(spark, sf_dir, "documents")
-    return ngram_repetition(spark.table("documents"))
+    return ngram_repetition(table_df(spark, sf_dir, "documents"))
 
 
 def q_domain_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3725,8 +3604,7 @@ def q_domain_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     with independent DuckDB string ops."""
     from geobuf_cpp_spark.operators.webstats import domain_rollup, url_sql
 
-    _prep(spark, sf_dir, "documents")
-    docs = spark.table("documents").withColumn(
+    docs = table_df(spark, sf_dir, "documents").withColumn(
         "url", F.expr(url_sql("STRING")))
     return domain_rollup(docs)
 
@@ -3736,8 +3614,7 @@ def q_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     header + any organic repeats) — per-doc boilerplate counts."""
     from geobuf_cpp_spark.operators.dedup import boilerplate_chunks
 
-    _prep(spark, sf_dir, "documents")
-    docs = spark.table("documents").withColumn(
+    docs = table_df(spark, sf_dir, "documents").withColumn(
         "text", F.expr(BOILER_TEXT_SQL))
     return boilerplate_chunks(docs, chunk_words=CHUNK_WORDS)
 
@@ -3749,8 +3626,7 @@ def q_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     op on both engines."""
     from geobuf_cpp_spark.operators.skyline import skyline2d
 
-    _prep(spark, sf_dir, "part")
-    pts = spark.table("part").select(
+    pts = table_df(spark, sf_dir, "part").select(
         "p_partkey",
         F.expr("CAST(floor(p_retailprice * 100 + 0.5) AS BIGINT)")
         .alias("price_cents"),
@@ -3765,8 +3641,7 @@ def q_event_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     milli-unit y)."""
     from geobuf_cpp_spark.operators.trends import group_trend
 
-    _prep(spark, sf_dir, "events")
-    return group_trend(spark.table("events"))
+    return group_trend(table_df(spark, sf_dir, "events"))
 
 
 def q_geom_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3793,14 +3668,15 @@ def q_geom_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: orders-derived point cloud PIP-joined to nation boxes."""
     sf_dir = "/root/testdata/sf0.001"
-    _prep(spark, sf_dir, "orders", "nation")
-    return q_pip_boxes_agg(spark, sf_dir)
+    return queries()["pip_boxes_agg"](spark, sf_dir)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    def wrap(fn):
+    def shipped(fn):
+        # every gate may run a Python stage, whose workers import the
+        # package: ship it first, whatever session the caller built
         def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-            _prep(spark, sf_dir, "orders", "nation")
+            ship_package(spark)
             return fn(spark, sf_dir)
 
         return run
@@ -3845,7 +3721,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cell_smooth": q_cell_smooth,
         "hilbert_index": q_hilbert_index,
         "cohort_retention": q_cohort_retention,
-        "grid_cluster": wrap(q_grid_cluster),
+        "grid_cluster": q_grid_cluster,
         "cms_sketch": q_cms_sketch,
         "cms_estimate": q_cms_estimate,
         "kmv_sketch": q_kmv_sketch,
@@ -3903,7 +3779,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "robots_filter": q_robots_filter,
         "star_centroid": q_star_centroid,
         "admin_neighbors": q_admin_neighbors,
-        "grid_cluster_geo": wrap(q_grid_cluster_geo),
+        "grid_cluster_geo": q_grid_cluster_geo,
         "hilbert_ranges": q_hilbert_ranges,
         "ann_topk": q_ann_topk,
         "ann_ivf": q_ann_ivf,
@@ -3953,18 +3829,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "simhash_neardup": q_simhash_neardup,
         "embed_neardup": q_embed_neardup,
         # -- block 4: driver-signed green in CORRECTNESS_r04 (50) -----------
-        "cell_assign": wrap(q_cell_assign),
-        "cell_rollup": wrap(q_cell_rollup),
-        "pip_boxes_join": wrap(q_pip_boxes_join),
-        "pip_large": wrap(q_pip_large),
-        "pip_holes": wrap(q_pip_holes),
-        "box_polyfill": wrap(q_box_polyfill),
-        "admin_areas": wrap(q_admin_areas),
-        "quadkey_assign": wrap(q_quadkey_assign),
+        "cell_assign": q_cell_assign,
+        "cell_rollup": q_cell_rollup,
+        "pip_boxes_join": q_pip_boxes_join,
+        "pip_large": q_pip_large,
+        "pip_holes": q_pip_holes,
+        "box_polyfill": q_box_polyfill,
+        "admin_areas": q_admin_areas,
+        "quadkey_assign": q_quadkey_assign,
         "hex_assign": q_hex_assign,
         "zonemap_query": q_zonemap_query,
         "label_centroids": q_label_centroids,
-        "geohash_assign": wrap(q_geohash_assign),
+        "geohash_assign": q_geohash_assign,
         "inverted_index": q_inverted_index,
         "tfidf_topk": q_tfidf_topk,
         "ship_priority": q_ship_priority,
@@ -3972,7 +3848,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "table_profile": q_table_profile,
         "token_windows": q_token_windows,
         "fuzzy_match": q_fuzzy_match,
-        "tile_pyramid": wrap(q_tile_pyramid),
+        "tile_pyramid": q_tile_pyramid,
         "simplify": q_simplify,
         "geom_bbox": q_geom_bbox,
         "compaction_plan": q_compaction_plan,
@@ -3981,18 +3857,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_report": q_dedup_report,
         "interarrival": q_interarrival,
         "value_hist": q_value_hist,
-        "cell_month_rollup": wrap(q_cell_month_rollup),
-        "pip_boxes_agg": wrap(q_pip_boxes_agg),
-        "knn": wrap(q_knn),
-        "knn_rings": wrap(q_knn_rings),
-        "tile_assign": wrap(q_tile_assign),
-        "tile_stats": wrap(q_tile_stats),
-        "bbox_filter": wrap(q_bbox_filter),
-        "hot_cells_topk": wrap(q_hot_cells_topk),
-        "geobuf_roundtrip": wrap(q_geobuf_roundtrip),
+        "cell_month_rollup": q_cell_month_rollup,
+        "pip_boxes_agg": q_pip_boxes_agg,
+        "knn": q_knn,
+        "knn_rings": q_knn_rings,
+        "tile_assign": q_tile_assign,
+        "tile_stats": q_tile_stats,
+        "bbox_filter": q_bbox_filter,
+        "hot_cells_topk": q_hot_cells_topk,
+        "geobuf_roundtrip": q_geobuf_roundtrip,
         "geobuf_roundtrip_3d": q_geobuf_roundtrip_3d,
-        "geobuf_size_stats": wrap(q_geobuf_size_stats),
-        "geobuf_files": wrap(q_geobuf_files),
+        "geobuf_size_stats": q_geobuf_size_stats,
+        "geobuf_files": q_geobuf_files,
         "events_hourly": q_events_hourly,
         "pricing_summary": q_pricing_summary,
         "top_customers": q_top_customers,
@@ -4007,8 +3883,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # round-6 sample-window rotation: the 59 never-driver-signed gates
     # first (their relative order preserved), everything else after in
     # the round-5 order. Pure reordering — same 183 entries, same
-    # callables, same oracle texts.
-    return {**{k: base[k] for k in _R06_ROTATION}, **base}
+    # gate functions, same oracle texts.
+    ordered = {**{k: base[k] for k in _R06_ROTATION}, **base}
+    return {name: shipped(fn) for name, fn in ordered.items()}
 
 
 # 59 gates with no CORRECTNESS_r01..r05 row (BENCH keys minus the union

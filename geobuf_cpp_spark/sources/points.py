@@ -60,24 +60,21 @@ QUERIES_SELECT = (
 
 
 def points_df(spark, sf_dir: str):
-    from .readers import table_df
+    from .readers import sql_df
 
-    table_df(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(POINTS_SELECT)
+    return sql_df(spark, sf_dir, POINTS_SELECT, "orders")
 
 
 def boxes_df(spark, sf_dir: str):
-    from .readers import table_df
+    from .readers import sql_df
 
-    table_df(spark, sf_dir, "nation").createOrReplaceTempView("nation")
-    return spark.sql(BOXES_SELECT)
+    return sql_df(spark, sf_dir, BOXES_SELECT, "nation")
 
 
 def queries_df(spark, sf_dir: str):
-    from .readers import table_df
+    from .readers import sql_df
 
-    table_df(spark, sf_dir, "nation").createOrReplaceTempView("nation")
-    return spark.sql(QUERIES_SELECT)
+    return sql_df(spark, sf_dir, QUERIES_SELECT, "nation")
 
 
 def boxes_as_wire_polygons(spark, sf_dir: str):
@@ -173,13 +170,13 @@ def stars_as_wire_polygons(spark, sf_dir: str, lattice: bool = False):
     on summation order."""
     import pandas as pd
 
-    from .readers import table_df
+    from .readers import sql_df
 
-    table_df(spark, sf_dir, "nation").createOrReplaceTempView("nation")
-    c = spark.sql(
+    c = sql_df(
+        spark, sf_dir,
         f"SELECT CAST(n_nationkey AS BIGINT) AS admin_id, "
         f"CAST({STAR_CX_SQL} AS BIGINT) AS cx, "
-        f"CAST({STAR_CY_SQL} AS BIGINT) AS cy FROM nation"
+        f"CAST({STAR_CY_SQL} AS BIGINT) AS cy FROM nation", "nation"
     ).toPandas()
     ring = STAR_OFFSETS + STAR_OFFSETS[:1]
 

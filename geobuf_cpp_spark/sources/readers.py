@@ -10,9 +10,34 @@ from ..session import session_memo
 def table_df(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Lazy reader for ``{sf_dir}/{name}.parquet``, memoized by
     ``session.session_memo``: the footer and file-listing read is paid
-    once per table version; no data is cached."""
+    once per table version; no data is cached.
+
+    The reader is a plain scan. The test tables are one parquet row group
+    each, so a scan is one task and a query's map side runs on one core
+    until its first exchange. Operators whose map side is heavy per row
+    (token and shingle explodes, md5 or regex per token, Python stages)
+    call ``plans.partitioning.spread()`` on their own input, a no-op where
+    scan splits already reach the parallelism. A blanket repartition here
+    was measured both ways at sf0.1: it wins on token-heavy gates but taxes
+    every cheap scan+agg with an exchange that costs more than the
+    one-core scan, netting about zero."""
     path = f"{sf_dir}/{name}.parquet"
     return session_memo(spark, path, lambda: spark.read.parquet(path), sf_dir)
+
+
+def sql_df(spark: SparkSession, sf_dir: str, text: str,
+           *tables: str) -> DataFrame:
+    """Run SQL ``text`` over ``tables`` bound as session temp views of
+    their own names.
+
+    For SQL text, most of it run verbatim by the DuckDB oracle too; code
+    on the DataFrame API reads ``table_df`` and binds nothing. This is
+    the only place a view is bound, and each call binds the views its
+    text reads just before running it, so no caller depends on a view
+    another caller left."""
+    for name in tables:
+        table_df(spark, sf_dir, name).createOrReplaceTempView(name)
+    return spark.sql(text)
 
 
 def read_geobuf_dir(spark: SparkSession, location: str) -> DataFrame:

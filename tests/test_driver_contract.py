@@ -285,3 +285,35 @@ def test_contract_holds_no_python_stages():
                                        getattr(node, "id", None))])
             if name in stages]
     assert hits == []
+
+
+def test_one_way_to_read_a_table():
+    """A gate reads a table one of two ways: DataFrame-API code takes
+    ``sources.readers.table_df``, and SQL text goes through
+    ``sources.readers.sql_df``, which binds the views that text reads.
+    So no production module but ``sources/readers.py`` binds a session
+    view, and ``__spark_entry__.py`` makes no catalog lookup
+    (``.table(``) and has no ``_prep`` or ``wrap`` binding views for a
+    gate; ``queries()`` only ships the package."""
+    import ast
+
+    root, _, prod = _source_files()
+    binders = {"createTempView", "createOrReplaceTempView",
+               "createGlobalTempView", "createOrReplaceGlobalTempView"}
+    readers = root / "geobuf_cpp_spark" / "sources" / "readers.py"
+    hits = []
+    for path in prod:
+        rel = path.relative_to(root)
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Attribute) and node.attr in binders \
+                    and path != readers:
+                hits.append(f"{rel}:{node.lineno} {node.attr}")
+    for node in ast.walk(ast.parse((root / "__spark_entry__.py").read_text())):
+        if isinstance(node, ast.Call) \
+                and getattr(node.func, "attr", None) == "table":
+            hits.append(f"__spark_entry__.py:{node.lineno} .table(")
+        name = getattr(node, "id", getattr(node, "name", None))
+        if isinstance(node, (ast.Name, ast.FunctionDef)) \
+                and name in ("_prep", "wrap"):
+            hits.append(f"__spark_entry__.py:{node.lineno} {name}")
+    assert hits == []

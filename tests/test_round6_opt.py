@@ -138,8 +138,8 @@ def test_ship_priority_revenue_at_the_bigint_boundary(spark):
 
 def test_table_df_memoizes_plan_only_and_respects_sf_switch(spark, tmp_path):
     """table_df caches the lazy reader per (session, dir, table) — same
-    object back, no data materialization — and _prep-style re-
-    registration after a directory switch must rebind the view to the
+    object back, no data materialization — and binding a view again
+    after a directory switch, as ``sql_df`` does, must rebind it to the
     other directory's data. A table rewritten in the session is read
     afresh, and shared frames built over it are rebuilt and released."""
     from geobuf_cpp_spark.sources.readers import table_df

@@ -800,6 +800,11 @@ def test_whole_surface_plan_hygiene(spark):
                   "MapInArrow", "FlatMapGroupsInPandas")
     problems = []
     for name, fn in entry.queries().items():
+        # no view outlives a gate: a gate that reads a view it did not
+        # bind fails here, not behind an earlier gate's binding
+        for view in spark.sql("SHOW VIEWS").collect():
+            if view.isTemporary:
+                spark.catalog.dropTempView(view.viewName)
         plan = fn(spark, SF_SMALL)._jdf.queryExecution(
             ).executedPlan().toString()
         if "CartesianProduct" in plan:
@@ -809,3 +814,27 @@ def test_whole_surface_plan_hygiene(spark):
         if any(m in plan for m in py_markers) and name not in python_ok:
             problems.append(f"{name}: undeclared Python stage")
     assert not problems, problems
+
+
+def test_every_gate_ships_the_package_first(spark, monkeypatch):
+    """Every ``queries()`` entry ships the package before its gate
+    function runs: a gate's Python stage imports geobuf_cpp_spark on the workers,
+    which a session built without ``get_spark`` or ``--py-files`` cannot
+    do otherwise."""
+    import __spark_entry__ as entry
+
+    class Shipped(Exception):
+        pass
+
+    def ship_package(_spark):
+        raise Shipped
+
+    monkeypatch.setattr(entry, "ship_package", ship_package)
+    unshipped = []
+    for name, fn in entry.queries().items():
+        try:
+            fn(spark, SF_SMALL)
+        except Shipped:
+            continue
+        unshipped.append(name)
+    assert unshipped == []
